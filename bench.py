@@ -1,7 +1,8 @@
 """Benchmark harness — prints ONE JSON line for the driver.
 
 Headline queries run at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS].  The throughput job mirrors the reference perf
+local[$SPARK_GRAFT_CPUS] (default: every CPU in the affinity mask).  The
+throughput job mirrors the reference perf
 harness's framing (/root/reference/tests/perf.c:38-91: uints/sec over a
 1/2/3/4-byte value mix) scaled up: a deterministic synthetic token table
 (FIXTURES.md families) is encoded with the auto-selector and decoded back,
@@ -23,12 +24,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from streamvbyte_spark.operators import decode_table, encode_table  # noqa: E402
-from streamvbyte_spark.session import get_spark  # noqa: E402
+from streamvbyte_spark.session import default_cpus, get_spark  # noqa: E402
 from streamvbyte_spark.sources import synthetic_tokens  # noqa: E402
 import streamvbyte_spark.queries as Q  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "60000"))
 AVG_LEN = int(os.environ.get("SPARK_GRAFT_BENCH_AVG_LEN", "512"))
 

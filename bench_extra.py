@@ -27,8 +27,8 @@ def main():
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get(
-        "SPARK_GRAFT_CPUS", "32")))
+    from streamvbyte_spark.session import default_cpus
+    ap.add_argument("--cpus", type=int, default=default_cpus())
     ap.add_argument("--plans", default=None,
                     help="directory to write explain('formatted') into")
     ap.add_argument("--suffix", default="before")

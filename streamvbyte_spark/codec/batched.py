@@ -17,21 +17,28 @@ reference spec, README.md:207-244) — tested row-by-row against core.
 Cost model: per-row exact sizes for all 8 codecs computed with segmented
 reductions — including fsst, whose per-row symbol-table cost vectorizes as a
 composite-key sort + lexsort-ranked top-255 (_fsst_costs); argmin per row =
-the auto-selector of select.py, batched.  Every codec, fsst included, has a
-whole-batch encode AND decode kernel (_fsst_encode_rows builds all per-row
-symbol tables from one composite-key sort) — no per-row Python remains on
-any hot path.  The default ``auto`` candidate set stays the 7 original
+the single-array auto-selector (select module), batched.  The default
+``auto`` candidate set stays the 7 original
 codecs (VECTOR_COST_CODECS) so driver-facing formats are stable; passing
 VECTOR_COST_CODECS_FULL adds fsst to the argmin (the auto_full_* queries),
 and ``codec='auto_sorted'`` adds Elias-Fano on rows that are
 non-decreasing (row_sorted_mask gate; the auto_sorted_* queries — r7).
+
+Dispatch: every codec in CODEC_NAMES has one whole-batch encode kernel and
+one whole-batch decode kernel, named in exactly one place, the _KERNELS
+table at the bottom of this module — no per-row Python remains on any hot
+path.  encode_rows, decode_rows and decode_prefix_rows split a batch into
+codec groups and run each group's table kernel through one loop
+(_by_codec); a homogeneous batch returns its kernel output unchanged.
+Every copy of per-row segments (row subsets, header/payload placement,
+group reassembly) goes through one helper, _copy_segments.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from . import companions, core, select
+from . import companions, core
 
 _PLACE16 = np.array([1, 4, 16, 64], dtype=np.uint16)
 _SHIFTS = np.array([0, 2, 4, 6], dtype=np.uint8)
@@ -62,10 +69,6 @@ CODEC_NAMES = ("svb", "svb0124", "svb_delta", "bitpack", "for", "dict",
                "rle", "fsst", "ef")
 CODEC_ID = {n: i for i, n in enumerate(CODEC_NAMES)}
 VECTOR_COST_CODECS = ("svb", "svb0124", "svb_delta", "bitpack", "for", "dict", "rle")
-# every codec has a whole-batch encode kernel (fsst joined in round 4 via
-# _fsst_encode_rows/_fsst_decode_rows — no per-row Python remains on any
-# encode path)
-_WHOLE_BATCH_CODECS = frozenset(CODEC_NAMES)
 # full candidate set including fsst (cost via _fsst_costs, encode via
 # _fsst_encode_rows); the default "auto" keeps the 7-codec contract so the
 # driver-facing auto_size/auto_roundtrip formats stay stable, and fsst is
@@ -96,6 +99,41 @@ def _cached_arange(n: int, dtype) -> np.ndarray:
         a = np.arange(max(int(n * 5 // 4) + 16, 1024), dtype=dtype)
         _ARANGES[key] = a
     return a[:n]
+
+
+def _copy_segments(dst: np.ndarray, dst_starts, src: np.ndarray, src_starts,
+                   sizes) -> None:
+    """dst[dst_starts[i]:][:sizes[i]] = src[src_starts[i]:][:sizes[i]] for
+    every segment i, as one whole-batch fancy-index copy — THE segment copy
+    of this module (row subsets, header/payload placement, group
+    reassembly).  `src` may be longer than the span it copies.  A side whose
+    segments already lie end to end from 0 is addressed as a plain slice,
+    so a pure gather or scatter builds one index array, and a copy that is
+    packed on both sides is one memcpy."""
+    sizes = np.asarray(sizes, dtype=np.int64)
+    total = int(sizes.sum())
+    if total == 0:
+        return
+    packed = np.cumsum(sizes) - sizes
+
+    def index(starts):
+        shift = np.asarray(starts, dtype=np.int64) - packed
+        if not shift.any():
+            return slice(0, total)
+        idx = np.repeat(shift, sizes)
+        idx += np.arange(total, dtype=np.int64)
+        return idx
+
+    dst[index(dst_starts)] = src[index(src_starts)]
+
+
+def _take_segments(src: np.ndarray, starts, sizes):
+    """The segments src[starts[i]:][:sizes[i]] packed end to end into a new
+    array; returns (values, offsets int64[n+1])."""
+    offsets = np.concatenate([[0], np.cumsum(sizes, dtype=np.int64)])
+    out = np.empty(int(offsets[-1]), dtype=src.dtype)
+    _copy_segments(out, offsets[:-1], src, starts, sizes)
+    return out, offsets
 
 
 def _seg_sum(x: np.ndarray, offsets: np.ndarray) -> np.ndarray:
@@ -208,10 +246,8 @@ def _svb_encode_rows(flat: np.ndarray, offsets: np.ndarray, scheme0124: bool):
     padded[np.repeat(pad_starts[:-1].astype(idt), nr) + intra] = codes
     q = padded.reshape(-1, 4)
     ctrl = (q[:, 0] | (q[:, 1] << 2) | (q[:, 2] << 4) | (q[:, 3] << 6))
-    K = ctrl.size
-    ctrl_starts = np.concatenate([[0], np.cumsum(key_len)])
-    ctrl_intra = np.arange(K, dtype=np.int64) - np.repeat(ctrl_starts[:-1], key_len)
-    out[np.repeat(out_offsets[:-1], key_len) + ctrl_intra] = ctrl
+    _copy_segments(out, out_offsets[:-1], ctrl, np.cumsum(key_len) - key_len,
+                   key_len)
     return out[:total_out], out_offsets
 
 
@@ -239,10 +275,7 @@ def _svb_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarra
     # O(prefix); also bounds 4*sum(pkey) <= 4V, so the int32 index guard
     # below stays valid even when the full control region would not fit
     pkey = key_len if n_values is None else (nr + 3) // 4
-    K = int(pkey.sum())
-    ctrl_starts = np.concatenate([[0], np.cumsum(pkey)])
-    ctrl_intra = np.arange(K, dtype=np.int64) - np.repeat(ctrl_starts[:-1], pkey)
-    ctrl = enc[np.repeat(enc_offsets[:-1], pkey) + ctrl_intra]
+    ctrl, ctrl_starts = _take_segments(enc, enc_offsets[:-1], pkey)
     codes_padded = _CTRL_CODES_U32[ctrl].view(np.uint8)
     idt = np.int32 if enc.size + 4 < 2**31 and V * 4 < 2**31 else np.int64
     # per-value index into codes_padded, built in one scratch buffer:
@@ -280,8 +313,8 @@ def _svb_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarra
         cd_off = np.concatenate([[0], np.cumsum(pdata)])
         total = int(cd_off[-1])
         enc_p = _scratch("dec_encp", total + 4, np.uint8)
-        _gather_segments(enc_p[:total], enc, enc_offsets[:-1] + key_len,
-                         pdata, cd_off)
+        _copy_segments(enc_p, cd_off[:-1], enc, enc_offsets[:-1] + key_len,
+                       pdata)
         enc_p[total:total + 4] = 0
         src -= np.repeat((row_data_base - cd_off[:-1]).astype(idt), nr)
     u32 = np.ndarray((enc_p.size - 3,), np.uint32, buffer=enc_p, strides=(1,))
@@ -398,7 +431,7 @@ def _dict_costs(flat: np.ndarray, offsets: np.ndarray, nr: np.ndarray,
         if need.size == R:
             sub_flat, sub_off = flat, offsets
         else:
-            sub_flat, sub_off = _subset_rows(flat, offsets, need)
+            sub_flat, sub_off = _take_segments(flat, offsets[need], nr[need])
         k = _row_distinct(sub_flat, sub_off)
         w = _exact_width(np.maximum(k - 1, 0))
         c[need] = 4 + 4 * k + (nr[need] * w + 7) // 8
@@ -526,10 +559,8 @@ def _fsst_encode_rows(flat: np.ndarray, offsets: np.ndarray):
     Reuses _fsst_costs' machinery — one composite-key sort groups (row,
     pair); a stable lexsort ranks each row's distinct pairs by (count desc,
     pair desc) for the 255-symbol cap — then scatters table bytes, bitmap
-    bits, hit codes and escape literals with segmented placements.  No
-    per-row Python: this removes the last per-row encode loop from the
-    auto_full path (fsst-winning rows previously fell back to the
-    select.REGISTRY loop)."""
+    bits, hit codes and escape literals with segment copies — no per-row
+    Python."""
     nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
     R = nr.size
     if flat.size == 0:
@@ -583,25 +614,25 @@ def _fsst_encode_rows(flat: np.ndarray, offsets: np.ndarray):
     out[out_offsets[:-1][live]] = k[live].astype(np.uint8)
     # symbol tables (ascending u16 LE per row)
     table_bytes = grp_pair[take].astype("<u2").view(np.uint8)
-    _place_segments(out, table_bytes, 2 * k_off, out_offsets[:-1] + 1)
+    _copy_segments(out, out_offsets[:-1] + 1, table_bytes, 2 * k_off[:-1],
+                   2 * k)
     # escape bitmap: per-row byte-aligned LSB-first bits (1 = literal),
     # matching np.packbits(~in_table, bitorder='little') per row
     bm_off = np.concatenate([[0], np.cumsum(bm_len)])
     dense = np.zeros(int(bm_off[-1]) * 8, dtype=np.uint8)
-    intra_pair = np.arange(int(pair_off[-1]), dtype=np.int64) - np.repeat(
-        pair_off[:-1], m)
-    dense[np.repeat(8 * bm_off[:-1], m) + intra_pair] = (~in_table).view(np.uint8)
+    _copy_segments(dense, 8 * bm_off[:-1], (~in_table).view(np.uint8),
+                   pair_off[:-1], m)
     bitmap = np.packbits(dense, bitorder="little")
-    _place_segments(out, bitmap, bm_off, out_offsets[:-1] + 1 + 2 * k)
+    _copy_segments(out, out_offsets[:-1] + 1 + 2 * k, bitmap, bm_off[:-1],
+                   bm_len)
     # hit codes then escape literals, each row-major in stream order
     hit_codes = code_by_group[inverse][in_table].astype(np.uint8)
-    hit_off = np.concatenate([[0], np.cumsum(n_hit)])
-    _place_segments(out, hit_codes, hit_off,
-                    out_offsets[:-1] + 1 + 2 * k + bm_len)
+    _copy_segments(out, out_offsets[:-1] + 1 + 2 * k + bm_len, hit_codes,
+                   np.cumsum(n_hit) - n_hit, n_hit)
     lit_bytes = pairs[~in_table].astype("<u2").view(np.uint8)
-    lit_off = np.concatenate([[0], np.cumsum(2 * (m - n_hit))])
-    _place_segments(out, lit_bytes, lit_off,
-                    out_offsets[:-1] + 1 + 2 * k + bm_len + n_hit)
+    n_lit = 2 * (m - n_hit)
+    _copy_segments(out, out_offsets[:-1] + 1 + 2 * k + bm_len + n_hit,
+                   lit_bytes, np.cumsum(n_lit) - n_lit, n_lit)
     return out, out_offsets
 
 
@@ -648,8 +679,7 @@ def _fsst_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray,
     # rows hold an even pair count (m = 2n), so the global low/high
     # interleave reconstructs each value from its own row's pairs
     vals = pairs16[0::2] | (pairs16[1::2] << np.uint32(16))
-    _place_segments_u32(flat, vals, np.concatenate([[0], np.cumsum(nr)]),
-                        offsets[:-1][live])
+    _copy_segments(flat, offsets[live], vals, np.cumsum(nr) - nr, nr)
     return flat, offsets
 
 
@@ -715,170 +745,30 @@ def encode_rows(flat: np.ndarray, offsets: np.ndarray, codec: str = "auto",
     else:
         codec_ids = np.full(R, CODEC_ID[codec], dtype=np.int32)
 
-    unique_cids = np.unique(codec_ids)
-    # fast path: homogeneous batch -> no subset, no reassembly copy
-    if unique_cids.size == 1:
-        name = CODEC_NAMES[unique_cids[0]]
-        if name in ("svb", "svb0124"):
-            out, ooff = _svb_encode_rows(flat, offsets, name == "svb0124")
-            return out, ooff, codec_ids
-        if name == "svb_delta":
-            out, ooff = _svb_encode_rows(_row_deltas(flat, offsets), offsets, False)
-            return out, ooff, codec_ids
-        if name == "rle":
-            out, ooff = _rle_encode_rows(flat, offsets)
-            return out, ooff, codec_ids
-        if name in ("bitpack", "for"):
-            out, ooff = _bitpack_encode_rows(flat, offsets, name == "for")
-            return out, ooff, codec_ids
-        if name == "dict":
-            out, ooff = _dict_encode_rows(flat, offsets)
-            return out, ooff, codec_ids
-        if name == "fsst":
-            out, ooff = _fsst_encode_rows(flat, offsets)
-            return out, ooff, codec_ids
-
-    def _encode_group(name, g_flat, g_offsets, g_rows):
-        if name in ("svb", "svb0124"):
-            return _svb_encode_rows(g_flat, g_offsets, name == "svb0124")
-        if name == "svb_delta":
-            return _svb_encode_rows(_row_deltas(g_flat, g_offsets), g_offsets, False)
-        if name == "rle":
-            return _rle_encode_rows(g_flat, g_offsets)
-        if name in ("bitpack", "for"):
-            return _bitpack_encode_rows(g_flat, g_offsets, name == "for")
-        if name == "dict":
-            return _dict_encode_rows(g_flat, g_offsets)
-        if name == "fsst":
-            return _fsst_encode_rows(g_flat, g_offsets)
-        if name == "ef":
-            return ef_encode_rows(g_flat, g_offsets)
-        fn = select.REGISTRY[name].encode
-        bufs = [fn(g_flat[g_offsets[i]:g_offsets[i + 1]]) for i in range(g_rows)]
-        enc = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-        eoff = np.concatenate([[0], np.cumsum([len(b) for b in bufs], dtype=np.int64)])
-        return enc, eoff
-
-    # group = (rows, enc_buffer, per-row source starts, per-row sizes);
-    # sources need not be contiguous in enc_buffer
-    groups: list[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = []
-    sizes = np.zeros(R, dtype=np.int64)
-    for cid in unique_cids:
-        rows = np.flatnonzero(codec_ids == cid)
-        name = CODEC_NAMES[cid]
-        if rows.size == R:
-            enc, eoff = _encode_group(name, flat, offsets, R)
-            starts, sz = eoff[:-1], eoff[1:] - eoff[:-1]
-        elif 2 * rows.size > R and name in _WHOLE_BATCH_CODECS \
-                and name != "ef":
-            # ef is excluded from the dominant-group whole-batch trick: the
-            # NON-selected minority rows may be unsorted, and ef's loud
-            # validation (correctly) rejects the full batch
+    def run(name, rows):
+        encode = _KERNELS[name][0]
+        if rows.size == R or (2 * rows.size > R and name != "ef"):
             # DOMINANT group: encode the FULL batch with this codec and
             # reference only the dominant rows' segments — materializing an
-            # almost-complete token subset (_subset_rows' gather index) costs
-            # more than the whole-batch encode itself (measured ~1.1s subset
-            # vs ~0.3s full svb encode on an 8M-token batch); the minority
-            # rows' wasted encode work is bounded by < 50% of the batch
-            enc, eoff = _encode_group(name, flat, offsets, R)
-            starts = eoff[:-1][rows]
-            sz = (eoff[1:] - eoff[:-1])[rows]
-        else:
-            sub_flat, sub_offsets = _subset_rows(flat, offsets, rows)
-            enc, eoff = _encode_group(name, sub_flat, sub_offsets, rows.size)
-            starts, sz = eoff[:-1], eoff[1:] - eoff[:-1]
-        groups.append((rows, enc, starts, sz))
-        sizes[rows] = sz
+            # almost-complete token subset costs more than the whole-batch
+            # encode itself (measured ~1.1s subset vs ~0.3s full svb encode
+            # on an 8M-token batch); the minority rows' wasted encode work
+            # is bounded by < 50% of the batch.  ef is excluded: the
+            # NON-selected minority rows may be unsorted, and ef's loud
+            # validation (correctly) rejects the full batch
+            enc, eoff = encode(flat, offsets)
+            return enc, eoff[rows], eoff[rows + 1] - eoff[rows]
+        enc, eoff = encode(*_take_segments(flat, offsets[rows], nr[rows]))
+        return enc, eoff[:-1], eoff[1:] - eoff[:-1]
 
-    out_offsets = np.concatenate([[0], np.cumsum(sizes)])
-    out = np.empty(int(out_offsets[-1]), dtype=np.uint8)
-    for rows, enc, starts, sz in groups:
-        if not rows.size:
-            continue
-        # run fast path: rows that are consecutive in BOTH the output (row
-        # ids adjacent) and the source buffer (starts adjacent) copy as one
-        # slice memcpy — the common shape when one codec dominates a batch.
-        # Falls back to the element gather when runs are fragmented.
-        breaks = np.flatnonzero((np.diff(rows) != 1) |
-                                (starts[1:] != starts[:-1] + sz[:-1])) + 1
-        n_runs = breaks.size + 1
-        if n_runs <= rows.size // 64 + 1:
-            bounds = np.concatenate([[0], breaks, [rows.size]])
-            for k in range(n_runs):
-                a, b = int(bounds[k]), int(bounds[k + 1])
-                src0 = int(starts[a])
-                nbytes = int(starts[b - 1] + sz[b - 1] - src0)
-                dst0 = int(out_offsets[rows[a]])
-                out[dst0:dst0 + nbytes] = enc[src0:src0 + nbytes]
-        else:
-            cum = np.concatenate([[0], np.cumsum(sz)])
-            intra = np.arange(int(cum[-1]), dtype=np.int64) - np.repeat(cum[:-1], sz)
-            src = np.repeat(starts, sz) + intra
-            dst = np.repeat(out_offsets[:-1][rows], sz) + intra
-            out[dst] = enc[src]
+    out, out_offsets = _by_codec(codec_ids, run, np.uint8)
     return out, out_offsets, codec_ids
 
 
 def decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
                 codec_ids: np.ndarray):
     """Decode each row; returns (flat uint32[], offsets int64[R+1])."""
-    enc = np.ascontiguousarray(enc, dtype=np.uint8)
-    enc_offsets = np.asarray(enc_offsets, dtype=np.int64)
-    n_toks = np.asarray(n_toks, dtype=np.int64)
-    codec_ids = np.asarray(codec_ids, dtype=np.int32)
-    R = n_toks.size
-    unique_cids = np.unique(codec_ids)
-    if unique_cids.size == 1 and CODEC_NAMES[unique_cids[0]] in ("svb", "svb0124", "svb_delta"):
-        name = CODEC_NAMES[unique_cids[0]]
-        vals, offsets = _svb_decode_rows(enc, enc_offsets, n_toks, name == "svb0124")
-        if name == "svb_delta":
-            vals = _segmented_cumsum_u32(vals, offsets)
-        return vals, offsets
-    if unique_cids.size == 1 and CODEC_NAMES[unique_cids[0]] == "rle":
-        return _rle_decode_rows(enc, enc_offsets, n_toks)
-    if unique_cids.size == 1 and CODEC_NAMES[unique_cids[0]] in ("bitpack", "for"):
-        return _bitpack_decode_rows(enc, enc_offsets, n_toks,
-                                    CODEC_NAMES[unique_cids[0]] == "for")
-    if unique_cids.size == 1 and CODEC_NAMES[unique_cids[0]] == "dict":
-        return _dict_decode_rows(enc, enc_offsets, n_toks)
-    if unique_cids.size == 1 and CODEC_NAMES[unique_cids[0]] == "fsst":
-        return _fsst_decode_rows(enc, enc_offsets, n_toks)
-    if unique_cids.size == 1 and CODEC_NAMES[unique_cids[0]] == "ef":
-        return ef_decode_rows(enc, enc_offsets, n_toks)
-    offsets = np.concatenate([[0], np.cumsum(n_toks)])
-    flat = np.zeros(int(offsets[-1]), dtype=np.uint32)
-    for cid in unique_cids:
-        rows = np.flatnonzero(codec_ids == cid)
-        name = CODEC_NAMES[cid]
-        if rows.size == R:
-            sub_enc, sub_eoff = enc, enc_offsets
-        else:
-            sub_enc, sub_eoff = _subset_bytes(enc, enc_offsets, rows)
-        sub_n = n_toks[rows]
-        if name in ("svb", "svb0124", "svb_delta"):
-            vals, voff = _svb_decode_rows(sub_enc, sub_eoff, sub_n, name == "svb0124")
-            if name == "svb_delta":
-                vals = _segmented_cumsum_u32(vals, voff)
-        elif name == "rle":
-            vals, voff = _rle_decode_rows(sub_enc, sub_eoff, sub_n)
-        elif name in ("bitpack", "for"):
-            vals, voff = _bitpack_decode_rows(sub_enc, sub_eoff, sub_n, name == "for")
-        elif name == "dict":
-            vals, voff = _dict_decode_rows(sub_enc, sub_eoff, sub_n)
-        elif name == "fsst":
-            vals, voff = _fsst_decode_rows(sub_enc, sub_eoff, sub_n)
-        elif name == "ef":
-            vals, voff = ef_decode_rows(sub_enc, sub_eoff, sub_n)
-        else:
-            fn = select.REGISTRY[name].decode
-            parts = [fn(sub_enc[sub_eoff[i]:sub_eoff[i + 1]].tobytes(), int(sub_n[i]))
-                     for i in range(rows.size)]
-            vals = np.concatenate(parts) if parts else np.zeros(0, np.uint32)
-            voff = np.concatenate([[0], np.cumsum(sub_n)])
-        # vectorized scatter of this group's values into the global flat array
-        intra = np.arange(int(voff[-1]), dtype=np.int64) - np.repeat(voff[:-1], sub_n)
-        flat[np.repeat(offsets[:-1][rows], sub_n) + intra] = vals
-    return flat, offsets
+    return _decode_by_codec(enc, enc_offsets, n_toks, codec_ids, None)
 
 
 def decode_prefix_rows(enc: np.ndarray, enc_offsets: np.ndarray,
@@ -896,43 +786,79 @@ def decode_prefix_rows(enc: np.ndarray, enc_offsets: np.ndarray,
     bit-packed words) decode fully and truncate — correct, just not cheaper.
     Returns (flat uint32[], offsets int64[R+1]) with per-row length
     min(max_len, n_tok)."""
+    kk = np.minimum(np.asarray(n_toks, dtype=np.int64), max_len)
+    return _decode_by_codec(enc, enc_offsets, n_toks, codec_ids, kk)
+
+
+def _decode_by_codec(enc, enc_offsets, n_toks, codec_ids, n_values):
+    """decode_rows (n_values None) and decode_prefix_rows: each codec group
+    decodes through its table kernel, and row r keeps its first n_values[r]
+    tokens (all n_toks[r] when None)."""
     enc = np.ascontiguousarray(enc, dtype=np.uint8)
     enc_offsets = np.asarray(enc_offsets, dtype=np.int64)
     n_toks = np.asarray(n_toks, dtype=np.int64)
     codec_ids = np.asarray(codec_ids, dtype=np.int32)
-    kk = np.minimum(n_toks, max_len)
+    keep = n_toks if n_values is None else n_values
     R = n_toks.size
-    offsets = np.concatenate([[0], np.cumsum(kk)])
-    flat = np.zeros(int(offsets[-1]), dtype=np.uint32)
-    unique_cids = np.unique(codec_ids)
-    for cid in unique_cids:
-        rows = np.flatnonzero(codec_ids == cid)
-        name = CODEC_NAMES[cid]
+
+    def run(name, rows):
         if rows.size == R:
-            sub_enc, sub_eoff = enc, enc_offsets
+            sub = enc, enc_offsets
         else:
-            sub_enc, sub_eoff = _subset_bytes(enc, enc_offsets, rows)
-        if name in ("svb", "svb0124", "svb_delta"):
-            vals, voff = _svb_decode_rows(sub_enc, sub_eoff, n_toks[rows],
-                                          name == "svb0124",
-                                          n_values=kk[rows])
-            if name == "svb_delta":
-                vals = _segmented_cumsum_u32(vals, voff)
-        else:
-            fvals, fvoff = decode_rows(sub_enc, sub_eoff, n_toks[rows],
-                                       np.full(rows.size, cid, np.int32))
-            vals, voff = subset_prefix(fvals, fvoff, kk[rows])
-        sub_k = kk[rows]
-        intra = np.arange(int(voff[-1]), dtype=np.int64) - np.repeat(voff[:-1], sub_k)
-        flat[np.repeat(offsets[:-1][rows], sub_k) + intra] = vals
-    return flat, offsets
+            sub = _take_segments(enc, enc_offsets[rows],
+                                 enc_offsets[rows + 1] - enc_offsets[rows])
+        vals, voff = _KERNELS[name][1](
+            *sub, n_toks[rows], None if n_values is None else n_values[rows])
+        return vals, voff[:-1], keep[rows]
+
+    return _by_codec(codec_ids, run, np.uint32)
+
+
+def _by_codec(codec_ids: np.ndarray, run, dtype):
+    """THE codec-group loop of encode_rows / decode_rows /
+    decode_prefix_rows.  run(name, rows) runs codec `name`'s table kernel
+    for the batch rows `rows` and returns (buf, starts, sizes): row
+    rows[i]'s output is buf[starts[i]:][:sizes[i]].  Returns the rows'
+    outputs concatenated in row order with their offsets.
+
+    One group covering the whole batch with its segments already end to
+    end (the homogeneous batch) returns its kernel output unchanged.
+    Otherwise each group is copied into place: rows consecutive in BOTH the
+    output (row ids adjacent) and the group buffer (segments adjacent) copy
+    as one slice memcpy — the common shape when one codec dominates a batch
+    — falling back to one segment copy when runs are fragmented."""
+    parts = []
+    sizes = np.zeros(codec_ids.size, dtype=np.int64)
+    for cid in np.unique(codec_ids):
+        rows = np.flatnonzero(codec_ids == cid)
+        buf, starts, sz = run(CODEC_NAMES[cid], rows)
+        parts.append((rows, buf, starts, sz))
+        sizes[rows] = sz
+    offsets = np.concatenate([[0], np.cumsum(sizes)])
+    if len(parts) == 1 and buf.size == offsets[-1] \
+            and np.array_equal(starts, offsets[:-1]):
+        return buf, offsets
+    out = np.empty(int(offsets[-1]), dtype=dtype)
+    for rows, buf, starts, sz in parts:
+        breaks = np.flatnonzero((np.diff(rows) != 1) |
+                                (starts[1:] != starts[:-1] + sz[:-1])) + 1
+        n_runs = breaks.size + 1
+        if n_runs > rows.size // 64 + 1:
+            _copy_segments(out, offsets[rows], buf, starts, sz)
+            continue
+        bounds = np.concatenate([[0], breaks, [rows.size]])
+        for k in range(n_runs):
+            a, b = int(bounds[k]), int(bounds[k + 1])
+            src0 = int(starts[a])
+            nbytes = int(starts[b - 1] + sz[b - 1] - src0)
+            dst0 = int(offsets[rows[a]])
+            out[dst0:dst0 + nbytes] = buf[src0:src0 + nbytes]
+    return out, offsets
 
 
 def subset_prefix(flat: np.ndarray, offsets: np.ndarray, kk: np.ndarray):
     """First kk[r] values of each row (vectorized truncate)."""
-    out_off = np.concatenate([[0], np.cumsum(kk)])
-    intra = np.arange(int(out_off[-1]), dtype=np.int64) - np.repeat(out_off[:-1], kk)
-    return flat[np.repeat(offsets[:-1], kk) + intra], out_off
+    return _take_segments(flat, offsets[:-1], kk)
 
 
 def _segmented_cumsum_u32(d: np.ndarray, offsets: np.ndarray) -> np.ndarray:
@@ -944,24 +870,6 @@ def _segmented_cumsum_u32(d: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     nr = offsets[1:] - offsets[:-1]
     g -= np.repeat(base, nr)
     return g
-
-
-def _subset_rows(flat, offsets, rows):
-    nr = offsets[1:] - offsets[:-1]
-    sub_nr = nr[rows]
-    sub_off = np.concatenate([[0], np.cumsum(sub_nr)])
-    idx = np.repeat(offsets[:-1][rows], sub_nr) + (
-        np.arange(int(sub_off[-1]), dtype=np.int64) - np.repeat(sub_off[:-1], sub_nr))
-    return flat[idx], sub_off
-
-
-def _subset_bytes(enc, enc_offsets, rows):
-    sz = enc_offsets[1:] - enc_offsets[:-1]
-    sub_sz = sz[rows]
-    sub_off = np.concatenate([[0], np.cumsum(sub_sz)])
-    idx = np.repeat(enc_offsets[:-1][rows], sub_sz) + (
-        np.arange(int(sub_off[-1]), dtype=np.int64) - np.repeat(sub_off[:-1], sub_sz))
-    return enc[idx], sub_off
 
 
 # ------------------------------------------------------------ batched validate
@@ -1064,18 +972,12 @@ def validate_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
     valid[empty] = (sizes[empty] == n_toks[empty])
     check = np.flatnonzero(~empty & (sizes >= key_len))
     if check.size:
-        sub_enc, sub_eoff = _subset_bytes(enc, enc_offsets, check)
         sub_n = n_toks[check]
         sub_key = key_len[check]
-        K = int(sub_key.sum())
-        ctrl_starts = np.concatenate([[0], np.cumsum(sub_key)])
-        ctrl_intra = np.arange(K, dtype=np.int64) - np.repeat(ctrl_starts[:-1], sub_key)
-        ctrl = sub_enc[np.repeat(sub_eoff[:-1], sub_key) + ctrl_intra]
+        ctrl, ctrl_starts = _take_segments(enc, enc_offsets[check], sub_key)
         codes_padded = _CTRL_CODES_U32[ctrl].view(np.uint8)
-        V = int(sub_n.sum())
-        sub_off = np.concatenate([[0], np.cumsum(sub_n)])
-        intra = np.arange(V, dtype=np.int64) - np.repeat(sub_off[:-1], sub_n)
-        codes = codes_padded[np.repeat(4 * ctrl_starts[:-1], sub_n) + intra]
+        codes, sub_off = _take_segments(codes_padded, 4 * ctrl_starts[:-1],
+                                        sub_n)
         lens = _LEN_0124[codes] if scheme0124 else codes.astype(np.int64) + 1
         expected = sub_key + _seg_sum(lens, sub_off)
         valid[check] = expected == sizes[check]
@@ -1135,11 +1037,10 @@ def decode_delta_rows_prev(enc: np.ndarray, enc_offsets: np.ndarray,
     n_values (optional) decodes only each row's first min(n_values, n_tok)
     tokens — valid for delta streams because value i depends only on deltas
     <= i, so a prefix of the stream reconstructs a prefix of the tokens."""
-    vals, offsets = _svb_decode_rows(np.ascontiguousarray(enc, dtype=np.uint8),
-                                     np.asarray(enc_offsets, dtype=np.int64),
-                                     np.asarray(n_toks, dtype=np.int64), False,
-                                     n_values=n_values)
-    out = _segmented_cumsum_u32(vals, offsets)
+    out, offsets = _svb_delta_decode_rows(
+        np.ascontiguousarray(enc, dtype=np.uint8),
+        np.asarray(enc_offsets, dtype=np.int64),
+        np.asarray(n_toks, dtype=np.int64), n_values)
     nr = offsets[1:] - offsets[:-1]
     out += np.repeat(np.asarray(prev).astype(np.int64).astype(np.uint32), nr)
     return out, offsets
@@ -1163,16 +1064,6 @@ def _rle_runs(flat: np.ndarray, offsets: np.ndarray):
     return run_vals, run_lens, runs_per_row, run_offsets
 
 
-def _place_segments(out, seg, seg_offsets, dest_starts):
-    """Copy per-row segments of `seg` into `out` at per-row dest_starts."""
-    sizes = seg_offsets[1:] - seg_offsets[:-1]
-    total = int(seg_offsets[-1])
-    if total == 0:
-        return
-    intra = np.arange(total, dtype=np.int64) - np.repeat(seg_offsets[:-1], sizes)
-    out[np.repeat(dest_starts, sizes) + intra] = seg[:total]
-
-
 def _rle_encode_rows(flat: np.ndarray, offsets: np.ndarray):
     """Batched RLE (same byte layout as companions.rle_encode): per row
     [nruns u32 LE][len(svb vals) u32 LE][svb(run values)][svb(run lengths)]."""
@@ -1192,8 +1083,8 @@ def _rle_encode_rows(flat: np.ndarray, offsets: np.ndarray):
     hdr_idx = (out_offsets[:-1][live, None] + np.arange(4, dtype=np.int64))
     out[hdr_idx] = runs_per_row[live].astype("<u4").view(np.uint8).reshape(-1, 4)
     out[hdr_idx + 4] = svsz[live].astype("<u4").view(np.uint8).reshape(-1, 4)
-    _place_segments(out, sv, svo, out_offsets[:-1] + 8)
-    _place_segments(out, sl, slo, out_offsets[:-1] + 8 + svsz)
+    _copy_segments(out, out_offsets[:-1] + 8, sv, svo[:-1], svsz)
+    _copy_segments(out, out_offsets[:-1] + 8 + svsz, sl, slo[:-1], slsz)
     return out, out_offsets
 
 
@@ -1211,39 +1102,17 @@ def _rle_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarra
     len_sv = enc[(starts[:, None] + 4 + np.arange(4, dtype=np.int64))].copy().view("<u4").ravel().astype(np.int64)
     run_offsets = np.concatenate([[0], np.cumsum(nruns)])
     # gather the two concatenated sub-streams
-    sv_off = np.concatenate([[0], np.cumsum(len_sv)])
-    sv_cat = np.empty(int(sv_off[-1]), dtype=np.uint8)
-    _gather_segments(sv_cat, enc, starts + 8, len_sv, sv_off)
-    row_sizes = enc_offsets[1:] - enc_offsets[:-1]
-    len_sl = row_sizes[live] - 8 - len_sv
-    sl_off = np.concatenate([[0], np.cumsum(len_sl)])
-    sl_cat = np.empty(int(sl_off[-1]), dtype=np.uint8)
-    _gather_segments(sl_cat, enc, starts + 8 + len_sv, len_sl, sl_off)
+    sv_cat, sv_off = _take_segments(enc, starts + 8, len_sv)
+    len_sl = enc_offsets[1:][live] - starts - 8 - len_sv
+    sl_cat, sl_off = _take_segments(enc, starts + 8 + len_sv, len_sl)
     run_vals, _ = _svb_decode_rows(sv_cat, sv_off, nruns, False)
     run_lens, _ = _svb_decode_rows(sl_cat, sl_off, nruns, False)
     expanded = np.repeat(run_vals, run_lens.astype(np.int64))
     # expanded is concatenated in live-row order == flat's live region order
     exp_sizes = _seg_sum(run_lens.astype(np.int64), run_offsets)
-    exp_off = np.concatenate([[0], np.cumsum(exp_sizes)])
-    _place_segments_u32(flat, expanded, exp_off, offsets[:-1][live])
+    _copy_segments(flat, offsets[live], expanded,
+                   np.cumsum(exp_sizes) - exp_sizes, exp_sizes)
     return flat, offsets
-
-
-def _gather_segments(dst, src, src_starts, sizes, dst_offsets):
-    total = int(dst_offsets[-1])
-    if total == 0:
-        return
-    intra = np.arange(total, dtype=np.int64) - np.repeat(dst_offsets[:-1], sizes)
-    dst[:] = src[np.repeat(src_starts, sizes) + intra]
-
-
-def _place_segments_u32(out, seg, seg_offsets, dest_starts):
-    sizes = seg_offsets[1:] - seg_offsets[:-1]
-    total = int(seg_offsets[-1])
-    if total == 0:
-        return
-    intra = np.arange(total, dtype=np.int64) - np.repeat(seg_offsets[:-1], sizes)
-    out[np.repeat(dest_starts, sizes) + intra] = seg[:total]
 
 
 # ----------------------------------------- batched bit-pack / FOR / dictionary
@@ -1274,11 +1143,12 @@ def _pack_bits_rows(codes: np.ndarray, offsets: np.ndarray, widths: np.ndarray):
         _pack_bytes_aligned(codes, offsets, widths, byte_off, nr, out, arows)
     brows = np.flatnonzero(~aligned & live)
     if brows.size:
-        sub_codes, sub_off = _subset_rows(codes, offsets, brows)
+        sub_codes, sub_off = _take_segments(codes, offsets[brows], nr[brows])
         sub_byte_off = np.concatenate([[0], np.cumsum(cb[brows])])
         packed = _pack_bits_dense(sub_codes, sub_off, widths[brows],
                                   sub_byte_off, nr[brows])
-        _place_segments(out, packed, sub_byte_off, byte_off[:-1][brows])
+        _copy_segments(out, byte_off[brows], packed, sub_byte_off[:-1],
+                       cb[brows])
     return out, byte_off
 
 
@@ -1408,7 +1278,7 @@ def _unpack_bits_rows(packed: np.ndarray, byte_off: np.ndarray, nr: np.ndarray,
                     break
                 vals[sel] |= packed[src[sel] + k].astype(np.uint32) \
                     << np.uint32(8 * k)
-            out[np.repeat(offsets[:-1][arows], sub_nr) + intra] = vals
+            _copy_segments(out, offsets[arows], vals, sub_off[:-1], sub_nr)
     brows = np.flatnonzero(~aligned & (nr > 0) & (widths > 0))
     if brows.size:
         sub_nr = nr[brows]
@@ -1420,13 +1290,11 @@ def _unpack_bits_rows(packed: np.ndarray, byte_off: np.ndarray, nr: np.ndarray,
         # batch (O(stream) alloc+copy on the hot path; advice r6)
         sub_packed = np.empty(int(sub_byte_off[-1]) + 8, dtype=np.uint8)
         sub_packed[-8:] = 0
-        _gather_segments(sub_packed[:int(sub_byte_off[-1])], packed,
-                         byte_off[:-1][brows], sub_cb, sub_byte_off)
+        _copy_segments(sub_packed, sub_byte_off[:-1], packed, byte_off[brows],
+                       sub_cb)
         vals = _unpack_bits_dense(sub_packed, sub_byte_off, sub_nr, widths[brows])
-        sub_off = np.concatenate([[0], np.cumsum(sub_nr)])
-        intra = np.arange(int(sub_off[-1]), dtype=np.int64) - np.repeat(
-            sub_off[:-1], sub_nr)
-        out[np.repeat(offsets[:-1][brows], sub_nr) + intra] = vals
+        _copy_segments(out, offsets[brows], vals, np.cumsum(sub_nr) - sub_nr,
+                       sub_nr)
     # width-0 rows decode to zeros (already the fill value)
     return out
 
@@ -1497,7 +1365,7 @@ def _bitpack_encode_rows(flat, offsets, frame_of_ref: bool):
     if frame_of_ref:
         idx = out_offsets[:-1][live, None] + 1 + np.arange(4, dtype=np.int64)
         out[idx] = base[live].astype("<u4").view(np.uint8).reshape(-1, 4)
-    _place_segments(out, packed, pb_off, out_offsets[:-1] + hdr)
+    _copy_segments(out, out_offsets[:-1] + hdr, packed, pb_off[:-1], pb)
     return out, out_offsets
 
 
@@ -1513,16 +1381,12 @@ def _bitpack_decode_rows(enc, enc_offsets, n_toks, frame_of_ref: bool):
     widths = enc[starts].astype(np.int64)
     hdr = 5 if frame_of_ref else 1
     nr = n_toks[live]
-    cb = (nr * widths + 7) // 8
-    pb_off = np.concatenate([[0], np.cumsum(cb)])
-    packed = np.empty(int(pb_off[-1]), dtype=np.uint8)
-    _gather_segments(packed, enc, starts + hdr, cb, pb_off)
+    packed, pb_off = _take_segments(enc, starts + hdr, (nr * widths + 7) // 8)
     codes = _unpack_bits_rows(packed, pb_off, nr, widths)
     if frame_of_ref:
         base = enc[(starts[:, None] + 1 + np.arange(4, dtype=np.int64))].copy().view("<u4").ravel()
         codes = codes + np.repeat(base, nr)
-    exp_off = np.concatenate([[0], np.cumsum(nr)])
-    _place_segments_u32(flat, codes, exp_off, offsets[:-1][live])
+    _copy_segments(flat, offsets[live], codes, np.cumsum(nr) - nr, nr)
     return flat, offsets
 
 
@@ -1584,9 +1448,9 @@ def ef_encode_rows(flat, offsets):
     out = np.empty(int(out_offsets[-1]), dtype=np.uint8)
     live = nr > 0
     out[out_offsets[:-1][live]] = L[live].astype(np.uint8)
-    _place_segments(out, low_b, low_off, out_offsets[:-1] + 1)
-    _place_segments(out, upper, np.cumsum(np.concatenate([[0], ub])),
-                    out_offsets[:-1] + 1 + lb)
+    _copy_segments(out, out_offsets[:-1] + 1, low_b, low_off[:-1], lb)
+    _copy_segments(out, out_offsets[:-1] + 1 + lb, upper, np.cumsum(ub) - ub,
+                   ub)
     return out, out_offsets
 
 
@@ -1602,16 +1466,12 @@ def ef_decode_rows(enc, enc_offsets, n_toks):
     L = enc[starts].astype(np.int64)
     nr = n_toks[live]
     lb = (nr * L + 7) // 8
-    low_off = np.concatenate([[0], np.cumsum(lb)])
-    low_b = np.empty(int(low_off[-1]), dtype=np.uint8)
-    _gather_segments(low_b, enc, starts + 1, lb, low_off)
+    low_b, low_off = _take_segments(enc, starts + 1, lb)
     low = _unpack_bits_rows(low_b, low_off, nr, L).astype(np.uint64)
     # upper sections: gather, one global little-endian unpack, then split
     # the ascending ones positions by row (exactly nr ones per section)
     ub = (enc_offsets[1:][live] - starts) - 1 - lb
-    ub_off = np.concatenate([[0], np.cumsum(ub)])
-    up_b = np.empty(int(ub_off[-1]), dtype=np.uint8)
-    _gather_segments(up_b, enc, starts + 1 + lb, ub, ub_off)
+    up_b, ub_off = _take_segments(enc, starts + 1 + lb, ub)
     ones = np.flatnonzero(np.unpackbits(up_b, bitorder="little"))
     sub_off = np.concatenate([[0], np.cumsum(nr)])
     m = int(sub_off[-1])
@@ -1619,7 +1479,7 @@ def ef_decode_rows(enc, enc_offsets, n_toks):
     high = (ones - np.repeat(ub_off[:-1] * 8, nr) - intra).astype(np.uint64)
     vals = ((high << np.repeat(L, nr).astype(np.uint64)) | low) \
         .astype(np.uint32)
-    _place_segments_u32(flat, vals, sub_off, offsets[:-1][live])
+    _copy_segments(flat, offsets[live], vals, sub_off[:-1], nr)
     return flat, offsets
 
 
@@ -1651,9 +1511,10 @@ def _dict_encode_rows(flat, offsets):
     live = nr > 0
     hdr_idx = out_offsets[:-1][live, None] + np.arange(4, dtype=np.int64)
     out[hdr_idx] = k_per_row[live].astype("<u4").view(np.uint8).reshape(-1, 4)
-    ub_off = 4 * uniq_off
-    _place_segments(out, uniq_vals.view(np.uint8), ub_off, out_offsets[:-1] + 4)
-    _place_segments(out, packed, pb_off, out_offsets[:-1] + 4 + 4 * k_per_row)
+    _copy_segments(out, out_offsets[:-1] + 4, uniq_vals.view(np.uint8),
+                   4 * uniq_off[:-1], 4 * k_per_row)
+    _copy_segments(out, out_offsets[:-1] + 4 + 4 * k_per_row, packed,
+                   pb_off[:-1], pb)
     return out, out_offsets
 
 
@@ -1667,18 +1528,49 @@ def _dict_decode_rows(enc, enc_offsets, n_toks):
         return flat, offsets
     starts = enc_offsets[:-1][live]
     k = enc[(starts[:, None] + np.arange(4, dtype=np.int64))].copy().view("<u4").ravel().astype(np.int64)
-    uniq_off = np.concatenate([[0], np.cumsum(k)])
-    uniq_bytes = np.empty(int(uniq_off[-1]) * 4, dtype=np.uint8)
-    _gather_segments(uniq_bytes, enc, starts + 4, 4 * k, 4 * uniq_off)
+    uniq_bytes, _ = _take_segments(enc, starts + 4, 4 * k)
     uniq_vals = uniq_bytes.view("<u4")
     widths = _exact_width(np.maximum(k - 1, 0))
     nr = n_toks[live]
-    cb = (nr * widths + 7) // 8
-    pb_off = np.concatenate([[0], np.cumsum(cb)])
-    packed = np.empty(int(pb_off[-1]), dtype=np.uint8)
-    _gather_segments(packed, enc, starts + 4 + 4 * k, cb, pb_off)
+    packed, pb_off = _take_segments(enc, starts + 4 + 4 * k,
+                                    (nr * widths + 7) // 8)
     codes = _unpack_bits_rows(packed, pb_off, nr, widths)
-    vals = uniq_vals[np.repeat(uniq_off[:-1], nr) + codes]
-    exp_off = np.concatenate([[0], np.cumsum(nr)])
-    _place_segments_u32(flat, vals, exp_off, offsets[:-1][live])
+    vals = uniq_vals[np.repeat(np.cumsum(k) - k, nr) + codes]
+    _copy_segments(flat, offsets[live], vals, np.cumsum(nr) - nr, nr)
     return flat, offsets
+
+
+# --------------------------------------------------------- codec kernel table
+
+def _svb_delta_decode_rows(enc, enc_offsets, n_toks, n_values=None):
+    """svb over per-row deltas, then the per-row prefix sum (prefix-local:
+    value i depends only on deltas <= i, so a prefix decode stays exact)."""
+    vals, offsets = _svb_decode_rows(enc, enc_offsets, n_toks, False, n_values)
+    return _segmented_cumsum_u32(vals, offsets), offsets
+
+
+# THE codec -> whole-batch kernel map: encode_rows, decode_rows and
+# decode_prefix_rows dispatch through it (via _by_codec) and nowhere else.
+#   encode(flat, offsets) -> (bytes, byte offsets)
+#   decode(enc, enc_offsets, n_toks, n_values) -> (flat, offsets), each row
+#     holding at least its first n_values[r] tokens (None = all): the svb
+#     family decodes only that prefix (its control bytes address the
+#     prefix's data directly), the other layouts decode whole rows.
+_KERNELS = {
+    "svb": (lambda f, o: _svb_encode_rows(f, o, False),
+            lambda e, eo, n, k: _svb_decode_rows(e, eo, n, False, k)),
+    "svb0124": (lambda f, o: _svb_encode_rows(f, o, True),
+                lambda e, eo, n, k: _svb_decode_rows(e, eo, n, True, k)),
+    "svb_delta": (lambda f, o: _svb_encode_rows(_row_deltas(f, o), o, False),
+                  _svb_delta_decode_rows),
+    "bitpack": (lambda f, o: _bitpack_encode_rows(f, o, False),
+                lambda e, eo, n, k: _bitpack_decode_rows(e, eo, n, False)),
+    "for": (lambda f, o: _bitpack_encode_rows(f, o, True),
+            lambda e, eo, n, k: _bitpack_decode_rows(e, eo, n, True)),
+    "dict": (_dict_encode_rows,
+             lambda e, eo, n, k: _dict_decode_rows(e, eo, n)),
+    "rle": (_rle_encode_rows, lambda e, eo, n, k: _rle_decode_rows(e, eo, n)),
+    "fsst": (_fsst_encode_rows,
+             lambda e, eo, n, k: _fsst_decode_rows(e, eo, n)),
+    "ef": (ef_encode_rows, lambda e, eo, n, k: ef_decode_rows(e, eo, n)),
+}

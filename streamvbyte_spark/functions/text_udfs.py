@@ -193,12 +193,17 @@ def doc_fingerprint(tokens: pd.Series) -> pd.Series:
 def _texts_to_tokens(text: pd.Series):
     """pandas Series of strings -> (flat int32 tokens, int64 offsets) via
     the vectorized tokenizer (one Arrow string array, no per-row Python).
-    NULL text raises like every other fused path (operators.encode
-    _text_to_flat) — the SQL forms yield NULL, not token [0]."""
+    NULL text raises loudly: the SQL tokenizer turns NULL text into NULL
+    tokens (no defined fold), while a silent null-as-empty here would emit
+    token [0] and diverge from the oracles."""
     import pyarrow as pa
 
-    from ..operators.encode import _text_to_flat
-    data, off = _text_to_flat(pa.array(text, pa.string()))
+    from ..operators.encode import _flat_binary
+    col = pa.array(text, pa.string())
+    if col.null_count:
+        raise ValueError("text column contains NULLs; filter or coalesce "
+                         "to '' before the fused tokenizer")
+    data, off = _flat_binary(col.cast(pa.binary()))
     return tokenize_rows(data, off)
 
 

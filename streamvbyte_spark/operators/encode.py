@@ -1,7 +1,7 @@
 """Distributed encode/decode over the token table via mapInArrow.
 
 The lifecycle (SURVEY.md §3.4): DataFrame -> optional explicit repartition
-(range on doc_id, or salted for skewed sources) -> ``mapInArrow`` running the
+(range on doc_id) -> ``mapInArrow`` running the
 whole-batch kernels of ``codec.batched`` -> encoded table with lineage
 columns.  The JVM<->Python boundary is crossed exactly once per Arrow batch;
 inside a batch there is no per-row Python (input_hint requirement).
@@ -70,19 +70,6 @@ def _flat_binary(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     return data[base:off[-1]], off - base
 
 
-def _text_to_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """Text column -> (utf8 bytes, offsets) for the fused tokenizer, with
-    the same loud NULL rejection as _list_to_flat: the SQL tokenizer turns
-    NULL text into NULL tokens (no defined round trip), while a silent
-    null-as-empty here would emit token [0] and diverge from the oracle."""
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    if col.null_count:
-        raise ValueError("text column contains NULLs; filter or coalesce "
-                         "to '' before the fused tokenizer")
-    return _flat_binary(col.cast(pa.binary()))
-
-
 def _i32_offsets(offsets: np.ndarray) -> np.ndarray:
     """int64 -> int32 Arrow offsets with an overflow guard: an Arrow batch
     whose flat payload exceeds 2^31-1 bytes/elements would otherwise WRAP
@@ -109,14 +96,11 @@ def _binary_array(data: np.ndarray, offsets: np.ndarray) -> pa.Array:
 def encode_table(df: DataFrame, codec: str = "auto",
                  candidates: tuple[str, ...] = batched.VECTOR_COST_CODECS,
                  range_partitions: int | None = None,
-                 salt_partitions: int | None = None,
-                 flat_transform=None, text_input: bool = False) -> DataFrame:
+                 flat_transform=None) -> DataFrame:
     """Encode tokens -> (codec, encoded, lineage).
 
     range_partitions: repartitionByRange on doc_id so encoded block boundaries
     align with doc_id ranges (scan/prune-friendly at the Iceberg layer).
-    salt_partitions: hash-salted repartition that breaks up skewed sources —
-    AQE fixes join skew but not UDF-stage skew, so this is explicit.
     flat_transform: optional elementwise uint32[V] -> uint32[V] numpy
     function applied to the flat token vector INSIDE the encode kernel — a
     cheap map-side projection fused into the encode stage instead of a
@@ -125,32 +109,13 @@ def encode_table(df: DataFrame, codec: str = "auto",
     pays an extra Arrow crossing of the 4 B/token column).  Lineage
     (checksum, zone maps) and the round trip describe the TRANSFORMED
     values.
-    text_input: df carries (doc_id, text, source) instead of a tokens
-    column (sources.documents_scan); the vectorized tokenizer
-    (functions.text_udfs.tokenize_rows, value-identical to the SQL
-    tokenizer) runs fused in this kernel, so only the text bytes cross the
-    Arrow boundary and the token column never exists on the wire.
     """
     if range_partitions:
         df = df.repartitionByRange(range_partitions, "doc_id")
-    elif salt_partitions:
-        # salt = pmod(hash(doc_id), S); range-partition on the salt so each
-        # of the S buckets maps to exactly one task (hash-repartitioning the
-        # salt again would re-collide buckets, balls-in-bins)
-        df = (df.withColumn("_salt", F.pmod(F.hash("doc_id"), F.lit(salt_partitions)))
-              .repartitionByRange(salt_partitions, "_salt")
-              .drop("_salt"))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            if text_input:
-                from ..functions.text_udfs import tokenize_rows
-                data, toff = _text_to_flat(
-                    batch.column(batch.schema.get_field_index("text")))
-                tflat, offsets = tokenize_rows(data, toff)
-                flat = tflat.view(np.uint32)
-            else:
-                flat, offsets = _list_to_flat(batch.column(batch.schema.get_field_index("tokens")))
+            flat, offsets = _list_to_flat(batch.column(batch.schema.get_field_index("tokens")))
             if flat_transform is not None:
                 flat = flat_transform(flat)
             out, ooff, cids = batched.encode_rows(flat, offsets, codec=codec,
@@ -189,7 +154,7 @@ def encode_table(df: DataFrame, codec: str = "auto",
 
 def size_table(df: DataFrame, codec: str = "auto",
                candidates: tuple[str, ...] = batched.VECTOR_COST_CODECS,
-               flat_transform=None, text_input: bool = False,
+               flat_transform=None,
                carry: tuple[str, ...] = ()) -> DataFrame:
     """Exact per-row encoded size WITHOUT materializing the encoded bytes —
     the table form of the reference's size-without-encode API
@@ -200,23 +165,16 @@ def size_table(df: DataFrame, codec: str = "auto",
     oracle), so this returns the same ``size_bytes`` an encode pass would,
     at a fraction of the work — no output allocation, no scatters, no
     encoded column in the plan.  ``codec='auto'`` returns the selector's
-    min over ``candidates``.  flat_transform/text_input as in
-    encode_table.  ``carry`` names extra input columns passed through
+    min over ``candidates``.  flat_transform as in encode_table.
+    ``carry`` names extra input columns passed through
     unchanged — lets a composite query compute sizes in the SAME corpus
     scan that carries its other per-doc columns instead of scanning twice
     and joining (curation_pipeline uses this)."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            if text_input:
-                from ..functions.text_udfs import tokenize_rows
-                data, toff = _text_to_flat(
-                    batch.column(batch.schema.get_field_index("text")))
-                tflat, offsets = tokenize_rows(data, toff)
-                flat = tflat.view(np.uint32)
-            else:
-                flat, offsets = _list_to_flat(
-                    batch.column(batch.schema.get_field_index("tokens")))
+            flat, offsets = _list_to_flat(
+                batch.column(batch.schema.get_field_index("tokens")))
             if flat_transform is not None:
                 flat = flat_transform(flat)
             if codec == "auto_sorted":

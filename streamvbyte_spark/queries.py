@@ -301,76 +301,6 @@ def _token_source(spark: SparkSession, sf_dir: str, source: str) -> DataFrame:
 # registry
 # ---------------------------------------------------------------------------
 
-# The driver's correctness gate samples the FIRST 50 registry entries in dict
-# order, so insertion order decides which queries get a hard CORRECTNESS row
-# each round.  Entries named here are rotated OUT of the gate window this
-# round (moved to the end of the dict) — all have been driver-green for
-# multiple consecutive rounds; rotate the list every round so each query
-# receives a driver row at least every other round.  build_queries() fails
-# loudly if the rotation leaves more than 50 in-window entries (a silently
-# ungated tail is exactly the blind spot this exists to close).
-GATE_ROTATE_OUT: tuple[str, ...] = (
-    # r11 rotation — and the PIN CONTRACT RESTRUCTURE the r10 arithmetic
-    # forces (r10 verdict "Next round" item 1): with T = 96 queries, a
-    # 50-wide window, and the every-other-round coverage contract, the r11
-    # window is the 46 r10 rotate-outs (they have no r10 row; r10∪r11 must
-    # cover all 96) plus exactly P = 4 permanent pins.  The old flat
-    # MUST_GATE(10) model therefore cannot hold — the r9-style "expired
-    # exception" would recur every other round forever.  The contract is
-    # now two-tier (tests/test_registry_gate.py enforces it):
-    #   ALWAYS_GATE (4): nation_revenue, pack_sequences,
-    #     pack_sequences_encoded, curation_pipeline — in EVERY window.
-    #   ALTERNATING (6): sequence_pack, decontaminate, event_sessions,
-    #     ann_recall_ivf, curate_neardup_metrics, dedup_components — gated
-    #     every other round like everything else; the rotation itself
-    #     guarantees no two consecutive misses (enforced: an alternating
-    #     pin outside the window must be green in the LATEST artifact).
-    # dedup_components' r10 capacity exception thereby ends as promised:
-    # it returns in-window this round (alternating, r10-rotated-out).
-    # The 46 entries below are exactly the r10 in-window set minus the 4
-    # ALWAYS_GATE composites — all r10-green (CORRECTNESS_r10 50/50).
-    # NOTE (r11 optimization round): several of these carry this round's
-    # plan restructures (embedding_neardup's gram-matrix kernel,
-    # dedup_simhash / quality_score / lang_id / fingerprint hint nesting,
-    # the index builds' scan fanout).  The window cannot hold them without
-    # opening a two-consecutive-miss hole for a returning entry; their
-    # current-round verification is the local replica of the SAME gate
-    # (tools/check_oracles.py, 96/96 at sf0.001 + sf0.01 + sf0.1 this
-    # round) plus the parity pytest suite, and they re-enter the driver
-    # window in r12 by rotation.
-    "svb_roundtrip", "svb0124_roundtrip", "delta_roundtrip_postings",
-    "fsst_roundtrip", "zigzag_roundtrip_embeddings",
-    "zzdelta_roundtrip_embeddings", "auto_full_roundtrip",
-    "image_decode_stats", "png_decode_stats", "audio_decode_stats",
-    "csv_roundtrip", "vocab_remap_metrics", "vocab_remap_join_metrics",
-    "chunked_fused_roundtrip", "chunked_truncate_decode",
-    "index_postings_roundtrip", "index_postings_size",
-    "index_build_chunked", "index_and_multi", "index_topk_and",
-    "index_merge_updates_pos", "dedup_exact", "dedup_minhash_pairs",
-    "dedup_minhash_verified", "dedup_simhash", "dedup_ngram_jaccard",
-    "ann_topk", "ann_cosine_topk", "ann_lsh", "ann_ivf", "ann_recall",
-    "ann_recall_ivf", "embedding_neardup", "token_count", "quality_score",
-    "lang_id", "fingerprint", "token_quantiles", "top_terms",
-    "dedup_simhash_pairs", "event_sessions", "sequence_pack",
-    "decontaminate", "quality_repetition", "dedup_components_verified",
-    "curate_neardup_metrics",
-)
-GATE_WINDOW = 50
-
-
-def _gate_reorder(q: dict[str, Callable]) -> dict[str, Callable]:
-    missing = [n for n in GATE_ROTATE_OUT if n not in q]
-    if missing:
-        raise ValueError(f"GATE_ROTATE_OUT names unknown queries: {missing}")
-    in_window = [n for n in q if n not in GATE_ROTATE_OUT]
-    if len(in_window) > GATE_WINDOW:
-        raise ValueError(
-            f"{len(in_window)} queries inside the driver's first-"
-            f"{GATE_WINDOW} gate window; rotate "
-            f"{len(in_window) - GATE_WINDOW} more into GATE_ROTATE_OUT")
-    return {n: q[n] for n in (*in_window, *GATE_ROTATE_OUT)}
-
-
 # live materialized stage GENERATION per (session id, query name).  A
 # re-invocation whose fingerprint (sf_dir + the rendered stage SQL) matches
 # the live generation REUSES its checkpointed views instead of rebuilding —
@@ -438,18 +368,6 @@ def release_stage(spark, key: str) -> None:
     for v, df in gen.views:
         spark.catalog.dropTempView(v)
         release(df)
-
-
-def drop_stage_views(spark) -> None:
-    """Tear down every live stage generation of this session and
-    SYNCHRONOUSLY unpersist their checkpoint blocks (staging.release).
-    For session cleanup only — any built-but-unrun query plan that still
-    references a stage view fails after this."""
-    from .operators.staging import release
-    for sid, key in [k for k in _STAGE_VIEWS if k[0] == id(spark)]:
-        for v, df in _STAGE_VIEWS.pop((sid, key)).views:
-            spark.catalog.dropTempView(v)
-            release(df)
 
 
 def _string_bucket_expr(spark) -> str:
@@ -1933,7 +1851,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return decode_packs(spark.read.parquet(f"{tmp}/p"))
 
     q["pack_store_roundtrip"] = pack_store_roundtrip
-    return _gate_reorder(q)
+    return q
 
 
 def build_oracles() -> dict[str, str]:

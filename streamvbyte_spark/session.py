@@ -34,9 +34,16 @@ _WORKER_MALLOC_ENV = {
 }
 
 
+def default_cpus() -> int:
+    """Local-mode core count: SPARK_GRAFT_CPUS if set, else the CPUs this
+    process may run on (its affinity mask)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
 def get_spark(app: str = "streamvbyte-spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
     os.environ.update(_WORKER_MALLOC_ENV)

@@ -29,17 +29,17 @@ TOKENS_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 def tokens_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> canonical token table, tokens as a JVM-side SQL column.
 
-    THE default input for codec pipelines and JVM consumers, on measurement:
-    at sf0.1 the SQL tokenizer feeding the encode kernel ran 0.27s vs 0.35s
-    for the numpy tokenizer fused inside the kernel (text_input=True) and
-    ~0.52s for a standalone tokenize mapInArrow stage (two extra Arrow
-    crossings of the 4 B/token column).  Spark's codegen'd string ops beat
-    tokenize_rows' ~25 gather-heavy numpy passes at this corpus shape, and
-    for JVM consumers (vocab explode, JSONL write) the tokens never cross a
-    Python boundary at all — Catalyst even prunes the transform() away when
-    only n_tok is read.  The fused alternatives stay available
-    (encode_table(text_input=True), doc_simhash_text/doc_fingerprint_text)
-    for pipelines whose OTHER work already lives Python-side.
+    THE input for codec pipelines and JVM consumers, on measurement: at
+    sf0.1 the SQL tokenizer feeding the encode kernel ran 0.27s vs 0.35s
+    for the numpy tokenizer fused inside the encode kernel and ~0.52s for a
+    standalone tokenize mapInArrow stage (two extra Arrow crossings of the
+    4 B/token column), so the fused tokenize+encode path was removed.
+    Spark's codegen'd string ops beat tokenize_rows' ~25 gather-heavy numpy
+    passes at this corpus shape, and for JVM consumers (vocab explode,
+    JSONL write) the tokens never cross a Python boundary at all — Catalyst
+    even prunes the transform() away when only n_tok is read.  The fused
+    tokenizer stays only where the OTHER work already lives Python-side
+    (doc_simhash_text/doc_fingerprint_text).
 
     r11 plan fixes (optimization guide §1.2 / §2.5 "input skew"):
     * n_tok = size(split(text)) — the token map is length-preserving, so
@@ -67,14 +67,6 @@ def tokens_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.split(F.col("text"), " ", -1)).alias("n_tok"),
         F.col("source").alias("source"),
     )
-
-
-def documents_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw documents projection for encode_table(text_input=True): the
-    tokenizer runs fused inside the encode kernel, not as a column here."""
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text",
-        F.col("source").alias("source"))
 
 
 def posting_lists(spark: SparkSession, sf_dir: str,

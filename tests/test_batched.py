@@ -35,9 +35,11 @@ def gen_mixed(n):
 
 
 @pytest.mark.parametrize("codec", ["svb", "svb0124", "svb_delta", "bitpack",
-                                   "for", "dict", "rle", "fsst"])
+                                   "for", "dict", "rle", "fsst", "ef"])
 def test_fixed_codec_matches_core_per_row(codec):
-    arrays, flat, offsets = make_rows(EDGE_LENGTHS, gen_mixed)
+    # ef is defined only on non-decreasing rows
+    gen = (lambda n: np.sort(gen_mixed(n))) if codec == "ef" else gen_mixed
+    arrays, flat, offsets = make_rows(EDGE_LENGTHS, gen)
     out, ooff, cids = batched.encode_rows(flat, offsets, codec=codec)
     ref = select.REGISTRY[codec]
     for i, a in enumerate(arrays):
@@ -182,6 +184,58 @@ def test_prefix_decode_mixed_codec_batch():
     vals, voff = batched.decode_prefix_rows(out, ooff, n_toks, cids, 17)
     for i, a in enumerate(arrays):
         np.testing.assert_array_equal(vals[voff[i]:voff[i + 1]], a[:17])
+
+
+@pytest.mark.parametrize("layout", ["blocked", "interleaved"])
+def test_dominant_group_and_minority_subset(layout, monkeypatch):
+    """3/4 small-value-run rows (rle wins) + 1/4 random 32-bit rows: the rle
+    group holds more than half the batch, so encode_rows runs its kernel on
+    the WHOLE batch and keeps the rle rows' segments, while the minority
+    group is encoded from a row subset.  'blocked' reassembles each group
+    as one slice copy, 'interleaved' through the fragmented segment copy.
+    Every row must still equal the single-array codec and decode exactly."""
+    def small_runs(n):
+        return np.repeat(RNG.integers(100, 200, n // 16 + 1), 16)[:n].astype(np.uint32)
+
+    def random32(n):
+        return RNG.integers(0, 2 ** 32, size=n, dtype=np.uint64).astype(np.uint32)
+
+    R = 400
+    lengths = RNG.integers(64, 300, size=R)
+    is_runs = (np.arange(R) < 3 * R // 4) if layout == "blocked" \
+        else (np.arange(R) % 4 != 0)
+    arrays = [small_runs(n) if r else random32(n)
+              for n, r in zip(lengths, is_runs)]
+    flat = np.concatenate(arrays)
+    offsets = np.concatenate([[0], np.cumsum(lengths)]).astype(np.int64)
+
+    encoded_rows = {}
+    for name in batched.CODEC_NAMES:
+        enc_fn, dec_fn = batched._KERNELS[name]
+
+        def spy(f, o, name=name, enc_fn=enc_fn):
+            encoded_rows.setdefault(name, []).append(o.size - 1)
+            return enc_fn(f, o)
+        monkeypatch.setitem(batched._KERNELS, name, (spy, dec_fn))
+
+    out, ooff, cids = batched.encode_rows(flat, offsets, codec="auto")
+    rle = batched.CODEC_ID["rle"]
+    assert np.array_equal(cids == rle, is_runs)
+    assert encoded_rows.pop("rle") == [R]  # dominant: whole-batch encode
+    (minority, sizes), = encoded_rows.items()
+    assert sizes == [R // 4]  # minority: row-subset encode
+    for i, a in enumerate(arrays):
+        name = batched.CODEC_NAMES[cids[i]]
+        assert out[ooff[i]:ooff[i + 1]].tobytes() == \
+            select.REGISTRY[name].encode(a), i
+    n_toks = lengths.astype(np.int64)
+    vflat, voff = batched.decode_rows(out, ooff, n_toks, cids)
+    for i, a in enumerate(arrays):
+        np.testing.assert_array_equal(vflat[voff[i]:voff[i + 1]], a)
+    for k in (5, 100, 10 ** 6):
+        vals, voff = batched.decode_prefix_rows(out, ooff, n_toks, cids, k)
+        for i, a in enumerate(arrays):
+            np.testing.assert_array_equal(vals[voff[i]:voff[i + 1]], a[:k])
 
 
 def test_all_empty_batch():

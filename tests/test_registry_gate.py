@@ -1,117 +1,12 @@
-"""The driver's correctness gate samples the FIRST 50 registry entries in
-dict order.  These tests pin the rotation contract (queries.GATE_ROTATE_OUT):
-the heavyweight dataloader-facing operators must sit inside the gate window,
-every query keeps an oracle, and the rotation list never silently names a
-query that no longer exists (build_queries raises on that, but the window
-membership itself is only visible here)."""
+"""Every registry query keeps a DuckDB oracle (tools/check_oracles.py gates
+them all against it)."""
 
 from __future__ import annotations
 
 import __spark_entry__ as entry
-from streamvbyte_spark import queries as q
-
-# Two-tier pin contract (r11 restructure — the r10 window arithmetic
-# saturated: with T = 96 queries, a 50-wide window and the every-other-
-# round rotation, W_next = (T - 50) + P forces P <= 4, so the old flat
-# 10-entry MUST_GATE cannot hold and the r9-style "expired exception"
-# would recur every other round forever; r10 verdict "Next round" item 1).
-#
-# ALWAYS_GATE: the four flagship composites — inside EVERY driver window.
-# ALTERNATING: the other six long-watched operators — gated every other
-# round exactly like the rest of the registry; the rotation contract
-# already guarantees no two consecutive misses, and the test below
-# enforces it directly (an alternating pin outside the current window
-# must be fully green in the LATEST driver artifact, i.e. it was
-# in-window last round).  At T = 96 any NEW query requires retiring or
-# merging an existing one — there are zero free slots.
-ALWAYS_GATE = {
-    "pack_sequences", "pack_sequences_encoded", "curation_pipeline",
-    "nation_revenue",
-}
-ALTERNATING_GATE = {
-    "sequence_pack", "decontaminate", "event_sessions", "ann_recall_ivf",
-    "curate_neardup_metrics", "dedup_components",
-}
-
-
-def _latest_green():
-    import glob
-    import json
-    import os
-    files = sorted(glob.glob(
-        os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r*.json")))
-    if not files:
-        return None
-    green = set()
-    for name, row in json.load(open(files[-1])).items():
-        if isinstance(row, dict) and row.get("rows_match") \
-                and row.get("schema_match") and row.get("hash_match"):
-            green.add(name)
-    return green
-
-
-def test_always_gate_inside_window():
-    names = list(entry.queries())
-    first = set(names[:q.GATE_WINDOW])
-    missing = ALWAYS_GATE - first
-    assert not missing, f"not in the driver's first-{q.GATE_WINDOW}: {missing}"
-
-
-def test_alternating_pins_never_miss_twice():
-    """An ALTERNATING pin may sit outside the window only when the LATEST
-    driver artifact shows it fully green (it was in-window last round) —
-    that is the no-two-consecutive-misses guarantee, enforced on the
-    artifact rather than assumed from the rotation."""
-    names = list(entry.queries())
-    first = set(names[:q.GATE_WINDOW])
-    outside = ALTERNATING_GATE - first
-    if not outside:
-        return
-    green = _latest_green()
-    if green is None:
-        import pytest
-        pytest.skip("no driver correctness artifacts yet (round 1)")
-    stale = outside - green
-    assert not stale, \
-        f"alternating pins outside the window without a latest-round " \
-        f"green row: {stale}"
 
 
 def test_every_query_has_an_oracle():
     queries = entry.queries()
     oracles = entry.oracle_sql()
     assert set(queries) == set(oracles)
-
-
-def test_rotated_out_queries_exist_and_fit():
-    names = list(entry.queries())
-    assert set(q.GATE_ROTATE_OUT) <= set(names)
-    # rotation invariant: nothing outside the window except rotated entries
-    in_window = [n for n in names if n not in q.GATE_ROTATE_OUT]
-    assert len(in_window) <= q.GATE_WINDOW
-    # rotated entries are contiguous at the END (insertion-order contract)
-    assert names[-len(q.GATE_ROTATE_OUT):] == list(q.GATE_ROTATE_OUT)
-
-
-def test_rotated_out_queries_were_driver_green_before():
-    """A query may leave the driver's window only if SOME past round's
-    CORRECTNESS artifact shows it fully green — rotating out a
-    never-gated (or last-seen-failing) query would hide it from the
-    driver indefinitely.  New queries must therefore enter IN-window."""
-    import glob
-    import json
-    import os
-    files = sorted(glob.glob(
-        os.path.join(os.path.dirname(__file__), "..", "CORRECTNESS_r*.json")))
-    if not files:
-        import pytest
-        pytest.skip("no driver correctness artifacts yet (round 1)")
-    green = set()
-    for f in files:
-        for name, row in json.load(open(f)).items():
-            if isinstance(row, dict) and row.get("rows_match") \
-                    and row.get("schema_match") and row.get("hash_match"):
-                green.add(name)
-    never_green = [n for n in q.GATE_ROTATE_OUT if n not in green]
-    assert not never_green, \
-        f"rotated out without any prior green driver row: {never_green}"

@@ -157,23 +157,10 @@ def test_decode_stub_gated(spark):
         decode_audio(b"RIFF")
 
 
-def test_salted_and_range_partitioning(spark, tok):
+def test_range_partitioning(spark, tok):
     enc_r = encode_table(tok, codec="svb", range_partitions=4)
-    enc_s = encode_table(tok, codec="svb", salt_partitions=4)
-    assert enc_r.count() == enc_s.count() == tok.count()
+    assert enc_r.count() == tok.count()
     assert verify_roundtrip(tok, decode_table(enc_r)) == 0
-
-
-def test_salting_evens_skewed_source(spark):
-    """80% of docs share source='web'; without salting a source-partitioned
-    stage puts them on one task. Salted repartition must spread them."""
-    syn = synthetic_tokens(spark, 2000, avg_len=32, seed=11, partitions=4)
-    salted = encode_table(syn, codec="svb", salt_partitions=8)
-    sizes = [r.n for r in
-             salted.groupBy(F.spark_partition_id().alias("pid"))
-             .agg(F.count("*").alias("n")).collect()]
-    assert len(sizes) >= 6  # range sampler may merge adjacent salt values
-    assert max(sizes) < 2 * (sum(sizes) / len(sizes))  # no partition >2x mean
 
 
 def test_public_api_facade(spark):
@@ -721,8 +708,8 @@ def test_zone_map_null_for_empty_docs(spark):
 
 
 def test_vectorized_tokenizer_matches_sql_expression(spark):
-    """tokenize_rows (the numpy UTF-8 kernel fused into encode_table
-    text_input=True) must be value-identical to the dialect-paired SQL
+    """tokenize_rows (the numpy UTF-8 kernel fused into doc_simhash_text /
+    doc_fingerprint_text) must be value-identical to the dialect-paired SQL
     tokenizer expression (tokens_from_documents) on real testdata AND on
     adversarial texts (empty, repeated spaces, multibyte, astral-plane
     emoji, 8+-char words hitting the 2^24 arm)."""
@@ -762,28 +749,14 @@ def test_vectorized_tokenizer_matches_sql_expression(spark):
             F.expr(spark_tokens_expr("text")).alias("t")).collect()
 
 
-def test_text_input_encode_matches_tokens_encode(spark):
-    """encode_table(text_input=True) over the raw documents scan must emit
-    byte-identical encoded rows to encode_table over the SQL token table."""
-    from streamvbyte_spark.sources import documents_scan
-    a = encode_table(documents_scan(spark, SF), codec="auto",
-                     text_input=True).collect()
-    b = encode_table(tokens_from_documents(spark, SF), codec="auto").collect()
-    ka = sorted((r.doc_id, r.codec, bytes(r.encoded), r.n_tok, r.checksum,
-                 r.tok_min, r.tok_max) for r in a)
-    kb = sorted((r.doc_id, r.codec, bytes(r.encoded), r.n_tok, r.checksum,
-                 r.tok_min, r.tok_max) for r in b)
-    assert ka == kb
-
-
 def test_size_table_matches_encode_out_bytes(spark):
     """size_table (cost-only, the reference compressedbytes shape) must
     equal the encode pass's out_bytes for every row and codec path."""
     from streamvbyte_spark.operators import size_table
-    from streamvbyte_spark.sources import documents_scan, posting_lists
+    from streamvbyte_spark.sources import posting_lists
     for codec in ("auto", "svb", "svb0124", "rle"):
         got = {r.doc_id: r.size_bytes for r in size_table(
-            documents_scan(spark, SF), codec=codec, text_input=True).collect()}
+            tokens_from_documents(spark, SF), codec=codec).collect()}
         want = {r.doc_id: r.out_bytes for r in encode_table(
             tokens_from_documents(spark, SF), codec=codec).collect()}
         assert got == want, codec
@@ -795,23 +768,18 @@ def test_size_table_matches_encode_out_bytes(spark):
 
 
 def test_fused_text_paths_reject_null_text(spark):
-    """NULL text must raise loudly on every fused-tokenizer path (the SQL
+    """NULL text must raise loudly on the fused-tokenizer path (the SQL
     forms yield NULL tokens; silently tokenizing null-as-'' would emit
     token [0] and diverge from the oracles)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from streamvbyte_spark.functions.text_udfs import doc_fingerprint_text
-    from streamvbyte_spark.operators import size_table
     tmp = tempfile.mkdtemp(prefix="svb_nulltext_")
     try:
         pq.write_table(pa.table({
             "doc_id": ["a", "b"], "text": ["ok doc", None],
             "source": ["s", "s"]}), f"{tmp}/documents.parquet")
         docs = spark.read.parquet(f"{tmp}/documents.parquet")
-        with pytest.raises(Exception, match="NULL"):
-            encode_table(docs, codec="auto", text_input=True).collect()
-        with pytest.raises(Exception, match="NULL"):
-            size_table(docs, codec="auto", text_input=True).collect()
         with pytest.raises(Exception, match="NULL"):
             docs.select(doc_fingerprint_text("text")).collect()
     finally:
