@@ -225,15 +225,14 @@ def main():
             passes[name].append(round(time.perf_counter() - t0, 3))
         timings[name] = min(passes[name])
         # release THIS query's live stage generation after its LAST
-        # measured pass (r8 verdict item 4): generation REUSE keeps the
-        # three passes above flat (the r7 fix), but each staged headliner
-        # otherwise leaves its checkpoint blocks resident for the REST of
-        # the run — 22 headliners deep, later queries measure accumulated
-        # storage pressure, not their plans.  dropTempView alone would
-        # not free the blocks (CLAUDE.md); release_stage unpersists the
-        # checkpointed RDDs synchronously.  Safe here: this headliner's
-        # DataFrames are all executed and dropped, and the next query
-        # owns a disjoint stage key.
+        # measured pass: generation REUSE keeps the three passes above
+        # flat, but each staged headliner otherwise leaves its checkpoint
+        # blocks resident for the REST of the run — 22 headliners deep,
+        # later queries measure accumulated storage pressure, not their
+        # plans.  dropTempView alone would not free the blocks;
+        # release_stage unpersists the checkpointed RDDs synchronously.
+        # Safe here: this headliner's DataFrames are all executed and
+        # dropped, and the next query owns a disjoint stage key.
         df = None
         Q.release_stage(spark, name)
         # snapshot AFTER release: jvm_cached_mb is then a LEAK detector —

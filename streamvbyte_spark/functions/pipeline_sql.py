@@ -14,8 +14,7 @@ from identical integer inputs.
 
 from __future__ import annotations
 
-import os
-
+from ..session import default_cpus
 from .sqlpair import duckdb_tokens_expr, spark_tokens_expr
 
 # explicit fan-out for CPU-heavy map stages over possibly-single-row-group
@@ -24,7 +23,23 @@ from .sqlpair import duckdb_tokens_expr, spark_tokens_expr
 # CPU-bound on small bytes).  On a real multi-file 100 TB table the scan
 # itself provides the parallelism and this pinned count is a no-op cap per
 # executor wave.
-_SCAN_FANOUT = max(8, os.cpu_count() or 8)
+_SCAN_FANOUT = max(8, default_cpus())
+
+
+def fanout_scan(docs):
+    """Scale-adaptive scan fanout for a ``doc_id``-keyed input DataFrame.
+
+    Small test tables ship as ONE parquet row group each, so every
+    map stage over a plain scan (tokenizer, explode + partial aggregate,
+    per-doc Python encoders) runs as a single task.  When the scan's own
+    partitioning is coarser than _SCAN_FANOUT, repartition the RAW rows
+    (one bounded exchange) before the heavy projection so it runs wide.  A
+    no-op on real multi-file corpora (the trigger is derived from the scan,
+    not pinned to local mode) and for streaming inputs (micro-batch
+    partitioning is the trigger's business, and .rdd is undefined there)."""
+    if not docs.isStreaming and docs.rdd.getNumPartitions() < _SCAN_FANOUT:
+        docs = docs.repartition(_SCAN_FANOUT, "doc_id")
+    return docs
 
 # deterministic MinHash parameters (textbook scheme: h(x) = (a*x + b) mod p)
 # over word-3-gram SHINGLE hashes: shingle sets are near-disjoint between

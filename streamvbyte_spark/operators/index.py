@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.pipeline_sql import fanout_scan
 from .chunking import encode_chunked_delta
 
 # chunk span in doc-id space: bounds every chunk row to <= span postings.
@@ -55,23 +56,6 @@ INDEX_CHUNK_SPAN = 128
 INDEX_MIN_DF = 5
 
 
-def _fanout_scan(docs: DataFrame) -> DataFrame:
-    """Scale-adaptive explode fanout (optimization guide §2.5 input skew):
-    the driver testdata ships documents as ONE parquet row group, so the
-    posexplode + map-side partial aggregate of every index build ran as a
-    single task (r11 plan audit — 2.7M exploded rows on 1 of 32 cores at
-    sf1.0).  Repartition the raw text rows only when the scan's own
-    partitioning is coarser than the derived fanout — a no-op on real
-    multi-file corpora, and skipped for streaming inputs (micro-batch
-    partitioning is the trigger's business, and .rdd is undefined there)."""
-    if docs.isStreaming:
-        return docs
-    from ..functions.pipeline_sql import _SCAN_FANOUT
-    if docs.rdd.getNumPartitions() < _SCAN_FANOUT:
-        docs = docs.repartition(_SCAN_FANOUT, "doc_id")
-    return docs
-
-
 def term_doc_pairs(docs: DataFrame) -> DataFrame:
     """(term, did) rows, duplicates NOT yet removed: the explode output.
     Tokenizer parity with the SQL pipeline family: split on single space,
@@ -83,7 +67,7 @@ def term_doc_pairs(docs: DataFrame) -> DataFrame:
     id in a MIXED chunk would already trip the EF sortedness check, but an
     isolated all-negative chunk preserves two's-complement order and would
     otherwise wrap silently onto the uint32 wire (probed)."""
-    docs = _fanout_scan(docs)
+    docs = fanout_scan(docs)
     return (docs.select(
         F.explode(F.split(F.col("text"), " ")).alias("term"),
         F.col("doc_id").cast("int").alias("did"))
@@ -100,7 +84,7 @@ def term_doc_pos_pairs(docs: DataFrame) -> DataFrame:
     text).  Same tokenizer and loud id guard; shared by the positional
     batch build and the TF streaming merge (whose within-batch redelivery
     dedup is keyed on (did, pos))."""
-    docs = _fanout_scan(docs)
+    docs = fanout_scan(docs)
     return (docs.select(
         F.posexplode(F.split(F.col("text"), " ")).alias("pos", "term"),
         F.col("doc_id").cast("int").alias("did"))

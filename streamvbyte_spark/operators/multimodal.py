@@ -25,24 +25,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.pipeline_sql import fanout_scan
+
 MEDIA_SCHEMA = ("doc_id string, media_type string, payload binary, "
                 "meta struct<n_bytes: int, fmt: string>")
 FEATURE_SCHEMA = "doc_id string, n_bytes bigint, byte_sum bigint, feature array<float>"
-
-
-def _fanout_docs(docs: DataFrame) -> DataFrame:
-    """Scale-adaptive fanout before the per-doc Python synth encoders
-    (optimization guide §2.5 input skew): the driver testdata ships
-    documents as one parquet row group, so the synth mapInArrow stages —
-    and everything decoding their payloads downstream — ran as a SINGLE
-    task (jpeg_decode_stats measured 340 s on 1 of 32 cores at sf1.0).
-    No-op on real multi-file corpora and for streaming inputs."""
-    if docs.isStreaming:
-        return docs
-    from ..functions.pipeline_sql import _SCAN_FANOUT
-    if docs.rdd.getNumPartitions() < _SCAN_FANOUT:
-        docs = docs.repartition(_SCAN_FANOUT, "doc_id")
-    return docs
 
 
 def synth_media_table(docs: DataFrame) -> DataFrame:
@@ -629,7 +616,7 @@ def synth_adpcm_table(docs: DataFrame, rate: int = 16000) -> DataFrame:
                 [doc, pa.array(payloads, pa.binary())],
                 names=["doc_id", "payload"])
 
-    base = _fanout_docs(docs).select(
+    base = fanout_scan(docs).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
     return (base.mapInArrow(run, "doc_id string, payload binary")
@@ -672,7 +659,7 @@ def synth_ppm_table(docs: DataFrame, width: int = 4) -> DataFrame:
                 [doc, pa.array(payloads, pa.binary())],
                 names=["doc_id", "payload"])
 
-    base = _fanout_docs(docs).select(
+    base = fanout_scan(docs).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
     out = base.mapInArrow(run, "doc_id string, payload binary")
@@ -757,7 +744,7 @@ def synth_png_table(docs: DataFrame, width: int = 4) -> DataFrame:
                 [doc, pa.array(payloads, pa.binary())],
                 names=["doc_id", "payload"])
 
-    base = _fanout_docs(docs).select(
+    base = fanout_scan(docs).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
     return (base.mapInArrow(run, "doc_id string, payload binary")
@@ -792,7 +779,7 @@ def synth_jpeg_table(docs: DataFrame, width_blocks: int = 2) -> DataFrame:
                 [doc, pa.array(payloads, pa.binary())],
                 names=["doc_id", "payload"])
 
-    base = _fanout_docs(docs).select(
+    base = fanout_scan(docs).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
     return (base.mapInArrow(run, "doc_id string, payload binary")
@@ -827,7 +814,7 @@ def synth_wav_table(docs: DataFrame, rate: int = 16000) -> DataFrame:
                 [doc, pa.array(payloads, pa.binary())],
                 names=["doc_id", "payload"])
 
-    base = _fanout_docs(docs).select(
+    base = fanout_scan(docs).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
     return (base.mapInArrow(run, "doc_id string, payload binary")

@@ -39,11 +39,12 @@ def curate_documents(docs: DataFrame, min_words: int = 8,
     stop_ratio = F.size(F.filter(words, lambda w: w.isin(
         "the", "a", "of", "and", "to", "in", "is", "on", "for", "with"))) / n_words
     gated = deduped.where((n_words >= min_words) & (stop_ratio <= max_stop_ratio))
-    t = spark_tokens_expr("text")
+    # the token map is length-preserving: n_words IS the token count, so
+    # the interpreted tokenizer lambda runs once per row, not twice
     return gated.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        F.expr(t).alias("tokens"),
-        F.size(F.expr(t)).alias("n_tok"),
+        F.expr(spark_tokens_expr("text")).alias("tokens"),
+        n_words.alias("n_tok"),
         "source")
 
 

@@ -12,7 +12,7 @@ compare hashes values under sorted column names).
 
 from __future__ import annotations
 
-from typing import Callable, NamedTuple
+from typing import Callable
 
 import numpy as np
 import pyarrow as pa
@@ -28,6 +28,8 @@ from .functions.sqlpair import (
     spark_tokens_expr,
 )
 from .operators import decode_table, encode_table, size_table
+# release_stage is re-exported: harnesses tear a query's stages down here
+from .operators.staging import release_stage, stage_views  # noqa: F401
 from .sources import posting_lists, tokens_from_documents
 
 # ---------------------------------------------------------------------------
@@ -301,75 +303,6 @@ def _token_source(spark: SparkSession, sf_dir: str, source: str) -> DataFrame:
 # registry
 # ---------------------------------------------------------------------------
 
-# live materialized stage GENERATION per (session id, query name).  A
-# re-invocation whose fingerprint (sf_dir + the rendered stage SQL) matches
-# the live generation REUSES its checkpointed views instead of rebuilding —
-# this is what keeps repeated in-session runs of the checkpoint-heavy
-# composites flat: BENCH_r07 recorded curated_pack_encoded escalating
-# 4.96 -> 9.98 -> 21.16 s because every pass localCheckpointed a fresh
-# generation whose dropped-but-unreaped predecessor blocks (dropTempView
-# does NOT unpersist; release waits on the Python-GC -> py4j ->
-# ContextCleaner chain) stacked executor-memory pressure (r7 verdict item
-# 1).  A fingerprint MISS (different sf_dir / stage SQL) rebuilds under
-# fresh uuid-suffixed names and drops the old generation's views WITHOUT
-# force-unpersisting them: a built-but-unrun consumer plan may still
-# reference the old LogicalRDD, whose truncated lineage cannot recompute
-# freed blocks — deferred GC release is the safe path, and fingerprint
-# churn is bounded by the distinct (query, sf_dir) pairs a session touches.
-# Two DIFFERENT queries always keep disjoint keys (the owner contract:
-# building composite B must never invalidate built-but-unrun composite A).
-class _StageGen(NamedTuple):
-    fingerprint: tuple
-    views: tuple[tuple[str, object], ...]   # (temp view name, checkpointed df)
-    payload: tuple                          # query-kind-specific reuse data
-
-
-_STAGE_VIEWS: dict[tuple[int, str], _StageGen] = {}
-
-
-def _stage_cache_get(spark, key: str, fingerprint: tuple):
-    """Payload of the live generation for (spark, key) iff its fingerprint
-    matches AND every view still resolves (a test/session may have dropped
-    or replaced them externally); else None."""
-    gen = _STAGE_VIEWS.get((id(spark), key))
-    if gen is None or gen.fingerprint != fingerprint:
-        return None
-    if not all(spark.catalog.tableExists(v) for v, _ in gen.views):
-        return None
-    return gen.payload
-
-
-def _stage_cache_put(spark, key: str, fingerprint: tuple,
-                     views, payload: tuple) -> None:
-    """Install a freshly built generation, dropping the previous one's
-    temp views (block release stays deferred to GC — see _STAGE_VIEWS)."""
-    for old, _old_df in getattr(_STAGE_VIEWS.pop((id(spark), key), None),
-                                "views", ()):
-        spark.catalog.dropTempView(old)
-    _STAGE_VIEWS[(id(spark), key)] = _StageGen(fingerprint, tuple(views),
-                                               tuple(payload))
-
-
-def release_stage(spark, key: str) -> None:
-    """Tear down ONE query's live stage generation (drop its temp views and
-    SYNCHRONOUSLY unpersist the checkpoint blocks via staging.release).
-    For harnesses that are DONE with a query: bench.py calls it after each
-    headliner's last measured pass so one staged query's blocks cannot
-    pressure the next headliner's measurement (r8 verdict item 4 — the
-    driver-session BENCH_r08 read 14-100% slow on untouched queries while
-    clean sessions agreed with r7).  Never call it while a built-but-unrun
-    plan may still reference the views (truncated lineage cannot recompute
-    freed blocks); generation REUSE within one query's repeated passes is
-    unaffected because release happens only after its final pass."""
-    from .operators.staging import release
-    gen = _STAGE_VIEWS.pop((id(spark), key), None)
-    if gen is None:
-        return
-    for v, df in gen.views:
-        spark.catalog.dropTempView(v)
-        release(df)
-
-
 def _string_bucket_expr(spark) -> str:
     """Monotone string-prefix bucket for NON-NUMERIC doc_ids, prefix length
     derived from the data: longest common prefix of the min and max doc_id
@@ -408,9 +341,7 @@ def _build_curation_stages(spark, sf_dir, qname, with_manifest=True):
     the live checkpointed generation — parquet inputs are immutable for
     a session, so the cached stages are value-identical and repeated
     runs of the consuming composites neither re-scan the corpus nor
-    stack checkpoint blocks (r7 verdict item 1)."""
-    import uuid as _uuid
-    from .operators.staging import materialize
+    stack checkpoint blocks."""
     from .functions.text_udfs import register_text_udfs
     register_text_udfs(spark)
     spark.read.parquet(f"{sf_dir}/documents.parquet") \
@@ -418,31 +349,18 @@ def _build_curation_stages(spark, sf_dir, qname, with_manifest=True):
     d = pipeline_sql.Dialect("spark")
     fp = (sf_dir, with_manifest, pipeline_sql._shingle_rows(d, "source"),
           pipeline_sql.CURATE_MIN_TOK)
-    hit = _stage_cache_get(spark, qname, fp)
-    if hit is not None:
-        return hit
-    tag = _uuid.uuid4().hex[:8]
-    names = {}
-    tracked = []
 
-    def stage(short, df):
-        v = f"svb_stage_{qname[-12:]}_{short}_{tag}"
-        mdf = materialize(df)
-        mdf.createOrReplaceTempView(v)
-        names[short] = v
-        tracked.append((v, mdf))
-        return v
-    sh = stage("sh", spark.sql(pipeline_sql._shingle_rows(d, "source")))
-    ms = stage("msrc", spark.sql(
-        "select min(source) as s from documents"))
-    msrc = f"(select s from {ms})"
-    hits = stage("hits", spark.sql(
-        f"select /*+ BROADCAST(ev) */ e.doc_id from {sh} e "
-        f"join (select distinct shingle from {sh} "
-        f"      where source = {msrc}) ev on e.shingle = ev.shingle "
-        f"where e.source != {msrc} group by e.doc_id"))
-    man = None
-    if with_manifest:
+    def msrc(ms):
+        return f"(select s from {ms})"
+
+    def hits(sh, ms):
+        return spark.sql(
+            f"select /*+ BROADCAST(ev) */ e.doc_id from {sh} e "
+            f"join (select distinct shingle from {sh} "
+            f"      where source = {msrc(ms)}) ev on e.shingle = ev.shingle "
+            f"where e.source != {msrc(ms)} group by e.doc_id")
+
+    def manifest(_sh, ms, hv):
         # doc_id stays NATIVE-typed (matching curated_tok_select): the
         # totals side's bucket expression must see the same dtype/order
         # as the window side
@@ -450,14 +368,22 @@ def _build_curation_stages(spark, sf_dir, qname, with_manifest=True):
                  "size(split(text, ' ')) as n_tok, "
                  "row_number() over (partition by md5(text) "
                  "order by cast(doc_id as string)) as rn "
-                 f"from documents where source != {msrc}")
-        man = stage("man", spark.sql(
+                 f"from documents where source != {msrc(ms)}")
+        return spark.sql(
             f"select doc_id, source, n_tok from ({inner}) base "
             f"where rn = 1 and n_tok >= {pipeline_sql.CURATE_MIN_TOK} "
-            f"and not exists (select 1 from {hits} h "
-            "where h.doc_id = cast(base.doc_id as string))"))
-    _stage_cache_put(spark, qname, fp, tracked, (hits, msrc, man))
-    return hits, msrc, man
+            f"and not exists (select 1 from {hv} h "
+            "where h.doc_id = cast(base.doc_id as string))")
+    base = f"svb_stage_{qname[-12:]}_"
+    stages = [
+        (base + "sh",
+         lambda: spark.sql(pipeline_sql._shingle_rows(d, "source"))),
+        (base + "msrc",
+         lambda _sh: spark.sql("select min(source) as s from documents")),
+        (base + "hits", hits),
+    ] + ([(base + "man", manifest)] if with_manifest else [])
+    views = stage_views(spark, qname, fp, stages)
+    return views[2], msrc(views[1]), views[3] if with_manifest else None
 
 
 def curated_encoded_rows(spark, sf_dir, qname="curated_pack_encoded"):
@@ -721,13 +647,12 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (interpreted), so this is the zero-Python *composability* path; the
     # Arrow-batched svb_size UDF / encode_table remain the throughput path
     def svb_size_sql(spark, sf_dir):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        # scale-adaptive fanout + codegen'd word count (r11): the
-        # interpreted aggregate() fold ran twice-tokenized on the scan's
-        # single task (3.1 s at sf1.0 -> 0.3 s); the fold itself stays —
-        # this query IS the zero-Python composability demo
-        if docs.rdd.getNumPartitions() < pipeline_sql._SCAN_FANOUT:
-            docs = docs.repartition(pipeline_sql._SCAN_FANOUT, "doc_id")
+        # fanned-out scan + codegen'd word count: the interpreted
+        # aggregate() fold is the only tokenizer pass and runs wide; the
+        # fold itself stays — this query IS the zero-Python
+        # composability demo
+        docs = pipeline_sql.fanout_scan(
+            spark.read.parquet(f"{sf_dir}/documents.parquet"))
         t = spark_tokens_expr("text")
         return docs.select(
             F.col("doc_id").cast("string").alias("doc_id"),
@@ -986,25 +911,17 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # corpus-wide vocabulary remap: frequency-ranked ids shrink the encoded
     # bytes; compare per-source auto-codec output before vs after.
-    # r11: the token table is MATERIALIZED once per invocation (the stage
-    # machinery every self-join query uses) — it feeds THREE consumers
-    # (before-encode, the vocab build's explode, the remap input), which
-    # otherwise each re-ran scan+tokenize (3.3/4.2 s -> see
-    # OPTIMIZATION_r11.md; same SPARK_STAGES rationale: Catalyst inlines a
-    # shared subtree into every consumer)
+    # the token table is MATERIALIZED once per invocation (stage_views) —
+    # it feeds THREE consumers (before-encode, the vocab build's explode,
+    # the remap input), which otherwise each re-run scan+tokenize: Catalyst
+    # inlines a shared subtree into every consumer (the SPARK_STAGES
+    # rationale)
     def _vocab_remap_metrics(spark, sf_dir, remap_fn, qname):
-        import uuid as _uuid
-        from .operators.staging import materialize
-        fp = (sf_dir, "tok-stage-v1")
-        hit = _stage_cache_get(spark, qname, fp)
-        if hit is not None:
-            tok = spark.table(hit[0])
-        else:
-            view = f"svb_stage_vmtok_{_uuid.uuid4().hex[:8]}"
-            tdf = materialize(tokens_from_documents(spark, sf_dir))
-            tdf.createOrReplaceTempView(view)
-            _stage_cache_put(spark, qname, fp, ((view, tdf),), (view,))
-            tok = spark.table(view)
+        (view,) = stage_views(
+            spark, qname, (sf_dir, "tok-stage-v1"),
+            [("svb_stage_vmtok",
+              lambda: tokens_from_documents(spark, sf_dir))])
+        tok = spark.table(view)
         remapped = remap_fn(tok)
         before = (encode_table(tok, codec="auto").groupBy("source")
                   .agg(F.sum("out_bytes").alias("bytes_before")))
@@ -1136,19 +1053,12 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         k+1 rebuilds (SPARK_STAGES policy) — and derive the deterministic
         probe terms: the k lexicographically smallest terms with
         df >= INDEX_MIN_DF (df = sum of the wire's per-chunk doc count)."""
-        import uuid as _uuid
         from .operators.index import INDEX_CHUNK_SPAN, INDEX_MIN_DF
-        from .operators.staging import materialize
-        fpk = (sf_dir, INDEX_CHUNK_SPAN, INDEX_MIN_DF, key)
-        hit = _stage_cache_get(spark, key, fpk)
-        if hit is None:
-            docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-            v = f"svb_stage_{key[-10:]}_{_uuid.uuid4().hex[:8]}"
-            enc = materialize(builder(docs))
-            enc.createOrReplaceTempView(v)
-            _stage_cache_put(spark, key, fpk, ((v, enc),), (v,))
-            hit = (v,)
-        enc = spark.table(hit[0])
+        (v,) = stage_views(
+            spark, key, (sf_dir, INDEX_CHUNK_SPAN, INDEX_MIN_DF, key),
+            [(f"svb_stage_{key[-10:]}", lambda: builder(
+                spark.read.parquet(f"{sf_dir}/documents.parquet")))])
+        enc = spark.table(v)
         probe = (enc.groupBy("doc_id").agg(F.sum(df_col).alias("df"))
                  .where(F.col("df") >= INDEX_MIN_DF)
                  .orderBy("doc_id").limit(k).collect())
@@ -1364,79 +1274,58 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             staged = pipeline_sql.SPARK_STAGES.get(name)
             if staged is None:
                 if name in _bucketed_pack_queries:
-                    import uuid as _uuid
                     from pyspark.sql.types import NumericType
-                    from .operators.staging import materialize
                     dtype = spark.table("documents").schema["doc_id"].dataType
                     bucket = None if isinstance(dtype, NumericType) else \
                         _string_bucket_expr(spark)
                     # MATERIALIZE the narrow (doc_id, source, n_tok) table
                     # once: Catalyst inlines the two-level cum's `t` into
                     # BOTH its sides, re-scanning the text corpus to count
-                    # words (uuid-suffixed + tracked, same lifecycle as
-                    # the self-join stage views below)
-                    fp = (sf_dir, name, bucket)
-                    hit = _stage_cache_get(spark, key, fp)
-                    if hit is not None:
-                        return spark.sql(hit[0])
-                    nview = f"svb_stage_pack_n_{_uuid.uuid4().hex[:8]}"
-                    ndf = materialize(spark.sql(
-                        "select doc_id, source, size(split(text, ' ')) "
-                        "as n_tok from documents"))
-                    ndf.createOrReplaceTempView(nview)
+                    # words
+                    (nview,) = stage_views(
+                        spark, key, (sf_dir, name, bucket),
+                        [("svb_stage_pack_n", lambda: spark.sql(
+                            "select doc_id, source, size(split(text, ' ')) "
+                            "as n_tok from documents"))])
                     d = pipeline_sql.Dialect("spark")
                     if name == "sequence_pack":
-                        sql = pipeline_sql.q_sequence_pack(
-                            d, bucket_expr=bucket, base_table=nview)
-                    else:
-                        sql = pipeline_sql.q_pack_sequences(
-                            d, bucket_expr=bucket, ntok_table=nview)
-                    _stage_cache_put(spark, key, fp, ((nview, ndf),),
-                                     (sql,))
-                    return spark.sql(sql)
+                        return spark.sql(pipeline_sql.q_sequence_pack(
+                            d, bucket_expr=bucket, base_table=nview))
+                    return spark.sql(pipeline_sql.q_pack_sequences(
+                        d, bucket_expr=bucket, ntok_table=nview))
                 return spark.sql(pipeline_sql.spark_sql(name))
             # self-join queries: materialize the signature/bands pipeline
-            # ONCE (operators.staging.materialize — localCheckpoint, or a
-            # durable checkpoint() when spark.svb.stageCheckpointDir is
-            # set), then self-join the materialized view — otherwise
-            # Catalyst inlines the CTE and executes the whole
-            # scan->signature subtree on BOTH join sides (the 100 TB plan
-            # flaw; see pipeline_sql.SPARK_STAGES).  Stage views get a
-            # per-invocation suffix so two staged queries built and run
-            # concurrently in one session cannot clobber each other's
-            # materialized tables between build and execution; a
-            # plan-identical re-invocation reuses the live generation
-            # (_STAGE_VIEWS) instead of checkpointing a fresh one.
-            import uuid
-            from .operators.staging import materialize
+            # ONCE (stage_views — localCheckpoint, or a durable
+            # checkpoint() when spark.svb.stageCheckpointDir is set), then
+            # self-join the materialized view — otherwise Catalyst inlines
+            # the CTE and executes the whole scan->signature subtree on
+            # BOTH join sides (see pipeline_sql.SPARK_STAGES).  The
+            # uuid-suffixed view names keep two staged queries built and
+            # run in one session from clobbering each other's tables.
             d = pipeline_sql.Dialect("spark")
             stages, final = staged
+            bases = [view for view, _ in stages]
             raw_sqls = tuple(sql_fn(d) for _, sql_fn in stages)
             raw_final = final(d)
-            fp = (sf_dir, raw_sqls, raw_final)
-            hit = _stage_cache_get(spark, key, fp)
-            if hit is not None:
-                return spark.sql(hit[0])
-            tag = uuid.uuid4().hex[:8]
-            mapping = {view: f"{view}_{tag}" for view, _ in stages}
 
-            def rename(sql):
-                # token-boundary substitution: a view name that is a PREFIX
-                # of another (or echoed inside a longer identifier) must not
-                # be rewritten mid-identifier — plain str.replace silently
-                # corrupts the SQL in that case
+            def rename(sql, names):
+                # token-boundary substitution of each base view name by its
+                # staged name: a view name that is a PREFIX of another (or
+                # echoed inside a longer identifier) must not be rewritten
+                # mid-identifier — plain str.replace silently corrupts the
+                # SQL in that case
                 import re as _re
+                if not names:
+                    return sql
+                mapping = dict(zip(bases, names))
                 return _re.sub(
                     r"\b(" + "|".join(map(_re.escape, mapping)) + r")\b",
                     lambda m: mapping[m.group(1)], sql)
-            tracked = []
-            for (view, _), raw in zip(stages, raw_sqls):
-                mdf = materialize(spark.sql(rename(raw)))
-                mdf.createOrReplaceTempView(mapping[view])
-                tracked.append((mapping[view], mdf))
-            fsql = rename(raw_final)
-            _stage_cache_put(spark, key, fp, tracked, (fsql,))
-            return spark.sql(fsql)
+            names = stage_views(
+                spark, key, (sf_dir, raw_sqls, raw_final),
+                [(base, lambda *prev, raw=raw: spark.sql(rename(raw, prev)))
+                 for base, raw in zip(bases, raw_sqls)])
+            return spark.sql(rename(raw_final, names))
         return run
 
     for name in pipeline_sql.PIPELINE_QUERIES:
@@ -1459,11 +1348,9 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # DuckDB oracle keeps the single-text CTE join form, so the driver gate
     # proves the kernel's dots value-identical to the SQL algorithm.
     def embedding_neardup(spark, sf_dir):
-        import uuid as _uuid
         from pyspark.sql import Window as _W
         from .functions.embedding_udfs import (neardup_local_topk,
                                                register_embedding_udfs)
-        from .operators.staging import materialize
         register_embedding_udfs(spark, pipeline_sql.NEARDUP_BANDS,
                                 pipeline_sql.NEARDUP_PLANES_PER_BAND)
         spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
@@ -1477,16 +1364,9 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             f"from (select /*+ REPARTITION({pipeline_sql._SCAN_FANOUT}, "
             "vec_id) */ vec_id, embedding from embeddings)) "
             "lateral view posexplode(bks) _t as band_id, bucket")
-        fp = (sf_dir, raw_bands, "local-topk-v2")
-        hit = _stage_cache_get(spark, "embedding_neardup", fp)
-        if hit is not None:
-            bands_view = hit[0]
-        else:
-            bands_view = f"svb_stage_nd_bands_{_uuid.uuid4().hex[:8]}"
-            bdf = materialize(spark.sql(raw_bands))
-            bdf.createOrReplaceTempView(bands_view)
-            _stage_cache_put(spark, "embedding_neardup", fp,
-                             ((bands_view, bdf),), (bands_view,))
+        (bands_view,) = stage_views(
+            spark, "embedding_neardup", (sf_dir, raw_bands, "local-topk-v2"),
+            [("svb_stage_nd_bands", lambda: spark.sql(raw_bands))])
         lt = neardup_local_topk(spark.table(bands_view), k=50)
         top = (lt.distinct()
                .orderBy(F.desc("dot"), "id_a", "id_b").limit(50))
@@ -1590,41 +1470,22 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                         F.expr("round(cast(n_hit as double) / n_exact, 4)")
                         .alias("recall")))
 
-    def _staged_approx(spark, sf_dir, qname, stages, final):
-        """Materialize `stages` ((basename, sql_fn(d, *views)), ...) under
-        the stage cache for `qname` and return spark.sql(final(*views)) —
-        the ann_recall/_ivf approximate sides, built exactly like their
-        SPARK_STAGES form but composable with a DataFrame exact side."""
-        import uuid as _uuid
-        from .operators.staging import materialize
-        d = pipeline_sql.Dialect("spark")
-        raw_fns = [fn for _, fn in stages]
-        fp = (sf_dir, tuple(f.__qualname__ for f in raw_fns), "df-v1")
-        hit = _stage_cache_get(spark, qname, fp)
-        if hit is not None:
-            views = list(hit)
-        else:
-            tag = _uuid.uuid4().hex[:8]
-            views, tracked = [], []
-            for (base, fn) in stages:
-                view = f"{base}_{tag}"
-                mdf = materialize(spark.sql(fn(d, *views)))
-                mdf.createOrReplaceTempView(view)
-                tracked.append((view, mdf))
-                views.append(view)
-            _stage_cache_put(spark, qname, fp, tracked, tuple(views))
-        return spark.sql(final(pipeline_sql.Dialect("spark"), *views))
-
     def ann_recall(spark, sf_dir):
         from .functions.embedding_udfs import register_embedding_udfs
         register_embedding_udfs(spark, pipeline_sql.NEARDUP_BANDS,
                                 pipeline_sql.NEARDUP_PLANES_PER_BAND)
         spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
             .createOrReplaceTempView("embeddings")
-        ap = _staged_approx(
-            spark, sf_dir, "ann_recall",
-            [("svb_stage_rec_b", lambda d: pipeline_sql._ann_lsh_spark_b(d))],
-            lambda d, b: "with " + pipeline_sql._ann_lsh_final(d, b))
+        # the approximate side is built exactly like its SPARK_STAGES form
+        # but composes with the DataFrame exact side
+        d = pipeline_sql.Dialect("spark")
+        stages = [("svb_stage_rec_b",
+                   lambda: spark.sql(pipeline_sql._ann_lsh_spark_b(d)))]
+        (b,) = stage_views(
+            spark, "ann_recall",
+            (sf_dir, tuple(f.__qualname__ for _, f in stages), "df-v1"),
+            stages)
+        ap = spark.sql("with " + pipeline_sql._ann_lsh_final(d, b))
         return _recall_join_df(ann_topk(spark, sf_dir), ap)
 
     q["ann_recall"] = ann_recall
@@ -1635,13 +1496,16 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                 pipeline_sql.NEARDUP_PLANES_PER_BAND)
         spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
             .createOrReplaceTempView("embeddings")
-        ap = _staged_approx(
-            spark, sf_dir, "ann_recall_ivf",
-            [("svb_stage_recivf_e",
-              lambda d: pipeline_sql._ivf_spark_e(d)),
-             ("svb_stage_recivf_cells",
-              lambda d, e: pipeline_sql._ivf_cells(d, e))],
-            lambda d, e, c: "with " + pipeline_sql._ivf_final(d, e, c))
+        d = pipeline_sql.Dialect("spark")
+        stages = [("svb_stage_recivf_e",
+                   lambda: spark.sql(pipeline_sql._ivf_spark_e(d))),
+                  ("svb_stage_recivf_cells",
+                   lambda e: spark.sql(pipeline_sql._ivf_cells(d, e)))]
+        e, c = stage_views(
+            spark, "ann_recall_ivf",
+            (sf_dir, tuple(f.__qualname__ for _, f in stages), "df-v1"),
+            stages)
+        ap = spark.sql("with " + pipeline_sql._ivf_final(d, e, c))
         return _recall_join_df(ann_topk(spark, sf_dir), ap)
 
     q["ann_recall_ivf"] = ann_recall_ivf

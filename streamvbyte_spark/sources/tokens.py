@@ -41,26 +41,16 @@ def tokens_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer stays only where the OTHER work already lives Python-side
     (doc_simhash_text/doc_fingerprint_text).
 
-    r11 plan fixes (optimization guide §1.2 / §2.5 "input skew"):
+    Plan rules:
     * n_tok = size(split(text)) — the token map is length-preserving, so
-      the word count IS the token count (the curate_neardup_metrics trick);
-      the old size(transform(...)) form evaluated the interpreted tokenizer
-      lambda a SECOND time per row (both transforms appeared verbatim in
-      the Project — no subexpression elimination fires for CodegenFallback
-      lambdas).
-    * scale-adaptive scan fanout: the driver testdata ships documents as
-      ONE parquet row group, so every downstream tokenize+encode kernel ran
-      single-task (plan: Scan -> Project -> MapInArrow, zero exchanges — 31
-      idle cores at sf1.0).  When the scan's own partitioning is coarser
-      than the derived fanout, repartition the RAW TEXT rows (one bounded
-      exchange of ~6 B/token) before the tokenizer projection so the
-      interpreted lambda and the codec kernels run wide.  On a real
-      multi-file corpus the scan is already parallel and this is a no-op —
-      the trigger is derived from the scan, not pinned to local mode."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    from ..functions.pipeline_sql import _SCAN_FANOUT
-    if docs.rdd.getNumPartitions() < _SCAN_FANOUT:
-        docs = docs.repartition(_SCAN_FANOUT, "doc_id")
+      the word count IS the token count; size(transform(...)) would
+      evaluate the interpreted tokenizer lambda a SECOND time per row (no
+      subexpression elimination fires for CodegenFallback lambdas).
+    * the raw text rows fan out (pipeline_sql.fanout_scan) before the
+      tokenizer projection, so the interpreted lambda and the codec kernels
+      downstream run wide on a single-row-group scan."""
+    from ..functions.pipeline_sql import fanout_scan
+    docs = fanout_scan(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     return docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.expr(spark_tokens_expr("text")).alias("tokens"),

@@ -1188,16 +1188,60 @@ def test_index_stage_generation_reuse(spark):
     r8 queries) — and a different sf_dir is a fingerprint MISS that builds
     a fresh generation."""
     import streamvbyte_spark.queries as Q
+    from streamvbyte_spark.operators import staging
     queries = Q.build_queries()
     r1 = sorted(map(tuple, queries["index_intersect"](spark, SF).collect()))
-    g1 = Q._STAGE_VIEWS[(id(spark), "index_intersect")].views
+    g1 = staging._STAGE_VIEWS[(id(spark), "index_intersect")].views
     r2 = sorted(map(tuple, queries["index_intersect"](spark, SF).collect()))
-    g2 = Q._STAGE_VIEWS[(id(spark), "index_intersect")].views
+    g2 = staging._STAGE_VIEWS[(id(spark), "index_intersect")].views
     assert [v for v, _ in g1] == [v for v, _ in g2]   # same generation
     assert r1 == r2
     queries["index_intersect"](spark, "/root/testdata/sf0.01")
-    g3 = Q._STAGE_VIEWS[(id(spark), "index_intersect")].views
+    g3 = staging._STAGE_VIEWS[(id(spark), "index_intersect")].views
     assert [v for v, _ in g3] != [v for v, _ in g1]   # miss -> fresh build
+
+
+def test_stage_views_lifecycle(spark):
+    """stage_views over a two-stage build whose second stage reads the
+    first stage's view: a same-fingerprint call reuses the live generation
+    without building; an externally dropped view, or release_stage, makes
+    the next call rebuild under fresh names."""
+    from streamvbyte_spark.operators.staging import release_stage, stage_views
+    calls = []
+
+    def base():
+        calls.append("base")
+        return spark.range(10).withColumnRenamed("id", "x")
+
+    def doubled(base_view):
+        calls.append("doubled")
+        return spark.sql(f"select x * 2 as y from {base_view}")
+    stages = [("svb_stage_toy_base", base), ("svb_stage_toy_dbl", doubled)]
+    fp = ("toy", 1)
+
+    def run():
+        names = stage_views(spark, "toy_lifecycle", fp, stages)
+        return names, sum(r.y for r in spark.table(names[1]).collect())
+
+    g1, total = run()
+    assert total == 90 and calls == ["base", "doubled"]
+    assert g1[0].startswith("svb_stage_toy_base_")
+    assert g1[1].startswith("svb_stage_toy_dbl_")
+    # (a) hit: same names, no build
+    assert run() == (g1, 90) and len(calls) == 2
+    # (b) one view dropped externally -> rebuild under new names, old gone
+    spark.catalog.dropTempView(g1[0])
+    g2, total = run()
+    assert total == 90 and len(calls) == 4
+    assert set(g2).isdisjoint(g1)
+    assert not any(spark.catalog.tableExists(v) for v in g1)
+    # (c) release_stage drops the views; the next call rebuilds
+    release_stage(spark, "toy_lifecycle")
+    assert not any(spark.catalog.tableExists(v) for v in g2)
+    g3, total = run()
+    assert total == 90 and len(calls) == 6
+    assert set(g3).isdisjoint(g2)
+    release_stage(spark, "toy_lifecycle")
 
 
 def test_merge_index_updates_both_wires(spark):
