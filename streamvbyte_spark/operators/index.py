@@ -39,11 +39,15 @@ equi-join form here already never materializes either full list as one cell.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..codec import batched
 from ..functions.pipeline_sql import fanout_scan
 from .chunking import encode_chunked_delta
+from .encode import _binary_array, _flat_binary, _i32_offsets, _list_to_flat
 
 # chunk span in doc-id space: bounds every chunk row to <= span postings.
 # Gate scale (500-5000 docs) uses a small span so multi-chunk terms exist;
@@ -54,6 +58,75 @@ INDEX_CHUNK_SPAN = 128
 # deterministic query-term rule (the two lexicographically smallest terms
 # with df >= INDEX_MIN_DF)
 INDEX_MIN_DF = 5
+
+# THE index posting wires: the one definition of what a stored chunk row
+# carries.  Per wire: its count columns, then its streams as (column,
+# codec, count column sizing the stream).  Every wire's FIRST stream is the
+# chunk's sorted distinct doc ids on Elias-Fano, so the did-only serving
+# ops read any wire; the LAST count column orders a chunk's generations in
+# merge_index_updates (immutable docs + unique ids make a chunk's content
+# its did set, so any content change strictly grows that count).  Builds,
+# serving kernels, merge_index_updates and streaming/index_update.py name,
+# encode and decode the wires only through this table (wire_schema,
+# encode_wire, decode_wire); the set wire's batch build is
+# chunking.encode_chunked_delta(codec="ef"), the same bytes.
+_TF_STREAMS = (("enc_dids", "ef", "n_doc"), ("enc_tfs", "svb", "n_doc"))
+INDEX_WIRES = {
+    "set": (("n_tok",), (("encoded", "ef", "n_tok"),)),
+    "tf": (("n_doc",), _TF_STREAMS),
+    # the tf wire plus the doc-major token positions
+    "pos": (("n_doc", "n_pos"), _TF_STREAMS + (("enc_pos", "svb", "n_pos"),)),
+}
+
+
+def wire_columns(kind: str) -> list[str]:
+    """The wire's payload columns in stored order: counts, then streams."""
+    counts, streams = INDEX_WIRES[kind]
+    return [*counts, *(s[0] for s in streams)]
+
+
+def wire_schema(kind: str) -> str:
+    """DDL of the wire's payload columns, in wire_columns order."""
+    counts, streams = INDEX_WIRES[kind]
+    return ", ".join([f"{c} int" for c in counts]
+                     + [f"{s[0]} binary" for s in streams])
+
+
+def encode_wire(kind: str, streams: dict) -> tuple[list, np.ndarray]:
+    """Encode a batch of chunks onto the ``kind`` wire.  streams maps each
+    stream column to its per-row (flat uint32 values, int64 offsets).
+    Returns the wire_columns as Arrow arrays (a count column holds its
+    stream's row lengths) and the per-row encoded byte total (out_bytes)."""
+    cols, out_bytes = {}, 0
+    for col, codec, cnt in INDEX_WIRES[kind][1]:
+        flat, offsets = streams[col]
+        enc, eoff, _ = batched.encode_rows(flat, offsets, codec)
+        cols[cnt] = pa.array(np.diff(offsets).astype(np.int32), pa.int32())
+        cols[col] = _binary_array(enc, eoff)
+        out_bytes = out_bytes + np.diff(eoff)
+    return [cols[c] for c in wire_columns(kind)], out_bytes
+
+
+def decode_wire(kind: str, src, streams=None, suffix: str = "") -> list:
+    """Decode the asked ``streams`` (default: all) of the ``kind`` wire ->
+    one (flat uint32 values, int64 offsets) per stream, in the order asked.
+    src is an Arrow batch whose wire columns carry ``suffix`` (a serving
+    side's alias, see _probe_side), or one chunk's raw state tuple in
+    wire_columns order (the streaming merges)."""
+    if isinstance(src, tuple):
+        src = pa.RecordBatch.from_arrays([pa.array([v]) for v in src],
+                                         names=wire_columns(kind))
+    spec = {s[0]: s[1:] for s in INDEX_WIRES[kind][1]}
+    out = []
+    for col in streams or spec:
+        codec, cnt = spec[col]
+        n = np.asarray(src.column(src.schema.get_field_index(cnt + suffix)),
+                       dtype=np.int64)
+        enc, eoff = _flat_binary(
+            src.column(src.schema.get_field_index(col + suffix)))
+        out.append(batched.decode_rows(
+            enc, eoff, n, np.full(n.size, batched.CODEC_ID[codec], np.int32)))
+    return out
 
 
 def term_doc_pairs(docs: DataFrame) -> DataFrame:
@@ -138,17 +211,12 @@ def build_index_chunked(docs: DataFrame,
     return encode_chunked_delta(chunked, codec="ef")
 
 
-TF_ENC_SCHEMA = ("doc_id string, chunk_id int, n_doc int, "
-                 "enc_dids binary, enc_tfs binary, out_bytes bigint")
-
-
 def runlength_dids(flat, offsets):
     """Run-length the per-row SORTED duplicated did streams into
     (dids, tfs, doff): distinct dids per row, each did's occurrence count,
     and int64 row offsets into the distinct streams.  Shared by the TF and
     positional batch builds (the TF STREAMING merge counts per-key instead,
     via its (did, pos) pair dedup — one chunk per group, no offsets)."""
-    import numpy as np
     V = flat.size
     rid = np.repeat(np.arange(offsets.size - 1, dtype=np.int64),
                     offsets[1:] - offsets[:-1])
@@ -162,6 +230,24 @@ def runlength_dids(flat, offsets):
     np.cumsum(np.bincount(rid[starts], minlength=offsets.size - 1),
               out=doff[1:])
     return dids, tfs, doff
+
+
+def _encode_chunks(chunks: DataFrame, kind: str, streams) -> DataFrame:
+    """Chunk rows (doc_id, chunk_id, ...) -> the ``kind`` wire table
+    (doc_id, chunk_id, wire_columns, out_bytes); streams(batch) gives
+    encode_wire each stream's (flat, offsets)."""
+    names = ["doc_id", "chunk_id", *wire_columns(kind), "out_bytes"]
+
+    def run(batches):
+        for batch in batches:
+            cols, out_bytes = encode_wire(kind, streams(batch))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(batch.schema.get_field_index("doc_id")),
+                 batch.column(batch.schema.get_field_index("chunk_id")),
+                 *cols, pa.array(out_bytes, pa.int64())], names=names)
+
+    return chunks.mapInArrow(run, f"doc_id string, chunk_id int, "
+                                  f"{wire_schema(kind)}, out_bytes bigint")
 
 
 def build_index_tf_chunked(docs: DataFrame,
@@ -185,38 +271,14 @@ def build_index_tf_chunked(docs: DataFrame,
               .select(F.col("term").alias("doc_id"), "chunk_id",
                       F.col("raw").cast("array<int>").alias("raw")))
 
-    def run(batches):
-        import numpy as np
-        import pyarrow as pa
-        from ..codec import batched
-        from .encode import _binary_array, _list_to_flat
-        for batch in batches:
-            flat, offsets = _list_to_flat(
-                batch.column(batch.schema.get_field_index("raw")))
-            flat = np.ascontiguousarray(flat, dtype=np.uint32)
-            # run-length the sorted duplicated dids: starts mark distinct
-            # (row, did) pairs; run length = that doc's tf for the term
-            dids, tfs, doff = runlength_dids(flat, offsets)
-            enc_d, eoff_d = batched.ef_encode_rows(dids, doff)
-            enc_t, eoff_t = batched.encode_rows(tfs, doff, "svb")[:2]
-            n_doc = (doff[1:] - doff[:-1]).astype(np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(batch.schema.get_field_index("doc_id")),
-                 batch.column(batch.schema.get_field_index("chunk_id")),
-                 pa.array(n_doc, pa.int32()),
-                 _binary_array(enc_d, eoff_d),
-                 _binary_array(enc_t, eoff_t),
-                 pa.array((eoff_d[1:] - eoff_d[:-1])
-                          + (eoff_t[1:] - eoff_t[:-1]), pa.int64())],
-                names=["doc_id", "chunk_id", "n_doc", "enc_dids",
-                       "enc_tfs", "out_bytes"])
+    def streams(batch):
+        # run-length the sorted duplicated dids: starts mark distinct
+        # (row, did) pairs; run length = that doc's tf for the term
+        dids, tfs, doff = runlength_dids(*_list_to_flat(
+            batch.column(batch.schema.get_field_index("raw"))))
+        return {"enc_dids": (dids, doff), "enc_tfs": (tfs, doff)}
 
-    return chunks.mapInArrow(run, TF_ENC_SCHEMA)
-
-
-POS_ENC_SCHEMA = ("doc_id string, chunk_id int, n_doc int, n_pos int, "
-                  "enc_dids binary, enc_tfs binary, enc_pos binary, "
-                  "out_bytes bigint")
+    return _encode_chunks(chunks, "tf", streams)
 
 
 def build_index_pos_chunked(docs: DataFrame,
@@ -242,39 +304,16 @@ def build_index_pos_chunked(docs: DataFrame,
                       F.col("occ.did").cast("array<int>").alias("dids_raw"),
                       F.col("occ.pos").cast("array<int>").alias("poss")))
 
-    def run(batches):
-        import numpy as np
-        import pyarrow as pa
-        from ..codec import batched
-        from .encode import _binary_array, _list_to_flat
-        for batch in batches:
-            flat, offsets = _list_to_flat(
-                batch.column(batch.schema.get_field_index("dids_raw")))
-            flat = np.ascontiguousarray(flat, dtype=np.uint32)
-            poss, _poff = _list_to_flat(
-                batch.column(batch.schema.get_field_index("poss")))
-            poss = np.ascontiguousarray(poss, dtype=np.uint32)
-            dids, tfs, doff = runlength_dids(flat, offsets)
-            enc_d, eoff_d = batched.ef_encode_rows(dids, doff)
-            enc_t, eoff_t = batched.encode_rows(tfs, doff, "svb")[:2]
-            enc_p, eoff_p = batched.encode_rows(poss, offsets, "svb")[:2]
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(batch.schema.get_field_index("doc_id")),
-                 batch.column(batch.schema.get_field_index("chunk_id")),
-                 pa.array((doff[1:] - doff[:-1]).astype(np.int32),
-                          pa.int32()),
-                 pa.array((offsets[1:] - offsets[:-1]).astype(np.int32),
-                          pa.int32()),
-                 _binary_array(enc_d, eoff_d),
-                 _binary_array(enc_t, eoff_t),
-                 _binary_array(enc_p, eoff_p),
-                 pa.array((eoff_d[1:] - eoff_d[:-1])
-                          + (eoff_t[1:] - eoff_t[:-1])
-                          + (eoff_p[1:] - eoff_p[:-1]), pa.int64())],
-                names=["doc_id", "chunk_id", "n_doc", "n_pos", "enc_dids",
-                       "enc_tfs", "enc_pos", "out_bytes"])
+    def streams(batch):
+        flat, offsets = _list_to_flat(
+            batch.column(batch.schema.get_field_index("dids_raw")))
+        poss, _ = _list_to_flat(
+            batch.column(batch.schema.get_field_index("poss")))
+        dids, tfs, doff = runlength_dids(flat, offsets)
+        return {"enc_dids": (dids, doff), "enc_tfs": (tfs, doff),
+                "enc_pos": (poss, offsets)}
 
-    return chunks.mapInArrow(run, POS_ENC_SCHEMA)
+    return _encode_chunks(chunks, "pos", streams)
 
 
 def decode_index_pos(enc_index: DataFrame) -> DataFrame:
@@ -283,27 +322,12 @@ def decode_index_pos(enc_index: DataFrame) -> DataFrame:
     occurrence table directly — no nested arrays, no JVM re-explode."""
 
     def run(batches):
-        import numpy as np
-        import pyarrow as pa
-        from ..codec import batched
-        from .encode import _flat_binary
         for batch in batches:
-            idx = {n: batch.schema.get_field_index(n)
-                   for n in ("doc_id", "n_doc", "n_pos", "enc_dids",
-                             "enc_tfs", "enc_pos")}
-            n_doc = np.asarray(batch.column(idx["n_doc"]), dtype=np.int64)
-            n_pos = np.asarray(batch.column(idx["n_pos"]), dtype=np.int64)
-            enc_d, eoff_d = _flat_binary(batch.column(idx["enc_dids"]))
-            enc_t, eoff_t = _flat_binary(batch.column(idx["enc_tfs"]))
-            enc_p, eoff_p = _flat_binary(batch.column(idx["enc_pos"]))
-            svb = np.full(n_doc.size, batched.CODEC_ID["svb"], np.int32)
-            dids, _ = batched.ef_decode_rows(enc_d, eoff_d, n_doc)
-            tfs, _ = batched.decode_rows(enc_t, eoff_t, n_doc, svb)
-            poss, _ = batched.decode_rows(enc_p, eoff_p, n_pos, svb)
-            terms = batch.column(idx["doc_id"]).to_numpy(
-                zero_copy_only=False)
+            (dids, _), (tfs, _), (poss, poff) = decode_wire("pos", batch)
+            terms = batch.column(batch.schema.get_field_index(
+                "doc_id")).to_numpy(zero_copy_only=False)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(np.repeat(terms, n_pos), pa.string()),
+                [pa.array(np.repeat(terms, np.diff(poff)), pa.string()),
                  pa.array(np.repeat(dids.view(np.int32),
                                     tfs.astype(np.int64)), pa.int32()),
                  pa.array(poss.view(np.int32), pa.int32())],
@@ -312,15 +336,29 @@ def decode_index_pos(enc_index: DataFrame) -> DataFrame:
     return enc_index.mapInArrow(run, "term string, did int, pos int")
 
 
+def _probe_side(enc_index: DataFrame, kind: str, term: str, suffix: str,
+                streams=None) -> DataFrame:
+    """One serving side: ``term``'s chunk rows with the asked streams
+    (default: all) of the ``kind`` wire and the count columns sizing them,
+    each renamed column + suffix — decode_wire reads them back by that
+    suffix.  The term filter stays a pushable predicate on the stored
+    index."""
+    spec = {s[0]: s[2] for s in INDEX_WIRES[kind][1]}
+    streams = streams or list(spec)
+    cols = dict.fromkeys([spec[s] for s in streams] + list(streams))
+    return enc_index.where(F.col("doc_id") == term).select(
+        "chunk_id", *[F.col(c).alias(c + suffix) for c in cols])
+
+
 def phrase_match_rows(enc_index: DataFrame, term_a: str,
                       term_b: str) -> DataFrame:
     """Serve the PHRASE query ``"term_a term_b"`` (adjacent, in order) from
-    the positional wire, CO-GROUPED by chunk (r9, completing the serving
-    family): an adjacent pair lives in ONE doc, hence one chunk_id on both
-    wires — equi-join the two terms' ENCODED chunk rows on chunk_id and
-    run the whole phrase match inside the one decode kernel: intersect the
-    did lists in-lane, keep only common docs' occurrences, and probe
-    ``pos_a + 1`` against ``pos_b`` per doc.  No occurrence row ever
+    the positional wire, CO-GROUPED by chunk: an adjacent pair lives in ONE
+    doc, hence one chunk_id on both wires — equi-join the two terms'
+    ENCODED chunk rows on chunk_id and run the whole phrase match inside
+    the one decode kernel: intersect the did lists in-lane, keep only
+    common docs' occurrences, and probe ``pos_a + 1`` against ``pos_b``
+    per doc.  No occurrence row ever
     shuffles (the earlier form decoded co-occupied chunks to (did, pos)
     rows and shuffled them into an adjacency equi-join — span x tf rows
     per stopword chunk); the join ships ~df/span encoded chunk rows and
@@ -328,38 +366,15 @@ def phrase_match_rows(enc_index: DataFrame, term_a: str,
 
     Returns the DISTRIBUTED matched-doc rows (``did int``, deduped by
     construction — a did lives in one chunk pair) — the scale consumer's
-    form (r10; previously the single-row fold was the return and scale
-    consumers had to reach into the kernel output).  The driver-gate
-    scalar is :func:`phrase_match_terms`."""
-    a = enc_index.where(F.col("doc_id") == term_a).select(
-        "chunk_id", F.col("n_doc").alias("nd_a"),
-        F.col("n_pos").alias("np_a"), F.col("enc_dids").alias("ed_a"),
-        F.col("enc_tfs").alias("et_a"), F.col("enc_pos").alias("ep_a"))
-    b = enc_index.where(F.col("doc_id") == term_b).select(
-        "chunk_id", F.col("n_doc").alias("nd_b"),
-        F.col("n_pos").alias("np_b"), F.col("enc_dids").alias("ed_b"),
-        F.col("enc_tfs").alias("et_b"), F.col("enc_pos").alias("ep_b"))
-    pairs = a.join(b, "chunk_id")
+    form.  The driver-gate scalar is :func:`phrase_match_terms`."""
+    pairs = _probe_side(enc_index, "pos", term_a, "_a").join(
+        _probe_side(enc_index, "pos", term_b, "_b"), "chunk_id")
 
     def run(batches):
-        import numpy as np
-        import pyarrow as pa
-        from ..codec import batched
-        from .encode import _flat_binary
-
-        def side(batch, idx, nd_c, np_c, ed_c, et_c, ep_c):
-            nd = np.asarray(batch.column(idx[nd_c]), dtype=np.int64)
-            npos = np.asarray(batch.column(idx[np_c]), dtype=np.int64)
-            ed, eod = _flat_binary(batch.column(idx[ed_c]))
-            et, eot = _flat_binary(batch.column(idx[et_c]))
-            ep, eop = _flat_binary(batch.column(idx[ep_c]))
-            # per-lane codec ids: n_pos and n_doc are both one-per-lane
-            # columns of this batch, so the one svb array serves both
-            svb = np.full(nd.size, batched.CODEC_ID["svb"], np.int32)
-            dids, _ = batched.ef_decode_rows(ed, eod, nd)
-            tfs, _ = batched.decode_rows(et, eot, nd, svb)
-            pos, _ = batched.decode_rows(ep, eop, npos, svb)
-            kd = lane_doc_keys(nd, dids)
+        def side(batch, suffix):
+            (dids, doff), (tfs, _), (pos, _) = decode_wire(
+                "pos", batch, suffix=suffix)
+            kd = lane_doc_keys(np.diff(doff), dids)
             # doc key per OCCURRENCE (tf repeats), aligned with pos
             kocc = np.repeat(kd, tfs.astype(np.int64))
             return kd, kocc, pos.astype(np.int64)
@@ -374,12 +389,9 @@ def phrase_match_rows(enc_index: DataFrame, term_a: str,
                 m &= common[i_c] == kocc
             return i_c[m], pos[m]
 
-        names = ("nd_a", "np_a", "ed_a", "et_a", "ep_a",
-                 "nd_b", "np_b", "ed_b", "et_b", "ep_b")
         for batch in batches:
-            idx = {n: batch.schema.get_field_index(n) for n in names}
-            kd_a, kocc_a, pos_a = side(batch, idx, *names[:5])
-            kd_b, kocc_b, pos_b = side(batch, idx, *names[5:])
+            kd_a, kocc_a, pos_a = side(batch, "_a")
+            kd_b, kocc_b, pos_b = side(batch, "_b")
             common = np.intersect1d(kd_a, kd_b, assume_unique=True)
             r_a, p_a = keep(kocc_a, pos_a, common)
             r_b, p_b = keep(kocc_b, pos_b, common)
@@ -418,22 +430,8 @@ def decode_index_tf(enc_index: DataFrame) -> DataFrame:
     whole-batch, exploded JVM-side via arrays_zip/inline)."""
 
     def run(batches):
-        import numpy as np
-        import pyarrow as pa
-        from ..codec import batched
-        from .encode import _flat_binary, _i32_offsets
         for batch in batches:
-            n_doc = np.asarray(
-                batch.column(batch.schema.get_field_index("n_doc")),
-                dtype=np.int64)
-            enc_d, eoff_d = _flat_binary(
-                batch.column(batch.schema.get_field_index("enc_dids")))
-            enc_t, eoff_t = _flat_binary(
-                batch.column(batch.schema.get_field_index("enc_tfs")))
-            dids, doff = batched.ef_decode_rows(enc_d, eoff_d, n_doc)
-            tfs, _ = batched.decode_rows(
-                enc_t, eoff_t, n_doc,
-                np.full(n_doc.size, batched.CODEC_ID["svb"], np.int32))
+            (dids, doff), (tfs, _) = decode_wire("tf", batch)
             o32 = pa.array(_i32_offsets(doff), pa.int32())
             yield pa.RecordBatch.from_arrays(
                 [batch.column(batch.schema.get_field_index("doc_id")),
@@ -457,28 +455,19 @@ def lane_doc_keys(counts, dids):
     blocks, so the keys are unique per side and ``assume_unique``
     set ops over them are exact.  counts = per-lane did counts (int64),
     dids = the flat decoded did stream (uint32)."""
-    import numpy as np
     lane = np.repeat(np.arange(counts.size, dtype=np.int64), counts)
     return (lane << np.int64(32)) | dids.astype(np.int64)
 
 
-def _did_wire_cols(enc_index: DataFrame) -> tuple[str, str]:
-    """(count column, EF-did-stream column) of whichever index wire this
-    chunk table carries: set (n_tok, encoded) or TF/positional (n_doc,
-    enc_dids — dids are EF on every wire, and n_doc is the distinct-doc
-    count).  Lets the did-only serving ops (boolean AND/OR) read a stored
-    TF or positional index directly instead of demanding a second
-    set-wire build.  A ``term`` column is accepted for ``doc_id`` by the
-    callers' filters, so only the payload columns are probed here."""
-    cols = set(enc_index.columns)
-    if {"n_tok", "encoded"} <= cols:
-        return "n_tok", "encoded"
-    if {"n_doc", "enc_dids"} <= cols:
-        return "n_doc", "enc_dids"
-    raise ValueError(
-        f"not an index chunk table (columns {sorted(cols)}): expected "
-        "the set wire (n_tok, encoded) or the tf/pos wire (n_doc, "
-        "enc_dids)")
+def _did_stream(enc_index: DataFrame, what: str) -> tuple[str, str, str]:
+    """(wire, did stream column, its count column) of the index wire this
+    chunk table carries: every wire's first stream is its EF did stream,
+    so the did-only serving ops (boolean AND/OR) read a stored TF or
+    positional index directly instead of demanding a second set-wire
+    build."""
+    kind = _index_wire(enc_index, what)
+    col, _codec, cnt = INDEX_WIRES[kind][1][0]
+    return kind, col, cnt
 
 
 def _gate_scalar(rows: DataFrame, terms: list[str],
@@ -491,14 +480,13 @@ def _gate_scalar(rows: DataFrame, terms: list[str],
     rejects array-typed result columns; it concentrates the full
     result-id list on one task (SCALE.md's 10x OR run is fold-dominated),
     so it is the GATE wrapper, not the operator — scale consumers take
-    the rows-returning serving functions directly (r9 verdict item 3 /
-    r10 item 5: the distributed rows are now the public return)."""
+    the rows-returning serving functions directly."""
     from ..queries import spark_fingerprint
     if len(terms) > 26:
         # term_{chr(97+i)} runs out of alphabet past 26 terms and would
         # silently emit garbage column names (term_{, term_|, ...) — the
         # gate wrapper is for small probe lists; scale consumers take the
-        # rows-returning serving functions (r10 advice item 1)
+        # rows-returning serving functions
         raise ValueError(
             f"_gate_scalar supports at most 26 probe terms, got "
             f"{len(terms)}")
@@ -513,9 +501,7 @@ def _gate_scalar(rows: DataFrame, terms: list[str],
 def topk_and_terms(enc_index: DataFrame, term_a: str, term_b: str,
                    k: int = 10) -> DataFrame:
     """Integer-relevance top-k for ``term_a AND term_b`` served from the
-    TF index wire, CO-GROUPED by chunk (built r9 as the parity-pinned
-    twin, wired as THE implementation r10 — the old decode-everything +
-    exploded-posting-join body is retired; the inline reference in
+    TF index wire, CO-GROUPED by chunk (the inline reference in
     tests/test_spark_engine.py pins parity adversarially).
 
     Same shape as :func:`intersect_terms_rows`: the two terms' ENCODED
@@ -527,39 +513,16 @@ def topk_and_terms(enc_index: DataFrame, term_a: str, term_b: str,
     valid because every global top-k row is in its batch's local top-k —
     so at most k rows per batch reach the final TakeOrderedAndProject,
     where the old form shipped the full intersection ("compress and
-    intersect sorted lists of integers", /root/reference/README.md:253)."""
-    a = enc_index.where(F.col("doc_id") == term_a).select(
-        "chunk_id", F.col("n_doc").alias("n_a"),
-        F.col("enc_dids").alias("enc_da"), F.col("enc_tfs").alias("enc_ta"))
-    b = enc_index.where(F.col("doc_id") == term_b).select(
-        "chunk_id", F.col("n_doc").alias("n_b"),
-        F.col("enc_dids").alias("enc_db"), F.col("enc_tfs").alias("enc_tb"))
-    pairs = a.join(b, "chunk_id")
+    intersect sorted lists of integers", the reference README:253)."""
+    pairs = _probe_side(enc_index, "tf", term_a, "_a").join(
+        _probe_side(enc_index, "tf", term_b, "_b"), "chunk_id")
 
     def run(batches):
-        import numpy as np
-        import pyarrow as pa
-        from ..codec import batched
-        from .encode import _flat_binary
-        svb = batched.CODEC_ID["svb"]
         for batch in batches:
-            idx = {n: batch.schema.get_field_index(n)
-                   for n in ("n_a", "enc_da", "enc_ta",
-                             "n_b", "enc_db", "enc_tb")}
-            n_a = np.asarray(batch.column(idx["n_a"]), dtype=np.int64)
-            n_b = np.asarray(batch.column(idx["n_b"]), dtype=np.int64)
-            eda, eoda = _flat_binary(batch.column(idx["enc_da"]))
-            edb, eodb = _flat_binary(batch.column(idx["enc_db"]))
-            eta, eota = _flat_binary(batch.column(idx["enc_ta"]))
-            etb, eotb = _flat_binary(batch.column(idx["enc_tb"]))
-            da, _ = batched.ef_decode_rows(eda, eoda, n_a)
-            db, _ = batched.ef_decode_rows(edb, eodb, n_b)
-            ta, _ = batched.decode_rows(
-                eta, eota, n_a, np.full(n_a.size, svb, np.int32))
-            tb, _ = batched.decode_rows(
-                etb, eotb, n_b, np.full(n_b.size, svb, np.int32))
-            ka = lane_doc_keys(n_a, da)
-            kb = lane_doc_keys(n_b, db)
+            (da, oa), (ta, _) = decode_wire("tf", batch, suffix="_a")
+            (db, ob), (tb, _) = decode_wire("tf", batch, suffix="_b")
+            ka = lane_doc_keys(np.diff(oa), da)
+            kb = lane_doc_keys(np.diff(ob), db)
             common, ia, ib = np.intersect1d(ka, kb, assume_unique=True,
                                             return_indices=True)
             did = (common & np.int64(0xFFFFFFFF)).astype(np.int32)
@@ -590,49 +553,32 @@ def topk_and_terms(enc_index: DataFrame, term_a: str, term_b: str,
 def union_terms_rows(enc_index: DataFrame, term_a: str,
                      term_b: str) -> DataFrame:
     """Serve ``term_a OR term_b`` from the encoded set index, CO-GROUPED
-    by chunk (r9, the OR twin of intersect_terms' shape): FULL OUTER join
+    by chunk (the OR twin of intersect_terms' shape): FULL OUTER join
     the two terms' ENCODED chunk rows on chunk_id and union the two
     sorted lists in-lane inside the one decode kernel.  Chunk did-ranges
     are disjoint (did div span), so the in-lane dedup IS the global
     dedup — the exploded-did ``distinct`` shuffle of the naive form
     (df_a + df_b posting rows) disappears; the join ships df/span encoded
     chunk rows.  Returns the DISTRIBUTED union rows (``did int``, deduped
-    by construction) — the scale consumer's form (r10); the driver-gate
-    scalar is :func:`union_terms`.  Serves from any wire carrying an EF
-    did stream (see :func:`_did_wire_cols`)."""
-    n_col, e_col = _did_wire_cols(enc_index)
-    empty = F.lit(b"")
-    a = enc_index.where(F.col("doc_id") == term_a).select(
-        "chunk_id", F.col(n_col).alias("n_a"),
-        F.col(e_col).alias("enc_a"))
-    b = enc_index.where(F.col("doc_id") == term_b).select(
-        "chunk_id", F.col(n_col).alias("n_b"),
-        F.col(e_col).alias("enc_b"))
-    pairs = (a.join(b, "chunk_id", "full_outer")
-             .select(F.coalesce("n_a", F.lit(0)).alias("n_a"),
-                     F.coalesce("enc_a", empty).alias("enc_a"),
-                     F.coalesce("n_b", F.lit(0)).alias("n_b"),
-                     F.coalesce("enc_b", empty).alias("enc_b")))
+    by construction) — the scale consumer's form; the driver-gate
+    scalar is :func:`union_terms`.  Serves from any wire (see
+    :func:`_did_stream`)."""
+    kind, dids, cnt = _did_stream(enc_index, "union_terms_rows")
+    a = _probe_side(enc_index, kind, term_a, "_a", [dids])
+    b = _probe_side(enc_index, kind, term_b, "_b", [dids])
+    # a chunk only one term occupies decodes as empty on the other side
+    pairs = a.join(b, "chunk_id", "full_outer").select(
+        *[F.coalesce(c, F.lit(v)).alias(c) for s in ("_a", "_b")
+          for c, v in ((cnt + s, 0), (dids + s, b""))])
 
     def run(batches):
-        import numpy as np
-        import pyarrow as pa
-        from ..codec import batched
-        from .encode import _flat_binary
         for batch in batches:
-            idx = {n: batch.schema.get_field_index(n)
-                   for n in ("n_a", "enc_a", "n_b", "enc_b")}
-            n_a = np.asarray(batch.column(idx["n_a"]), dtype=np.int64)
-            n_b = np.asarray(batch.column(idx["n_b"]), dtype=np.int64)
-            ea, eoa = _flat_binary(batch.column(idx["enc_a"]))
-            eb, eob = _flat_binary(batch.column(idx["enc_b"]))
-            da, _ = batched.ef_decode_rows(ea, eoa, n_a)
-            db, _ = batched.ef_decode_rows(eb, eob, n_b)
-            ka = lane_doc_keys(n_a, da)
-            kb = lane_doc_keys(n_b, db)
+            (da, oa), = decode_wire(kind, batch, [dids], "_a")
+            (db, ob), = decode_wire(kind, batch, [dids], "_b")
             # in-lane union; lanes own disjoint did ranges, so this is
             # globally deduped output already
-            u = np.union1d(ka, kb)
+            u = np.union1d(lane_doc_keys(np.diff(oa), da),
+                           lane_doc_keys(np.diff(ob), db))
             yield pa.RecordBatch.from_arrays(
                 [pa.array((u & np.int64(0xFFFFFFFF)).astype(np.int32),
                           pa.int32())],
@@ -650,53 +596,31 @@ def union_terms(enc_index: DataFrame, term_a: str,
                         [term_a, term_b], "n_docs")
 
 
-# the three index wires merge_index_updates understands.  Per wire: the
-# strictly-content-monotone count column that orders generations (newest =
-# largest; immutable docs + unique ids mean a chunk's content is the did
-# SET, so any content change inserts a fresh did and every count below
-# strictly grows — ties are byte-identical rows and pick either), the
-# required payload columns, and the merged output column ORDER.
-_INDEX_WIRES = {
-    # set wire (CHUNKED_ENC_SCHEMA): tok_start/prev/out_bytes re-derived
-    "set": ("n_tok", {"n_tok", "encoded"},
-            ["doc_id", "chunk_id", "n_tok", "prev", "encoded",
-             "out_bytes"]),
-    "tf": ("n_doc", {"n_doc", "enc_dids", "enc_tfs"},
-           ["doc_id", "chunk_id", "n_doc", "enc_dids", "enc_tfs",
-            "out_bytes"]),
-    "pos": ("n_pos", {"n_doc", "n_pos", "enc_dids", "enc_tfs", "enc_pos"},
-            ["doc_id", "chunk_id", "n_doc", "n_pos", "enc_dids",
-             "enc_tfs", "enc_pos", "out_bytes"]),
-}
-
-
 def _index_wire(df: DataFrame, what: str) -> str:
-    """Classify an index chunk table as one of _INDEX_WIRES and VALIDATE
-    it: schema-marker columns must name exactly one wire and that wire's
-    full payload must be present.  Column presence alone used to pick the
-    branch, so a positional table (n_doc + n_pos/enc_pos) silently flowed
-    through the TF merge and the output DROPPED enc_pos — losing the
-    positional stream without error (r8 advice item 1)."""
+    """Classify an index chunk table as one of INDEX_WIRES and VALIDATE
+    it.  A wire is marked by the columns it adds over the wires it extends
+    (pos extends tf), a marked extension outranks its base, the marks must
+    name exactly one wire, and that wire's full payload must be present —
+    so a positional table can never pass as a TF one and lose enc_pos."""
     cols = set(df.columns)
-    marks = {"set": bool(cols & {"n_tok", "encoded"}),
-             "pos": bool(cols & {"n_pos", "enc_pos"}),
-             "tf": bool(cols & {"enc_dids", "enc_tfs"})}
-    if marks["pos"]:          # pos carries the tf payload too
-        marks["tf"] = False
-    kinds = [k for k, m in marks.items() if m]
+    wires = {k: set(wire_columns(k)) for k in INDEX_WIRES}
+    marked = [k for k, c in wires.items()
+              if cols & c.difference(*(b for b in wires.values() if b < c))]
+    kinds = [k for k in marked if not any(wires[k] < wires[j]
+                                          for j in marked)]
     if len(kinds) != 1:
+        expected = " / ".join(f"{k}({', '.join(wire_columns(k))})"
+                              for k in INDEX_WIRES)
         raise ValueError(
-            f"merge_index_updates: {what} columns {sorted(cols)} do not "
-            f"identify exactly one index wire (matched {kinds or 'none'}); "
-            "expected one of set(n_tok, encoded) / tf(n_doc, enc_dids, "
-            "enc_tfs) / pos(n_doc, n_pos, enc_dids, enc_tfs, enc_pos)")
-    kind = kinds[0]
-    missing = _INDEX_WIRES[kind][1] - cols
+            f"{what} columns {sorted(cols)} do not identify exactly one "
+            f"index wire (matched {kinds or 'none'}); expected one of "
+            f"{expected}")
+    missing = wires[kinds[0]] - cols
     if missing:
         raise ValueError(
-            f"merge_index_updates: {what} looks like the {kind} wire but "
-            f"is missing {sorted(missing)}")
-    return kind
+            f"{what} looks like the {kinds[0]} wire but is missing "
+            f"{sorted(missing)}")
+    return kinds[0]
 
 
 def merge_index_updates(stored: DataFrame, updates: DataFrame) -> DataFrame:
@@ -704,10 +628,10 @@ def merge_index_updates(stored: DataFrame, updates: DataFrame) -> DataFrame:
     chunk table: per (term, chunk_id) the generation with the LARGEST
     content count wins — chunk content only ever GROWS under the streaming
     merges, so the max-count row is the latest — and stored chunks no
-    update touched pass through.  Handles all three wires (validated, same
-    wire on both sides): set (CHUNKED_ENC_SCHEMA out, tok_start re-derived
-    by the same chunk-aggregate window the batch build uses), tf
-    (TF_ENC_SCHEMA) and positional (POS_ENC_SCHEMA).
+    update touched pass through.  Handles all three INDEX_WIRES
+    (validated, same wire on both sides): set (CHUNKED_ENC_SCHEMA out,
+    tok_start re-derived by the same chunk-aggregate window the batch
+    build uses), tf and positional (their build schemas out).
 
     CONTRACT — the continuous-maintenance lifecycle only: a generation
     REPLACES the stored chunk byte-level, so the updates must come from a
@@ -726,26 +650,21 @@ def merge_index_updates(stored: DataFrame, updates: DataFrame) -> DataFrame:
         if "term" in updates.columns else updates
     st = stored.withColumnRenamed("term", "doc_id") \
         if "term" in stored.columns else stored
-    kind = _index_wire(up, "updates")
-    kind_st = _index_wire(st, "stored")
+    kind = _index_wire(up, "merge_index_updates: updates")
+    kind_st = _index_wire(st, "merge_index_updates: stored")
     if kind_st != kind:
         raise ValueError(
             f"merge_index_updates: stored is the {kind_st} wire but "
             f"updates is the {kind} wire — generations replace chunks "
             "byte-level, so both sides must carry the same wire")
-    cnt, _need, cols = _INDEX_WIRES[kind]
-    if kind == "set":
-        up = (up.withColumn("prev", F.lit(0).cast("long"))
-              .withColumn("out_bytes", F.length("encoded").cast("long")))
-    elif "out_bytes" not in up.columns:
-        payload = [F.length(c) for c in cols
-                   if c.startswith("enc") and c != "encoded"]
-        total = payload[0]
-        for p in payload[1:]:
-            total = total + p
-        up = up.withColumn("out_bytes", total.cast("long"))
+    counts, streams = INDEX_WIRES[kind]
+    cols = ["doc_id", "chunk_id", *wire_columns(kind), "out_bytes"]
+    if "out_bytes" not in up.columns:
+        up = up.withColumn("out_bytes", sum(
+            (F.length(s[0]) for s in streams), F.lit(0)).cast("long"))
     allrows = st.select(*cols).unionByName(up.select(*cols))
-    w = Window.partitionBy("doc_id", "chunk_id").orderBy(F.col(cnt).desc())
+    w = (Window.partitionBy("doc_id", "chunk_id")
+         .orderBy(F.col(counts[-1]).desc()))
     merged = (allrows.withColumn("_rn", F.row_number().over(w))
               .where(F.col("_rn") == 1).drop("_rn"))
     if kind != "set":
@@ -758,6 +677,7 @@ def merge_index_updates(stored: DataFrame, updates: DataFrame) -> DataFrame:
     return merged.withColumn(
         "tok_start",
         F.coalesce(F.sum("n_tok").over(ts), F.lit(0)).cast("long")) \
+        .withColumn("prev", F.lit(0).cast("long")) \
         .select("doc_id", "chunk_id", "tok_start", "n_tok", "prev",
                 "encoded", "out_bytes")
 
@@ -765,14 +685,14 @@ def merge_index_updates(stored: DataFrame, updates: DataFrame) -> DataFrame:
 def intersect_terms_rows(enc_index: DataFrame,
                          terms: list[str]) -> DataFrame:
     """Serve the K-WAY boolean AND ``terms[0] AND terms[1] AND ...`` from
-    the ENCODED chunked index, CO-GROUPED by chunk (2-term r9, k-way
-    r10): every wire chunks by ``did div span``, term-independently, so a
-    common doc id can only live where ALL k terms occupy the same
-    chunk_id — inner-equi-join the k terms' ENCODED chunk rows on
-    chunk_id first, then one kernel decodes each co-occupied k-tuple and
-    folds the sorted-list intersection in-lane over the shared
+    the ENCODED chunked index, CO-GROUPED by chunk: every wire chunks by
+    ``did div span``, term-independently, so a common doc id can only
+    live where ALL k terms occupy the same chunk_id — inner-equi-join the
+    k terms' ENCODED chunk rows on chunk_id first, then one kernel decodes
+    each co-occupied k-tuple and folds the sorted-list intersection
+    in-lane over the shared
     ``lane_doc_keys`` invariant ("compress and intersect sorted lists of
-    integers", /root/reference/README.md:253 — the named application of
+    integers", the reference README:253 — the named application of
     this codec family, distributed; real boolean queries have > 2 terms).
 
     Why this shape at 10^10 docs: a posting-level form decodes EVERY
@@ -787,44 +707,33 @@ def intersect_terms_rows(enc_index: DataFrame,
     empty.  The k probe predicates still reach the stored index scan
     pushed (plan-tested).
 
-    Serves from ANY stored index wire (r10): the set wire's per-chunk
-    payload IS the EF did stream, and the TF/positional wires carry the
-    same EF did stream as ``enc_dids`` (with ``n_doc`` the distinct-doc
-    count) — so one stored TF index answers both top-k AND and boolean
-    AND without a second build (tools/submit_index_job.py --and).
+    Serves from ANY stored index wire: every wire's first stream is the
+    same EF did stream (see :func:`_did_stream`) — so one stored TF index
+    answers both top-k AND and boolean AND without a second build
+    (tools/submit_index_job.py --and).
 
     Returns the DISTRIBUTED common-doc rows (``did int``, deduped by
     construction — disjoint chunk did-ranges).  Driver-gate scalars:
     :func:`intersect_terms` (k=2) / :func:`intersect_terms_multi`."""
     if not terms:
         raise ValueError("intersect_terms_rows needs at least one term")
-    n_col, e_col = _did_wire_cols(enc_index)
+    kind, dids, _ = _did_stream(enc_index, "intersect_terms_rows")
     k = len(terms)
     joined = None
     for i, t in enumerate(terms):
-        side = enc_index.where(F.col("doc_id") == t).select(
-            "chunk_id", F.col(n_col).alias(f"n_{i}"),
-            F.col(e_col).alias(f"enc_{i}"))
+        side = _probe_side(enc_index, kind, t, f"_{i}", [dids])
         joined = side if joined is None else joined.join(side, "chunk_id")
 
     def run(batches):
-        import numpy as np
-        import pyarrow as pa
-        from ..codec import batched
-        from .encode import _flat_binary
         for batch in batches:
             common = None
             for i in range(k):
-                n = np.asarray(batch.column(
-                    batch.schema.get_field_index(f"n_{i}")), dtype=np.int64)
-                e, eo = _flat_binary(batch.column(
-                    batch.schema.get_field_index(f"enc_{i}")))
-                d, _ = batched.ef_decode_rows(e, eo, n)
+                (d, off), = decode_wire(kind, batch, [dids], f"_{i}")
                 # ONE vectorized intersect across all lanes per side: tag
                 # each did with its lane (dids are uint32, lanes disjoint
                 # -> (lane << 32 | did) keys are unique per side, so
                 # assume_unique holds for the whole fold)
-                keys = lane_doc_keys(n, d)
+                keys = lane_doc_keys(np.diff(off), d)
                 common = keys if common is None else np.intersect1d(
                     common, keys, assume_unique=True)
                 if not common.size:

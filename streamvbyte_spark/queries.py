@@ -1047,18 +1047,21 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["index_build_chunked"] = index_build_chunked
 
-    def _staged_index_probe(spark, sf_dir, key, builder, df_col, k=2):
+    def _staged_index_probe(spark, sf_dir, key, builder, k=2):
         """Materialize the encoded index ONCE per (session, sf_dir) — the
         probe agg and all serving sides read the checkpointed stage, not
         k+1 rebuilds (SPARK_STAGES policy) — and derive the deterministic
         probe terms: the k lexicographically smallest terms with
-        df >= INDEX_MIN_DF (df = sum of the wire's per-chunk doc count)."""
-        from .operators.index import INDEX_CHUNK_SPAN, INDEX_MIN_DF
+        df >= INDEX_MIN_DF (df = sum of the wire's per-chunk did count,
+        the count column of its did stream in the wire table)."""
+        from .operators.index import (INDEX_CHUNK_SPAN, INDEX_MIN_DF,
+                                      _did_stream)
         (v,) = stage_views(
             spark, key, (sf_dir, INDEX_CHUNK_SPAN, INDEX_MIN_DF, key),
             [(f"svb_stage_{key[-10:]}", lambda: builder(
                 spark.read.parquet(f"{sf_dir}/documents.parquet")))])
         enc = spark.table(v)
+        _, _, df_col = _did_stream(enc, key)
         probe = (enc.groupBy("doc_id").agg(F.sum(df_col).alias("df"))
                  .where(F.col("df") >= INDEX_MIN_DF)
                  .orderBy("doc_id").limit(k).collect())
@@ -1074,7 +1077,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # equi-join the posting streams
         from .operators.index import build_index_chunked, intersect_terms
         enc, (a, b) = _staged_index_probe(spark, sf_dir, "index_intersect",
-                                          build_index_chunked, "n_tok")
+                                          build_index_chunked)
         return intersect_terms(enc, a, b)
 
     q["index_intersect"] = index_intersect
@@ -1090,7 +1093,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from .operators.index import (build_index_chunked,
                                       intersect_terms_multi)
         enc, terms = _staged_index_probe(spark, sf_dir, "index_and_multi",
-                                         build_index_chunked, "n_tok", k=3)
+                                         build_index_chunked, k=3)
         return intersect_terms_multi(enc, terms)
 
     q["index_and_multi"] = index_and_multi
@@ -1108,7 +1111,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # decode-everything body is retired) — this gate row runs it.
         from .operators.index import build_index_tf_chunked, topk_and_terms
         enc, (a, b) = _staged_index_probe(spark, sf_dir, "index_topk_and",
-                                          build_index_tf_chunked, "n_doc")
+                                          build_index_tf_chunked)
         return topk_and_terms(enc, a, b)
 
     q["index_topk_and"] = index_topk_and
@@ -1127,7 +1130,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                       phrase_match_terms)
         enc, (a, b) = _staged_index_probe(spark, sf_dir,
                                           "index_phrase_match",
-                                          build_index_pos_chunked, "n_doc")
+                                          build_index_pos_chunked)
         return phrase_match_terms(enc, a, b)
 
     q["index_phrase_match"] = index_phrase_match
@@ -1140,26 +1143,24 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # exploded-did distinct shuffle of the naive form disappears
         from .operators.index import build_index_chunked, union_terms
         enc, (a, b) = _staged_index_probe(spark, sf_dir, "index_union",
-                                          build_index_chunked, "n_tok")
+                                          build_index_chunked)
         return union_terms(enc, a, b)
 
     q["index_union"] = index_union
 
-    def index_merge_updates(spark, sf_dir):
-        # the batch-expressible equivalence of the continuous-maintenance
-        # lifecycle (stream drain -> merge into the stored chunk table;
-        # r8 verdict item 5): stored = chunked build over the EVEN-doc-id
-        # half of the corpus, updates = the full build's chunks restricted
-        # to the (term, chunk) groups an odd ("new") doc touches — exactly
-        # the generations a stream that consumed the stored corpus before
-        # the new documents emits (every updates chunk covers its stored
-        # twin and holds strictly more postings, so the merge's
-        # max-count-wins rule must reassemble to EXACTLY the logical
-        # full-corpus index; untouched stored chunks pass through).
-        # Oracle: the batch build's (TERM_POSTING_SQL identity).
-        from .operators.chunking import decode_reassemble_fused
-        from .operators.index import (INDEX_CHUNK_SPAN, build_index_chunked,
-                                      merge_index_updates, term_doc_pairs)
+    def _merge_equivalence(spark, sf_dir, build):
+        """The batch-expressible equivalence of the continuous-maintenance
+        lifecycle (stream drain -> merge into the stored chunk table):
+        stored = ``build`` over the EVEN-doc-id half of the corpus,
+        updates = the full build's chunks restricted to the (term, chunk)
+        groups an odd ("new") doc touches — exactly the generations a
+        stream that consumed the stored corpus before the new documents
+        emits.  Every updates chunk covers its stored twin and holds
+        strictly more content, so the merge's max-count-wins rule must
+        reassemble to EXACTLY the full-corpus build; untouched stored
+        chunks pass through.  Returns the merged chunk table."""
+        from .operators.index import (INDEX_CHUNK_SPAN, merge_index_updates,
+                                      term_doc_pairs)
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         old = docs.where(F.expr("cast(doc_id as int) % 2 = 0"))
         new = docs.where(F.expr("cast(doc_id as int) % 2 = 1"))
@@ -1168,9 +1169,16 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                            F.expr(f"did div {INDEX_CHUNK_SPAN}")
                            .cast("int").alias("chunk_id"))
                    .distinct())
-        updates = build_index_chunked(docs).join(
+        updates = build(docs).join(
             touched, ["doc_id", "chunk_id"], "left_semi")
-        merged = merge_index_updates(build_index_chunked(old), updates)
+        return merge_index_updates(build(old), updates)
+
+    def index_merge_updates(spark, sf_dir):
+        # the set-wire drain equivalence (_merge_equivalence); oracle: the
+        # batch build's (TERM_POSTING_SQL identity)
+        from .operators.chunking import decode_reassemble_fused
+        from .operators.index import build_index_chunked
+        merged = _merge_equivalence(spark, sf_dir, build_index_chunked)
         re = decode_reassemble_fused(merged, fingerprint=True, codec="ef",
                                      fanout=pipeline_sql._SCAN_FANOUT)
         return re.select("doc_id", "n_tok", "fingerprint")
@@ -1178,33 +1186,18 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["index_merge_updates"] = index_merge_updates
 
     def index_merge_updates_pos(spark, sf_dir):
-        # the POSITIONAL-wire drain equivalence (r10; index_merge_updates
-        # proves the set wire): same even/odd-corpus construction, but
-        # stored/updates are build_index_pos_chunked tables and the merge
-        # exercises the pos branch (max n_pos wins — an update chunk that
-        # a new doc touched holds strictly more occurrences).  The merged
-        # index decodes to flat (term, did, pos) occurrence rows, folded
-        # per term into the gate scalar (sorted (did, pos) struct order =
-        # doc-major, ascending-within-doc — exactly the wire layout);
-        # oracle = the positional build identity straight off documents.
-        # Scale consumers take decode_index_pos's occurrence rows (or the
-        # chunks themselves) — the per-term fold is gate-only, like the
-        # serving scalars.
-        from .operators.index import (INDEX_CHUNK_SPAN,
-                                      build_index_pos_chunked,
-                                      decode_index_pos,
-                                      merge_index_updates, term_doc_pairs)
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        old = docs.where(F.expr("cast(doc_id as int) % 2 = 0"))
-        new = docs.where(F.expr("cast(doc_id as int) % 2 = 1"))
-        touched = (term_doc_pairs(new)
-                   .select(F.col("term").alias("doc_id"),
-                           F.expr(f"did div {INDEX_CHUNK_SPAN}")
-                           .cast("int").alias("chunk_id"))
-                   .distinct())
-        updates = build_index_pos_chunked(docs).join(
-            touched, ["doc_id", "chunk_id"], "left_semi")
-        merged = merge_index_updates(build_index_pos_chunked(old), updates)
+        # the POSITIONAL-wire drain equivalence (_merge_equivalence over
+        # build_index_pos_chunked: the merge's pos branch, max n_pos wins —
+        # an update chunk that a new doc touched holds strictly more
+        # occurrences).  The merged index decodes to flat (term, did, pos)
+        # occurrence rows, folded per term into the gate scalar (sorted
+        # (did, pos) struct order = doc-major, ascending-within-doc —
+        # exactly the wire layout); oracle = the positional build identity
+        # straight off documents.  Scale consumers take decode_index_pos's
+        # occurrence rows (or the chunks themselves) — the per-term fold
+        # is gate-only, like the serving scalars.
+        from .operators.index import build_index_pos_chunked, decode_index_pos
+        merged = _merge_equivalence(spark, sf_dir, build_index_pos_chunked)
         occ = decode_index_pos(merged)
         return (occ.groupBy("term")
                 .agg(F.sort_array(F.collect_list(F.struct("did", "pos")))

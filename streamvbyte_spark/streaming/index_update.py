@@ -27,14 +27,15 @@ Correctness properties (all pinned by the replay test):
   state store shards by key hash across executors — the streaming twin of
   the batch build's skew story.
 
-Wire parity: chunk bytes are ef_encode_rows output (the PUBLIC cross-module
-EF contract shared with operators/chunking) — a batch reader decodes
-streamed chunks with the same ef_decode_rows call, and the replay test
-asserts the drained stream's chunks byte-equal the batch build's.  All
-three index wires stream: set (EF dids), TF (EF dids + svb tfs), and
-positional (r9: + svb doc-major positions — the phrase-serving wire),
-each draining byte-equal to its batch build and folding into a stored
-table via operators/index.merge_index_updates' matching branch.
+Wire parity: state and upserts are read and written only through
+operators/index's wire table (INDEX_WIRES via encode_wire / decode_wire),
+the one definition the batch builds and serving kernels share, and the
+replay tests assert the drained stream's chunks byte-equal the batch
+build's.  All three index wires stream: set (EF dids), TF (EF dids + svb
+tfs), and positional (+ svb doc-major positions — the phrase-serving
+wire), each draining byte-equal to its batch build and folding into a
+stored table via operators/index.merge_index_updates.  Each merge below
+holds only its wire's merge arithmetic.
 
 Reference hook: sorted-postings delta/EF is the codec family's canonical
 application (/root/reference/README.md:54-59,253); this operator is the
@@ -47,245 +48,161 @@ from typing import Iterator, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.index import INDEX_CHUNK_SPAN
+from ..operators.index import (INDEX_CHUNK_SPAN, INDEX_WIRES, decode_wire,
+                               encode_wire, term_doc_pairs,
+                               term_doc_pos_pairs, wire_columns,
+                               wire_schema)
 
-OUT_SCHEMA = "term string, chunk_id int, n_tok int, encoded binary"
-STATE_SCHEMA = "n_tok int, encoded binary"
-_OUT_COLS = ["term", "chunk_id", "n_tok", "encoded"]
 
+def _stateful_merge(kind: str, merge):
+    """The applyInPandasWithState function of the ``kind`` wire; the state
+    is the chunk's wire_columns values.  merge(pdf, old) is the wire's
+    merge arithmetic: pdf = the micro-batch's rows of the chunk, old = the
+    stored chunk's decoded streams in wire order (None for a new chunk);
+    it returns the merged streams' values in wire order, or None when
+    nothing grew.  Empty input or a pure redelivery keeps the state and
+    emits nothing; otherwise the re-encoded chunk becomes the state and
+    the one emitted upsert row."""
+    out_cols = ["term", "chunk_id", *wire_columns(kind)]
+    names = [s[0] for s in INDEX_WIRES[kind][1]]
 
-def _merge_chunk(key: Tuple[str, int], pdf_iter: Iterator[pd.DataFrame],
-                 state: GroupState) -> Iterator[pd.DataFrame]:
-    from ..codec import batched
-    term, chunk_id = key
-    dids = [pdf["did"].to_numpy(np.int64) for pdf in pdf_iter if len(pdf)]
-    if not dids:
-        if state.exists:
-            state.update(state.get)
-        yield pd.DataFrame(columns=_OUT_COLS)
-        return
-    new = np.unique(np.concatenate(dids) if len(dids) > 1 else dids[0])
-    if state.exists:
-        n_old, enc_old = state.get
-        old = batched.ef_decode_rows(
-            np.frombuffer(enc_old, dtype=np.uint8),
-            np.array([0, len(enc_old)], dtype=np.int64),
-            np.array([n_old], dtype=np.int64))[0].astype(np.int64)
-        merged = np.union1d(old, new)
-        if merged.size == old.size:
-            # pure redelivery: nothing grew, emit nothing
-            state.update((n_old, enc_old))
-            yield pd.DataFrame(columns=_OUT_COLS)
+    def run(key: Tuple[str, int], pdf_iter: Iterator[pd.DataFrame],
+            state: GroupState) -> Iterator[pd.DataFrame]:
+        pdfs = [pdf for pdf in pdf_iter if len(pdf)]
+        merged = None
+        if pdfs:
+            old = ([flat for flat, _ in decode_wire(kind, state.get)]
+                   if state.exists else None)
+            merged = merge(pd.concat(pdfs), old)
+        if merged is None:
+            if state.exists:
+                state.update(state.get)
+            yield pd.DataFrame(columns=out_cols)
             return
-    else:
-        merged = new
-    enc, _eoff = batched.ef_encode_rows(
-        merged.astype(np.uint32),
-        np.array([0, merged.size], dtype=np.int64))
-    buf = enc.tobytes()
-    state.update((int(merged.size), buf))
-    yield pd.DataFrame({"term": [term],
-                        "chunk_id": np.array([chunk_id], dtype=np.int32),
-                        "n_tok": np.array([merged.size], dtype=np.int32),
-                        "encoded": [buf]})
+        cols, _ = encode_wire(kind, {
+            c: (v, np.array([0, v.size], dtype=np.int64))
+            for c, v in zip(names, merged)})
+        state.update(tuple(c[0].as_py() for c in cols))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([key[0]], pa.string()),
+             pa.array([key[1]], pa.int32()), *cols],
+            names=out_cols).to_pandas()
+
+    return run
 
 
-TF_OUT_SCHEMA = ("term string, chunk_id int, n_doc int, "
-                 "enc_dids binary, enc_tfs binary")
-TF_STATE_SCHEMA = "n_doc int, enc_dids binary, enc_tfs binary"
-_TF_OUT_COLS = ["term", "chunk_id", "n_doc", "enc_dids", "enc_tfs"]
+def _merge_set(pdf, old):
+    """Set union of the chunk's doc ids."""
+    merged = np.unique(pdf["did"].to_numpy(np.int64))
+    if old is not None:
+        merged = np.union1d(old[0].astype(np.int64), merged)
+        if merged.size == old[0].size:
+            return None
+    return (merged,)
 
 
-def _merge_chunk_tf(key: Tuple[str, int], pdf_iter: Iterator[pd.DataFrame],
-                    state: GroupState) -> Iterator[pd.DataFrame]:
-    from ..codec import batched
-    term, chunk_id = key
-    raw = [(pdf["did"].to_numpy(np.int64), pdf["pos"].to_numpy(np.int64))
-           for pdf in pdf_iter if len(pdf)]
-    if not raw:
-        if state.exists:
-            state.update(state.get)
-        yield pd.DataFrame(columns=_TF_OUT_COLS)
-        return
-    dids_raw = np.concatenate([r[0] for r in raw])
-    pos_raw = np.concatenate([r[1] for r in raw])
-    # dedupe (did, pos) PAIRS before counting: a document redelivered
-    # within this same micro-batch contributes exact-duplicate pairs
-    # (immutable docs -> identical positions), so the pair dedup recovers
-    # the true tf where a raw occurrence count would double it
-    occ = np.unique((dids_raw << np.int64(32)) | pos_raw)
-    new_dids, new_tfs = np.unique(occ >> np.int64(32), return_counts=True)
-    if state.exists:
-        n_old, ed, et = state.get
-        one = np.array([n_old], dtype=np.int64)
-        old_dids = batched.ef_decode_rows(
-            np.frombuffer(ed, dtype=np.uint8),
-            np.array([0, len(ed)], dtype=np.int64), one)[0].astype(np.int64)
-        old_tfs = batched.decode_rows(
-            np.frombuffer(et, dtype=np.uint8),
-            np.array([0, len(et)], dtype=np.int64), one,
-            np.array([batched.CODEC_ID["svb"]], np.int32))[0]
-        # a doc's tf for a term is COMPLETE within the micro-batch that
-        # delivered the doc (explode keeps a row's words together), so a
-        # did already present is a redelivery: keep the stored count —
-        # adding would double it.  Only FRESH dids insert.
-        fresh = ~np.isin(new_dids, old_dids)
-        if not fresh.any():
-            state.update((n_old, ed, et))
-            yield pd.DataFrame(columns=_TF_OUT_COLS)
-            return
-        md = np.union1d(old_dids, new_dids[fresh])
-        tf = np.zeros(md.size, dtype=np.uint32)
-        tf[np.searchsorted(md, old_dids)] = old_tfs
-        tf[np.searchsorted(md, new_dids[fresh])] = new_tfs[fresh]
-    else:
-        md, tf = new_dids, new_tfs.astype(np.uint32)
-    off = np.array([0, md.size], dtype=np.int64)
-    enc_d = batched.ef_encode_rows(md.astype(np.uint32), off)[0].tobytes()
-    enc_t = batched.encode_rows(tf, off, "svb")[0].tobytes()
-    state.update((int(md.size), enc_d, enc_t))
-    yield pd.DataFrame({"term": [term],
-                        "chunk_id": np.array([chunk_id], dtype=np.int32),
-                        "n_doc": np.array([md.size], dtype=np.int32),
-                        "enc_dids": [enc_d], "enc_tfs": [enc_t]})
+def _occurrences(pdf):
+    """The micro-batch's distinct (did << 32 | pos) keys, doc-major: a
+    document redelivered within this same micro-batch contributes
+    exact-duplicate (did, pos) pairs (immutable docs -> identical
+    positions), so the pair dedup recovers the true occurrences where a
+    raw count would double them."""
+    return np.unique((pdf["did"].to_numpy(np.int64) << np.int64(32))
+                     | pdf["pos"].to_numpy(np.int64))
 
 
-POS_OUT_SCHEMA = ("term string, chunk_id int, n_doc int, n_pos int, "
-                  "enc_dids binary, enc_tfs binary, enc_pos binary")
-POS_STATE_SCHEMA = ("n_doc int, n_pos int, enc_dids binary, "
-                    "enc_tfs binary, enc_pos binary")
-_POS_OUT_COLS = ["term", "chunk_id", "n_doc", "n_pos", "enc_dids",
-                 "enc_tfs", "enc_pos"]
+def _merge_tf(pdf, old):
+    dids, tfs = np.unique(_occurrences(pdf) >> np.int64(32),
+                          return_counts=True)
+    if old is None:
+        return dids, tfs
+    old_dids, old_tfs = old[0].astype(np.int64), old[1]
+    # a doc's tf for a term is COMPLETE within the micro-batch that
+    # delivered the doc (explode keeps a row's words together), so a did
+    # already present is a redelivery: keep the stored count — adding
+    # would double it.  Only FRESH dids insert.
+    fresh = ~np.isin(dids, old_dids)
+    if not fresh.any():
+        return None
+    md = np.union1d(old_dids, dids[fresh])
+    tf = np.zeros(md.size, dtype=np.uint32)
+    tf[np.searchsorted(md, old_dids)] = old_tfs
+    tf[np.searchsorted(md, dids[fresh])] = tfs[fresh]
+    return md, tf
 
 
-def _merge_chunk_pos(key: Tuple[str, int], pdf_iter: Iterator[pd.DataFrame],
-                     state: GroupState) -> Iterator[pd.DataFrame]:
-    """Positional twin of _merge_chunk_tf: state carries all three wires
-    of the positional chunk (EF dids + svb tfs + svb doc-major positions,
-    operators/index.build_index_pos_chunked parity).  Same redelivery
-    contract — docs are immutable and a doc's occurrences are complete
-    within its delivery batch, so a did already in the chunk is a
+def _merge_pos(pdf, old):
+    """Positional twin of _merge_tf: a did already in the chunk is a
     redelivery (its stored positions stay) and only FRESH dids insert,
     doc-major via one packed (did << 32 | pos) sort."""
-    from ..codec import batched
-    term, chunk_id = key
-    raw = [(pdf["did"].to_numpy(np.int64), pdf["pos"].to_numpy(np.int64))
-           for pdf in pdf_iter if len(pdf)]
-    if not raw:
-        if state.exists:
-            state.update(state.get)
-        yield pd.DataFrame(columns=_POS_OUT_COLS)
-        return
-    dids_raw = np.concatenate([r[0] for r in raw])
-    pos_raw = np.concatenate([r[1] for r in raw])
-    # within-batch (did, pos) pair dedup, already sorted doc-major
-    occ = np.unique((dids_raw << np.int64(32)) | pos_raw)
-    new_dids = occ >> np.int64(32)
-    nd = np.unique(new_dids)
-    if state.exists:
-        n_old, np_old, ed, et, ep = state.get
-        one = np.array([n_old], dtype=np.int64)
-        old_dids = batched.ef_decode_rows(
-            np.frombuffer(ed, dtype=np.uint8),
-            np.array([0, len(ed)], dtype=np.int64), one)[0].astype(np.int64)
-        svb1 = np.array([batched.CODEC_ID["svb"]], np.int32)
-        old_tfs = batched.decode_rows(
-            np.frombuffer(et, dtype=np.uint8),
-            np.array([0, len(et)], dtype=np.int64), one, svb1)[0]
-        old_pos = batched.decode_rows(
-            np.frombuffer(ep, dtype=np.uint8),
-            np.array([0, len(ep)], dtype=np.int64),
-            np.array([np_old], dtype=np.int64), svb1)[0].astype(np.int64)
+    occ = _occurrences(pdf)
+    if old is not None:
+        old_dids, old_tfs, old_pos = (v.astype(np.int64) for v in old)
+        nd = np.unique(occ >> np.int64(32))
         fresh = ~np.isin(nd, old_dids)
         if not fresh.any():
-            state.update((n_old, np_old, ed, et, ep))
-            yield pd.DataFrame(columns=_POS_OUT_COLS)
-            return
-        old_occ = ((np.repeat(old_dids, old_tfs.astype(np.int64))
-                    << np.int64(32)) | old_pos)
-        keep = np.isin(new_dids, nd[fresh])
+            return None
+        old_occ = (np.repeat(old_dids, old_tfs) << np.int64(32)) | old_pos
+        keep = np.isin(occ >> np.int64(32), nd[fresh])
         # disjoint did sets: concatenate + sort restores doc-major order
         occ = np.sort(np.concatenate([old_occ, occ[keep]]))
-    md, tf = np.unique(occ >> np.int64(32), return_counts=True)
-    poss = (occ & np.int64(0xFFFFFFFF)).astype(np.uint32)
-    doff = np.array([0, md.size], dtype=np.int64)
-    poff = np.array([0, poss.size], dtype=np.int64)
-    enc_d = batched.ef_encode_rows(md.astype(np.uint32), doff)[0].tobytes()
-    enc_t = batched.encode_rows(tf.astype(np.uint32), doff,
-                                "svb")[0].tobytes()
-    enc_p = batched.encode_rows(poss, poff, "svb")[0].tobytes()
-    state.update((int(md.size), int(poss.size), enc_d, enc_t, enc_p))
-    yield pd.DataFrame({"term": [term],
-                        "chunk_id": np.array([chunk_id], dtype=np.int32),
-                        "n_doc": np.array([md.size], dtype=np.int32),
-                        "n_pos": np.array([poss.size], dtype=np.int32),
-                        "enc_dids": [enc_d], "enc_tfs": [enc_t],
-                        "enc_pos": [enc_p]})
+    dids, tfs = np.unique(occ >> np.int64(32), return_counts=True)
+    return dids, tfs, occ & np.int64(0xFFFFFFFF)
 
 
-def _pairs(docs: DataFrame, span: int) -> DataFrame:
-    """The batch build's explode (operators/index.term_doc_pairs: tokenizer
-    parity, the same loud non-negative-int32 id guard); duplicates kept —
-    the set merge uniques them."""
-    from ..operators.index import term_doc_pairs
-    return term_doc_pairs(docs).withColumn(
-        "chunk_id", F.expr(f"did div {span}").cast("int"))
-
-
-def _pairs_pos(docs: DataFrame, span: int) -> DataFrame:
-    """The TF form's explode: the batch family's positional pairs
-    (operators/index.term_doc_pos_pairs — shared tokenizer, id guard, and
-    raw-split positions).  The position is what makes the TF merge
-    idempotent WITHIN a micro-batch: a document delivered twice in one
-    trigger contributes exact-duplicate (did, pos) pairs, so deduping
-    pairs recovers the true counts — counting raw occurrences would double
-    them (review r8).  The set form's stream stays position-free (its
-    merge is a set union; no reason to widen its stateful shuffle by
-    4 B/occurrence)."""
-    from ..operators.index import term_doc_pos_pairs
-    return term_doc_pos_pairs(docs).withColumn(
-        "chunk_id", F.expr(f"did div {span}").cast("int"))
+def _update_stream(pairs: DataFrame, span: int, kind: str,
+                   merge) -> DataFrame:
+    """(term, did[, pos]) pairs -> the ``kind`` wire's upsert rows, keyed
+    by (term, did div span) like the batch build's chunks."""
+    return (pairs.withColumn("chunk_id",
+                             F.expr(f"did div {span}").cast("int"))
+            .groupBy("term", "chunk_id")
+            .applyInPandasWithState(
+                _stateful_merge(kind, merge),
+                f"term string, chunk_id int, {wire_schema(kind)}",
+                wire_schema(kind), "update", GroupStateTimeout.NoTimeout))
 
 
 def index_update_stream(docs: DataFrame,
                         span: int = INDEX_CHUNK_SPAN) -> DataFrame:
     """documents stream (doc_id, text, ...) -> upsert rows (term, chunk_id,
     n_tok, encoded) for every chunk a micro-batch grew; state = one encoded
-    EF chunk per (term, chunk_id)."""
-    return (_pairs(docs, span).groupBy("term", "chunk_id")
-            .applyInPandasWithState(_merge_chunk, OUT_SCHEMA, STATE_SCHEMA,
-                                    "update", GroupStateTimeout.NoTimeout))
+    EF chunk per (term, chunk_id).  The pairs are the batch build's
+    explode (operators/index.term_doc_pairs: tokenizer parity, the same
+    loud non-negative-int32 id guard), duplicates kept — the set merge
+    uniques them.  The set stream stays position-free: its merge is a set
+    union, so there is no reason to widen its stateful shuffle by
+    4 B/occurrence."""
+    return _update_stream(term_doc_pairs(docs), span, "set", _merge_set)
 
 
 def index_update_stream_tf(docs: DataFrame,
                            span: int = INDEX_CHUNK_SPAN) -> DataFrame:
-    """TF twin: state and upserts carry BOTH wires of the TF index (EF did
-    stream + svb tf stream, operators/index.build_index_tf_chunked parity).
+    """TF twin: state and upserts carry BOTH streams of the TF index (EF
+    dids + svb tfs, operators/index.build_index_tf_chunked parity).
     Contract beyond the set form: doc ids are unique and documents
     immutable — tf addition is not idempotent, so redeliveries are
     neutralized at BOTH granularities: across micro-batches a did already
     in the chunk keeps its stored count, and within one micro-batch the
     (did, pos) pair dedup collapses a twice-delivered document to its true
-    counts before they are ever added (review r8)."""
-    return (_pairs_pos(docs, span).groupBy("term", "chunk_id")
-            .applyInPandasWithState(_merge_chunk_tf, TF_OUT_SCHEMA,
-                                    TF_STATE_SCHEMA, "update",
-                                    GroupStateTimeout.NoTimeout))
+    counts before they are ever added.  The pairs are the batch family's
+    positional explode (operators/index.term_doc_pos_pairs — shared
+    tokenizer, id guard, and raw-split positions); the position is what
+    makes the merge idempotent WITHIN a micro-batch."""
+    return _update_stream(term_doc_pos_pairs(docs), span, "tf", _merge_tf)
 
 
 def index_update_stream_pos(docs: DataFrame,
                             span: int = INDEX_CHUNK_SPAN) -> DataFrame:
     """Positional twin: maintains the full phrase-serving wire (EF dids +
     svb tfs + svb doc-major positions) incrementally — the streaming
-    source of the generations merge_index_updates' pos branch folds into
-    a stored positional table.  Same redelivery/immutability contract as
-    the TF form; drained generations byte-equal the batch
+    source of the generations merge_index_updates folds into a stored
+    positional table.  Same redelivery/immutability contract as the TF
+    form; drained generations byte-equal the batch
     build_index_pos_chunked over the union corpus (replay-tested)."""
-    return (_pairs_pos(docs, span).groupBy("term", "chunk_id")
-            .applyInPandasWithState(_merge_chunk_pos, POS_OUT_SCHEMA,
-                                    POS_STATE_SCHEMA, "update",
-                                    GroupStateTimeout.NoTimeout))
+    return _update_stream(term_doc_pos_pairs(docs), span, "pos", _merge_pos)

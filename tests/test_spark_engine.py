@@ -987,15 +987,16 @@ def test_index_intersect_multi_kway(spark):
         intersect_terms_rows(enc, [])
     # wire-agnostic serving (r10): the TF wire's EF did stream answers the
     # same set queries — no second set-wire build needed
-    from streamvbyte_spark.operators.index import (build_index_tf_chunked,
+    from streamvbyte_spark.operators.index import (build_index_pos_chunked,
+                                                   build_index_tf_chunked,
                                                    union_terms)
-    enc_tf = build_index_tf_chunked(docs).localCheckpoint()
-    assert sorted(r.did for r in
-                  intersect_terms_rows(enc_tf, ["a", "c", "d"]).collect()) \
-        == [300]
     set_row = union_terms(enc, "a", "c").collect()[0]
-    tf_row = union_terms(enc_tf, "a", "c").collect()[0]
-    assert tuple(set_row) == tuple(tf_row)
+    for build in (build_index_tf_chunked, build_index_pos_chunked):
+        enc_w = build(docs).localCheckpoint()
+        assert sorted(r.did for r in intersect_terms_rows(
+            enc_w, ["a", "c", "d"]).collect()) == [300], build.__name__
+        assert tuple(union_terms(enc_w, "a", "c").collect()[0]) == \
+            tuple(set_row), build.__name__
     with pytest.raises(ValueError):
         intersect_terms_rows(docs, ["a"])   # not an index chunk table
 

@@ -17,7 +17,7 @@ partitioning: partitionBy(term) would mint one directory per vocabulary
 entry).  --probe runs a top-k AND against the
 STORED index and includes the rows in the report (the serving smoke check).
 --and runs a K-WAY boolean AND against the same stored TF wire (its EF
-did stream serves set queries directly — operators/index._did_wire_cols)
+did stream serves set queries directly — operators/index.INDEX_WIRES)
 and reports the match count plus the smallest matching ids.
 
 The JSON report (last stdout line): terms, chunks, postings, encoded bytes,
