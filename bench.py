@@ -7,9 +7,6 @@ harness's framing (/root/reference/tests/perf.c:38-91: uints/sec over a
 1/2/3/4-byte value mix) scaled up: a deterministic synthetic token table
 (FIXTURES.md families) is encoded with the auto-selector and decoded back,
 reporting encode+decode tokens/sec and compressed bytes/token.
-
-Scaling-efficiency evidence (N vs 4N cores) lives in the standalone
-tools/bench_scaling.py, which writes BENCH/BASELINE.md.
 """
 
 from __future__ import annotations

@@ -1,7 +1,9 @@
-"""SparkSession factory with the engine's scale-oriented defaults.
+"""SparkSession factory with the engine's defaults.
 
-Configs chosen for the 100 TB target (AQE re-planning, Arrow-batched Python
-exchange, pushdown-friendly parquet scans) but harmless on local[N].
+The defaults keep the codec kernels fed and the Python stages cheap: AQE
+re-planning, Arrow-batched Python exchange in 16k-row batches, reused Python
+workers with a malloc that keeps freed memory, and pushdown-friendly parquet
+scans.  They hold on local[N] and on a cluster alike.
 """
 
 from __future__ import annotations
@@ -13,9 +15,8 @@ from pyspark.sql import SparkSession
 
 # the codec kernels byte-view uint32 buffers (codec/core.py v.view(np.uint8),
 # codec/batched.py scatter/gather) and the stored wires are little-endian —
-# SURVEY.md §1.3's portability note made loud (r8 verdict item 7).  Every
-# platform this engine targets is LE; a BE host must not silently produce
-# byte-swapped streams.
+# SURVEY.md §1.3's portability note made loud.  Every platform this engine
+# targets is LE; a BE host must not silently produce byte-swapped streams.
 # explicit raise, not assert: Spark Python workers may run under
 # PYTHONOPTIMIZE, which strips asserts (the same hazard CLAUDE.md pins for
 # kernel guards) — the check must survive optimized interpreters
@@ -23,6 +24,31 @@ if sys.byteorder != "little":
     raise RuntimeError(
         "streamvbyte_spark requires a little-endian host: the codec kernels "
         "and the stored stream wires byte-view native uint32 buffers")
+
+
+def _drop_spark_archives_from_worker_path() -> None:
+    """Inside a Spark Python worker, drop Spark's own zips and jars
+    ($SPARK_HOME/python/lib, $SPARK_HOME/jars) from sys.path and
+    sys.path_importer_cache.  Every task calls importlib.invalidate_caches(),
+    which makes each cached zip finder re-read its archive's directory
+    (pyspark.zip, the py4j zip, spark-core's jar: 100+ ms per task); pyspark
+    and py4j are already imported by then.  User files and --py-files zips
+    live elsewhere and stay."""
+    spark_home = os.environ.get("SPARK_HOME")
+    if "PYTHON_WORKER_FACTORY_SECRET" not in os.environ or not spark_home:
+        return
+    home = os.path.realpath(spark_home)
+    roots = tuple(os.path.join(home, d, "") for d in ("python/lib", "jars"))
+
+    def spark_archive(p) -> bool:
+        return isinstance(p, str) and os.path.realpath(p).startswith(roots)
+
+    sys.path[:] = [p for p in sys.path if not spark_archive(p)]
+    for key in [k for k in sys.path_importer_cache if spark_archive(k)]:
+        del sys.path_importer_cache[key]
+
+
+_drop_spark_archives_from_worker_path()
 
 # glibc malloc tuning for the Python workers: without it every large NumPy
 # allocation is mmap'd and returned to the OS on free, so each Arrow batch

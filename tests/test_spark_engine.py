@@ -1116,3 +1116,46 @@ def test_index_union_terms(spark):
     # both sides absent: empty union, zero fingerprint
     none = union_terms(enc, "ghost1", "ghost2").collect()[0]
     assert (none.n_docs, none.fingerprint) == (0, 0)
+
+
+def test_workers_drop_spark_archive_finders(spark):
+    """A reused Python worker that ran package kernels holds no import path
+    entry or cached finder under $SPARK_HOME/python/lib or $SPARK_HOME/jars:
+    each such zip finder re-reads its archive on every task's
+    importlib.invalidate_caches().  The reporter drains its input so its
+    worker stays reusable, and references a package function so its
+    unpickling imports the package the way every kernel does."""
+    import json
+    import os
+
+    import pyarrow as pa
+
+    from streamvbyte_spark.session import default_cpus
+
+    home = os.path.realpath(os.environ["SPARK_HOME"])
+    roots = tuple(os.path.join(home, d, "") for d in ("python/lib", "jars"))
+    n = max(4, default_cpus())
+    syn = synthetic_tokens(spark, 400, avg_len=50, seed=3, partitions=n)
+    assert decode_table(encode_table(syn)).count() == 400
+
+    def report(batches):
+        import os
+        import sys
+        for _ in batches:
+            pass
+        default_cpus  # noqa: B018 -- unpickling this imports the package
+
+        def under_spark(keys):
+            return sorted(k for k in keys if isinstance(k, str)
+                          and os.path.realpath(k).startswith(roots))
+        yield pa.RecordBatch.from_pylist([{
+            "pid": os.getpid(),
+            "path": json.dumps(under_spark(sys.path)),
+            "finders": json.dumps(under_spark(sys.path_importer_cache))}])
+
+    rows = spark.range(0, 2 * n, numPartitions=2 * n).mapInArrow(
+        report, "pid long, path string, finders string").collect()
+    assert len(rows) == 2 * n
+    held = {r.pid: (json.loads(r.path), json.loads(r.finders))
+            for r in rows if r.path != "[]" or r.finders != "[]"}
+    assert held == {}

@@ -1,7 +1,8 @@
-"""The north-rule deployment shape must actually launch: package the engine
-as a --py-files zip and run the checkpoint-encode job through spark-submit
-(the path a real N / 4N-executor cluster uses), then assert the job's JSON
-report and the resumability of a rerun."""
+"""The cluster deployment shape must actually launch: package the engine as
+a --py-files zip and run jobs through spark-submit with the engine only in
+the zip — the checkpoint-encode job (JSON report, resumable rerun), the
+index build-and-serve job, and a job that builds its session with
+get_spark() and runs a package kernel."""
 
 from __future__ import annotations
 
@@ -17,20 +18,26 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _engine_zip(tmp: str) -> str:
+    """Package the engine as the --py-files zip a cluster job ships."""
+    zip_path = os.path.join(tmp, "streamvbyte_spark.zip")
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        pkg = os.path.join(REPO, "streamvbyte_spark")
+        for root, _dirs, files in os.walk(pkg):
+            if "__pycache__" in root:
+                continue
+            for f in files:
+                full = os.path.join(root, f)
+                zf.write(full, os.path.relpath(full, REPO))
+    return zip_path
+
+
 @pytest.mark.skipif(shutil.which("spark-submit") is None,
                     reason="spark-submit not on PATH")
 def test_spark_submit_pyfiles_encode_job():
     tmp = tempfile.mkdtemp(prefix="svb_submit_")
     try:
-        zip_path = os.path.join(tmp, "streamvbyte_spark.zip")
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            pkg = os.path.join(REPO, "streamvbyte_spark")
-            for root, _dirs, files in os.walk(pkg):
-                if "__pycache__" in root:
-                    continue
-                for f in files:
-                    full = os.path.join(root, f)
-                    zf.write(full, os.path.relpath(full, REPO))
+        zip_path = _engine_zip(tmp)
         out = os.path.join(tmp, "enc")
         cmd = ["spark-submit", "--master", "local[4]",
                "--py-files", zip_path,
@@ -64,15 +71,7 @@ def test_spark_submit_pyfiles_index_job():
     serve a probe top-k from the stored table inside the same job."""
     tmp = tempfile.mkdtemp(prefix="svb_submit_idx_")
     try:
-        zip_path = os.path.join(tmp, "streamvbyte_spark.zip")
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            pkg = os.path.join(REPO, "streamvbyte_spark")
-            for root, _dirs, files in os.walk(pkg):
-                if "__pycache__" in root:
-                    continue
-                for f in files:
-                    full = os.path.join(root, f)
-                    zf.write(full, os.path.relpath(full, REPO))
+        zip_path = _engine_zip(tmp)
         import pyarrow as pa
         import pyarrow.parquet as pq
         docs = [(0, "aa bb aa", "s"), (1, "aa bb", "s"), (2, "aa", "s"),
@@ -102,5 +101,40 @@ def test_spark_submit_pyfiles_index_job():
         # stream answers set queries): aa&bb&cc -> doc 200 only
         assert rep["and"] == {"terms": ["aa", "bb", "cc"], "n_docs": 1,
                               "first_dids": [200], "min_did": 200}
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+_GET_SPARK_JOB = """\
+from streamvbyte_spark import encode_table, get_spark
+from streamvbyte_spark.sources import synthetic_tokens
+
+spark = get_spark(master="local[2]")
+spark.sparkContext.setLogLevel("ERROR")
+enc = encode_table(synthetic_tokens(spark, 300, avg_len=40, partitions=4))
+print(enc.count())
+spark.stop()
+"""
+
+
+@pytest.mark.skipif(shutil.which("spark-submit") is None,
+                    reason="spark-submit not on PATH")
+def test_spark_submit_pyfiles_get_spark_job():
+    """A job that builds its session through get_spark() under --py-files:
+    the Python workers must import the engine from the per-task py-files
+    zip, so get_spark() may not set anything that runs in a worker before
+    the task's files are on its path."""
+    tmp = tempfile.mkdtemp(prefix="svb_submit_gs_")
+    try:
+        zip_path = _engine_zip(tmp)
+        job = os.path.join(tmp, "job.py")
+        with open(job, "w") as f:
+            f.write(_GET_SPARK_JOB)
+        cmd = ["spark-submit", "--py-files", zip_path, job]
+        env = {**os.environ, "PYTHONPATH": ""}
+        r = subprocess.run(cmd, capture_output=True, text=True, timeout=300,
+                           env=env, cwd=tmp)
+        assert r.returncode == 0, r.stderr[-2000:]
+        assert r.stdout.strip().splitlines()[-1] == "300"
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
