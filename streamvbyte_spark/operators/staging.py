@@ -13,15 +13,19 @@ against that directory: on a production cluster point it at durable storage
 killing the query.  Results are identical either way — only the storage of
 the truncated plan differs.
 
-``stage_views`` is the only way a query stages a temp view: it builds,
-caches and replaces one generation of views per (session, key), and
-``release_stage`` tears one down.
+``stage_generation`` (and its names-only form ``stage_views``) is the only
+way a query stages a temp view: it builds, caches and replaces one
+generation of views per (session, key), and ``release_stage`` tears one
+down.  A generation also carries the values derived from its views (a
+staged index's probe terms): they are computed once when the generation is
+built, returned on every hit, and dropped with the views, so a rebuild
+always re-derives them.
 """
 from __future__ import annotations
 
 import uuid
 import weakref
-from typing import Callable, NamedTuple, Sequence
+from typing import Any, Callable, NamedTuple, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -89,27 +93,35 @@ def release(df: DataFrame) -> None:
 class _StageGen(NamedTuple):
     fingerprint: tuple
     views: tuple[tuple[str, DataFrame], ...]   # (temp view name, checkpointed df)
+    derived: Any                               # derive(*names), built with views
+
+    @property
+    def names(self) -> tuple[str, ...]:
+        return tuple(v for v, _ in self.views)
 
 
 _STAGE_VIEWS: dict[tuple[int, str], _StageGen] = {}
 
 
-def stage_views(spark: SparkSession, key: str, fingerprint: tuple,
-                stages: Sequence[tuple[str, Callable[..., DataFrame]]]
-                ) -> tuple[str, ...]:
-    """Temp view names of KEY's live stage generation, built on a miss.
+def stage_generation(spark: SparkSession, key: str, fingerprint: tuple,
+                     stages: Sequence[tuple[str, Callable[..., DataFrame]]],
+                     derive: Callable[..., Any] | None = None) -> _StageGen:
+    """KEY's live stage generation, built on a miss.
 
     ``stages`` is ``((basename, build), ...)`` in dependency order; each
     ``build(*earlier_view_names)`` returns the DataFrame to materialize.
     A hit (same fingerprint, every view still resolves — a test or session
-    may have dropped or replaced one externally) returns the live names
-    without building.  A miss materializes every stage as
-    ``f"{basename}_{uuid8}"`` and then drops the previous generation's
-    views (block release stays deferred to GC — see _STAGE_VIEWS)."""
+    may have dropped or replaced one externally) returns the live
+    generation without building or deriving.  A miss materializes every
+    stage as ``f"{basename}_{uuid8}"``, computes ``derive(*view_names)``
+    once (the generation's ``derived`` value; None without ``derive``) and
+    then drops the previous generation's views (block release stays
+    deferred to GC — see _STAGE_VIEWS).  ``derive`` must depend only on
+    the views, i.e. on the fingerprint."""
     gen = _STAGE_VIEWS.get((id(spark), key))
     if gen is not None and gen.fingerprint == fingerprint and all(
-            spark.catalog.tableExists(v) for v, _ in gen.views):
-        return tuple(v for v, _ in gen.views)
+            spark.catalog.tableExists(v) for v in gen.names):
+        return gen
     tag = uuid.uuid4().hex[:8]
     views: list[tuple[str, DataFrame]] = []
     for base, build in stages:
@@ -117,15 +129,26 @@ def stage_views(spark: SparkSession, key: str, fingerprint: tuple,
         mdf = materialize(build(*(v for v, _ in views)))
         mdf.createOrReplaceTempView(name)
         views.append((name, mdf))
-    for old, _ in gen.views if gen is not None else ():
+    names = tuple(v for v, _ in views)
+    new = _StageGen(fingerprint, tuple(views),
+                    derive(*names) if derive is not None else None)
+    for old in gen.names if gen is not None else ():
         spark.catalog.dropTempView(old)
-    _STAGE_VIEWS[(id(spark), key)] = _StageGen(fingerprint, tuple(views))
-    return tuple(v for v, _ in views)
+    _STAGE_VIEWS[(id(spark), key)] = new
+    return new
+
+
+def stage_views(spark: SparkSession, key: str, fingerprint: tuple,
+                stages: Sequence[tuple[str, Callable[..., DataFrame]]]
+                ) -> tuple[str, ...]:
+    """Temp view names of KEY's live stage generation (stage_generation)."""
+    return stage_generation(spark, key, fingerprint, stages).names
 
 
 def release_stage(spark: SparkSession, key: str) -> None:
-    """Tear down KEY's live stage generation: drop its temp views and
-    SYNCHRONOUSLY unpersist the checkpoint blocks (release).  For harnesses
+    """Tear down KEY's live stage generation: drop its temp views and its
+    derived value, and SYNCHRONOUSLY unpersist the checkpoint blocks
+    (release).  For harnesses
     that are DONE with a query, so one staged query's blocks cannot pressure
     the next query's measurement.  Never call it while a built-but-unrun
     plan may still reference the views (truncated lineage cannot recompute

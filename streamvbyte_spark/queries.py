@@ -29,7 +29,8 @@ from .functions.sqlpair import (
 )
 from .operators import decode_table, encode_table, size_table
 # release_stage is re-exported: harnesses tear a query's stages down here
-from .operators.staging import release_stage, stage_views  # noqa: F401
+from .operators.staging import (release_stage,  # noqa: F401
+                                stage_generation, stage_views)
 from .sources import posting_lists, tokens_from_documents
 
 # ---------------------------------------------------------------------------
@@ -1048,28 +1049,36 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["index_build_chunked"] = index_build_chunked
 
     def _staged_index_probe(spark, sf_dir, key, builder, k=2):
-        """Materialize the encoded index ONCE per (session, sf_dir) — the
-        probe agg and all serving sides read the checkpointed stage, not
-        k+1 rebuilds (SPARK_STAGES policy) — and derive the deterministic
-        probe terms: the k lexicographically smallest terms with
+        """Materialize the encoded index ONCE per (session, sf_dir) — all
+        serving sides read the checkpointed stage, not k rebuilds
+        (SPARK_STAGES policy) — and return it with the deterministic probe
+        terms: the k lexicographically smallest terms with
         df >= INDEX_MIN_DF (df = sum of the wire's per-chunk did count,
-        the count column of its did stream in the wire table)."""
+        the count column of its did stream in the wire table).  The terms
+        are the stage generation's derived value: computed once when the
+        generation is built and dropped with its views, so a hit runs no
+        Spark job and a rebuilt generation re-derives them."""
         from .operators.index import (INDEX_CHUNK_SPAN, INDEX_MIN_DF,
                                       _did_stream)
-        (v,) = stage_views(
-            spark, key, (sf_dir, INDEX_CHUNK_SPAN, INDEX_MIN_DF, key),
+
+        def probe_terms(v):
+            enc = spark.table(v)
+            _, _, df_col = _did_stream(enc, key)
+            return [r["doc_id"] for r in
+                    enc.groupBy("doc_id").agg(F.sum(df_col).alias("df"))
+                    .where(F.col("df") >= INDEX_MIN_DF)
+                    .orderBy("doc_id").limit(k).collect()]
+        gen = stage_generation(
+            spark, key, (sf_dir, INDEX_CHUNK_SPAN, INDEX_MIN_DF, key, k),
             [(f"svb_stage_{key[-10:]}", lambda: builder(
-                spark.read.parquet(f"{sf_dir}/documents.parquet")))])
-        enc = spark.table(v)
-        _, _, df_col = _did_stream(enc, key)
-        probe = (enc.groupBy("doc_id").agg(F.sum(df_col).alias("df"))
-                 .where(F.col("df") >= INDEX_MIN_DF)
-                 .orderBy("doc_id").limit(k).collect())
-        if len(probe) < k:
+                spark.read.parquet(f"{sf_dir}/documents.parquet")))],
+            derive=probe_terms)
+        terms = gen.derived
+        if len(terms) < k:
             raise ValueError(
                 f"{key} needs {k} probe terms with df >= {INDEX_MIN_DF}; "
-                f"corpus has {len(probe)}")
-        return enc, [r["doc_id"] for r in probe]
+                f"corpus has {len(terms)}")
+        return spark.table(gen.names[0]), terms
 
     def index_intersect(spark, sf_dir):
         # serving: decode ONLY the probed terms' chunks from the encoded
@@ -1083,7 +1092,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["index_intersect"] = index_intersect
 
     def index_and_multi(spark, sf_dir):
-        # K-WAY boolean AND serving (r10; real queries have > 2 terms and
+        # K-WAY boolean AND serving (real queries have > 2 terms and
         # k-way sorted-list intersection is the reference's named workload,
         # README.md:253): the three lexicographically smallest terms with
         # df >= 5, served by the k-way chunk_id inner equi-join + in-lane
@@ -1106,9 +1115,8 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # collected in ONE posting-level shuffle (the encode kernel
         # run-lengths the sorted duplicated dids into (did, tf) — a
         # separate counting aggregate would shuffle the postings twice).
-        # r10: topk_and_terms IS the co-grouped plan now (chunk_id
-        # equi-join + in-lane score + per-batch local top-k; the r9
-        # decode-everything body is retired) — this gate row runs it.
+        # topk_and_terms is the co-grouped plan (chunk_id equi-join +
+        # in-lane score + per-batch local top-k); this gate row runs it.
         from .operators.index import build_index_tf_chunked, topk_and_terms
         enc, (a, b) = _staged_index_probe(spark, sf_dir, "index_topk_and",
                                           build_index_tf_chunked)
@@ -1117,15 +1125,15 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["index_topk_and"] = index_topk_and
 
     def index_phrase_match(spark, sf_dir):
-        # phrase serving from the POSITIONAL wire (r8-built, gated r9):
-        # the same deterministic probe rule (two lexicographically
-        # smallest terms, df >= 5, df = sum of the wire's per-chunk doc
-        # counts), served as the ADJACENT IN-ORDER phrase
-        # "term_a term_b" — co-grouped (late r9): the two terms' encoded
-        # chunk rows equi-join on chunk_id and ONE kernel intersects the
-        # did lists in-lane and probes pos_a + 1 against pos_b per
-        # common doc; no occurrence row ever shuffles.  Positions are
-        # raw-split offsets (empties occupy slots) on both engines.
+        # phrase serving from the POSITIONAL wire: the same deterministic
+        # probe rule (two lexicographically smallest terms, df >= 5, df =
+        # sum of the wire's per-chunk doc counts), served as the ADJACENT
+        # IN-ORDER phrase "term_a term_b" — co-grouped: the two terms'
+        # encoded chunk rows equi-join on chunk_id and ONE kernel
+        # intersects the did lists in-lane and probes pos_a + 1 against
+        # pos_b per common doc; no occurrence row ever shuffles.
+        # Positions are raw-split offsets (empties occupy slots) on both
+        # engines.
         from .operators.index import (build_index_pos_chunked,
                                       phrase_match_terms)
         enc, (a, b) = _staged_index_probe(spark, sf_dir,
@@ -1136,11 +1144,11 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["index_phrase_match"] = index_phrase_match
 
     def index_union(spark, sf_dir):
-        # OR serving from the encoded set wire (r8-built, gated r9),
-        # co-grouped by chunk id like intersect: FULL OUTER join the two
-        # terms' encoded chunk rows, union the sorted lists in-lane —
-        # disjoint chunk did-ranges make the in-lane dedup global, so the
-        # exploded-did distinct shuffle of the naive form disappears
+        # OR serving from the encoded set wire, co-grouped by chunk id
+        # like intersect: FULL OUTER join the two terms' encoded chunk
+        # rows, union the sorted lists in-lane — disjoint chunk did-ranges
+        # make the in-lane dedup global, so the exploded-did distinct
+        # shuffle of the naive form disappears
         from .operators.index import build_index_chunked, union_terms
         enc, (a, b) = _staged_index_probe(spark, sf_dir, "index_union",
                                           build_index_chunked)

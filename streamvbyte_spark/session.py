@@ -67,6 +67,21 @@ def default_cpus() -> int:
                or len(os.sched_getaffinity(0)))
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """spark.driver.memory: SPARK_DRIVER_MEMORY if set, else a sixth of
+    the host's MemTotal in whole GiB, between 1g and 16g (16g where
+    meminfo cannot be read)."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    try:
+        with open(meminfo) as f:
+            mem_kb = next(int(line.split()[1]) for line in f
+                          if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "16g"
+    return f"{max(1, min(16, mem_kb // 6 // 2**20))}g"
+
+
 def get_spark(app: str = "streamvbyte-spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = default_cpus()
@@ -87,7 +102,7 @@ def get_spark(app: str = "streamvbyte-spark", master: str | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.python.worker.reuse", "true")
     )
     for k, v in _WORKER_MALLOC_ENV.items():

@@ -1159,3 +1159,23 @@ def test_workers_drop_spark_archive_finders(spark):
     held = {r.pid: (json.loads(r.path), json.loads(r.finders))
             for r in rows if r.path != "[]" or r.finders != "[]"}
     assert held == {}
+
+
+def test_default_driver_memory_from_meminfo(tmp_path, monkeypatch):
+    """Without SPARK_DRIVER_MEMORY the driver heap is a sixth of MemTotal
+    in whole GiB, clamped to 1..16g; the environment variable wins."""
+    from streamvbyte_spark.session import default_driver_memory
+
+    def host(mem_kb):
+        p = tmp_path / f"meminfo_{mem_kb}"
+        p.write_text(f"MemFree:  1024 kB\nMemTotal: {mem_kb} kB\n")
+        return str(p)
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    assert default_driver_memory(host(15_728_640)) == "2g"     # 15 GiB
+    assert default_driver_memory(host(64 * 2**20)) == "10g"
+    assert default_driver_memory(host(512 * 2**20)) == "16g"   # capped
+    assert default_driver_memory(host(2 * 2**20)) == "1g"      # floored
+    assert default_driver_memory(str(tmp_path / "absent")) == "16g"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert default_driver_memory(host(15_728_640)) == "3g"

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -1184,9 +1185,8 @@ def test_streaming_index_update_tf_batch_exact(spark):
 
 def test_index_stage_generation_reuse(spark):
     """Plan-identical re-invocations of the staged index queries must REUSE
-    the live checkpointed generation (the r7-fix contract extended to the
-    r8 queries) — and a different sf_dir is a fingerprint MISS that builds
-    a fresh generation."""
+    the live checkpointed generation, not stack a new one per call — and a
+    different sf_dir is a fingerprint MISS that builds a fresh generation."""
     import streamvbyte_spark.queries as Q
     from streamvbyte_spark.operators import staging
     queries = Q.build_queries()
@@ -1201,12 +1201,92 @@ def test_index_stage_generation_reuse(spark):
     assert [v for v, _ in g3] != [v for v, _ in g1]   # miss -> fresh build
 
 
+def _build_jobs(spark, build) -> int:
+    """Spark jobs run while ``build()`` executes, counted by job group."""
+    sc = spark.sparkContext
+    group = f"svb_build_{id(build)}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _fresh_probe_terms(spark, view, key, k):
+    """The probe rule recomputed over a staged index view: the k smallest
+    terms with df >= INDEX_MIN_DF."""
+    from streamvbyte_spark.operators.index import INDEX_MIN_DF, _did_stream
+    enc = spark.table(view)
+    _, _, df_col = _did_stream(enc, key)
+    return [r.doc_id for r in
+            enc.groupBy("doc_id").agg(F.sum(df_col).alias("df"))
+            .where(F.col("df") >= INDEX_MIN_DF)
+            .orderBy("doc_id").limit(k).collect()]
+
+
+def test_index_probe_terms_cached_per_generation(spark):
+    """Every staged index query derives its probe terms once per stage
+    generation: the cached terms equal a fresh recompute over the staged
+    view, and a repeat call builds its DataFrame without one Spark job."""
+    import streamvbyte_spark.queries as Q
+    from streamvbyte_spark.operators import staging
+    queries = Q.build_queries()
+    probe_k = {"index_intersect": 2, "index_and_multi": 3,
+               "index_topk_and": 2, "index_phrase_match": 2,
+               "index_union": 2}
+    for name, k in probe_k.items():
+        queries[name](spark, SF)
+        gen = staging._STAGE_VIEWS[(id(spark), name)]
+        assert len(gen.derived) == k, (name, gen.derived)
+        assert gen.derived == _fresh_probe_terms(
+            spark, gen.names[0], name, k), name
+        assert _build_jobs(spark, lambda: queries[name](spark, SF)) == 0, name
+        assert staging._STAGE_VIEWS[(id(spark), name)] is gen, name
+        staging.release_stage(spark, name)
+
+
+def test_index_probe_terms_rederived_on_rebuild(spark):
+    """An externally dropped view, a new sf_dir and release_stage each
+    rebuild the generation, and the rebuilt generation derives its probe
+    terms afresh from its own view."""
+    import streamvbyte_spark.queries as Q
+    from streamvbyte_spark.operators import staging
+    key = (id(spark), "index_intersect")
+    build = Q.build_queries()["index_intersect"]
+
+    def rebuilt(sf_dir, old):
+        assert _build_jobs(spark, lambda: build(spark, sf_dir)) > 0
+        gen = staging._STAGE_VIEWS[key]
+        assert set(gen.names).isdisjoint(old.names)
+        assert gen.derived is not old.derived
+        assert gen.derived == _fresh_probe_terms(
+            spark, gen.names[0], "index_intersect", 2)
+        return gen
+
+    other_sf = os.path.join(os.path.dirname(SF), "sf0.01")
+    build(spark, SF)
+    g1 = staging._STAGE_VIEWS[key]
+    spark.catalog.dropTempView(g1.names[0])            # dropped view
+    g2 = rebuilt(SF, g1)
+    assert g2.derived == g1.derived
+    g3 = rebuilt(other_sf, g2)                         # new sf_dir
+    staging.release_stage(spark, "index_intersect")    # released
+    assert key not in staging._STAGE_VIEWS
+    rebuilt(other_sf, g3)
+    staging.release_stage(spark, "index_intersect")
+
+
 def test_stage_views_lifecycle(spark):
-    """stage_views over a two-stage build whose second stage reads the
-    first stage's view: a same-fingerprint call reuses the live generation
-    without building; an externally dropped view, or release_stage, makes
-    the next call rebuild under fresh names."""
-    from streamvbyte_spark.operators.staging import release_stage, stage_views
+    """stage_generation over a two-stage build whose second stage reads the
+    first stage's view, with a derived value over both views: a
+    same-fingerprint call reuses the live generation without building or
+    deriving; an externally dropped view, or release_stage, makes the next
+    call rebuild under fresh names and derive again."""
+    from streamvbyte_spark.operators.staging import (release_stage,
+                                                     stage_generation,
+                                                     stage_views)
     calls = []
 
     def base():
@@ -1216,30 +1296,38 @@ def test_stage_views_lifecycle(spark):
     def doubled(base_view):
         calls.append("doubled")
         return spark.sql(f"select x * 2 as y from {base_view}")
+
+    def derive(base_view, dbl_view):
+        calls.append("derive")
+        return dbl_view, sum(r.y for r in spark.table(dbl_view).collect())
     stages = [("svb_stage_toy_base", base), ("svb_stage_toy_dbl", doubled)]
     fp = ("toy", 1)
 
     def run():
-        names = stage_views(spark, "toy_lifecycle", fp, stages)
-        return names, sum(r.y for r in spark.table(names[1]).collect())
+        gen = stage_generation(spark, "toy_lifecycle", fp, stages,
+                               derive=derive)
+        assert stage_views(spark, "toy_lifecycle", fp, stages) == gen.names
+        # the derived value is the one computed over THIS generation's views
+        assert gen.derived == (gen.names[1], 90)
+        return gen.names
 
-    g1, total = run()
-    assert total == 90 and calls == ["base", "doubled"]
+    g1 = run()
+    assert calls == ["base", "doubled", "derive"]
     assert g1[0].startswith("svb_stage_toy_base_")
     assert g1[1].startswith("svb_stage_toy_dbl_")
-    # (a) hit: same names, no build
-    assert run() == (g1, 90) and len(calls) == 2
+    # (a) hit: same names, no build, no derive
+    assert run() == g1 and len(calls) == 3
     # (b) one view dropped externally -> rebuild under new names, old gone
     spark.catalog.dropTempView(g1[0])
-    g2, total = run()
-    assert total == 90 and len(calls) == 4
+    g2 = run()
+    assert calls[3:] == ["base", "doubled", "derive"]
     assert set(g2).isdisjoint(g1)
     assert not any(spark.catalog.tableExists(v) for v in g1)
     # (c) release_stage drops the views; the next call rebuilds
     release_stage(spark, "toy_lifecycle")
     assert not any(spark.catalog.tableExists(v) for v in g2)
-    g3, total = run()
-    assert total == 90 and len(calls) == 6
+    g3 = run()
+    assert calls[6:] == ["base", "doubled", "derive"]
     assert set(g3).isdisjoint(g2)
     release_stage(spark, "toy_lifecycle")
 
