@@ -10,26 +10,34 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 
-# --- array level: the 12-function API surface --------------------------------
-from streamvbyte_spark.codec import core
+# --- array level: the reference API on one array -----------------------------
+from streamvbyte_spark import codecs
+from streamvbyte_spark.codec import batched
 
 data = np.arange(0, 800, 100, dtype=np.uint32)         # README.md worked example
-buf = core.encode(data)                                 # streamvbyte_encode
-assert len(buf) == core.compressed_size(data)           # streamvbyte_compressedbytes
-assert core.validate(buf, data.size)                    # streamvbyte_validate_stream
-out = core.decode(buf, data.size)                       # streamvbyte_decode
+svb = codecs["svb"]
+buf = svb.encode(data)                                  # streamvbyte_encode
+assert len(buf) == svb.cost(data)                       # streamvbyte_compressedbytes
+assert len(buf) <= batched.max_compressed_bytes_rows([data.size])[0]  # ..._max_compressedbytes
+one_row = [0, len(buf)]                                 # byte offsets of a one-row batch
+assert batched.validate_rows(np.frombuffer(buf, np.uint8), one_row,
+                             [data.size])[0]            # streamvbyte_validate_stream
+out = svb.decode(buf, data.size)                        # streamvbyte_decode
 np.testing.assert_array_equal(out, data)
 print(f"svb: {data.size} ints -> {len(buf)} bytes, round-trip OK")
 
 signed = np.array([0, -1, 1, -2, 2**31 - 1, -(2**31)], dtype=np.int32)
-zz = core.encode_zigzag_stream(signed)                  # zigzag variants
-np.testing.assert_array_equal(core.decode_zigzag_stream(zz, signed.size), signed)
+zz, zz_off = batched.encode_signed_rows(signed, [0, signed.size])  # zigzag variants
+back, _ = batched.decode_signed_rows(zz, zz_off, [signed.size])
+np.testing.assert_array_equal(back, signed)
 print("zigzag: round-trip OK")
 
 sorted_vals = np.cumsum(np.ones(1000, np.uint32) * 3)
-d = core.delta_encode(sorted_vals, prev=0)              # streamvbyte_delta_encode
-np.testing.assert_array_equal(core.delta_decode(d, 1000, prev=0), sorted_vals)
+d = codecs["svb_delta"].encode(sorted_vals)             # streamvbyte_delta_encode
+np.testing.assert_array_equal(codecs["svb_delta"].decode(d, 1000), sorted_vals)
 print(f"delta: 1000 sorted ints -> {len(d)} bytes ({len(d)/1000:.2f} B/int)")
+print("sizes of the same 1000 ints:",
+      {name: c.cost(sorted_vals) for name, c in codecs.items()})
 
 # --- table level: the distributed pipeline ------------------------------------
 from streamvbyte_spark import decode_table, encode_table, get_spark, verify_roundtrip
@@ -108,7 +116,7 @@ try:
 finally:
     shutil.rmtree(idx_dir, ignore_errors=True)
 
-# k-way boolean AND on the set wire (r10): the distributed rows are the
+# k-way boolean AND on the set wire: the distributed rows are the
 # public return; fold/collect only at the consumer's edge
 from streamvbyte_spark.operators.index import (build_index_chunked,
                                                intersect_terms_rows)

@@ -1,8 +1,9 @@
-"""Whole-batch multi-row codec kernels for Arrow-batched Spark UDFs.
+"""Whole-batch multi-row codec kernels: the package's one implementation of
+every codec, run by every Spark path and by the public ``codecs`` registry.
 
-``core.py`` encodes one array at a time; calling it per row from a Spark UDF
-would pay Python-loop overhead per document.  These kernels instead treat an
-entire Arrow RecordBatch as ONE flat vector: `flat` is the concatenated token
+Calling a per-array codec once per row from a Spark UDF would pay
+Python-loop overhead per document.  These kernels instead treat an entire
+Arrow RecordBatch as ONE flat vector: `flat` is the concatenated token
 values of every row (zero-copy from the Arrow ListArray values buffer) and
 `offsets` are the row boundaries.  Every step — byte-length classification,
 control-byte packing, data scatter/gather, per-row cost reduction, delta
@@ -11,18 +12,19 @@ zero regardless of how many documents a batch holds.  This is the idiomatic
 Spark analog of the reference's 8-values-per-iteration SIMD kernels
 (/root/reference/src/streamvbyte_x64_encode.c:55-97): the batch is the vector.
 
-Format produced per row is byte-identical to ``core`` (and therefore to the
-reference spec, README.md:207-244) — tested row-by-row against core.
+Format produced per row follows the reference spec (README.md:207-244); the
+tests check every kernel row by row against an independent scalar
+implementation kept under ``tests/scalar_oracle``.
 
 Cost model: per-row exact sizes for all 8 codecs computed with segmented
 reductions — including fsst, whose per-row symbol-table cost vectorizes as a
-composite-key sort + lexsort-ranked top-255 (_fsst_costs); argmin per row =
-the single-array auto-selector (select module), batched.  The default
-``auto`` candidate set stays the 7 original
-codecs (VECTOR_COST_CODECS) so driver-facing formats are stable; passing
-VECTOR_COST_CODECS_FULL adds fsst to the argmin (the auto_full_* queries),
-and ``codec='auto_sorted'`` adds Elias-Fano on rows that are
-non-decreasing (row_sorted_mask gate; the auto_sorted_* queries — r7).
+composite-key sort + lexsort-ranked top-255 (_fsst_costs); the per-row argmin
+is the auto-selector.  The default ``auto`` candidate set stays the 7
+original codecs (VECTOR_COST_CODECS) so the auto_size / auto_roundtrip
+formats are stable; passing VECTOR_COST_CODECS_FULL adds fsst to the argmin
+(the auto_full_* queries), and ``codec='auto_sorted'`` adds Elias-Fano on
+rows that are non-decreasing (row_sorted_mask gate; the auto_sorted_*
+queries).
 
 Dispatch: every codec in CODEC_NAMES has one whole-batch encode kernel and
 one whole-batch decode kernel, named in exactly one place, the _KERNELS
@@ -38,10 +40,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from . import companions, core
-
-_PLACE16 = np.array([1, 4, 16, 64], dtype=np.uint16)
-_SHIFTS = np.array([0, 2, 4, 6], dtype=np.uint8)
 _LEN_0124 = np.array([0, 1, 2, 4], dtype=np.int64)
 _LEN_0124_U8 = np.array([0, 1, 2, 4], dtype=np.uint8)
 # value mask by data-byte length 0..4
@@ -53,6 +51,31 @@ _MASK_BY_LEN = np.array([0, 0xFF, 0xFFFF, 0xFFFFFF, 0xFFFFFFFF], dtype=np.uint32
 _CTRL_CODES_U32 = np.array(
     [(b & 3) | (((b >> 2) & 3) << 8) | (((b >> 4) & 3) << 16)
      | (((b >> 6) & 3) << 24) for b in range(256)], dtype="<u4")
+
+
+def _lens_1234(v: np.ndarray) -> np.ndarray:
+    """Per-value data-byte counts, scheme 1234 (1..4), as uint8
+    (src/streamvbyte_encode.c:74): 1 + (v>0xFF) + (v>0xFFFF) + (v>0xFFFFFF).
+
+    Bool arrays are uint8 under the hood, so .view(np.uint8) makes the whole
+    classification allocation-light (no int64 upcasts); callers needing sums
+    pass dtype=int64 to cumsum/sum."""
+    return (
+        np.uint8(1)
+        + (v > np.uint32(0xFF)).view(np.uint8)
+        + (v > np.uint32(0xFFFF)).view(np.uint8)
+        + (v > np.uint32(0xFFFFFF)).view(np.uint8)
+    )
+
+
+def _lens_0124(v: np.ndarray) -> np.ndarray:
+    """Per-value data-byte counts, scheme 0124 (0,1,2,4), as uint8
+    (src/streamvbyte_encode.c:85): (v>0) + (v>0xFF) + 2*(v>0xFFFF)."""
+    return (
+        (v > np.uint32(0)).view(np.uint8)
+        + (v > np.uint32(0xFF)).view(np.uint8)
+        + np.uint8(2) * (v > np.uint32(0xFFFF)).view(np.uint8)
+    )
 
 
 def _row_base_at(ends: np.ndarray, starts: np.ndarray) -> np.ndarray:
@@ -201,10 +224,10 @@ def _svb_encode_rows(flat: np.ndarray, offsets: np.ndarray, scheme0124: bool):
     nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
     key_len = (nr + 3) // 4
     if scheme0124:
-        lens = core._lens_0124(flat)
+        lens = _lens_0124(flat)
         codes = np.where(lens == 4, 3, lens).astype(np.uint8)
     else:
-        lens = core._lens_1234(flat)
+        lens = _lens_1234(flat)
         codes = (lens - 1).astype(np.uint8)
     data_len = _seg_sum(lens, offsets)
     out_size = np.where(nr > 0, key_len + data_len, 0)
@@ -347,25 +370,17 @@ def row_costs(flat: np.ndarray, offsets: np.ndarray,
     key_len = (nr + 3) // 4
     cols = []
     prior_min = None
-    # shared single-pass classifications (b1/b2 feed both svb schemes;
-    # max/min feed both bitpack and for)
-    if flat.size:
-        b1 = (flat > np.uint32(0xFF)).view(np.uint8)
-        b2 = (flat > np.uint32(0xFFFF)).view(np.uint8)
-        lens1234 = np.uint8(1) + b1 + b2 + (flat > np.uint32(0xFFFFFF)).view(np.uint8)
-        lens0124 = ((flat > np.uint32(0)).view(np.uint8) + b1 + np.uint8(2) * b2
-                    ) if any(n == "svb0124" for n in candidates) else None
-    else:
-        lens1234 = lens0124 = np.zeros(0, np.uint8)
+    # lens1234 feeds svb and rle; max/min feed both bitpack and for
+    lens1234 = _lens_1234(flat)
     mx = mn = None
     for name in candidates:
         if name == "svb":
             c = key_len + _seg_sum(lens1234, offsets)
         elif name == "svb0124":
-            c = key_len + _seg_sum(lens0124, offsets)
+            c = key_len + _seg_sum(_lens_0124(flat), offsets)
         elif name == "svb_delta":
             d = _row_deltas(flat, offsets)
-            c = key_len + _seg_sum(core._lens_1234(d), offsets)
+            c = key_len + _seg_sum(_lens_1234(d), offsets)
         elif name == "bitpack":
             mx = _seg_reduce(np.maximum, flat, offsets).astype(np.int64) if mx is None else mx
             w = _exact_width(mx)
@@ -502,15 +517,25 @@ def _row_distinct(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     return _seg_sum(new, offsets)  # sort preserves row segment boundaries
 
 
-def _fsst_costs(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-    """Vectorized per-row fsst cost, exactly companions.fsst_cost per row.
+# FSST-inspired symbol-table codec over the little-endian byte serialization
+# of each row, at fixed 2-byte stride (Boncz/Neumann/Leis, VLDB 2020).
+# Row layout: 1B k | k*2B ascending symbol table | ceil(m/8)B escape bitmap
+# (1 = literal) | one code byte per table hit | 2 literal bytes per escaped
+# pair, where m = 2n byte pairs.  The table holds the row's top
+# _FSST_MAX_SYMBOLS pairs ranked by (count desc, pair value desc) among pairs
+# seen >= 3 times (a symbol saves space only if freq*1 > 2, its table cost);
+# the rank is a STABLE lexsort, so which equal-count pairs enter a full table
+# is deterministic.
+_FSST_MAX_SYMBOLS = 255
 
-    Layout cost (companions.py FSST section): 1B table size k + 2k B symbol
+
+def _fsst_costs(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """Vectorized per-row fsst cost, exactly len(fsst encode) per row.
+
+    Layout cost (see the FSST layout above): 1B table size k + 2k B symbol
     table + ceil(m/8) B escape bitmap + 1 B per table hit + 2 B per escaped
-    pair, where m = 2n byte pairs and the table holds the top-255 pairs by
-    (count desc, pair value desc) with count >= 3 — the stable lexsort order
-    companions._fsst_table and _fsst_encode_rows use (an unstable argsort
-    left the tie order implementation-defined; same lexsort below).
+    pair — with the same stable (count desc, pair desc) lexsort rank that
+    _fsst_encode_rows uses to fill the table.
 
     Whole-batch: one composite-key sort groups (row, pair); a lexsort ranks
     each row's distinct pairs for the 255 cap; bincount reduces k and n_hit
@@ -539,7 +564,7 @@ def _fsst_costs(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     row_first = np.concatenate([[0], np.flatnonzero(srow[1:] != srow[:-1]) + 1])
     seg_len = np.diff(np.concatenate([row_first, [srow.size]]))
     rank = np.arange(srow.size, dtype=np.int64) - np.repeat(row_first, seg_len)
-    take = (rank < companions._FSST_MAX_SYMBOLS) & (scnt >= 3)
+    take = (rank < _FSST_MAX_SYMBOLS) & (scnt >= 3)
     k = np.bincount(srow[take], minlength=R)
     # int64 accumulation end-to-end: bincount(weights=) sums in float64,
     # exact only below 2^53 — an implicit ceiling on a function whose
@@ -552,8 +577,7 @@ def _fsst_costs(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
 
 
 def _fsst_encode_rows(flat: np.ndarray, offsets: np.ndarray):
-    """Whole-batch fsst encode, byte-identical per row to
-    companions.fsst_encode (layout: 1B k | k*2B ascending symbol table |
+    """Whole-batch fsst encode (layout: 1B k | k*2B ascending symbol table |
     ceil(m/8)B escape bitmap | 1B/hit | 2B/escaped pair, m = 2n byte pairs).
 
     Reuses _fsst_costs' machinery — one composite-key sort groups (row,
@@ -589,13 +613,13 @@ def _fsst_encode_rows(flat: np.ndarray, offsets: np.ndarray):
     grp_row = (uniq >> np.uint64(16)).astype(np.int64)
     grp_pair = (uniq & np.uint64(0xFFFF)).astype(np.int64)
     # per-row rank by (count desc, pair desc) — the deterministic tie order
-    # companions._fsst_table uses (lexsort is stable on both sides)
+    # _fsst_costs uses (lexsort is stable)
     order = np.lexsort((-grp_pair, -cnt, grp_row))
     srow = grp_row[order]
     row_first = np.concatenate([[0], np.flatnonzero(srow[1:] != srow[:-1]) + 1])
     seg_len = np.diff(np.concatenate([row_first, [srow.size]]))
     rank = np.arange(srow.size, dtype=np.int64) - np.repeat(row_first, seg_len)
-    take_ranked = (rank < companions._FSST_MAX_SYMBOLS) & (cnt[order] >= 3)
+    take_ranked = (rank < _FSST_MAX_SYMBOLS) & (cnt[order] >= 3)
     take = np.zeros(G, dtype=bool)
     take[order] = take_ranked
     k = np.bincount(grp_row[take], minlength=R).astype(np.int64)
@@ -694,7 +718,7 @@ def _rle_costs(flat: np.ndarray, offsets: np.ndarray,
     row_starts = offsets[:-1][nr > 0]
     is_start[row_starts] = 1
     if lens1234 is None:
-        lens1234 = core._lens_1234(flat)
+        lens1234 = _lens_1234(flat)
     # run-value byte lengths without gathering run_vals: a run's value is the
     # element AT the run start, so masking lens1234 by is_start sums exactly
     # the per-run value lengths
@@ -711,7 +735,7 @@ def _rle_costs(flat: np.ndarray, offsets: np.ndarray,
         run_lens[-1] = flat.size - run_pos[-1]
     run_offsets = np.concatenate([[0], np.cumsum(runs_per_row)])
     sz_vals = rkey + sz_val_data
-    sz_lens = rkey + _seg_sum(core._lens_1234(run_lens), run_offsets)
+    sz_lens = rkey + _seg_sum(_lens_1234(run_lens), run_offsets)
     return 8 + sz_vals + sz_lens
 
 
@@ -876,8 +900,8 @@ def _segmented_cumsum_u32(d: np.ndarray, offsets: np.ndarray) -> np.ndarray:
 
 def max_compressed_bytes_rows(n_toks: np.ndarray) -> np.ndarray:
     """Vectorized streamvbyte_max_compressedbytes
-    (/root/reference/include/streamvbyte.h:33-39, = core.max_compressed_size
-    per row): ceil(n/4) control bytes + 4n worst-case data + 16 decode pad."""
+    (reference include/streamvbyte.h:33-39) per row: ceil(n/4) control
+    bytes + 4n worst-case data + 16 decode pad."""
     n = np.asarray(n_toks, dtype=np.int64)
     return (n + 3) // 4 + 4 * n + 16
 
@@ -986,16 +1010,30 @@ def validate_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
 
 # ----------------------------------------------------- signed (zigzag) streams
 
+def _zigzag_encode(u: np.ndarray) -> np.ndarray:
+    """Signed->unsigned bijection over int32 values held as uint32
+    (src/streamvbyte_zigzag.c:4-6): enc(v) = (v+v) ^ (v>>31) in wrap-around
+    arithmetic."""
+    sign = (u.view(np.int32) >> np.int32(31)).view(np.uint32)  # 0 or ~0
+    return (u << np.uint32(1)) ^ sign
+
+
+def _zigzag_decode(u: np.ndarray) -> np.ndarray:
+    """dec(u) = (u>>1) ^ -(u&1) (src/streamvbyte_zigzag.c:21-23); the
+    int32 result is returned as uint32."""
+    return (u >> np.uint32(1)) ^ (np.uint32(0) - (u & np.uint32(1)))
+
+
 def encode_signed_rows(flat_i32: np.ndarray, offsets: np.ndarray, delta: bool = False):
     """int32 rows -> zigzag (optionally per-row delta, prev=0) -> svb 1234.
 
     Codec names: 'svb_zigzag' / 'svb_zz_delta' (reference
     src/streamvbyte_zigzag.c:8-38 semantics, batched)."""
+    offsets = np.asarray(offsets, dtype=np.int64)
     u = np.ascontiguousarray(flat_i32, dtype=np.int32).view(np.uint32)
     if delta:
-        u = _row_deltas(u, np.asarray(offsets, dtype=np.int64))
-    zz = core.zigzag_encode(u.view(np.int32))
-    return _svb_encode_rows(zz, np.asarray(offsets, dtype=np.int64), False)
+        u = _row_deltas(u, offsets)
+    return _svb_encode_rows(_zigzag_encode(u), offsets, False)
 
 
 def decode_signed_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
@@ -1004,7 +1042,7 @@ def decode_signed_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndar
     vals, offsets = _svb_decode_rows(np.ascontiguousarray(enc, dtype=np.uint8),
                                      np.asarray(enc_offsets, dtype=np.int64),
                                      np.asarray(n_toks, dtype=np.int64), False)
-    u = core.zigzag_decode(vals).view(np.uint32)
+    u = _zigzag_decode(vals)
     if delta:
         u = _segmented_cumsum_u32(u, offsets)
     return u.view(np.int32), offsets
@@ -1065,7 +1103,7 @@ def _rle_runs(flat: np.ndarray, offsets: np.ndarray):
 
 
 def _rle_encode_rows(flat: np.ndarray, offsets: np.ndarray):
-    """Batched RLE (same byte layout as companions.rle_encode): per row
+    """Batched RLE: per row
     [nruns u32 LE][len(svb vals) u32 LE][svb(run values)][svb(run lengths)]."""
     nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
     R = nr.size
@@ -1161,7 +1199,7 @@ def _pack_bytes_aligned(codes, offsets, widths, byte_off, nr, out, rows):
     width, sections are consecutive and dst == bpv * arange(V), so the
     whole pack is ONE reshape copy (near-memcpy) — the dominant shape for
     bitpack/FOR-winning corpora (a uniform 16-bit batch measured ~25x over
-    the masked lane scatters, r7)."""
+    the masked lane scatters)."""
     sub_nr = nr[rows]
     sub_off = np.concatenate([[0], np.cumsum(sub_nr)])
     m = int(sub_off[-1])
@@ -1285,9 +1323,9 @@ def _unpack_bits_rows(packed: np.ndarray, byte_off: np.ndarray, nr: np.ndarray,
         sub_cb = (sub_nr * widths[brows] + 7) // 8
         sub_byte_off = np.concatenate([[0], np.cumsum(sub_cb)])
         # 8 spare zero bytes allocated HERE so the dense unpack's 5-byte
-        # gather windows never read past the end — the previous per-call
-        # np.concatenate pad copied the whole sub-stream on every decode
-        # batch (O(stream) alloc+copy on the hot path; advice r6)
+        # gather windows never read past the end — padding with a per-call
+        # np.concatenate would copy the whole sub-stream on every decode
+        # batch (O(stream) alloc+copy on the hot path)
         sub_packed = np.empty(int(sub_byte_off[-1]) + 8, dtype=np.uint8)
         sub_packed[-8:] = 0
         _copy_segments(sub_packed, sub_byte_off[:-1], packed, byte_off[brows],
@@ -1404,7 +1442,7 @@ def _ef_validate_rows(flat, offsets):
 
 def _ef_params_rows(flat, offsets):
     """(nr, u, L) per row — L from the integer-division formula the DuckDB
-    oracle reproduces (companions._ef_low_bits)."""
+    oracle reproduces: L = floor(log2(u div n)) clamped at 0."""
     nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
     u = np.zeros(nr.size, dtype=np.int64)
     live = nr > 0

@@ -106,10 +106,11 @@ def duckdb_size_svb_delta_wrap(t: str, n: str) -> str:
 
 
 def duckdb_size_ef(t: str, n: str) -> str:
-    """Exact Elias-Fano size (companions.ef_encode layout: 1B L +
+    """Exact Elias-Fano size (batched.ef_encode_rows layout: 1B L +
     ceil(n*L/8) low bytes + ceil((n + (u >> L))/8) unary bytes, with
     u = last value of the SORTED list and L = floor(log2(u // n))
-    clamped at 0 — the integer-division form _ef_low_bits uses)."""
+    clamped at 0 — the integer-division form batched._ef_params_rows
+    uses)."""
     u = f"cast({t}[{n}] as bigint)"
     q = f"({u} // {n})"
     lb = f"(case when {q} >= 1 then length(bin({q})) - 1 else 0 end)"
@@ -156,7 +157,7 @@ def duckdb_size_auto_sorted(t: str, n: str) -> str:
 
 
 def duckdb_size_fsst_nocap(t: str, n: str) -> str:
-    """Exact fsst cost (companions.py FSST layout: 1B k + 2k B table +
+    """Exact fsst cost (batched.py FSST layout: 1B k + 2k B table +
     ceil(m/8)B escape bitmap + 1B/hit + 2B/escape over m = 2n byte pairs)
     VALID when no row has more than 255 distinct pairs with count >= 3 —
     guaranteed by the auto_full queries' 64-pair-alphabet token mapping

@@ -13,10 +13,12 @@ import sys
 
 from pyspark.sql import SparkSession
 
-# the codec kernels byte-view uint32 buffers (codec/core.py v.view(np.uint8),
-# codec/batched.py scatter/gather) and the stored wires are little-endian —
-# SURVEY.md §1.3's portability note made loud.  Every platform this engine
-# targets is LE; a BE host must not silently produce byte-swapped streams.
+# the codec kernels byte-view uint32 buffers (codec/batched.py's uint32
+# stores and loads over byte buffers) and the stored wires are little-endian
+# — SURVEY.md §1.3's portability note made loud.  The package __init__
+# imports this module, so the guard runs on every import of the package.
+# Every platform this engine targets is LE; a BE host must not silently
+# produce byte-swapped streams.
 # explicit raise, not assert: Spark Python workers may run under
 # PYTHONOPTIMIZE, which strips asserts (the same hazard CLAUDE.md pins for
 # kernel guards) — the check must survive optimized interpreters

@@ -1,12 +1,14 @@
-"""Batched multi-row kernels must be byte-identical to the single-array core
-codec, row by row, for every codec and every auto-selection outcome."""
+"""Batched multi-row kernels must be byte-identical to the single-array
+scalar oracle (tests/scalar_oracle), row by row, for every codec and every
+auto-selection outcome."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from streamvbyte_spark.codec import batched, core, select
+from scalar_oracle import core, select
+from streamvbyte_spark.codec import batched
 
 RNG = np.random.default_rng(99)
 
@@ -80,7 +82,7 @@ def test_fsst_cost_vectorized_exact():
     """_fsst_costs must equal companions.fsst_cost (== len(fsst_encode)) per
     row, including the 255-symbol cap and the (count desc, pair desc) tie
     order that decides WHICH pairs enter a full table."""
-    from streamvbyte_spark.codec import companions
+    from scalar_oracle import companions
     arrays, flat, offsets = make_rows(EDGE_LENGTHS * 2, gen_mixed)
     # a row with > 255 distinct pairs all eligible (cap binds) and a
     # pair-repetition-heavy row (all hits)
@@ -101,7 +103,7 @@ def test_fsst_whole_batch_byte_parity_cap_and_ties():
     on the adversarial shapes: a row whose 255-symbol cap binds among
     EQUAL-count pairs (the tie order decides WHICH pairs enter the table),
     an all-hits row, an all-escapes row, and empty rows."""
-    from streamvbyte_spark.codec import companions
+    from scalar_oracle import companions
     extra = [
         # 400 distinct pairs, every count == 3: cap + tie order bind
         np.repeat(np.arange(400, dtype=np.uint32) * 65537 + 7, 3),
@@ -343,6 +345,29 @@ def test_max_compressed_bytes_rows_matches_core():
     # bound actually holds for worst-case values
     v = np.full(100, 0xFFFFFFFF, dtype=np.uint32)
     assert len(core.encode(v)) <= batched.max_compressed_bytes_rows([100])[0]
+
+
+@pytest.mark.parametrize("delta, name", [(False, "svb_zigzag"),
+                                         (True, "svb_zz_delta")])
+def test_signed_rows_match_oracle_per_row(delta, name):
+    """encode_signed_rows emits the oracle's svb_zigzag / svb_zz_delta bytes
+    per row (prev=0 at each row start), including int32 extremes and empty
+    rows, and decode_signed_rows restores the int32 values."""
+    lengths = EDGE_LENGTHS + [3, 0]
+    arrays = [RNG.integers(-(2 ** 31), 2 ** 31, size=n,
+                           dtype=np.int64).astype(np.int32) for n in lengths]
+    arrays[-2] = np.array([-(2 ** 31), 2 ** 31 - 1, -1], np.int32)
+    flat = np.concatenate(arrays)
+    offsets = np.concatenate([[0], np.cumsum(lengths)]).astype(np.int64)
+    out, ooff = batched.encode_signed_rows(flat, offsets, delta=delta)
+    for i, a in enumerate(arrays):
+        assert out[ooff[i]:ooff[i + 1]].tobytes() == \
+            select.SIGNED_REGISTRY[name].encode(a), i
+    back, boff = batched.decode_signed_rows(
+        out, ooff, np.array(lengths, np.int64), delta=delta)
+    assert back.dtype == np.int32
+    np.testing.assert_array_equal(back, flat)
+    np.testing.assert_array_equal(boff, offsets)
 
 
 def test_truncate_rows_invalidates_all_nonempty():

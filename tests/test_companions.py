@@ -1,8 +1,10 @@
 """Companion codec + auto-selector tests.
 
 Property: for every codec, cost(v) == len(encode(v)) exactly, and
-decode(encode(v), n) == v bit-identically. Selector: winner is argmin size,
-and auto-selected size <= reference streamvbyte size (BASELINE.md criterion).
+decode(encode(v), n) == v bit-identically — for the scalar oracle and for the
+public ``streamvbyte_spark.codecs`` (the shipped batched kernels), whose bytes
+must equal the oracle's. Selector: winner is argmin size, and auto-selected
+size <= reference streamvbyte size (BASELINE.md criterion).
 """
 
 from __future__ import annotations
@@ -10,8 +12,11 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from streamvbyte_spark.codec import companions, core, select
+import streamvbyte_spark
+from scalar_oracle import companions, core, select
+from streamvbyte_spark.codec import batched
 
+REGISTRIES = {"oracle": select.REGISTRY, "codecs": streamvbyte_spark.codecs}
 RNG = np.random.default_rng(7)
 
 
@@ -30,17 +35,36 @@ def families():
     yield "all_max", np.full(100, 0xFFFFFFFF, dtype=np.uint32)
 
 
-@pytest.mark.parametrize("codec_name", list(select.REGISTRY))
-def test_roundtrip_and_exact_cost(codec_name):
-    codec = select.REGISTRY[codec_name]
+@pytest.mark.parametrize(
+    "registry, codec_name",
+    [pytest.param("oracle", n, id=n) for n in select.REGISTRY]
+    + [pytest.param("codecs", n, id=f"codecs-{n}") for n in select.REGISTRY])
+def test_roundtrip_and_exact_cost(registry, codec_name):
+    codec = REGISTRIES[registry][codec_name]
     for fam, v in families():
         if codec_name == "ef":
             v = np.sort(v)  # ef's contract: non-decreasing input only
         buf = codec.encode(v)
+        assert buf == select.REGISTRY[codec_name].encode(v), \
+            f"{registry} {codec_name} bytes differ from the oracle on {fam}"
         assert len(buf) == codec.cost(v), f"{codec_name} cost mismatch on {fam}"
         out = codec.decode(buf, v.size)
         np.testing.assert_array_equal(out, v, err_msg=f"{codec_name} on {fam}")
         assert out.dtype == np.uint32
+
+
+def test_public_codecs_surface():
+    """streamvbyte_spark.codecs holds exactly the shipped codec names, each
+    with the oracle's fields, and rejects non-integer arrays like it."""
+    codecs = streamvbyte_spark.codecs
+    assert set(codecs) == set(batched.CODEC_NAMES) == set(select.REGISTRY)
+    floats = np.array([1.0, 2.5])
+    for name, codec in codecs.items():
+        assert codec.name == name
+        for fn in (codec.encode, codec.cost,
+                   select.REGISTRY[name].encode, select.REGISTRY[name].cost):
+            with pytest.raises(TypeError, match="integer"):
+                fn(floats)
 
 
 def test_selector_picks_argmin_and_beats_reference_size():
@@ -95,7 +119,7 @@ def test_ef_golden_layout():
     byte 0b11110 = 0x1E. high = [1,1,2,3,5]; unary positions high+i =
     [1,2,4,6,9] -> 10 bits 0110101001 (LSB-first) -> bytes 0x56, 0x02."""
     import numpy as np
-    from streamvbyte_spark.codec import companions as C
+    from scalar_oracle import companions as C
     v = np.array([2, 3, 5, 7, 11], np.uint32)
     buf = C.ef_encode(v)
     assert buf == bytes([1, 0x1E, 0x56, 0x02])
@@ -105,7 +129,7 @@ def test_ef_golden_layout():
 
 def test_ef_roundtrip_sweep():
     import numpy as np
-    from streamvbyte_spark.codec import companions as C
+    from scalar_oracle import companions as C
     rng = np.random.default_rng(17)
     for hi in (1, 7, 255, 1 << 16, 1 << 31, 2**32 - 1):
         for n in (0, 1, 2, 3, 7, 64, 500):
@@ -118,13 +142,17 @@ def test_ef_roundtrip_sweep():
 def test_ef_rejects_unsorted():
     import numpy as np
     import pytest
-    from streamvbyte_spark.codec import companions as C
+    from scalar_oracle import companions as C
     from streamvbyte_spark.codec import batched
     bad = np.array([5, 3], np.uint32)
     with pytest.raises(ValueError, match="non-decreasing"):
         C.ef_encode(bad)
     with pytest.raises(ValueError, match="non-decreasing"):
         C.ef_cost(bad)
+    for fn in (streamvbyte_spark.codecs["ef"].encode,
+               streamvbyte_spark.codecs["ef"].cost):
+        with pytest.raises(ValueError, match="non-decreasing"):
+            fn(bad)
     off = np.array([0, 2], np.int64)
     with pytest.raises(ValueError, match="non-decreasing"):
         batched.encode_rows(bad, off, codec="ef")
@@ -137,7 +165,8 @@ def test_ef_batched_byte_identical_to_core():
     bytes per row, and row_costs must equal len(encode) (the repo-wide
     codec invariants), across mixed magnitudes and empty rows."""
     import numpy as np
-    from streamvbyte_spark.codec import batched, select
+    from scalar_oracle import select
+    from streamvbyte_spark.codec import batched
     rng = np.random.default_rng(23)
     rows = [np.sort(rng.integers(0, rng.choice([40, 1 << 14, 1 << 31]),
                                  rng.integers(0, 90)).astype(np.uint32))

@@ -8,7 +8,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
-from streamvbyte_spark.codec import batched, core, select
+from scalar_oracle import core, select
+from streamvbyte_spark.codec import batched
 
 u32_arrays = arrays(np.uint32, st.integers(0, 300),
                     elements=st.integers(0, 2**32 - 1))
@@ -127,7 +128,7 @@ def test_prefix_decode_equals_slice(rows, k):
 @settings(max_examples=100, deadline=None)
 @given(row_batches)
 def test_fsst_vector_cost_matches_scalar(rows):
-    from streamvbyte_spark.codec import companions
+    from scalar_oracle import companions
     flat, offsets = _flatten(rows)
     got = batched._fsst_costs(flat, offsets)
     for i, r in enumerate(rows):

@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from streamvbyte_spark.codec import core
+from scalar_oracle import core
 from streamvbyte_spark.operators import decode_table, encode_table, verify_roundtrip
 from streamvbyte_spark.operators.chunking import (
     chunk_tokens, decode_chunked_delta, encode_chunked_delta, reassemble)

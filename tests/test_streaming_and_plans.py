@@ -102,7 +102,7 @@ def test_stateful_delta_chain_across_microbatches(spark):
     """Chunks of the same doc arriving in different micro-batches must encode
     into one continuous delta chain (prev carried in streaming state)."""
     import numpy as np
-    from streamvbyte_spark.codec import core
+    from scalar_oracle import core
     from streamvbyte_spark.streaming.stateful_delta import stateful_delta_encode
 
     tmp = tempfile.mkdtemp(prefix="svb_state_")
@@ -320,7 +320,7 @@ def test_stateful_delta_same_batch_redelivery(spark):
     """At-least-once delivery can repeat a chunk WITHIN one micro-batch;
     first occurrence wins, the copy is dropped, the chain stays intact."""
     import numpy as np
-    from streamvbyte_spark.codec import core
+    from scalar_oracle import core
     from streamvbyte_spark.streaming.stateful_delta import stateful_delta_encode
 
     tmp = tempfile.mkdtemp(prefix="svb_state_dup_")
