@@ -22,32 +22,33 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType, LongType
+
+from ..arrow_rows import list_flat
 
 QSCALE = 10000
 EMB_DIM = 64
 
 
-def _quantize(ser: pd.Series) -> np.ndarray:
-    """Series of float arrays -> 2D int64 of quantized values.
-
-    One ``pa.array`` conversion + reshape via the shared text_udfs
-    extraction (Arrow C++ walk, loud NULL rejection) instead of a per-row
-    ``np.asarray`` list comprehension + np.stack (r4 verdict item 4).
-    Ragged rows are rejected — every similarity query is defined over
-    fixed EMB_DIM embeddings."""
-    if not len(ser):
-        return np.zeros((0, EMB_DIM), dtype=np.int64)
-    import pyarrow as pa
-
-    from .text_udfs import series_to_flat
-    vals, off = series_to_flat(ser, pa.float64())
+def _quantized(col: pa.Array) -> np.ndarray:
+    """Arrow list column of embeddings -> 2D int64 of quantized values
+    (list_flat rejects NULL rows and elements loudly).  Ragged rows are
+    rejected — every similarity query is defined over fixed EMB_DIM
+    embeddings."""
+    vals, off = list_flat(col)
     if np.any(np.diff(off) != EMB_DIM):
         raise ValueError(f"embedding dimension != {EMB_DIM}")
-    m = vals.reshape(-1, EMB_DIM)
-    return np.floor(m * QSCALE).astype(np.int64)
+    return np.floor(vals.astype(np.float64) * QSCALE).astype(np.int64) \
+        .reshape(-1, EMB_DIM)
+
+
+def _quantize(ser: pd.Series) -> np.ndarray:
+    """Series of float arrays (a pandas UDF's array column) -> 2D int64 of
+    quantized values, through ONE ``pa.array`` conversion."""
+    return _quantized(pa.array(ser, pa.list_(pa.float64())))
 
 
 def _planes(first: int, count: int) -> np.ndarray:
@@ -117,7 +118,7 @@ def ann_exact_local_topk(cands, q_ids: np.ndarray, q_quant: np.ndarray,
     (q_ids int64[Q], q_quant int64[Q, EMB_DIM] — quantized like
     emb_dot_q), self-pairs (cid == qid) excluded.
 
-    Replaces the r10 plan's BroadcastNestedLoopJoin + per-pair pandas-UDF
+    Replaces the earlier plan's BroadcastNestedLoopJoin + per-pair pandas-UDF
     dot, which shipped BOTH 64-float embeddings per (query, candidate)
     pair through the join and an Arrow crossing (~200 MB at sf1.0,
     measured 4.2-4.8 s): here each candidate crosses once, all Q dots come
@@ -148,7 +149,6 @@ def ann_exact_local_topk(cands, q_ids: np.ndarray, q_quant: np.ndarray,
                   if cosine else "qid long, cid long, dot long")
 
     def run(batches):
-        import pyarrow as pa
         per_q: list[list[tuple]] = [[] for _ in range(Q)]
 
         def select_local(j, cid, dot, nb):
@@ -174,16 +174,7 @@ def ann_exact_local_topk(cands, q_ids: np.ndarray, q_quant: np.ndarray,
             idx = {n: batch.schema.get_field_index(n)
                    for n in ("vec_id", "embedding")}
             cid = np.asarray(batch.column(idx["vec_id"]), dtype=np.int64)
-            col = batch.column(idx["embedding"])
-            if col.null_count or col.values.null_count:
-                raise ValueError("NULL embedding in ANN input")
-            off = np.asarray(col.offsets, dtype=np.int64)
-            base = off[0]
-            flat = np.asarray(col.values, dtype=np.float64)[base:off[-1]]
-            if np.any(np.diff(off - base) != EMB_DIM):
-                raise ValueError(f"embedding dimension != {EMB_DIM}")
-            C = np.floor(flat * QSCALE).astype(np.int64) \
-                .reshape(-1, EMB_DIM)
+            C = _quantized(batch.column(idx["embedding"]))
             nb = np.einsum("ij,ij->i", C, C)
             mxc = int(np.abs(C).max()) if C.size else 0
             use_blas = mxc > 0 and mxq > 0 and \
@@ -234,7 +225,7 @@ def neardup_local_topk(banded, k: int = 50,
     yields — so the caller needs no norm join at all).
 
     This is the neardup candidate generator restructured per the shuffle-
-    fewer-bytes rule (optimization guide §2.3/§8): the r10 plan equi-joined
+    fewer-bytes rule (optimization guide §2.3/§8): the earlier plan equi-joined
     the band table with itself and then joined each of the ~n^2/256-per-band
     candidate PAIRS back to the embedding table twice, shipping 2 x 64
     floats per pair through the join exchanges and one Arrow crossing
@@ -250,7 +241,7 @@ def neardup_local_topk(banded, k: int = 50,
     so p survives every local top-k — the union of local top-k sets is a
     superset of the global top-k.  Duplicates of a pair (co-bucketed in
     several bands) carry identical dots; the caller dedups globally before
-    its ranking limit, exactly as the r10 `group by` did.
+    its ranking limit, exactly as the earlier `group by` did.
 
     Exactness of the BLAS path: products and partial sums of quantized
     int64 components are exact in float64 whenever 64 * max|q|^2 < 2^53
@@ -269,7 +260,6 @@ def neardup_local_topk(banded, k: int = 50,
             .repartition(fanout, "band_id", "bucket"))
 
     def run(batches):
-        import pyarrow as pa
         acc: list[tuple] = []   # (id_a, id_b, dot, na, nb) int64 rows
         acc_n = 0
         thresh = None   # k-th best dot seen so far (inclusive admit bound)
@@ -335,17 +325,7 @@ def neardup_local_topk(banded, k: int = 50,
                                       dtype=np.int64))
             vids_l.append(np.asarray(batch.column(idx["vec_id"]),
                                      dtype=np.int64))
-            col = batch.column(idx["embedding"])
-            if col.null_count or col.values.null_count:
-                raise ValueError("NULL embedding or NULL element in "
-                                 "neardup input")
-            off = np.asarray(col.offsets, dtype=np.int64)
-            base = off[0]
-            flat = np.asarray(col.values, dtype=np.float64)[base:off[-1]]
-            if np.any(np.diff(off - base) != EMB_DIM):
-                raise ValueError(f"embedding dimension != {EMB_DIM}")
-            qs_l.append(np.floor(flat * QSCALE).astype(np.int64)
-                        .reshape(-1, EMB_DIM))
+            qs_l.append(_quantized(batch.column(idx["embedding"])))
         if bands_l:
             band = np.concatenate(bands_l)
             buck = np.concatenate(bucks_l)

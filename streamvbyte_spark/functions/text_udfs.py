@@ -27,6 +27,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+from ..arrow_rows import binary_flat, list_flat
 # pipeline_sql is the single source of truth for the constants (the DuckDB
 # oracle renders the same numbers as SQL text)
 from .pipeline_sql import MINHASH_P as SIMHASH_P
@@ -68,26 +69,9 @@ def simhash_batch(lens: np.ndarray, flat: np.ndarray) -> np.ndarray:
     return out
 
 
-def series_to_flat(ser: pd.Series, dtype=None):
-    """pandas object Series of numeric sequences (what a pandas UDF receives
-    for an array column) -> (flat values, int64[R+1] offsets) through ONE
-    ``pa.array`` conversion — the per-row walk happens in Arrow C++, not a
-    Python ``np.asarray`` list comprehension per row (r4 verdict item 4).
-    NULL rows AND null elements inside a row are rejected loudly: an
-    element null would otherwise surface as a float64 flat with NaN and a
-    silently-wrong fold (the replaced per-row np.asarray raised)."""
-    col = pa.array(ser, type=pa.list_(dtype or pa.int64()))
-    if col.null_count or col.values.null_count:
-        raise ValueError("NULL array or NULL element in UDF input; "
-                         "filter or coalesce first")
-    off = np.asarray(col.offsets, dtype=np.int64)
-    base = off[0]
-    return np.asarray(col.values)[base:off[-1]], off - base
-
-
 @pandas_udf(LongType())
 def doc_simhash(tokens: pd.Series) -> pd.Series:
-    flat, offsets = series_to_flat(tokens)
+    flat, offsets = list_flat(pa.array(tokens, pa.list_(pa.int64())))
     return pd.Series(simhash_batch(np.diff(offsets), flat))
 
 
@@ -186,7 +170,7 @@ def doc_fingerprint(tokens: pd.Series) -> pd.Series:
     reassembly) where no decode kernel exists to fuse the fold into; decode
     paths use the kernels' fingerprint=True mode instead."""
     from ..codec.batched import fingerprint_rows
-    flat, offsets = series_to_flat(tokens)
+    flat, offsets = list_flat(pa.array(tokens, pa.list_(pa.int64())))
     return pd.Series(fingerprint_rows(flat, offsets))
 
 
@@ -196,14 +180,11 @@ def _texts_to_tokens(text: pd.Series):
     NULL text raises loudly: the SQL tokenizer turns NULL text into NULL
     tokens (no defined fold), while a silent null-as-empty here would emit
     token [0] and diverge from the oracles."""
-    import pyarrow as pa
-
-    from ..operators.encode import _flat_binary
     col = pa.array(text, pa.string())
     if col.null_count:
         raise ValueError("text column contains NULLs; filter or coalesce "
                          "to '' before the fused tokenizer")
-    data, off = _flat_binary(col.cast(pa.binary()))
+    data, off = binary_flat(col.cast(pa.binary()))
     return tokenize_rows(data, off)
 
 
@@ -235,8 +216,8 @@ def wordstats_batch(texts, marker_sets, distinct: bool) -> dict:
     repeated/leading/trailing spaces keep empty words), dictionary_encode
     for exact distinct-by-string-content, is_in for marker membership.
     Replaces the interpreted per-word filter()/array_distinct HOF lambdas
-    of q_quality_score / q_lang_id (r4 verdict item 8 — the last
-    interpreted per-element lambdas in any registry query's hot stage).
+    of q_quality_score / q_lang_id (the last interpreted per-element
+    lambdas in any registry query's hot stage).
 
     marker_sets: ((out_name, (word, ...)), ...); distinct=False skips the
     sort-based distinct count (lang-ID doesn't need it).

@@ -23,34 +23,30 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (ArrayType, BinaryType, BooleanType, IntegerType,
                                LongType)
 
+from ..arrow_rows import binary_array, binary_flat, list_array, list_flat
 from ..codec import batched
-from .text_udfs import series_to_flat
+
+# pandas hands an array column over as a Series of per-row arrays: ONE
+# pa.array conversion walks them in Arrow C++ (a per-row np.asarray loop
+# was ~10x slower), and list_flat rejects NULL rows and elements loudly
+_INT_LISTS = pa.list_(pa.int64())
 
 
-def _series_to_flat(ser: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    # ONE pa.array conversion (text_udfs.series_to_flat: the per-row walk
-    # happens in Arrow C++, element NULLs rejected loudly — a per-row
-    # np.asarray loop was both ~10x slower and silently NaN-poisoned by
-    # element nulls; CLAUDE.md rule, r6 verdict item 6)
-    flat, offsets = series_to_flat(ser)
-    return flat.astype(np.uint32), offsets
-
-
-def _enc_series_to_flat(ser: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    from ..operators.encode import _flat_binary
+def _encoded_flat(ser: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    # binary_flat would read a NULL row as an empty stream: reject it here
     col = pa.array(ser, type=pa.binary())
     if col.null_count:
         raise ValueError("NULL encoded value in UDF input; filter first")
-    return _flat_binary(col)
+    return binary_flat(col)
 
 
 def make_encode_udf(codec: str = "svb"):
     @pandas_udf(BinaryType())
     def svb_encode(tokens: pd.Series) -> pd.Series:
-        flat, offsets = _series_to_flat(tokens)
-        out, ooff, _ = batched.encode_rows(flat, offsets, codec=codec)
-        return pd.Series([out[ooff[i]:ooff[i + 1]].tobytes()
-                          for i in range(len(tokens))])
+        flat, offsets = list_flat(pa.array(tokens, _INT_LISTS))
+        out, ooff, _ = batched.encode_rows(flat.astype(np.uint32), offsets,
+                                           codec=codec)
+        return binary_array(out, ooff).to_pandas()
     return svb_encode
 
 
@@ -59,21 +55,12 @@ def make_decode_udf(codec: str = "svb"):
 
     @pandas_udf(ArrayType(IntegerType()))
     def svb_decode(encoded: pd.Series, n_tok: pd.Series) -> pd.Series:
-        enc, eoff = _enc_series_to_flat(encoded)
+        enc, eoff = _encoded_flat(encoded)
         n = n_tok.to_numpy(dtype=np.int64)
         cids = np.full(n.size, cid, dtype=np.int32)
         flat, offsets = batched.decode_rows(enc, eoff, n, cids)
-        signed = flat.view(np.int32)
-        # ndarray VIEWS per row, not .tolist(): Arrow serializes the views
-        # directly, skipping a per-element Python-object materialization
-        return pd.Series([signed[offsets[i]:offsets[i + 1]]
-                          for i in range(n.size)])
+        return list_array(flat.view(np.int32), offsets).to_pandas()
     return svb_decode
-
-
-def _signed_series_to_flat(ser: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    flat, offsets = series_to_flat(ser)  # one pa.array pass, loud on NULLs
-    return flat.astype(np.int32), offsets
 
 
 def make_zigzag_encode_udf(delta: bool = False):
@@ -81,45 +68,44 @@ def make_zigzag_encode_udf(delta: bool = False):
     (reference zigzag API, include/streamvbyte_zigzag.h)."""
     @pandas_udf(BinaryType())
     def zz_encode(tokens: pd.Series) -> pd.Series:
-        flat, offsets = _signed_series_to_flat(tokens)
-        out, ooff = batched.encode_signed_rows(flat, offsets, delta=delta)
-        return pd.Series([out[ooff[i]:ooff[i + 1]].tobytes()
-                          for i in range(len(tokens))])
+        flat, offsets = list_flat(pa.array(tokens, _INT_LISTS))
+        out, ooff = batched.encode_signed_rows(flat.astype(np.int32), offsets,
+                                               delta=delta)
+        return binary_array(out, ooff).to_pandas()
     return zz_encode
 
 
 def make_zigzag_decode_udf(delta: bool = False):
     @pandas_udf(ArrayType(IntegerType()))
     def zz_decode(encoded: pd.Series, n_tok: pd.Series) -> pd.Series:
-        enc, eoff = _enc_series_to_flat(encoded)
+        enc, eoff = _encoded_flat(encoded)
         n = n_tok.to_numpy(dtype=np.int64)
         flat, offsets = batched.decode_signed_rows(enc, eoff, n, delta=delta)
-        return pd.Series([flat[offsets[i]:offsets[i + 1]]
-                          for i in range(n.size)])
+        return list_array(flat, offsets).to_pandas()
     return zz_decode
 
 
 @pandas_udf(LongType())
 def svb_size(tokens: pd.Series) -> pd.Series:
     """streamvbyte_compressedbytes as a column expression."""
-    flat, offsets = _series_to_flat(tokens)
-    costs = batched.row_costs(flat, offsets, ("svb",))[:, 0]
+    flat, offsets = list_flat(pa.array(tokens, _INT_LISTS))
+    costs = batched.row_costs(flat.astype(np.uint32), offsets, ("svb",))[:, 0]
     return pd.Series(costs)
 
 
 @pandas_udf(LongType())
 def auto_size(tokens: pd.Series) -> pd.Series:
     """Cost-model minimum over every vectorized candidate."""
-    flat, offsets = _series_to_flat(tokens)
-    costs = batched.row_costs(flat, offsets, batched.VECTOR_COST_CODECS,
-                              prune=True)
+    flat, offsets = list_flat(pa.array(tokens, _INT_LISTS))
+    costs = batched.row_costs(flat.astype(np.uint32), offsets,
+                              batched.VECTOR_COST_CODECS, prune=True)
     return pd.Series(costs.min(axis=1))
 
 
 @pandas_udf(BooleanType())
 def svb_validate(encoded: pd.Series, n_tok: pd.Series) -> pd.Series:
     """streamvbyte_validate_stream as a column expression."""
-    enc, eoff = _enc_series_to_flat(encoded)
+    enc, eoff = _encoded_flat(encoded)
     ok = batched.validate_rows(enc, eoff, n_tok.to_numpy(dtype=np.int64))
     return pd.Series(ok)
 

@@ -23,6 +23,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..arrow_rows import (binary_array, binary_flat, complete_runs, list_array,
+                          list_flat)
+
 CHUNKED_ENC_SCHEMA = ("doc_id string, chunk_id int, tok_start long, "
                       "n_tok int, prev long, encoded binary, "
                       "out_bytes bigint")
@@ -34,7 +37,7 @@ def chunk_tokens(df: DataFrame, chunk_size: int = 4096) -> DataFrame:
     Shape: posexplode(sequence(0, n_chunks-1)) + a plain-projection slice()
     — every expression is whole-stage-codegen'd.  The previous form built
     per-chunk structs inside a transform() lambda, a CodegenFallback node
-    interpreted per chunk (r3 verdict item 4)."""
+    interpreted per chunk."""
     n_chunks = f"cast(ceil(n_tok / {chunk_size}.0) as int)"
     exploded = (df.where(F.col("n_tok") > 0)
                 .select("doc_id", "tokens",
@@ -73,13 +76,12 @@ def encode_chunked_delta(chunked: DataFrame,
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..codec import batched
-        from .encode import _binary_array, _list_to_flat
         for batch in batches:
-            flat, offsets = _list_to_flat(batch.column(batch.schema.get_field_index("chunk")))
+            flat, offsets = list_flat(batch.column(batch.schema.get_field_index("chunk")))
+            flat = flat.astype(np.int32, copy=False).view(np.uint32)
             prev = np.asarray(batch.column(batch.schema.get_field_index("prev")), dtype=np.int64)
             if codec == "ef":
-                enc, eoff = batched.ef_encode_rows(
-                    np.ascontiguousarray(flat, dtype=np.uint32), offsets)
+                enc, eoff = batched.ef_encode_rows(flat, offsets)
             else:
                 enc, eoff = batched.encode_delta_rows_prev(flat, offsets, prev)
             nr = offsets[1:] - offsets[:-1]
@@ -89,7 +91,7 @@ def encode_chunked_delta(chunked: DataFrame,
                  batch.column(batch.schema.get_field_index("tok_start")),
                  pa.array(nr.astype(np.int32), pa.int32()),
                  pa.array(prev, pa.int64()),
-                 _binary_array(enc, eoff),
+                 binary_array(enc, eoff),
                  pa.array(eoff[1:] - eoff[:-1], pa.int64())],
                 names=["doc_id", "chunk_id", "tok_start", "n_tok", "prev",
                        "encoded", "out_bytes"])
@@ -108,9 +110,8 @@ def decode_chunked_delta(enc_df: DataFrame,
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..codec import batched
-        from .encode import _flat_binary
         for batch in batches:
-            enc, eoff = _flat_binary(
+            enc, eoff = binary_flat(
                 batch.column(batch.schema.get_field_index("encoded")))
             n_toks = np.asarray(batch.column(batch.schema.get_field_index("n_tok")), dtype=np.int64)
             prev = np.asarray(batch.column(batch.schema.get_field_index("prev")), dtype=np.int64)
@@ -119,14 +120,10 @@ def decode_chunked_delta(enc_df: DataFrame,
             else:
                 flat, offsets = batched.decode_delta_rows_prev(
                     enc, eoff, n_toks, prev)
-            from .encode import _i32_offsets
-            tok = pa.ListArray.from_arrays(
-                pa.array(_i32_offsets(offsets), pa.int32()),
-                pa.array(flat.view(np.int32), pa.int32()))
             yield pa.RecordBatch.from_arrays(
                 [batch.column(batch.schema.get_field_index("doc_id")),
                  batch.column(batch.schema.get_field_index("chunk_id")),
-                 tok],
+                 list_array(flat.view(np.int32), offsets)],
                 names=["doc_id", "chunk_id", "chunk"])
 
     return enc_df.mapInArrow(run, "doc_id string, chunk_id int, chunk array<int>")
@@ -151,8 +148,8 @@ def reassemble(decoded_chunks: DataFrame) -> DataFrame:
 # Arrow list columns carry int32 offsets: one RecordBatch's flat token
 # payload must stay below 2^31-1 ELEMENTS.  The fused decoder splits its
 # flush at document boundaries to respect this, so a multi-billion-token
-# Arrow batch no longer raises (r3 verdict item 6); only a SINGLE document
-# beyond the limit is impossible to emit as one array<int> cell.
+# Arrow batch does not raise; only a SINGLE document beyond the limit is
+# impossible to emit as one array<int> cell.
 _ARROW_MAX_FLAT = np.iinfo(np.int32).max
 
 
@@ -166,7 +163,6 @@ def _flush_doc_batches(doc_ids: np.ndarray, flat: np.ndarray,
     flat.  Splits only at document boundaries — a single document larger
     than the limit cannot exist as one array cell (Arrow int32 offsets) and
     raises with the consumer-path alternative named."""
-    from .encode import _i32_offsets
     D = doc_ids.size
     start = 0
     while start < D:
@@ -182,12 +178,10 @@ def _flush_doc_batches(doc_ids: np.ndarray, flat: np.ndarray,
                 "(per-chunk rows) instead of the fused reassembly")
         end = min(end, D)
         sub_off = doc_tok_off[start:end + 1] - base
-        tok = pa.ListArray.from_arrays(
-            pa.array(_i32_offsets(sub_off), pa.int32()),
-            pa.array(flat[base:int(doc_tok_off[end])].view(np.int32),
-                     pa.int32()))
         yield pa.RecordBatch.from_arrays(
-            [pa.array(doc_ids[start:end], pa.string()), tok,
+            [pa.array(doc_ids[start:end], pa.string()),
+             list_array(flat[base:int(doc_tok_off[end])].view(np.int32),
+                        sub_off),
              pa.array((sub_off[1:] - sub_off[:-1]).astype(np.int32),
                       pa.int32())],
             names=["doc_id", "tokens", "n_tok"])
@@ -218,8 +212,9 @@ def decode_reassemble_fused(enc_df: DataFrame,
     partition; one mapInArrow stage then runs the segmented whole-batch
     delta decode (codec.batched.decode_delta_rows_prev) over every complete
     run in an Arrow batch — no per-group Python, no per-row pandas.  A run
-    can straddle Arrow batch boundaries, so the tail run of each batch is
-    carried into the next and flushed at iterator end.  Each chunk decodes
+    can straddle Arrow batch boundaries, so the stage reads its batches
+    through ``arrow_rows.complete_runs``, which carries the open tail run
+    into the next batch and flushes it at iterator end.  Each chunk decodes
     from its stored prev (reference delta contract,
     /root/reference/include/streamvbytedelta.h:17-29) and lands in chunk_id
     order by construction.
@@ -260,38 +255,31 @@ def decode_reassemble_fused(enc_df: DataFrame,
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..codec import batched
-
-        def extract(batch):
-            from .encode import _flat_binary
+        for batch in complete_runs(batches, ("doc_id",)):
             idx = {n: batch.schema.get_field_index(n)
                    for n in ("doc_id", "n_tok", "prev", "encoded")}
             ids = batch.column(idx["doc_id"]).to_numpy(zero_copy_only=False)
             n_toks = np.asarray(batch.column(idx["n_tok"]), dtype=np.int64)
             prev = np.asarray(batch.column(idx["prev"]), dtype=np.int64)
-            enc, eoff = _flat_binary(batch.column(idx["encoded"]))
-            if max_len is None:
-                # kk == n_toks; carry None so merge doesn't concatenate
-                # the same counts twice on the non-truncating hot path
-                return ids, n_toks, prev, enc, eoff, None
-            ts = np.asarray(
-                batch.column(batch.schema.get_field_index("tok_start")),
-                dtype=np.int64)
-            kk = np.minimum(n_toks, max_len - ts)  # >= 1 by the filter
-            return ids, kk, prev, enc, eoff, n_toks
-
-        def decode_runs(ids, kk, prev, enc, eoff, n_toks):
+            enc, eoff = binary_flat(batch.column(idx["encoded"]))
+            # kk: tokens kept per chunk (all of them without max_len)
+            kk = n_toks
+            if max_len is not None:
+                ts = np.asarray(
+                    batch.column(batch.schema.get_field_index("tok_start")),
+                    dtype=np.int64)
+                kk = np.minimum(n_toks, max_len - ts)  # >= 1 by the filter
             if codec == "ef":
-                flat, offs = batched.ef_decode_rows(
-                    enc, eoff, kk if n_toks is None else n_toks)
-                if n_toks is not None:
+                flat, offs = batched.ef_decode_rows(enc, eoff, n_toks)
+                if max_len is not None:
                     # EF has no O(prefix) partial decode like svb's
                     # control-byte layout: the straddling chunk decodes
                     # whole (bounded by chunk_size) and truncates here
                     flat, offs = batched.subset_prefix(flat, offs, kk)
             else:
                 flat, offs = batched.decode_delta_rows_prev(
-                    enc, eoff, kk if n_toks is None else n_toks, prev,
-                    n_values=None if n_toks is None else kk)
+                    enc, eoff, n_toks, prev,
+                    n_values=None if max_len is None else kk)
             starts = np.concatenate(
                 ([0], np.flatnonzero(ids[1:] != ids[:-1]) + 1))
             doc_tok_off = offs[np.concatenate((starts, [ids.size]))]
@@ -302,53 +290,8 @@ def decode_reassemble_fused(enc_df: DataFrame,
                     [pa.array(ids[starts], pa.string()),
                      pa.array(nr, pa.int32()), pa.array(fp, pa.int64())],
                     names=["doc_id", "n_tok", "fingerprint"])
-                return
-            yield from _flush_doc_batches(ids[starts], flat, doc_tok_off)
-
-        # tail run (last doc_id) carried across Arrow batches as a LIST of
-        # segments, concatenated ONCE when the run closes — prepending the
-        # accumulated tail to every incoming batch would copy a K-batch
-        # document's encoded bytes O(K^2) times
-        pend: list[tuple] = []
-
-        def merge(parts):
-            ids = np.concatenate([p[0] for p in parts])
-            kk = np.concatenate([p[1] for p in parts])
-            prev = np.concatenate([p[2] for p in parts])
-            enc = np.concatenate([p[3] for p in parts])
-            offs = [parts[0][4]]
-            for p in parts[1:]:
-                offs.append(p[4][1:] + (offs[-1][-1] - p[4][0]))
-            n_toks = (None if parts[0][5] is None
-                      else np.concatenate([p[5] for p in parts]))
-            return ids, kk, prev, enc, np.concatenate(offs), n_toks
-
-        for batch in batches:
-            if batch.num_rows == 0:
                 continue
-            ids, kk, prev, enc, eoff, n_toks = extract(batch)
-            if pend and pend[-1][0][-1] != ids[0]:
-                yield from decode_runs(*merge(pend))  # run closed at seam
-                pend = []
-            nz = np.flatnonzero(ids != ids[-1])
-            cut = int(nz[-1] + 1) if nz.size else 0
-            if cut:
-                head = (ids[:cut], kk[:cut], prev[:cut],
-                        enc[:eoff[cut]], eoff[:cut + 1],
-                        None if n_toks is None else n_toks[:cut])
-                # pend (one doc) + head decode together: decode_runs splits
-                # on id boundaries, so the carried run and the batch's other
-                # complete docs come out as separate rows
-                if pend:
-                    yield from decode_runs(*merge(pend + [head]))
-                else:
-                    yield from decode_runs(*head)
-                pend = []
-            pend.append((ids[cut:], kk[cut:], prev[cut:],
-                         enc[eoff[cut]:].copy(), eoff[cut:] - eoff[cut],
-                         None if n_toks is None else n_toks[cut:]))
-        if pend and sum(p[0].size for p in pend):
-            yield from decode_runs(*merge(pend))
+            yield from _flush_doc_batches(ids[starts], flat, doc_tok_off)
 
     return part.mapInArrow(
         run, "doc_id string, n_tok int, fingerprint bigint" if fingerprint

@@ -26,6 +26,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..arrow_rows import binary_array, binary_flat, list_array, list_flat
 from ..codec import batched
 
 ENCODED_SCHEMA = (
@@ -35,62 +36,6 @@ ENCODED_SCHEMA = (
 )
 DECODED_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 DECODED_FP_SCHEMA = "doc_id string, n_tok int, source string, fingerprint bigint"
-
-
-def _list_to_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """Zero-copy (values, offsets) from an Arrow list array, slice-safe.
-
-    Null token arrays are rejected explicitly: a null row has no defined
-    byte-identical round-trip (the reference API has no null notion either —
-    callers must filter or coalesce first)."""
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    if col.null_count:
-        raise ValueError("tokens column contains NULL arrays; "
-                         "filter or coalesce to empty arrays before encoding")
-    off = np.asarray(col.offsets, dtype=np.int64)
-    vals = np.asarray(col.values, dtype=np.int32)
-    base = off[0]
-    return vals[base:off[-1]].view(np.uint32), off - base
-
-
-def _flat_binary(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """Zero-copy (flat uint8 values, int64 offsets) of an Arrow binary
-    array, slice-safe: rebases the slice's offset window so offsets[0] == 0.
-    THE canonical extraction — decode_table, decode_table_prefix, the
-    chunked decoders, the validate query, and multimodal payload readers all
-    share it (an Arrow-layout fix must land in exactly one place)."""
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    bufs = col.buffers()
-    off = np.frombuffer(bufs[1], dtype=np.int32)[
-        col.offset:col.offset + len(col) + 1].astype(np.int64)
-    data = np.frombuffer(bufs[2] or b"", dtype=np.uint8)
-    base = off[0]
-    return data[base:off[-1]], off - base
-
-
-def _i32_offsets(offsets: np.ndarray) -> np.ndarray:
-    """int64 -> int32 Arrow offsets with an overflow guard: an Arrow batch
-    whose flat payload exceeds 2^31-1 bytes/elements would otherwise WRAP
-    silently and corrupt the column (maxRecordsPerBatch bounds rows, not
-    bytes — very long rows can still blow the 2 GiB offset budget)."""
-    offsets = np.asarray(offsets)
-    if offsets.size and int(offsets[-1]) > np.iinfo(np.int32).max:
-        raise ValueError(
-            f"Arrow batch payload {int(offsets[-1])} exceeds int32 offsets "
-            "(2^31-1); lower spark.sql.execution.arrow.maxRecordsPerBatch")
-    return np.ascontiguousarray(offsets, dtype=np.int32)
-
-
-def _binary_array(data: np.ndarray, offsets: np.ndarray) -> pa.Array:
-    """Zero-copy Arrow binary array from flat bytes + int64 offsets
-    (py_buffer wraps the NumPy buffers directly — no serialization copy)."""
-    off32 = _i32_offsets(offsets)
-    return pa.Array.from_buffers(
-        pa.binary(), len(off32) - 1,
-        [None, pa.py_buffer(off32), pa.py_buffer(np.ascontiguousarray(data))],
-    )
 
 
 def encode_table(df: DataFrame, codec: str = "auto",
@@ -115,7 +60,8 @@ def encode_table(df: DataFrame, codec: str = "auto",
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            flat, offsets = _list_to_flat(batch.column(batch.schema.get_field_index("tokens")))
+            flat, offsets = list_flat(batch.column(batch.schema.get_field_index("tokens")))
+            flat = flat.astype(np.int32, copy=False).view(np.uint32)
             if flat_transform is not None:
                 flat = flat_transform(flat)
             out, ooff, cids = batched.encode_rows(flat, offsets, codec=codec,
@@ -137,7 +83,7 @@ def encode_table(df: DataFrame, codec: str = "auto",
                     batch.column(batch.schema.get_field_index("source")),
                     pa.array(nr.astype(np.int32), pa.int32()),
                     names,
-                    _binary_array(out, ooff),
+                    binary_array(out, ooff),
                     pa.array(4 * nr, pa.int64()),
                     pa.array(ooff[1:] - ooff[:-1], pa.int64()),
                     pa.array(csum, pa.int64()),
@@ -173,8 +119,9 @@ def size_table(df: DataFrame, codec: str = "auto",
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            flat, offsets = _list_to_flat(
+            flat, offsets = list_flat(
                 batch.column(batch.schema.get_field_index("tokens")))
+            flat = flat.astype(np.int32, copy=False).view(np.uint32)
             if flat_transform is not None:
                 flat = flat_transform(flat)
             if codec == "auto_sorted":
@@ -211,7 +158,7 @@ def decode_table(enc_df: DataFrame, verify_checksum: bool = True,
         for batch in batches:
             cols = {n: batch.schema.get_field_index(n) for n in
                     ("doc_id", "source", "n_tok", "codec", "encoded", "checksum")}
-            enc, eoff = _flat_binary(batch.column(cols["encoded"]))
+            enc, eoff = binary_flat(batch.column(cols["encoded"]))
             n_toks = np.asarray(batch.column(cols["n_tok"]), dtype=np.int64)
             names = batch.column(cols["codec"]).to_pylist()
             cids = np.array([batched.CODEC_ID[n] for n in names], dtype=np.int32)
@@ -233,14 +180,10 @@ def decode_table(enc_df: DataFrame, verify_checksum: bool = True,
                     names=["doc_id", "n_tok", "source", "fingerprint"],
                 )
                 continue
-            tok = pa.ListArray.from_arrays(
-                pa.array(_i32_offsets(offsets), pa.int32()),
-                pa.array(flat.view(np.int32), pa.int32()),
-            )
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column(cols["doc_id"]),
-                    tok,
+                    list_array(flat.view(np.int32), offsets),
                     pa.array(n_toks.astype(np.int32), pa.int32()),
                     batch.column(cols["source"]),
                 ],
@@ -265,7 +208,7 @@ def decode_table_prefix(enc_df: DataFrame, max_len: int,
         for batch in batches:
             cols = {n: batch.schema.get_field_index(n) for n in
                     ("doc_id", "source", "n_tok", "codec", "encoded")}
-            enc, eoff = _flat_binary(batch.column(cols["encoded"]))
+            enc, eoff = binary_flat(batch.column(cols["encoded"]))
             n_toks = np.asarray(batch.column(cols["n_tok"]), dtype=np.int64)
             names = batch.column(cols["codec"]).to_pylist()
             cids = np.array([batched.CODEC_ID[n] for n in names], dtype=np.int32)
@@ -280,12 +223,9 @@ def decode_table_prefix(enc_df: DataFrame, max_len: int,
                     names=["doc_id", "n_tok", "source", "fingerprint"],
                 )
                 continue
-            tok = pa.ListArray.from_arrays(
-                pa.array(_i32_offsets(offsets), pa.int32()),
-                pa.array(flat.view(np.int32), pa.int32()),
-            )
             yield pa.RecordBatch.from_arrays(
-                [batch.column(cols["doc_id"]), tok,
+                [batch.column(cols["doc_id"]),
+                 list_array(flat.view(np.int32), offsets),
                  pa.array(nr, pa.int32()), batch.column(cols["source"])],
                 names=["doc_id", "tokens", "n_tok", "source"],
             )

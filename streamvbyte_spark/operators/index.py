@@ -44,10 +44,10 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..arrow_rows import binary_array, binary_flat, list_array, list_flat
 from ..codec import batched
 from ..functions.pipeline_sql import fanout_scan
 from .chunking import encode_chunked_delta
-from .encode import _binary_array, _flat_binary, _i32_offsets, _list_to_flat
 
 # chunk span in doc-id space: bounds every chunk row to <= span postings.
 # Gate scale (500-5000 docs) uses a small span so multi-chunk terms exist;
@@ -102,7 +102,7 @@ def encode_wire(kind: str, streams: dict) -> tuple[list, np.ndarray]:
         flat, offsets = streams[col]
         enc, eoff, _ = batched.encode_rows(flat, offsets, codec)
         cols[cnt] = pa.array(np.diff(offsets).astype(np.int32), pa.int32())
-        cols[col] = _binary_array(enc, eoff)
+        cols[col] = binary_array(enc, eoff)
         out_bytes = out_bytes + np.diff(eoff)
     return [cols[c] for c in wire_columns(kind)], out_bytes
 
@@ -122,7 +122,7 @@ def decode_wire(kind: str, src, streams=None, suffix: str = "") -> list:
         codec, cnt = spec[col]
         n = np.asarray(src.column(src.schema.get_field_index(cnt + suffix)),
                        dtype=np.int64)
-        enc, eoff = _flat_binary(
+        enc, eoff = binary_flat(
             src.column(src.schema.get_field_index(col + suffix)))
         out.append(batched.decode_rows(
             enc, eoff, n, np.full(n.size, batched.CODEC_ID[codec], np.int32)))
@@ -274,8 +274,9 @@ def build_index_tf_chunked(docs: DataFrame,
     def streams(batch):
         # run-length the sorted duplicated dids: starts mark distinct
         # (row, did) pairs; run length = that doc's tf for the term
-        dids, tfs, doff = runlength_dids(*_list_to_flat(
-            batch.column(batch.schema.get_field_index("raw"))))
+        flat, offsets = list_flat(
+            batch.column(batch.schema.get_field_index("raw")))
+        dids, tfs, doff = runlength_dids(flat.view(np.uint32), offsets)
         return {"enc_dids": (dids, doff), "enc_tfs": (tfs, doff)}
 
     return _encode_chunks(chunks, "tf", streams)
@@ -305,13 +306,13 @@ def build_index_pos_chunked(docs: DataFrame,
                       F.col("occ.pos").cast("array<int>").alias("poss")))
 
     def streams(batch):
-        flat, offsets = _list_to_flat(
+        flat, offsets = list_flat(
             batch.column(batch.schema.get_field_index("dids_raw")))
-        poss, _ = _list_to_flat(
+        poss, _ = list_flat(
             batch.column(batch.schema.get_field_index("poss")))
-        dids, tfs, doff = runlength_dids(flat, offsets)
+        dids, tfs, doff = runlength_dids(flat.view(np.uint32), offsets)
         return {"enc_dids": (dids, doff), "enc_tfs": (tfs, doff),
-                "enc_pos": (poss, offsets)}
+                "enc_pos": (poss.view(np.uint32), offsets)}
 
     return _encode_chunks(chunks, "pos", streams)
 
@@ -432,13 +433,10 @@ def decode_index_tf(enc_index: DataFrame) -> DataFrame:
     def run(batches):
         for batch in batches:
             (dids, doff), (tfs, _) = decode_wire("tf", batch)
-            o32 = pa.array(_i32_offsets(doff), pa.int32())
             yield pa.RecordBatch.from_arrays(
                 [batch.column(batch.schema.get_field_index("doc_id")),
-                 pa.ListArray.from_arrays(o32, pa.array(dids.view(np.int32),
-                                                        pa.int32())),
-                 pa.ListArray.from_arrays(o32, pa.array(tfs.view(np.int32),
-                                                        pa.int32()))],
+                 list_array(dids.view(np.int32), doff),
+                 list_array(tfs.view(np.int32), doff)],
                 names=["term", "dids", "tfs"])
 
     lists = enc_index.mapInArrow(

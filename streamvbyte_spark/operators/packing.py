@@ -28,9 +28,10 @@ Pipeline (three mapInArrow stages, two token-bearing shuffles):
    partition of the doc's token range, so the segment offsets are just
    cut points into the decoded flat vector) -> re-encode each segment;
 4. repartition on (source, pack_id) + in-partition sort, then one
-   segmented mapInArrow decode+concat+fingerprint per pack run (the
-   decode_reassemble_fused pattern with a composite run key; tail runs
-   carried across Arrow batch boundaries).
+   segmented mapInArrow decode+concat+fingerprint per pack run; the stage
+   reads its batches through ``arrow_rows.complete_runs`` keyed on
+   (source, pack_id), which carries a pack run across Arrow batch
+   boundaries.
 
 A pack is <= cap tokens, so per-run state is tiny and the 2 GiB Arrow
 flush concerns of whole-document reassembly don't apply.
@@ -45,8 +46,9 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..arrow_rows import (binary_array, binary_flat, complete_runs, list_array,
+                          list_flat)
 from ..codec import batched
-from .encode import _binary_array, _flat_binary, _list_to_flat
 from .staging import materialize
 
 # doc_id-range bucket width shared with the SQL pack queries
@@ -100,13 +102,14 @@ def _encode_docs(tok: DataFrame, codec: str,
                 continue
             idx = {n: batch.schema.get_field_index(n)
                    for n in ("doc_id", "source", "tokens", "n_tok") + carry}
-            flat, off = _list_to_flat(batch.column(idx["tokens"]))
+            flat, off = list_flat(batch.column(idx["tokens"]))
+            flat = flat.astype(np.int32, copy=False).view(np.uint32)
             out, ooff, cids = batched.encode_rows(flat, off, codec=codec,
                                                   candidates=candidates)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(idx["doc_id"]), batch.column(idx["source"]),
                  batch.column(idx["n_tok"]), pa.array(cids, pa.int32()),
-                 _binary_array(out, ooff)]
+                 binary_array(out, ooff)]
                 + [batch.column(idx[c]) for c in carry],
                 names=["doc_id", "source", "n_tok", "codec", "encoded"]
                 + list(carry))
@@ -131,7 +134,7 @@ def _slice_segments(cum: DataFrame, cap: int, codec: str,
                 continue
             idx = {n: batch.schema.get_field_index(n)
                    for n in ("source", "st", "n_tok", "codec", "encoded")}
-            enc, eoff = _flat_binary(batch.column(idx["encoded"]))
+            enc, eoff = binary_flat(batch.column(idx["encoded"]))
             n_toks = np.asarray(batch.column(idx["n_tok"]), dtype=np.int64)
             st = np.asarray(batch.column(idx["st"]), dtype=np.int64)
             cids = np.asarray(batch.column(idx["codec"]), dtype=np.int32)
@@ -164,7 +167,7 @@ def _slice_segments(cum: DataFrame, cap: int, codec: str,
                  pa.array(seg_st, pa.int64()),
                  pa.array(n_seg.astype(np.int32), pa.int32()),
                  pa.array(seg_cids, pa.int32()),
-                 _binary_array(out, ooff)],
+                 binary_array(out, ooff)],
                 names=["source", "pack_id", "seg_st", "n_seg", "codec",
                        "encoded"])
 
@@ -220,7 +223,7 @@ def pack_encoded_rows(enc: DataFrame, cap: int = PACK_CAP,
     Entry point for pipelines that gate/filter encoded rows upstream (the
     curated composite runs its md5 dedup rank window + contamination
     anti-join over encoded rows, then packs the winners here — no raw-token
-    shuffle anywhere in the composite; r6 verdict item 2)."""
+    shuffle anywhere in the composite)."""
     if emit not in ("fingerprint", "encoded"):
         # a typo'd mode would silently fall back to fingerprint output and
         # only fail much later (decode_packs missing codec/checksum cols)
@@ -238,7 +241,7 @@ def pack_encoded_rows(enc: DataFrame, cap: int = PACK_CAP,
            .repartition(fanout, "source", "bkt"))
     w1 = (Window.partitionBy("source", "bkt").orderBy("okey")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    # project BEFORE the checkpoint (r11): doc_id and okey are dead after
+    # project BEFORE the checkpoint: doc_id and okey are dead after
     # the window ordering — dropping them shrinks the materialized blocks
     # (okey is a per-row string for string-id corpora)
     lvl = (enc.withColumn("cum_local",
@@ -274,34 +277,15 @@ def pack_encoded_rows(enc: DataFrame, cap: int = PACK_CAP,
             .sortWithinPartitions("source", "pack_id", "seg_st"))
 
     def asm(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # tail run (last (source, pack_id)) carried across Arrow batches as
-        # a list of slabs, concatenated once when the run closes — same
-        # O(K) policy as chunking.decode_reassemble_fused
-        pend: list[tuple] = []
-
-        def extract(batch):
+        for batch in complete_runs(batches, ("source", "pack_id")):
             idx = {n: batch.schema.get_field_index(n)
                    for n in ("source", "pack_id", "n_seg", "codec",
                              "encoded")}
             src = batch.column(idx["source"]).to_numpy(zero_copy_only=False)
             pid = np.asarray(batch.column(idx["pack_id"]), dtype=np.int64)
             nseg = np.asarray(batch.column(idx["n_seg"]), dtype=np.int64)
-            cid = np.asarray(batch.column(idx["codec"]), dtype=np.int32)
-            enc, eoff = _flat_binary(batch.column(idx["encoded"]))
-            return src, pid, nseg, cid, enc, eoff
-
-        def merge(parts):
-            src = np.concatenate([p[0] for p in parts])
-            pid = np.concatenate([p[1] for p in parts])
-            nseg = np.concatenate([p[2] for p in parts])
-            cid = np.concatenate([p[3] for p in parts])
-            enc = np.concatenate([p[4] for p in parts])
-            offs = [parts[0][5]]
-            for p in parts[1:]:
-                offs.append(p[5][1:] + (offs[-1][-1] - p[5][0]))
-            return src, pid, nseg, cid, enc, np.concatenate(offs)
-
-        def flush(src, pid, nseg, cids, enc, eoff):
+            cids = np.asarray(batch.column(idx["codec"]), dtype=np.int32)
+            enc, eoff = binary_flat(batch.column(idx["encoded"]))
             flat, offs = batched.decode_rows(enc, eoff, nseg, cids)
             brk = (src[1:] != src[:-1]) | (pid[1:] != pid[:-1])
             starts = np.concatenate(([0], np.flatnonzero(brk) + 1))
@@ -326,38 +310,14 @@ def pack_encoded_rows(enc: DataFrame, cap: int = PACK_CAP,
                 yield pa.RecordBatch.from_arrays(
                     head + [pa.array(pack_cids, pa.int32()),
                             pa.array(cksum, pa.int64()),
-                            _binary_array(out, ooff)],
+                            binary_array(out, ooff)],
                     names=["source", "pack_id", "n_tok", "codec",
                            "checksum", "encoded"])
-                return
+                continue
             fp = batched.fingerprint_rows(flat.view(np.int32), run_off)
             yield pa.RecordBatch.from_arrays(
                 head + [pa.array(fp, pa.int64())],
                 names=["source", "pack_id", "n_tok", "fingerprint"])
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            src, pid, nseg, cid, enc, eoff = extract(batch)
-            if pend and (pend[-1][0][-1] != src[0]
-                         or pend[-1][1][-1] != pid[0]):
-                yield from flush(*merge(pend))  # run closed at the seam
-                pend = []
-            last = (src != src[-1]) | (pid != pid[-1])
-            nz_ = np.flatnonzero(last)
-            cut = int(nz_[-1] + 1) if nz_.size else 0
-            if cut:
-                head = (src[:cut], pid[:cut], nseg[:cut], cid[:cut],
-                        enc[:eoff[cut]], eoff[:cut + 1])
-                if pend:
-                    yield from flush(*merge(pend + [head]))
-                else:
-                    yield from flush(*head)
-                pend = []
-            pend.append((src[cut:], pid[cut:], nseg[cut:], cid[cut:],
-                         enc[eoff[cut]:].copy(), eoff[cut:] - eoff[cut]))
-        if pend and sum(p[0].size for p in pend):
-            yield from flush(*merge(pend))
 
     if emit == "encoded":
         return part.mapInArrow(
@@ -375,14 +335,13 @@ def decode_packs(packs: DataFrame, verify_checksum: bool = True,
     themselves with fingerprint=False (the dataloader shape)."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .encode import _i32_offsets
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             idx = {n: batch.schema.get_field_index(n)
                    for n in ("source", "pack_id", "n_tok", "codec",
                              "checksum", "encoded")}
-            enc, eoff = _flat_binary(batch.column(idx["encoded"]))
+            enc, eoff = binary_flat(batch.column(idx["encoded"]))
             n_toks = np.asarray(batch.column(idx["n_tok"]), dtype=np.int64)
             cids = np.asarray(batch.column(idx["codec"]), dtype=np.int32)
             flat, offs = batched.decode_rows(enc, eoff, n_toks, cids)
@@ -404,11 +363,8 @@ def decode_packs(packs: DataFrame, verify_checksum: bool = True,
                     head + [pa.array(fp, pa.int64())],
                     names=["source", "pack_id", "n_tok", "fingerprint"])
                 continue
-            tok = pa.ListArray.from_arrays(
-                pa.array(_i32_offsets(offs), pa.int32()),
-                pa.array(flat.view(np.int32), pa.int32()))
             yield pa.RecordBatch.from_arrays(
-                head + [tok],
+                head + [list_array(flat.view(np.int32), offs)],
                 names=["source", "pack_id", "n_tok", "tokens"])
 
     schema = ("source string, pack_id long, n_tok int, fingerprint bigint"

@@ -19,6 +19,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .arrow_rows import binary_flat, list_array, list_flat
 from .codec import batched
 from .functions import pipeline_sql
 from .functions.sqlpair import (
@@ -251,13 +252,8 @@ def _signed_roundtrip(df: DataFrame, id_col: str, delta: bool,
 
     def run(batches):
         for batch in batches:
-            col = batch.column(batch.schema.get_field_index("tokens"))
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            off = np.asarray(col.offsets, dtype=np.int64)
-            vals = np.asarray(col.values, dtype=np.int32)
-            base = off[0]
-            flat, offsets = vals[base:off[-1]], off - base
+            flat, offsets = list_flat(
+                batch.column(batch.schema.get_field_index("tokens")))
             enc, eoff = batched.encode_signed_rows(flat, offsets, delta=delta)
             n_toks = offsets[1:] - offsets[:-1]
             dec_flat, dec_off = batched.decode_signed_rows(enc, eoff, n_toks, delta=delta)
@@ -270,11 +266,9 @@ def _signed_roundtrip(df: DataFrame, id_col: str, delta: bool,
                      pa.array(fp, pa.int64())],
                     names=[id_col, "n_tok", "fingerprint"])
                 continue
-            from .operators.encode import _i32_offsets
-            tok = pa.ListArray.from_arrays(pa.array(_i32_offsets(dec_off), pa.int32()),
-                                           pa.array(dec_flat, pa.int32()))
-            yield pa.RecordBatch.from_arrays([ident, tok],
-                                             names=[id_col, "tokens"])
+            yield pa.RecordBatch.from_arrays(
+                [ident, list_array(dec_flat, dec_off)],
+                names=[id_col, "tokens"])
 
     return df.mapInArrow(
         run, f"{id_col} string, n_tok int, fingerprint bigint" if fingerprint
@@ -312,7 +306,7 @@ def _string_bucket_expr(spark) -> str:
     engines use) + 2 characters.  A FIXED 2-char prefix silently collapses
     uniform-prefix corpora (``doc0000001``, ...) into ONE bucket,
     degenerating the two-level prefix sum back into the single-task funnel
-    it exists to avoid (r4 verdict item 3) — and correctness is unaffected,
+    it exists to avoid — and correctness is unaffected,
     so no gate would ever catch it.  LCP+1 already guarantees >= 2 distinct
     buckets whenever two distinct ids exist (the ids differ at position
     LCP+1); +2 adds fan-out.  Cost: one column-pruned min/max scan of doc_id
@@ -393,7 +387,7 @@ def curated_encoded_rows(spark, sf_dir, qname="curated_pack_encoded"):
     map-side AT THE SCAN (md5/n_tok computed there too), then run the md5
     dedup rank window and the contamination anti-join over
     (doc_id, source, n_tok, codec, encoded, md5) — no shuffle in the
-    composite ever carries a raw token array (r6 verdict item 2: the SQL
+    composite ever carries a raw token array (the SQL
     form's rank window shipped raw tokens, ~40 TB at 10^13 tokens; encoded
     it is ~1.5-2.3 B/token).  Returns (winners_df, original doc_id dtype).
 
@@ -418,7 +412,7 @@ def curated_encoded_rows(spark, sf_dir, qname="curated_pack_encoded"):
     # with_manifest=False: the raw-token manifest stage is only read by
     # curated_pack_sequences' totals side; building it here would add an
     # eagerly-materialized corpus scan + rank window this composite never
-    # consumes (review r7)
+    # consumes
     hits, msrc, _man = _build_curation_stages(spark, sf_dir, qname,
                                               with_manifest=False)
     d = pipeline_sql.Dialect("spark")
@@ -428,7 +422,7 @@ def curated_encoded_rows(spark, sf_dir, qname="curated_pack_encoded"):
     # mapInArrow stage is not one task (pipeline_sql._SCAN_FANOUT note) and
     # is AQE-coalescing-exempt.  The hint sits in an INNER raw-column
     # select: hinted-same-select projections plan BELOW the exchange, so
-    # the tokenize + md5 ran on the scan's single task (r11 plan audit);
+    # the tokenize + md5 ran on the scan's single task (plan audit);
     # the source/length predicates stay below the exchange by predicate
     # pushdown — cheap codegen'd filters that also shrink the shuffle
     pre = spark.sql(
@@ -474,7 +468,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # auto_sorted: EF joins the per-row argmin on rows that are
     # non-decreasing (vectorized eligibility mask) — the selector form that
     # makes the 24%-under-svb_delta postings win reachable as stored bytes
-    # instead of a standalone demo (r6 verdict item 4).  Mixed codec ids
+    # instead of a standalone demo.  Mixed codec ids
     # (ef + standard winners) exercise the grouped decode dispatch.
     q["auto_sorted_roundtrip"] = make_roundtrip("auto_sorted", "postings")
     # FSST-style symbol-table codec: per-row symbol table is not
@@ -524,9 +518,8 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         scheme0124 = codec == "svb0124"
 
         def run(batches):
-            from .operators.encode import _flat_binary
             for batch in batches:
-                ebuf, eoff = _flat_binary(
+                ebuf, eoff = binary_flat(
                     batch.column(batch.schema.get_field_index("encoded")))
                 n_toks = np.asarray(batch.column(batch.schema.get_field_index("n_tok")),
                                     dtype=np.int64)
@@ -774,7 +767,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["png_decode_stats"] = png_decode_stats
 
-    # REAL JPEG decode (r7): each document's bytes become the constant 8x8
+    # REAL JPEG decode: each document's bytes become the constant 8x8
     # block values of a grayscale BASELINE JPEG (all-ones quant table ->
     # constant blocks are lossless: DC = 8*(c-128) exactly, zero AC), and
     # the pure-NumPy decode_jpeg (marker walk + canonical Huffman + batched
@@ -799,7 +792,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["audio_decode_stats"] = audio_decode_stats
 
-    # REAL COMPRESSED audio decode (r7): pairs of document bytes become the
+    # REAL COMPRESSED audio decode: pairs of document bytes become the
     # int16 header predictors of all-zero-nibble IMA ADPCM blocks — a
     # LOSSLESS fixture shape (nibble 0 at step index 0 moves the predictor
     # by step>>3 = 0), so decode_audio's block-vectorized ADPCM state
@@ -990,7 +983,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Elias-Fano chunked postings: a sorted list's chunks are themselves
     # non-decreasing, and EF stores ABSOLUTE values — no prev seed, chunks
     # self-contained — so the same chunk/shuffle/fused-decode machinery
-    # stores the 24%-smaller EF wire (r6 verdict item 4).  Same identity
+    # stores the 24%-smaller EF wire.  Same identity
     # oracle as the delta-chained form.
     def chunked_ef_roundtrip(spark, sf_dir):
         from .operators.chunking import (chunk_tokens, decode_reassemble_fused,
@@ -1333,7 +1326,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     for name in pipeline_sql.PIPELINE_QUERIES:
         q[name] = make_pipeline(name)
 
-    # embedding_neardup, restructured for r11 (optimization guide §2.3/§8 —
+    # embedding_neardup, restructured (optimization guide §2.3/§8 —
     # shuffle lightweight keys, not payloads): the generic SPARK_STAGES form
     # self-joined the band table and then joined every candidate PAIR back
     # to the embedding table twice, so ~n^2/256-per-band pair rows each
@@ -1388,7 +1381,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["embedding_neardup"] = embedding_neardup
 
-    # exact-ANN family, restructured for r11 (same guide §8 rationale as
+    # exact-ANN family, restructured (same guide §8 rationale as
     # embedding_neardup): the SQL form planned a BroadcastNestedLoopJoin
     # (qid != cid) whose every (query, candidate) pair carried BOTH
     # 64-float embeddings into a per-pair pandas-UDF dot (~200 MB Arrow
@@ -1523,7 +1516,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["dedup_components"] = dedup_components
 
-    # clustering over the VERIFIED pairs (r5 verdict item 5's consumer):
+    # clustering over the VERIFIED pairs:
     # banding false-positives can chain unrelated docs into mega-components
     # at corpus scale; clustering the est-Jaccard-filtered edges instead
     # bounds that failure mode.  Oracle: the same recursive CTE over the
@@ -1581,7 +1574,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         kernels (shingle hashing inside the staged decontaminate, cost
         model inside size_table).
 
-        ONE corpus scan for dedup+sizing (r6): the size kernel runs
+        ONE corpus scan for dedup+sizing: the size kernel runs
         map-side in the same scan that computes md5/n_tok (size_table's
         carry columns), the md5 window then shuffles only narrow rows
         (never tokens), and only the decontamination flags join back — the
@@ -1590,7 +1583,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         decon = make_pipeline("decontaminate",
                               owner="curation_pipeline")(spark, sf_dir)
         from pyspark.sql import Window
-        # innermost fanout hint (r11 plan audit): without it the md5 +
+        # innermost fanout hint (plan audit): without it the md5 +
         # tokenize + size kernel all ran on the single-row-group scan task
         tok = spark.sql(
             "select cast(doc_id as string) as doc_id, source, "
@@ -1655,7 +1648,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the PRODUCTION form of the same composite: encode AT THE SCAN, run
     # the curation keep-policy (md5 rank window + contamination anti-join)
     # over the encoded rows, pack the winners — NO shuffle in the whole
-    # composite carries a raw token array (r6 verdict item 2; was: the
+    # composite carries a raw token array (was: the
     # rank window shipped raw tokens, ~40 TB at 10^13).  Shares
     # curated_pack_sequences' oracle — the gate proves the all-encoded
     # plan value-identical to the raw-token SQL algorithm.
@@ -2176,7 +2169,7 @@ def build_oracles() -> dict[str, str]:
         # `order by doc_id` binds the BASE numeric column in DuckDB, not
         # the select-list alias, and numeric-vs-string order diverges
         # whenever an exact-dup group straddles a digit-length boundary
-        # (latent until the r10 sf0.1 cross-engine sweep: ONE md5 twin
+        # (latent until an sf0.1 cross-engine sweep: ONE md5 twin
         # pair flipped a doc between dropped_exact and dropped_neardup)
         "d as (select cast(doc_id as varchar) as doc_id, source, text, "
         " row_number() over (partition by md5(text) "

@@ -21,6 +21,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..arrow_rows import list_array
 from ..functions.sqlpair import spark_tokens_expr
 
 TOKENS_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
@@ -77,12 +78,12 @@ def posting_lists(spark: SparkSession, sf_dir: str,
     the string-key groupBy costs ~1.8x more (A/B at sf0.1: 0.53 s bigint vs
     0.97 s string — string hashing + comparison on the shuffle key), and
     FLAT consumers (encode/size tables are map-only) never reuse the
-    partitioning, so they shouldn't pay for it (r4 verdict item 2)."""
+    partitioning, so they shouldn't pay for it."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     key = F.col("l_partkey").cast("string") if string_key else F.col("l_partkey")
-    # explicit numbered repartition on the GROUP key before the aggregate
-    # (r11, guide §2.4): the groupBy reuses this partitioning (one exchange
-    # either way, plan-verified), but the heavy collect_list now runs wide
+    # explicit numbered repartition on the GROUP key before the aggregate:
+    # the groupBy reuses this partitioning (one exchange either way,
+    # plan-verified), but the heavy collect_list now runs wide
     # on the reduce side instead of as a map-side partial over however few
     # tasks the scan yields (6 row groups here) — partial aggregation wins
     # nothing for collect_list (lists don't combine smaller), so skipping
@@ -141,16 +142,13 @@ def synthetic_tokens(spark: SparkSession, n_docs: int, avg_len: int = 256,
         for batch in batches:
             ids = batch.column("id").to_numpy()
             arrays, sources = _gen_rows(ids, seed, avg_len)
-            from ..operators.encode import _i32_offsets
             lens = np.array([a.size for a in arrays], dtype=np.int64)
             offsets = np.concatenate([[0], np.cumsum(lens)])
             flat = (np.concatenate(arrays) if arrays else np.zeros(0, np.int32))
-            tok = pa.ListArray.from_arrays(pa.array(_i32_offsets(offsets), pa.int32()),
-                                           pa.array(flat, pa.int32()))
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array([f"doc{int(i):010d}" for i in ids], pa.string()),
-                    tok,
+                    list_array(flat, offsets),
                     pa.array(lens, pa.int32()),
                     pa.array(sources, pa.string()),
                 ],
@@ -254,7 +252,7 @@ def tokens_from_csv(spark: SparkSession, path: str) -> DataFrame:
     # reads only n_tok (a manifest/totals branch) never evaluates the
     # tokens expression — an unguarded size(split()) would silently COUNT
     # malformed tokens there, voiding the reader's loud-failure contract
-    # under pruning (advice r6).  When both columns are read the
+    # under pruning.  When both columns are read the
     # interpreted exists() runs twice; this is a one-pass staging reader,
     # not a codec hot path.
     n_tok = F.expr(

@@ -28,8 +28,11 @@ from typing import Iterator, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..arrow_rows import binary_array, list_flat
 
 OUT_SCHEMA = ("doc_id string, chunk_id int, n_tok int, prev long, "
               "encoded binary, out_bytes bigint")
@@ -74,12 +77,9 @@ def _encode_doc_chunks(key: Tuple[str], pdf_iter: Iterator[pd.DataFrame],
         return
 
     pdf = pdf.iloc[np.flatnonzero(fresh)]
-    chunks = [np.asarray(c, dtype=np.int64) for c in pdf["chunk"]]
-    lens = np.array([c.size for c in chunks], dtype=np.int64)
-    offsets = np.zeros(lens.size + 1, dtype=np.int64)
-    np.cumsum(lens, out=offsets[1:])
-    flat = (np.concatenate(chunks).astype(np.uint32) if offsets[-1]
-            else np.zeros(0, dtype=np.uint32))
+    flat, offsets = list_flat(pa.array(pdf["chunk"], pa.list_(pa.int64())))
+    flat = flat.astype(np.uint32)
+    lens = np.diff(offsets)
 
     # per-chunk prev chain: last token of the latest preceding NONEMPTY chunk
     # (empty chunks pass prev through), seeded from streaming state
@@ -101,8 +101,7 @@ def _encode_doc_chunks(key: Tuple[str], pdf_iter: Iterator[pd.DataFrame],
         "chunk_id": new_cids.astype(np.int32),
         "n_tok": lens.astype(np.int32),
         "prev": prev_row,
-        "encoded": [enc[eoff[i]:eoff[i + 1]].tobytes()
-                    for i in range(lens.size)],
+        "encoded": binary_array(enc, eoff).to_pandas(),
         "out_bytes": eoff[1:] - eoff[:-1],
     })
 

@@ -182,7 +182,7 @@ def test_tokenize_rows_equals_python_reference(texts):
     import pyarrow as pa
 
     from streamvbyte_spark.functions.text_udfs import tokenize_rows
-    from streamvbyte_spark.operators.encode import _flat_binary
+    from streamvbyte_spark.arrow_rows import binary_flat
 
     def tok(w):
         cps = [ord(c) for c in w]
@@ -201,7 +201,7 @@ def test_tokenize_rows_equals_python_reference(texts):
         row = [tok(w) for w in t.split(" ")]
         overflow = overflow or any(v > 2**31 - 1 for v in row)
         want.append(row)
-    data, off = _flat_binary(pa.array(texts, pa.string()).cast(pa.binary()))
+    data, off = binary_flat(pa.array(texts, pa.string()).cast(pa.binary()))
     if overflow:
         try:
             tokenize_rows(data, off)

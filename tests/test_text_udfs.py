@@ -101,17 +101,23 @@ def test_wordstats_property_random_corpora():
     run()
 
 
-def test_series_to_flat_rejects_element_null():
-    """A NULL ELEMENT inside a token array must raise — pa.array would
-    otherwise hand back a float64 flat with NaN and the fingerprint fold
-    would silently emit garbage (the replaced per-row np.asarray raised)."""
+def test_list_flat_rejects_element_null():
+    """A NULL ELEMENT inside a token array must raise — the flat would
+    otherwise carry a made-up value and the fingerprint fold would silently
+    emit garbage.  The Series go through the one pa.array conversion the
+    pandas UDFs use."""
     import pandas as pd
+    import pyarrow as pa
     import pytest
+    from streamvbyte_spark.arrow_rows import list_flat
+
+    def flat_of(ser):
+        return list_flat(pa.array(ser, pa.list_(pa.int64())))
     with pytest.raises(ValueError, match="NULL"):
-        T.series_to_flat(pd.Series([[1, None, 3]]))
+        flat_of(pd.Series([[1, None, 3]]))
     with pytest.raises(ValueError, match="NULL"):
-        T.series_to_flat(pd.Series([[1, 2], None]))
-    flat, off = T.series_to_flat(pd.Series([[1, 2], [], [3]]))
+        flat_of(pd.Series([[1, 2], None]))
+    flat, off = flat_of(pd.Series([[1, 2], [], [3]]))
     assert flat.tolist() == [1, 2, 3] and off.tolist() == [0, 2, 2, 3]
 
 
