@@ -44,8 +44,8 @@ def fanout_scan(docs):
 # deterministic MinHash parameters (textbook scheme: h(x) = (a*x + b) mod p)
 # over word-3-gram SHINGLE hashes: shingle sets are near-disjoint between
 # unrelated documents, so 4-row bands are selective (raw token ids over a
-# shared vocabulary made bands collide at 61% of all-pairs in round 1 —
-# effectively a cross join at scale).
+# shared vocabulary make bands collide at 61% of all-pairs — effectively
+# a cross join at scale).
 MINHASH_P = 2147483647
 N_HASHES = 16
 N_BANDS = 4  # -> 4 rows per band; collision prob per band = jaccard^4
@@ -319,7 +319,7 @@ def q_dedup_simhash(d: Dialect) -> str:
     batch from the raw text — the prior SQL form evaluated an interpreted
     transform() tokenizer per word plus 32 separate ``aggregate()`` HOF
     lambdas per document (each a CodegenFallback interpreted pass over the
-    full token array; the r3 verdict's worst remaining hot-path plan).  The
+    full token array, the worst hot-path plan of the family).  The
     DuckDB oracle keeps the tokenizer + 32-term fold, so the equality check
     still proves the fused UDF bit-for-bit."""
     if d.kind == "spark":
@@ -327,8 +327,8 @@ def q_dedup_simhash(d: Dialect) -> str:
         # single-row-group file (see _SCAN_FANOUT note above).  The hint
         # must sit in an INNER select of raw columns: a hint in the SAME
         # select as the UDF plans the exchange ABOVE the projection, so the
-        # UDF still ran on the scan's single task (r11 plan audit — the
-        # whole simhash kernel on 1 of 32 cores at sf1.0)
+        # UDF still runs on the scan's single task (the whole simhash
+        # kernel on 1 of 32 cores at sf1.0)
         return ("select cast(doc_id as string) as doc_id, "
                 "doc_simhash_text(text) as simhash from "
                 f"(select /*+ REPARTITION({_SCAN_FANOUT}, doc_id) */ "
@@ -493,7 +493,7 @@ def q_embedding_neardup(d: Dialect) -> str:
 
     Scale path: NEARDUP_BANDS band tables of sign-bit buckets (8 planes per
     band -> 256 buckets, candidate volume ~ n^2/256 per band instead of the
-    round-1 O(n^2) cross join); candidate pairs come from an EQUI-join on
+    O(n^2) cross join); candidate pairs come from an EQUI-join on
     (band_id, bucket) — one shuffle on a small key, never a cartesian.
     Recall is the standard banding trade-off: a near-dup pair collides in
     at least one band unless it disagrees on some plane of EVERY band.
@@ -543,7 +543,7 @@ def _neardup_final(d: Dialect, e_src: str, bands_src: str) -> str:
     Spark side pre-limits with ``order by ... limit 50`` BEFORE the global
     row_number window: Catalyst plans the limit as TakeOrderedAndProject —
     per-partition top-50 then a 50-row merge — so the single-partition
-    window sees 50 rows instead of every candidate pair (r3 verdict item 7).
+    window sees 50 rows instead of every candidate pair.
     The ordering key (dot desc, id_a, id_b) is a total order, so the limit
     keeps exactly the rows the oracle's unlimited window ranks <= 50."""
     if d.kind == "spark":
@@ -814,7 +814,7 @@ def q_quality_score(d: Dialect) -> str:
         n, stops, distinct = "s.n_words", "s.stops", "s.n_distinct"
         # hint on the INNERMOST raw-column select so the word-stats UDF
         # evaluates ABOVE the exchange (same-select hints leave the UDF on
-        # the scan's single task — r11 plan audit)
+        # the scan's single task)
         return (
             "select doc_id, "
             f"{n} as n_words, "
@@ -861,7 +861,7 @@ def q_lang_id(d: Dialect) -> str:
         f"when {hits['fr']} > 0 then 'fr' else 'unknown' end"
     )
     if d.kind == "spark":
-        # innermost hint: see q_quality_score's r11 plan-audit note
+        # innermost hint: see q_quality_score's hint note
         return (f"select doc_id, {cases} as lang_pred, lang as lang_true "
                 "from (select cast(doc_id as string) as doc_id, lang, "
                 "lang_counts(text) as s from "
@@ -877,7 +877,7 @@ def q_fingerprint(d: Dialect) -> str:
     Spark side: fused text -> fingerprint pandas UDF (doc_fingerprint_text;
     same rationale as q_dedup_simhash); the oracle keeps the SQL fold."""
     if d.kind == "spark":
-        # innermost hint: see q_quality_score's r11 plan-audit note
+        # innermost hint: see q_quality_score's hint note
         return ("select cast(doc_id as string) as doc_id, "
                 "doc_fingerprint_text(text) as fingerprint from "
                 f"(select /*+ REPARTITION({_SCAN_FANOUT}, doc_id) */ "
@@ -934,7 +934,7 @@ def q_event_sessions(d: Dialect) -> str:
         ep = "epoch_us(ts)"
     # Spark: fan the single-row-group events scan out on the WINDOW key so
     # the 4x date_format epoch math runs wide AND the session windows reuse
-    # the exchange (hashpartitioning(user_id) either way — r11 plan audit)
+    # the exchange (hashpartitioning(user_id) either way)
     src = ("events" if d.kind != "spark" else
            f"(select /*+ REPARTITION({_SCAN_FANOUT}, user_id) */ "
            "user_id, event_id, ts from events)")
@@ -993,7 +993,7 @@ def q_token_quantiles(d: Dialect) -> str:
     table.  A per-document ``row_number() over (partition by source order by
     n, doc_id)`` ranks every document of a source in ONE window task — with
     80% of a 2x10^10-doc corpus in one source that task sees ~1.6x10^10 rows
-    (the r4 verdict's scale flaw).  Instead: ``group by source, n`` first
+    (a scale flaw).  Instead: ``group by source, n`` first
     (map-side partial agg; the distinct word-count domain is tiny), then a
     cumulative-count window over that small table, then pick the FIRST value
     whose cumulative count reaches rank r = greatest(1, ceil(p*cnt)).  The
@@ -1105,7 +1105,7 @@ def curated_tok_select(d: Dialect, hits_src: str, msrc: str) -> str:
     must reach the pack stage and text is gone after the scan) — one extra
     token-bearing shuffle over plain pack_sequences; the hits anti-join is
     against the SMALL contaminated set (broadcastable).  The encoded-wire
-    production form (queries.curated_encoded_rows, r7) encodes at the scan
+    production form (queries.curated_encoded_rows) encodes at the scan
     and runs this same gate over the encoded rows instead — this raw-token
     SQL form remains as curated_pack_sequences' algorithm and both
     composites' oracle.
@@ -1158,8 +1158,8 @@ def lcp_prefix_len(lo: str, hi: str) -> int:
     common prefix of the min/max id (== the LCP of ALL ids under
     lexicographic order) + 2 — LCP+1 already guarantees >= 2 distinct
     buckets whenever two distinct ids exist; +2 adds fan-out.  A FIXED
-    prefix length silently collapses uniform-prefix corpora to one bucket
-    (r4 verdict item 3)."""
+    prefix length silently collapses uniform-prefix corpora to one
+    bucket."""
     import os.path as _osp
     return len(_osp.commonprefix([lo or "", hi or ""])) + 2
 
@@ -1224,7 +1224,7 @@ def q_sequence_pack(d: Dialect, bucket_expr: str | None = None,
     pipelines use), and the per-source running sum is a TWO-LEVEL distributed
     prefix sum on the Spark side — sources are few and skewed (80% ``web``),
     so a plain ``sum() over (partition by source order by doc_id)`` funnels
-    most of the corpus through ONE window task (the r3 verdict's scale flaw).
+    most of the corpus through ONE window task (a scale flaw).
     Level 1 windows within (source, bucket) where bucket = doc_id div
     PACK_BUCKET_WIDTH (monotone in doc_id); level 2 computes per-bucket token
     totals (one tiny row per bucket), turns them into per-bucket prefix
@@ -1313,7 +1313,7 @@ def q_pack_sequences(d: Dialect, bucket_expr: str | None = None,
     # takes the query from two corpus scans to one.  tok_select: override
     # the whole corpus SELECT (must yield doc_id, source, tokens, n_tok) —
     # queries.curated_pack_sequences packs a curated subset this way.
-    # Spark: innermost fanout hint (r11 plan audit) — without it the
+    # Spark: innermost fanout hint — without it the
     # tokenizer transform computed below the window's exchange, i.e. on
     # the single-row-group scan task
     src = ("documents" if d.kind != "spark" else
@@ -1414,7 +1414,7 @@ def q_domain_mix_sample(d: Dialect) -> str:
     # flip a strict integer inequality).  The direct products overflow
     # bigint once one source exceeds ~1.4e14 tokens (hv < 65536), which
     # under ANSI mode aborts the query at exactly the corpus sizes this
-    # sampler targets (r8 advice item 4); here hv*th < tok_s and
+    # sampler targets; here hv*th < tok_s and
     # hv*tl < 2^32, exact at any int64-countable corpus.  Both engines
     # truncate integer division toward zero on these non-negatives.
     keep = (f"t.hv * s.th + {d.idiv('(t.hv * s.tl)', '65536')} < s.target")

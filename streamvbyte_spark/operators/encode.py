@@ -144,6 +144,23 @@ def size_table(df: DataFrame, codec: str = "auto",
                          + carry_schema)
 
 
+def _encoded_rows(batch: pa.RecordBatch, cols: dict):
+    """(flat encoded bytes, offsets, n_tok, codec ids) of an encoded batch.
+    A NULL ``encoded`` row raises ValueError naming its doc_id:
+    binary_flat would read it as an empty stream, which is a wrong decode
+    for any n_tok > 0."""
+    col = batch.column(cols["encoded"])
+    if col.null_count:
+        null = col.is_null().to_numpy(zero_copy_only=False)
+        doc = batch.column(cols["doc_id"])[int(np.argmax(null))]
+        raise ValueError(f"NULL encoded stream decoding doc_id={doc}")
+    enc, eoff = binary_flat(col)
+    n_toks = np.asarray(batch.column(cols["n_tok"]), dtype=np.int64)
+    names = batch.column(cols["codec"]).to_pylist()
+    cids = np.array([batched.CODEC_ID[n] for n in names], dtype=np.int32)
+    return enc, eoff, n_toks, cids
+
+
 def decode_table(enc_df: DataFrame, verify_checksum: bool = True,
                  fingerprint: bool = False) -> DataFrame:
     """Encoded table -> token table; bit-identical to the pre-encode input.
@@ -158,10 +175,7 @@ def decode_table(enc_df: DataFrame, verify_checksum: bool = True,
         for batch in batches:
             cols = {n: batch.schema.get_field_index(n) for n in
                     ("doc_id", "source", "n_tok", "codec", "encoded", "checksum")}
-            enc, eoff = binary_flat(batch.column(cols["encoded"]))
-            n_toks = np.asarray(batch.column(cols["n_tok"]), dtype=np.int64)
-            names = batch.column(cols["codec"]).to_pylist()
-            cids = np.array([batched.CODEC_ID[n] for n in names], dtype=np.int32)
+            enc, eoff, n_toks, cids = _encoded_rows(batch, cols)
             flat, offsets = batched.decode_rows(enc, eoff, n_toks, cids)
             if verify_checksum:
                 want = np.asarray(batch.column(cols["checksum"]), dtype=np.int64)
@@ -208,10 +222,7 @@ def decode_table_prefix(enc_df: DataFrame, max_len: int,
         for batch in batches:
             cols = {n: batch.schema.get_field_index(n) for n in
                     ("doc_id", "source", "n_tok", "codec", "encoded")}
-            enc, eoff = binary_flat(batch.column(cols["encoded"]))
-            n_toks = np.asarray(batch.column(cols["n_tok"]), dtype=np.int64)
-            names = batch.column(cols["codec"]).to_pylist()
-            cids = np.array([batched.CODEC_ID[n] for n in names], dtype=np.int32)
+            enc, eoff, n_toks, cids = _encoded_rows(batch, cols)
             flat, offsets = batched.decode_prefix_rows(
                 enc, eoff, n_toks, cids, max_len)
             nr = (offsets[1:] - offsets[:-1]).astype(np.int32)

@@ -31,10 +31,12 @@ Two build shapes:
 
 Serving (``intersect_terms``): filter the encoded chunk table to the probed
 terms (a pushable predicate on the stored index — at scale this prunes to
-~df/span rows read per term), decode those chunks, and equi-join the two
-exploded posting streams on doc id.  The df-ordered probe (decode the RARER
-term first, semi-join the denser one) is the classic refinement; the
-equi-join form here already never materializes either full list as one cell.
+~df/span rows read per term), equi-join the terms' ENCODED chunk rows on
+chunk_id, and let one kernel decode and intersect each co-occupied chunk
+in-lane.  Each serving op is one (chunk pairs, kernel) plan: the ``*_rows``
+form runs the kernel in place and returns distributed ``did`` rows; the
+gate form folds the kernel's dids into one row inside the same task
+(:func:`_gate_scalar`).
 """
 
 from __future__ import annotations
@@ -43,6 +45,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType
 
 from ..arrow_rows import binary_array, binary_flat, list_array, list_flat
 from ..codec import batched
@@ -347,8 +350,11 @@ def _probe_side(enc_index: DataFrame, kind: str, term: str, suffix: str,
     spec = {s[0]: s[2] for s in INDEX_WIRES[kind][1]}
     streams = streams or list(spec)
     cols = dict.fromkeys([spec[s] for s in streams] + list(streams))
-    return enc_index.where(F.col("doc_id") == term).select(
-        "chunk_id", *[F.col(c).alias(c + suffix) for c in cols])
+    # one selectExpr: a per-column F.col(c).alias(...) select costs ~3 py4j
+    # round trips a column (21 ms against 8 ms for a positional side), paid
+    # on every serving request
+    return enc_index.where(F.col("doc_id") == term).selectExpr(
+        "chunk_id", *[f"`{c}` AS `{c}{suffix}`" for c in cols])
 
 
 def phrase_match_rows(enc_index: DataFrame, term_a: str,
@@ -368,10 +374,16 @@ def phrase_match_rows(enc_index: DataFrame, term_a: str,
     Returns the DISTRIBUTED matched-doc rows (``did int``, deduped by
     construction — a did lives in one chunk pair) — the scale consumer's
     form.  The driver-gate scalar is :func:`phrase_match_terms`."""
+    return _did_rows(*_phrase_plan(enc_index, term_a, term_b))
+
+
+def _phrase_plan(enc_index: DataFrame, term_a: str, term_b: str):
+    """(chunk pairs, kernel) of :func:`phrase_match_rows`; the kernel
+    yields each batch's matched dids."""
     pairs = _probe_side(enc_index, "pos", term_a, "_a").join(
         _probe_side(enc_index, "pos", term_b, "_b"), "chunk_id")
 
-    def run(batches):
+    def kernel(batches):
         def side(batch, suffix):
             (dids, doff), (tfs, _), (pos, _) = decode_wire(
                 "pos", batch, suffix=suffix)
@@ -407,13 +419,9 @@ def phrase_match_rows(enc_index: DataFrame, term_a: str,
             hit = np.intersect1d(r_a * stride + p_a + 1,
                                  r_b * stride + p_b, assume_unique=True)
             ranks = np.unique(hit // stride)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array((common[ranks] &
-                           np.int64(0xFFFFFFFF)).astype(np.int32),
-                          pa.int32())],
-                names=["did"])
+            yield (common[ranks] & np.int64(0xFFFFFFFF)).astype(np.int32)
 
-    return pairs.mapInArrow(run, "did int")
+    return pairs, kernel
 
 
 def phrase_match_terms(enc_index: DataFrame, term_a: str,
@@ -422,7 +430,7 @@ def phrase_match_terms(enc_index: DataFrame, term_a: str,
     fingerprint over ascending matched ids) folded from
     :func:`phrase_match_rows` — see :func:`_gate_scalar` for why the fold
     exists and why scale consumers must take the rows form."""
-    return _gate_scalar(phrase_match_rows(enc_index, term_a, term_b),
+    return _gate_scalar(*_phrase_plan(enc_index, term_a, term_b),
                         [term_a, term_b], "n_docs")
 
 
@@ -468,18 +476,39 @@ def _did_stream(enc_index: DataFrame, what: str) -> tuple[str, str, str]:
     return kind, col, cnt
 
 
-def _gate_scalar(rows: DataFrame, terms: list[str],
+def _did_rows(pairs: DataFrame, kernel) -> DataFrame:
+    """The distributed ``did int`` rows of a serving plan: ``kernel`` runs
+    over ``pairs`` in place, one Arrow batch per did array it yields."""
+
+    def run(batches):
+        for dids in kernel(batches):
+            yield pa.RecordBatch.from_arrays([pa.array(dids, pa.int32())],
+                                             names=["did"])
+
+    return pairs.mapInArrow(run, "did int")
+
+
+def _gate_scalar(pairs: DataFrame, kernel, terms: list[str],
                  count_name: str) -> DataFrame:
-    """Fold a distributed ``did int`` result (deduped by construction —
-    disjoint chunk did-ranges) into the ONE-ROW driver-gate scalar:
+    """Fold a serving plan's dids (deduped by construction — disjoint
+    chunk did-ranges) into the ONE-ROW gate scalar:
     (term_a[, term_b, ...], <count_name>, fingerprint over ascending ids).
+
+    The fold runs inside the serving kernel's own task: ``coalesce(1)``
+    is narrow, so the plan gains no shuffle and a request runs one job
+    per broadcast probe side plus the result job.  The kernel's dids are
+    concatenated, sorted, counted and fingerprinted by
+    ``batched.fingerprint_rows`` (bit-identical to the SQL fold).  One
+    empty chunk row (counts 0, empty streams: every serving kernel
+    decodes it as no dids) joins the input, so the fold's one partition
+    always exists and yields the (..., 0, 0) row even when AQE prunes an
+    empty join down to zero partitions.
 
     This fold exists ONLY because the driver's pandas canonicalizer
     rejects array-typed result columns; it concentrates the full
     result-id list on one task (SCALE.md's 10x OR run is fold-dominated),
     so it is the GATE wrapper, not the operator — scale consumers take
     the rows-returning serving functions directly."""
-    from ..queries import spark_fingerprint
     if len(terms) > 26:
         # term_{chr(97+i)} runs out of alphabet past 26 terms and would
         # silently emit garbage column names (term_{, term_|, ...) — the
@@ -489,11 +518,27 @@ def _gate_scalar(rows: DataFrame, terms: list[str],
             f"_gate_scalar supports at most 26 probe terms, got "
             f"{len(terms)}")
     names = [f"term_{chr(97 + i)}" for i in range(len(terms))]
-    return (rows.groupBy()
-            .agg(F.sort_array(F.collect_list("did")).alias("ids"))
-            .select(*[F.lit(t).alias(n) for n, t in zip(names, terms)],
-                    F.size("ids").alias(count_name),
-                    F.expr(spark_fingerprint("ids")).alias("fingerprint")))
+    # built as one SQL statement: a per-column lit/cast/alias select costs
+    # ~25 ms of py4j calls per request, the parse ~4 ms
+    cols = []
+    for f in pairs.schema:
+        zero = "X''" if isinstance(f.dataType, BinaryType) else "0"
+        cols.append(f"CAST({zero} AS {f.dataType.simpleString()}) "
+                    f"AS `{f.name}`")
+    empty_chunk = pairs.sparkSession.sql("SELECT " + ", ".join(cols))
+
+    def fold(batches):
+        ids = np.concatenate([np.zeros(0, np.int32), *kernel(batches)])
+        ids.sort()
+        fp = batched.fingerprint_rows(ids, np.array([0, ids.size]))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([t], pa.string()) for t in terms]
+            + [pa.array([ids.size], pa.int32()), pa.array(fp, pa.int64())],
+            names=names + [count_name, "fingerprint"])
+
+    schema = ", ".join([f"{n} string" for n in names]
+                       + [f"{count_name} int", "fingerprint bigint"])
+    return pairs.union(empty_chunk).coalesce(1).mapInArrow(fold, schema)
 
 
 def topk_and_terms(enc_index: DataFrame, term_a: str, term_b: str,
@@ -561,6 +606,12 @@ def union_terms_rows(enc_index: DataFrame, term_a: str,
     by construction) — the scale consumer's form; the driver-gate
     scalar is :func:`union_terms`.  Serves from any wire (see
     :func:`_did_stream`)."""
+    return _did_rows(*_union_plan(enc_index, term_a, term_b))
+
+
+def _union_plan(enc_index: DataFrame, term_a: str, term_b: str):
+    """(chunk pairs, kernel) of :func:`union_terms_rows`; the kernel yields
+    each batch's union dids."""
     kind, dids, cnt = _did_stream(enc_index, "union_terms_rows")
     a = _probe_side(enc_index, kind, term_a, "_a", [dids])
     b = _probe_side(enc_index, kind, term_b, "_b", [dids])
@@ -569,7 +620,7 @@ def union_terms_rows(enc_index: DataFrame, term_a: str,
         *[F.coalesce(c, F.lit(v)).alias(c) for s in ("_a", "_b")
           for c, v in ((cnt + s, 0), (dids + s, b""))])
 
-    def run(batches):
+    def kernel(batches):
         for batch in batches:
             (da, oa), = decode_wire(kind, batch, [dids], "_a")
             (db, ob), = decode_wire(kind, batch, [dids], "_b")
@@ -577,12 +628,9 @@ def union_terms_rows(enc_index: DataFrame, term_a: str,
             # globally deduped output already
             u = np.union1d(lane_doc_keys(np.diff(oa), da),
                            lane_doc_keys(np.diff(ob), db))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array((u & np.int64(0xFFFFFFFF)).astype(np.int32),
-                          pa.int32())],
-                names=["did"])
+            yield (u & np.int64(0xFFFFFFFF)).astype(np.int32)
 
-    return pairs.mapInArrow(run, "did int")
+    return pairs, kernel
 
 
 def union_terms(enc_index: DataFrame, term_a: str,
@@ -590,7 +638,7 @@ def union_terms(enc_index: DataFrame, term_a: str,
     """Gate-scalar OR serving: one row (term_a, term_b, n_docs,
     fingerprint over ascending union ids) folded from
     :func:`union_terms_rows` — see :func:`_gate_scalar`."""
-    return _gate_scalar(union_terms_rows(enc_index, term_a, term_b),
+    return _gate_scalar(*_union_plan(enc_index, term_a, term_b),
                         [term_a, term_b], "n_docs")
 
 
@@ -713,6 +761,12 @@ def intersect_terms_rows(enc_index: DataFrame,
     Returns the DISTRIBUTED common-doc rows (``did int``, deduped by
     construction — disjoint chunk did-ranges).  Driver-gate scalars:
     :func:`intersect_terms` (k=2) / :func:`intersect_terms_multi`."""
+    return _did_rows(*_intersect_plan(enc_index, terms))
+
+
+def _intersect_plan(enc_index: DataFrame, terms: list[str]):
+    """(chunk k-tuples, kernel) of :func:`intersect_terms_rows`; the
+    kernel yields each batch's common dids."""
     if not terms:
         raise ValueError("intersect_terms_rows needs at least one term")
     kind, dids, _ = _did_stream(enc_index, "intersect_terms_rows")
@@ -722,7 +776,7 @@ def intersect_terms_rows(enc_index: DataFrame,
         side = _probe_side(enc_index, kind, t, f"_{i}", [dids])
         joined = side if joined is None else joined.join(side, "chunk_id")
 
-    def run(batches):
+    def kernel(batches):
         for batch in batches:
             common = None
             for i in range(k):
@@ -736,12 +790,9 @@ def intersect_terms_rows(enc_index: DataFrame,
                     common, keys, assume_unique=True)
                 if not common.size:
                     break  # batch-wide empty: skip the remaining decodes
-            yield pa.RecordBatch.from_arrays(
-                [pa.array((common & np.int64(0xFFFFFFFF)).astype(np.int32),
-                          pa.int32())],
-                names=["did"])
+            yield (common & np.int64(0xFFFFFFFF)).astype(np.int32)
 
-    return joined.mapInArrow(run, "did int")
+    return joined, kernel
 
 
 def intersect_terms(enc_index: DataFrame, term_a: str,
@@ -749,7 +800,7 @@ def intersect_terms(enc_index: DataFrame, term_a: str,
     """Gate-scalar AND serving: one row (term_a, term_b, n_common,
     fingerprint over ascending common ids) folded from the k=2
     :func:`intersect_terms_rows` — see :func:`_gate_scalar`."""
-    return _gate_scalar(intersect_terms_rows(enc_index, [term_a, term_b]),
+    return _gate_scalar(*_intersect_plan(enc_index, [term_a, term_b]),
                         [term_a, term_b], "n_common")
 
 
@@ -758,5 +809,5 @@ def intersect_terms_multi(enc_index: DataFrame,
     """Gate-scalar k-way AND serving: one row (term_a, term_b, term_c,
     ..., n_common, fingerprint) folded from
     :func:`intersect_terms_rows`."""
-    return _gate_scalar(intersect_terms_rows(enc_index, terms),
+    return _gate_scalar(*_intersect_plan(enc_index, terms),
                         terms, "n_common")

@@ -236,7 +236,7 @@ def _parse_jpeg(payload):
                 # legal per T.81 but this decoder's color path assumes
                 # grayscale or YCbCr; raise the NotImplementedError that
                 # decode_image catches so the PIL fallback engages instead
-                # of dying on plane unpacking (r7 advice item 1)
+                # of dying on plane unpacking
                 raise NotImplementedError(
                     f"only 1- or 3-component baseline JPEG decodes "
                     f"natively (SOF0 has {nc} components)")
@@ -253,7 +253,7 @@ def _parse_jpeg(payload):
                     # non-integer sampling ratios (hmax=3 with h=2, legal
                     # per T.81) would make the np.repeat upsample emit a
                     # wrong-sized plane and garbage pixels; reject loudly
-                    # so the PIL fallback engages (r7 advice item 2)
+                    # so the PIL fallback engages
                     raise NotImplementedError(
                         f"non-integer chroma sampling ratio "
                         f"({hmax}/{x['h']} x {vmax}/{x['v']}) not "
@@ -363,8 +363,7 @@ def _entropy_decode(data, pos, scan, huff, ri, lay):
 
     def next_segment():
         # a truncated/corrupt restart-interval stream must raise a decode
-        # error, not leak the generator's bare StopIteration (r7 advice
-        # item 3)
+        # error, not leak the generator's bare StopIteration
         try:
             return next(segments)
         except StopIteration:
@@ -470,7 +469,7 @@ def _reconstruct(frame, scan, qt, coefs, lay, pxs=None):
 # prefix-free, so every 16-bit window maps to at most one code).  Keyed by
 # the table's canonical (code, length) assignment.  LRU-bounded: a corpus
 # of JPEGs with per-image optimized tables would otherwise grow executor
-# memory ~128 KB/table for process lifetime (r8 advice item 3); typical
+# memory ~128 KB/table for process lifetime; typical
 # corpora see the four Annex K defaults and never evict.
 _PEEK_LUT_CAP = 64
 
@@ -530,12 +529,11 @@ def _entropy_decode_batch(jobs: list[tuple]) -> list[list[np.ndarray]]:
     img_slot_base = []
     slot_k_all, slot_dc_all, slot_ac_all = [], [], []
     # per-BATCH table registry: stack only the tables this batch's slots
-    # reference, not the whole process-lifetime cache (r8 advice item 3 —
-    # the old global-id scheme re-stacked every cached table per call).
+    # reference, not the whole process-lifetime cache.
     # Keyed by the CANONICAL table key, not id(sym): a batch referencing
     # more than _PEEK_LUT_CAP distinct tables makes the LRU evict and
     # rebuild mid-batch, and the rebuilt array's fresh id() would stack a
-    # duplicate 128 KB LUT copy per re-reference (r9 advice item 3); the
+    # duplicate 128 KB LUT copy per re-reference; the
     # canonical key dedups regardless of cache churn.
     batch_tabs: list[tuple[np.ndarray, np.ndarray]] = []
     batch_ids: dict[tuple, int] = {}
@@ -728,17 +726,16 @@ def decode_jpeg_batch(payloads: list, parsed: list | None = None) \
         # corrupt entropy stream somewhere in the batch: the lockstep
         # machine raises where the single-image _BitReader tolerates a
         # truncated/overrunning stream (zero bytes past the end), so one
-        # dirty payload must not fail the whole Arrow batch (r8 advice
-        # item 2).  A malformed stream can surface as ValueError (the
-        # explicit guards) OR IndexError (an out-of-range gather/scatter
-        # the guards did not anticipate — r9 advice item 2); both route
-        # to the per-payload fallback.  Re-decode per payload through the
+        # dirty payload must not fail the whole Arrow batch.  A malformed
+        # stream can surface as ValueError (the explicit guards) OR
+        # IndexError (an out-of-range gather/scatter the guards did not
+        # anticipate); both route to the per-payload fallback.  Re-decode
+        # per payload through the
         # single path — the byte-identity contract holds trivially, and a
         # payload the single path ALSO rejects still raises (the fallback
         # makes the batch never stricter, never laxer).  The fallback is
         # LOGGED (executor stderr) so a systematic lockstep-kernel
-        # regression surfaces as more than a silent performance cliff
-        # (r10 advice item 3).
+        # regression surfaces as more than a silent performance cliff.
         import logging
         logging.getLogger(__name__).warning(
             "jpeg lockstep batch decode fell back to the per-payload "

@@ -100,7 +100,7 @@ def _make_assign(order: str):
         # '7' vs '007') is an ERROR, not a dedup: the batch writer places
         # both rows (window tie, nondeterministic order), so silently
         # collapsing — or silently skipping an id that ties the high-water
-        # mark — would diverge from the batch prefix sum (advice r6)
+        # mark — would diverge from the batch prefix sum
         first = np.concatenate(([True], keys[1:] != keys[:-1]))
         if order == "numeric":
             tie_diff = (~first) & np.concatenate(([False],

@@ -244,6 +244,28 @@ def test_sql_udfs_match_batched_kernels_and_reject_nulls(spark):
         _signed_roundtrip(null_row, "doc_id", delta=False).collect()
 
 
+def test_decode_rejects_null_encoded_row(spark):
+    """A NULL ``encoded`` stream fails both decoders with a ValueError that
+    names the first NULL row's doc_id; read as an empty stream it used to
+    reach the codec kernel and fail there with a bare IndexError."""
+    from streamvbyte_spark.operators import decode_table_prefix
+    tok = spark.createDataFrame(
+        [("m", [1, 2, 3], 3, "s"), ("n", [4, 5], 2, "s"),
+         ("o", [6], 1, "s")],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    enc = encode_table(tok, codec="svb").coalesce(1)
+    holed = enc.withColumn("encoded", F.when(
+        F.col("doc_id") == "m", F.col("encoded")))
+    for decode in (lambda d: decode_table(d),
+                   lambda d: decode_table(d, fingerprint=True),
+                   lambda d: decode_table_prefix(d, 2)):
+        assert decode(enc).count() == 3
+        with pytest.raises(Exception,
+                           match="ValueError: NULL encoded stream decoding "
+                                 "doc_id=n"):
+            decode(holed).collect()
+
+
 def test_full_curation_pipeline(spark):
     """End-to-end: dedup -> quality gate -> tokenize -> auto encode -> lineage
     write; rerun is a no-op (resume sees all buckets committed)."""
@@ -1160,6 +1182,100 @@ def test_index_union_terms(spark):
     # both sides absent: empty union, zero fingerprint
     none = union_terms(enc, "ghost1", "ghost2").collect()[0]
     assert (none.n_docs, none.fingerprint) == (0, 0)
+
+
+def _sql_gate_fold(rows, terms, count_name):
+    """The reference gate row: the SQL fold over a serving op's
+    distributed ``did`` rows — collect them on one reducer, sort, count
+    and fingerprint them in SQL."""
+    from streamvbyte_spark.queries import spark_fingerprint
+    names = [f"term_{chr(97 + i)}" for i in range(len(terms))]
+    return (rows.groupBy()
+            .agg(F.sort_array(F.collect_list("did")).alias("ids"))
+            .select(*[F.lit(t).alias(n) for n, t in zip(names, terms)],
+                    F.size("ids").alias(count_name),
+                    F.expr(spark_fingerprint("ids")).alias("fingerprint")))
+
+
+def test_gate_fold_matches_sql_fold(spark):
+    """Each gate-scalar serving op folds its row inside its serving kernel;
+    the row equals the SQL fold over the op's own rows form on seeded did
+    sets: graded densities whose results spread over several input
+    partitions and many chunks, an empty intersection, an absent term,
+    and a phrase."""
+    from streamvbyte_spark.operators.index import (
+        build_index_chunked, build_index_pos_chunked, intersect_terms,
+        intersect_terms_multi, intersect_terms_rows, phrase_match_rows,
+        phrase_match_terms, union_terms, union_terms_rows)
+    rng = np.random.default_rng(11)
+    n = 3000
+    member = {t: rng.random(n) < p for t, p in
+              (("a", 0.5), ("b", 0.3), ("c", 0.1), ("d", 0.02))}
+    member["e"] = np.arange(n) % 2 == 0
+    member["f"] = ~member["e"]                 # never shares a doc with e
+    docs = spark.createDataFrame(
+        [(i, " ".join(t for t in sorted(member) if member[t][i]), "s")
+         for i in range(n)],
+        "doc_id long, text string, source string").repartition(4)
+    # cached and counted: the cache's measured size lets the probe sides
+    # broadcast, so the serving kernels run over the index's 4 partitions
+    enc = build_index_chunked(docs).repartition(4).cache()
+    enc_pos = build_index_pos_chunked(docs).repartition(4).cache()
+    assert enc.count() and enc_pos.count()
+    cases = [(intersect_terms(enc, "a", "b"),
+              intersect_terms_rows(enc, ["a", "b"]), ["a", "b"], "n_common")]
+    for terms in (["a", "b", "c"], ["a", "c", "d"], ["e", "f"], ["a"],
+                  ["a", "zzz"]):
+        cases.append((intersect_terms_multi(enc, terms),
+                      intersect_terms_rows(enc, terms), terms, "n_common"))
+    for a, b in (("a", "d"), ("e", "f"), ("c", "zzz"), ("zzz", "yyy")):
+        cases.append((union_terms(enc, a, b), union_terms_rows(enc, a, b),
+                      [a, b], "n_docs"))
+    for a, b in (("a", "b"), ("c", "d"), ("e", "f")):
+        cases.append((phrase_match_terms(enc_pos, a, b),
+                      phrase_match_rows(enc_pos, a, b), [a, b], "n_docs"))
+    spread = intersect_terms_rows(enc, ["a", "b"]).rdd.glom().map(len)
+    assert sum(1 for m in spread.collect() if m) > 1
+    sizes = []
+    for gate, rows, terms, count_name in cases:
+        got = gate.collect()
+        want = _sql_gate_fold(rows, terms, count_name).collect()
+        assert gate.columns == want[0].__fields__, terms
+        assert len(got) == 1 and tuple(got[0]) == tuple(want[0]), terms
+        sizes.append(got[0][count_name])
+    assert 0 in sizes and max(sizes) > 1000
+    enc.unpersist()
+    enc_pos.unpersist()
+
+
+def test_gate_row_on_empty_inputs(spark):
+    """The gate row stays exactly one (..., 0, 0) row when both terms are
+    present but share no chunk (the kernel runs and yields no did), when
+    a term is absent (AQE prunes the empty join to zero partitions), and
+    when the index itself has zero partitions."""
+    from streamvbyte_spark.operators.index import (
+        build_index_chunked, build_index_pos_chunked, intersect_terms,
+        intersect_terms_multi, phrase_match_terms, union_terms)
+    # x occupies chunk 0 only, y chunk 1 only (span 128)
+    docs = spark.createDataFrame(
+        [(3, "x", "s"), (64, "x", "s"), (130, "y", "s"), (200, "y", "s")],
+        "doc_id long, text string, source string")
+    enc = build_index_chunked(docs).localCheckpoint()
+    enc_pos = build_index_pos_chunked(docs).localCheckpoint()
+    zero = spark.createDataFrame(spark.sparkContext.emptyRDD(), enc.schema)
+    zero_pos = spark.createDataFrame(spark.sparkContext.emptyRDD(),
+                                     enc_pos.schema)
+    assert zero.rdd.getNumPartitions() == 0
+    for e, ep, a, b in ((enc, enc_pos, "x", "y"), (enc, enc_pos, "x", "q"),
+                        (zero, zero_pos, "x", "y")):
+        for gate in (intersect_terms(e, a, b),
+                     intersect_terms_multi(e, [a, b, a]),
+                     phrase_match_terms(ep, a, b)):
+            got = gate.collect()
+            assert len(got) == 1 and tuple(got[0])[-2:] == (0, 0), (a, b)
+    for e, a, b in ((zero, "x", "y"), (enc, "q", "r")):
+        got = union_terms(e, a, b).collect()
+        assert len(got) == 1 and tuple(got[0])[-2:] == (0, 0), (a, b)
 
 
 def test_workers_drop_spark_archive_finders(spark):

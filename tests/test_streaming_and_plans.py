@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -1204,7 +1205,7 @@ def test_index_stage_generation_reuse(spark):
 def _build_jobs(spark, build) -> int:
     """Spark jobs run while ``build()`` executes, counted by job group."""
     sc = spark.sparkContext
-    group = f"svb_build_{id(build)}"
+    group = f"svb_build_{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
         build()
@@ -1276,6 +1277,21 @@ def test_index_probe_terms_rederived_on_rebuild(spark):
     assert key not in staging._STAGE_VIEWS
     rebuilt(other_sf, g3)
     staging.release_stage(spark, "index_intersect")
+
+
+def test_serving_gate_row_folds_without_exchange(spark):
+    """The gate-scalar serving queries fold their one row inside the
+    serving kernel: no shuffle Exchange is left in the plan, and a collect
+    runs one job per broadcast probe side plus the result job."""
+    import streamvbyte_spark.queries as Q
+    from streamvbyte_spark.operators import staging
+    queries = Q.build_queries()
+    for name, max_jobs in (("index_intersect", 2), ("index_and_multi", 3),
+                           ("index_phrase_match", 2)):
+        df = queries[name](spark, SF)
+        assert count_exchanges(df) == 0, plan_string(df, "simple")
+        assert _build_jobs(spark, df.collect) <= max_jobs, name
+        staging.release_stage(spark, name)
 
 
 def test_stage_views_lifecycle(spark):

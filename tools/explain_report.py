@@ -212,25 +212,30 @@ NOTES = {
         "soundfile): block-vectorized IMA ADPCM — state arrays across "
         "blocks, the loop is over samples-in-block; map-only after the "
         "derived single-row-group fanout exchange (r11).",
-    "index_intersect": "AND serving from the encoded set wire (r9, "
-        "co-grouped): common dids can only live in co-occupied chunks "
+    "index_intersect": "AND serving from the encoded set wire, "
+        "co-grouped: common dids can only live in co-occupied chunks "
         "(chunking is by did div span, term-independent), so the two "
         "terms' ENCODED chunk rows equi-join on chunk_id BEFORE any "
         "decode and ONE kernel intersects each co-occupied pair in-lane "
         "— stopword AND rare decodes ~df_rare/span pairs, zero posting "
-        "rows on the wire (SCALE.md measured run).",
-    "index_phrase_match": "Phrase serving from the POSITIONAL wire (r9, "
-        "co-grouped like intersect): the two terms' encoded chunk rows "
+        "rows on the wire (SCALE.md measured run).  The gate row is "
+        "folded inside that kernel's task (narrow Coalesce 1, then sort, "
+        "count and fingerprint in NumPy): no Exchange, one job per "
+        "broadcast probe side plus the result job.",
+    "index_phrase_match": "Phrase serving from the POSITIONAL wire, "
+        "co-grouped like intersect: the two terms' encoded chunk rows "
         "equi-join on chunk_id, ONE kernel decodes all three streams "
         "(EF dids, svb tfs, svb positions), intersects the did lists "
         "in-lane and probes pos_a+1 against pos_b per common doc — no "
-        "occurrence row ever shuffles; the kernel emits only matched "
-        "dids.",
-    "index_union": "OR serving from the encoded set wire (r9, co-grouped "
-        "like intersect): FULL OUTER join of the two terms' encoded chunk "
+        "occurrence row ever shuffles; the gate row is folded from the "
+        "matched dids inside the same task, with no Exchange.",
+    "index_union": "OR serving from the encoded set wire, co-grouped "
+        "like intersect: FULL OUTER join of the two terms' encoded chunk "
         "rows on chunk_id, in-lane union inside the one decode kernel — "
         "chunk did-ranges are disjoint, so the in-lane dedup IS the "
-        "global dedup and the exploded-did distinct shuffle disappears.",
+        "global dedup and the exploded-did distinct shuffle disappears.  "
+        "The gate row is folded inside the kernel's task; the only "
+        "Exchanges left are the full outer join's.",
     "index_merge_updates": "Store maintenance (r9): ONE hash shuffle on "
         "(term, chunk_id) over CHUNK rows (never postings) ranks "
         "generations by content count — byte-level replacement, no "
