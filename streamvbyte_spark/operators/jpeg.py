@@ -1,16 +1,21 @@
 """Pure-NumPy/stdlib BASELINE JPEG codec (ITU-T T.81 sequential DCT).
 
-No PIL, no C extension: `decode_jpeg` walks the marker stream (DQT/DHT/
-SOF0/DRI/SOS/RSTn), entropy-decodes the scan with canonical Huffman tables
-(T.81 §F.2.2), then runs everything after the bitstream as whole-batch
-NumPy — dequantize + dezigzag over an (N, 64) coefficient matrix, one
-einsum IDCT over all blocks at once (the 2-D DCT-III as two 8x8 matrix
+No PIL, no C extension: `_parse_jpeg` walks the marker stream (DQT/DHT/
+SOF0/DRI/SOS/RSTn) and rejects malformed headers with ValueError;
+`_decode_jpeg_batch` then decodes MANY images at once.  Its entropy decode
+runs in lockstep, one lane per (image, restart segment) and one Huffman
+symbol per lane per NumPy step via a 2^16 peek-LUT (canonical codes,
+T.81 §F.2.2); everything after the bitstream is whole-batch NumPy —
+dequantize + dezigzag over an (N, 64) coefficient matrix, one einsum IDCT
+over every block of every image (the 2-D DCT-III as two 8x8 matrix
 products, T.81 §A.3.3), vectorized plane assembly, chroma upsample by
 pixel replication, and the JFIF YCbCr->RGB transform.  Supported: 8-bit
 baseline (SOF0), grayscale or 3-component color at any sampling factors
 (4:4:4, 4:2:0, 4:2:2, ...), restart intervals.  Progressive/extended/
 arithmetic/12-bit raise NotImplementedError so `decode_image` can fall
-through to PIL where installed.
+through to PIL where installed.  This is the package's only JPEG
+decoder; the scalar decoder in tests/scalar_oracle/media.py is its
+byte-identity reference.
 
 `encode_baseline_jpeg` is the fixture twin: a standards-conforming writer
 (Annex K default Huffman tables, arbitrary quant tables and sampling
@@ -24,10 +29,6 @@ analytic-oracle pattern as the PPM/PNG/WAV gates (SURVEY.md §5).
 
 Per the reference's scope (lemire/streamvbyte is a codec library), JPEG is
 the engine's own multimodal roadmap — there is no reference parity target.
-Single-image entropy decode is a per-symbol Python loop; `decode_jpeg_batch`
-lockstep-decodes MANY images at once (one lane per restart segment, one
-Huffman symbol per lane per numpy step via a 2^16 peek-LUT), which is what
-the Arrow-batched image stages use.  All pixel math is whole-batch NumPy.
 """
 
 from __future__ import annotations
@@ -100,6 +101,9 @@ _STD_AC_CHR = (
      0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA])
 
 
+# bytes.translate table mapping byte v -> v & 15 (an AC symbol's size)
+_LOW_NIBBLE = bytes(range(16)) * 16
+
 # ------------------------------------------------------- canonical huffman
 
 class _HuffTable:
@@ -122,6 +126,10 @@ class _HuffTable:
                 code += n
                 k += n
                 self.maxcode[length] = code - 1
+                if code > 1 << length:
+                    # over-subscribed lengths: codes no longer fit in
+                    # `length` bits, so the code is not prefix-free
+                    raise ValueError("over-subscribed JPEG Huffman table")
             code <<= 1
 
     def codes(self):
@@ -140,54 +148,22 @@ class _HuffTable:
         return out
 
 
-class _BitReader:
-    """MSB-first bit reader over a DE-STUFFED entropy segment."""
+class PayloadError(ValueError):
+    """A decode error of one payload in a batch: ``index`` is that
+    payload's position in the batch the kernel was given."""
 
-    __slots__ = ("data", "pos", "acc", "n")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def read(self, nbits: int) -> int:
-        while self.n < nbits:
-            b = self.data[self.pos] if self.pos < len(self.data) else 0
-            self.pos += 1
-            self.acc = ((self.acc << 8) | b) & 0xFFFFFFFFFFFF
-            self.n += 8
-        self.n -= nbits
-        return (self.acc >> self.n) & ((1 << nbits) - 1)
-
-    def decode(self, table: _HuffTable) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.read(1)
-            if code <= table.maxcode[length]:
-                return table.huffval[table.valptr[length]
-                                     + code - table.mincode[length]]
-        raise ValueError("invalid JPEG Huffman code")
-
-
-def _extend(v: int, s: int) -> int:
-    """T.81 F.2.2.1 EXTEND: s-bit magnitude v -> signed value."""
-    return v if s == 0 or v >= (1 << (s - 1)) else v - (1 << s) + 1
+    def __init__(self, index: int, message: str):
+        super().__init__(message)
+        self.index = index
 
 
 # ----------------------------------------------------------------- decoder
 
-def decode_jpeg(payload) -> np.ndarray:
-    """Baseline JPEG -> (h, w, 3) uint8 RGB (grayscale replicated, matching
-    PIL convert('RGB') for single-component images)."""
-    data, frame, scan, qt, huff, ri, pos = _parse_jpeg(payload)
-    return _decode_scan(data, pos, frame, scan, qt, huff, ri)
-
-
 def _parse_jpeg(payload):
     """Marker walk up to (and including) SOS -> (data bytes, frame, scan,
     quant tables, huffman tables, restart interval, entropy start pos).
-    Shared by decode_jpeg and the across-image batch path."""
+    A malformed header raises ValueError, an unsupported one
+    NotImplementedError."""
     buf = np.asarray(payload, dtype=np.uint8) if not isinstance(
         payload, (bytes, bytearray)) else np.frombuffer(payload, np.uint8)
     data = buf.tobytes()
@@ -225,9 +201,22 @@ def _parse_jpeg(payload):
                 tc, th = body[i] >> 4, body[i] & 15
                 bits = list(body[i + 1:i + 17])
                 n = sum(bits)
-                huff[(tc, th)] = _HuffTable(bits, body[i + 17:i + 17 + n])
+                huffval = body[i + 17:i + 17 + n]
+                if len(bits) < 16 or len(huffval) < n:
+                    raise ValueError("truncated JPEG DHT segment")
+                # T.81 F.1.2: DC categories stop at 11 and AC sizes at 10,
+                # so a code (<= 16 bits) plus its magnitude bits always fit
+                # the lockstep decoder's 32-bit peek
+                if (tc == 0 and max(huffval, default=0) > 11) or \
+                        (tc == 1 and max(huffval.translate(_LOW_NIBBLE),
+                                         default=0) > 10):
+                    raise ValueError(
+                        f"JPEG DHT symbol out of range for table class {tc}")
+                huff[(tc, th)] = _HuffTable(bits, huffval)
                 i += 17 + n
         elif marker == 0xC0:  # SOF0 baseline
+            if len(body) < 6:
+                raise ValueError("truncated JPEG SOF0 segment")
             prec, h, w, nc = struct.unpack(">BHHB", body[:6])
             if prec != 8:
                 raise NotImplementedError("only 8-bit JPEG decodes natively")
@@ -240,6 +229,8 @@ def _parse_jpeg(payload):
                 raise NotImplementedError(
                     f"only 1- or 3-component baseline JPEG decodes "
                     f"natively (SOF0 has {nc} components)")
+            if len(body) < 6 + 3 * nc:
+                raise ValueError("truncated JPEG SOF0 segment")
             comps = []
             for c in range(nc):
                 cid, hv, tq = body[6 + 3 * c:9 + 3 * c]
@@ -265,10 +256,14 @@ def _parse_jpeg(payload):
                 f"only baseline SOF0 decodes natively (SOF marker "
                 f"0x{marker:02X}: progressive/extended/arithmetic)")
         elif marker == 0xDD:  # DRI
+            if len(body) < 2:
+                raise ValueError("truncated JPEG DRI segment")
             restart_interval = struct.unpack(">H", body[:2])[0]
         elif marker == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("JPEG SOS before SOF0")
+            if not body or nxt > len(data):
+                raise ValueError("truncated JPEG SOS segment")
             ns = body[0]
             if ns < len(frame["comps"]):
                 # baseline multi-scan (non-interleaved per-component scans)
@@ -279,10 +274,25 @@ def _parse_jpeg(payload):
                     "only single-scan (interleaved) baseline JPEG decodes "
                     f"natively (scan covers {ns} of "
                     f"{len(frame['comps'])} components)")
+            if ns > 4 or len(body) < 1 + 2 * ns or \
+                    len(set(body[1:1 + 2 * ns:2])) < ns:
+                raise ValueError(f"malformed JPEG SOS segment ({ns} "
+                                 "components, each named once)")
             scan = []
             for c in range(ns):
                 cs, tt = body[1 + 2 * c:3 + 2 * c]
-                comp = next(x for x in frame["comps"] if x["id"] == cs)
+                comp = next((x for x in frame["comps"] if x["id"] == cs),
+                            None)
+                if comp is None:
+                    raise ValueError(f"JPEG scan names undeclared "
+                                     f"component {cs}")
+                if (0, tt >> 4) not in huff or (1, tt & 15) not in huff:
+                    raise ValueError("JPEG scan references an undefined "
+                                     "Huffman table")
+                q = qt.get(comp["tq"])
+                if q is None or q.size != 64:
+                    raise ValueError("JPEG component references an "
+                                     "undefined quantization table")
                 scan.append((comp, tt >> 4, tt & 15))
             return data, frame, scan, qt, huff, restart_interval, nxt
         pos = nxt
@@ -318,8 +328,7 @@ def _entropy_segments(data: bytes, pos: int):
 def _scan_layout(frame, scan) -> dict:
     """Unit geometry of one scan: MCU grid, the per-MCU data-unit order
     (scan comp index + table ids per slot), total unit count, and each
-    scan component's coefficient-array size.  Shared by the single-image
-    entropy loop and the across-image batch machine."""
+    scan component's coefficient-array size."""
     h, w = frame["h"], frame["w"]
     hmax = max(c["h"] for c, _, _ in scan)
     vmax = max(c["v"] for c, _, _ in scan)
@@ -335,102 +344,25 @@ def _scan_layout(frame, scan) -> dict:
             else -(-h // 8)
         return {"mcux": mcux, "mcuy": mcuy, "per_mcu": 1,
                 "order": [(0, scan[0][1], scan[0][2])],
-                "n_units": by * bx, "sizes": [by * bx],
-                "grid": (by, bx)}
+                "n_units": by * bx, "sizes": [by * bx]}
     order = []
     for k, (c, td, ta) in enumerate(scan):
         order.extend([(k, td, ta)] * (c["h"] * c["v"]))
     return {"mcux": mcux, "mcuy": mcuy, "per_mcu": len(order),
             "order": order, "n_units": mcux * mcuy * len(order),
-            "sizes": [mcuy * c["v"] * mcux * c["h"] for c, _, _ in scan],
-            "grid": None}
+            "sizes": [mcuy * c["v"] * mcux * c["h"] for c, _, _ in scan]}
 
 
-def _decode_scan(data, pos, frame, scan, qt, huff, ri):
-    lay = _scan_layout(frame, scan)
-    coefs = _entropy_decode(data, pos, scan, huff, ri, lay)
-    return _reconstruct(frame, scan, qt, coefs, lay)
-
-
-def _entropy_decode(data, pos, scan, huff, ri, lay):
-    """Per-symbol Huffman scan decode -> per-scan-component (N, 64)
-    zigzag coefficient arrays in MCU-block order."""
-    order, per_mcu = lay["order"], lay["per_mcu"]
-    n_units = lay["n_units"]
-    coefs = [np.zeros((sz, 64), np.int64) for sz in lay["sizes"]]
-
-    segments = _entropy_segments(data, pos)
-
-    def next_segment():
-        # a truncated/corrupt restart-interval stream must raise a decode
-        # error, not leak the generator's bare StopIteration
-        try:
-            return next(segments)
-        except StopIteration:
-            raise ValueError(
-                "JPEG entropy stream truncated at restart interval") \
-                from None
-
-    reader = _BitReader(next_segment())
-    pred = [0] * len(scan)
-    unit = 0
-    mcu_in_seg = 0
-    blk_idx = [0] * len(scan)
-    while unit < n_units:
-        if ri and mcu_in_seg == ri * per_mcu:
-            reader = _BitReader(next_segment())
-            pred = [0] * len(scan)
-            mcu_in_seg = 0
-        k, td, ta = order[unit % per_mcu] if len(scan) > 1 else order[0]
-        dct, act = huff[(0, td)], huff[(1, ta)]
-        blk = coefs[k]
-        i = blk_idx[k]
-        s = reader.decode(dct)
-        diff = _extend(reader.read(s), s) if s else 0
-        pred[k] += diff
-        blk[i, 0] = pred[k]
-        j = 1
-        while j < 64:
-            rs = reader.decode(act)
-            r, s = rs >> 4, rs & 15
-            if s == 0:
-                if r == 15:
-                    j += 16
-                    continue
-                break                # EOB
-            j += r
-            if j > 63:
-                raise ValueError("JPEG AC coefficient index overflow")
-            blk[i, j] = _extend(reader.read(s), s)
-            j += 1
-        blk_idx[k] += 1
-        unit += 1
-        mcu_in_seg += 1
-    return coefs
-
-
-def _idct_px(coefs_k: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """Dequantize + dezigzag + IDCT + level shift/clamp for one (N, 64)
-    zigzag coefficient matrix -> (N, 8, 8) pixel blocks."""
-    dz = np.zeros((coefs_k.shape[0], 64), np.float64)
-    dz[:, ZIGZAG] = coefs_k * q[None, :]
-    blocks = dz.reshape(-1, 8, 8)
-    px = np.einsum("ux,nuv,vy->nxy", _DCT_M, blocks, _DCT_M,
-                   optimize=_IDCT_PATH)
-    return np.clip(np.round(px) + 128, 0, 255)
-
-
-def _reconstruct(frame, scan, qt, coefs, lay, pxs=None):
+def _reconstruct(frame, scan, lay, pxs):
     """Plane assembly + chroma upsample + color transform over per-scan-
-    component pixel blocks (computed here via _idct_px unless the caller
-    already batched the IDCT across images and passes `pxs`)."""
+    component (N, 8, 8) pixel blocks `pxs` (level-shifted and clamped)."""
     h, w = frame["h"], frame["w"]
     hmax = max(c["h"] for c, _, _ in scan)
     vmax = max(c["v"] for c, _, _ in scan)
     mcux, mcuy = lay["mcux"], lay["mcuy"]
     planes = []
     for k, (c, _, _) in enumerate(scan):
-        px = _idct_px(coefs[k], qt[c["tq"]]) if pxs is None else pxs[k]
+        px = pxs[k]
         if len(scan) == 1 and len(frame["comps"]) == 1:
             bx, by = -(-w // 8), -(-h // 8)
             plane = (px.reshape(by, bx, 8, 8).transpose(0, 2, 1, 3)
@@ -491,24 +423,27 @@ def _peek_lut(table: _HuffTable) -> tuple[np.ndarray, np.ndarray]:
         return hit
     sym = np.zeros(1 << 16, np.uint8)
     ln = np.zeros(1 << 16, np.uint8)   # ln == 0 -> invalid prefix
-    for symbol, (code, length) in table.codes().items():
-        start = code << (16 - length)
-        ln[start:start + (1 << (16 - length))] = length
-        sym[start:start + (1 << (16 - length))] = symbol
+    # walk the codes in canonical order, not through the symbol-keyed
+    # codes() dict: a DHT may repeat a symbol, and every one of its codes
+    # must still decode
+    for length in range(1, 17):
+        span = 1 << (16 - length)
+        k = table.valptr[length] - table.mincode[length]
+        for code in range(table.mincode[length], table.maxcode[length] + 1):
+            ln[code * span:(code + 1) * span] = length
+            sym[code * span:(code + 1) * span] = table.huffval[k + code]
     _PEEK_LUTS[key] = (sym, ln)
     if len(_PEEK_LUTS) > _PEEK_LUT_CAP:
         _PEEK_LUTS.popitem(last=False)
     return sym, ln
 
 
-# zero padding after each lane's de-stuffed segment: the single-image
-# _BitReader yields 0 bytes past the end of a segment (flush padding), and
-# the lockstep peek window must see the same zeros instead of the NEXT
-# lane's bytes.  64 bytes covers any legitimate flush tail; a lane whose
-# bit cursor walks past its pad is decoding garbage (corrupt stream) and
-# raises, where the single path would silently fill remaining units from
-# an endless zero stream — the only intended behavioral difference.
-_LANE_PAD = 64
+# zero padding after each lane's de-stuffed segment: past the end of its
+# segment a lane reads zero bits (T.81 leaves the tail of a truncated
+# segment undefined; zeros are the scalar reference's rule too).  peek32
+# clamps its byte index at the segment end, so its 5-byte window reads at
+# most 5 pad bytes and never the next lane's stream.
+_LANE_PAD = 8
 
 
 def _entropy_decode_batch(jobs: list[tuple]) -> list[list[np.ndarray]]:
@@ -520,8 +455,8 @@ def _entropy_decode_batch(jobs: list[tuple]) -> list[list[np.ndarray]]:
     analog of the PNG row-lockstep unfilter and the ADPCM block lanes.
 
     jobs: (data, pos, scan, huff, ri, lay) per image; returns each
-    image's per-scan-component coefficient arrays, bit-identical to
-    _entropy_decode."""
+    image's per-scan-component zigzag coefficient arrays in MCU-block
+    order.  A corrupt stream raises PayloadError naming its job index."""
     n_img = len(jobs)
     streams: list[bytes] = []
     lane_meta = []            # (img, byte_base, n_units_lane, unit0_abs)
@@ -559,22 +494,21 @@ def _entropy_decode_batch(jobs: list[tuple]) -> list[list[np.ndarray]]:
             slot_dc_all.append(_lid(huff[(0, td)]))
             slot_ac_all.append(_lid(huff[(1, ta)]))
         segs = list(_entropy_segments(data, pos))
+        # units per lane: one lane per restart interval, none for a frame
+        # with no blocks (a zero height or width)
         full = ri * per_mcu
-        if full:
-            n_lanes = -(-n_units // full)
-            counts = [full] * (n_lanes - 1) + [n_units - full * (n_lanes - 1)]
-        else:
-            counts = [n_units]
+        counts = ([min(full, n_units - u) for u in range(0, n_units, full)]
+                  if full else [n_units])
         if len(segs) < len(counts):
-            raise ValueError(
-                "JPEG entropy stream truncated at restart interval")
+            raise PayloadError(
+                i, "JPEG entropy stream truncated at restart interval")
         u0 = 0
         for seg, cnt in zip(segs, counts):
             lane_meta.append((i, base_bytes, cnt, u0))
             streams.append(seg)
             base_bytes += len(seg) + _LANE_PAD
             u0 += cnt
-    flat = np.zeros(base_bytes + 8, np.uint8)
+    flat = np.zeros(base_bytes, np.uint8)
     for (_, b, _, _), seg in zip(lane_meta, streams):
         flat[b:b + len(seg)] = np.frombuffer(seg, np.uint8)
     flat32 = flat.astype(np.int64)
@@ -584,9 +518,8 @@ def _entropy_decode_batch(jobs: list[tuple]) -> list[list[np.ndarray]]:
     byte_base = np.array([m[1] for m in lane_meta], np.int64)
     units_left = np.array([m[2] for m in lane_meta], np.int64)
     unit_abs = np.array([m[3] for m in lane_meta], np.int64)
-    lane_end_bit = np.array(
-        [(m[1] + len(seg) + _LANE_PAD) * 8
-         for m, seg in zip(lane_meta, streams)], np.int64)
+    lane_end = np.array([m[1] + len(seg)
+                         for m, seg in zip(lane_meta, streams)], np.int64)
     per_mcu_l = np.array([jobs[i][5]["per_mcu"] for i in img_of], np.int64)
     slot_base_l = np.array([img_slot_base[i] for i in img_of], np.int64)
     slot_k = np.array(slot_k_all, np.int64)
@@ -614,7 +547,7 @@ def _entropy_decode_batch(jobs: list[tuple]) -> list[list[np.ndarray]]:
         """32 bits MSB-first at pos_bit[idx] — wide enough for the longest
         Huffman code (16) plus the widest magnitude field (11), so one
         gather serves both the symbol AND its EXTEND bits."""
-        b = pos_bit[idx] >> 3
+        b = np.minimum(pos_bit[idx] >> 3, lane_end[idx])
         sh = pos_bit[idx] & 7
         v40 = ((flat32[b] << 32) | (flat32[b + 1] << 24)
                | (flat32[b + 2] << 16) | (flat32[b + 3] << 8)
@@ -628,8 +561,10 @@ def _entropy_decode_batch(jobs: list[tuple]) -> list[list[np.ndarray]]:
         pk32 = peek32(act)
         pk = pk32 >> 16
         ln = len_all[lut, pk].astype(np.int64)
-        if (ln == 0).any():
-            raise ValueError("invalid JPEG Huffman code")
+        bad = ln == 0
+        if bad.any():
+            raise PayloadError(int(img_of[act[bad][0]]),
+                               "invalid JPEG Huffman code")
         symv = sym_all[lut, pk].astype(np.int64)
         # unified decode: a DC symbol IS (run=0, size=sym) at j=0 with
         # predictor accumulation; EOB/ZRL have size 0 and read no bits.
@@ -645,8 +580,10 @@ def _entropy_decode_batch(jobs: list[tuple]) -> list[list[np.ndarray]]:
         jcur = jz[act]
         jw = np.where(dcm, 0, jcur + rr)
         write = dcm | (sb > 0)
-        if (jw[write] > 63).any():
-            raise ValueError("JPEG AC coefficient index overflow")
+        bad = write & (jw > 63)
+        if bad.any():
+            raise PayloadError(int(img_of[act[bad][0]]),
+                               "JPEG AC coefficient index overflow")
         # DC predictor accumulate (per-lane component slot)
         di = act[dcm]
         pred_new = preds[di, cur_k[di]] + ext[dcm]
@@ -679,11 +616,9 @@ def _entropy_decode_batch(jobs: list[tuple]) -> list[list[np.ndarray]]:
             unit_glob[live] = img_unit_base[img_of[live]] + unit_abs[live]
             phase[live] = 0
             jz[live] = 0
-        if (pos_bit[act] > lane_end_bit[act]).any():
-            raise ValueError("JPEG entropy stream overran its segment")
 
     # distribute each image's decode-order units into per-component arrays
-    # (the blk_idx progression of the single-image loop, vectorized)
+    # (each component's blocks in MCU order)
     out = []
     coefs2d = coef_flat.reshape(total_units, 64)
     for i, (data, pos, scan, huff, ri, lay) in enumerate(jobs):
@@ -707,47 +642,20 @@ def _entropy_decode_batch(jobs: list[tuple]) -> list[list[np.ndarray]]:
     return out
 
 
-def decode_jpeg_batch(payloads: list, parsed: list | None = None) \
-        -> list[np.ndarray]:
-    """Decode a list of baseline JPEG payloads with across-image lockstep
-    entropy decode (one lane per restart segment) + the shared whole-batch
-    reconstruction per image.  Byte-identical to decode_jpeg per payload.
-    With parsed=None, the FIRST unsupported payload's NotImplementedError
-    fails the whole batch — callers wanting per-payload PIL fallback must
-    pre-screen with _parse_jpeg and pass only supported payloads' results
-    via `parsed`, as operators.multimodal._decode_image_batch does."""
-    if parsed is None:
-        parsed = [_parse_jpeg(pl) for pl in payloads]
-    jobs = [(data, pos, scan, huff, ri, _scan_layout(frame, scan))
-            for (data, frame, scan, qt, huff, ri, pos) in parsed]
-    try:
-        all_coefs = _entropy_decode_batch(jobs)
-    except (ValueError, IndexError):
-        # corrupt entropy stream somewhere in the batch: the lockstep
-        # machine raises where the single-image _BitReader tolerates a
-        # truncated/overrunning stream (zero bytes past the end), so one
-        # dirty payload must not fail the whole Arrow batch.  A malformed
-        # stream can surface as ValueError (the explicit guards) OR
-        # IndexError (an out-of-range gather/scatter the guards did not
-        # anticipate); both route to the per-payload fallback.  Re-decode
-        # per payload through the
-        # single path — the byte-identity contract holds trivially, and a
-        # payload the single path ALSO rejects still raises (the fallback
-        # makes the batch never stricter, never laxer).  The fallback is
-        # LOGGED (executor stderr) so a systematic lockstep-kernel
-        # regression surfaces as more than a silent performance cliff.
-        import logging
-        logging.getLogger(__name__).warning(
-            "jpeg lockstep batch decode fell back to the per-payload "
-            "path for a %d-image batch", len(parsed))
-        return [_decode_scan(data, pos, frame, scan, qt, huff, ri)
-                for (data, frame, scan, qt, huff, ri, pos) in parsed]
-    # ONE dequantized IDCT over every block of every image/component —
-    # per-image einsum calls cost more in dispatch than in math for
-    # typical corpus-sized images
+def _decode_jpeg_batch(parsed: list) -> list[np.ndarray]:
+    """Decode `_parse_jpeg` results to (h, w, 3) uint8 RGB arrays
+    (grayscale replicated, matching PIL convert('RGB')): the lockstep
+    entropy decode of every image, then ONE dequantize + IDCT + level
+    shift over every block of every image and component (per-image einsum
+    calls cost more in dispatch than in math for corpus-sized images),
+    then per-image plane assembly.  A corrupt stream raises PayloadError
+    naming its position in `parsed`."""
+    lays = [_scan_layout(frame, scan) for (_, frame, scan, *_) in parsed]
+    all_coefs = _entropy_decode_batch(
+        [(data, pos, scan, huff, ri, lay) for
+         (data, _, scan, _, huff, ri, pos), lay in zip(parsed, lays)])
     dz_parts, spans, nblk = [], [], 0
-    for (data, frame, scan, qt, huff, ri, pos), coefs in zip(parsed,
-                                                             all_coefs):
+    for (_, _, scan, qt, *_), coefs in zip(parsed, all_coefs):
         img_spans = []
         for k, (c, _, _) in enumerate(scan):
             dz = np.zeros((coefs[k].shape[0], 64), np.float64)
@@ -760,12 +668,10 @@ def decode_jpeg_batch(payloads: list, parsed: list | None = None) \
     px_all = np.einsum("ux,nuv,vy->nxy", _DCT_M, blocks, _DCT_M,
                        optimize=_IDCT_PATH)
     px_all = np.clip(np.round(px_all) + 128, 0, 255)
-    out = []
-    for (data, frame, scan, qt, huff, ri, pos), job, coefs, img_spans \
-            in zip(parsed, jobs, all_coefs, spans):
-        pxs = [px_all[b:b + n] for b, n in img_spans]
-        out.append(_reconstruct(frame, scan, qt, coefs, job[5], pxs=pxs))
-    return out
+    return [_reconstruct(frame, scan, lay,
+                         [px_all[b:b + n] for b, n in img_spans])
+            for (_, frame, scan, *_), lay, img_spans
+            in zip(parsed, lays, spans)]
 
 
 # ----------------------------------------------------------------- encoder
@@ -804,7 +710,7 @@ def encode_baseline_jpeg(comps, h: int, w: int,
                          quant: dict[int, np.ndarray],
                          restart_interval: int = 0) -> bytes:
     """Standards-conforming baseline JPEG writer over ALREADY-QUANTIZED
-    zigzag coefficient blocks (the fixture twin of decode_jpeg).
+    zigzag coefficient blocks (the fixture twin of the decoder).
 
     comps: list of dicts {id, h, v, tq, blocks} where blocks is
     (blocks_y, blocks_x, 64) int — the component's quantized zigzag

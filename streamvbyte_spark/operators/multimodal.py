@@ -3,17 +3,17 @@
 Images/audio/video are carried as ``binary`` columns with a metadata struct;
 decode / feature-extraction run as Arrow-batched ``mapInArrow`` stages.
 
-Decoders: the UNCOMPRESSED container formats are decoded for real, in pure
-NumPy (no external deps) — PPM (P6) and BMP (BI_RGB 24/32-bit) images, WAV
-(RIFF PCM 8/16-bit) audio, plus a nearest-neighbor ``resize_image``.
-PNG (8-bit RGB/RGBA, non-interlaced) is a REAL COMPRESSED decode with no
-external deps either: stdlib zlib inflate + all five PNG row filters
-reversed in NumPy (``decode_png``).  Remaining compressed formats
-(JPEG/MP3/...) need PIL/soundfile, which are not in this container; those
-paths raise ``NotImplementedError`` unless the optional dependency
-imports.  The Spark-level feature/frame queries use a deterministic fake
-payload so the batch plumbing — schema, batching, partitioning, UDF
-signatures — stays oracle-checkable end-to-end.
+Decoders, all pure NumPy + stdlib with no external deps: PPM (P6) and
+BMP (BI_RGB 24/32-bit) images, PNG (8-bit RGB/RGBA, non-interlaced:
+zlib inflate + all five row filters reversed), baseline JPEG
+(operators/jpeg.py), WAV audio (RIFF PCM 8/16-bit and IMA ADPCM), plus a
+nearest-neighbor ``resize_image``.  Images decode through one batch
+dispatcher, ``_decode_image_batch``; ``decode_image`` is its one-payload
+form.  Other formats and shapes (progressive JPEG, paletted PNG, MP3, ...)
+need PIL/soundfile and raise ``NotImplementedError`` unless the optional
+dependency imports.  The Spark-level feature/frame queries use a
+deterministic fake payload so the batch plumbing — schema, batching,
+partitioning, UDF signatures — stays oracle-checkable end-to-end.
 """
 
 from __future__ import annotations
@@ -75,15 +75,19 @@ def _ppm_header(buf: bytes) -> tuple[int, int, int, int]:
 
 
 def decode_image(payload) -> np.ndarray:
-    """Decode an image payload to an HxWx3 uint8 RGB array.
-
-    Pure NumPy for the uncompressed formats: PPM P6 (maxval 255) and BMP
-    BI_RGB 24/32-bit (bottom-up or top-down, row padding honored).
-    Accepts bytes or a uint8 array view; only the (tiny) header region is
-    materialized as Python bytes — the pixel body stays a NumPy view until
-    the final output copy.  Compressed formats fall through to PIL if
-    available, else raise."""
+    """Decode one image payload (bytes or a uint8 array view) to an HxWx3
+    uint8 RGB array: a one-payload call of `_decode_image_batch`."""
     buf = _as_u8(payload)
+    return _decode_image_batch(buf, np.array([0, buf.size]))[0]
+
+
+def _decode_per_payload(buf: np.ndarray) -> np.ndarray:
+    """The formats no batch kernel decodes, one payload at a time: PPM P6
+    (maxval 255) and BMP BI_RGB 24/32-bit (bottom-up or top-down, row
+    padding honored) in pure NumPy — only the (tiny) header region is
+    materialized as Python bytes, the pixel body stays a NumPy view until
+    the final output copy — and everything else through PIL if available,
+    else NotImplementedError."""
     magic = buf[:2].tobytes()
     if magic == b"P6":
         # headers are a few dozen text bytes; cap the bytes copy
@@ -112,33 +116,6 @@ def decode_image(payload) -> np.ndarray:
         if height > 0:
             px = px[::-1]  # bottom-up storage
         return px[:, :, 2::-1].copy()  # BGR(A) -> RGB
-    if buf[:2].tobytes() == b"\xff\xd8":
-        # REAL baseline JPEG decode, no PIL: marker walk + canonical
-        # Huffman + batched NumPy IDCT (operators/jpeg.py).  Progressive/
-        # extended/arithmetic/12-bit raise NotImplementedError and fall
-        # through to PIL where installed.
-        from .jpeg import decode_jpeg
-        try:
-            return decode_jpeg(buf)
-        except NotImplementedError:
-            pass
-    if buf[:8].tobytes() == _PNG_SIG:
-        # LARGE PNGs route to PIL when available: the pure-NumPy unfilter
-        # is fast for None/Sub/Up rows but walks Average/Paeth rows one
-        # pixel at a time (measured ~0.3-0.8 MB/s vs 250-1200 MB/s for the
-        # vectorized filters, BENCH/BASELINE.md), and the filter mix is
-        # unknowable before inflating — so the guard is on pixel COUNT
-        # (IHDR peek, bytes 16..24).  The NumPy path stays the oracle and
-        # the only path when PIL is absent (this container).
-        w_pk = int.from_bytes(buf[16:20].tobytes(), "big")
-        h_pk = int.from_bytes(buf[20:24].tobytes(), "big")
-        if w_pk * h_pk > _PNG_PIL_ROUTE_PIXELS and _pil_available():
-            pass  # fall through to the PIL branch below
-        else:
-            try:
-                return decode_png(buf)
-            except NotImplementedError:
-                pass  # interlaced/paletted/16-bit: fall through to PIL
     try:
         import io
         from PIL import Image
@@ -146,14 +123,16 @@ def decode_image(payload) -> np.ndarray:
     except ImportError as e:
         raise NotImplementedError(
             "compressed image formats need PIL; install pillow on the "
-            "cluster image (PPM/BMP decode natively)") from e
+            "cluster image (PPM/BMP/PNG/baseline JPEG decode natively)") \
+            from e
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # pixel-count threshold above which a PNG prefers PIL (C-speed for every
-# filter) when installed: 2^18 px (512x512) is ~0.8 MB of RGB rows — ~1-3 s
-# worst case through the per-pixel Average/Paeth walk, the point where the
-# NumPy path stops being interactive
+# filter) when installed: the row-lockstep unfilter still walks Average/
+# Paeth rows one pixel at a time (vectorized across images, not within a
+# row), so a lone large PNG costs ~1-3 s at 2^18 px (512x512, ~0.8 MB of
+# RGB rows), the point where the NumPy path stops being interactive
 _PNG_PIL_ROUTE_PIXELS = 1 << 18
 
 
@@ -165,68 +144,20 @@ def _pil_available() -> bool:
         return False
 
 
-def _png_unfilter(raw: np.ndarray, h: int, stride: int,
-                  bpp: int) -> np.ndarray:
-    """Reverse PNG row filters (spec §6): raw is h*(1+stride) inflated
-    bytes (leading filter-type byte per row); returns (h, stride) uint8.
-
-    Filter math per byte with a = left recon (bpp back), b = up recon,
-    c = up-left recon.  None/Up are fully vectorized; Sub is a per-lane
-    cumulative sum; Average/Paeth carry a sequential left dependency, so
-    they walk the row one PIXEL at a time with the bpp byte lanes
-    vectorized (width iterations, not width*bpp)."""
-    out = np.zeros((h, stride), np.uint8)
-    prev = np.zeros(stride, np.int32)
-    pos = 0
-    for r in range(h):
-        ft = int(raw[pos])
-        row = raw[pos + 1:pos + 1 + stride].astype(np.int32)
-        pos += 1 + stride
-        if ft == 0:
-            rec = row
-        elif ft == 1:  # Sub: recon[i] = filt[i] + recon[i-bpp]
-            rec = np.empty_like(row)
-            for lane in range(bpp):
-                rec[lane::bpp] = np.cumsum(row[lane::bpp]) % 256
-        elif ft == 2:  # Up
-            rec = (row + prev) % 256
-        elif ft == 3:  # Average
-            rec = np.empty_like(row)
-            left = np.zeros(bpp, np.int32)
-            for j in range(0, stride, bpp):
-                rec[j:j + bpp] = (row[j:j + bpp]
-                                  + ((left + prev[j:j + bpp]) >> 1)) % 256
-                left = rec[j:j + bpp]
-        elif ft == 4:  # Paeth
-            rec = np.empty_like(row)
-            left = np.zeros(bpp, np.int32)
-            upleft = np.zeros(bpp, np.int32)
-            for j in range(0, stride, bpp):
-                b = prev[j:j + bpp]
-                p = left + b - upleft
-                pa = np.abs(p - left)
-                pb = np.abs(p - b)
-                pc = np.abs(p - upleft)
-                pred = np.where((pa <= pb) & (pa <= pc), left,
-                                np.where(pb <= pc, b, upleft))
-                rec[j:j + bpp] = (row[j:j + bpp] + pred) % 256
-                left, upleft = rec[j:j + bpp], b
-        else:
-            raise ValueError(f"bad PNG filter type {ft}")
-        out[r] = rec
-        prev = rec
-    return out
-
-
 def _png_unfilter_batch(raws: list[np.ndarray], hs: list[int],
                         strides: list[int], bpp: int) -> list[np.ndarray]:
-    """Across-image lane-vectorized PNG unfilter: every image of one
-    channel count decodes in ROW LOCKSTEP — at step r, row r of ALL
-    images reconstructs at once (grouped by filter type), so the
-    sequential Average/Paeth pixel walk costs max_h * max_w Python
-    iterations for the WHOLE batch instead of h*w per image, with each
-    iteration updating (n_images, bpp) lanes.
-    Byte-identical to _png_unfilter per image (parity-tested).
+    """Reverse PNG row filters (spec §6) of many images of one channel
+    count: raws[i] is hs[i]*(1+strides[i]) inflated bytes (a leading
+    filter-type byte per row, each <= 4); returns (h, stride) uint8 per
+    image.  Filter math per byte with a = left recon (bpp back), b = up
+    recon, c = up-left recon.
+
+    Every image decodes in ROW LOCKSTEP — at step r, row r of ALL images
+    reconstructs at once (grouped by filter type): None/Up are fully
+    vectorized, Sub is a per-lane cumulative sum, and the sequential
+    Average/Paeth pixel walk costs max_h * max_w Python iterations for the
+    WHOLE batch instead of h*w per image, each iteration updating
+    (n_images, bpp) lanes.
 
     Padding of smaller images is benign, not zero: a padding COLUMN can
     inherit the last real column's value through a Sub/Paeth row's lane
@@ -243,10 +174,6 @@ def _png_unfilter_batch(raws: list[np.ndarray], hs: list[int],
         rr = raw.reshape(h, 1 + s)
         ftypes[i, :h] = rr[:, 0]
         rows[i, :h, :s] = rr[:, 1:]
-    bad = ftypes > 4
-    if bad.any():
-        i, r = np.argwhere(bad)[0]
-        raise ValueError(f"bad PNG filter type {ftypes[i, r]}")
     out = np.empty((n, H, S), np.uint8)
     prev = np.zeros((n, S), np.int16)
     for r in range(H):
@@ -296,94 +223,65 @@ def _png_unfilter_batch(raws: list[np.ndarray], hs: list[int],
     return [out[i, :hs[i], :strides[i]] for i in range(n)]
 
 
-def _png_batch_into(imgs: list, indexed_parsed) -> None:
-    """Grouped lockstep decode of pre-parsed PNGs into ``imgs`` slots:
-    group (index, (raw, h, w, nch)) pairs by channel count, batch-unfilter
-    each group, reshape + RGB-crop each image into its slot.  The ONE
-    implementation behind decode_png_batch and _decode_image_batch."""
-    by_nch: dict[int, list] = {}
-    for i, (raw, h, w, nch) in indexed_parsed:
-        by_nch.setdefault(nch, []).append((i, raw, h, w))
-    for nch, grp in by_nch.items():
-        outs = _png_unfilter_batch([g[1] for g in grp],
-                                   [g[2] for g in grp],
-                                   [g[3] * nch for g in grp], nch)
-        for (i, _, h, w), o in zip(grp, outs):
-            imgs[i] = np.ascontiguousarray(o.reshape(h, w, nch)[:, :, :3])
-
-
-def decode_png_batch(payloads: list) -> list[np.ndarray]:
-    """Decode a list of native-decodable PNG payloads with across-image
-    lanes: parse+inflate each (zlib is C-speed per payload), group by
-    channel count, lockstep-unfilter each group.  Returns HxWx3 uint8
-    arrays in input order, byte-identical to decode_png per payload."""
-    parsed = [_png_parse(p) for p in payloads]
-    imgs: list = [None] * len(payloads)
-    _png_batch_into(imgs, enumerate(parsed))
-    return imgs
-
-
 def _decode_image_batch(flat: np.ndarray,
                         offsets: np.ndarray) -> list[np.ndarray]:
-    """Decode one Arrow batch of image payloads: PNGs the native path
-    accepts decode TOGETHER through the across-image batch unfilter
-    (unless routed to PIL by the large-pixel-count policy, exactly as
-    decode_image routes), baseline JPEGs decode TOGETHER through the
-    lockstep entropy machine (operators.jpeg.decode_jpeg_batch); every
-    other payload decodes per image."""
-    from .jpeg import _parse_jpeg, decode_jpeg_batch
+    """The package's one image decoder: the payloads
+    ``flat[offsets[i]:offsets[i + 1]]`` of one Arrow batch -> HxWx3 uint8
+    RGB arrays.  It is the only code that routes payloads by their PNG and
+    JPEG magic bytes.  8-bit RGB/RGBA PNGs decode TOGETHER through the row-lockstep
+    unfilter and baseline JPEGs TOGETHER through the lockstep entropy
+    machine (operators/jpeg.py); `_decode_per_payload` takes PPM, BMP, the
+    PNG/JPEG shapes neither kernel supports, and, when PIL is installed,
+    PNGs above _PNG_PIL_ROUTE_PIXELS.  A malformed payload raises
+    PayloadError (a ValueError) carrying its index in the batch."""
+    from .jpeg import PayloadError, _decode_jpeg_batch, _parse_jpeg
     n = offsets.size - 1
     imgs: list = [None] * n
-    png_idx: list[int] = []
-    png_parsed: list[tuple] = []
-    jpg_idx: list[int] = []
-    jpg_parsed: list[tuple] = []
+    png: list[tuple] = []     # (index, _png_parse result)
+    jpg: list[tuple] = []     # (index, _parse_jpeg result)
     pil = _pil_available()
     for i in range(n):
         buf = flat[offsets[i]:offsets[i + 1]]
+        group, parse = None, None
         if buf[:8].tobytes() == _PNG_SIG:
             w_pk = int.from_bytes(buf[16:20].tobytes(), "big")
             h_pk = int.from_bytes(buf[20:24].tobytes(), "big")
-            if not (w_pk * h_pk > _PNG_PIL_ROUTE_PIXELS and pil):
+            if not (pil and w_pk * h_pk > _PNG_PIL_ROUTE_PIXELS):
+                group, parse = png, _png_parse
+        elif buf[:2].tobytes() == b"\xff\xd8":
+            group, parse = jpg, _parse_jpeg
+        try:
+            if group is not None:
                 try:
-                    png_parsed.append(_png_parse(buf))
-                    png_idx.append(i)
+                    group.append((i, parse(buf)))
                     continue
                 except NotImplementedError:
-                    pass   # interlaced/paletted/16-bit: PIL via decode_image
-        elif buf[:2].tobytes() == b"\xff\xd8":
-            try:
-                jpg_parsed.append(_parse_jpeg(buf))
-                jpg_idx.append(i)
-                continue
-            except NotImplementedError:
-                pass       # progressive/extended/12-bit: PIL via decode_image
-        imgs[i] = decode_image(buf)
-    if jpg_idx:
-        for i, img in zip(jpg_idx,
-                          decode_jpeg_batch([None] * len(jpg_idx),
-                                            parsed=jpg_parsed)):
+                    pass  # interlaced/paletted/16-bit PNG, non-SOF0 JPEG
+            imgs[i] = _decode_per_payload(buf)
+        except ValueError as e:
+            raise PayloadError(i, str(e)) from e
+    if jpg:
+        try:
+            decoded = _decode_jpeg_batch([p for _, p in jpg])
+        except PayloadError as e:
+            raise PayloadError(jpg[e.index][0], str(e)) from e
+        for (i, _), img in zip(jpg, decoded):
             imgs[i] = img
-    _png_batch_into(imgs, zip(png_idx, png_parsed))
+    by_nch: dict[int, list] = {}
+    for i, (raw, h, w, nch) in png:
+        by_nch.setdefault(nch, []).append((i, raw, h, w))
+    for nch, grp in by_nch.items():
+        outs = _png_unfilter_batch([g[1] for g in grp], [g[2] for g in grp],
+                                   [g[3] * nch for g in grp], nch)
+        for (i, _, h, w), o in zip(grp, outs):
+            imgs[i] = np.ascontiguousarray(o.reshape(h, w, nch)[:, :, :3])
     return imgs
-
-
-def decode_png(payload) -> np.ndarray:
-    """REAL compressed-image decode of an 8-bit RGB/RGBA non-interlaced
-    PNG to an HxWx3 uint8 array, with no external deps: chunk walk ->
-    stdlib zlib inflate of the concatenated IDAT stream -> all five row
-    filters reversed (``_png_unfilter``).  Alpha is dropped (matching
-    PIL's ``convert("RGB")`` for fully-opaque images).  Interlaced,
-    paletted, or 16-bit PNGs fall back to PIL via decode_image."""
-    raw, h, w, nch = _png_parse(payload)
-    px = _png_unfilter(raw, h, w * nch, nch).reshape(h, w, nch)
-    return px[:, :, :3].copy()
 
 
 def _png_parse(payload) -> tuple[np.ndarray, int, int, int]:
     """Chunk walk + inflate of a PNG payload -> (raw filtered bytes,
-    height, width, channels).  Shared by the single-image decode_png and
-    the across-image batch path (decode_png_batch)."""
+    height, width, channels).  A malformed payload raises ValueError, an
+    unsupported one (not 8-bit RGB/RGBA non-interlaced) NotImplementedError."""
     import zlib
     buf = _as_u8(payload)
     if buf[:8].tobytes() != _PNG_SIG:
@@ -403,6 +301,8 @@ def _png_parse(payload) -> tuple[np.ndarray, int, int, int]:
         pos += 12 + ln  # len + type + data + crc
     if ihdr is None or not idat:
         raise ValueError("PNG missing IHDR/IDAT")
+    if len(ihdr) < 13:
+        raise ValueError("truncated PNG IHDR chunk")
     w = int.from_bytes(ihdr[0:4], "big")
     h = int.from_bytes(ihdr[4:8], "big")
     depth, color, interlace = ihdr[8], ihdr[9], ihdr[12]
@@ -411,9 +311,15 @@ def _png_parse(payload) -> tuple[np.ndarray, int, int, int]:
             f"only 8-bit RGB/RGBA non-interlaced PNG decodes natively "
             f"(depth={depth}, color={color}, interlace={interlace})")
     nch = 3 if color == 2 else 4
-    raw = np.frombuffer(zlib.decompress(b"".join(idat)), np.uint8)
+    try:
+        raw = np.frombuffer(zlib.decompress(b"".join(idat)), np.uint8)
+    except zlib.error as e:
+        raise ValueError(f"corrupt PNG IDAT stream ({e})") from None
     if raw.size != h * (1 + w * nch):
         raise ValueError("PNG inflated size mismatch")
+    ftypes = raw[::1 + w * nch]
+    if (ftypes > 4).any():
+        raise ValueError(f"bad PNG filter type {ftypes[ftypes > 4][0]}")
     return raw, h, w, nch
 
 
@@ -669,7 +575,8 @@ def synth_ppm_table(docs: DataFrame, width: int = 4) -> DataFrame:
 
 def encode_png(px: np.ndarray, filters: str = "cycle") -> bytes:
     """Minimal standards-conforming PNG writer for 8-bit RGB/RGBA arrays
-    (used by synth_png_table; decodable by decode_png AND any libpng/PIL).
+    (used by synth_png_table; decodable by decode_image AND any
+    libpng/PIL).
 
     filters: 'cycle' applies row filter type r % 5 (exercising every
     filter branch of the decoder), 'none' writes filter 0 rows."""
@@ -724,7 +631,7 @@ def synth_png_table(docs: DataFrame, width: int = 4) -> DataFrame:
     become the RGB pixel data of a valid zlib-deflated PNG whose rows
     cycle through ALL FIVE filter types (height = n_bytes // (3*width),
     trailing partial row dropped; docs too short for one row filtered).
-    decode_png must reverse the deflate + every filter to reproduce the
+    decode_image must reverse the deflate + every filter to reproduce the
     original bytes, so the byte-math channel-sum oracle checks the whole
     compressed pipeline."""
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -758,7 +665,7 @@ def synth_jpeg_table(docs: DataFrame, width_blocks: int = 2) -> DataFrame:
     byte per block, `width_blocks` blocks per row; trailing partial block
     row dropped, docs shorter than one row filtered).  With an all-ones
     quant table a constant block is LOSSLESS (DC = 8*(c-128) exactly, zero
-    AC), so decode_jpeg must reproduce every pixel bit-exactly through the
+    AC), so decode_image must reproduce every pixel bit-exactly through the
     full marker + Huffman + IDCT pipeline — checkable against the same
     kind of byte-math oracle as the PPM/PNG gates, which never touches
     JPEG code."""
@@ -856,27 +763,38 @@ def audio_stats_table(media: DataFrame) -> DataFrame:
     return media.mapInArrow(run, AUDIO_STATS_SCHEMA)
 
 
+def _decoded_images(batch: pa.RecordBatch) -> tuple[pa.Array, list]:
+    """(doc_id column, decoded HxWx3 images) of one Arrow batch of image
+    rows.  A payload that fails to decode raises ValueError naming its
+    doc_id."""
+    from .jpeg import PayloadError
+    doc = batch.column(batch.schema.get_field_index("doc_id"))
+    flat, offsets = binary_flat(
+        batch.column(batch.schema.get_field_index("payload")))
+    try:
+        return doc, _decode_image_batch(flat, offsets)
+    except PayloadError as e:
+        raise ValueError(f"{e} decoding doc_id={doc[e.index]}") from e
+
+
 IMAGE_STATS_SCHEMA = ("doc_id string, height int, width int, "
                       "sum_r bigint, sum_g bigint, sum_b bigint")
 
 
 def image_stats_table(media: DataFrame) -> DataFrame:
-    """REAL decode of image payloads (PPM/BMP/PNG/JPEG/WAV-adjacent
-    formats via decode_image; PNGs batch-unfilter across images) ->
-    shape + exact integer per-channel sums (integer outputs so the driver
-    can compare them value-exactly against a byte-math oracle; floats
-    never cross engines)."""
+    """REAL decode of image payloads (PPM/BMP/PNG/JPEG via
+    _decode_image_batch) -> shape + exact integer per-channel sums
+    (integer outputs so the driver can compare them value-exactly against
+    a byte-math oracle; floats never cross engines)."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            doc = batch.column(batch.schema.get_field_index("doc_id"))
-            flat, offsets = binary_flat(
-                batch.column(batch.schema.get_field_index("payload")))
-            n = offsets.size - 1
+            doc, imgs = _decoded_images(batch)
+            n = len(imgs)
             hs = np.empty(n, np.int32)
             ws = np.empty(n, np.int32)
             sums = np.empty((n, 3), np.int64)
-            for i, img in enumerate(_decode_image_batch(flat, offsets)):
+            for i, img in enumerate(imgs):
                 hs[i], ws[i] = img.shape[0], img.shape[1]
                 sums[i] = img.reshape(-1, 3).sum(axis=0, dtype=np.int64)
             yield pa.RecordBatch.from_arrays(
@@ -895,23 +813,20 @@ IMAGE_DECODE_SCHEMA = ("doc_id string, height int, width int, "
 
 def decode_image_table(media: DataFrame, out_w: int | None = None,
                        out_h: int | None = None) -> DataFrame:
-    """Decode image payloads (PPM/BMP via the pure-NumPy decoders) to shape
-    + per-channel means; optional nearest-neighbor resize first.
+    """Decode image payloads (PPM/BMP/PNG/JPEG via _decode_image_batch) to
+    shape + per-channel means; optional nearest-neighbor resize first.
 
-    One Arrow crossing per batch; the per-image decode loop inside is
-    inherent to image decoding (each payload is one independent container),
-    with all pixel math vectorized per image."""
+    One Arrow crossing per batch; PNGs and JPEGs of the batch decode
+    together in the lockstep kernels, other formats per payload."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            doc = batch.column(batch.schema.get_field_index("doc_id"))
-            flat, offsets = binary_flat(
-                batch.column(batch.schema.get_field_index("payload")))
-            n = offsets.size - 1
+            doc, imgs = _decoded_images(batch)
+            n = len(imgs)
             hs = np.empty(n, np.int32)
             ws = np.empty(n, np.int32)
             means = np.empty((n, 3), np.float64)
-            for i, img in enumerate(_decode_image_batch(flat, offsets)):
+            for i, img in enumerate(imgs):
                 if out_w and out_h:
                     img = resize_image(img, out_w, out_h)
                 hs[i], ws[i] = img.shape[0], img.shape[1]

@@ -744,7 +744,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # REAL image decode through the driver gate: valid PPM payloads are
     # synthesized from each document's utf-8 bytes, parsed by the actual
-    # decode_image decoder, and checked as shape + exact channel sums
+    # image decoder, and checked as shape + exact channel sums
     # against a pure byte-math oracle
     def image_decode_stats(spark, sf_dir):
         from .operators.multimodal import image_stats_table, synth_ppm_table
@@ -755,7 +755,8 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # REAL COMPRESSED image decode: the same documents-derived pixel bytes
     # wrapped in valid zlib-deflated PNGs whose rows cycle all five PNG
-    # filters; decode_png (stdlib inflate + NumPy unfilter) must reverse
+    # filters; the PNG batch kernel (stdlib inflate + row-lockstep NumPy
+    # unfilter, behind multimodal._decode_image_batch) must reverse
     # the whole pipeline to satisfy the SAME byte-math oracle as the PPM
     # query — the oracle never touches PNG code, so a matched
     # encoder/decoder bug cannot cancel (filters are additionally pinned
@@ -770,12 +771,12 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # REAL JPEG decode: each document's bytes become the constant 8x8
     # block values of a grayscale BASELINE JPEG (all-ones quant table ->
     # constant blocks are lossless: DC = 8*(c-128) exactly, zero AC), and
-    # the pure-NumPy decode_jpeg (marker walk + canonical Huffman + batched
-    # IDCT, operators/jpeg.py — no PIL) must reproduce every pixel
-    # bit-exactly to satisfy a byte-math oracle that never touches JPEG
-    # code.  Each byte appears in 64 pixels, so channel sums = 64 * byte
-    # sums.  AC/subsampling/restart paths are pinned by unit tests against
-    # an in-test reference IDCT (tests/test_jpeg.py).
+    # the pure-NumPy JPEG batch kernel (marker walk + lockstep canonical
+    # Huffman + batched IDCT, operators/jpeg.py — no PIL) must reproduce
+    # every pixel bit-exactly to satisfy a byte-math oracle that never
+    # touches JPEG code.  Each byte appears in 64 pixels, so channel sums
+    # = 64 * byte sums.  AC/subsampling/restart paths are pinned by unit
+    # tests against an in-test reference IDCT (tests/test_jpeg.py).
     def jpeg_decode_stats(spark, sf_dir):
         from .operators.multimodal import image_stats_table, synth_jpeg_table
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

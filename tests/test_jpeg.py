@@ -1,19 +1,41 @@
-"""Baseline JPEG codec (operators/jpeg.py): the decoder is pinned against
-an IN-TEST reference IDCT (explicit basis-matrix math recomputed here, not
-the decoder's own), the lossless constant-block fixture shape the gate
-query relies on, subsampled color, restart intervals, and loud rejection
-of non-baseline streams.  The gate query's value check is the DuckDB
-byte-math oracle (jpeg_decode_stats); these tests cover the paths the
-DC-only gate payloads cannot reach (AC runs, ZRL, 4:2:0 MCUs, RSTn)."""
+"""Baseline JPEG codec (operators/jpeg.py): the shipped batch decoder is
+pinned against an IN-TEST reference IDCT (explicit basis-matrix math
+recomputed here, not the decoder's own), the lossless constant-block
+fixture shape the gate query relies on, subsampled color, restart
+intervals, loud rejection of non-baseline streams and malformed Huffman
+tables, and byte identity with the scalar decoder of
+tests/scalar_oracle/media.py on clean and corrupt payloads.  The gate
+query's value check is the DuckDB byte-math oracle (jpeg_decode_stats);
+these tests cover the paths the DC-only gate payloads cannot reach (AC
+runs, ZRL, 4:2:0 MCUs, RSTn)."""
 
 from __future__ import annotations
+
+import importlib.util
+import struct
 
 import numpy as np
 import pytest
 
-from streamvbyte_spark.operators.jpeg import (ZIGZAG, decode_jpeg,
+from scalar_oracle import media
+from streamvbyte_spark.operators.jpeg import (_STD_DC_LUM, ZIGZAG,
+                                              PayloadError, _dht_segment,
+                                              _parse_jpeg,
                                               encode_baseline_jpeg,
                                               encode_gray_blocks_jpeg)
+from streamvbyte_spark.operators.multimodal import (_decode_image_batch,
+                                                    decode_image)
+
+
+def _pil_installed() -> bool:
+    return importlib.util.find_spec("PIL") is not None
+
+
+def _batch(payloads: list) -> list[np.ndarray]:
+    """Decode payloads as one Arrow batch through the image dispatcher."""
+    flat = np.frombuffer(b"".join(payloads), np.uint8)
+    return _decode_image_batch(flat,
+                               np.cumsum([0] + [len(p) for p in payloads]))
 
 
 def _ref_idct_plane(blocks, q, hb, wb):
@@ -39,7 +61,7 @@ def test_constant_blocks_lossless():
     including byte values that force DC categories up to 11 and the
     0xFF byte-stuffing path."""
     vals = np.array([0, 255, 128, 1, 254, 127, 129, 200, 55, 13])
-    img = decode_jpeg(encode_gray_blocks_jpeg(vals, width_blocks=2))
+    img = decode_image(encode_gray_blocks_jpeg(vals, width_blocks=2))
     assert img.shape == (40, 16, 3)
     want = np.repeat(np.repeat(vals.reshape(5, 2), 8, 0), 8, 1)
     for ch in range(3):  # grayscale replicated like PIL convert('RGB')
@@ -65,7 +87,7 @@ def test_random_ac_blocks_match_reference_idct():
     jp = encode_baseline_jpeg(
         [{"id": 1, "h": 1, "v": 1, "tq": 0, "blocks": blocks}],
         h=hb * 8, w=wb * 8, quant={0: q})
-    got = decode_jpeg(jp)[:, :, 0]
+    got = decode_image(jp)[:, :, 0]
     assert np.array_equal(got, _ref_idct_plane(blocks, q, hb, wb))
 
 
@@ -86,8 +108,8 @@ def test_420_color_and_cropping():
              {"id": 3, "h": 1, "v": 1, "tq": 1, "blocks": Cr}]
     q = np.ones(64, np.int64)
     for h, w in ((16, 32), (13, 27)):  # full MCUs and cropped
-        img = decode_jpeg(encode_baseline_jpeg(comps, h=h, w=w,
-                                               quant={0: q, 1: q}))
+        img = decode_image(encode_baseline_jpeg(comps, h=h, w=w,
+                                                quant={0: q, 1: q}))
         assert img.shape == (h, w, 3)
         r = int(np.clip(round(y_v + 1.402 * (cr_v - 128)), 0, 255))
         g = int(np.clip(round(y_v - 0.344136 * (cb_v - 128)
@@ -101,7 +123,7 @@ def test_restart_intervals():
     entropy stream re-aligns to a byte boundary; values must not change."""
     rng = np.random.default_rng(13)
     vals = rng.integers(0, 256, 14)
-    plain = decode_jpeg(encode_gray_blocks_jpeg(vals, width_blocks=2))
+    plain = decode_image(encode_gray_blocks_jpeg(vals, width_blocks=2))
     hb = vals.size // 2
     blocks = np.zeros((hb, 2, 64), np.int64)
     blocks[:, :, 0] = 8 * (vals[:hb * 2].reshape(hb, 2) - 128)
@@ -110,7 +132,7 @@ def test_restart_intervals():
         h=hb * 8, w=16, quant={0: np.ones(64, np.int64)},
         restart_interval=3)
     assert b"\xff\xd0" in jp or b"\xff\xd1" in jp
-    assert np.array_equal(decode_jpeg(jp), plain)
+    assert np.array_equal(decode_image(jp), plain)
 
 
 def test_non_baseline_rejected_loudly():
@@ -120,15 +142,17 @@ def test_non_baseline_rejected_loudly():
     sof = jp.find(b"\xff\xc0")
     jp[sof + 1] = 0xC2
     with pytest.raises(NotImplementedError, match="SOF"):
-        decode_jpeg(bytes(jp))
+        _parse_jpeg(bytes(jp))
+    if not _pil_installed():
+        with pytest.raises(NotImplementedError):
+            decode_image(bytes(jp))
     with pytest.raises(ValueError, match="SOI"):
-        decode_jpeg(b"not a jpeg")
+        _parse_jpeg(b"not a jpeg")
 
 
 def test_decode_image_dispatches_jpeg():
-    """decode_image routes FFD8 payloads to the native decoder (no PIL in
-    this container — the gate path)."""
-    from streamvbyte_spark.operators.multimodal import decode_image
+    """decode_image routes FFD8 payloads to the native decoder (the gate
+    path, with or without PIL installed)."""
     vals = np.array([33, 77, 200, 5])
     img = decode_image(np.frombuffer(
         encode_gray_blocks_jpeg(vals, 2), np.uint8))
@@ -143,17 +167,17 @@ def test_pil_crosscheck_if_available():
     import io
     vals = np.arange(0, 256, 17)
     jp = encode_gray_blocks_jpeg(vals, width_blocks=3)
-    ours = decode_jpeg(jp)
+    ours = decode_image(jp)
     theirs = np.asarray(PIL.open(io.BytesIO(jp)).convert("RGB"))
     assert np.array_equal(ours, theirs)
 
 
 def test_jpeg_batch_matches_single():
-    """decode_jpeg_batch (across-image lockstep entropy machine, one lane
-    per restart segment, one Huffman symbol per lane per iteration) must
-    be byte-identical to decode_jpeg on every payload: grayscale random
-    AC (runs, ZRL, EOB), 4:2:0 color with cropping, restart intervals,
-    DC categories up to 11, mixed sizes in one batch."""
+    """The lockstep batch decoder (one lane per restart segment, one
+    Huffman symbol per lane per iteration) must be byte-identical to the
+    scalar oracle on every payload: grayscale random AC (runs, ZRL, EOB),
+    4:2:0 color with cropping, restart intervals, DC categories up to 11,
+    mixed sizes in one batch."""
     rng = np.random.default_rng(21)
     payloads = []
     for hb, wb in [(2, 3), (4, 5), (1, 1)]:
@@ -186,33 +210,30 @@ def test_jpeg_batch_matches_single():
         [{"id": 1, "h": 1, "v": 1, "tq": 0, "blocks": blocks}],
         h=56, w=16, quant={0: ones}, restart_interval=3))
     payloads.append(encode_gray_blocks_jpeg(np.array([0, 255, 128, 13]), 2))
-    from streamvbyte_spark.operators.jpeg import decode_jpeg_batch
-    batch = decode_jpeg_batch(payloads)
-    for i, (p, got) in enumerate(zip(payloads, batch)):
-        np.testing.assert_array_equal(got, decode_jpeg(p), err_msg=str(i))
-    # and through the Arrow-batch image driver, mixed with a PPM
-    from streamvbyte_spark.operators.multimodal import (_decode_image_batch,
-                                                        decode_image)
+    for i, (p, got) in enumerate(zip(payloads, _batch(payloads))):
+        np.testing.assert_array_equal(got, media.decode_jpeg(p),
+                                      err_msg=str(i))
+    # mixed with a PPM, which the dispatcher decodes per payload
     ppm = b"P6\n2 2\n255\n" + bytes(range(12))
     mixed = [payloads[1], ppm, payloads[3], payloads[5]]
-    flat = np.frombuffer(b"".join(mixed), np.uint8)
-    offsets = np.cumsum([0] + [len(m) for m in mixed])
-    for m, got in zip(mixed, _decode_image_batch(flat, offsets)):
-        np.testing.assert_array_equal(got, decode_image(m))
+    got = _batch(mixed)
+    np.testing.assert_array_equal(
+        got[1], np.arange(12, dtype=np.uint8).reshape(2, 2, 3))
+    for k in (0, 2, 3):
+        np.testing.assert_array_equal(got[k], media.decode_jpeg(mixed[k]))
 
 
-def test_jpeg_batch_corrupt_payload_falls_back_per_image():
-    """One corrupt entropy stream in a batch must not fail the whole Arrow
-    batch (r8 advice item 2): the lockstep machine raises on a lane that
-    overruns its segment, where the single-image _BitReader zero-fills a
-    truncated stream — decode_jpeg_batch must fall back per payload and
-    stay byte-identical to decode_jpeg on EVERY payload, garbage row
-    included."""
+def test_jpeg_batch_corrupt_payload_matches_oracle():
+    """A corrupt payload in a batch gets exactly the scalar oracle's
+    outcome.  A truncated entropy stream decodes: past the end of its
+    segment a lane reads zero bits, as the oracle's reader does, and the
+    clean neighbours decode unchanged.  An invalid Huffman code raises
+    PayloadError (a ValueError) naming the payload's index."""
     rng = np.random.default_rng(33)
     good_a = encode_gray_blocks_jpeg(np.array([10, 200, 45, 99]), 2)
     good_b = encode_gray_blocks_jpeg(rng.integers(0, 256, 8), 2)
     # long random-AC payload, entropy chopped to ~30%: plenty of units
-    # remain, so the zero pad cannot complete the lane (overrun -> raise)
+    # remain, so the lane runs far past its segment end
     blocks = np.zeros((8, 8, 64), np.int64)
     for i in range(8):
         for j in range(8):
@@ -226,28 +247,133 @@ def test_jpeg_batch_corrupt_payload_falls_back_per_image():
     cut = ent0 + (len(jp) - 2 - ent0) * 3 // 10
     while jp[cut - 1] == 0xFF or jp[cut] == 0xFF:
         cut -= 1                       # never split a stuffing pair
-    corrupt = jp[:cut] + b"\xff\xd9"
-    from streamvbyte_spark.operators.jpeg import (_entropy_decode_batch,
-                                                  _parse_jpeg, _scan_layout,
-                                                  decode_jpeg_batch)
-    payloads = [good_a, corrupt, good_b]
-    parsed = [_parse_jpeg(p) for p in payloads]
-    jobs = [(data, pos, scan, huff, ri, _scan_layout(frame, scan))
-            for (data, frame, scan, qt, huff, ri, pos) in parsed]
-    # the corruption must actually trip the batch machine, or this test
-    # would pass without ever exercising the fallback
+    truncated = jp[:cut] + b"\xff\xd9"
+    got = _batch([good_a, truncated, good_b])
+    for p, g in zip([good_a, truncated, good_b], got):
+        np.testing.assert_array_equal(g, media.decode_jpeg(p))
+    # sixteen 1-bits (FF00 de-stuffs to FF) match no Annex K DC code
+    bad = jp[:ent0] + b"\xff\x00\xff\x00" + jp[ent0 + 4:]
+    with pytest.raises(ValueError, match="Huffman"):
+        media.decode_jpeg(bad)
+    with pytest.raises(PayloadError, match="Huffman") as err:
+        _batch([good_a, bad, good_b])
+    assert err.value.index == 1
+
+
+def test_zero_size_frame_with_restarts_decodes_alone():
+    """A frame of zero height has no blocks, so with a restart interval it
+    must get no lockstep lane at all: a lane there would decode its
+    segment into the NEXT image's coefficients (or past the last one)."""
+    rng = np.random.default_rng(8)
+    blocks = np.zeros((3, 2, 64), np.int64)
+    blocks[..., 1:20] = rng.integers(-60, 60, (3, 2, 19))
+    jp = encode_baseline_jpeg(
+        [{"id": 1, "h": 1, "v": 1, "tq": 0, "blocks": blocks}],
+        h=24, w=16, quant={0: np.ones(64, np.int64)}, restart_interval=1)
+    sof = jp.find(b"\xff\xc0")
+    empty = jp[:sof + 5] + b"\x00\x00" + jp[sof + 7:]      # height 0
+    assert media.decode_jpeg(empty).shape == (0, 16, 3)
+    for batch in ([empty, jp], [jp, empty]):
+        for p, got in zip(batch, _batch(batch)):
+            np.testing.assert_array_equal(got, media.decode_jpeg(p))
+
+
+def _with_extra_dht(jp: bytes, body: bytes) -> bytes:
+    """jp with one more DHT segment (raw body) right before its SOS."""
+    sos = jp.find(b"\xff\xda")
+    seg = b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
+    return jp[:sos] + seg + jp[sos:]
+
+
+_BITS_1x2 = bytes([2] + [0] * 15)           # two 1-bit codes
+
+
+@pytest.mark.parametrize("body", [
+    bytes([0x00]) + bytes(10),                        # bits cut short
+    bytes([0x00]) + _BITS_1x2 + bytes([0]),           # huffval cut short
+    bytes([0x00, 3] + [0] * 15) + bytes([0, 1, 2]),   # 3 codes of 1 bit
+    bytes([0x00]) + _BITS_1x2 + bytes([0, 12]),       # DC category 12
+    bytes([0x10]) + _BITS_1x2 + bytes([0x00, 0x1B]),  # AC size 11
+], ids=["truncated_bits", "truncated_huffval", "oversubscribed",
+        "dc_category_12", "ac_size_11"])
+def test_malformed_dht_rejected(body):
+    """T.81 F.1.2 bounds: a malformed DHT raises ValueError at parse time
+    in both decoders (they share _parse_jpeg), before the lockstep
+    machine's 32-bit peek could wrap on an oversized symbol."""
+    jp = _with_extra_dht(encode_gray_blocks_jpeg(np.array([3, 250]), 2),
+                         body)
+    with pytest.raises(ValueError, match="DHT|Huffman"):
+        _parse_jpeg(jp)
+    with pytest.raises(PayloadError):
+        decode_image(jp)
+
+
+def test_dht_repeated_symbol_decodes_every_code():
+    """A DHT may list a symbol twice; each of its codes must still decode.
+    The Annex K DC table with category 11 replaced by a second category 0
+    keeps the stream valid for data that never uses category 11."""
+    bits, huffval = _STD_DC_LUM
+    dht = _dht_segment(0, 0, bits, huffval)
+    jp = encode_gray_blocks_jpeg(np.array([40, 40, 41, 41, 90, 90]), 2)
+    assert jp.count(dht) == 1
+    dup = jp.replace(dht, _dht_segment(0, 0, bits, huffval[:11] + [0]))
+    want = media.decode_jpeg(dup)
+    np.testing.assert_array_equal(want, media.decode_jpeg(jp))
+    np.testing.assert_array_equal(_batch([jp, dup])[1], want)
+
+
+def _segment(jp: bytes, marker: int) -> tuple[int, int]:
+    """(start, end) of the first segment with this marker code."""
+    start = jp.find(bytes([0xFF, marker]))
+    return start, start + 2 + int.from_bytes(jp[start + 2:start + 4], "big")
+
+
+def _edit(jp: bytes, marker: int, body_off: int, value: int) -> bytes:
+    """jp with one byte of a segment body overwritten."""
+    at = _segment(jp, marker)[0] + 4 + body_off
+    return jp[:at] + bytes([value]) + jp[at + 1:]
+
+
+def _short_segment(jp: bytes, marker: int, keep: int) -> bytes:
+    """jp with a segment cut to its first `keep` body bytes."""
+    start, end = _segment(jp, marker)
+    seg = bytes([0xFF, marker]) + struct.pack(">H", 2 + keep) \
+        + jp[start + 4:start + 4 + keep]
+    return jp[:start] + seg + jp[end:]
+
+
+def _before_sos(jp: bytes, seg: bytes) -> bytes:
+    sos = jp.find(b"\xff\xda")
+    return jp[:sos] + seg + jp[sos:]
+
+
+_GRAY = encode_gray_blocks_jpeg(np.array([3, 250, 17, 99]), 2)
+
+
+@pytest.mark.parametrize("jp", [
+    _short_segment(_GRAY, 0xC0, 4),                      # was struct.error
+    _before_sos(_GRAY, b"\xff\xdd\x00\x03\x00"),          # was struct.error
+    _short_segment(_GRAY, 0xDB, 11),                     # 10-entry table
+    _edit(_GRAY, 0xDA, 1, 9),                            # was StopIteration
+    _edit(_GRAY, 0xDA, 2, 0x11),                         # was KeyError
+    _edit(_GRAY, 0xC0, 8, 3),                            # was KeyError
+], ids=["short_sof0", "short_dri", "short_dqt", "sos_undeclared_component",
+        "sos_undefined_huffman_table", "undefined_quant_table"])
+def test_malformed_header_raises_value_error(jp):
+    """Every malformed header raises ValueError from the shared parser, so
+    the batch decoder and the scalar oracle fail the same way."""
     with pytest.raises(ValueError):
-        _entropy_decode_batch(jobs)
-    got = decode_jpeg_batch(payloads)
-    assert len(got) == 3
-    for p, g in zip(payloads, got):
-        np.testing.assert_array_equal(g, decode_jpeg(p))
+        _parse_jpeg(jp)
+    with pytest.raises(ValueError):
+        media.decode_jpeg(jp)
+    with pytest.raises(PayloadError):
+        decode_image(jp)
 
 
 def test_peek_lut_cache_is_bounded():
-    """The 2^16 peek-LUT cache is LRU-bounded (r8 advice item 3): a corpus
-    of JPEGs with many distinct optimized Huffman tables must not grow
-    executor memory for process lifetime, and re-use must still hit."""
+    """The 2^16 peek-LUT cache is LRU-bounded: a corpus of JPEGs with many
+    distinct optimized Huffman tables must not grow executor memory for
+    process lifetime, and re-use must still hit."""
     from streamvbyte_spark.operators.jpeg import (_PEEK_LUT_CAP, _PEEK_LUTS,
                                                   _HuffTable, _peek_lut)
     tables = []

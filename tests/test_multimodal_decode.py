@@ -6,6 +6,7 @@ must raise NotImplementedError when PIL/soundfile are absent."""
 from __future__ import annotations
 
 import struct
+import zlib
 
 import numpy as np
 import pytest
@@ -120,27 +121,27 @@ def test_compressed_formats_raise_without_optional_deps():
 
 def test_png_roundtrip_all_filters():
     """encode_png('cycle') writes every one of the five PNG row filters;
-    decode_png must invert deflate + unfiltering bit-exactly."""
-    from streamvbyte_spark.operators.multimodal import decode_png, encode_png
+    the shipped decoder (and the scalar oracle) must invert deflate +
+    unfiltering bit-exactly."""
+    from scalar_oracle import media
+    from streamvbyte_spark.operators.multimodal import encode_png
     rng = np.random.default_rng(11)
     for h, w in [(1, 1), (5, 4), (7, 3), (13, 9)]:
         img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
         for filters in ("cycle", "none"):
             png = encode_png(img, filters)
-            np.testing.assert_array_equal(decode_png(png), img)
-            # and through the dispatching decode_image entry point
             np.testing.assert_array_equal(decode_image(png), img)
+            np.testing.assert_array_equal(media.decode_png(png), img)
 
 
 def test_png_batch_unfilter_matches_single():
-    """The across-image batch PNG path (decode_png_batch /
-    _decode_image_batch) must be byte-identical to the single-image
-    decode on every payload: mixed sizes, RGB and RGBA lanes, all five
-    filter types (cycle), non-PNG payloads interleaved through the Arrow
-    batch driver."""
-    from streamvbyte_spark.operators.multimodal import (
-        _decode_image_batch, decode_image, decode_png, decode_png_batch,
-        encode_png)
+    """The row-lockstep batch PNG path (_decode_image_batch) must be
+    byte-identical to the scalar oracle on every payload: mixed sizes,
+    RGB and RGBA lanes, all five filter types (cycle), a non-PNG payload
+    interleaved."""
+    from scalar_oracle import media
+    from streamvbyte_spark.operators.multimodal import (_decode_image_batch,
+                                                        encode_png)
     rng = np.random.default_rng(11)
     payloads = []
     for h, w, nch in [(1, 1, 3), (3, 5, 3), (17, 9, 4), (32, 32, 3),
@@ -149,53 +150,82 @@ def test_png_batch_unfilter_matches_single():
         payloads.append(encode_png(px, "cycle"))
     payloads.append(encode_png(
         rng.integers(0, 256, (6, 6, 3), dtype=np.uint8), "none"))
-    batch = decode_png_batch([np.frombuffer(p, np.uint8) for p in payloads])
-    for p, got in zip(payloads, batch):
-        np.testing.assert_array_equal(got, decode_png(p))
-    # through the Arrow-batch driver with a PPM payload interleaved
     ppm = b"P6\n2 2\n255\n" + bytes(range(12))
-    mixed = [payloads[0], ppm, payloads[2]]
+    mixed = payloads[:1] + [ppm] + payloads[1:]
     flat = np.frombuffer(b"".join(mixed), np.uint8)
     offsets = np.cumsum([0] + [len(m) for m in mixed])
     out = _decode_image_batch(flat, offsets)
-    for m, got in zip(mixed, out):
-        np.testing.assert_array_equal(got, decode_image(m))
+    np.testing.assert_array_equal(
+        out[1], np.arange(12, dtype=np.uint8).reshape(2, 2, 3))
+    for m, got in zip(payloads, out[:1] + out[2:]):
+        np.testing.assert_array_equal(got, media.decode_png(m))
 
 
 def test_png_unfilter_spec_vectors():
     """Hand-computed reconstructions straight from the PNG spec (§6) — a
     matched encoder/decoder bug cannot cancel here because the expected
-    bytes were derived by hand, not by encode_png."""
-    from streamvbyte_spark.operators.multimodal import _png_unfilter
-    # Sub row then Paeth row, w=2 (bpp=3, stride=6)
-    raw = np.array([1, 1, 2, 3, 250, 5, 6,
-                    4, 10, 20, 30, 40, 50, 60], np.uint8)
-    out = _png_unfilter(raw, h=2, stride=6, bpp=3)
-    np.testing.assert_array_equal(out[0], [1, 2, 3, 251, 7, 9])
-    np.testing.assert_array_equal(out[1], [11, 22, 33, 35, 72, 93])
-    # None row then Average row
-    raw = np.array([0, 100, 200, 50, 7, 9, 11,
-                    3, 10, 10, 10, 10, 10, 10], np.uint8)
-    out = _png_unfilter(raw, h=2, stride=6, bpp=3)
-    np.testing.assert_array_equal(out[0], [100, 200, 50, 7, 9, 11])
-    np.testing.assert_array_equal(out[1], [60, 110, 35, 43, 69, 33])
-    # Up row seeded by a Sub row
-    raw = np.array([1, 5, 5, 5, 5, 5, 5,
-                    2, 1, 2, 3, 4, 5, 6], np.uint8)
-    out = _png_unfilter(raw, h=2, stride=6, bpp=3)
-    np.testing.assert_array_equal(out[0], [5, 5, 5, 10, 10, 10])
-    np.testing.assert_array_equal(out[1], [6, 7, 8, 14, 15, 16])
+    bytes were derived by hand, not by encode_png.  Each vector runs alone
+    and then all three in one lockstep batch."""
+    from streamvbyte_spark.operators.multimodal import _png_unfilter_batch
+    vectors = [
+        # Sub row then Paeth row, w=2 (bpp=3, stride=6)
+        ([1, 1, 2, 3, 250, 5, 6, 4, 10, 20, 30, 40, 50, 60],
+         [[1, 2, 3, 251, 7, 9], [11, 22, 33, 35, 72, 93]]),
+        # None row then Average row
+        ([0, 100, 200, 50, 7, 9, 11, 3, 10, 10, 10, 10, 10, 10],
+         [[100, 200, 50, 7, 9, 11], [60, 110, 35, 43, 69, 33]]),
+        # Up row seeded by a Sub row
+        ([1, 5, 5, 5, 5, 5, 5, 2, 1, 2, 3, 4, 5, 6],
+         [[5, 5, 5, 10, 10, 10], [6, 7, 8, 14, 15, 16]]),
+    ]
+    raws = [np.array(raw, np.uint8) for raw, _ in vectors]
+    for raw, (_, want) in zip(raws, vectors):
+        out = _png_unfilter_batch([raw], [2], [6], 3)[0]
+        np.testing.assert_array_equal(out, want)
+    for out, (_, want) in zip(
+            _png_unfilter_batch(raws, [2] * 3, [6] * 3, 3), vectors):
+        np.testing.assert_array_equal(out, want)
 
 
 def test_png_rejects_unsupported_shapes():
-    from streamvbyte_spark.operators.multimodal import decode_png, encode_png
+    from streamvbyte_spark.operators.multimodal import _png_parse, encode_png
     png = bytearray(encode_png(np.zeros((2, 2, 3), np.uint8)))
     # flip IHDR bit depth (offset: 8 sig + 8 chunk hdr + 8 w/h) to 16
     png[8 + 8 + 8] = 16
     with pytest.raises(NotImplementedError):
-        decode_png(bytes(png))
+        _png_parse(bytes(png))
     with pytest.raises(ValueError):
-        decode_png(b"\x89PNG\r\n\x1a\nnot-chunks")
+        decode_image(b"\x89PNG\r\n\x1a\nnot-chunks")
+
+
+def _png_chunk(typ: bytes, data: bytes) -> bytes:
+    return (struct.pack(">I", len(data)) + typ + data
+            + struct.pack(">I", zlib.crc32(typ + data)))
+
+
+@pytest.mark.parametrize("case", ["corrupt_deflate", "short_ihdr",
+                                  "bad_filter_type"])
+def test_png_malformed_raises_value_error(case):
+    """Malformed PNGs raise ValueError from the shared parser: a corrupt
+    deflate stream (was zlib.error), a short IHDR (was IndexError) and a
+    filter type above 4, which the parser rejects before any unfilter."""
+    from streamvbyte_spark.operators.multimodal import _PNG_SIG, _png_parse
+    ihdr = struct.pack(">IIBBBBB", 2, 1, 8, 2, 0, 0, 0)
+    rows = bytes([0] + [9] * 6)
+    if case == "corrupt_deflate":
+        chunks = [(b"IHDR", ihdr), (b"IDAT", zlib.compress(rows)[:-5])]
+    elif case == "short_ihdr":
+        chunks = [(b"IHDR", ihdr[:9]), (b"IDAT", zlib.compress(rows))]
+    else:
+        chunks = [(b"IHDR", ihdr),
+                  (b"IDAT", zlib.compress(bytes([7]) + rows[1:]))]
+    png = _PNG_SIG + b"".join(_png_chunk(t, d) for t, d in chunks) \
+        + _png_chunk(b"IEND", b"")
+    with pytest.raises(ValueError):
+        _png_parse(png)
+    with pytest.raises(ValueError):
+        decode_image(png)
+
 
 
 def test_ima_adpcm_matches_scalar_reference():

@@ -558,6 +558,37 @@ def test_decode_image_table_real_ppm(spark):
     assert all(r.height == 4 and r.width == 4 for r in got2)
 
 
+def test_image_tables_name_failing_doc_id(spark):
+    """One corrupt JPEG among clean JPEG/PNG/PPM rows of one Arrow batch
+    fails both image table kernels with a ValueError naming its doc_id."""
+    from streamvbyte_spark.operators.jpeg import encode_gray_blocks_jpeg
+    from streamvbyte_spark.operators.multimodal import (decode_image_table,
+                                                        encode_png,
+                                                        image_stats_table)
+    from tests.test_multimodal_decode import make_ppm
+
+    rng = np.random.default_rng(4)
+    jp = encode_gray_blocks_jpeg(np.array([1, 2, 3, 4]), 2)
+    sos = jp.find(b"\xff\xda")
+    ent0 = sos + 2 + int.from_bytes(jp[sos + 2:sos + 4], "big")
+    # sixteen 1-bits (FF00 de-stuffs to FF) match no Annex K DC code
+    bad = jp[:ent0] + b"\xff\x00\xff\x00" + jp[ent0 + 4:]
+    rows = [("j0", jp),
+            ("p1", encode_png(rng.integers(0, 256, (5, 4, 3), np.uint8))),
+            ("bad", bad),
+            ("m3", make_ppm(rng.integers(0, 256, (2, 2, 3), np.uint8)))]
+    df = spark.createDataFrame(
+        [(d, bytearray(p)) for d, p in rows],
+        "doc_id string, payload binary").coalesce(1)
+    clean = df.where(F.col("doc_id") != "bad")
+    for table in (image_stats_table, decode_image_table):
+        assert table(clean).count() == 3
+        with pytest.raises(Exception,
+                           match="ValueError: invalid JPEG Huffman code "
+                                 "decoding doc_id=bad"):
+            table(df).collect()
+
+
 def test_connected_components_known_graph(spark):
     """Label propagation must find exact components on a graph with a long
     chain (stresses multi-round convergence), a triangle, and an isolated

@@ -58,8 +58,8 @@ NOTES = {
         "MapInArrow over the parquet scan — a dataloader-shaped plan.",
     "png_decode_stats": "Real compressed decode: one MapInArrow "
         "synthesizes the PNG containers, one decodes (zlib inflate + "
-        "filter reversal); map-only after the derived single-row-group "
-        "fanout exchange (r11).",
+        "row-lockstep filter reversal over the whole batch); map-only "
+        "after the derived single-row-group fanout exchange.",
     "auto_roundtrip": "Expected: scan -> derived single-row-group fanout "
                       "Exchange of the RAW TEXT rows (r11; absent on a "
                       "multi-file corpus) -> JVM tokenizer -> "
@@ -203,15 +203,15 @@ NOTES = {
         "cost-only kernel; EF joins the per-row argmin only where the "
         "row is non-decreasing (vectorized mask) — no extra scan, no "
         "shuffle.",
-    "jpeg_decode_stats": "Real baseline JPEG decode (r7, no PIL): one "
+    "jpeg_decode_stats": "Real baseline JPEG decode (no PIL): one "
         "MapInArrow synthesizes lossless constant-block JPEGs, one runs "
-        "the marker walk + canonical Huffman + batched einsum IDCT; "
-        "map-only after the derived single-row-group fanout exchange "
-        "(r11).",
-    "adpcm_decode_stats": "Real compressed-audio decode (r7, no "
-        "soundfile): block-vectorized IMA ADPCM — state arrays across "
-        "blocks, the loop is over samples-in-block; map-only after the "
-        "derived single-row-group fanout exchange (r11).",
+        "the marker walk + lockstep canonical Huffman over the whole batch "
+        "+ one batched einsum IDCT; map-only after the derived "
+        "single-row-group fanout exchange.",
+    "adpcm_decode_stats": "Real compressed-audio decode (no soundfile): "
+        "block-vectorized IMA ADPCM — state arrays across blocks, the "
+        "loop is over samples-in-block; map-only after the derived "
+        "single-row-group fanout exchange.",
     "index_intersect": "AND serving from the encoded set wire, "
         "co-grouped: common dids can only live in co-occupied chunks "
         "(chunking is by did div span, term-independent), so the two "
