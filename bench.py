@@ -34,11 +34,11 @@ AVG_LEN = int(os.environ.get("SPARK_GRAFT_BENCH_AVG_LEN", "512"))
 def _converged_passes(run, min_reps: int = 3, max_reps: int = 8,
                       tol: float = 0.15) -> list[float]:
     """Run `run()` until the last two pass times agree within `tol` (cap
-    `max_reps`).  The r6 artifact took best-of-3 from passes that were still
-    monotonically descending (10.0 -> 3.0 -> 1.7 s: first-touch allocation +
-    JIT, not steady state) and published a phantom 1.9x encode regression;
+    `max_reps`).  A best-of-3 over passes that are still monotonically
+    descending (10.0 -> 3.0 -> 1.7 s: first-touch allocation + JIT, not
+    steady state) once published a phantom 1.9x encode regression;
     convergence-gated reps make the artifact measure the kernel, not the
-    session heap (r6 verdict item 1)."""
+    session heap."""
     times: list[float] = []
     while len(times) < max_reps:
         t0 = time.perf_counter()
@@ -53,13 +53,12 @@ def _converged_passes(run, min_reps: int = 3, max_reps: int = 8,
 
 def _mem_stats(spark) -> dict:
     """Session-memory snapshot emitted per headliner so a BENCH artifact
-    anomaly is attributable from the artifact alone (r8 verdict item 4:
-    the driver-session BENCH_r08 read 14-100% slow on untouched queries;
-    nothing in the artifact showed WHY).  jvm_cached_mb = storage memory
-    of persisted/checkpointed RDD blocks; driver_rss_mb = this Python
-    process (local mode: Spark JVM is a child, Python workers are
-    separate — the JVM block number is the one that tracked the r7
-    escalation)."""
+    anomaly is attributable from the artifact alone (a session once read
+    14-100% slow on untouched queries and nothing in the artifact showed
+    why).  jvm_cached_mb = storage memory of persisted/checkpointed RDD
+    blocks; driver_rss_mb = this Python process (local mode: Spark JVM is
+    a child, Python workers are separate — the JVM block number is the one
+    that tracks a checkpoint-generation leak)."""
     cached = -1.0
     try:
         cached = sum(i.memSize() for i in
@@ -112,7 +111,7 @@ def throughput_job(spark, n_docs: int, partitions: int):
     dec_times = _converged_passes(_dec)
     # svb-only wire bytes on the same table: the artifact itself shows the
     # auto-selector's wire win (the encoded pack writer ships auto bytes
-    # over both shuffle legs — r6)
+    # over both shuffle legs)
     svb_bytes = (encode_table(tok, codec="svb")
                  .agg(F.sum("out_bytes")).collect()[0][0])
     enc.unpersist()
@@ -139,9 +138,9 @@ def main():
 
     # throughput job FIRST (perf.c framing): it must see a clean heap —
     # running it after the checkpoint-heavy staged queries measured executor
-    # memory pressure, not the kernels (r6 artifact: encode passes still
-    # monotonically descending 10.0/3.0/1.7 -> phantom 1.9x "regression";
-    # r6 verdict item 1).  Reps are convergence-gated (_converged_passes).
+    # memory pressure, not the kernels (encode passes still monotonically
+    # descending 10.0/3.0/1.7 -> a phantom 1.9x "regression").  Reps are
+    # convergence-gated (_converged_passes).
     tp = throughput_job(spark, N_DOCS, partitions=CPUS * 2)
 
     # headline operator queries at SF_DIR (one unmeasured warm-up first:
@@ -151,45 +150,42 @@ def main():
                 "svb_size", "metrics_by_source",
                 # pipeline operators (round-over-round perf coverage beyond
                 # the codec): shingle-hash MinHash LSH dedup + bucketed ANN +
-                # hyperplane-banded near-dup (r3: signature tables now
-                # materialized once before the self-join) + the
+                # hyperplane-banded near-dup (signature tables materialized
+                # once before the self-join) + the
                 # encoded-bytes-over-the-wire fused chunked decode
                 "dedup_minhash_pairs", "ann_lsh", "embedding_neardup",
                 "chunked_fused_roundtrip",
-                # r4: simhash now one Arrow pandas UDF (was 32 interpreted
-                # HOF passes/doc); auto_full's fsst winners now encode via
-                # the whole-batch kernel (was a per-row registry loop) —
-                # both benched for the round-over-round delta
+                # simhash as one Arrow pandas UDF (not 32 interpreted HOF
+                # passes/doc); auto_full's fsst winners encode via the
+                # whole-batch kernel (not a per-row registry loop)
                 "dedup_simhash", "auto_full_roundtrip",
-                # r5: the materialized pack writers — SQL form (raw-token
+                # the materialized pack writers — SQL form (raw-token
                 # wire) vs the encoded-wire operator, benched side by side
                 "pack_sequences", "pack_sequences_encoded",
-                # r6: the end-to-end curation composite (dedup ->
-                # decontaminate -> length gate -> pack/byte budget) now sits
-                # in the driver gate window; bench it alongside (r5 advice
-                # item 7)
+                # the end-to-end curation composite (dedup -> decontaminate
+                # -> length gate -> pack/byte budget): a gated query, so it
+                # is benched beside its parts
                 "curation_pipeline",
-                # r7: the all-encoded curated pack writer (encode at the
+                # the all-encoded curated pack writer (encode at the
                 # scan; md5 rank window + contamination anti-join over
                 # encoded rows; no raw-token shuffle) — the flagship
-                # production composite, benched for round-over-round
+                # production composite
                 "curated_pack_encoded",
-                # r8: the stored-pack round trip (write the encoded pack
+                # the stored-pack round trip (write the encoded pack
                 # table to parquet, read it back, decode + checksum-verify)
                 # — the dataloader-serving hot path at training time; a
-                # read-path regression was previously invisible round-over-
-                # round (r7 verdict item 6)
+                # read-path regression is invisible without it
                 "pack_store_roundtrip",
-                # r8: the inverted-index family — the skew-proof chunked
+                # the inverted-index family — the skew-proof chunked
                 # build (groupBy (term, did div span) + EF per chunk),
                 # boolean-AND serving from the encoded wire, and the
                 # TF-weighted integer top-k
                 "index_build_chunked", "index_intersect", "index_topk_and",
-                # r9: phrase serving from the positional wire (decode only
-                # the probed terms' chunks -> occurrence rows -> adjacency
-                # join) — the canonical positional-index workload
+                # phrase serving from the positional wire (decode only the
+                # probed terms' chunks, adjacency probed in-lane) — the
+                # canonical positional-index workload
                 "index_phrase_match",
-                # r10: k-way boolean AND (3-term chunk_id join + in-lane
+                # k-way boolean AND (3-term chunk alignment + in-lane
                 # intersect fold) — real queries have > 2 terms; benched
                 # beside the 2-term form for the per-term marginal cost
                 "index_and_multi"]
@@ -201,7 +197,7 @@ def main():
         # (CLAUDE.md "Environment quirks"; see BENCH/BASELINE.md's
         # auto_roundtrip noise analysis).  The per-pass lists go into the
         # JSON so the artifact itself shows whether a round-over-round
-        # delta exceeds the session spread (r4 verdict item 5).
+        # delta exceeds the session spread.
         queries[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
         passes[name] = []
         for _ in range(3):
@@ -211,8 +207,8 @@ def main():
             # ContextCleaner reaps the RDD.  Without this, repeated passes
             # of the checkpoint-heavy queries accumulate executor-memory
             # blocks and the LATER passes measure memory pressure, not the
-            # query (r6: pack_sequences_encoded recorded [6.3, 4.9, 12.8] s
-            # in one session vs ~2.1 s controlled).
+            # query (pack_sequences_encoded once recorded
+            # [6.3, 4.9, 12.8] s in one session vs ~2.1 s controlled).
             import gc
             df = None
             gc.collect()
@@ -258,10 +254,10 @@ def main():
     }
     # per-pass times + per-headliner memory snapshots are the artifact's
     # self-adjudication data (session spread / generation-leak detection),
-    # but they grew the single stdout JSON line to ~3.3 KB in r9 and the
-    # driver tails only the LAST 2000 chars — BENCH_r09 recorded
-    # parsed: null, losing the headline (r9 verdict item 3).  They now go
-    # to stderr AND BENCH/DETAIL_last.json; stdout stays one COMPACT line.
+    # but on stdout they grow the single JSON line to ~3.3 KB, and a reader
+    # that tails only the LAST 2000 chars parses nothing and loses the
+    # headline.  They go to stderr AND BENCH/DETAIL_last.json; stdout
+    # stays one COMPACT line.
     detail = {"query_passes": passes, "query_mem": mem}
     print(json.dumps(detail), file=sys.stderr)
     try:

@@ -29,23 +29,35 @@ Two build shapes:
   (``tok_start``, each chunk's offset in the term's full list) is computed
   by a window over CHUNK AGGREGATES — n_docs/span rows per term, not df.
 
-Serving (``intersect_terms``): filter the encoded chunk table to the probed
-terms (a pushable predicate on the stored index — at scale this prunes to
-~df/span rows read per term), equi-join the terms' ENCODED chunk rows on
-chunk_id, and let one kernel decode and intersect each co-occupied chunk
-in-lane.  Each serving op is one (chunk pairs, kernel) plan: the ``*_rows``
-form runs the kernel in place and returns distributed ``did`` rows; the
-gate form folds the kernel's dids into one row inside the same task
-(:func:`_gate_scalar`).
+Serving (AND, k-way AND, OR, phrase, TF top-k) pairs up the probed
+terms' ENCODED chunk rows by chunk_id — a common doc id can only live
+where the terms share a chunk — and lets one kernel decode each chunk
+tuple and run the set op, phrase probe or score in-lane.  Each op is one
+:class:`_ServingOp` (wire, streams, kernel) under two plans:
+
+* the ``*_rows`` forms (the distributed consumers) filter one side per
+  term (a pushable predicate on the stored index) and equi-join the sides
+  on chunk_id; AQE broadcasts the rare side, and the kernel runs in place
+  and returns distributed ``did`` rows;
+* the gate forms and ``topk_and_terms`` run one Spark job with one task:
+  one scan reads every probed term's chunk rows (``doc_id IN (terms)``),
+  ``coalesce(1)`` hands them to one mapInArrow, and :func:`_aligned`
+  builds the same chunk tuples there before the same kernel runs
+  (:func:`_gate_scalar` then folds the dids into one row).  The scan
+  reads every partition of the index, so this plan is for serving
+  requests over a staged index, not for scale consumers.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from typing import Callable, NamedTuple
+
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType
 
 from ..arrow_rows import binary_array, binary_flat, list_array, list_flat
 from ..codec import batched
@@ -114,7 +126,7 @@ def decode_wire(kind: str, src, streams=None, suffix: str = "") -> list:
     """Decode the asked ``streams`` (default: all) of the ``kind`` wire ->
     one (flat uint32 values, int64 offsets) per stream, in the order asked.
     src is an Arrow batch whose wire columns carry ``suffix`` (a serving
-    side's alias, see _probe_side), or one chunk's raw state tuple in
+    side's alias, see _ServingOp), or one chunk's raw state tuple in
     wire_columns order (the streaming merges)."""
     if isinstance(src, tuple):
         src = pa.RecordBatch.from_arrays([pa.array([v]) for v in src],
@@ -340,21 +352,106 @@ def decode_index_pos(enc_index: DataFrame) -> DataFrame:
     return enc_index.mapInArrow(run, "term string, did int, pos int")
 
 
-def _probe_side(enc_index: DataFrame, kind: str, term: str, suffix: str,
-                streams=None) -> DataFrame:
-    """One serving side: ``term``'s chunk rows with the asked streams
-    (default: all) of the ``kind`` wire and the count columns sizing them,
-    each renamed column + suffix — decode_wire reads them back by that
-    suffix.  The term filter stays a pushable predicate on the stored
-    index."""
-    spec = {s[0]: s[2] for s in INDEX_WIRES[kind][1]}
-    streams = streams or list(spec)
-    cols = dict.fromkeys([spec[s] for s in streams] + list(streams))
-    # one selectExpr: a per-column F.col(c).alias(...) select costs ~3 py4j
-    # round trips a column (21 ms against 8 ms for a positional side), paid
-    # on every serving request
-    return enc_index.where(F.col("doc_id") == term).selectExpr(
-        "chunk_id", *[f"`{c}` AS `{c}{suffix}`" for c in cols])
+class _ServingOp(NamedTuple):
+    """One co-grouped serving op.  ``kernel`` maps batches of chunk tuples
+    — per probe position i, the ``streams`` of the ``kind`` wire and their
+    count columns, each named column + ``suffixes[i]`` (decode_wire reads
+    them back by that suffix) — to one output per batch.  ``how`` names
+    the chunks a tuple exists for: "and" those every probed term
+    occupies, "or" those any term occupies (a term without a row there
+    reads count 0 and an empty stream)."""
+    kind: str
+    streams: list
+    suffixes: list
+    how: str
+    kernel: Callable
+
+
+def _side_columns(op: _ServingOp) -> dict:
+    """The wire columns one probe side carries — the count columns sizing
+    the op's streams, then the streams — each mapped to what a side with
+    no row for a chunk reads there: count 0, an empty stream."""
+    spec = {s[0]: s[2] for s in INDEX_WIRES[op.kind][1]}
+    return {**{spec[s]: 0 for s in op.streams},
+            **{s: b"" for s in op.streams}}
+
+
+def _joined(enc_index: DataFrame, op: _ServingOp,
+            terms: list[str]) -> DataFrame:
+    """The rows forms' chunk tuples: one side per probe term, joined on
+    chunk_id (inner for "and", full outer for "or").  AQE broadcasts the
+    rare side, so a stopword's chunk rows never shuffle, where a
+    chunk_id repartition would shuffle every probed term's.  Each side's
+    term filter stays a pushable predicate on the stored index."""
+    cols = _side_columns(op)
+    # one selectExpr per side: a per-column F.col(c).alias(...) select
+    # costs ~3 py4j round trips a column
+    sides = [enc_index.where(F.col("doc_id") == t).selectExpr(
+        "chunk_id", *[f"`{c}` AS `{c}{s}`" for c in cols])
+        for t, s in zip(terms, op.suffixes)]
+    if op.how == "and":
+        return reduce(lambda a, b: a.join(b, "chunk_id"), sides)
+    outer = reduce(lambda a, b: a.join(b, "chunk_id", "full_outer"), sides)
+    return outer.select(*[F.coalesce(c + s, F.lit(v)).alias(c + s)
+                          for s in op.suffixes for c, v in cols.items()])
+
+
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _scan(enc_index: DataFrame, op: _ServingOp,
+          terms: list[str]) -> DataFrame:
+    """The gate forms' input: every probed term's chunk rows in one scan
+    of the index, (doc_id, chunk_id, the op's wire columns) unsuffixed —
+    :func:`_aligned` pairs them up inside the kernel's task.  Built from
+    SQL strings: a per-term Column chain costs py4j round trips on every
+    request."""
+    probe = ", ".join(_sql_string(t) for t in dict.fromkeys(terms))
+    return enc_index.where(f"doc_id IN ({probe})").selectExpr(
+        "doc_id", "chunk_id", *_side_columns(op))
+
+
+def _aligned(batches, terms: list[str], op: _ServingOp):
+    """Align one task's :func:`_scan` rows into the chunk tuples
+    ``op.kernel`` reads: ``chunk_id`` and the suffixed columns the rows
+    forms' chunk_id join (:func:`_joined`) gives, as one batch.  Positions
+    of a repeated term read the same rows; a row whose doc_id is no probed
+    term is dropped.  Tuples are selected before any decode, so the rarest
+    term still bounds an AND's decode work.  Yields nothing when no chunk
+    qualifies."""
+    batches = list(batches)
+    if not batches:
+        return
+    table = pa.Table.from_batches(batches)
+    cols = {n: table.column(n).combine_chunks() for n in table.column_names}
+    uniq = list(dict.fromkeys(terms))
+    which = pc.fill_null(pc.index_in(
+        cols["doc_id"], value_set=pa.array(uniq, pa.string())), -1)
+    which = which.to_numpy(zero_copy_only=False)
+    chunk = cols["chunk_id"].to_numpy(zero_copy_only=False)
+    rows = []   # per distinct term: its row indices in chunk_id order
+    for u in range(len(uniq)):
+        r = np.flatnonzero(which == u)
+        rows.append(r[np.argsort(chunk[r], kind="stable")])
+    keep = reduce(np.intersect1d if op.how == "and" else np.union1d,
+                  [chunk[r] for r in rows])
+    if not keep.size:
+        return
+    out, names = [pa.array(keep, cols["chunk_id"].type)], ["chunk_id"]
+    for t, s in zip(terms, op.suffixes):
+        r = rows[uniq.index(t)]
+        at = np.searchsorted(chunk[r], keep)
+        hit = at < r.size
+        hit[hit] = chunk[r[at[hit]]] == keep[hit]
+        idx = np.zeros(keep.size, np.int64)
+        idx[hit] = r[at[hit]]
+        take = pa.array(idx, mask=~hit)
+        for c, v in _side_columns(op).items():
+            out.append(pc.fill_null(cols[c].take(take), v))
+            names.append(c + s)
+    yield pa.RecordBatch.from_arrays(out, names=names)
 
 
 def phrase_match_rows(enc_index: DataFrame, term_a: str,
@@ -374,14 +471,12 @@ def phrase_match_rows(enc_index: DataFrame, term_a: str,
     Returns the DISTRIBUTED matched-doc rows (``did int``, deduped by
     construction — a did lives in one chunk pair) — the scale consumer's
     form.  The driver-gate scalar is :func:`phrase_match_terms`."""
-    return _did_rows(*_phrase_plan(enc_index, term_a, term_b))
+    return _did_rows(enc_index, _phrase_op(), [term_a, term_b])
 
 
-def _phrase_plan(enc_index: DataFrame, term_a: str, term_b: str):
-    """(chunk pairs, kernel) of :func:`phrase_match_rows`; the kernel
-    yields each batch's matched dids."""
-    pairs = _probe_side(enc_index, "pos", term_a, "_a").join(
-        _probe_side(enc_index, "pos", term_b, "_b"), "chunk_id")
+def _phrase_op() -> _ServingOp:
+    """The serving op of :func:`phrase_match_rows`: its kernel yields each
+    batch's matched dids."""
 
     def kernel(batches):
         def side(batch, suffix):
@@ -421,17 +516,17 @@ def _phrase_plan(enc_index: DataFrame, term_a: str, term_b: str):
             ranks = np.unique(hit // stride)
             yield (common[ranks] & np.int64(0xFFFFFFFF)).astype(np.int32)
 
-    return pairs, kernel
+    return _ServingOp("pos", [s[0] for s in INDEX_WIRES["pos"][1]],
+                      ["_a", "_b"], "and", kernel)
 
 
 def phrase_match_terms(enc_index: DataFrame, term_a: str,
                        term_b: str) -> DataFrame:
     """Gate-scalar phrase serving: one row (term_a, term_b, n_docs,
-    fingerprint over ascending matched ids) folded from
-    :func:`phrase_match_rows` — see :func:`_gate_scalar` for why the fold
-    exists and why scale consumers must take the rows form."""
-    return _gate_scalar(*_phrase_plan(enc_index, term_a, term_b),
-                        [term_a, term_b], "n_docs")
+    fingerprint over ascending matched ids) from the phrase kernel —
+    see :func:`_gate_scalar` for the one-task plan, why the fold exists
+    and why scale consumers must take :func:`phrase_match_rows`."""
+    return _gate_scalar(enc_index, _phrase_op(), [term_a, term_b], "n_docs")
 
 
 def decode_index_tf(enc_index: DataFrame) -> DataFrame:
@@ -476,33 +571,36 @@ def _did_stream(enc_index: DataFrame, what: str) -> tuple[str, str, str]:
     return kind, col, cnt
 
 
-def _did_rows(pairs: DataFrame, kernel) -> DataFrame:
-    """The distributed ``did int`` rows of a serving plan: ``kernel`` runs
-    over ``pairs`` in place, one Arrow batch per did array it yields."""
+def _did_rows(enc_index: DataFrame, op: _ServingOp,
+              terms: list[str]) -> DataFrame:
+    """The distributed ``did int`` rows of a serving op: its kernel runs
+    in place over the joined chunk tuples (:func:`_joined`), one Arrow
+    batch per did array it yields."""
 
     def run(batches):
-        for dids in kernel(batches):
+        for dids in op.kernel(batches):
             yield pa.RecordBatch.from_arrays([pa.array(dids, pa.int32())],
                                              names=["did"])
 
-    return pairs.mapInArrow(run, "did int")
+    return _joined(enc_index, op, terms).mapInArrow(run, "did int")
 
 
-def _gate_scalar(pairs: DataFrame, kernel, terms: list[str],
+def _gate_scalar(enc_index: DataFrame, op: _ServingOp, terms: list[str],
                  count_name: str) -> DataFrame:
-    """Fold a serving plan's dids (deduped by construction — disjoint
+    """Fold a serving op's dids (deduped by construction — disjoint
     chunk did-ranges) into the ONE-ROW gate scalar:
     (term_a[, term_b, ...], <count_name>, fingerprint over ascending ids).
 
-    The fold runs inside the serving kernel's own task: ``coalesce(1)``
-    is narrow, so the plan gains no shuffle and a request runs one job
-    per broadcast probe side plus the result job.  The kernel's dids are
-    concatenated, sorted, counted and fingerprinted by
-    ``batched.fingerprint_rows`` (bit-identical to the SQL fold).  One
-    empty chunk row (counts 0, empty streams: every serving kernel
-    decodes it as no dids) joins the input, so the fold's one partition
-    always exists and yields the (..., 0, 0) row even when AQE prunes an
-    empty join down to zero partitions.
+    One job, one stage, one task: every probed term's chunk rows come
+    from one scan (:func:`_scan`), ``coalesce(1)`` (narrow, no Exchange)
+    hands them to one mapInArrow, which aligns them by chunk_id
+    (:func:`_aligned`), runs the op's kernel, and concatenates, sorts,
+    counts and fingerprints its dids with ``batched.fingerprint_rows``
+    (bit-identical to the SQL fold).  No join means no broadcast job per
+    extra probe side.  One row whose doc_id is NULL (no probed term, so
+    the aligner drops it) joins the scan: a zero-partition index would
+    otherwise leave coalesce(1) no partition to fold in, and the
+    (..., 0, 0) row would be lost.
 
     This fold exists ONLY because the driver's pandas canonicalizer
     rejects array-typed result columns; it concentrates the full
@@ -520,15 +618,14 @@ def _gate_scalar(pairs: DataFrame, kernel, terms: list[str],
     names = [f"term_{chr(97 + i)}" for i in range(len(terms))]
     # built as one SQL statement: a per-column lit/cast/alias select costs
     # ~25 ms of py4j calls per request, the parse ~4 ms
-    cols = []
-    for f in pairs.schema:
-        zero = "X''" if isinstance(f.dataType, BinaryType) else "0"
-        cols.append(f"CAST({zero} AS {f.dataType.simpleString()}) "
-                    f"AS `{f.name}`")
-    empty_chunk = pairs.sparkSession.sql("SELECT " + ", ".join(cols))
+    no_term = enc_index.sparkSession.sql(
+        "SELECT CAST(NULL AS STRING) AS doc_id, 0 AS chunk_id, "
+        + ", ".join(("X''" if isinstance(v, bytes) else "0") + f" AS `{c}`"
+                    for c, v in _side_columns(op).items()))
 
     def fold(batches):
-        ids = np.concatenate([np.zeros(0, np.int32), *kernel(batches)])
+        ids = np.concatenate([np.zeros(0, np.int32),
+                              *op.kernel(_aligned(batches, terms, op))])
         ids.sort()
         fp = batched.fingerprint_rows(ids, np.array([0, ids.size]))
         yield pa.RecordBatch.from_arrays(
@@ -538,7 +635,8 @@ def _gate_scalar(pairs: DataFrame, kernel, terms: list[str],
 
     schema = ", ".join([f"{n} string" for n in names]
                        + [f"{count_name} int", "fingerprint bigint"])
-    return pairs.union(empty_chunk).coalesce(1).mapInArrow(fold, schema)
+    return _scan(enc_index, op, terms).union(no_term).coalesce(1) \
+        .mapInArrow(fold, schema)
 
 
 def topk_and_terms(enc_index: DataFrame, term_a: str, term_b: str,
@@ -547,18 +645,19 @@ def topk_and_terms(enc_index: DataFrame, term_a: str, term_b: str,
     TF index wire, CO-GROUPED by chunk (the inline reference in
     tests/test_spark_engine.py pins parity adversarially).
 
-    Same shape as :func:`intersect_terms_rows`: the two terms' ENCODED
-    chunk rows equi-join on chunk_id (AND semantics — co-occupied chunks
-    only, <= min(df_a, df_b)/span pairs), ONE kernel decodes each pair
-    (EF dids + svb tfs), intersects in-lane, and scores in-lane (score =
-    tf_a + tf_b, exact integers).  The kernel pre-limits each Arrow batch
-    to its local top-k under the global order (score desc, did asc) —
-    valid because every global top-k row is in its batch's local top-k —
-    so at most k rows per batch reach the final TakeOrderedAndProject,
-    where the old form shipped the full intersection ("compress and
-    intersect sorted lists of integers", the reference README:253)."""
-    pairs = _probe_side(enc_index, "tf", term_a, "_a").join(
-        _probe_side(enc_index, "tf", term_b, "_b"), "chunk_id")
+    The gate forms' one-task plan (:func:`_gate_scalar`): one scan reads
+    both terms' ENCODED chunk rows, ``coalesce(1)`` hands them to one
+    mapInArrow, the aligner keeps the co-occupied chunks (AND semantics,
+    <= min(df_a, df_b)/span pairs) before any decode, and ONE kernel
+    decodes each pair (EF dids + svb tfs), intersects in-lane, and scores
+    in-lane (score = tf_a + tf_b, exact integers).  The kernel pre-limits
+    each Arrow batch to its local top-k under the global order (score
+    desc, did asc) — valid because every global top-k row is in its
+    batch's local top-k — so at most k rows per batch reach the final
+    TakeOrderedAndProject, which runs over the one partition: one job,
+    one stage ("compress and intersect sorted lists of integers", the
+    reference README:253)."""
+    terms = [term_a, term_b]
 
     def run(batches):
         for batch in batches:
@@ -587,8 +686,11 @@ def topk_and_terms(enc_index: DataFrame, term_a: str, term_b: str,
                  pa.array(score.astype(np.int32), pa.int32())],
                 names=["did", "tf_a", "tf_b", "score"])
 
-    scored = pairs.mapInArrow(
-        run, "did int, tf_a int, tf_b int, score int")
+    op = _ServingOp("tf", [s[0] for s in INDEX_WIRES["tf"][1]],
+                    ["_a", "_b"], "and", run)
+    scored = _scan(enc_index, op, terms).coalesce(1).mapInArrow(
+        lambda batches: run(_aligned(batches, terms, op)),
+        "did int, tf_a int, tf_b int, score int")
     return (scored.orderBy(F.col("score").desc(), F.col("did").asc())
             .limit(k))
 
@@ -606,19 +708,14 @@ def union_terms_rows(enc_index: DataFrame, term_a: str,
     by construction) — the scale consumer's form; the driver-gate
     scalar is :func:`union_terms`.  Serves from any wire (see
     :func:`_did_stream`)."""
-    return _did_rows(*_union_plan(enc_index, term_a, term_b))
+    return _did_rows(enc_index, _union_op(enc_index), [term_a, term_b])
 
 
-def _union_plan(enc_index: DataFrame, term_a: str, term_b: str):
-    """(chunk pairs, kernel) of :func:`union_terms_rows`; the kernel yields
-    each batch's union dids."""
-    kind, dids, cnt = _did_stream(enc_index, "union_terms_rows")
-    a = _probe_side(enc_index, kind, term_a, "_a", [dids])
-    b = _probe_side(enc_index, kind, term_b, "_b", [dids])
-    # a chunk only one term occupies decodes as empty on the other side
-    pairs = a.join(b, "chunk_id", "full_outer").select(
-        *[F.coalesce(c, F.lit(v)).alias(c) for s in ("_a", "_b")
-          for c, v in ((cnt + s, 0), (dids + s, b""))])
+def _union_op(enc_index: DataFrame) -> _ServingOp:
+    """The serving op of :func:`union_terms_rows`: its kernel yields each
+    batch's union dids; a chunk only one term occupies decodes as empty
+    on the other side."""
+    kind, dids, _ = _did_stream(enc_index, "union_terms_rows")
 
     def kernel(batches):
         for batch in batches:
@@ -630,16 +727,16 @@ def _union_plan(enc_index: DataFrame, term_a: str, term_b: str):
                            lane_doc_keys(np.diff(ob), db))
             yield (u & np.int64(0xFFFFFFFF)).astype(np.int32)
 
-    return pairs, kernel
+    return _ServingOp(kind, [dids], ["_a", "_b"], "or", kernel)
 
 
 def union_terms(enc_index: DataFrame, term_a: str,
                 term_b: str) -> DataFrame:
     """Gate-scalar OR serving: one row (term_a, term_b, n_docs,
-    fingerprint over ascending union ids) folded from
+    fingerprint over ascending union ids) from the OR kernel of
     :func:`union_terms_rows` — see :func:`_gate_scalar`."""
-    return _gate_scalar(*_union_plan(enc_index, term_a, term_b),
-                        [term_a, term_b], "n_docs")
+    return _gate_scalar(enc_index, _union_op(enc_index), [term_a, term_b],
+                        "n_docs")
 
 
 def _index_wire(df: DataFrame, what: str) -> str:
@@ -761,20 +858,16 @@ def intersect_terms_rows(enc_index: DataFrame,
     Returns the DISTRIBUTED common-doc rows (``did int``, deduped by
     construction — disjoint chunk did-ranges).  Driver-gate scalars:
     :func:`intersect_terms` (k=2) / :func:`intersect_terms_multi`."""
-    return _did_rows(*_intersect_plan(enc_index, terms))
+    return _did_rows(enc_index, _intersect_op(enc_index, terms), terms)
 
 
-def _intersect_plan(enc_index: DataFrame, terms: list[str]):
-    """(chunk k-tuples, kernel) of :func:`intersect_terms_rows`; the
-    kernel yields each batch's common dids."""
+def _intersect_op(enc_index: DataFrame, terms: list[str]) -> _ServingOp:
+    """The serving op of :func:`intersect_terms_rows`: its kernel yields
+    each batch's common dids."""
     if not terms:
         raise ValueError("intersect_terms_rows needs at least one term")
     kind, dids, _ = _did_stream(enc_index, "intersect_terms_rows")
     k = len(terms)
-    joined = None
-    for i, t in enumerate(terms):
-        side = _probe_side(enc_index, kind, t, f"_{i}", [dids])
-        joined = side if joined is None else joined.join(side, "chunk_id")
 
     def kernel(batches):
         for batch in batches:
@@ -792,7 +885,8 @@ def _intersect_plan(enc_index: DataFrame, terms: list[str]):
                     break  # batch-wide empty: skip the remaining decodes
             yield (common & np.int64(0xFFFFFFFF)).astype(np.int32)
 
-    return joined, kernel
+    return _ServingOp(kind, [dids], [f"_{i}" for i in range(k)], "and",
+                      kernel)
 
 
 def intersect_terms(enc_index: DataFrame, term_a: str,
@@ -800,8 +894,9 @@ def intersect_terms(enc_index: DataFrame, term_a: str,
     """Gate-scalar AND serving: one row (term_a, term_b, n_common,
     fingerprint over ascending common ids) folded from the k=2
     :func:`intersect_terms_rows` — see :func:`_gate_scalar`."""
-    return _gate_scalar(*_intersect_plan(enc_index, [term_a, term_b]),
-                        [term_a, term_b], "n_common")
+    terms = [term_a, term_b]
+    return _gate_scalar(enc_index, _intersect_op(enc_index, terms), terms,
+                        "n_common")
 
 
 def intersect_terms_multi(enc_index: DataFrame,
@@ -809,5 +904,5 @@ def intersect_terms_multi(enc_index: DataFrame,
     """Gate-scalar k-way AND serving: one row (term_a, term_b, term_c,
     ..., n_common, fingerprint) folded from
     :func:`intersect_terms_rows`."""
-    return _gate_scalar(*_intersect_plan(enc_index, terms),
-                        terms, "n_common")
+    return _gate_scalar(enc_index, _intersect_op(enc_index, terms), terms,
+                        "n_common")

@@ -1076,9 +1076,9 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return spark.table(gen.names[0]), terms
 
     def index_intersect(spark, sf_dir):
-        # serving: decode ONLY the probed terms' chunks from the encoded
-        # index (pushable predicate on the stored chunk table) and
-        # equi-join the posting streams
+        # serving: one scan of the probed terms' encoded chunk rows, one
+        # task that aligns them by chunk_id and decodes ONLY the
+        # co-occupied chunks (operators/index.py _gate_scalar)
         from .operators.index import build_index_chunked, intersect_terms
         enc, (a, b) = _staged_index_probe(spark, sf_dir, "index_intersect",
                                           build_index_chunked)
@@ -1090,10 +1090,11 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # K-WAY boolean AND serving (real queries have > 2 terms and
         # k-way sorted-list intersection is the reference's named workload,
         # README.md:253): the three lexicographically smallest terms with
-        # df >= 5, served by the k-way chunk_id inner equi-join + in-lane
-        # lane_doc_keys intersect fold — the RAREST term bounds the decode
-        # work and no posting row ever shuffles (operators/index.py
-        # intersect_terms_rows).
+        # df >= 5, served by the one-scan plan: the kernel keeps the chunks
+        # all three terms occupy and folds the in-lane lane_doc_keys
+        # intersection — the RAREST term bounds the decode work and no
+        # posting row ever shuffles (operators/index.py
+        # intersect_terms_multi).
         from .operators.index import (build_index_chunked,
                                       intersect_terms_multi)
         enc, terms = _staged_index_probe(spark, sf_dir, "index_and_multi",
@@ -1110,8 +1111,9 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # collected in ONE posting-level shuffle (the encode kernel
         # run-lengths the sorted duplicated dids into (did, tf) — a
         # separate counting aggregate would shuffle the postings twice).
-        # topk_and_terms is the co-grouped plan (chunk_id equi-join +
-        # in-lane score + per-batch local top-k); this gate row runs it.
+        # topk_and_terms is the one-scan co-grouped plan (chunks aligned
+        # by chunk_id in the kernel's task + in-lane score + local
+        # top-k); this gate row runs it.
         from .operators.index import build_index_tf_chunked, topk_and_terms
         enc, (a, b) = _staged_index_probe(spark, sf_dir, "index_topk_and",
                                           build_index_tf_chunked)
@@ -1123,10 +1125,10 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # phrase serving from the POSITIONAL wire: the same deterministic
         # probe rule (two lexicographically smallest terms, df >= 5, df =
         # sum of the wire's per-chunk doc counts), served as the ADJACENT
-        # IN-ORDER phrase "term_a term_b" — co-grouped: the two terms'
-        # encoded chunk rows equi-join on chunk_id and ONE kernel
-        # intersects the did lists in-lane and probes pos_a + 1 against
-        # pos_b per common doc; no occurrence row ever shuffles.
+        # IN-ORDER phrase "term_a term_b" — co-grouped: one scan of the
+        # two terms' encoded chunk rows, aligned by chunk_id in ONE kernel
+        # that intersects the did lists in-lane and probes pos_a + 1
+        # against pos_b per common doc; no occurrence row ever shuffles.
         # Positions are raw-split offsets (empties occupy slots) on both
         # engines.
         from .operators.index import (build_index_pos_chunked,
@@ -1140,10 +1142,10 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def index_union(spark, sf_dir):
         # OR serving from the encoded set wire, co-grouped by chunk id
-        # like intersect: FULL OUTER join the two terms' encoded chunk
-        # rows, union the sorted lists in-lane — disjoint chunk did-ranges
-        # make the in-lane dedup global, so the exploded-did distinct
-        # shuffle of the naive form disappears
+        # like intersect: one scan, every chunk either term occupies
+        # aligned in the kernel, the sorted lists unioned in-lane —
+        # disjoint chunk did-ranges make the in-lane dedup global, so the
+        # exploded-did distinct shuffle of the naive form disappears
         from .operators.index import build_index_chunked, union_terms
         enc, (a, b) = _staged_index_probe(spark, sf_dir, "index_union",
                                           build_index_chunked)

@@ -989,13 +989,13 @@ def _topk_reference(enc, a, b, k):
 
 
 def test_index_topk_cogrouped_parity(spark):
-    """The co-grouped top-k (chunk_id equi-join + in-lane score +
-    per-batch local top-k; THE topk_and_terms implementation since r10 —
-    the decode-everything body is retired) must return EXACTLY what a
-    driver-side reference computes from the decoded posting rows — rows,
-    order, and ties — on the fixture corpus and on a denser multi-chunk
-    corpus with tf > 1 and score ties; and its plan must be the
-    co-grouped shape (one kernel, no posting explode, a chunk_id join)."""
+    """The co-grouped top-k (one scan, chunks aligned by chunk_id inside
+    the kernel, in-lane score + per-batch local top-k) must return
+    EXACTLY what a driver-side reference computes from the decoded
+    posting rows — rows, order, and ties — on the fixture corpus and on a
+    denser multi-chunk corpus with tf > 1 and score ties; and its plan
+    must be the one-scan shape (one kernel over the doc_id IN scan, no
+    posting explode, no join)."""
     import random
     from streamvbyte_spark.operators.index import (build_index_tf_chunked,
                                                    topk_and_terms)
@@ -1029,12 +1029,13 @@ def test_index_topk_cogrouped_parity(spark):
     plan = plan_string(topk_and_terms(enc2, "x", "y"), "simple")
     assert plan.count("MapInArrow") == 1, plan
     assert "Generate" not in plan, plan
-    assert "Join" in plan, plan
+    assert "Join" not in plan, plan
+    assert "doc_id#" in plan and " IN (x,y)" in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
 
 
 def test_index_intersect_multi_kway(spark):
-    """K-way AND serving (r10): the k-way chunk_id join + in-lane
+    """K-way AND serving: the k-way chunk_id join + in-lane
     intersect fold must reproduce the exact set intersection for k = 1,
     2, 3 — including k = 2 parity with the gate-scalar intersect_terms,
     a term absent from the index (empty result row), and a k = 3 probe
@@ -1082,7 +1083,7 @@ def test_index_intersect_multi_kway(spark):
     import pytest
     with pytest.raises(ValueError):
         intersect_terms_rows(enc, [])
-    # wire-agnostic serving (r10): the TF wire's EF did stream answers the
+    # wire-agnostic serving: the TF wire's EF did stream answers the
     # same set queries — no second set-wire build needed
     from streamvbyte_spark.operators.index import (build_index_pos_chunked,
                                                    build_index_tf_chunked,
@@ -1116,20 +1117,19 @@ def test_index_store_and_serve_pushes_probe_predicate(spark):
         stored = spark.read.parquet(f"{tmp}/index")
         served = topk_and_terms(stored, "a", "c", k=10)
         plan = plan_string(served, "simple")
-        # co-grouped serving scans the stored index once per probed term,
-        # each with its term's equality predicate pushed to parquet
+        # top-k scans the stored index once for both probed terms, with
+        # the doc_id IN predicate pushed to parquet
         scans = re.findall(r"FileScan parquet.*", plan)
-        assert scans, plan
-        for scan in scans:
-            assert "PushedFilters" in scan and "EqualTo(doc_id" in scan, scan
+        assert len(scans) == 1, plan
+        assert "PushedFilters: [In(doc_id, [a,c])]" in scans[0], scans[0]
         want = [(r.did, r.tf_a, r.tf_b, r.score) for r in
                 topk_and_terms(build_index_tf_chunked(docs).localCheckpoint(),
                                "a", "c", k=10).collect()]
         got = [(r.did, r.tf_a, r.tf_b, r.score) for r in served.collect()]
         assert got == want == [(0, 2, 1, 3), (300, 1, 1, 2)]
-        # k-way AND from the stored SET wire: all k probe predicates must
-        # reach their scans pushed too (r10), and the result must match
-        # the in-memory build
+        # k-way AND rows from the stored SET wire scan once per probed
+        # term: all k equality predicates must reach their scans pushed
+        # too, and the result must match the in-memory build
         from streamvbyte_spark.operators.index import (build_index_chunked,
                                                        intersect_terms_rows)
         build_index_chunked(docs).write.mode("overwrite") \
@@ -1307,6 +1307,124 @@ def test_gate_row_on_empty_inputs(spark):
     for e, a, b in ((zero, "x", "y"), (enc, "q", "r")):
         got = union_terms(e, a, b).collect()
         assert len(got) == 1 and tuple(got[0])[-2:] == (0, 0), (a, b)
+
+
+def _py_fold(ids):
+    """The gate fingerprint over ascending ids, in plain Python."""
+    p, fp = 10**9 + 7, 0
+    for t in sorted(ids):
+        fp = (fp * 31 + t) % p
+    return fp
+
+
+class _DocTerms:
+    """Driver-side serving reference straight off (did, text) rows: the
+    raw space split, empties keeping their position slot."""
+
+    def __init__(self, rows):
+        self.occ = {}          # term -> {did: [positions]}
+        for did, text, _ in rows:
+            for pos, t in enumerate(text.split(" ")):
+                if t:
+                    self.occ.setdefault(t, {}).setdefault(did, []).append(pos)
+
+    def dids(self, t):
+        return set(self.occ.get(t, {}))
+
+    def intersect(self, terms):
+        return set.intersection(*(self.dids(t) for t in terms))
+
+    def union(self, a, b):
+        return self.dids(a) | self.dids(b)
+
+    def phrase(self, a, b):
+        pa_, pb = self.occ.get(a, {}), self.occ.get(b, {})
+        return {d for d in set(pa_) & set(pb)
+                if set(p + 1 for p in pa_[d]) & set(pb[d])}
+
+    def topk(self, a, b, k):
+        rows = [(d, len(self.occ[a][d]), len(self.occ[b][d]))
+                for d in self.intersect([a, b])]
+        rows = [(d, x, y, x + y) for d, x, y in rows]
+        return sorted(rows, key=lambda r: (-r[3], r[0]))[:k]
+
+
+def test_gate_aligner_matches_driver_reference(spark):
+    """The one-scan gate plans align every probed term's chunk rows inside
+    the kernel's task: their rows equal a driver-side reference on seeded
+    term sets for k = 1..5, with repeated terms, an absent term, terms
+    that share no chunk, a term that needs SQL quoting, and (under
+    maxRecordsPerBatch=2) chunk rows that span Arrow batch seams inside
+    the one task; the rows forms keep returning the same dids."""
+    from streamvbyte_spark.operators.index import (
+        build_index_chunked, build_index_pos_chunked, build_index_tf_chunked,
+        intersect_terms, intersect_terms_multi, intersect_terms_rows,
+        phrase_match_rows, phrase_match_terms, topk_and_terms, union_terms,
+        union_terms_rows)
+    rng = np.random.default_rng(5)
+    vocab = ["a", "b", "c", "d", "e", "o'k\\x"]
+    dens = [0.6, 0.4, 0.25, 0.1, 0.05, 0.2]
+    rows = []
+    for i in range(600):
+        did = 3 * i
+        words = [w for w, p in zip(vocab, dens) if rng.random() < p]
+        words += list(rng.choice(vocab, rng.integers(0, 4)))
+        words += ["lo"] if did < 512 else ["hi"] if did >= 1024 else []
+        rng.shuffle(words)
+        rows.append((did, " ".join(words), "s"))
+    ref = _DocTerms(rows)
+    docs = spark.createDataFrame(rows, "doc_id long, text string, "
+                                 "source string")
+    enc = build_index_chunked(docs).repartition(4).localCheckpoint()
+    enc_tf = build_index_tf_chunked(docs).repartition(4).localCheckpoint()
+    enc_pos = build_index_pos_chunked(docs).repartition(4).localCheckpoint()
+
+    def check_and(terms):
+        want = ref.intersect(terms)
+        row = tuple(intersect_terms_multi(enc, terms).collect()[0])
+        assert row == (*terms, len(want), _py_fold(want)), terms
+        assert sorted(r.did for r in intersect_terms_rows(
+            enc, terms).collect()) == sorted(want), terms
+
+    def check_pairs(a, b):
+        want = ref.union(a, b)
+        assert tuple(union_terms(enc, a, b).collect()[0]) == \
+            (a, b, len(want), _py_fold(want)), (a, b)
+        assert sorted(r.did for r in union_terms_rows(
+            enc, a, b).collect()) == sorted(want), (a, b)
+        want = ref.phrase(a, b)
+        assert tuple(phrase_match_terms(enc_pos, a, b).collect()[0]) == \
+            (a, b, len(want), _py_fold(want)), (a, b)
+        assert sorted(r.did for r in phrase_match_rows(
+            enc_pos, a, b).collect()) == sorted(want), (a, b)
+        want = ref.intersect([a, b])
+        assert tuple(intersect_terms(enc, a, b).collect()[0]) == \
+            (a, b, len(want), _py_fold(want)), (a, b)
+        got = [tuple(r) for r in topk_and_terms(enc_tf, a, b, k=7).collect()]
+        assert got == (ref.topk(a, b, 7) if want else []), (a, b)
+
+    for k in range(1, 6):
+        for _ in range(2):
+            check_and([str(t) for t in rng.choice(vocab, k, replace=False)])
+    check_and(["a", "b", "a"])             # a repeated term
+    check_and(["a", "zzz", "b"])           # an absent term
+    check_and(["lo", "hi"])                # no shared chunk
+    assert ref.intersect(["a", "b", "c"]) and not ref.intersect(["lo", "hi"])
+    for a, b in (("a", "b"), ("c", "c"), ("b", "o'k\\x"), ("lo", "hi"),
+                 ("d", "zzz"), ("zzz", "yyy")):
+        check_pairs(a, b)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        # every term here holds > 2 chunk rows, so its rows straddle seams
+        check_and(["a", "c", "b"])
+        check_pairs("b", "c")
+    finally:
+        spark.conf.set(conf, before)
+    zero_tf = spark.createDataFrame(spark.sparkContext.emptyRDD(),
+                                    enc_tf.schema)
+    assert topk_and_terms(zero_tf, "a", "b").collect() == []
 
 
 def test_workers_drop_spark_archive_finders(spark):

@@ -80,7 +80,7 @@ def test_encode_adds_no_shuffle(spark):
     enc = encode_table(tok, codec="auto")  # no repartition requested
     # encode_table itself is map-only: it adds ZERO exchanges over its
     # input.  (The input source may carry its own scale-adaptive scan
-    # fanout exchange when the file is a single row group — r11; that
+    # fanout exchange when the file is a single row group; that
     # exchange belongs to the source, not the encoder.)
     assert count_exchanges(enc) == count_exchanges(tok)
     assert count_exchanges(enc) <= 1
@@ -233,7 +233,7 @@ def test_streaming_pack_assign_numeric_order_and_guards(spark):
         # fail loudly, not collapse to one placement: the batch writer
         # places both as a window tie, so a silent within-batch dedup (or a
         # silent skip at the high-water mark) diverges from the batch
-        # prefix sum (advice r6)
+        # prefix sum
         spark.createDataFrame([("7", "web", 5), ("007", "web", 6)],
                               "doc_id string, source string, n_tok int") \
             .coalesce(1).write.mode("overwrite").parquet(f"{tmp}/coll/b0")
@@ -377,7 +377,7 @@ def test_lsh_self_joins_materialize_signatures(spark):
     both join sides: the bands/signature table is materialized
     (localCheckpoint) first, so the final join plan contains ZERO parquet
     scans and ZERO Python stages — the scan->shingle/bucket->signature
-    subtree executed exactly once, at stage-build time (VERDICT r2 item 1)."""
+    subtree executed exactly once, at stage-build time."""
     import streamvbyte_spark.queries as Q
     queries = Q.build_queries()
     for name in ("dedup_minhash_pairs", "dedup_minhash_verified",
@@ -408,7 +408,7 @@ def test_lsh_self_joins_materialize_signatures(spark):
 def test_simhash_plan_is_one_arrow_udf(spark):
     """dedup_simhash must compute the 32-bit simhash in ONE ArrowEvalPython
     stage (functions/text_udfs.doc_simhash), not 32 interpreted aggregate()
-    HOF passes per document (r3 verdict item 1)."""
+    HOF passes per document."""
     import streamvbyte_spark.queries as Q
     df = Q.build_queries()["dedup_simhash"](spark, SF)
     plan = plan_string(df, "simple")
@@ -445,8 +445,8 @@ def test_registry_wide_no_cartesian(spark):
 def test_quality_lang_plans_one_arrow_udf(spark):
     """quality_score / lang_id must take their per-word counts from ONE
     fused Arrow word-stats UDF (split/dictionary/is_in in Arrow C++), not
-    interpreted filter()/array_distinct HOF lambdas per word (r4 verdict
-    item 8) — and the struct fields must not re-evaluate the UDF."""
+    interpreted filter()/array_distinct HOF lambdas per word — and the
+    struct fields must not re-evaluate the UDF."""
     import streamvbyte_spark.queries as Q
     queries = Q.build_queries()
     for name in ("quality_score", "lang_id"):
@@ -460,8 +460,7 @@ def test_sequence_pack_two_level_prefix_sum(spark):
     """sequence_pack's per-source running sum must be the two-level shape:
     the document-volume window partitions on (source, doc_id-range bucket) —
     never on source alone, which funnels a skewed source through one task —
-    and the per-bucket prefix offsets come back via a broadcast join
-    (r3 verdict item 2)."""
+    and the per-bucket prefix offsets come back via a broadcast join."""
     from streamvbyte_spark.functions import pipeline_sql as P
     import streamvbyte_spark.queries as Q
     sql = P.spark_sql("sequence_pack")
@@ -542,8 +541,8 @@ def test_pack_sequences_encoded_plan_shape(spark):
 
 def test_curated_encoded_rank_window_carries_encoded(spark):
     """The curated composite's md5 dedup rank window must shuffle ENCODED
-    rows, not raw token arrays (r6 verdict item 2: the SQL-form window
-    shipped raw tokens — ~40 TB at 10^13 tokens; encoded it is ~2 B/token).
+    rows, not raw token arrays (the SQL-form window ships raw tokens —
+    ~40 TB at 10^13 tokens; encoded it is ~2 B/token).
     Pins: the rank-window exchange partitions on md5 and sits ABOVE the
     encode MapInArrow (plans print root-first), no `tokens#` column exists
     at or above the encode stage, and the contamination anti-join is a
@@ -570,7 +569,7 @@ def test_token_quantiles_value_count_decomposition(spark):
     """token_quantiles must rank over the tiny (source, word-count)
     VALUE-COUNT table, never per-document rows: a ``row_number() over
     (partition by source order by n, doc_id)`` window funnels every document
-    of a skewed source through one task (r4 verdict item 1).  The DuckDB
+    of a skewed source through one task.  The DuckDB
     oracle keeps the per-document rank form, so the driver gate proves the
     rank-selection decomposition exact."""
     from streamvbyte_spark.functions import pipeline_sql as P
@@ -713,7 +712,7 @@ def test_build_vocab_two_level_rank(spark):
     construction — and the only unpartitioned window runs over the
     distinct-count table (<= sqrt(2N) pre-aggregated rows).  The
     vocab_remap_metrics oracle proves the decomposition value-exact; this
-    pins the plan shape (r5 verdict item 2)."""
+    pins the plan shape."""
     import re
     from streamvbyte_spark.operators.vocab import build_vocab
     from streamvbyte_spark.sources import tokens_from_documents
@@ -744,7 +743,7 @@ def test_build_vocab_two_level_rank(spark):
 
 def test_chunk_tokens_plan_fully_codegen(spark):
     """chunk_tokens must carry no interpreted HOF lambda: the chunk slices
-    are posexplode + plain-projection slice(), all codegen'd (r3 item 4)."""
+    are posexplode + plain-projection slice(), all codegen'd."""
     from streamvbyte_spark.operators.chunking import chunk_tokens
     from streamvbyte_spark.sources import posting_lists
     ch = chunk_tokens(posting_lists(spark, SF, string_key=True), chunk_size=8)
@@ -755,7 +754,7 @@ def test_chunk_tokens_plan_fully_codegen(spark):
 def test_neardup_final_pre_topk(spark):
     """embedding_neardup's global top-50 must plan as TakeOrderedAndProject
     (per-partition top-k before the single-partition merge), not an
-    all-candidates single-task window sort (r3 verdict item 7)."""
+    all-candidates single-task window sort."""
     import streamvbyte_spark.queries as Q
     df = Q.build_queries()["embedding_neardup"](spark, SF)
     plan = plan_string(df, "simple")
@@ -765,7 +764,7 @@ def test_neardup_final_pre_topk(spark):
 def test_durable_checkpoint_stage_mode(spark):
     """With spark.svb.stageCheckpointDir set, staged views and
     connected_components use reliable checkpoint() — identical results,
-    checkpoint files actually written (r3 verdict item 5)."""
+    checkpoint files actually written."""
     import os
     import streamvbyte_spark.queries as Q
     from streamvbyte_spark.operators.components import connected_components
@@ -1034,7 +1033,7 @@ def test_sequence_pack_string_bucket_derived_multibucket(spark):
     path: the derived string bucket (LCP of min/max + 2) must spread the
     two-level prefix sum over MANY buckets — the old fixed 2-char prefix
     put every such doc in ONE bucket, silently restoring the single-task
-    funnel (r4 verdict item 3) — and the result must still match the DuckDB
+    funnel — and the result must still match the DuckDB
     single-window oracle exactly."""
     import duckdb
     import pyarrow as pa
@@ -1158,7 +1157,7 @@ def test_streaming_index_update_tf_batch_exact(spark):
         schema = "doc_id long, text string, source string"
         # b0 contains docs[100:] TWICE — a WITHIN-batch redelivery, the
         # exact shape that double-counts tf if the merge counts raw
-        # occurrences instead of deduped (did, pos) pairs (review r8)
+        # occurrences instead of deduped (did, pos) pairs
         spark.createDataFrame(docs[60:] + docs[100:], schema) \
             .coalesce(1).write.mode("overwrite").parquet(f"{tmp}/in/b0")
         # b1 redelivers a tail of b0 (the cross-batch hazard) + the rest
@@ -1280,17 +1279,19 @@ def test_index_probe_terms_rederived_on_rebuild(spark):
 
 
 def test_serving_gate_row_folds_without_exchange(spark):
-    """The gate-scalar serving queries fold their one row inside the
-    serving kernel: no shuffle Exchange is left in the plan, and a collect
-    runs one job per broadcast probe side plus the result job."""
+    """Every gate-shaped serving request is one Spark job: one scan of the
+    probed terms' chunk rows feeds one kernel task that aligns the chunks,
+    runs the op and folds the gate row (or cuts the top-k) — no Exchange
+    of any kind, broadcast included, is left in the plan."""
     import streamvbyte_spark.queries as Q
     from streamvbyte_spark.operators import staging
     queries = Q.build_queries()
-    for name, max_jobs in (("index_intersect", 2), ("index_and_multi", 3),
-                           ("index_phrase_match", 2)):
+    for name in ("index_intersect", "index_and_multi", "index_phrase_match",
+                 "index_union", "index_topk_and"):
         df = queries[name](spark, SF)
-        assert count_exchanges(df) == 0, plan_string(df, "simple")
-        assert _build_jobs(spark, df.collect) <= max_jobs, name
+        plan = plan_string(df, "simple")
+        assert "Exchange" not in plan, (name, plan)
+        assert _build_jobs(spark, df.collect) == 1, name
         staging.release_stage(spark, name)
 
 
@@ -1400,9 +1401,9 @@ def test_merge_index_updates_both_wires(spark):
 
 
 def test_merge_index_updates_positional_wire(spark):
-    """The positional wire merges through its OWN branch (r8 advice item
-    1 — it used to duck-type into the TF branch and silently DROP
-    enc_pos): stored = positional build over the even half, updates = the
+    """The positional wire merges through its OWN branch (duck-typed into
+    the TF branch it would silently DROP enc_pos): stored = positional
+    build over the even half, updates = the
     full build's chunks restricted to groups a new (odd) doc touches
     (exactly the generations a stream covering the stored corpus emits);
     merged must byte-equal the full batch build AND serve identical
@@ -1441,7 +1442,7 @@ def test_merge_index_updates_positional_wire(spark):
 
 
 def test_merge_index_updates_validates_wires(spark):
-    """Schema validation (r8 advice item 1): mismatched wires and
+    """Schema validation: mismatched wires and
     incomplete payloads raise instead of silently truncating a stream."""
     import pytest
     from streamvbyte_spark.operators.index import (build_index_chunked,
@@ -1455,7 +1456,7 @@ def test_merge_index_updates_validates_wires(spark):
     tf_w = build_index_tf_chunked(docs)
     pos_w = build_index_pos_chunked(docs)
     with pytest.raises(ValueError, match="wire"):
-        merge_index_updates(tf_w, pos_w)     # the r8 silent-truncation path
+        merge_index_updates(tf_w, pos_w)     # would silently drop enc_pos
     with pytest.raises(ValueError, match="wire"):
         merge_index_updates(set_w, tf_w)
     with pytest.raises(ValueError, match="missing"):
@@ -1524,16 +1525,20 @@ def test_streaming_index_update_pos_batch_exact(spark):
 
 def test_index_intersect_cogrouped_plan(spark):
     """The co-grouped serving shape (AND / OR / PHRASE / TF top-k /
-    k-way AND — the full family since r10): the probed terms' ENCODED
-    chunk rows join on chunk_id BEFORE any decode (common dids can only
-    live in co-occupied chunks — chunking is by did div span,
-    term-independent), and the set op / adjacency match / scoring runs
-    in-lane inside the one decode kernel.  Pins: exactly one Python
-    stage, NO posting- or occurrence-level explode anywhere (the old
-    shapes decoded every chunk of both terms and shuffled exploded did /
-    (did, pos) rows — index_topk_and ran that plan until its r10 swap),
-    and a join present in the plan."""
+    k-way AND): the probed terms' ENCODED chunk rows pair up by chunk_id
+    BEFORE any decode (common dids can only live in co-occupied chunks —
+    chunking is by did div span, term-independent), and the set op /
+    adjacency match / scoring runs in-lane inside the one decode kernel.
+    Pins, for the gate and top-k plans: exactly one Python stage over one
+    ``doc_id IN`` scan, no join (the chunks align inside the kernel), and
+    NO posting- or occurrence-level explode anywhere (decoding every chunk
+    of both terms and shuffling exploded did / (did, pos) rows is the
+    shape this replaced).  The distributed ``*_rows`` forms keep their
+    chunk_id join over the same kernel."""
+    import re
+
     import streamvbyte_spark.queries as Q
+    from streamvbyte_spark.operators import index, staging
     from streamvbyte_spark.plans.explain import plan_string
     qs = Q.build_queries()
     for name in ("index_intersect", "index_union", "index_phrase_match",
@@ -1544,8 +1549,21 @@ def test_index_intersect_cogrouped_plan(spark):
         assert plan.count("MapInArrow") == 1, (name, plan)
         # no explode of posting arrays anywhere
         assert "Generate" not in plan, (name, plan)
-        assert "Join" in plan, (name, plan)   # the chunk_id join(s)
+        assert "Join" not in plan, (name, plan)
+        assert re.search(r"Filter doc_id#\d+ IN \(", plan), (name, plan)
     # the TF top-k additionally ends in the k-row sort-limit (the kernel
     # pre-limits each batch to its local top-k before it)
     plan = plan_string(qs["index_topk_and"](spark, SF), "simple")
     assert "TakeOrderedAndProject" in plan, plan
+    rows_forms = {
+        "index_intersect": lambda e, t: index.intersect_terms_rows(e, t),
+        "index_and_multi": lambda e, t: index.intersect_terms_rows(e, t),
+        "index_union": lambda e, t: index.union_terms_rows(e, *t),
+        "index_phrase_match": lambda e, t: index.phrase_match_rows(e, *t)}
+    for name, rows in rows_forms.items():
+        gen = staging._STAGE_VIEWS[(id(spark), name)]
+        plan = plan_string(rows(spark.table(gen.names[0]), gen.derived),
+                           "simple")
+        assert plan.count("MapInArrow") == 1, (name, plan)
+        assert "Generate" not in plan, (name, plan)
+        assert "Join" in plan, (name, plan)   # the chunk_id join(s)

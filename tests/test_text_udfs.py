@@ -135,8 +135,8 @@ def test_quantize_rejects_ragged_and_null():
 
 def test_spark_simhash_sql_has_no_hof():
     """The Spark-side SQL must carry ZERO aggregate() lambdas — tokenizer
-    AND simhash are ONE fused pandas-UDF call (r3 verdict item 1; r4 fused
-    the tokenizer in too, so no transform() lambda remains either)."""
+    AND simhash are ONE fused pandas-UDF call (the tokenizer is fused in
+    too, so no transform() lambda remains either)."""
     sql = P.spark_sql("dedup_simhash")
     assert "aggregate(" not in sql and "doc_simhash_text(" in sql, sql
     assert "transform(" not in sql, sql

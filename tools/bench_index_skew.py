@@ -1,24 +1,26 @@
 """Adversarial-skew serving bench: a df=1.0 stopword corpus, measured.
 
-Reproduces (and extends, r10) the SCALE.md "SERVING under a df=1.0
-stopword" section: every document contains the stopword `the`; the rare
-terms `zebra` (200 docs, two concentrated blocks) and `quagga` (150 docs,
-one block overlapping zebra's first) exist so AND-family serving can be
+Reproduces and extends the SCALE.md "SERVING under a df=1.0 stopword"
+section: every document contains the stopword `the`; the rare terms
+`zebra` (200 docs, two concentrated blocks) and `quagga` (150 docs, one
+block overlapping zebra's first) exist so AND-family serving can be
 measured under maximal df asymmetry.  The structural claims this script
 prints evidence for:
 
-* 2-term AND (`intersect_terms`): the chunk_id equi-join decodes only the
-  co-occupied pairs (~df_rare/span), never the stopword's D/span chunks.
-* k-way AND (`intersect_terms_multi`, r10): the k-way join decodes only
-  chunks ALL k terms occupy — the RAREST term bounds the decode work.
-* TF top-k (`topk_and_terms`, co-grouped since r10): measured against an
-  inline reconstruction of the retired decode-everything plan
-  (decode_index_tf over both terms' full chunk sets + posting-level did
-  join), the honest round-over-round comparison.
-* OR consumed DISTRIBUTED (`union_terms_rows`, the public return since
-  r10) vs the gate-scalar fold (`union_terms`): the fold concentrates the
-  full union-id list on one task and dominates big-OR walls; the rows
-  form stays span-bounded per task.
+* 2-term AND (`intersect_terms`): one scan reads both terms' encoded
+  chunk rows into one task, whose aligner keeps only the co-occupied
+  pairs (~df_rare/span) before any decode — the stopword's D/span
+  encoded chunks cross Arrow once but are never decoded.
+* k-way AND (`intersect_terms_multi`): only chunks ALL k terms occupy are
+  decoded — the RAREST term bounds the decode work.
+* TF top-k (`topk_and_terms`, co-grouped: in-lane score and per-batch
+  local top-k): measured against an inline reconstruction of the
+  decode-everything plan it replaced (decode_index_tf over both terms'
+  full chunk sets + posting-level did join).
+* OR consumed DISTRIBUTED (`union_terms_rows`, the operators' public
+  return) vs the gate-scalar fold (`union_terms`): the fold concentrates
+  the full union-id list on one task and dominates big-OR walls; the
+  rows form stays span-bounded per task.
 
 Usage: python tools/bench_index_skew.py [n_docs] [span] [cpus]
 Prints one JSON line per measurement (best of N with a warm-up).

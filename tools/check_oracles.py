@@ -88,8 +88,8 @@ def main():
             print(f"{name}: ERROR {type(e).__name__}: {e}")
             failures += 1
     spark.stop()
-    # self-certifying summary (r8 verdict item 6): a truncated log used to
-    # look identical to a passing one — artifacts must end with this line
+    # self-certifying summary: a truncated log looks identical to a
+    # passing one — artifacts must end with this line
     print(f"SUMMARY: {n_run - failures}/{n_run} OK"
           + (f", {failures} FAILED" if failures else ""))
     sys.exit(1 if failures else 0)

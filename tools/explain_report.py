@@ -38,7 +38,7 @@ HEADLINE = [
 NO_CARTESIAN = {"embedding_neardup", "dedup_minhash_pairs"}
 
 NOTES = {
-    "curation_pipeline": "ONE corpus scan (r6): the auto-codec size kernel "
+    "curation_pipeline": "ONE corpus scan: the auto-codec size kernel "
         "runs map-side in the same scan that computes md5/n_tok "
         "(size_table carry columns); the md5 rank window shuffles narrow "
         "rows only; the staged decontaminate flags join back per doc.",
@@ -61,7 +61,7 @@ NOTES = {
         "row-lockstep filter reversal over the whole batch); map-only "
         "after the derived single-row-group fanout exchange.",
     "auto_roundtrip": "Expected: scan -> derived single-row-group fanout "
-                      "Exchange of the RAW TEXT rows (r11; absent on a "
+                      "Exchange of the RAW TEXT rows (absent on a "
                       "multi-file corpus) -> JVM tokenizer -> "
                       "MapInArrow(encode) -> MapInArrow(decode+fingerprint "
                       "fused); the decoded token column never crosses back "
@@ -70,7 +70,7 @@ NOTES = {
                  "kernel (size_table = the reference compressedbytes: no "
                  "encode pass, no encoded bytes in the plan).",
     "delta_roundtrip_postings": "One Exchange for the posting-list build "
-                                "(r11: an explicit group-key repartition "
+                                "(an explicit group-key repartition "
                                 "the groupBy reuses, so the heavy "
                                 "collect_list runs wide on the reduce "
                                 "side); encode/decode add none.",
@@ -83,7 +83,7 @@ NOTES = {
                            "scans — asserted in tests). ONE shuffle on the "
                            "band-key equi-join + one for the group-by. "
                            "Asserted: no cartesian in plan.",
-    "embedding_neardup": "r11 gram-matrix form: the BANDED table "
+    "embedding_neardup": "Gram-matrix form: the BANDED table "
                          "(vec_id, band_id, bucket, embedding) is "
                          "MATERIALIZED once (bucket UDF + explode at stage "
                          "build); ONE numbered exchange on (band_id, "
@@ -95,7 +95,7 @@ NOTES = {
                          "<= fanout*50 rows.  No pair join, no norm join. "
                          "Asserted: no CartesianProduct / "
                          "BroadcastNestedLoopJoin, zero parquet scans.",
-    "ann_topk": "r11 kernel form: the <= 10 query vectors are a bounded "
+    "ann_topk": "Kernel form: the <= 10 query vectors are a bounded "
                 "driver collect closed over by ONE MapInArrow that "
                 "computes all dots per batch with one exact matmul and "
                 "emits per-task top-5 per query; the rank window sees "
@@ -121,7 +121,7 @@ NOTES = {
                "final plan joins probes to inverted lists on the cell key "
                "and ranks only probed cells — no full-corpus scoring, no "
                "cartesian, one Arrow stage for the exact per-pair dot.",
-    "truncate_decode": "scan -> derived fanout exchange (r11) -> encode "
+    "truncate_decode": "scan -> derived fanout exchange -> encode "
                        "-> PREFIX decode (one MapInArrow reading only each "
                        "stream's first ceil(n/4) control bytes + 32 tokens "
                        "of data bytes, folding the fingerprint in-kernel) "
@@ -138,15 +138,14 @@ NOTES = {
     "dedup_simhash": "ONE fused pandas UDF (text -> tokenize -> simhash): "
                      "only the text column crosses to Python, no HOF "
                      "lambda, no tokens column; the REPARTITION hint is "
-                     "NESTED below the UDF (r11 — a same-select hint left "
-                     "the kernel on the scan's single task).",
+                     "NESTED below the UDF (a hint in the UDF's own select "
+                     "leaves the kernel on the scan's single task).",
     "auto_full_roundtrip": "8-codec selector incl. fsst: fsst-mix token "
                            "mapping as a numpy flat_transform INSIDE the "
                            "encode MapInArrow (was a per-token transform() "
                            "HOF), decode+fingerprint fused in a second; "
                            "zero per-row Python (whole-batch fsst "
-                           "kernels); only the derived fanout exchange "
-                           "(r11).",
+                           "kernels); only the derived fanout exchange.",
     "pack_sequences": "Materialized pack writer: the same two-level prefix "
                       "sum as sequence_pack (window on (source, bucket), "
                       "broadcast offsets), then a codegen'd slice() span "
@@ -172,7 +171,7 @@ NOTES = {
                               "column (~1.5 B/token).  Same oracle as "
                               "pack_sequences proves value-identity.",
     "ann_recall": "Recall@5 of the LSH index vs the exact baseline: the "
-                  "exact side is the r11 broadcast-queries matmul kernel "
+                  "exact side is the broadcast-queries matmul kernel "
                   "(see ann_topk); the approximate side reads the "
                   "MATERIALIZED bucket table (ann_lsh's stage); the "
                   "recall join itself is over Q x k rows.",
@@ -187,7 +186,7 @@ NOTES = {
                                "carries the ENCODED column (~1.5 B/token "
                                "instead of 4 B/token) and there is no "
                                "per-group Python stage.",
-    "curated_pack_encoded": "The ALL-ENCODED curated composite (r7): "
+    "curated_pack_encoded": "The ALL-ENCODED curated composite: "
         "encode at the scan (md5/n_tok computed there, length gate pushed "
         "below the md5 window — partitions are text-homogeneous), the "
         "dedup rank window + broadcast contamination anti-join run over "
@@ -195,11 +194,11 @@ NOTES = {
         "rank exchange), winners feed pack_encoded_rows.  NO shuffle in "
         "the composite carries raw tokens; the final plan is the "
         "materialized pack shape (zero parquet scans).",
-    "chunked_ef_roundtrip": "Elias-Fano chunked postings (r7): same "
+    "chunked_ef_roundtrip": "Elias-Fano chunked postings: same "
         "chunk/shuffle/fused-decode machinery as chunked_fused_roundtrip "
         "but the wire carries EF streams (absolute values, no prev seed — "
         "24% under svb_delta on sorted postings).",
-    "auto_sorted_size": "Sortedness-gated selector (r7): map-only "
+    "auto_sorted_size": "Sortedness-gated selector: map-only "
         "cost-only kernel; EF joins the per-row argmin only where the "
         "row is non-decreasing (vectorized mask) — no extra scan, no "
         "shuffle.",
@@ -214,29 +213,38 @@ NOTES = {
         "single-row-group fanout exchange.",
     "index_intersect": "AND serving from the encoded set wire, "
         "co-grouped: common dids can only live in co-occupied chunks "
-        "(chunking is by did div span, term-independent), so the two "
-        "terms' ENCODED chunk rows equi-join on chunk_id BEFORE any "
-        "decode and ONE kernel intersects each co-occupied pair in-lane "
-        "— stopword AND rare decodes ~df_rare/span pairs, zero posting "
-        "rows on the wire (SCALE.md measured run).  The gate row is "
-        "folded inside that kernel's task (narrow Coalesce 1, then sort, "
-        "count and fingerprint in NumPy): no Exchange, one job per "
-        "broadcast probe side plus the result job.",
-    "index_phrase_match": "Phrase serving from the POSITIONAL wire, "
-        "co-grouped like intersect: the two terms' encoded chunk rows "
-        "equi-join on chunk_id, ONE kernel decodes all three streams "
-        "(EF dids, svb tfs, svb positions), intersects the did lists "
-        "in-lane and probes pos_a+1 against pos_b per common doc — no "
-        "occurrence row ever shuffles; the gate row is folded from the "
-        "matched dids inside the same task, with no Exchange.",
-    "index_union": "OR serving from the encoded set wire, co-grouped "
-        "like intersect: FULL OUTER join of the two terms' encoded chunk "
-        "rows on chunk_id, in-lane union inside the one decode kernel — "
-        "chunk did-ranges are disjoint, so the in-lane dedup IS the "
-        "global dedup and the exploded-did distinct shuffle disappears.  "
-        "The gate row is folded inside the kernel's task; the only "
-        "Exchanges left are the full outer join's.",
-    "index_merge_updates": "Store maintenance (r9): ONE hash shuffle on "
+        "(chunking is by did div span, term-independent).  ONE job, one "
+        "task: a Filter doc_id IN (a, b) over the staged index, narrow "
+        "Coalesce 1, then ONE MapInArrow that aligns the two terms' "
+        "ENCODED chunk rows by chunk_id BEFORE any decode, intersects "
+        "each co-occupied pair in-lane and folds the gate row (sort, "
+        "count, fingerprint in NumPy) — stopword AND rare decodes "
+        "~df_rare/span pairs.  No Join, no Exchange.",
+    "index_and_multi": "3-way AND, the same one-job plan as "
+        "index_intersect: one doc_id IN scan of the three terms, "
+        "Coalesce 1, ONE MapInArrow that keeps the chunks all three "
+        "terms occupy and folds the in-lane intersection — the rarest "
+        "term bounds the decode work.  No Join, no Exchange.",
+    "index_topk_and": "TF top-k from the TF wire, the same one-job plan: "
+        "one doc_id IN scan, Coalesce 1, ONE MapInArrow that aligns the "
+        "co-occupied chunks, scores tf_a + tf_b in-lane and keeps each "
+        "batch's local top-k, then TakeOrderedAndProject over the one "
+        "partition.  No Join, no Exchange.",
+    "index_phrase_match": "Phrase serving from the POSITIONAL wire, the "
+        "same one-job plan as intersect: one doc_id IN scan, Coalesce 1, "
+        "ONE MapInArrow that aligns the two terms' chunks by chunk_id, "
+        "decodes all three streams (EF dids, svb tfs, svb positions), "
+        "intersects the did lists in-lane and probes pos_a+1 against "
+        "pos_b per common doc — no occurrence row ever shuffles — then "
+        "folds the gate row from the matched dids.  No Join, no Exchange.",
+    "index_union": "OR serving from the encoded set wire, the same "
+        "one-job plan: one doc_id IN scan, Coalesce 1, ONE MapInArrow "
+        "that aligns every chunk either term occupies (the missing side "
+        "reads count 0 and an empty stream) and unions in-lane — chunk "
+        "did-ranges are disjoint, so the in-lane dedup IS the global "
+        "dedup and the exploded-did distinct shuffle disappears.  No "
+        "Join, no Exchange.",
+    "index_merge_updates": "Store maintenance: ONE hash shuffle on "
         "(term, chunk_id) over CHUNK rows (never postings) ranks "
         "generations by content count — byte-level replacement, no "
         "decode in the merge; the gated query then proves the merged "

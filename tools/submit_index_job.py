@@ -57,7 +57,7 @@ def main():
         .write.mode("overwrite").parquet(args.output)
     stored = spark.read.parquet(args.output)
     # coalesce: sum() over an EMPTY index (all-empty texts) is NULL — the
-    # report must say zeros, not die on None arithmetic (review r8)
+    # report must say zeros, not die on None arithmetic
     agg = stored.agg(
         F.countDistinct("doc_id").alias("terms"),
         F.count("*").alias("chunks"),
@@ -78,7 +78,7 @@ def main():
         terms = [t for t in args.and_terms.split(",") if t]
         # localCheckpoint the intersection ONCE: the count/min aggregate
         # and the bounded id sample otherwise each re-scan and re-decode
-        # the stored index (r10 advice item 2)
+        # the stored index
         rows = intersect_terms_rows(stored, terms).localCheckpoint()
         # count + a bounded id sample, never the full (possibly huge) list
         agg = rows.agg(F.count("*").alias("n"),
