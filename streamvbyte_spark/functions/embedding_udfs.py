@@ -28,6 +28,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 
 from ..arrow_rows import list_flat
+from ..session import fanout_scan, fanout_width
 
 QSCALE = 10000
 EMB_DIM = 64
@@ -110,8 +111,7 @@ def register_embedding_udfs(spark: SparkSession, n_bands: int,
 
 
 def ann_exact_local_topk(cands, q_ids: np.ndarray, q_quant: np.ndarray,
-                         k: int = 5, cosine: bool = False,
-                         fanout: int | None = None):
+                         k: int = 5, cosine: bool = False):
     """(vec_id, embedding) candidate rows -> per-task top-`k` exact
     neighbors per query: (qid, cid, dot[, na, nb]) with dot the exact
     BIGINT quantized dot product against the Q broadcast query vectors
@@ -125,7 +125,8 @@ def ann_exact_local_topk(cands, q_ids: np.ndarray, q_quant: np.ndarray,
     from one exact BLAS/einsum matmul per batch, and only per-task top-k
     survivor rows leave Python.  Candidates are partitioned disjointly, so
     the union of per-task top-k sets per query is a superset of the global
-    top-k (no dedup needed).
+    top-k (no dedup needed).  A single-row-group candidate table fans out
+    first (session.fanout_scan by vec_id).
 
     cosine=True ranks by the UNROUNDED cosine and keeps, per query, every
     pair with cos >= (k-th best cos) - 1e-6 — a provable superset of the
@@ -135,12 +136,7 @@ def ann_exact_local_topk(cands, q_ids: np.ndarray, q_quant: np.ndarray,
     all of them after rounding too.  The caller computes the exact rounded
     cosine and the final rank in SQL over the survivors (zero-norm pairs
     rank at cos = 0 on both sides)."""
-    spark = cands.sparkSession
-    if fanout is None:
-        fanout = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    part = cands.select("vec_id", "embedding")
-    if part.rdd.getNumPartitions() < fanout:
-        part = part.repartition(fanout, "vec_id")
+    part = fanout_scan(cands.select("vec_id", "embedding"), "vec_id")
     Q = int(q_ids.shape[0])
     q_norms = np.einsum("ij,ij->i", q_quant, q_quant) if Q else \
         np.zeros(0, np.int64)
@@ -215,8 +211,7 @@ def ann_exact_local_topk(cands, q_ids: np.ndarray, q_quant: np.ndarray,
     return part.mapInArrow(run, out_schema)
 
 
-def neardup_local_topk(banded, k: int = 50,
-                       fanout: int | None = None):
+def neardup_local_topk(banded, k: int = 50):
     """(band_id, bucket, vec_id, embedding) rows -> per-task top-`k`
     candidate pairs (id_a, id_b, dot, na, nb) under the total order
     (dot desc, id_a, id_b), pairs being same-(band_id, bucket) vectors with
@@ -233,7 +228,8 @@ def neardup_local_topk(banded, k: int = 50,
     wire ONCE per band (one numbered repartition on the small
     (band_id, bucket) key), each co-bucketed group's dots come from one
     BLAS/einsum gram matrix per group, and only per-task top-k survivor
-    rows (<= fanout * k) leave Python.
+    rows (<= width * k, the width being session.fanout_width) leave
+    Python.
 
     Correctness of the local pre-limit: for any pair p in the global
     distinct top-k, every task containing p holds fewer than k distinct
@@ -246,18 +242,16 @@ def neardup_local_topk(banded, k: int = 50,
     Exactness of the BLAS path: products and partial sums of quantized
     int64 components are exact in float64 whenever 64 * max|q|^2 < 2^53
     (checked per group; the einsum int64 path covers the rest)."""
-    spark = banded.sparkSession
-    if fanout is None:
-        fanout = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    width = fanout_width(banded.sparkSession)
     part = (banded.select("band_id", "bucket", "vec_id", "embedding")
             # numbered repartition: AQE's byte-based coalescing would
-            # collapse this CPU-heavy-but-byte-small exchange (CLAUDE.md).
+            # collapse this CPU-heavy-but-byte-small exchange.
             # No JVM sort: the kernel lexsorts its whole partition itself
             # (cheaper than a Sort node over rows this small, and it removes
             # the cross-batch group-seam bookkeeping); partition size is
-            # bands * n / fanout rows — the same working set the JVM sort
+            # bands * n / width rows — the same working set the JVM sort
             # buffer would hold.
-            .repartition(fanout, "band_id", "bucket"))
+            .repartition(width, "band_id", "bucket"))
 
     def run(batches):
         acc: list[tuple] = []   # (id_a, id_b, dot, na, nb) int64 rows

@@ -10,36 +10,15 @@ Numeric discipline for cross-engine equality: similarity math uses integer
 token / quantized-embedding values and BIGINT arithmetic (exact in both
 engines); doubles appear only in final rounded outputs or thresholds computed
 from identical integer inputs.
+
+The SQL carries no partitioning hints: on Spark it reads the views that
+queries._register_tables registers, already fanned out by their key
+(session.fanout_scan), so every projection plans above that exchange.
 """
 
 from __future__ import annotations
 
-from ..session import default_cpus
 from .sqlpair import duckdb_tokens_expr, spark_tokens_expr
-
-# explicit fan-out for CPU-heavy map stages over possibly-single-row-group
-# test files: a count-less REPARTITION hint lets AQE coalesce the exchange
-# back to 1 partition (its advisory is byte-based, and hash/shingle work is
-# CPU-bound on small bytes).  On a real multi-file 100 TB table the scan
-# itself provides the parallelism and this pinned count is a no-op cap per
-# executor wave.
-_SCAN_FANOUT = max(8, default_cpus())
-
-
-def fanout_scan(docs):
-    """Scale-adaptive scan fanout for a ``doc_id``-keyed input DataFrame.
-
-    Small test tables ship as ONE parquet row group each, so every
-    map stage over a plain scan (tokenizer, explode + partial aggregate,
-    per-doc Python encoders) runs as a single task.  When the scan's own
-    partitioning is coarser than _SCAN_FANOUT, repartition the RAW rows
-    (one bounded exchange) before the heavy projection so it runs wide.  A
-    no-op on real multi-file corpora (the trigger is derived from the scan,
-    not pinned to local mode) and for streaming inputs (micro-batch
-    partitioning is the trigger's business, and .rdd is undefined there)."""
-    if not docs.isStreaming and docs.rdd.getNumPartitions() < _SCAN_FANOUT:
-        docs = docs.repartition(_SCAN_FANOUT, "doc_id")
-    return docs
 
 # deterministic MinHash parameters (textbook scheme: h(x) = (a*x + b) mod p)
 # over word-3-gram SHINGLE hashes: shingle sets are near-disjoint between
@@ -165,13 +144,11 @@ def _shingle_rows(d: Dialect, extra_cols: str = "",
     lambdas) are CodegenFallback — interpreted per element — so building
     shingles from per-row arrays costs ~10x this fully-codegen'd
     explode+window form (and an inline split(text) per element access is
-    O(n_words^2) on top).  REPARTITION(doc_id) on the raw scan fans a
-    single-row-group test file out and pre-clusters the window + distinct
-    (one shuffle total; a count-less hint gets AQE-coalesced to 1 task
-    because its advisory is byte-based while this stage is CPU-bound)."""
+    O(n_words^2) on top).  On Spark the registered ``documents`` view is
+    already fanned out by doc_id (queries._register_tables), which also
+    pre-clusters the window + distinct."""
     ec = f", {extra_cols}" if extra_cols else ""
-    raw = (f"select /*+ REPARTITION({_SCAN_FANOUT}, doc_id) */ "
-           f"cast(doc_id as string) as doc_id{ec}, text from documents")
+    raw = f"select cast(doc_id as string) as doc_id{ec}, text from documents"
     if d.kind == "spark":
         word_rows = (f"select doc_id{ec}, pos + 1 as pos, word from ({raw}) "
                      f"lateral view posexplode({_words(d)}) _t as pos, word")
@@ -323,16 +300,8 @@ def q_dedup_simhash(d: Dialect) -> str:
     DuckDB oracle keeps the tokenizer + 32-term fold, so the equality check
     still proves the fused UDF bit-for-bit."""
     if d.kind == "spark":
-        # pinned-count fanout: the UDF stage is CPU-bound over a possibly
-        # single-row-group file (see _SCAN_FANOUT note above).  The hint
-        # must sit in an INNER select of raw columns: a hint in the SAME
-        # select as the UDF plans the exchange ABOVE the projection, so the
-        # UDF still runs on the scan's single task (the whole simhash
-        # kernel on 1 of 32 cores at sf1.0)
         return ("select cast(doc_id as string) as doc_id, "
-                "doc_simhash_text(text) as simhash from "
-                f"(select /*+ REPARTITION({_SCAN_FANOUT}, doc_id) */ "
-                "doc_id, text from documents)")
+                "doc_simhash_text(text) as simhash from documents")
     tok = f"select cast(doc_id as string) as doc_id, {d.tokens()} as tokens from documents"
     h = f"(cast({SIMHASH_A} as bigint) * t + {SIMHASH_B}) % {MINHASH_P}"
     bit_terms = []
@@ -812,9 +781,6 @@ def q_quality_score(d: Dialect) -> str:
     n = d.alen(w)
     if d.kind == "spark":
         n, stops, distinct = "s.n_words", "s.stops", "s.n_distinct"
-        # hint on the INNERMOST raw-column select so the word-stats UDF
-        # evaluates ABOVE the exchange (same-select hints leave the UDF on
-        # the scan's single task)
         return (
             "select doc_id, "
             f"{n} as n_words, "
@@ -822,9 +788,7 @@ def q_quality_score(d: Dialect) -> str:
             f"round(cast({stops} as double) / {n}, 4) as stopword_ratio, "
             f"round(cast({distinct} as double) / {n}, 4) as distinct_ratio "
             "from (select cast(doc_id as string) as doc_id, text, "
-            "quality_counts(text) as s from "
-            f"(select /*+ REPARTITION({_SCAN_FANOUT}, doc_id) */ "
-            "doc_id, text from documents))"
+            "quality_counts(text) as s from documents)"
         )
     stop_in = ", ".join(f"'{s}'" for s in STOPWORDS)
     stops = d.alen(d.afilter(w, f"x -> x in ({stop_in})"))
@@ -861,12 +825,9 @@ def q_lang_id(d: Dialect) -> str:
         f"when {hits['fr']} > 0 then 'fr' else 'unknown' end"
     )
     if d.kind == "spark":
-        # innermost hint: see q_quality_score's hint note
         return (f"select doc_id, {cases} as lang_pred, lang as lang_true "
                 "from (select cast(doc_id as string) as doc_id, lang, "
-                "lang_counts(text) as s from "
-                f"(select /*+ REPARTITION({_SCAN_FANOUT}, doc_id) */ "
-                "doc_id, lang, text from documents))")
+                "lang_counts(text) as s from documents)")
     return (f"select cast(doc_id as string) as doc_id, {cases} as lang_pred, "
             "lang as lang_true from documents")
 
@@ -877,11 +838,8 @@ def q_fingerprint(d: Dialect) -> str:
     Spark side: fused text -> fingerprint pandas UDF (doc_fingerprint_text;
     same rationale as q_dedup_simhash); the oracle keeps the SQL fold."""
     if d.kind == "spark":
-        # innermost hint: see q_quality_score's hint note
         return ("select cast(doc_id as string) as doc_id, "
-                "doc_fingerprint_text(text) as fingerprint from "
-                f"(select /*+ REPARTITION({_SCAN_FANOUT}, doc_id) */ "
-                "doc_id, text from documents)")
+                "doc_fingerprint_text(text) as fingerprint from documents")
     fp = d.fold0("tokens", "(acc * 31 + t) % 1000000007")
     tok = f"select cast(doc_id as string) as doc_id, {d.tokens()} as tokens from documents"
     return f"with tok as ({tok}) select doc_id, {fp} as fingerprint from tok"
@@ -932,14 +890,11 @@ def q_event_sessions(d: Dialect) -> str:
               " + cast(date_format(ts, 'SSSSSS') as bigint))")
     else:
         ep = "epoch_us(ts)"
-    # Spark: fan the single-row-group events scan out on the WINDOW key so
-    # the 4x date_format epoch math runs wide AND the session windows reuse
-    # the exchange (hashpartitioning(user_id) either way)
-    src = ("events" if d.kind != "spark" else
-           f"(select /*+ REPARTITION({_SCAN_FANOUT}, user_id) */ "
-           "user_id, event_id, ts from events)")
+    # the Spark events view is fanned out on the WINDOW key
+    # (queries._register_tables), so the 4x date_format epoch math runs
+    # wide AND the session windows reuse that exchange
     return (
-        f"with e as (select user_id, event_id, {ep} as ep from {src}), "
+        f"with e as (select user_id, event_id, {ep} as ep from events), "
         "m as (select user_id, event_id, ep, "
         " case when ep - lag(ep) over w > 1800000000 or lag(ep) over w is null "
         " then 1 else 0 end as brk from e window w as "
@@ -1117,14 +1072,11 @@ def curated_tok_select(d: Dialect, hits_src: str, msrc: str) -> str:
     gate: same pack volumes, different concatenation order).  Only the
     hits comparison casts (hits ids come from the string-keyed shingle
     pipeline)."""
-    src = ("documents" if d.kind != "spark" else
-           f"(select /*+ REPARTITION({_SCAN_FANOUT}, doc_id) */ "
-           "doc_id, source, text from documents)")
     inner = (f"select doc_id, source, "
              f"{d.tokens()} as tokens, {d.alen(d.split('text'))} as n_tok, "
              "row_number() over (partition by md5(text) "
              "order by cast(doc_id as string)) as rn "
-             f"from {src} where source != {msrc}")
+             f"from documents where source != {msrc}")
     return (f"select doc_id, source, tokens, n_tok from ({inner}) base "
             f"where rn = 1 and n_tok >= {CURATE_MIN_TOK} "
             f"and not exists (select 1 from {hits_src} h "
@@ -1313,15 +1265,9 @@ def q_pack_sequences(d: Dialect, bucket_expr: str | None = None,
     # takes the query from two corpus scans to one.  tok_select: override
     # the whole corpus SELECT (must yield doc_id, source, tokens, n_tok) —
     # queries.curated_pack_sequences packs a curated subset this way.
-    # Spark: innermost fanout hint — without it the
-    # tokenizer transform computed below the window's exchange, i.e. on
-    # the single-row-group scan task
-    src = ("documents" if d.kind != "spark" else
-           f"(select /*+ REPARTITION({_SCAN_FANOUT}, doc_id) */ "
-           "doc_id, source, text from documents)")
     tok = tok_select or (
         f"select doc_id, source, {d.tokens()} as tokens, "
-        f"{d.alen(d.split('text'))} as n_tok from {src}")
+        f"{d.alen(d.split('text'))} as n_tok from documents")
     bkt = (bucket_expr or _default_pack_bucket(d)) if d.kind == "spark" else ""
     cum = _two_level_cum_sql(d, bkt, carry=", tokens",
                              tot_src=ntok_table or "t")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..arrow_rows import (binary_array, binary_flat, complete_runs, list_array,
                           list_flat)
+from ..session import fanout_width
 
 CHUNKED_ENC_SCHEMA = ("doc_id string, chunk_id int, tok_start long, "
                       "n_tok int, prev long, encoded binary, "
@@ -191,7 +192,6 @@ def _flush_doc_batches(doc_ids: np.ndarray, flat: np.ndarray,
 def decode_reassemble_fused(enc_df: DataFrame,
                             max_len: int | None = None,
                             fingerprint: bool = False,
-                            fanout: int | None = None,
                             codec: str = "svb_delta") -> DataFrame:
     """Decode + reassemble AFTER one hash shuffle, whole-batch (mapInArrow).
 
@@ -207,11 +207,12 @@ def decode_reassemble_fused(enc_df: DataFrame,
     array<int> cell and must take ``decode_chunked_delta`` instead (the
     error says so).
 
-    Execution: ``repartition(doc_id) + sortWithinPartitions(doc_id,
-    chunk_id)`` makes each document a CONTIGUOUS ordered run inside its
-    partition; one mapInArrow stage then runs the segmented whole-batch
-    delta decode (codec.batched.decode_delta_rows_prev) over every complete
-    run in an Arrow batch — no per-group Python, no per-row pandas.  A run
+    Execution: ``repartition(W, doc_id) + sortWithinPartitions(doc_id,
+    chunk_id)``, W = session.fanout_width, makes each document a
+    CONTIGUOUS ordered run inside its partition; one mapInArrow stage then
+    runs the segmented whole-batch delta decode
+    (codec.batched.decode_delta_rows_prev) over every complete run in an
+    Arrow batch — no per-group Python, no per-row pandas.  A run
     can straddle Arrow batch boundaries, so the stage reads its batches
     through ``arrow_rows.complete_runs``, which carries the open tail run
     into the next batch and flushes it at iterator end.  Each chunk decodes
@@ -245,12 +246,11 @@ def decode_reassemble_fused(enc_df: DataFrame,
             raise ValueError(f"max_len must be >= 1, got {max_len}")
         pruned = enc_df.where(F.col("tok_start") < max_len)
         cols.append("tok_start")
-    # fanout pins the repartition count: AQE's byte-based coalescing can
-    # collapse a count-less repartition of byte-small-but-CPU-heavy chunk
-    # data to a handful of tasks (CLAUDE.md); callers that know the decode
-    # stage is CPU-bound pass an explicit width
+    # numbered with the session's width: AQE's byte-based coalescing
+    # collapses a count-less repartition of byte-small-but-CPU-heavy chunk
+    # data to a handful of tasks
     part = (pruned.select(*cols)
-            .repartition(*((fanout, "doc_id") if fanout else ("doc_id",)))
+            .repartition(fanout_width(enc_df.sparkSession), "doc_id")
             .sortWithinPartitions("doc_id", "chunk_id"))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

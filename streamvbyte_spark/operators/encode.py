@@ -36,6 +36,8 @@ ENCODED_SCHEMA = (
 )
 DECODED_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 DECODED_FP_SCHEMA = "doc_id string, n_tok int, source string, fingerprint bigint"
+# the codec column's names, indexed by codec id
+_CODEC_NAMES = pa.array(batched.CODEC_NAMES, pa.string())
 
 
 def encode_table(df: DataFrame, codec: str = "auto",
@@ -76,7 +78,8 @@ def encode_table(df: DataFrame, codec: str = "auto",
             tmin = batched._seg_reduce(np.minimum, flat, offsets).astype(np.int64)
             tmax = batched._seg_reduce(np.maximum, flat, offsets).astype(np.int64)
             empty = nr == 0
-            names = pa.array([batched.CODEC_NAMES[c] for c in cids], pa.string())
+            names = pa.DictionaryArray.from_arrays(
+                pa.array(cids, pa.int32()), _CODEC_NAMES).cast(pa.string())
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column(batch.schema.get_field_index("doc_id")),
@@ -144,20 +147,29 @@ def size_table(df: DataFrame, codec: str = "auto",
                          + carry_schema)
 
 
+def _first_null_doc(batch: pa.RecordBatch, cols: dict, col: pa.Array):
+    """doc_id of the first NULL row of ``col`` (which has one)."""
+    null = col.is_null().to_numpy(zero_copy_only=False)
+    return batch.column(cols["doc_id"])[int(np.argmax(null))]
+
+
 def _encoded_rows(batch: pa.RecordBatch, cols: dict):
     """(flat encoded bytes, offsets, n_tok, codec ids) of an encoded batch.
     A NULL ``encoded`` row raises ValueError naming its doc_id:
     binary_flat would read it as an empty stream, which is a wrong decode
-    for any n_tok > 0."""
+    for any n_tok > 0.  So does a NULL or unknown ``codec`` name."""
+    import pyarrow.compute as pc   # a top-level import slows worker start
     col = batch.column(cols["encoded"])
     if col.null_count:
-        null = col.is_null().to_numpy(zero_copy_only=False)
-        doc = batch.column(cols["doc_id"])[int(np.argmax(null))]
+        doc = _first_null_doc(batch, cols, col)
         raise ValueError(f"NULL encoded stream decoding doc_id={doc}")
     enc, eoff = binary_flat(col)
     n_toks = np.asarray(batch.column(cols["n_tok"]), dtype=np.int64)
-    names = batch.column(cols["codec"]).to_pylist()
-    cids = np.array([batched.CODEC_ID[n] for n in names], dtype=np.int32)
+    ids = pc.index_in(batch.column(cols["codec"]), value_set=_CODEC_NAMES)
+    if ids.null_count:
+        doc = _first_null_doc(batch, cols, ids)
+        raise ValueError(f"NULL or unknown codec name decoding doc_id={doc}")
+    cids = ids.to_numpy().astype(np.int32, copy=False)
     return enc, eoff, n_toks, cids
 
 

@@ -61,7 +61,7 @@ from pyspark.sql import functions as F
 
 from ..arrow_rows import binary_array, binary_flat, list_array, list_flat
 from ..codec import batched
-from ..functions.pipeline_sql import fanout_scan
+from ..session import fanout_scan
 from .chunking import encode_chunked_delta
 
 # chunk span in doc-id space: bounds every chunk row to <= span postings.
@@ -155,7 +155,7 @@ def term_doc_pairs(docs: DataFrame) -> DataFrame:
     id in a MIXED chunk would already trip the EF sortedness check, but an
     isolated all-negative chunk preserves two's-complement order and would
     otherwise wrap silently onto the uint32 wire (probed)."""
-    docs = fanout_scan(docs)
+    docs = fanout_scan(docs, "doc_id")
     return (docs.select(
         F.explode(F.split(F.col("text"), " ")).alias("term"),
         F.col("doc_id").cast("int").alias("did"))
@@ -172,7 +172,7 @@ def term_doc_pos_pairs(docs: DataFrame) -> DataFrame:
     text).  Same tokenizer and loud id guard; shared by the positional
     batch build and the TF streaming merge (whose within-batch redelivery
     dedup is keyed on (did, pos))."""
-    docs = fanout_scan(docs)
+    docs = fanout_scan(docs, "doc_id")
     return (docs.select(
         F.posexplode(F.split(F.col("text"), " ")).alias("pos", "term"),
         F.col("doc_id").cast("int").alias("did"))

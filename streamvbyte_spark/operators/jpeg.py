@@ -162,7 +162,8 @@ class PayloadError(ValueError):
 def _parse_jpeg(payload):
     """Marker walk up to (and including) SOS -> (data bytes, frame, scan,
     quant tables, huffman tables, restart interval, entropy start pos).
-    A malformed header raises ValueError, an unsupported one
+    A malformed header, or a frame declaring more data units than its
+    entropy bytes can hold, raises ValueError, an unsupported header
     NotImplementedError."""
     buf = np.asarray(payload, dtype=np.uint8) if not isinstance(
         payload, (bytes, bytearray)) else np.frombuffer(payload, np.uint8)
@@ -294,6 +295,16 @@ def _parse_jpeg(payload):
                     raise ValueError("JPEG component references an "
                                      "undefined quantization table")
                 scan.append((comp, tt >> 4, tt & 15))
+            # every data unit costs at least 2 entropy bits (a DC code and
+            # an EOB, each >= 1 bit), so a frame declaring more units than
+            # 4 per payload byte left is corrupt — past a segment's end a
+            # lane reads zero bits, and decode cost would follow the
+            # declared frame instead of the payload
+            n_units = _scan_layout(frame, scan)["n_units"]
+            if n_units > 4 * (len(data) - nxt):
+                raise ValueError(
+                    f"JPEG frame declares {n_units} data units, more than "
+                    f"its {len(data) - nxt} entropy bytes can hold")
             return data, frame, scan, qt, huff, restart_interval, nxt
         pos = nxt
     raise ValueError("JPEG truncated before SOS")

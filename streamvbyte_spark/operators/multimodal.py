@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..arrow_rows import binary_array, binary_flat, list_array
-from ..functions.pipeline_sql import fanout_scan
+from ..session import fanout_scan
 
 MEDIA_SCHEMA = ("doc_id string, media_type string, payload binary, "
                 "meta struct<n_bytes: int, fmt: string>")
@@ -523,7 +523,7 @@ def synth_adpcm_table(docs: DataFrame, rate: int = 16000) -> DataFrame:
                 [doc, pa.array(payloads, pa.binary())],
                 names=["doc_id", "payload"])
 
-    base = fanout_scan(docs).select(
+    base = fanout_scan(docs, "doc_id").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
     return (base.mapInArrow(run, "doc_id string, payload binary")
@@ -566,7 +566,7 @@ def synth_ppm_table(docs: DataFrame, width: int = 4) -> DataFrame:
                 [doc, pa.array(payloads, pa.binary())],
                 names=["doc_id", "payload"])
 
-    base = fanout_scan(docs).select(
+    base = fanout_scan(docs, "doc_id").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
     out = base.mapInArrow(run, "doc_id string, payload binary")
@@ -652,7 +652,7 @@ def synth_png_table(docs: DataFrame, width: int = 4) -> DataFrame:
                 [doc, pa.array(payloads, pa.binary())],
                 names=["doc_id", "payload"])
 
-    base = fanout_scan(docs).select(
+    base = fanout_scan(docs, "doc_id").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
     return (base.mapInArrow(run, "doc_id string, payload binary")
@@ -687,7 +687,7 @@ def synth_jpeg_table(docs: DataFrame, width_blocks: int = 2) -> DataFrame:
                 [doc, pa.array(payloads, pa.binary())],
                 names=["doc_id", "payload"])
 
-    base = fanout_scan(docs).select(
+    base = fanout_scan(docs, "doc_id").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
     return (base.mapInArrow(run, "doc_id string, payload binary")
@@ -722,7 +722,7 @@ def synth_wav_table(docs: DataFrame, rate: int = 16000) -> DataFrame:
                 [doc, pa.array(payloads, pa.binary())],
                 names=["doc_id", "payload"])
 
-    base = fanout_scan(docs).select(
+    base = fanout_scan(docs, "doc_id").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
     return (base.mapInArrow(run, "doc_id string, payload binary")

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from ..arrow_rows import (binary_array, binary_flat, complete_runs, list_array,
                           list_flat)
 from ..codec import batched
+from ..session import fanout_width
 from .staging import materialize
 
 # doc_id-range bucket width shared with the SQL pack queries
@@ -176,7 +177,7 @@ def _slice_segments(cum: DataFrame, cap: int, codec: str,
 
 def pack_tokens_encoded(tok: DataFrame, cap: int = PACK_CAP,
                         order_bucket: tuple[Column, Column] | None = None,
-                        fanout: int | None = None, codec: str = "auto",
+                        codec: str = "auto",
                         candidates: tuple[str, ...] =
                         batched.VECTOR_COST_CODECS,
                         emit: str = "fingerprint") -> DataFrame:
@@ -191,12 +192,11 @@ def pack_tokens_encoded(tok: DataFrame, cap: int = PACK_CAP,
 
     order_bucket: (order key, monotone bucket) columns over doc_id —
     default `default_numeric_order`; pass `derived_string_order(tok)` for
-    string-id corpora.  fanout pins the width of BOTH heavy exchanges —
-    the level-1 window's (via an explicit pre-repartition whose
-    partitioning the window reuses) and the reassembly's: AQE's byte-based
-    coalescing collapses CPU-heavy-but-byte-small ENCODED stages to one
-    task (CLAUDE.md; verified at 600k tokens -> 1 partition).  Defaults to
-    the session's shuffle-partition count.
+    string-id corpora.  Both heavy exchanges — the level-1 window's (via
+    an explicit pre-repartition whose partitioning the window reuses) and
+    the reassembly's — are numbered with session.fanout_width: AQE's
+    byte-based coalescing collapses CPU-heavy-but-byte-small ENCODED
+    stages to one task (verified at 600k tokens -> 1 partition).
 
     codec/candidates: the wire format of both shuffle legs — default
     'auto' (per-row cost-model argmin over VECTOR_COST_CODECS, the same
@@ -208,13 +208,13 @@ def pack_tokens_encoded(tok: DataFrame, cap: int = PACK_CAP,
     return pack_encoded_rows(enc, cap=cap,
                              order_bucket=order_bucket or
                              default_numeric_order(tok),
-                             fanout=fanout, codec=codec,
+                             codec=codec,
                              candidates=candidates, emit=emit)
 
 
 def pack_encoded_rows(enc: DataFrame, cap: int = PACK_CAP,
                       order_bucket: tuple[Column, Column] | None = None,
-                      fanout: int | None = None, codec: str = "auto",
+                      codec: str = "auto",
                       candidates: tuple[str, ...] =
                       batched.VECTOR_COST_CODECS,
                       emit: str = "fingerprint") -> DataFrame:
@@ -230,15 +230,13 @@ def pack_encoded_rows(enc: DataFrame, cap: int = PACK_CAP,
         raise ValueError(
             f"emit must be 'fingerprint' or 'encoded', got {emit!r}")
     okey, bkt = order_bucket or default_numeric_order(enc)
-    if fanout is None:
-        fanout = int(enc.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "200"))
+    width = fanout_width(enc.sparkSession)
     enc = (enc.where(F.col("n_tok") > 0)
            .withColumn("okey", okey).withColumn("bkt", bkt)
            # explicit numbered repartition on the window's keys: the window
            # reuses this partitioning (no second exchange) and a
            # user-numbered exchange is exempt from AQE coalescing
-           .repartition(fanout, "source", "bkt"))
+           .repartition(width, "source", "bkt"))
     w1 = (Window.partitionBy("source", "bkt").orderBy("okey")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     # project BEFORE the checkpoint: doc_id and okey are dead after
@@ -273,7 +271,7 @@ def pack_encoded_rows(enc: DataFrame, cap: int = PACK_CAP,
                        - F.col("n_tok").cast("long"))
            .select("source", "st", "n_tok", "codec", "encoded"))
     segs = _slice_segments(cum, cap, codec, candidates)
-    part = (segs.repartition(fanout, "source", "pack_id")
+    part = (segs.repartition(width, "source", "pack_id")
             .sortWithinPartitions("source", "pack_id", "seg_st"))
 
     def asm(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

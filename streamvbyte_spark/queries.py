@@ -32,6 +32,7 @@ from .operators import decode_table, encode_table, size_table
 # release_stage is re-exported: harnesses tear a query's stages down here
 from .operators.staging import (release_stage,  # noqa: F401
                                 stage_generation, stage_views)
+from .session import fanout_scan
 from .sources import posting_lists, tokens_from_documents
 
 # ---------------------------------------------------------------------------
@@ -321,6 +322,24 @@ def _string_bucket_expr(spark) -> str:
     return f"substring(cast(doc_id as string), 1, {n})"
 
 
+# the scan fan-out key of each table the SQL queries read; the TPC-H tables
+# register plain
+_FANOUT_KEYS = {"documents": "doc_id", "events": "user_id",
+                "embeddings": "vec_id"}
+
+
+def _register_tables(spark, sf_dir, *tables):
+    """Register each parquet table of sf_dir as a temp view, fanned out by
+    its _FANOUT_KEYS key (session.fanout_scan).  With the exchange inside
+    the view, every projection a query puts over it — a UDF, the tokenizer,
+    a window's sort key — plans above the exchange and runs wide."""
+    for t in tables:
+        df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
+        if t in _FANOUT_KEYS:
+            df = fanout_scan(df, _FANOUT_KEYS[t])
+        df.createOrReplaceTempView(t)
+
+
 def _build_curation_stages(spark, sf_dir, qname, with_manifest=True):
     """Materialize the curation stage set (shingles, eval source,
     contaminated ids, narrow curated manifest) under QNAME's OWN view
@@ -340,8 +359,7 @@ def _build_curation_stages(spark, sf_dir, qname, with_manifest=True):
     stack checkpoint blocks."""
     from .functions.text_udfs import register_text_udfs
     register_text_udfs(spark)
-    spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .createOrReplaceTempView("documents")
+    _register_tables(spark, sf_dir, "documents")
     d = pipeline_sql.Dialect("spark")
     fp = (sf_dir, with_manifest, pipeline_sql._shingle_rows(d, "source"),
           pipeline_sql.CURATE_MIN_TOK)
@@ -418,19 +436,13 @@ def curated_encoded_rows(spark, sf_dir, qname="curated_pack_encoded"):
     d = pipeline_sql.Dialect("spark")
     dtype = spark.table("documents").schema["doc_id"].dataType
     n_tok = d.alen(d.split("text"))
-    # numbered repartition: fans a single-row-group file out so the encode
-    # mapInArrow stage is not one task (pipeline_sql._SCAN_FANOUT note) and
-    # is AQE-coalescing-exempt.  The hint sits in an INNER raw-column
-    # select: hinted-same-select projections plan BELOW the exchange, so
-    # the tokenize + md5 ran on the scan's single task (plan audit);
-    # the source/length predicates stay below the exchange by predicate
-    # pushdown — cheap codegen'd filters that also shrink the shuffle
+    # the tokenize + md5 + encode run above the documents view's fan-out
+    # exchange; the source/length predicates are pushed below it — cheap
+    # codegen'd filters that also shrink the shuffle
     pre = spark.sql(
         "select cast(doc_id as string) as doc_id, source, "
         f"md5(text) as md5, {d.tokens()} as tokens, {n_tok} as n_tok "
-        f"from (select /*+ REPARTITION({pipeline_sql._SCAN_FANOUT}, "
-        "doc_id) */ doc_id, source, text from documents) "
-        f"where source != {msrc} "
+        f"from documents where source != {msrc} "
         f"and {n_tok} >= {pipeline_sql.CURATE_MIN_TOK}")
     enc = _encode_docs(pre, "auto", batched.VECTOR_COST_CODECS,
                        carry=("md5",))
@@ -646,8 +658,8 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # aggregate() fold is the only tokenizer pass and runs wide; the
         # fold itself stays — this query IS the zero-Python
         # composability demo
-        docs = pipeline_sql.fanout_scan(
-            spark.read.parquet(f"{sf_dir}/documents.parquet"))
+        docs = fanout_scan(
+            spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
         t = spark_tokens_expr("text")
         return docs.select(
             F.col("doc_id").cast("string").alias("doc_id"),
@@ -1033,12 +1045,8 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from .operators.chunking import decode_reassemble_fused
         from .operators.index import build_index_chunked as _build
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        # pinned fanout: the decode input is byte-small but CPU-heavy EF
-        # chunks — a count-less repartition is AQE-coalescible to 1 task
-        # (CLAUDE.md; packing.py hit exactly this at sf0.1)
         re = decode_reassemble_fused(_build(docs), fingerprint=True,
-                                     codec="ef",
-                                     fanout=pipeline_sql._SCAN_FANOUT)
+                                     codec="ef")
         return re.select("doc_id", "n_tok", "fingerprint")
 
     q["index_build_chunked"] = index_build_chunked
@@ -1184,8 +1192,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from .operators.chunking import decode_reassemble_fused
         from .operators.index import build_index_chunked
         merged = _merge_equivalence(spark, sf_dir, build_index_chunked)
-        re = decode_reassemble_fused(merged, fingerprint=True, codec="ef",
-                                     fanout=pipeline_sql._SCAN_FANOUT)
+        re = decode_reassemble_fused(merged, fingerprint=True, codec="ef")
         return re.select("doc_id", "n_tok", "fingerprint")
 
     q["index_merge_updates"] = index_merge_updates
@@ -1266,9 +1273,8 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             register_embedding_udfs(spark, pipeline_sql.NEARDUP_BANDS,
                                     pipeline_sql.NEARDUP_PLANES_PER_BAND)
             register_text_udfs(spark)
-            for t in _pipeline_tables.get(name, ("documents",)):
-                spark.read.parquet(f"{sf_dir}/{t}.parquet") \
-                    .createOrReplaceTempView(t)
+            _register_tables(spark, sf_dir,
+                             *_pipeline_tables.get(name, ("documents",)))
             staged = pipeline_sql.SPARK_STAGES.get(name)
             if staged is None:
                 if name in _bucketed_pack_queries:
@@ -1340,7 +1346,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # once, at stage build), each embedding crosses ONE numbered exchange
     # per band, the per-bucket gram-matrix kernel (neardup_local_topk)
     # computes all co-bucketed dots AND both norms in-kernel, and only
-    # per-task top-50 survivor rows (<= fanout * 50) leave Python for the
+    # per-task top-50 survivor rows (<= width * 50) leave Python for the
     # global distinct + rank — no norm join, one Python node, zero scans in
     # the final plan (test_lsh_self_joins_materialize_signatures).  The
     # DuckDB oracle keeps the single-text CTE join form, so the driver gate
@@ -1351,16 +1357,12 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                                register_embedding_udfs)
         register_embedding_udfs(spark, pipeline_sql.NEARDUP_BANDS,
                                 pipeline_sql.NEARDUP_PLANES_PER_BAND)
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
-            .createOrReplaceTempView("embeddings")
-        # numbered-repartition hint INSIDE the stage: the embeddings parquet
-        # is one row group, so an unhinted stage would run the bucket UDF
-        # single-task (pipeline_sql._SCAN_FANOUT note; AQE-exempt)
+        # the bucket UDF runs above the embeddings view's fan-out exchange
+        _register_tables(spark, sf_dir, "embeddings")
         raw_bands = (
             "select vec_id, band_id, bucket, embedding from "
             "(select vec_id, embedding, emb_band_buckets(embedding) as bks "
-            f"from (select /*+ REPARTITION({pipeline_sql._SCAN_FANOUT}, "
-            "vec_id) */ vec_id, embedding from embeddings)) "
+            "from embeddings) "
             "lateral view posexplode(bks) _t as band_id, bucket")
         (bands_view,) = stage_views(
             spark, "embedding_neardup", (sf_dir, raw_bands, "local-topk-v2"),
@@ -1472,8 +1474,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from .functions.embedding_udfs import register_embedding_udfs
         register_embedding_udfs(spark, pipeline_sql.NEARDUP_BANDS,
                                 pipeline_sql.NEARDUP_PLANES_PER_BAND)
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
-            .createOrReplaceTempView("embeddings")
+        _register_tables(spark, sf_dir, "embeddings")
         # the approximate side is built exactly like its SPARK_STAGES form
         # but composes with the DataFrame exact side
         d = pipeline_sql.Dialect("spark")
@@ -1492,8 +1493,7 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from .functions.embedding_udfs import register_embedding_udfs
         register_embedding_udfs(spark, pipeline_sql.NEARDUP_BANDS,
                                 pipeline_sql.NEARDUP_PLANES_PER_BAND)
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
-            .createOrReplaceTempView("embeddings")
+        _register_tables(spark, sf_dir, "embeddings")
         d = pipeline_sql.Dialect("spark")
         stages = [("svb_stage_recivf_e",
                    lambda: spark.sql(pipeline_sql._ivf_spark_e(d))),
@@ -1586,14 +1586,12 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         decon = make_pipeline("decontaminate",
                               owner="curation_pipeline")(spark, sf_dir)
         from pyspark.sql import Window
-        # innermost fanout hint (plan audit): without it the md5 +
-        # tokenize + size kernel all ran on the single-row-group scan task
+        # decontaminate registered the fanned-out documents view: the md5 +
+        # tokenize + size kernel run above its exchange
         tok = spark.sql(
             "select cast(doc_id as string) as doc_id, source, "
             "md5(text) as h, size(split(text, ' ')) as n_tok, "
-            f"{spark_tokens_expr('text')} as tokens "
-            f"from (select /*+ REPARTITION({pipeline_sql._SCAN_FANOUT}, "
-            "doc_id) */ doc_id, source, text from documents) "
+            f"{spark_tokens_expr('text')} as tokens from documents "
             "where source != (select min(source) from documents)")
         sized = size_table(tok, codec="auto", carry=("source", "h", "n_tok"))
         w = Window.partitionBy("h").orderBy("doc_id")

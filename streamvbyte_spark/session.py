@@ -3,7 +3,9 @@
 The defaults keep the codec kernels fed and the Python stages cheap: AQE
 re-planning, Arrow-batched Python exchange in 16k-row batches, reused Python
 workers with a malloc that keeps freed memory, and pushdown-friendly parquet
-scans.  They hold on local[N] and on a cluster alike.
+scans.  They hold on local[N] and on a cluster alike.  The session's shuffle
+partitions are also the width of every CPU-heavy stage: ``fanout_width``
+reads it and ``fanout_scan`` is the one scan fan-out rule.
 """
 
 from __future__ import annotations
@@ -11,7 +13,7 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # the codec kernels byte-view uint32 buffers (codec/batched.py's uint32
 # stores and loads over byte buffers) and the stored wires are little-endian
@@ -82,6 +84,32 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     except (OSError, StopIteration):
         return "16g"
     return f"{max(1, min(16, mem_kb // 6 // 2**20))}g"
+
+
+def fanout_width(spark: SparkSession) -> int:
+    """The task count of every CPU-heavy stage: the session's shuffle
+    partitions, which get_spark sets to the host's CPU count.  The codec
+    and text kernels are CPU-bound on small bytes, so the shuffles they run
+    behind are NUMBERED with this width — AQE's byte-based coalescing would
+    collapse a count-less one to a single task, and a numbered repartition
+    (REPARTITION_BY_NUM in the plan) is exempt from it."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def fanout_scan(df: DataFrame, key: str) -> DataFrame:
+    """The one scan fan-out rule: repartition the RAW rows to
+    ``fanout_width`` tasks by ``key`` only when the input is coarser than
+    that width, so the heavy projection above runs wide.  A single-row-group
+    parquet file (every test table) scans as one task and fans out; an
+    input that already scans that wide (a real multi-file corpus) passes
+    through untouched, as does a streaming input (micro-batch partitioning
+    is its trigger's business, and .rdd is undefined there)."""
+    if df.isStreaming:
+        return df
+    width = fanout_width(df.sparkSession)
+    if df.rdd.getNumPartitions() < width:
+        df = df.repartition(width, key)
+    return df
 
 
 def get_spark(app: str = "streamvbyte-spark", master: str | None = None,

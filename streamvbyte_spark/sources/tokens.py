@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..arrow_rows import list_array
 from ..functions.sqlpair import spark_tokens_expr
+from ..session import fanout_scan, fanout_width
 
 TOKENS_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -47,11 +48,11 @@ def tokens_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
       the word count IS the token count; size(transform(...)) would
       evaluate the interpreted tokenizer lambda a SECOND time per row (no
       subexpression elimination fires for CodegenFallback lambdas).
-    * the raw text rows fan out (pipeline_sql.fanout_scan) before the
+    * the raw text rows fan out (session.fanout_scan) before the
       tokenizer projection, so the interpreted lambda and the codec kernels
       downstream run wide on a single-row-group scan."""
-    from ..functions.pipeline_sql import fanout_scan
-    docs = fanout_scan(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = fanout_scan(spark.read.parquet(f"{sf_dir}/documents.parquet"),
+                       "doc_id")
     return docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.expr(spark_tokens_expr("text")).alias("tokens"),
@@ -89,10 +90,9 @@ def posting_lists(spark: SparkSession, sf_dir: str,
     # nothing for collect_list (lists don't combine smaller), so skipping
     # the narrow partial stage is pure gain: 0.88 -> 0.65 s (bigint) /
     # 1.44 -> 1.21 s (string) measured at sf1.0.
-    fanout = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     grouped = (
         li.select(key.alias("doc_id"), "l_orderkey")
-        .repartition(fanout, "doc_id")
+        .repartition(fanout_width(spark), "doc_id")
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("l_orderkey")).alias("tokens"))
     )

@@ -121,7 +121,7 @@ def test_neardup_local_topk_matches_bruteforce():
             "embedding": list(vecs) * 2,
         })
         banded = spark.createDataFrame(pdf)
-        lt = E.neardup_local_topk(banded, k=k, fanout=4)
+        lt = E.neardup_local_topk(banded, k=k)
         rows = lt.distinct().orderBy(F.desc("dot"), "id_a", "id_b") \
             .limit(k).collect()
         got = [(r.id_a, r.id_b, r.dot, r.na, r.nb) for r in rows]
@@ -181,7 +181,7 @@ def test_ann_exact_local_topk_matches_bruteforce():
             "embedding": list(vecs)}))
         # dot ranking: exact top-5 per query
         lt = E.ann_exact_local_topk(cands, q_ids, q_mat, k=k,
-                                    cosine=False, fanout=4)
+                                    cosine=False)
         w = Window.partitionBy("qid").orderBy(F.desc("dot"), "cid")
         rows = (lt.withColumn("rnk", F.row_number().over(w))
                 .where("rnk <= 5").orderBy("qid", "rnk").collect())
@@ -189,7 +189,7 @@ def test_ann_exact_local_topk_matches_bruteforce():
         assert got == [t for per in brute(False) for t in per]
         # cosine ranking: rounded-cos top-5 from the slack survivors
         lt = E.ann_exact_local_topk(cands, q_ids, q_mat, k=k,
-                                    cosine=True, fanout=4)
+                                    cosine=True)
         cosed = lt.select("qid", "cid", F.expr(
             "case when na = 0 or nb = 0 then cast(0 as double) "
             "else round(cast(dot as double) / "

@@ -12,11 +12,12 @@ payload's index.  When the corrupt payload decodes, its clean neighbours
 must still decode to their clean images.  No other exception type may
 escape either decoder.
 
-Decode time grows with the frame size a JPEG header DECLARES, not with the
-payload: past the end of a segment a lane reads zero bits, so a flipped
-height byte can demand thousands of 63-symbol blocks.  Examples whose
-corrupt header declares more than _MAX_UNITS blocks are skipped to keep the
-test within seconds.
+Decode time grows with the frame size a JPEG header DECLARES: past the end
+of a segment a lane reads zero bits, so a flipped height byte can demand
+hundreds of 63-symbol blocks.  `_parse_jpeg` rejects a frame declaring more
+than 4 blocks per entropy byte (each block costs at least 2 bits), but
+that still admits hundreds here, so examples whose corrupt header declares
+more than _MAX_UNITS blocks are skipped to keep the test within seconds.
 """
 
 from __future__ import annotations

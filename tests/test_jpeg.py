@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import importlib.util
 import struct
+import time
 
 import numpy as np
 import pytest
@@ -258,6 +259,28 @@ def test_jpeg_batch_corrupt_payload_matches_oracle():
     with pytest.raises(PayloadError, match="Huffman") as err:
         _batch([good_a, bad, good_b])
     assert err.value.index == 1
+
+
+def test_declared_frame_beyond_payload_raises_fast():
+    """Decode cost is bounded by the payload, not the declared frame: each
+    data unit costs at least 2 entropy bits, so a header declaring more
+    than 4 units per entropy byte raises ValueError in _parse_jpeg, which
+    the shipped decoder and the scalar oracle share.  Unbounded, a 319-byte
+    JPEG raised to 2,064 rows decoded zero bits for 4.3 s, and 65,535 x
+    65,535 sized tens of GB of coefficients."""
+    jp = encode_gray_blocks_jpeg(np.array([0, 30]), 2)
+    assert len(jp) == 319
+    sof = jp.find(b"\xff\xc0")
+    tall = jp[:sof + 5] + struct.pack(">H", 2064) + jp[sof + 7:]
+    huge = jp[:sof + 5] + struct.pack(">HH", 65535, 65535) + jp[sof + 9:]
+    for p in (tall, huge):
+        t0 = time.perf_counter()
+        with pytest.raises(ValueError, match="declares .* data units"):
+            decode_image(p)
+        with pytest.raises(ValueError, match="declares .* data units"):
+            media.decode_jpeg(p)
+        assert time.perf_counter() - t0 < 0.5
+    assert decode_image(jp).shape == (8, 16, 3)
 
 
 def test_zero_size_frame_with_restarts_decodes_alone():

@@ -247,7 +247,8 @@ def test_sql_udfs_match_batched_kernels_and_reject_nulls(spark):
 def test_decode_rejects_null_encoded_row(spark):
     """A NULL ``encoded`` stream fails both decoders with a ValueError that
     names the first NULL row's doc_id; read as an empty stream it used to
-    reach the codec kernel and fail there with a bare IndexError."""
+    reach the codec kernel and fail there with a bare IndexError.  A NULL
+    or unknown ``codec`` name fails the same way (it was a bare KeyError)."""
     from streamvbyte_spark.operators import decode_table_prefix
     tok = spark.createDataFrame(
         [("m", [1, 2, 3], 3, "s"), ("n", [4, 5], 2, "s"),
@@ -264,6 +265,13 @@ def test_decode_rejects_null_encoded_row(spark):
                            match="ValueError: NULL encoded stream decoding "
                                  "doc_id=n"):
             decode(holed).collect()
+        for name in (None, "zstd"):
+            renamed = enc.withColumn("codec", F.when(
+                F.col("doc_id") == "o", F.lit(name)).otherwise(F.col("codec")))
+            with pytest.raises(Exception,
+                               match="ValueError: NULL or unknown codec "
+                                     "name decoding doc_id=o"):
+                decode(renamed).collect()
 
 
 def test_full_curation_pipeline(spark):

@@ -1091,6 +1091,51 @@ def test_index_build_pins_decode_fanout(spark):
     assert "REPARTITION_BY_NUM" in plan, plan
 
 
+@pytest.mark.parametrize("name", ["dedup_simhash", "quality_score",
+                                  "lang_id", "fingerprint",
+                                  "curated_pack_encoded"])
+def test_kernel_stages_take_the_one_fanout_rule(spark, tmp_path, name):
+    """The scan fan-out rule (session.fanout_scan) at the CPU-heavy kernel
+    stages.  Over a one-row-group documents file the UDF (or the curated
+    composite's encode MapInArrow) plans ABOVE exactly one numbered
+    doc_id exchange of the session's width — not beside it on the scan's
+    single task, as a hint in the UDF's own select planned it.  Over a
+    corpus that already scans at least that wide there is no fan-out
+    exchange at all: a numbered hint would pin every corpus to its count."""
+    import re
+    import pyarrow.parquet as pq
+    import streamvbyte_spark.queries as Q
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    sf01 = "/root/testdata/sf0.01"
+    docs = pq.read_table(f"{sf01}/documents.parquet")
+    multi = tmp_path / "documents.parquet"
+    multi.mkdir()
+    step = -(-docs.num_rows // (2 * width))
+    for i in range(2 * width):
+        pq.write_table(docs.slice(i * step, step), multi / f"part-{i}.parquet")
+    assert spark.read.parquet(str(multi)).rdd.getNumPartitions() >= width
+
+    def plan_of(sf_dir, tag):
+        if name != "curated_pack_encoded":
+            return plan_string(Q.build_queries()[name](spark, sf_dir),
+                               "simple")
+        df, _ = Q.curated_encoded_rows(spark, sf_dir, f"fanout_rule_{tag}")
+        plan = plan_string(df, "simple")
+        Q.release_stage(spark, f"fanout_rule_{tag}")
+        return plan
+
+    plan = plan_of(sf01, "one")
+    node = re.search(r"ArrowEvalPython|MapInArrow", plan)
+    assert node, plan
+    assert plan.count("REPARTITION_BY_NUM") == 1, plan
+    below = plan[node.start():]
+    assert re.search(r"Exchange hashpartitioning\(doc_id#\d+L?, "
+                     rf"{width}\), REPARTITION_BY_NUM", below), plan
+    plan = plan_of(str(tmp_path), "multi")
+    assert re.search(r"ArrowEvalPython|MapInArrow", plan), plan
+    assert "REPARTITION_BY_NUM" not in plan, plan
+
+
 def test_streaming_index_update_batch_exact(spark):
     """Replaying a corpus through micro-batches — OUT of doc_id order and
     WITH an at-least-once redelivery overlap — must drain to chunk rows

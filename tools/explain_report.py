@@ -137,9 +137,9 @@ NOTES = {
                      "re-scanned the text corpus once per side).",
     "dedup_simhash": "ONE fused pandas UDF (text -> tokenize -> simhash): "
                      "only the text column crosses to Python, no HOF "
-                     "lambda, no tokens column; the REPARTITION hint is "
-                     "NESTED below the UDF (a hint in the UDF's own select "
-                     "leaves the kernel on the scan's single task).",
+                     "lambda, no tokens column; the UDF plans above the "
+                     "documents view's derived single-row-group fanout "
+                     "exchange (absent on a multi-file corpus).",
     "auto_full_roundtrip": "8-codec selector incl. fsst: fsst-mix token "
                            "mapping as a numpy flat_transform INSIDE the "
                            "encode MapInArrow (was a per-token transform() "
