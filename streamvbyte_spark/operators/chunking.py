@@ -23,9 +23,10 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..arrow_rows import (binary_array, binary_flat, complete_runs, list_array,
-                          list_flat)
+from ..arrow_rows import binary_array, complete_runs, list_array, list_flat
+from ..codec import batched
 from ..session import fanout_width
+from .encode import encoded_rows
 
 CHUNKED_ENC_SCHEMA = ("doc_id string, chunk_id int, tok_start long, "
                       "n_tok int, prev long, encoded binary, "
@@ -76,7 +77,6 @@ def encode_chunked_delta(chunked: DataFrame,
                          f"got {codec!r}")
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..codec import batched
         for batch in batches:
             flat, offsets = list_flat(batch.column(batch.schema.get_field_index("chunk")))
             flat = flat.astype(np.int32, copy=False).view(np.uint32)
@@ -100,27 +100,40 @@ def encode_chunked_delta(chunked: DataFrame,
     return chunked.mapInArrow(run, CHUNKED_ENC_SCHEMA)
 
 
+def _decode_chunks(batch: pa.RecordBatch, codec: str,
+                   max_len: int | None = None):
+    """(flat, offsets) of a batch of encoded chunk rows — the chunk
+    decoders' one codec switch.  svb_delta chunks decode from their stored
+    prev, ef chunks from their absolute values (prev ignored).  With
+    max_len each chunk keeps its first min(n_tok, max_len - tok_start)
+    tokens: svb_delta decodes only that prefix, ef (no O(prefix) partial
+    decode — its chunk is bounded by chunk_size) decodes whole and
+    truncates.  A NULL stream raises ValueError naming the doc_id
+    (encode.encoded_rows)."""
+    enc, eoff, n_toks, _ = encoded_rows(batch, "doc_id", codec=codec)
+    kk = None if max_len is None else np.minimum(
+        n_toks, max_len - np.asarray(batch.column("tok_start")))
+    if codec == "ef":
+        rows = batched.ef_decode_rows(enc, eoff, n_toks)
+        return rows if kk is None else batched.subset_prefix(*rows, kk)
+    prev = np.asarray(batch.column("prev"), dtype=np.int64)
+    return batched.decode_delta_rows_prev(enc, eoff, n_toks, prev,
+                                          n_values=kk)
+
+
 def decode_chunked_delta(enc_df: DataFrame,
                          codec: str = "svb_delta") -> DataFrame:
     """Decode chunks (each resumable from its stored prev — or, for
     codec='ef', self-contained absolute values — no cross-chunk dependency
-    at decode time: chunks of one doc decode in parallel)."""
+    at decode time: chunks of one doc decode in parallel).  A NULL
+    ``encoded`` row raises ValueError naming its doc_id."""
     if codec not in _CHUNK_CODECS:
         raise ValueError(f"chunk codec must be one of {_CHUNK_CODECS}, "
                          f"got {codec!r}")
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..codec import batched
         for batch in batches:
-            enc, eoff = binary_flat(
-                batch.column(batch.schema.get_field_index("encoded")))
-            n_toks = np.asarray(batch.column(batch.schema.get_field_index("n_tok")), dtype=np.int64)
-            prev = np.asarray(batch.column(batch.schema.get_field_index("prev")), dtype=np.int64)
-            if codec == "ef":
-                flat, offsets = batched.ef_decode_rows(enc, eoff, n_toks)
-            else:
-                flat, offsets = batched.decode_delta_rows_prev(
-                    enc, eoff, n_toks, prev)
+            flat, offsets = _decode_chunks(batch, codec)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(batch.schema.get_field_index("doc_id")),
                  batch.column(batch.schema.get_field_index("chunk_id")),
@@ -235,7 +248,9 @@ def decode_reassemble_fused(enc_df: DataFrame,
 
     codec='ef' consumes encode_chunked_delta(codec='ef') chunks (absolute
     Elias-Fano values, prev ignored); under max_len the straddling chunk
-    decodes whole and prefix-slices (batched.subset_prefix)."""
+    decodes whole and prefix-slices (batched.subset_prefix).
+
+    A NULL ``encoded`` row raises ValueError naming its doc_id."""
     if codec not in _CHUNK_CODECS:
         raise ValueError(f"chunk codec must be one of {_CHUNK_CODECS}, "
                          f"got {codec!r}")
@@ -254,32 +269,9 @@ def decode_reassemble_fused(enc_df: DataFrame,
             .sortWithinPartitions("doc_id", "chunk_id"))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..codec import batched
         for batch in complete_runs(batches, ("doc_id",)):
-            idx = {n: batch.schema.get_field_index(n)
-                   for n in ("doc_id", "n_tok", "prev", "encoded")}
-            ids = batch.column(idx["doc_id"]).to_numpy(zero_copy_only=False)
-            n_toks = np.asarray(batch.column(idx["n_tok"]), dtype=np.int64)
-            prev = np.asarray(batch.column(idx["prev"]), dtype=np.int64)
-            enc, eoff = binary_flat(batch.column(idx["encoded"]))
-            # kk: tokens kept per chunk (all of them without max_len)
-            kk = n_toks
-            if max_len is not None:
-                ts = np.asarray(
-                    batch.column(batch.schema.get_field_index("tok_start")),
-                    dtype=np.int64)
-                kk = np.minimum(n_toks, max_len - ts)  # >= 1 by the filter
-            if codec == "ef":
-                flat, offs = batched.ef_decode_rows(enc, eoff, n_toks)
-                if max_len is not None:
-                    # EF has no O(prefix) partial decode like svb's
-                    # control-byte layout: the straddling chunk decodes
-                    # whole (bounded by chunk_size) and truncates here
-                    flat, offs = batched.subset_prefix(flat, offs, kk)
-            else:
-                flat, offs = batched.decode_delta_rows_prev(
-                    enc, eoff, n_toks, prev,
-                    n_values=None if max_len is None else kk)
+            ids = batch.column("doc_id").to_numpy(zero_copy_only=False)
+            flat, offs = _decode_chunks(batch, codec, max_len)
             starts = np.concatenate(
                 ([0], np.flatnonzero(ids[1:] != ids[:-1]) + 1))
             doc_tok_off = offs[np.concatenate((starts, [ids.size]))]

@@ -1,10 +1,12 @@
 """Distributed encode/decode over the token table via mapInArrow.
 
-The lifecycle (SURVEY.md §3.4): DataFrame -> optional explicit repartition
-(range on doc_id) -> ``mapInArrow`` running the
+The lifecycle (SURVEY.md §3.4): DataFrame (optionally repartitioned by
+range on doc_id by the caller) -> ``mapInArrow`` running the
 whole-batch kernels of ``codec.batched`` -> encoded table with lineage
-columns.  The JVM<->Python boundary is crossed exactly once per Arrow batch;
-inside a batch there is no per-row Python (input_hint requirement).
+columns.  The JVM<->Python boundary is crossed exactly once per Arrow
+batch; inside a batch there is no per-row Python (input_hint
+requirement).  Every kernel that decodes a stored stream reads it
+through ``encoded_rows``.
 
 Encoded schema:
   doc_id string, source string, n_tok int, codec string, encoded binary,
@@ -19,6 +21,7 @@ matching the reference perf harness's compressed-vs-raw framing,
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
 import numpy as np
@@ -42,12 +45,11 @@ _CODEC_NAMES = pa.array(batched.CODEC_NAMES, pa.string())
 
 def encode_table(df: DataFrame, codec: str = "auto",
                  candidates: tuple[str, ...] = batched.VECTOR_COST_CODECS,
-                 range_partitions: int | None = None,
                  flat_transform=None) -> DataFrame:
     """Encode tokens -> (codec, encoded, lineage).
 
-    range_partitions: repartitionByRange on doc_id so encoded block boundaries
-    align with doc_id ranges (scan/prune-friendly at the Iceberg layer).
+    For encoded blocks aligned with doc_id ranges (scan/prune-friendly at
+    the Iceberg layer), repartitionByRange on doc_id before calling this.
     flat_transform: optional elementwise uint32[V] -> uint32[V] numpy
     function applied to the flat token vector INSIDE the encode kernel — a
     cheap map-side projection fused into the encode stage instead of a
@@ -57,9 +59,6 @@ def encode_table(df: DataFrame, codec: str = "auto",
     (checksum, zone maps) and the round trip describe the TRANSFORMED
     values.
     """
-    if range_partitions:
-        df = df.repartitionByRange(range_partitions, "doc_id")
-
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             flat, offsets = list_flat(batch.column(batch.schema.get_field_index("tokens")))
@@ -147,30 +146,87 @@ def size_table(df: DataFrame, codec: str = "auto",
                          + carry_schema)
 
 
-def _first_null_doc(batch: pa.RecordBatch, cols: dict, col: pa.Array):
-    """doc_id of the first NULL row of ``col`` (which has one)."""
-    null = col.is_null().to_numpy(zero_copy_only=False)
-    return batch.column(cols["doc_id"])[int(np.argmax(null))]
+# the codec column's ids, for index_in against a stored int32 codec column
+_CODEC_IDS = pa.array(range(len(batched.CODEC_NAMES)), pa.int32())
 
 
-def _encoded_rows(batch: pa.RecordBatch, cols: dict):
-    """(flat encoded bytes, offsets, n_tok, codec ids) of an encoded batch.
-    A NULL ``encoded`` row raises ValueError naming its doc_id:
-    binary_flat would read it as an empty stream, which is a wrong decode
-    for any n_tok > 0.  So does a NULL or unknown ``codec`` name."""
+def _raise_at(batch: pa.RecordBatch, key: str, bad, what: str):
+    """ValueError naming the ``key`` value of the first row ``bad`` (a
+    boolean Arrow or NumPy array) marks."""
+    row = int(np.argmax(np.asarray(bad)))
+    raise ValueError(f"{what} decoding {key}={batch.column(key)[row]}")
+
+
+def encoded_rows(batch: pa.RecordBatch, key: str, stream: str = "encoded",
+                 count: str = "n_tok", codec: str | None = None):
+    """(flat encoded bytes, offsets, counts, codec ids) of a batch's stored
+    streams — the one reader of an encoded row.  Like the reference's
+    ``streamvbyte_decode(in, out, count)``, a stream decodes only together
+    with its out-of-band count (``count``) and codec: the batch's
+    ``codec`` column, holding names (string, as encode_table stores them)
+    or ids (int32, as the pack stages store them), or the fixed name
+    ``codec`` for tables that carry no codec column (chunk tables, index
+    wires).
+
+    A NULL stream or count raises ValueError naming the row's ``key``
+    value: binary_flat would read a NULL stream as an empty one, which
+    decodes wrong (or fails deep in a kernel) for any count > 0.  So does
+    a NULL or unknown codec name or id."""
     import pyarrow.compute as pc   # a top-level import slows worker start
-    col = batch.column(cols["encoded"])
-    if col.null_count:
-        doc = _first_null_doc(batch, cols, col)
-        raise ValueError(f"NULL encoded stream decoding doc_id={doc}")
+    col, n = batch.column(stream), batch.column(count)
+    for c, what in ((col, f"NULL {stream} stream"), (n, f"NULL {count}")):
+        if c.null_count:
+            _raise_at(batch, key, c.is_null(), what)
     enc, eoff = binary_flat(col)
-    n_toks = np.asarray(batch.column(cols["n_tok"]), dtype=np.int64)
-    ids = pc.index_in(batch.column(cols["codec"]), value_set=_CODEC_NAMES)
+    n = np.asarray(n, dtype=np.int64)
+    if codec is not None:
+        return enc, eoff, n, np.full(n.size, batched.CODEC_ID[codec],
+                                     np.int32)
+    col = batch.column("codec")
+    names = pa.types.is_string(col.type)
+    ids = pc.index_in(col, value_set=_CODEC_NAMES if names else _CODEC_IDS)
     if ids.null_count:
-        doc = _first_null_doc(batch, cols, ids)
-        raise ValueError(f"NULL or unknown codec name decoding doc_id={doc}")
-    cids = ids.to_numpy().astype(np.int32, copy=False)
-    return enc, eoff, n_toks, cids
+        _raise_at(batch, key, ids.is_null(),
+                  f"NULL or unknown codec {'name' if names else 'id'}")
+    return enc, eoff, n, ids.to_numpy().astype(np.int32, copy=False)
+
+
+def check_checksums(batch: pa.RecordBatch, key: str, flat: np.ndarray,
+                    offsets: np.ndarray):
+    """Raise ValueError naming the ``key`` value of the first row whose
+    decoded token sum differs from its stored ``checksum``."""
+    want = np.asarray(batch.column("checksum"), dtype=np.int64)
+    got = batched._seg_sum(flat.astype(np.int64), offsets)
+    bad = want != got
+    if bad.any():
+        _raise_at(batch, key, bad, "checksum mismatch")
+
+
+def _decode(enc_df: DataFrame, decode, verify_checksum: bool,
+            fingerprint: bool) -> DataFrame:
+    """The kernel of decode_table and decode_table_prefix:
+    decode(enc, offsets, n_tok, codec ids) -> (flat, offsets) per batch;
+    the output n_tok is each row's decoded length."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            flat, offsets = decode(*encoded_rows(batch, "doc_id"))
+            if verify_checksum:
+                check_checksums(batch, "doc_id", flat, offsets)
+            doc, src = batch.column("doc_id"), batch.column("source")
+            nr = pa.array(np.diff(offsets).astype(np.int32), pa.int32())
+            if fingerprint:
+                fp = batched.fingerprint_rows(flat.view(np.int32), offsets)
+                yield pa.RecordBatch.from_arrays(
+                    [doc, nr, src, pa.array(fp, pa.int64())],
+                    names=["doc_id", "n_tok", "source", "fingerprint"])
+                continue
+            yield pa.RecordBatch.from_arrays(
+                [doc, list_array(flat.view(np.int32), offsets), nr, src],
+                names=["doc_id", "tokens", "n_tok", "source"])
+
+    return enc_df.mapInArrow(
+        run, DECODED_FP_SCHEMA if fingerprint else DECODED_SCHEMA)
 
 
 def decode_table(enc_df: DataFrame, verify_checksum: bool = True,
@@ -181,43 +237,11 @@ def decode_table(enc_df: DataFrame, verify_checksum: bool = True,
     the token arrays — the round-trip queries' driver-gate shape.  The
     polynomial fold (codec.batched.fingerprint_rows) runs on the decoded
     flat vector INSIDE this kernel, so the 4 B/token column never crosses
-    back to the JVM and no interpreted ``aggregate()`` pass remains."""
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {n: batch.schema.get_field_index(n) for n in
-                    ("doc_id", "source", "n_tok", "codec", "encoded", "checksum")}
-            enc, eoff, n_toks, cids = _encoded_rows(batch, cols)
-            flat, offsets = batched.decode_rows(enc, eoff, n_toks, cids)
-            if verify_checksum:
-                want = np.asarray(batch.column(cols["checksum"]), dtype=np.int64)
-                got = batched._seg_sum(flat.astype(np.int64), offsets)
-                bad = np.flatnonzero(want != got)
-                if bad.size:
-                    doc = batch.column(cols["doc_id"])[int(bad[0])]
-                    raise ValueError(f"checksum mismatch decoding doc_id={doc}")
-            if fingerprint:
-                fp = batched.fingerprint_rows(flat.view(np.int32), offsets)
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(cols["doc_id"]),
-                     pa.array(n_toks.astype(np.int32), pa.int32()),
-                     batch.column(cols["source"]),
-                     pa.array(fp, pa.int64())],
-                    names=["doc_id", "n_tok", "source", "fingerprint"],
-                )
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(cols["doc_id"]),
-                    list_array(flat.view(np.int32), offsets),
-                    pa.array(n_toks.astype(np.int32), pa.int32()),
-                    batch.column(cols["source"]),
-                ],
-                names=["doc_id", "tokens", "n_tok", "source"],
-            )
-
-    return enc_df.mapInArrow(
-        run, DECODED_FP_SCHEMA if fingerprint else DECODED_SCHEMA)
+    back to the JVM and no interpreted ``aggregate()`` pass remains.
+    A NULL stream, a NULL or unknown codec name (encoded_rows) and, with
+    verify_checksum, a checksum mismatch raise ValueError naming the
+    doc_id."""
+    return _decode(enc_df, batched.decode_rows, verify_checksum, fingerprint)
 
 
 def decode_table_prefix(enc_df: DataFrame, max_len: int,
@@ -228,33 +252,10 @@ def decode_table_prefix(enc_df: DataFrame, max_len: int,
     bytes (codec.batched.decode_prefix_rows), never materializing the tail.
     Output n_tok is the TRUNCATED length.  fingerprint=True emits the
     in-kernel polynomial fold of the PREFIX instead of the token arrays
-    (see decode_table)."""
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            cols = {n: batch.schema.get_field_index(n) for n in
-                    ("doc_id", "source", "n_tok", "codec", "encoded")}
-            enc, eoff, n_toks, cids = _encoded_rows(batch, cols)
-            flat, offsets = batched.decode_prefix_rows(
-                enc, eoff, n_toks, cids, max_len)
-            nr = (offsets[1:] - offsets[:-1]).astype(np.int32)
-            if fingerprint:
-                fp = batched.fingerprint_rows(flat.view(np.int32), offsets)
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(cols["doc_id"]), pa.array(nr, pa.int32()),
-                     batch.column(cols["source"]), pa.array(fp, pa.int64())],
-                    names=["doc_id", "n_tok", "source", "fingerprint"],
-                )
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(cols["doc_id"]),
-                 list_array(flat.view(np.int32), offsets),
-                 pa.array(nr, pa.int32()), batch.column(cols["source"])],
-                names=["doc_id", "tokens", "n_tok", "source"],
-            )
-
-    return enc_df.mapInArrow(
-        run, DECODED_FP_SCHEMA if fingerprint else DECODED_SCHEMA)
+    (see decode_table).  The checksum covers the whole row, so a prefix
+    cannot verify it; the NULL rules of decode_table hold."""
+    return _decode(enc_df, partial(batched.decode_prefix_rows,
+                                   max_len=max_len), False, fingerprint)
 
 
 def verify_roundtrip(original: DataFrame, decoded: DataFrame) -> int:

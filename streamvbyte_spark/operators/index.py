@@ -59,10 +59,11 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..arrow_rows import binary_array, binary_flat, list_array, list_flat
+from ..arrow_rows import binary_array, list_array, list_flat
 from ..codec import batched
 from ..session import fanout_scan
 from .chunking import encode_chunked_delta
+from .encode import encoded_rows
 
 # chunk span in doc-id space: bounds every chunk row to <= span postings.
 # Gate scale (500-5000 docs) uses a small span so multi-chunk terms exist;
@@ -122,25 +123,25 @@ def encode_wire(kind: str, streams: dict) -> tuple[list, np.ndarray]:
     return [cols[c] for c in wire_columns(kind)], out_bytes
 
 
-def decode_wire(kind: str, src, streams=None, suffix: str = "") -> list:
+def decode_wire(kind: str, src, streams=None, suffix: str = "",
+                key: str = "chunk_id") -> list:
     """Decode the asked ``streams`` (default: all) of the ``kind`` wire ->
     one (flat uint32 values, int64 offsets) per stream, in the order asked.
     src is an Arrow batch whose wire columns carry ``suffix`` (a serving
-    side's alias, see _ServingOp), or one chunk's raw state tuple in
-    wire_columns order (the streaming merges)."""
+    side's alias, see _ServingOp), or one chunk's (chunk_id, *raw state)
+    tuple, the state in wire_columns order (the streaming merges).  Each
+    stream is read through encode.encoded_rows, so a NULL stream or count
+    raises ValueError naming the row's ``key`` value."""
     if isinstance(src, tuple):
         src = pa.RecordBatch.from_arrays([pa.array([v]) for v in src],
-                                         names=wire_columns(kind))
+                                         names=["chunk_id",
+                                                *wire_columns(kind)])
     spec = {s[0]: s[1:] for s in INDEX_WIRES[kind][1]}
     out = []
     for col in streams or spec:
         codec, cnt = spec[col]
-        n = np.asarray(src.column(src.schema.get_field_index(cnt + suffix)),
-                       dtype=np.int64)
-        enc, eoff = binary_flat(
-            src.column(src.schema.get_field_index(col + suffix)))
         out.append(batched.decode_rows(
-            enc, eoff, n, np.full(n.size, batched.CODEC_ID[codec], np.int32)))
+            *encoded_rows(src, key, col + suffix, cnt + suffix, codec)))
     return out
 
 
@@ -339,7 +340,8 @@ def decode_index_pos(enc_index: DataFrame) -> DataFrame:
 
     def run(batches):
         for batch in batches:
-            (dids, _), (tfs, _), (poss, poff) = decode_wire("pos", batch)
+            (dids, _), (tfs, _), (poss, poff) = decode_wire(
+                "pos", batch, key="doc_id")
             terms = batch.column(batch.schema.get_field_index(
                 "doc_id")).to_numpy(zero_copy_only=False)
             yield pa.RecordBatch.from_arrays(
@@ -387,13 +389,18 @@ def _joined(enc_index: DataFrame, op: _ServingOp,
     # one selectExpr per side: a per-column F.col(c).alias(...) select
     # costs ~3 py4j round trips a column
     sides = [enc_index.where(F.col("doc_id") == t).selectExpr(
-        "chunk_id", *[f"`{c}` AS `{c}{s}`" for c in cols])
+        "chunk_id", f"true AS `_has{s}`",
+        *[f"`{c}` AS `{c}{s}`" for c in cols])
         for t, s in zip(terms, op.suffixes)]
     if op.how == "and":
         return reduce(lambda a, b: a.join(b, "chunk_id"), sides)
     outer = reduce(lambda a, b: a.join(b, "chunk_id", "full_outer"), sides)
-    return outer.select(*[F.coalesce(c + s, F.lit(v)).alias(c + s)
-                          for s in op.suffixes for c, v in cols.items()])
+    # only a missing side reads the default: a stored NULL stays NULL,
+    # and decode_wire rejects it
+    return outer.select("chunk_id", *[
+        F.when(F.col(f"_has{s}").isNull(), F.lit(v))
+        .otherwise(F.col(c + s)).alias(c + s)
+        for s in op.suffixes for c, v in cols.items()])
 
 
 def _sql_string(s: str) -> str:
@@ -447,9 +454,12 @@ def _aligned(batches, terms: list[str], op: _ServingOp):
         hit[hit] = chunk[r[at[hit]]] == keep[hit]
         idx = np.zeros(keep.size, np.int64)
         idx[hit] = r[at[hit]]
-        take = pa.array(idx, mask=~hit)
+        take, present = pa.array(idx), pa.array(hit)
         for c, v in _side_columns(op).items():
-            out.append(pc.fill_null(cols[c].take(take), v))
+            # only a missing side reads the default: a stored NULL stays
+            # NULL, and decode_wire rejects it
+            out.append(pc.if_else(present, cols[c].take(take),
+                                  pa.scalar(v, cols[c].type)))
             names.append(c + s)
     yield pa.RecordBatch.from_arrays(out, names=names)
 
@@ -535,7 +545,7 @@ def decode_index_tf(enc_index: DataFrame) -> DataFrame:
 
     def run(batches):
         for batch in batches:
-            (dids, doff), (tfs, _) = decode_wire("tf", batch)
+            (dids, doff), (tfs, _) = decode_wire("tf", batch, key="doc_id")
             yield pa.RecordBatch.from_arrays(
                 [batch.column(batch.schema.get_field_index("doc_id")),
                  list_array(dids.view(np.int32), doff),

@@ -46,10 +46,10 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..arrow_rows import (binary_array, binary_flat, complete_runs, list_array,
-                          list_flat)
+from ..arrow_rows import binary_array, complete_runs, list_array, list_flat
 from ..codec import batched
 from ..session import fanout_width
+from .encode import check_checksums, encoded_rows
 from .staging import materialize
 
 # doc_id-range bucket width shared with the SQL pack queries
@@ -133,12 +133,8 @@ def _slice_segments(cum: DataFrame, cap: int, codec: str,
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            idx = {n: batch.schema.get_field_index(n)
-                   for n in ("source", "st", "n_tok", "codec", "encoded")}
-            enc, eoff = binary_flat(batch.column(idx["encoded"]))
-            n_toks = np.asarray(batch.column(idx["n_tok"]), dtype=np.int64)
-            st = np.asarray(batch.column(idx["st"]), dtype=np.int64)
-            cids = np.asarray(batch.column(idx["codec"]), dtype=np.int32)
+            enc, eoff, n_toks, cids = encoded_rows(batch, "st")
+            st = np.asarray(batch.column("st"), dtype=np.int64)
             flat, offs = batched.decode_rows(enc, eoff, n_toks, cids)
             en = st + n_toks - 1
             p0, p1 = st // cap, en // cap
@@ -161,7 +157,7 @@ def _slice_segments(cum: DataFrame, cap: int, codec: str,
             out, ooff, seg_cids = batched.encode_rows(
                 flat, seg_offsets, codec=codec, candidates=candidates)
             # Arrow-native gather: no per-segment Python str objects
-            src = batch.column(idx["source"]).take(pa.array(doc_of_seg))
+            src = batch.column("source").take(pa.array(doc_of_seg))
             yield pa.RecordBatch.from_arrays(
                 [src,
                  pa.array(pack_id, pa.int64()),
@@ -276,14 +272,10 @@ def pack_encoded_rows(enc: DataFrame, cap: int = PACK_CAP,
 
     def asm(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in complete_runs(batches, ("source", "pack_id")):
-            idx = {n: batch.schema.get_field_index(n)
-                   for n in ("source", "pack_id", "n_seg", "codec",
-                             "encoded")}
-            src = batch.column(idx["source"]).to_numpy(zero_copy_only=False)
-            pid = np.asarray(batch.column(idx["pack_id"]), dtype=np.int64)
-            nseg = np.asarray(batch.column(idx["n_seg"]), dtype=np.int64)
-            cids = np.asarray(batch.column(idx["codec"]), dtype=np.int32)
-            enc, eoff = binary_flat(batch.column(idx["encoded"]))
+            src = batch.column("source").to_numpy(zero_copy_only=False)
+            pid = np.asarray(batch.column("pack_id"), dtype=np.int64)
+            enc, eoff, nseg, cids = encoded_rows(batch, "pack_id",
+                                                 count="n_seg")
             flat, offs = batched.decode_rows(enc, eoff, nseg, cids)
             brk = (src[1:] != src[:-1]) | (pid[1:] != pid[:-1])
             starts = np.concatenate(([0], np.flatnonzero(brk) + 1))
@@ -330,31 +322,19 @@ def decode_packs(packs: DataFrame, verify_checksum: bool = True,
     """Read side of the pack sink: decode each stored pack stream
     (dispatching on its codec id), verify the exact token-sum checksum,
     and emit (source, pack_id, n_tok, fingerprint) — or the token arrays
-    themselves with fingerprint=False (the dataloader shape)."""
+    themselves with fingerprint=False (the dataloader shape).  A NULL
+    stream, a NULL or unknown codec id (encode.encoded_rows) and a
+    checksum mismatch raise ValueError naming the pack_id."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            idx = {n: batch.schema.get_field_index(n)
-                   for n in ("source", "pack_id", "n_tok", "codec",
-                             "checksum", "encoded")}
-            enc, eoff = binary_flat(batch.column(idx["encoded"]))
-            n_toks = np.asarray(batch.column(idx["n_tok"]), dtype=np.int64)
-            cids = np.asarray(batch.column(idx["codec"]), dtype=np.int32)
-            flat, offs = batched.decode_rows(enc, eoff, n_toks, cids)
+            flat, offs = batched.decode_rows(
+                *encoded_rows(batch, "pack_id"))
             if verify_checksum:
-                want = np.asarray(batch.column(idx["checksum"]),
-                                  dtype=np.int64)
-                got = batched._seg_sum(flat.astype(np.int64), offs)
-                bad = np.flatnonzero(want != got)
-                if bad.size:
-                    raise ValueError(
-                        "checksum mismatch decoding pack "
-                        f"{batch.column(idx['pack_id'])[int(bad[0])]}")
-            head = [batch.column(idx["source"]),
-                    batch.column(idx["pack_id"]),
-                    batch.column(idx["n_tok"])]
+                check_checksums(batch, "pack_id", flat, offs)
+            head = [batch.column(c) for c in ("source", "pack_id", "n_tok")]
             if fingerprint:
                 fp = batched.fingerprint_rows(flat.view(np.int32), offs)
                 yield pa.RecordBatch.from_arrays(

@@ -59,14 +59,11 @@ def dedup_event_stream(events: DataFrame, watermark: str = "1 hour") -> DataFram
     return events.withWatermark("ts", watermark).dropDuplicates(["event_id"])
 
 
-def decode_token_stream(spark: SparkSession, enc_path: str,
-                        enc_schema: str | None = None) -> DataFrame:
+def decode_token_stream(spark: SparkSession, enc_path: str) -> DataFrame:
     """Streaming inverse of encode_token_stream: readStream over an encoded
-    parquet directory -> the same whole-batch mapInArrow decode as the batch
-    path (mapInArrow is streaming-compatible; state-free, so any trigger
-    works).  enc_schema defaults to the encode path's output schema."""
+    parquet directory (read as the encode path's output schema) -> the
+    same whole-batch mapInArrow decode as the batch path (mapInArrow is
+    streaming-compatible; state-free, so any trigger works)."""
     from ..operators.encode import ENCODED_SCHEMA, decode_table
-    stream = (spark.readStream
-              .schema(enc_schema or ENCODED_SCHEMA)
-              .parquet(enc_path))
+    stream = spark.readStream.schema(ENCODED_SCHEMA).parquet(enc_path)
     return decode_table(stream)

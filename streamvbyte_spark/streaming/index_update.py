@@ -76,7 +76,8 @@ def _stateful_merge(kind: str, merge):
         pdfs = [pdf for pdf in pdf_iter if len(pdf)]
         merged = None
         if pdfs:
-            old = ([flat for flat, _ in decode_wire(kind, state.get)]
+            old = ([flat for flat, _ in
+                    decode_wire(kind, (key[1], *state.get))]
                    if state.exists else None)
             merged = merge(pd.concat(pdfs), old)
         if merged is None:

@@ -157,12 +157,6 @@ def test_decode_stub_gated(spark):
         decode_audio(b"RIFF")
 
 
-def test_range_partitioning(spark, tok):
-    enc_r = encode_table(tok, codec="svb", range_partitions=4)
-    assert enc_r.count() == tok.count()
-    assert verify_roundtrip(tok, decode_table(enc_r)) == 0
-
-
 def test_public_api_facade(spark):
     import streamvbyte_spark as svb
     assert set(svb.codecs) >= {"svb", "svb0124", "svb_delta", "bitpack",
@@ -244,34 +238,105 @@ def test_sql_udfs_match_batched_kernels_and_reject_nulls(spark):
         _signed_roundtrip(null_row, "doc_id", delta=False).collect()
 
 
-def test_decode_rejects_null_encoded_row(spark):
-    """A NULL ``encoded`` stream fails both decoders with a ValueError that
-    names the first NULL row's doc_id; read as an empty stream it used to
-    reach the codec kernel and fail there with a bare IndexError.  A NULL
-    or unknown ``codec`` name fails the same way (it was a bare KeyError)."""
+def test_decode_rejects_null_encoded_row(spark, tmp_path):
+    """Every decoder of a stored stream reads it through
+    encode.encoded_rows: a NULL stream (or count) between valid rows fails
+    with a ValueError naming that row's key, the serving ops' included.
+    binary_flat reads a NULL row as an empty stream, which decoded
+    silently wrong (svb_delta chunks as ``prev`` repeated), or failed deep
+    in a kernel with no row named.  A NULL or unknown codec name or id
+    fails the same way (it was a bare KeyError, IndexError or broadcast
+    error)."""
     from streamvbyte_spark.operators import decode_table_prefix
+    from streamvbyte_spark.operators.chunking import decode_reassemble_fused
+    from streamvbyte_spark.operators.index import (
+        build_index_chunked, build_index_tf_chunked, decode_index_tf,
+        intersect_terms, intersect_terms_rows, union_terms, union_terms_rows)
+    from streamvbyte_spark.operators.packing import (decode_packs,
+                                                     pack_tokens_encoded)
+
+    def rejects(df, match):
+        with pytest.raises(Exception, match="ValueError: " + match):
+            df.collect()
+
+    def holed(df, hole, col="encoded"):
+        return df.withColumn(col, F.when(~hole, F.col(col)))
+
     tok = spark.createDataFrame(
         [("m", [1, 2, 3], 3, "s"), ("n", [4, 5], 2, "s"),
          ("o", [6], 1, "s")],
         "doc_id string, tokens array<int>, n_tok int, source string")
     enc = encode_table(tok, codec="svb").coalesce(1)
-    holed = enc.withColumn("encoded", F.when(
-        F.col("doc_id") == "m", F.col("encoded")))
     for decode in (lambda d: decode_table(d),
                    lambda d: decode_table(d, fingerprint=True),
                    lambda d: decode_table_prefix(d, 2)):
         assert decode(enc).count() == 3
-        with pytest.raises(Exception,
-                           match="ValueError: NULL encoded stream decoding "
-                                 "doc_id=n"):
-            decode(holed).collect()
+        rejects(decode(holed(enc, F.col("doc_id") == "n")),
+                "NULL encoded stream decoding doc_id=n")
+        rejects(decode(holed(enc, F.col("doc_id") == "n", "n_tok")),
+                "NULL n_tok decoding doc_id=n")
         for name in (None, "zstd"):
             renamed = enc.withColumn("codec", F.when(
                 F.col("doc_id") == "o", F.lit(name)).otherwise(F.col("codec")))
-            with pytest.raises(Exception,
-                               match="ValueError: NULL or unknown codec "
-                                     "name decoding doc_id=o"):
-                decode(renamed).collect()
+            rejects(decode(renamed),
+                    "NULL or unknown codec name decoding doc_id=o")
+
+    # stored packs: int codec ids, keyed by pack_id
+    num = spark.createDataFrame(
+        [(str(i), list(range(i, i + 5)), 5, "s") for i in range(6)],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    pack_dir = str(tmp_path / "packs")
+    pack_tokens_encoded(num, cap=4, emit="encoded").write.parquet(pack_dir)
+    packs = spark.read.parquet(pack_dir).coalesce(1)
+    assert decode_packs(packs).count() == 8
+    rejects(decode_packs(holed(packs, F.col("pack_id") == 3)),
+            "NULL encoded stream decoding pack_id=3")
+    for cid in (9, -1):
+        bad = packs.withColumn("codec", F.when(
+            F.col("pack_id") == 5, F.lit(cid)).otherwise(F.col("codec")))
+        rejects(decode_packs(bad), "NULL or unknown codec id decoding "
+                                   "pack_id=5")
+
+    # chunk tables: a fixed codec, keyed by doc_id
+    long_tok = spark.createDataFrame(
+        [(d, list(range(10 * i, 10 * i + 40)), 40, "s")
+         for i, d in enumerate("pqr")],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    for codec in ("svb_delta", "ef"):
+        chunks = encode_chunked_delta(chunk_tokens(long_tok, chunk_size=8),
+                                      codec=codec).coalesce(1)
+        bad = holed(chunks, (F.col("doc_id") == "q")
+                    & (F.col("chunk_id") == 2))
+        for decode in (lambda d: decode_chunked_delta(d, codec=codec),
+                       lambda d: decode_reassemble_fused(d, codec=codec),
+                       lambda d: decode_reassemble_fused(d, max_len=20,
+                                                         codec=codec)):
+            assert decode(chunks).count() > 0
+            rejects(decode(bad), "NULL encoded stream decoding doc_id=q")
+
+    # a stored TF index: streams enc_dids / enc_tfs, keyed by term
+    docs = spark.createDataFrame(
+        [(i, "a b c" if i % 2 else "b c d") for i in range(12)],
+        "doc_id long, text string")
+    idx_dir = str(tmp_path / "tf")
+    build_index_tf_chunked(docs, span=4).write.parquet(idx_dir)
+    index = spark.read.parquet(idx_dir).coalesce(1)
+    assert decode_index_tf(index).count() == 36
+    for col in ("enc_dids", "enc_tfs"):
+        rejects(decode_index_tf(holed(index, F.col("doc_id") == "c", col)),
+                f"NULL {col} stream decoding doc_id=c")
+
+    # serving over a stored set index: only a probe side with no row for a
+    # chunk reads the empty default; a stored NULL reaches decode_wire
+    set_dir = str(tmp_path / "set")
+    build_index_chunked(docs, span=4).write.parquet(set_dir)
+    sets = holed(spark.read.parquet(set_dir),
+                 (F.col("doc_id") == "b") & (F.col("chunk_id") == 1))
+    for serve in (intersect_terms(sets, "a", "b"),
+                  intersect_terms_rows(sets, ["a", "b"]),
+                  union_terms(sets, "b", "d"),
+                  union_terms_rows(sets, "b", "d")):
+        rejects(serve, "NULL encoded_[a-z0-9]+ stream decoding chunk_id=1")
 
 
 def test_full_curation_pipeline(spark):

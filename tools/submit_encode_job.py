@@ -8,7 +8,7 @@ Packaging + launch (the north-rule deployment shape):
         tools/submit_encode_job.py \
         --input  <token parquet/Iceberg path or 'synthetic:N_DOCS'> \
         --output <encoded table path> \
-        [--codec auto] [--buckets 64] [--range-partitions 0]
+        [--codec auto] [--buckets 64] [--avg-len 256]
 
 On a real cluster the same command runs at N and 4N executors
 (--num-executors / dynamic allocation); the job is a resumable
