@@ -19,8 +19,11 @@ implementation kept under ``tests/scalar_oracle``.
 Cost model: per-row exact sizes for all 8 codecs computed with segmented
 reductions — including fsst, whose per-row symbol-table cost vectorizes as a
 composite-key sort + lexsort-ranked top-255 (_fsst_costs); the per-row argmin
-is the auto-selector.  The default ``auto`` candidate set stays the 7
-original codecs (VECTOR_COST_CODECS) so the auto_size / auto_roundtrip
+is the auto-selector.  The selector's pass (row_costs(prune=True)) carries
+proven lower bounds instead of exact costs in the dict and rle columns where
+a codec cannot win, so only the rows it might win pay its exact cost, and
+the selected cell stays exact.  The default ``auto`` candidate set stays
+the 7 original codecs (VECTOR_COST_CODECS) so the auto_size / auto_roundtrip
 formats are stable; passing VECTOR_COST_CODECS_FULL adds fsst to the argmin
 (the auto_full_* queries), and ``codec='auto_sorted'`` adds Elias-Fano on
 rows that are non-decreasing (row_sorted_mask gate; the auto_sorted_*
@@ -31,16 +34,24 @@ one whole-batch decode kernel, named in exactly one place, the _KERNELS
 table at the bottom of this module — no per-row Python remains on any hot
 path.  encode_rows, decode_rows and decode_prefix_rows split a batch into
 codec groups and run each group's table kernel through one loop
-(_by_codec); a homogeneous batch returns its kernel output unchanged.
+(_by_codec); a homogeneous batch returns its kernel output unchanged.  In
+a mixed batch every row's output offset is known before any kernel runs
+(its selected cost on encode, its count on decode), so the batch output is
+allocated once.  The svb family writes its encoded rows straight into
+the batch buffer (gathering its rows' values — the cost pass's deltas for
+svb_delta — once, and taking their data lengths from the cost pass), and
+decodes its rows reading and writing both buffers where they lie; the
+other layouts run on their row subset and are copied into place.
 Every copy of per-row segments (row subsets, header/payload placement,
-group reassembly) goes through one helper, _copy_segments.
+group placement) goes through one helper, _copy_segments.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 
-_LEN_0124 = np.array([0, 1, 2, 4], dtype=np.int64)
 _LEN_0124_U8 = np.array([0, 1, 2, 4], dtype=np.uint8)
 # value mask by data-byte length 0..4
 _MASK_BY_LEN = np.array([0, 0xFF, 0xFFFF, 0xFFFFFF, 0xFFFFFFFF], dtype=np.uint32)
@@ -124,30 +135,39 @@ def _cached_arange(n: int, dtype) -> np.ndarray:
     return a[:n]
 
 
+def _segment_index(starts, sizes, packed=None):
+    """Index of the segments x[starts[i]:][:sizes[i]] laid end to end: a
+    plain slice when they already lie end to end from 0, else one index
+    array (int32 where every position fits).  `packed` is the segments'
+    exclusive cumsum when the caller has it."""
+    sizes = np.asarray(sizes, dtype=np.int64)
+    if packed is None:
+        packed = np.cumsum(sizes) - sizes
+    total = int(packed[-1] + sizes[-1]) if sizes.size else 0
+    shift = np.asarray(starts, dtype=np.int64) - packed
+    if not shift.any():
+        return slice(0, total)
+    idt = np.int32 if total + int(shift.max()) < 2**31 else np.int64
+    idx = np.repeat(shift.astype(idt), sizes)
+    idx += _cached_arange(total, idt)
+    return idx
+
+
 def _copy_segments(dst: np.ndarray, dst_starts, src: np.ndarray, src_starts,
                    sizes) -> None:
     """dst[dst_starts[i]:][:sizes[i]] = src[src_starts[i]:][:sizes[i]] for
     every segment i, as one whole-batch fancy-index copy — THE segment copy
     of this module (row subsets, header/payload placement, group
-    reassembly).  `src` may be longer than the span it copies.  A side whose
-    segments already lie end to end from 0 is addressed as a plain slice,
-    so a pure gather or scatter builds one index array, and a copy that is
-    packed on both sides is one memcpy."""
+    placement).  `src` may be longer than the span it copies.  A side whose
+    segments already lie end to end from 0 is addressed as a plain slice
+    (_segment_index), so a pure gather or scatter builds one index array,
+    and a copy that is packed on both sides is one memcpy."""
     sizes = np.asarray(sizes, dtype=np.int64)
-    total = int(sizes.sum())
-    if total == 0:
+    if not sizes.any():
         return
     packed = np.cumsum(sizes) - sizes
-
-    def index(starts):
-        shift = np.asarray(starts, dtype=np.int64) - packed
-        if not shift.any():
-            return slice(0, total)
-        idx = np.repeat(shift, sizes)
-        idx += np.arange(total, dtype=np.int64)
-        return idx
-
-    dst[index(dst_starts)] = src[index(src_starts)]
+    dst[_segment_index(dst_starts, sizes, packed)] = \
+        src[_segment_index(src_starts, sizes, packed)]
 
 
 def _take_segments(src: np.ndarray, starts, sizes):
@@ -160,20 +180,29 @@ def _take_segments(src: np.ndarray, starts, sizes):
 
 
 def _seg_sum(x: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-    """Per-row sums of x (len V) for rows bounded by offsets (len R+1).
+    """Per-row int64 sums of x (len V) for rows bounded by offsets (len R+1).
 
     np.add.reduceat over nonempty-row starts: empty rows contribute zero
     elements, so summing from one nonempty start to the next spans exactly
-    one real row; 4-9x faster than a cumsum (whose full-length int64 temp
-    pays this sandbox's first-touch page-fault cost on every call)."""
+    one real row.  The accumulator follows x's dtype: narrow inputs (uint8
+    byte lengths, 0/1 flags) sum in uint32 whenever no row can reach 2^32,
+    and only the per-row result is widened; wider inputs (uint32 tokens)
+    sum straight into int64, so no caller builds an 8 B/value copy.
+    Measured on a 6.4M-value, 10,000-row batch, one thread of a 4-core
+    host: uint8 into uint32 takes 6.4-8.8 ms against 17.6-24 ms into
+    int64, and 3-5x less than a uint8 cumsum into int32 alone (26-36 ms);
+    uint32 into int64 takes ~22 ms, as long as summing an int64 copy."""
     n = offsets.size - 1
     starts = offsets[:-1]
-    nonempty = offsets[1:] > starts
+    nr = offsets[1:] - starts
+    nonempty = nr > 0
     if not x.size or not nonempty.any():
         return np.zeros(n, dtype=np.int64)
-    seg = np.add.reduceat(x[:offsets[-1]], starts[nonempty], dtype=np.int64)
-    if nonempty.all():
-        return seg
+    acc = np.int64
+    if x.dtype.kind in "bu" and x.dtype.itemsize <= 2 \
+            and int(nr.max()) << (8 * x.dtype.itemsize) < 2**32:
+        acc = np.uint32
+    seg = np.add.reduceat(x[:offsets[-1]], starts[nonempty], dtype=acc)
     out = np.zeros(n, dtype=np.int64)
     out[nonempty] = seg
     return out
@@ -209,8 +238,24 @@ def _row_deltas(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
 
 # ----------------------------------------------------------- batched svb enc
 
-def _svb_encode_rows(flat: np.ndarray, offsets: np.ndarray, scheme0124: bool):
-    """Encode every row as an independent svb stream; returns (out, out_offsets).
+def _svb_encode_rows(flat: np.ndarray, offsets: np.ndarray, scheme0124: bool,
+                     delta: bool = False, rows=None, dst=None, pre=None):
+    """Encode every row (or the batch rows `rows`) as an independent svb
+    stream — over the per-row deltas (prev=0) when `delta`.
+
+    pre: (values, data_len) the cost pass already computed for the whole
+    batch — the values this scheme encodes (the deltas for svb_delta;
+    `flat` is then not read) and each row's data length.
+    dst: (out, starts, sizes) — write row rows[i]'s stream at
+    out[starts[i]:] and return None; `out` must extend >= 4 bytes past
+    every row.  Without dst returns (out, out_offsets).
+
+    The values are gathered once into QUAD layout: each row padded with
+    zeros to its 4*ceil(n/4) control slots, so the control bytes pack
+    straight from the per-value codes with no per-value scatter.  Their
+    byte lengths are recomputed on that gather — three compares per value
+    cost less than gathering the cost pass's uint8 lengths.  A pad's code
+    is 0 and its length is taken as 0, so it writes no data byte.
 
     Data bytes are written with one ordered 4-byte-per-value overwrite scatter
     (NumPy fancy assignment: on duplicate indices the last value wins, so a
@@ -218,87 +263,154 @@ def _svb_encode_rows(flat: np.ndarray, offsets: np.ndarray, scheme0124: bool):
     mirroring how the reference SSE kernel writes 16B and advances dataPtr by
     the true length, src/streamvbyte_x64_encode.c:70-81).  Control bytes are
     scattered AFTER data so row-leading control regions clobber any surplus
-    from the previous row's final value.
+    from the previous row's final value.  Under dst the up to 4 bytes past
+    each row that belong to no row of this call are saved before the
+    scatter and restored after it, so the call writes exactly its own rows
+    whatever the neighbouring rows' codecs and write order.
     """
-    V = flat.size
-    nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
+    vals, data_len = pre if pre is not None else (flat, None)
+    if delta and pre is None:
+        vals = _row_deltas(flat, offsets)
+    starts = offsets[:-1] if rows is None else offsets[rows]
+    nr = (offsets[1:] if rows is None else offsets[rows + 1]) - starts
+    if data_len is not None and rows is not None:
+        data_len = data_len[rows]
     key_len = (nr + 3) // 4
-    if scheme0124:
-        lens = _lens_0124(flat)
-        codes = np.where(lens == 4, 3, lens).astype(np.uint8)
+    quads = np.zeros(nr.size + 1, dtype=np.int64)  # quad-layout row offsets
+    np.cumsum(4 * key_len, out=quads[1:])
+    npad = 4 * key_len - nr
+    pads = np.repeat(quads[1:] - npad, npad)
+    pads += np.arange(pads.size) - np.repeat(np.cumsum(npad) - npad, npad)
+    idx = _segment_index(starts, 4 * key_len, quads[:-1])
+    if pads.size:  # a pad reads value 0, then holds 0
+        if isinstance(idx, slice):
+            idx = np.arange(idx.stop)
+        idx[pads] = 0
+    vals = vals[idx]
+    if pads.size:
+        vals[pads] = 0
+    lens = _lens_0124(vals) if scheme0124 else _lens_1234(vals)
+    codes = np.minimum(lens, np.uint8(3)) if scheme0124 \
+        else lens - np.uint8(1)
+    lens[pads] = 0
+    if data_len is None:
+        data_len = _seg_sum(lens, quads)
+    out_size = key_len + data_len
+    if dst is None:
+        out_offsets = np.zeros(nr.size + 1, dtype=np.int64)
+        np.cumsum(out_size, out=out_offsets[1:])
+        total_out = int(out_offsets[-1])
+        # np.empty, not zeros: every byte in [0, total_out) is written —
+        # each row is key_len ctrl bytes (ctrl scatter) + data bytes (each
+        # value's 4-byte store covers its own length; zero-len values share
+        # the next writer's dest).  +4 pad: surplus of the final value
+        # lands past total_out and is sliced off.
+        out = np.empty(total_out + 4, dtype=np.uint8)
+        out_starts = out_offsets[:-1]
     else:
-        lens = _lens_1234(flat)
-        codes = (lens - 1).astype(np.uint8)
-    data_len = _seg_sum(lens, offsets)
-    out_size = np.where(nr > 0, key_len + data_len, 0)
-    out_offsets = np.concatenate([[0], np.cumsum(out_size)])
-    total_out = int(out_offsets[-1])
-    if V == 0:
-        return np.zeros(total_out, dtype=np.uint8), out_offsets
+        out, out_starts = dst[0], dst[1]
+        guard = (out_starts + out_size)[:, None] + np.arange(4)
+        saved = out[guard]
+    V = vals.size
+    if V:
+        # index math in int32 (half the memory traffic) unless huge
+        idt = np.int32 if out.size < 2**31 and V * 4 < 2**31 else np.int64
+        ends = np.cumsum(lens, dtype=idt)  # <= 4V, fits idt
+        # data bytes: per-value destination = global byte start minus the
+        # row's data base plus the row's (out offset + control length)
+        dest = _scratch("enc_dest", V, idt)
+        np.subtract(ends, lens, out=dest, casting="unsafe")
+        row_adj = (_row_base_at(ends, quads[:-1])
+                   - out_starts - key_len).astype(idt)
+        dest -= np.repeat(row_adj, 4 * key_len)
+        # ONE unconditional little-endian 4-byte store per value through a
+        # stride-1 uint32 view (fancy assignment iterates in index order,
+        # so a later value's store overwrites the previous value's surplus
+        # bytes — the same overlapping-store discipline as the reference
+        # SSE kernel); ~3.7x the 4-lane byte scatter this replaces
+        u32 = np.ndarray((out.size - 3,), np.uint32, buffer=out,
+                         strides=(1,))
+        u32[dest] = vals  # ordered overwrite scatter
+        # control bytes: each quad of codes packed LSB-first
+        q = codes.reshape(-1, 4)
+        ctrl = (q[:, 0] | (q[:, 1] << 2) | (q[:, 2] << 4) | (q[:, 3] << 6))
+        _copy_segments(out, out_starts, ctrl, quads[:-1] >> 2, key_len)
+    if dst is None:
+        return out[:total_out], out_offsets
+    # a guard byte is this call's own when it lies inside one of its rows
+    # (rows ascend, so the last row starting at or before it is the one)
+    k = np.maximum(np.searchsorted(out_starts, guard, side="right") - 1, 0)
+    foreign = guard >= (out_starts + out_size)[k]
+    out[guard[foreign]] = saved[foreign]
+    return None
 
-    # np.empty, not zeros: every byte in [0, total_out) is written — each
-    # row is key_len ctrl bytes (ctrl scatter) + data bytes (each value's
-    # 4-byte store covers its own length; zero-len 0124 values share the
-    # next writer's dest) — so the memset would be pure overhead.  +4 pad:
-    # surplus of the final value lands past total_out and is sliced off.
-    out = np.empty(total_out + 4, dtype=np.uint8)
-    # index math in int32 (half the memory traffic) unless the batch is huge
-    idt = np.int32 if total_out + 4 < 2**31 and V * 4 < 2**31 else np.int64
-    ends = np.cumsum(lens, dtype=idt)  # <= 4V, fits idt by construction
-    # data bytes: per-value destination = global byte start minus the row's
-    # data base plus the row's (out offset + control length)
-    dest = _scratch("enc_dest", V, idt)
-    np.subtract(ends, lens, out=dest, casting="unsafe")
-    row_adj = (_row_base_at(ends, offsets[:-1])
-               - out_offsets[:-1] - key_len).astype(idt)
-    dest -= np.repeat(row_adj, nr)
-    # ONE unconditional little-endian 4-byte store per value through a
-    # stride-1 uint32 view (fancy assignment iterates in index order, so a
-    # later value's store overwrites the previous value's surplus bytes —
-    # the same overlapping-store discipline as the reference SSE kernel);
-    # ~3.7x the 4-lane byte scatter this replaces
-    u32 = np.ndarray((out.size - 3,), np.uint32, buffer=out, strides=(1,))
-    u32[dest] = flat  # ordered overwrite scatter
-    # control bytes: per-row zero-padded code quads, packed LSB-first
-    intra = _scratch("enc_intra", V, idt)
-    np.subtract(_cached_arange(V, idt), np.repeat(offsets[:-1].astype(idt), nr),
-                out=intra)
-    pad_starts = np.concatenate([[0], np.cumsum(4 * key_len)])
-    padded = _scratch("enc_padded", int(pad_starts[-1]), np.uint8)
-    padded[:] = 0
-    padded[np.repeat(pad_starts[:-1].astype(idt), nr) + intra] = codes
-    q = padded.reshape(-1, 4)
-    ctrl = (q[:, 0] | (q[:, 1] << 2) | (q[:, 2] << 4) | (q[:, 3] << 6))
-    _copy_segments(out, out_offsets[:-1], ctrl, np.cumsum(key_len) - key_len,
-                   key_len)
-    return out[:total_out], out_offsets
+
+class StreamError(ValueError):
+    """A stored stream whose byte length contradicts its count and control
+    bytes: ``row`` is its row in the batch the kernel was given."""
+
+    def __init__(self, row: int, message: str):
+        super().__init__(message)
+        self.row = row
 
 
 def _svb_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
-                     scheme0124: bool, n_values: np.ndarray | None = None):
-    """Decode every row's independent svb stream; returns (flat, offsets).
+                     scheme0124: bool, n_values: np.ndarray | None = None,
+                     delta: bool = False, rows=None, dst=None):
+    """Decode every row's independent svb stream (or the batch rows
+    `rows`); returns (flat, offsets), or writes row rows[i]'s values at
+    dst[0][dst[1][i]:] and returns None.  `delta` adds the per-row prefix
+    sum of svb_delta (prefix-local: value i depends only on deltas <= i,
+    so a prefix decode stays exact).
 
-    n_values (optional, <= n_toks) decodes only each row's FIRST n_values[r]
-    tokens — the format-aware prefix decode: svb data bytes are laid out in
-    value order after a control region sized by the FULL count, so a prefix
-    needs only the first ceil(n/4) control bytes plus the prefix's own data
-    bytes; trailing values are never touched (truncate-to-max-seq-len
-    without full decode)."""
-    full = n_toks.astype(np.int64)
-    nr = full if n_values is None else np.minimum(n_values.astype(np.int64), full)
-    R = nr.size
-    offsets = np.concatenate([[0], np.cumsum(nr)])
-    V = int(offsets[-1])
-    flat = np.zeros(V, dtype=np.uint32)
-    if V == 0:
-        return flat, offsets
+    Control and data bytes are read where they lie in `enc`, from each
+    row's start (row offsets ascend, as Arrow's do).  n_values (optional,
+    <= n_toks) decodes only each row's FIRST n_values[r] tokens — the
+    format-aware prefix decode: svb data bytes are laid out in value order
+    after a control region sized by the FULL count, so a prefix needs only
+    the first ceil(n/4) control bytes plus the prefix's own data bytes;
+    trailing values are never touched (truncate-to-max-seq-len without
+    full decode).
+
+    Every row's stored length is checked against what it declares before
+    its data is read, and a mismatch raises StreamError naming the batch
+    row: first that it holds the ceil(n/4) control bytes of its n_tok, then
+    (after the length pass) that it is exactly ceil(n/4) + sum(lens) long
+    — the check of validate_rows — or, for a prefix, that the prefix's
+    data ends inside it."""
+    starts, sizes = enc_offsets[:-1], enc_offsets[1:] - enc_offsets[:-1]
+    full = np.asarray(n_toks, dtype=np.int64)
+    if rows is not None:
+        starts, sizes, full = starts[rows], sizes[rows], full[rows]
+        if n_values is not None:
+            n_values = n_values[rows]
+    nr = full if n_values is None else np.minimum(n_values, full)
     key_len = (full + 3) // 4  # control REGION size (addresses the data base)
+
+    def check(bad, what):
+        if bad.any():
+            r = int(np.argmax(bad))
+            raise StreamError(
+                r if rows is None else int(rows[r]),
+                f"svb stream of {sizes[r]} bytes with n_tok={full[r]}: "
+                f"{what(r)}")
+
+    check((sizes < key_len) | (full < 0),
+          lambda r: f"shorter than its {key_len[r]} control bytes")
+    offsets = np.zeros(nr.size + 1, dtype=np.int64)
+    np.cumsum(nr, out=offsets[1:])
+    V = int(offsets[-1])
+    if V == 0:
+        if n_values is None:
+            check(sizes != key_len,
+                  lambda r: f"declares {key_len[r]} bytes")
+        return (np.zeros(0, np.uint32), offsets) if dst is None else None
     # control bytes GATHERED: only the prefix's own ceil(nr/4) per row — in
     # prefix mode the tail's control bytes are never read, keeping work
     # O(prefix); also bounds 4*sum(pkey) <= 4V, so the int32 index guard
     # below stays valid even when the full control region would not fit
     pkey = key_len if n_values is None else (nr + 3) // 4
-    ctrl, ctrl_starts = _take_segments(enc, enc_offsets[:-1], pkey)
+    ctrl, ctrl_starts = _take_segments(enc, starts, pkey)
     codes_padded = _CTRL_CODES_U32[ctrl].view(np.uint8)
     idt = np.int32 if enc.size + 4 < 2**31 and V * 4 < 2**31 else np.int64
     # per-value index into codes_padded, built in one scratch buffer:
@@ -312,38 +424,45 @@ def _svb_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarra
     # data-byte offsets fit idt by construction (enc.size < 2^31 there), so
     # the cumsum runs at half the memory traffic of int64
     ends = np.cumsum(lens, dtype=idt)
-    row_data_base = _row_base_at(ends, offsets[:-1])
+    row_base = _row_base_at(ends, offsets)  # data before each row, and end
+    row_data_base = row_base[:-1]
+    data_end = key_len + np.diff(row_base)
+    if n_values is None:
+        check(sizes != data_end,
+              lambda r: f"its control bytes declare {data_end[r]} bytes")
+    else:
+        check(sizes < data_end,
+              lambda r: f"its {nr[r]}-value prefix ends at byte {data_end[r]}")
     src = _scratch("dec_src", V, idt)
     np.subtract(ends, lens, out=src, casting="unsafe")
+    src -= np.repeat((row_data_base - starts - key_len).astype(idt), nr)
     # ONE unconditional little-endian 4-byte load per value (a stride-1
-    # uint32 view over a padded buffer) + per-length mask LUT: the NumPy
+    # uint32 view over the stored bytes) + per-length mask LUT: the NumPy
     # analog of the reference's unconditional 16B SIMD load + shuffle-mask
-    # (src/streamvbyte_x64_decode.c:10-26); pad 4 because a 0124 zero
-    # (len 0) at stream end has src == buffer end.  ~2x the 4-byte-gather
-    # + shift approach this replaces.
-    if n_values is None:
-        src -= np.repeat((row_data_base - enc_offsets[:-1] - key_len).astype(idt), nr)
-        enc_p = _scratch("dec_encp", enc.size + 4, np.uint8)
-        enc_p[:enc.size] = enc
-        enc_p[enc.size:] = 0
-    else:
-        # prefix mode: copying the ENTIRE encoded buffer into the padded
-        # scratch would cost O(full stream bytes) per batch; gather only
-        # each row's PREFIX data segment (key_len addresses the data base;
-        # pdata = the prefix's own byte span) so memory traffic stays
-        # O(prefix) end-to-end
-        pdata = _seg_sum(lens, offsets)
-        cd_off = np.concatenate([[0], np.cumsum(pdata)])
-        total = int(cd_off[-1])
-        enc_p = _scratch("dec_encp", total + 4, np.uint8)
-        _copy_segments(enc_p, cd_off[:-1], enc, enc_offsets[:-1] + key_len,
-                       pdata)
-        enc_p[total:total + 4] = 0
-        src -= np.repeat((row_data_base - cd_off[:-1]).astype(idt), nr)
-    u32 = np.ndarray((enc_p.size - 3,), np.uint32, buffer=enc_p, strides=(1,))
-    vals = u32[src]  # fancy-index gather beats np.take's bounds-check path
+    # (src/streamvbyte_x64_decode.c:10-26); ~2x the 4-byte-gather + shift
+    # approach this replaces.  The checks above put every load start
+    # inside its row, and the starts ascend, so only a suffix of loads
+    # (within 4 bytes of the buffer's end — a 0124 zero at stream end
+    # starts AT the end) reads past it: those load from an 8-byte copy of
+    # the buffer's tail.
+    cut = int(np.searchsorted(src, enc.size - 4, side="right"))
+    vals = np.empty(V, dtype=np.uint32)
+    if cut:
+        u32 = np.ndarray((enc.size - 3,), np.uint32, buffer=enc, strides=(1,))
+        vals[:cut] = u32[src[:cut]]
+    if cut < V:
+        base = max(enc.size - 4, 0)
+        tail = np.zeros(8, dtype=np.uint8)
+        tail[:enc.size - base] = enc[base:]
+        vals[cut:] = np.ndarray((5,), np.uint32, buffer=tail,
+                                strides=(1,))[src[cut:] - base]
     vals &= _MASK_BY_LEN[lens]
-    return vals, offsets
+    if delta:
+        vals = _segmented_cumsum_u32(vals, offsets)
+    if dst is None:
+        return vals, offsets
+    _copy_segments(dst[0], dst[1], vals, offsets[:-1], nr)
+    return None
 
 
 # -------------------------------------------------------------- per-row costs
@@ -352,35 +471,53 @@ def row_costs(flat: np.ndarray, offsets: np.ndarray,
               candidates: tuple[str, ...], prune: bool = False) -> np.ndarray:
     """(R, len(candidates)) exact per-row encoded sizes. Empty rows cost 0.
 
-    prune=True relaxes the dict column ONLY: rows where a cheap PROVEN
-    lower bound on the dict cost already meets the running minimum of the
-    candidates BEFORE dict in priority order carry that bound instead of
-    the exact cost (skipping the composite-key sort, ~65% of the full cost
-    pass on the bench mix).  Argmin/min consumers are unaffected by
-    construction: the bound is <= the exact cost, so a row whose exact
-    dict cost could win is never pruned; and a pruned value >= the prior
-    minimum can neither change the matrix minimum nor steal a first-
-    minimum tie from an earlier candidate (a tie at the prior minimum
-    resolves to the earlier column with or without pruning, and a later
-    candidate below the prior minimum is below the bound too).  Cell-exact
-    consumers (per-codec size queries, the parity tests) use the default
+    prune=True relaxes the dict and rle columns ONLY: a row whose cheap
+    PROVEN lower bound on that codec's cost already meets the running
+    minimum of the columns BEFORE it in priority order carries the bound
+    instead of the exact cost.  dict's bound skips the composite-key sort,
+    rle's the run-length pass; on a bulk_codec batch only the ~20% of rows
+    that rle wins need its exact cost.  Argmin/min consumers are
+    unaffected: by induction over the columns, with P_j the running
+    minimum of the stored columns before column j and M_j that of the
+    exact ones, P_j == M_j and both matrices share their first argmin so
+    far.  For a pruned column the bound b_j <= exact_j: where b_j < P_j the
+    cell is exact, so the step is the unpruned one; elsewhere the stored
+    b_j and the exact_j are both >= P_j, so the minimum stays P_j == M_j
+    and a tie at it resolves to the earlier column either way — a pruned
+    cell is never the first argmin, and a later column strictly below the
+    minimum wins in both matrices.  So the selected cell is always exact
+    (encode_rows sizes its output from it).  Cell-exact consumers
+    (per-codec size queries, the parity tests) use the default
     prune=False."""
+    return _cost_pass(flat, offsets, candidates, prune)[0]
+
+
+def _cost_pass(flat: np.ndarray, offsets: np.ndarray,
+               candidates: tuple[str, ...], prune: bool):
+    """row_costs' matrix, plus {svb-family codec: (values, data_len)}:
+    the values each svb-family column was computed over (the per-row
+    deltas for svb_delta) and each row's data length, which encode_rows
+    hands to that codec's encoder instead of recomputing them."""
     nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
-    R = nr.size
     key_len = (nr + 3) // 4
     cols = []
     prior_min = None
+    svb_inputs = {}
     # lens1234 feeds svb and rle; max/min feed both bitpack and for
     lens1234 = _lens_1234(flat)
     mx = mn = None
     for name in candidates:
-        if name == "svb":
-            c = key_len + _seg_sum(lens1234, offsets)
-        elif name == "svb0124":
-            c = key_len + _seg_sum(_lens_0124(flat), offsets)
-        elif name == "svb_delta":
-            d = _row_deltas(flat, offsets)
-            c = key_len + _seg_sum(_lens_1234(d), offsets)
+        if name in ("svb", "svb0124", "svb_delta"):
+            delta = name == "svb_delta"
+            vals = _row_deltas(flat, offsets) if delta else flat
+            if name == "svb0124":  # lens1234 with 3 -> 4 and zeros -> 0
+                lens = lens1234 + (lens1234 == np.uint8(3)) \
+                    - (flat == np.uint32(0))
+            else:
+                lens = _lens_1234(vals) if delta else lens1234
+            data_len = _seg_sum(lens, offsets)
+            svb_inputs[name] = (vals, data_len)
+            c = key_len + data_len
         elif name == "bitpack":
             mx = _seg_reduce(np.maximum, flat, offsets).astype(np.int64) if mx is None else mx
             w = _exact_width(mx)
@@ -394,7 +531,8 @@ def row_costs(flat: np.ndarray, offsets: np.ndarray,
             c = _dict_costs(flat, offsets, nr,
                             prior_min if prune else None)
         elif name == "rle":
-            c = _rle_costs(flat, offsets, lens1234)
+            c = _rle_costs(flat, offsets, lens1234,
+                           prior_min if prune else None)
         elif name == "fsst":
             c = _fsst_costs(flat, offsets)
         elif name == "ef":
@@ -407,7 +545,7 @@ def row_costs(flat: np.ndarray, offsets: np.ndarray,
         if prune:
             prior_min = col if prior_min is None \
                 else np.minimum(prior_min, col)
-    return np.stack(cols, axis=1)
+    return np.stack(cols, axis=1), svb_inputs
 
 
 def _dict_costs(flat: np.ndarray, offsets: np.ndarray, nr: np.ndarray,
@@ -416,29 +554,32 @@ def _dict_costs(flat: np.ndarray, offsets: np.ndarray, nr: np.ndarray,
     prior minimum, exact ONLY where dict could still be the argmin winner
     and a proven lower bound elsewhere (see row_costs' prune contract).
 
-    The bound: distinct full values >= distinct LOW BYTES (any projection
-    only merges values), and the dict formula 4 + 4K + nr*width(K-1)/8 is
-    nondecreasing in K — so evaluating it at the low-byte distinct count
-    bounds the true cost from below.  The presence table is one byte
-    scatter + a 256-wide row sum (no sort); the composite-key sort then
-    runs only over the surviving rows' values (16% of the bench mix)."""
+    The bound: distinct full values >= distinct low BITS-bit parts (any
+    projection only merges values), and the dict formula
+    4 + 4K + nr*width(K-1)/8 is nondecreasing in K — so evaluating it at
+    the projection's distinct count bounds the true cost from below.  The
+    presence table is one byte scatter + a 2^BITS-wide row sum (no sort);
+    the composite-key sort then runs only over the surviving rows' values.
+    BITS is 10 up to 2^14 rows (a table of <= 16 MB), else 8: a byte
+    projection caps the bound at 256 values, and on a bulk_codec batch
+    left 16% of the rows (long rand_shifted and near_sorted_gap rows) to
+    the sort, where 10 bits leave none."""
     if prior_min is None or flat.size == 0 or nr.size > (1 << 18):
         k = _row_distinct(flat, offsets)
         w = _exact_width(np.maximum(k - 1, 0))
         return 4 + 4 * k + (nr * w + 7) // 8
     R = nr.size
-    # int32 index arithmetic: R <= 2^18 (guard above), so rid*256 + low
-    # fits int32 — half the temp traffic of the int64 form
-    rid = np.repeat(_cached_arange(R, np.int32), nr)
-    idx = _scratch("dictlb_idx", flat.size, np.int32)
-    np.left_shift(rid, 8, out=idx)
-    lo = _scratch("dictlb_lo", flat.size, np.uint32)
-    np.bitwise_and(flat, np.uint32(0xFF), out=lo)
-    idx += lo.view(np.int32)
-    pres = _scratch("dictlb_pres", R << 8, np.uint8)
+    bits = 10 if R <= (1 << 14) else 8
+    # int32 index arithmetic: R << bits <= 2^26 (guards above), so
+    # (row << bits) + low bits fits int32 — half the temp traffic of int64
+    idx = _scratch("dictlb_idx", flat.size, np.uint32)
+    np.bitwise_and(flat, np.uint32((1 << bits) - 1), out=idx)
+    idx = idx.view(np.int32)
+    idx += np.repeat(_cached_arange(R, np.int32) << bits, nr)
+    pres = _scratch("dictlb_pres", R << bits, np.uint8)
     pres[:] = 0
     pres[idx] = 1
-    klb = _seg_sum(pres, _cached_arange(R + 1, np.int64) << 8)
+    klb = pres.reshape(R, -1).sum(axis=1, dtype=np.int64)
     wlb = _exact_width(np.maximum(klb - 1, 0))
     c = 4 + 4 * klb + (nr * wlb + 7) // 8
     need = np.flatnonzero(c < prior_min)
@@ -629,7 +770,7 @@ def _fsst_encode_rows(flat: np.ndarray, offsets: np.ndarray):
     # symbol-table order — one global cumsum gives the table index
     code_by_group = np.cumsum(take, dtype=np.int64) - 1 - k_off[grp_row]
     in_table = take[inverse]                 # per pair, original order
-    n_hit = _seg_sum(in_table.astype(np.int64), pair_off)
+    n_hit = _seg_sum(in_table, pair_off)
     bm_len = (m + 7) // 8
     sizes = np.where(nr > 0, 1 + 2 * k + bm_len + n_hit + 2 * (m - n_hit), 0)
     out_offsets = np.concatenate([[0], np.cumsum(sizes)])
@@ -684,7 +825,7 @@ def _fsst_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray,
     bm_byte = np.repeat(bm_start, m) + (intra >> 3)
     is_lit = ((enc[bm_byte] >> (intra & 7).astype(np.uint8)) & 1).astype(bool)
     hits = ~is_lit
-    n_hit = _seg_sum(hits.astype(np.int64), pair_off)
+    n_hit = _seg_sum(hits, pair_off)
     hit_base = np.concatenate([[0], np.cumsum(n_hit)])[:-1]
     lit_base = np.concatenate([[0], np.cumsum(m - n_hit)])[:-1]
     hit_rank = np.cumsum(hits) - 1    # global hit index (valid at hits)
@@ -707,8 +848,15 @@ def _fsst_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray,
     return flat, offsets
 
 
-def _rle_costs(flat: np.ndarray, offsets: np.ndarray,
-               lens1234: np.ndarray | None = None) -> np.ndarray:
+def _rle_costs(flat: np.ndarray, offsets: np.ndarray, lens1234: np.ndarray,
+               prior_min: np.ndarray | None = None) -> np.ndarray:
+    """Per-row rle cost, 8 + (ceil(runs/4) + sum lens(run values)) +
+    (ceil(runs/4) + sum lens(run lengths)): exact everywhere when
+    prior_min is None; with a prior minimum, exact ONLY where rle could
+    still be the argmin winner and a proven lower bound elsewhere (see
+    row_costs' prune contract).  The bound counts every run length as one
+    byte (a length is >= 1, so its svb length is too):
+    8 + 2*ceil(runs/4) + sum lens(run values) + runs."""
     nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
     if flat.size == 0:
         return np.zeros(nr.size, dtype=np.int64)
@@ -717,26 +865,32 @@ def _rle_costs(flat: np.ndarray, offsets: np.ndarray,
     np.not_equal(flat[1:], flat[:-1], out=is_start[1:].view(bool))
     row_starts = offsets[:-1][nr > 0]
     is_start[row_starts] = 1
-    if lens1234 is None:
-        lens1234 = _lens_1234(flat)
     # run-value byte lengths without gathering run_vals: a run's value is the
     # element AT the run start, so masking lens1234 by is_start sums exactly
     # the per-run value lengths
     sz_val_data = _seg_sum(lens1234 * is_start, offsets)
-    runs_per_row = _seg_sum(is_start, offsets)
-    rkey = (runs_per_row + 3) // 4
-    run_pos = np.flatnonzero(is_start)
-    # run lengths: distance to next run start (within the global flat; row
-    # boundaries always start runs so lengths never cross rows)
+    runs = _seg_sum(is_start, offsets)
+    c = 8 + 2 * ((runs + 3) // 4) + sz_val_data + runs
+    if prior_min is None:
+        need, sub, sub_off = slice(None), is_start, offsets
+    else:
+        need = np.flatnonzero(c < prior_min)
+        if not need.size:
+            return c
+        sub, sub_off = _take_segments(is_start, offsets[need], nr[need])
+    # run lengths: distance to next run start (row boundaries always start
+    # runs, so lengths never cross rows); each adds its svb length beyond
+    # the one byte the bound counted
+    run_pos = np.flatnonzero(sub[:sub_off[-1]])
     run_lens = np.empty(run_pos.size, dtype=np.uint32)
     if run_pos.size:
         np.subtract(run_pos[1:], run_pos[:-1], out=run_lens[:-1],
                     casting="unsafe")
-        run_lens[-1] = flat.size - run_pos[-1]
-    run_offsets = np.concatenate([[0], np.cumsum(runs_per_row)])
-    sz_vals = rkey + sz_val_data
-    sz_lens = rkey + _seg_sum(_lens_1234(run_lens), run_offsets)
-    return 8 + sz_vals + sz_lens
+        run_lens[-1] = sub_off[-1] - run_pos[-1]
+    run_off = np.zeros(sub_off.size, dtype=np.int64)
+    np.cumsum(runs[need], out=run_off[1:])
+    c[need] += _seg_sum(_lens_1234(run_lens) - np.uint8(1), run_off)
+    return c
 
 
 # ------------------------------------------------------------ public facades
@@ -746,52 +900,49 @@ def encode_rows(flat: np.ndarray, offsets: np.ndarray, codec: str = "auto",
     """Encode each row with `codec` (or per-row argmin when 'auto').
 
     Returns (out_bytes: uint8[], out_offsets: int64[R+1], codec_ids: int32[R]).
+
+    'auto' sizes every row from its selected cost before any kernel runs
+    (the selected cell of the pruned matrix is exact, see row_costs, and
+    cost(v) == len(encode(v))), and the svb-family encoders reuse the
+    deltas and row data lengths the cost pass computed.
     """
     flat = np.ascontiguousarray(flat, dtype=np.uint32)
     offsets = np.asarray(offsets, dtype=np.int64)
     R = offsets.size - 1
     nr = offsets[1:] - offsets[:-1]
+    sizes, svb_inputs = None, {}
     if codec in ("auto", "auto_sorted"):
-        costs = row_costs(flat, offsets, candidates, prune=True)
+        costs, svb_inputs = _cost_pass(flat, offsets, candidates, prune=True)
         pick = np.argmin(costs, axis=1)  # first minimum = candidate priority
         names = np.array([CODEC_ID[c] for c in candidates], dtype=np.int32)
         codec_ids = names[pick]
+        sizes = costs[np.arange(R), pick]
         if codec == "auto_sorted":
             # Elias-Fano joins the argmin only on rows where it is defined
             # (non-decreasing) and STRICTLY smaller — a tie keeps the
             # standard candidate priority, and the selected size equals the
             # oracle's least() either way
-            best = costs[np.arange(R), pick]
-            eligible = (row_sorted_mask(flat, offsets)
-                        & (_ef_cost_rows(flat, offsets) < best))
+            ef = _ef_cost_rows(flat, offsets)
+            eligible = row_sorted_mask(flat, offsets) & (ef < sizes)
             codec_ids[eligible] = CODEC_ID["ef"]
+            sizes = np.where(eligible, ef, sizes)
         codec_ids[nr == 0] = CODEC_ID["svb"]
     else:
         codec_ids = np.full(R, CODEC_ID[codec], dtype=np.int32)
 
-    def run(name, rows):
-        encode = _KERNELS[name][0]
-        if rows.size == R or (2 * rows.size > R and name != "ef"):
-            # DOMINANT group: encode the FULL batch with this codec and
-            # reference only the dominant rows' segments — materializing an
-            # almost-complete token subset costs more than the whole-batch
-            # encode itself (measured ~1.1s subset vs ~0.3s full svb encode
-            # on an 8M-token batch); the minority rows' wasted encode work
-            # is bounded by < 50% of the batch.  ef is excluded: the
-            # NON-selected minority rows may be unsorted, and ef's loud
-            # validation (correctly) rejects the full batch
-            enc, eoff = encode(flat, offsets)
-            return enc, eoff[rows], eoff[rows + 1] - eoff[rows]
-        enc, eoff = encode(*_take_segments(flat, offsets[rows], nr[rows]))
-        return enc, eoff[:-1], eoff[1:] - eoff[:-1]
+    def run(name, rows, dst):
+        return _KERNELS[name][0](flat, offsets, rows=rows, dst=dst,
+                                 pre=svb_inputs.get(name))
 
-    out, out_offsets = _by_codec(codec_ids, run, np.uint8)
+    out, out_offsets = _by_codec(codec_ids, sizes, run, np.uint8)
     return out, out_offsets, codec_ids
 
 
 def decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
                 codec_ids: np.ndarray):
-    """Decode each row; returns (flat uint32[], offsets int64[R+1])."""
+    """Decode each row; returns (flat uint32[], offsets int64[R+1]).  An
+    svb-family stream whose length contradicts its count and control bytes
+    raises StreamError (a ValueError) naming its batch row."""
     return _decode_by_codec(enc, enc_offsets, n_toks, codec_ids, None)
 
 
@@ -822,62 +973,71 @@ def _decode_by_codec(enc, enc_offsets, n_toks, codec_ids, n_values):
     enc_offsets = np.asarray(enc_offsets, dtype=np.int64)
     n_toks = np.asarray(n_toks, dtype=np.int64)
     codec_ids = np.asarray(codec_ids, dtype=np.int32)
-    keep = n_toks if n_values is None else n_values
-    R = n_toks.size
 
-    def run(name, rows):
-        if rows.size == R:
-            sub = enc, enc_offsets
-        else:
-            sub = _take_segments(enc, enc_offsets[rows],
-                                 enc_offsets[rows + 1] - enc_offsets[rows])
-        vals, voff = _KERNELS[name][1](
-            *sub, n_toks[rows], None if n_values is None else n_values[rows])
-        return vals, voff[:-1], keep[rows]
+    def run(name, rows, dst):
+        return _KERNELS[name][1](enc, enc_offsets, n_toks, n_values=n_values,
+                                 rows=rows, dst=dst)
 
-    return _by_codec(codec_ids, run, np.uint32)
+    return _by_codec(codec_ids, n_toks if n_values is None else n_values,
+                     run, np.uint32)
 
 
-def _by_codec(codec_ids: np.ndarray, run, dtype):
+def _by_codec(codec_ids: np.ndarray, sizes, run, dtype):
     """THE codec-group loop of encode_rows / decode_rows /
-    decode_prefix_rows.  run(name, rows) runs codec `name`'s table kernel
-    for the batch rows `rows` and returns (buf, starts, sizes): row
-    rows[i]'s output is buf[starts[i]:][:sizes[i]].  Returns the rows'
-    outputs concatenated in row order with their offsets.
+    decode_prefix_rows: returns every row's output concatenated in row
+    order, with offsets.  run(name, rows, dst) runs codec `name`'s table
+    kernel.
 
-    One group covering the whole batch with its segments already end to
-    end (the homogeneous batch) returns its kernel output unchanged.
-    Otherwise each group is copied into place: rows consecutive in BOTH the
-    output (row ids adjacent) and the group buffer (segments adjacent) copy
-    as one slice memcpy — the common shape when one codec dominates a batch
-    — falling back to one segment copy when runs are fragmented."""
-    parts = []
-    sizes = np.zeros(codec_ids.size, dtype=np.int64)
-    for cid in np.unique(codec_ids):
-        rows = np.flatnonzero(codec_ids == cid)
-        buf, starts, sz = run(CODEC_NAMES[cid], rows)
-        parts.append((rows, buf, starts, sz))
-        sizes[rows] = sz
-    offsets = np.concatenate([[0], np.cumsum(sizes)])
-    if len(parts) == 1 and buf.size == offsets[-1] \
-            and np.array_equal(starts, offsets[:-1]):
-        return buf, offsets
-    out = np.empty(int(offsets[-1]), dtype=dtype)
-    for rows, buf, starts, sz in parts:
-        breaks = np.flatnonzero((np.diff(rows) != 1) |
-                                (starts[1:] != starts[:-1] + sz[:-1])) + 1
-        n_runs = breaks.size + 1
-        if n_runs > rows.size // 64 + 1:
-            _copy_segments(out, offsets[rows], buf, starts, sz)
-            continue
-        bounds = np.concatenate([[0], breaks, [rows.size]])
-        for k in range(n_runs):
-            a, b = int(bounds[k]), int(bounds[k + 1])
-            src0 = int(starts[a])
-            nbytes = int(starts[b - 1] + sz[b - 1] - src0)
-            dst0 = int(offsets[rows[a]])
-            out[dst0:dst0 + nbytes] = buf[src0:src0 + nbytes]
-    return out, offsets
+    A batch of one codec runs its kernel once over every row (rows=None,
+    dst=None) and returns that kernel's output as it is — unless `sizes`
+    (each row's output length, None when only the kernel knows it; never
+    more than the kernel's row) asks for less in total, as a prefix decode
+    of a whole-row layout does, and the rows are cut to it.  A mixed batch knows every row's output offset from
+    `sizes` before any kernel runs, allocates the batch output once, and
+    runs each group's kernel with its rows and dst = (out, starts, sizes):
+    the svb family writes those rows straight into place, and the other
+    layouts' outputs are copied in (_placed)."""
+    groups = np.unique(codec_ids)
+    whole = None
+    if groups.size <= 1:
+        whole = run(CODEC_NAMES[groups[0]] if groups.size else "svb",
+                    None, None)
+        if sizes is None or whole[1][-1] == sizes.sum():
+            return whole
+    offsets = np.zeros(codec_ids.size + 1, dtype=np.int64)
+    np.cumsum(sizes, out=offsets[1:])
+    total = int(offsets[-1])
+    # 4 spare elements: an svb row's last 4-byte store may reach up to 4
+    # bytes past the batch's last byte
+    out = np.empty(total + 4, dtype=dtype)
+    if whole is not None:  # whole rows, cut to their sizes
+        _copy_segments(out, offsets[:-1], whole[0], whole[1][:-1], sizes)
+    else:
+        for cid in groups:
+            rows = np.flatnonzero(codec_ids == cid)
+            run(CODEC_NAMES[cid], rows, (out, offsets[rows], sizes[rows]))
+    return out[:total], offsets
+
+
+def _placed(kernel):
+    """A whole-row kernel kernel(values, offsets, *per_row) -> (buf,
+    buf_offsets) behind the table's interface: `rows` selects batch rows
+    (their segments and per-row arguments are gathered first) and dst =
+    (out, starts, sizes) copies row i's first sizes[i] output elements to
+    out[starts[i]:].  n_values and pre are not used: these layouts decode
+    whole rows, and dst's sizes cut a prefix."""
+    def run(values, offsets, *per_row, n_values=None, rows=None, dst=None,
+            pre=None):
+        if rows is not None:
+            values, offsets = _take_segments(
+                values, offsets[rows], offsets[rows + 1] - offsets[rows])
+            per_row = [a[rows] for a in per_row]
+        buf, boff = kernel(values, offsets, *per_row)
+        if dst is None:
+            return buf, boff
+        out, starts, sizes = dst
+        _copy_segments(out, starts, buf, boff[:-1], sizes)
+    return run
 
 
 def subset_prefix(flat: np.ndarray, offsets: np.ndarray, kk: np.ndarray):
@@ -1002,7 +1162,7 @@ def validate_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
         codes_padded = _CTRL_CODES_U32[ctrl].view(np.uint8)
         codes, sub_off = _take_segments(codes_padded, 4 * ctrl_starts[:-1],
                                         sub_n)
-        lens = _LEN_0124[codes] if scheme0124 else codes.astype(np.int64) + 1
+        lens = _LEN_0124_U8[codes] if scheme0124 else codes + np.uint8(1)
         expected = sub_key + _seg_sum(lens, sub_off)
         valid[check] = expected == sizes[check]
     return valid
@@ -1075,10 +1235,10 @@ def decode_delta_rows_prev(enc: np.ndarray, enc_offsets: np.ndarray,
     n_values (optional) decodes only each row's first min(n_values, n_tok)
     tokens — valid for delta streams because value i depends only on deltas
     <= i, so a prefix of the stream reconstructs a prefix of the tokens."""
-    out, offsets = _svb_delta_decode_rows(
+    out, offsets = _svb_decode_rows(
         np.ascontiguousarray(enc, dtype=np.uint8),
         np.asarray(enc_offsets, dtype=np.int64),
-        np.asarray(n_toks, dtype=np.int64), n_values)
+        np.asarray(n_toks, dtype=np.int64), False, n_values, delta=True)
     nr = offsets[1:] - offsets[:-1]
     out += np.repeat(np.asarray(prev).astype(np.int64).astype(np.uint32), nr)
     return out, offsets
@@ -1097,7 +1257,7 @@ def _rle_runs(flat: np.ndarray, offsets: np.ndarray):
     run_vals = flat[run_pos]
     run_ends = np.concatenate([run_pos[1:], [flat.size]])
     run_lens = (run_ends - run_pos).astype(np.uint32)
-    runs_per_row = _seg_sum(is_start.astype(np.int64), offsets)
+    runs_per_row = _seg_sum(is_start, offsets)
     run_offsets = np.concatenate([[0], np.cumsum(runs_per_row)])
     return run_vals, run_lens, runs_per_row, run_offsets
 
@@ -1147,7 +1307,7 @@ def _rle_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarra
     run_lens, _ = _svb_decode_rows(sl_cat, sl_off, nruns, False)
     expanded = np.repeat(run_vals, run_lens.astype(np.int64))
     # expanded is concatenated in live-row order == flat's live region order
-    exp_sizes = _seg_sum(run_lens.astype(np.int64), run_offsets)
+    exp_sizes = _seg_sum(run_lens, run_offsets)
     _copy_segments(flat, offsets[live], expanded,
                    np.cumsum(exp_sizes) - exp_sizes, exp_sizes)
     return flat, offsets
@@ -1536,7 +1696,7 @@ def _dict_encode_rows(flat, offsets):
     new[1:] = skey[1:] != skey[:-1]
     uniq_keys = skey[new]
     uniq_vals = (uniq_keys & np.uint64(0xFFFFFFFF)).astype(np.uint32)
-    k_per_row = _seg_sum(new.astype(np.int64), offsets)
+    k_per_row = _seg_sum(new, offsets)
     uniq_off = np.concatenate([[0], np.cumsum(k_per_row)])
     pos = np.searchsorted(uniq_keys, key)
     codes = (pos - np.repeat(uniq_off[:-1], nr)).astype(np.uint32)
@@ -1580,35 +1740,30 @@ def _dict_decode_rows(enc, enc_offsets, n_toks):
 
 # --------------------------------------------------------- codec kernel table
 
-def _svb_delta_decode_rows(enc, enc_offsets, n_toks, n_values=None):
-    """svb over per-row deltas, then the per-row prefix sum (prefix-local:
-    value i depends only on deltas <= i, so a prefix decode stays exact)."""
-    vals, offsets = _svb_decode_rows(enc, enc_offsets, n_toks, False, n_values)
-    return _segmented_cumsum_u32(vals, offsets), offsets
-
-
 # THE codec -> whole-batch kernel map: encode_rows, decode_rows and
 # decode_prefix_rows dispatch through it (via _by_codec) and nowhere else.
-#   encode(flat, offsets) -> (bytes, byte offsets)
-#   decode(enc, enc_offsets, n_toks, n_values) -> (flat, offsets), each row
-#     holding at least its first n_values[r] tokens (None = all): the svb
-#     family decodes only that prefix (its control bytes address the
-#     prefix's data directly), the other layouts decode whole rows.
+#   encode(flat, offsets, rows=None, dst=None, pre=None)
+#   decode(enc, enc_offsets, n_toks, n_values=None, rows=None, dst=None)
+# Without rows/dst a kernel runs over every row and returns (buffer,
+# offsets); with them it runs over the batch rows `rows` and puts row
+# rows[i]'s output at dst[0][dst[1][i]:] (see _by_codec).  A decode row
+# holds at least its first n_values[r] tokens (None = all): the svb family
+# decodes only that prefix (its control bytes address the prefix's data
+# directly), the other layouts decode whole rows.  pre is the cost pass's
+# input for an svb-family encoder (_cost_pass).
 _KERNELS = {
-    "svb": (lambda f, o: _svb_encode_rows(f, o, False),
-            lambda e, eo, n, k: _svb_decode_rows(e, eo, n, False, k)),
-    "svb0124": (lambda f, o: _svb_encode_rows(f, o, True),
-                lambda e, eo, n, k: _svb_decode_rows(e, eo, n, True, k)),
-    "svb_delta": (lambda f, o: _svb_encode_rows(_row_deltas(f, o), o, False),
-                  _svb_delta_decode_rows),
-    "bitpack": (lambda f, o: _bitpack_encode_rows(f, o, False),
-                lambda e, eo, n, k: _bitpack_decode_rows(e, eo, n, False)),
-    "for": (lambda f, o: _bitpack_encode_rows(f, o, True),
-            lambda e, eo, n, k: _bitpack_decode_rows(e, eo, n, True)),
-    "dict": (_dict_encode_rows,
-             lambda e, eo, n, k: _dict_decode_rows(e, eo, n)),
-    "rle": (_rle_encode_rows, lambda e, eo, n, k: _rle_decode_rows(e, eo, n)),
-    "fsst": (_fsst_encode_rows,
-             lambda e, eo, n, k: _fsst_decode_rows(e, eo, n)),
-    "ef": (ef_encode_rows, lambda e, eo, n, k: ef_decode_rows(e, eo, n)),
+    "svb": (partial(_svb_encode_rows, scheme0124=False),
+            partial(_svb_decode_rows, scheme0124=False)),
+    "svb0124": (partial(_svb_encode_rows, scheme0124=True),
+                partial(_svb_decode_rows, scheme0124=True)),
+    "svb_delta": (partial(_svb_encode_rows, scheme0124=False, delta=True),
+                  partial(_svb_decode_rows, scheme0124=False, delta=True)),
+    "bitpack": (_placed(partial(_bitpack_encode_rows, frame_of_ref=False)),
+                _placed(partial(_bitpack_decode_rows, frame_of_ref=False))),
+    "for": (_placed(partial(_bitpack_encode_rows, frame_of_ref=True)),
+            _placed(partial(_bitpack_decode_rows, frame_of_ref=True))),
+    "dict": (_placed(_dict_encode_rows), _placed(_dict_decode_rows)),
+    "rle": (_placed(_rle_encode_rows), _placed(_rle_decode_rows)),
+    "fsst": (_placed(_fsst_encode_rows), _placed(_fsst_decode_rows)),
+    "ef": (_placed(ef_encode_rows), _placed(ef_decode_rows)),
 }

@@ -68,7 +68,7 @@ def encode_table(df: DataFrame, codec: str = "auto",
             out, ooff, cids = batched.encode_rows(flat, offsets, codec=codec,
                                                   candidates=candidates)
             nr = offsets[1:] - offsets[:-1]
-            csum = batched._seg_sum(flat.astype(np.int64), offsets)
+            csum = batched._seg_sum(flat, offsets)
             # zone map: per-row token min/max let a reader prune encoded
             # blocks by token range WITHOUT decoding.  Empty rows are NULL,
             # not 0/0 — a 0/0 sentinel is indistinguishable from an
@@ -152,9 +152,20 @@ _CODEC_IDS = pa.array(range(len(batched.CODEC_NAMES)), pa.int32())
 
 def _raise_at(batch: pa.RecordBatch, key: str, bad, what: str):
     """ValueError naming the ``key`` value of the first row ``bad`` (a
-    boolean Arrow or NumPy array) marks."""
-    row = int(np.argmax(np.asarray(bad)))
+    boolean Arrow or NumPy array) marks, or of row ``bad`` (an int)."""
+    row = bad if isinstance(bad, int) else int(np.argmax(np.asarray(bad)))
     raise ValueError(f"{what} decoding {key}={batch.column(key)[row]}")
+
+
+def decode_rows_at(batch: pa.RecordBatch, key: str, decode, *rows):
+    """decode(*rows) for the stored rows of ``batch``; a stream whose
+    length contradicts its count and control bytes
+    (codec.batched.StreamError) raises ValueError naming its ``key``
+    value."""
+    try:
+        return decode(*rows)
+    except batched.StreamError as e:
+        _raise_at(batch, key, e.row, str(e))
 
 
 def encoded_rows(batch: pa.RecordBatch, key: str, stream: str = "encoded",
@@ -196,7 +207,7 @@ def check_checksums(batch: pa.RecordBatch, key: str, flat: np.ndarray,
     """Raise ValueError naming the ``key`` value of the first row whose
     decoded token sum differs from its stored ``checksum``."""
     want = np.asarray(batch.column("checksum"), dtype=np.int64)
-    got = batched._seg_sum(flat.astype(np.int64), offsets)
+    got = batched._seg_sum(flat, offsets)
     bad = want != got
     if bad.any():
         _raise_at(batch, key, bad, "checksum mismatch")
@@ -210,7 +221,8 @@ def _decode(enc_df: DataFrame, decode, verify_checksum: bool,
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            flat, offsets = decode(*encoded_rows(batch, "doc_id"))
+            flat, offsets = decode_rows_at(batch, "doc_id", decode,
+                                           *encoded_rows(batch, "doc_id"))
             if verify_checksum:
                 check_checksums(batch, "doc_id", flat, offsets)
             doc, src = batch.column("doc_id"), batch.column("source")
@@ -238,9 +250,10 @@ def decode_table(enc_df: DataFrame, verify_checksum: bool = True,
     polynomial fold (codec.batched.fingerprint_rows) runs on the decoded
     flat vector INSIDE this kernel, so the 4 B/token column never crosses
     back to the JVM and no interpreted ``aggregate()`` pass remains.
-    A NULL stream, a NULL or unknown codec name (encoded_rows) and, with
-    verify_checksum, a checksum mismatch raise ValueError naming the
-    doc_id."""
+    A NULL stream, a NULL or unknown codec name (encoded_rows), an
+    svb-family stream whose length contradicts its n_tok and control bytes
+    (decode_rows_at) and, with verify_checksum, a checksum mismatch raise
+    ValueError naming the doc_id."""
     return _decode(enc_df, batched.decode_rows, verify_checksum, fingerprint)
 
 
@@ -253,7 +266,8 @@ def decode_table_prefix(enc_df: DataFrame, max_len: int,
     Output n_tok is the TRUNCATED length.  fingerprint=True emits the
     in-kernel polynomial fold of the PREFIX instead of the token arrays
     (see decode_table).  The checksum covers the whole row, so a prefix
-    cannot verify it; the NULL rules of decode_table hold."""
+    cannot verify it; the NULL and stream-length rules of decode_table
+    hold, the length checked only as far as the prefix reads."""
     return _decode(enc_df, partial(batched.decode_prefix_rows,
                                    max_len=max_len), False, fingerprint)
 

@@ -63,7 +63,7 @@ from ..arrow_rows import binary_array, list_array, list_flat
 from ..codec import batched
 from ..session import fanout_scan
 from .chunking import encode_chunked_delta
-from .encode import encoded_rows
+from .encode import decode_rows_at, encoded_rows
 
 # chunk span in doc-id space: bounds every chunk row to <= span postings.
 # Gate scale (500-5000 docs) uses a small span so multi-chunk terms exist;
@@ -130,8 +130,10 @@ def decode_wire(kind: str, src, streams=None, suffix: str = "",
     src is an Arrow batch whose wire columns carry ``suffix`` (a serving
     side's alias, see _ServingOp), or one chunk's (chunk_id, *raw state)
     tuple, the state in wire_columns order (the streaming merges).  Each
-    stream is read through encode.encoded_rows, so a NULL stream or count
-    raises ValueError naming the row's ``key`` value."""
+    stream is read through encode.encoded_rows and decoded through
+    encode.decode_rows_at, so a NULL stream or count, and an svb-family
+    stream whose length contradicts its count, raise ValueError naming the
+    row's ``key`` value."""
     if isinstance(src, tuple):
         src = pa.RecordBatch.from_arrays([pa.array([v]) for v in src],
                                          names=["chunk_id",
@@ -140,7 +142,8 @@ def decode_wire(kind: str, src, streams=None, suffix: str = "",
     out = []
     for col in streams or spec:
         codec, cnt = spec[col]
-        out.append(batched.decode_rows(
+        out.append(decode_rows_at(
+            src, key, batched.decode_rows,
             *encoded_rows(src, key, col + suffix, cnt + suffix, codec)))
     return out
 

@@ -296,7 +296,7 @@ def pack_encoded_rows(enc: DataFrame, cap: int = PACK_CAP,
                 # token-sum checksum for read-side verification
                 out, ooff, pack_cids = batched.encode_rows(
                     flat, run_off, codec=codec, candidates=candidates)
-                cksum = batched._seg_sum(flat.astype(np.int64), run_off)
+                cksum = batched._seg_sum(flat, run_off)
                 yield pa.RecordBatch.from_arrays(
                     head + [pa.array(pack_cids, pa.int32()),
                             pa.array(cksum, pa.int64()),

@@ -191,11 +191,14 @@ def test_prefix_decode_mixed_codec_batch():
 @pytest.mark.parametrize("layout", ["blocked", "interleaved"])
 def test_dominant_group_and_minority_subset(layout, monkeypatch):
     """3/4 small-value-run rows (rle wins) + 1/4 random 32-bit rows: the rle
-    group holds more than half the batch, so encode_rows runs its kernel on
-    the WHOLE batch and keeps the rle rows' segments, while the minority
-    group is encoded from a row subset.  'blocked' reassembles each group
-    as one slice copy, 'interleaved' through the fragmented segment copy.
-    Every row must still equal the single-array codec and decode exactly."""
+    group holds most of the batch, the minority group the rest.  Every
+    row's output offset is known from its selected cost before any kernel
+    runs, so each group's kernel runs ONCE over exactly its own rows and
+    puts them into the one batch buffer (dst): no group is encoded over
+    the whole batch, and none is copied into place afterwards by the group
+    loop.  'blocked' places each group as one run of rows, 'interleaved'
+    as rows fragmented at every fourth row.  Every row must still equal
+    the single-array codec and decode exactly."""
     def small_runs(n):
         return np.repeat(RNG.integers(100, 200, n // 16 + 1), 16)[:n].astype(np.uint32)
 
@@ -211,21 +214,24 @@ def test_dominant_group_and_minority_subset(layout, monkeypatch):
     flat = np.concatenate(arrays)
     offsets = np.concatenate([[0], np.cumsum(lengths)]).astype(np.int64)
 
-    encoded_rows = {}
+    calls = {}
     for name in batched.CODEC_NAMES:
         enc_fn, dec_fn = batched._KERNELS[name]
 
-        def spy(f, o, name=name, enc_fn=enc_fn):
-            encoded_rows.setdefault(name, []).append(o.size - 1)
-            return enc_fn(f, o)
+        def spy(f, o, rows=None, dst=None, pre=None, name=name,
+                enc_fn=enc_fn):
+            calls.setdefault(name, []).append(
+                (None if rows is None else rows.tolist(), dst is not None))
+            return enc_fn(f, o, rows=rows, dst=dst, pre=pre)
         monkeypatch.setitem(batched._KERNELS, name, (spy, dec_fn))
 
     out, ooff, cids = batched.encode_rows(flat, offsets, codec="auto")
     rle = batched.CODEC_ID["rle"]
     assert np.array_equal(cids == rle, is_runs)
-    assert encoded_rows.pop("rle") == [R]  # dominant: whole-batch encode
-    (minority, sizes), = encoded_rows.items()
-    assert sizes == [R // 4]  # minority: row-subset encode
+    # one call per group, over exactly its rows, writing into place
+    assert calls.pop("rle") == [(np.flatnonzero(is_runs).tolist(), True)]
+    (minority, got), = calls.items()
+    assert got == [(np.flatnonzero(~is_runs).tolist(), True)]
     for i, a in enumerate(arrays):
         name = batched.CODEC_NAMES[cids[i]]
         assert out[ooff[i]:ooff[i + 1]].tobytes() == \
@@ -238,6 +244,79 @@ def test_dominant_group_and_minority_subset(layout, monkeypatch):
         vals, voff = batched.decode_prefix_rows(out, ooff, n_toks, cids, k)
         for i, a in enumerate(arrays):
             np.testing.assert_array_equal(vals[voff[i]:voff[i + 1]], a[:k])
+
+
+def _bulk_family_rows(rng, R, empty_every):
+    """R rows of the five bulk_codec families (FIXTURES.md) round-robin by
+    row — token_zipf, rand_shifted, near_sorted_gap, zero_heavy and
+    small-value runs — with an empty row after every `empty_every` rows
+    and one at the end."""
+    def family(f, n):
+        if f == 0:
+            return (rng.zipf(1.1, n) % 50257).astype(np.uint32)
+        if f == 1:
+            return (rng.integers(0, 2 ** 31, n, dtype=np.uint64)
+                    >> rng.integers(0, 32, n, dtype=np.uint64)).astype(np.uint32)
+        if f == 2:
+            step = rng.integers(0, 8, n) + 3 ** int(rng.integers(0, 12)) - 1
+            return (np.cumsum(step) & 0xFFFFFFFF).astype(np.uint32)
+        if f == 3:
+            return np.where(rng.random(n) < 0.7, 0,
+                            rng.integers(0, 50257, n)).astype(np.uint32)
+        return np.repeat(rng.integers(0, 30, n // 6 + 1), 6)[:n].astype(np.uint32)
+
+    arrays = []
+    for i in range(R):
+        arrays.append(family(i % 5, int(rng.integers(1, 300))))
+        if i % empty_every == empty_every - 1:
+            arrays.append(np.zeros(0, np.uint32))
+    arrays.append(np.zeros(0, np.uint32))
+    return arrays
+
+
+def test_bulk_mix_groups_write_in_place():
+    """The bulk_codec shape: five families interleaved at every row, so no
+    codec group holds half the batch and every group writes its rows
+    between other groups' rows, with empty rows between them and at the
+    end.  auto encode is byte-identical per row to the scalar selector,
+    decode and prefix decode are exact — and stay so after a larger,
+    differently shaped batch has filled the scratch pools (outputs are
+    np.empty, so every byte must be written)."""
+    rng = np.random.default_rng(15)
+    arrays = _bulk_family_rows(rng, 150, 7)
+    flat = np.concatenate(arrays)
+    offsets = np.concatenate(
+        [[0], np.cumsum([a.size for a in arrays])]).astype(np.int64)
+    n_toks = np.diff(offsets)
+
+    def check():
+        out, ooff, cids = batched.encode_rows(flat, offsets, codec="auto")
+        groups = np.unique(cids[n_toks > 0])
+        assert len(groups) >= 4 and \
+            max(np.bincount(cids)) < cids.size // 2  # no dominant group
+        for i, a in enumerate(arrays):
+            name, _ = select.choose(a, batched.VECTOR_COST_CODECS)
+            assert batched.CODEC_NAMES[cids[i]] == name, i
+            assert out[ooff[i]:ooff[i + 1]].tobytes() == \
+                select.REGISTRY[name].encode(a), i
+        vflat, voff = batched.decode_rows(out, ooff, n_toks, cids)
+        np.testing.assert_array_equal(vflat, flat)
+        np.testing.assert_array_equal(voff, offsets)
+        for k in (1, 5, 10 ** 6):
+            vals, voff = batched.decode_prefix_rows(out, ooff, n_toks, cids, k)
+            for i, a in enumerate(arrays):
+                np.testing.assert_array_equal(vals[voff[i]:voff[i + 1]], a[:k])
+        return out.tobytes()
+
+    first = check()
+    big = _bulk_family_rows(np.random.default_rng(16), 900, 3)
+    big_flat = np.concatenate(big) ^ np.uint32(0x5A5A5A5A)
+    big_off = np.concatenate(
+        [[0], np.cumsum([a.size for a in big])]).astype(np.int64)
+    for codec in ("auto", "svb", "svb0124", "svb_delta"):
+        enc, eoff, cids = batched.encode_rows(big_flat, big_off, codec)
+        batched.decode_rows(enc, eoff, np.diff(big_off), cids)
+    assert check() == first
 
 
 def test_all_empty_batch():
@@ -423,12 +502,13 @@ def test_fingerprint_rows_empty_and_growth():
 
 
 def test_row_costs_prune_matches_exact_selection():
-    """prune=True may relax the dict COLUMN to a proven lower bound, but
-    the matrix minimum and the first-minimum argmin (= selector winner,
-    incl. candidate-priority ties) must be IDENTICAL to the exact matrix —
-    on dict winners, rle winners, near-ties, low-byte collisions (the
-    bound's weakest case: distinct values sharing one low byte), empties,
-    and the fsst-extended candidate set."""
+    """prune=True may relax the dict and rle COLUMNS to proven lower
+    bounds, but the matrix minimum and the first-minimum argmin (=
+    selector winner, incl. candidate-priority ties) must be IDENTICAL to
+    the exact matrix — on dict winners, rle winners, rle ties and
+    near-ties with the earlier columns, low-byte collisions (the dict
+    bound's weakest case: distinct values sharing low bits), empties, and
+    the fsst-extended candidate set."""
     rng = np.random.default_rng(5)
     arrays = []
     for i in range(600):
@@ -439,9 +519,9 @@ def test_row_costs_prune_matches_exact_selection():
         elif kind == 1:  # rle-friendly runs
             vals = np.repeat(rng.integers(0, 1000, max(n // 20, 1))
                              .astype(np.uint32), 20)[:n]
-        elif kind == 2:  # low-byte collisions: distinct values, one low byte
+        elif kind == 2:  # low-bit collisions: distinct values, one low part
             vals = (rng.integers(0, 50, n).astype(np.uint32)
-                    << np.uint32(8)) + np.uint32(7)
+                    << np.uint32(12)) + np.uint32(7)
         elif kind == 3:
             vals = rng.integers(0, 255, n).astype(np.uint32)
         elif kind == 4:
@@ -449,19 +529,159 @@ def test_row_costs_prune_matches_exact_selection():
         else:
             vals = rng.integers(0, 2**16, n).astype(np.uint32)
         arrays.append(vals)
+    # rle against bitpack at 8-bit width: 4 one-byte runs cost
+    # 8 + (1 + 4) + (1 + 4) = 18 B and bitpack 1 + n B, so n = 16 / 17 / 18
+    # makes rle lose by one byte, tie (bitpack wins, the earlier column)
+    # and win by one byte
+    for n in (16, 17, 18) * 4:
+        cut = np.sort(rng.choice(np.arange(1, n), 3, replace=False))
+        vals = np.repeat(np.array([255, 0, 255, 1], np.uint32),
+                         np.diff(np.concatenate([[0], cut, [n]])))
+        arrays.append(vals)
+    # a run longer than 255 before random 32-bit values: rle loses, and
+    # its bound (one byte per run length) sits one byte below its cost
+    for n in (300, 400, 500):
+        arrays.append(np.concatenate([
+            np.full(n, 5, np.uint32),
+            rng.integers(0, 2**32, 400, dtype=np.uint64).astype(np.uint32)]))
     arrays.append(np.zeros(0, np.uint32))
     flat = np.concatenate(arrays).astype(np.uint32)
     off = np.concatenate(
         [[0], np.cumsum([a.size for a in arrays])]).astype(np.int64)
-    saw_dict_winner = False
+    seen = set()
     for cand in (batched.VECTOR_COST_CODECS, batched.VECTOR_COST_CODECS_FULL):
         exact = batched.row_costs(flat, off, cand)
         pruned = batched.row_costs(flat, off, cand, prune=True)
         np.testing.assert_array_equal(exact.min(axis=1), pruned.min(axis=1))
-        np.testing.assert_array_equal(np.argmin(exact, axis=1),
-                                      np.argmin(pruned, axis=1))
-        j = cand.index("dict")
-        # the relaxed column is a true LOWER bound (never above exact)
-        assert (pruned[:, j] <= exact[:, j]).all()
-        saw_dict_winner |= bool((np.argmin(exact, axis=1) == j).any())
-    assert saw_dict_winner  # the mix must actually exercise dict wins
+        first = np.argmin(exact, axis=1)
+        np.testing.assert_array_equal(first, np.argmin(pruned, axis=1))
+        for name in ("dict", "rle"):
+            j = cand.index(name)
+            # the relaxed column is a true LOWER bound (never above exact)
+            assert (pruned[:, j] <= exact[:, j]).all()
+            if (pruned[:, j] < exact[:, j]).any():
+                seen.add(f"{name} pruned")
+            if (first == j).any():
+                seen.add(f"{name} wins")
+            prior = exact[:, :j].min(axis=1)
+            for gap in (-1, 0, 1):  # rle near-ties with the earlier columns
+                if name == "rle" and (exact[:, j] - prior == gap).any():
+                    seen.add(f"rle tie {gap}")
+    # the mix must actually exercise every case
+    assert seen == {"dict pruned", "dict wins", "rle pruned", "rle wins",
+                    "rle tie -1", "rle tie 0", "rle tie 1"}, seen
+
+SVB_FAMILY = ("svb", "svb0124", "svb_delta")
+
+
+def _encoded_family_rows(codec, seed):
+    rng = np.random.default_rng(seed)
+    arrays = [gen_mixed(int(n)) for n in
+              list(EDGE_LENGTHS) + list(rng.integers(0, 300, 25))]
+    flat = np.concatenate(arrays).astype(np.uint32)
+    off = np.concatenate(
+        [[0], np.cumsum([a.size for a in arrays])]).astype(np.int64)
+    enc, eoff, _ = batched.encode_rows(flat, off, codec)
+    return arrays, enc, eoff
+
+
+def _decoders(enc, eoff, n_toks, codec):
+    cids = np.full(n_toks.size, batched.CODEC_ID[codec], np.int32)
+    yield lambda: batched.decode_rows(enc, eoff, n_toks, cids)
+    yield lambda: batched.decode_prefix_rows(enc, eoff, n_toks, cids, 10**6)
+
+
+@pytest.mark.parametrize("codec", SVB_FAMILY)
+def test_svb_truncated_tail_raises(codec):
+    """Dropping a row's last byte always raises a ValueError naming that
+    row, through decode_rows and (over the whole row) decode_prefix_rows."""
+    arrays, enc, eoff = _encoded_family_rows(codec, 1)
+    n_toks = np.array([a.size for a in arrays], np.int64)
+    for i in np.flatnonzero(n_toks):
+        cut = np.delete(enc, eoff[i + 1] - 1)
+        off = eoff - (np.arange(eoff.size) > i)
+        for decode in _decoders(cut, off, n_toks, codec):
+            with pytest.raises(batched.StreamError) as err:
+                decode()
+            assert err.value.row == i and isinstance(err.value, ValueError)
+
+
+@pytest.mark.parametrize("codec", SVB_FAMILY)
+def test_svb_overstated_count_raises(codec):
+    """n_tok overstated by 1..999 always raises for the 1234 scheme (every
+    extra value costs at least a data byte).  For svb0124 it raises unless
+    the extra values fall in the last control byte's zero padding: a zero
+    code is a 0-byte zero, so that stream is valid for both counts and
+    decodes to the row plus zeros."""
+    arrays, enc, eoff = _encoded_family_rows(codec, 2)
+    n_toks = np.array([a.size for a in arrays], np.int64)
+    for i in range(n_toks.size):
+        for m in (1, 2, 3, 4, 5, 17, 999):
+            over = n_toks.copy()
+            over[i] += m
+            valid = batched.validate_rows(enc, eoff, over,
+                                          scheme0124=codec == "svb0124")
+            fits = codec == "svb0124" and n_toks[i] > 0 and \
+                (n_toks[i] + m + 3) // 4 == (n_toks[i] + 3) // 4
+            assert valid[i] == fits
+            for decode in _decoders(enc, eoff, over, codec):
+                if fits:
+                    vals, voff = decode()
+                    np.testing.assert_array_equal(
+                        vals[voff[i]:voff[i + 1]],
+                        np.concatenate([arrays[i], np.zeros(m, np.uint32)]))
+                    continue
+                with pytest.raises(batched.StreamError) as err:
+                    decode()
+                assert err.value.row == i
+
+
+@pytest.mark.parametrize("codec", SVB_FAMILY)
+def test_svb_decode_raises_exactly_where_validate_rows_fails(codec):
+    """Corrupt stream lengths and counts (byte dropped or appended,
+    count over- or understated, count zeroed): decode_rows raises on
+    exactly the rows validate_rows marks invalid — every row it names is
+    invalid, and once those rows are dropped one by one the rest
+    decodes."""
+    arrays, enc, eoff = _encoded_family_rows(codec, 3)
+    rng = np.random.default_rng(4)
+    n_toks = [a.size for a in arrays]
+    segs = [enc[eoff[i]:eoff[i + 1]] for i in range(len(arrays))]
+    for i in rng.choice(len(arrays), 15, replace=False):
+        kind = int(rng.integers(0, 5))
+        if kind == 0 and segs[i].size:
+            segs[i] = segs[i][:-1]
+        elif kind == 1:
+            segs[i] = np.append(segs[i], np.uint8(rng.integers(0, 256)))
+        elif kind == 2:
+            n_toks[i] += int(rng.integers(1, 9))
+        elif kind == 3:
+            n_toks[i] = max(n_toks[i] - int(rng.integers(1, 9)), 0)
+        else:
+            n_toks[i] = 0
+    live = list(range(len(arrays)))
+
+    def batch():
+        b_off = np.concatenate([[0], np.cumsum([segs[i].size for i in live])])
+        b_enc = np.concatenate([segs[i] for i in live])
+        return b_enc, b_off, np.array([n_toks[i] for i in live], np.int64)
+
+    valid = batched.validate_rows(*batch(), scheme0124=codec == "svb0124")
+    invalid = {live[j] for j in np.flatnonzero(~valid)}
+    assert invalid
+    cids = np.full(len(arrays), batched.CODEC_ID[codec], np.int32)
+    dropped = set()
+    while True:
+        b_enc, b_off, b_n = batch()
+        try:
+            vals, voff = batched.decode_rows(b_enc, b_off, b_n,
+                                             cids[:len(live)])
+        except batched.StreamError as err:
+            dropped.add(live.pop(err.row))
+            continue
+        break
+    assert dropped == invalid
+    for j, i in enumerate(live):
+        if i not in invalid and n_toks[i] == arrays[i].size:
+            np.testing.assert_array_equal(vals[voff[j]:voff[j + 1]],
+                                          arrays[i])

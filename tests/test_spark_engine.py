@@ -339,6 +339,59 @@ def test_decode_rejects_null_encoded_row(spark, tmp_path):
         rejects(serve, "NULL encoded_[a-z0-9]+ stream decoding chunk_id=1")
 
 
+def test_decode_rejects_stream_length_mismatch(spark, tmp_path):
+    """An svb-family stream whose length contradicts its n_tok and control
+    bytes (a truncated tail, an overstated count) fails with a ValueError
+    naming the row's key — in decode_table and decode_table_prefix, on an
+    auto-encoded table whose codec groups interleave, and in
+    index.decode_wire.  It decoded silently wrong, or raised a bare
+    IndexError, before."""
+    from streamvbyte_spark.operators import decode_table_prefix
+    from streamvbyte_spark.operators.index import (build_index_tf_chunked,
+                                                   decode_index_tf)
+
+    def rejects(df, match):
+        with pytest.raises(Exception, match="ValueError: .*" + match):
+            df.collect()
+
+    tok = spark.createDataFrame(
+        [("m", list(range(0, 3000, 7)), 429, "s"),
+         ("n", [9] * 40 + list(range(300, 340)), 80, "s"),
+         ("o", [0, 0, 5, 0] * 20, 80, "s"),
+         ("p", [(i * 2654435761) % 2**31 >> (i % 32) for i in range(60)],
+          60, "s")],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    for codec in ("svb", "svb_delta", "auto"):
+        enc = encode_table(tok, codec=codec).coalesce(1)
+        if codec == "auto":  # p is an svb row between other codecs' rows
+            got = dict(enc.select("doc_id", "codec").collect())
+            assert got["p"] == "svb" and len(set(got.values())) > 2, got
+        cut = enc.withColumn("encoded", F.when(
+            F.col("doc_id") == "p",
+            F.expr("substring(encoded, 1, length(encoded) - 1)"))
+            .otherwise(F.col("encoded")))
+        over = enc.withColumn("n_tok", F.when(
+            F.col("doc_id") == "p", F.col("n_tok") + 5)
+            .otherwise(F.col("n_tok")))
+        for decode in (lambda d: decode_table(d, verify_checksum=False),
+                       lambda d: decode_table_prefix(d, 10**6)):
+            assert decode(enc).count() == 4
+            rejects(decode(cut), "decoding doc_id=p")
+            rejects(decode(over), "decoding doc_id=p")
+
+    docs = spark.createDataFrame(
+        [(i, "a b c" if i % 2 else "b c d") for i in range(12)],
+        "doc_id long, text string")
+    idx_dir = str(tmp_path / "tf")
+    build_index_tf_chunked(docs, span=4).write.parquet(idx_dir)
+    index = spark.read.parquet(idx_dir).coalesce(1)
+    bad = index.withColumn("enc_tfs", F.when(
+        F.col("doc_id") == "c",
+        F.expr("substring(enc_tfs, 1, length(enc_tfs) - 1)"))
+        .otherwise(F.col("enc_tfs")))
+    rejects(decode_index_tf(bad), "decoding doc_id=c")
+
+
 def test_full_curation_pipeline(spark):
     """End-to-end: dedup -> quality gate -> tokenize -> auto encode -> lineage
     write; rerun is a no-op (resume sees all buckets committed)."""
