@@ -378,16 +378,17 @@ def _svb_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarra
     (after the length pass) that it is exactly ceil(n/4) + sum(lens) long
     — the check of validate_rows — or, for a prefix, that the prefix's
     data ends inside it."""
-    starts, sizes = enc_offsets[:-1], enc_offsets[1:] - enc_offsets[:-1]
+    starts, stops = enc_offsets[:-1], enc_offsets[1:]
     full = np.asarray(n_toks, dtype=np.int64)
     if rows is not None:
-        starts, sizes, full = starts[rows], sizes[rows], full[rows]
+        starts, stops, full = starts[rows], stops[rows], full[rows]
         if n_values is not None:
             n_values = n_values[rows]
     nr = full if n_values is None else np.minimum(n_values, full)
     key_len = (full + 3) // 4  # control REGION size (addresses the data base)
+    sizes = stops - starts
 
-    def check(bad, what):
+    def check(bad, what):  # the message is built only on a mismatch
         if bad.any():
             r = int(np.argmax(bad))
             raise StreamError(
@@ -410,14 +411,15 @@ def _svb_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarra
     # O(prefix); also bounds 4*sum(pkey) <= 4V, so the int32 index guard
     # below stays valid even when the full control region would not fit
     pkey = key_len if n_values is None else (nr + 3) // 4
-    ctrl, ctrl_starts = _take_segments(enc, starts, pkey)
+    ctrl_starts = np.cumsum(pkey) - pkey
+    ctrl = enc[_segment_index(starts, pkey, ctrl_starts)]
     codes_padded = _CTRL_CODES_U32[ctrl].view(np.uint8)
     idt = np.int32 if enc.size + 4 < 2**31 and V * 4 < 2**31 else np.int64
     # per-value index into codes_padded, built in one scratch buffer:
     # arange(V) - repeat(row_start) + repeat(4*ctrl_start) with the two
     # repeats fused into one (their operand is combined per row first)
     intra = _scratch("dec_intra", V, idt)
-    row_shift = (4 * ctrl_starts[:-1] - offsets[:-1]).astype(idt)
+    row_shift = (4 * ctrl_starts - offsets[:-1]).astype(idt)
     np.add(_cached_arange(V, idt), np.repeat(row_shift, nr), out=intra)
     codes = codes_padded[intra]
     lens = _LEN_0124_U8[codes] if scheme0124 else codes + np.uint8(1)
@@ -425,17 +427,19 @@ def _svb_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarra
     # the cumsum runs at half the memory traffic of int64
     ends = np.cumsum(lens, dtype=idt)
     row_base = _row_base_at(ends, offsets)  # data before each row, and end
-    row_data_base = row_base[:-1]
-    data_end = key_len + np.diff(row_base)
+    # shift from a value's cumsum position to its byte in enc; a row's
+    # data then ends at row_base[r + 1] - shift[r]
+    shift = row_base[:-1] - starts - key_len
+    data_stop = row_base[1:] - shift
     if n_values is None:
-        check(sizes != data_end,
-              lambda r: f"its control bytes declare {data_end[r]} bytes")
+        check(data_stop != stops, lambda r: "its control bytes declare "
+              f"{data_stop[r] - starts[r]} bytes")
     else:
-        check(sizes < data_end,
-              lambda r: f"its {nr[r]}-value prefix ends at byte {data_end[r]}")
+        check(data_stop > stops, lambda r: f"its {nr[r]}-value prefix "
+              f"ends at byte {data_stop[r] - starts[r]}")
     src = _scratch("dec_src", V, idt)
     np.subtract(ends, lens, out=src, casting="unsafe")
-    src -= np.repeat((row_data_base - starts - key_len).astype(idt), nr)
+    src -= np.repeat(shift.astype(idt), nr)
     # ONE unconditional little-endian 4-byte load per value (a stride-1
     # uint32 view over the stored bytes) + per-length mask LUT: the NumPy
     # analog of the reference's unconditional 16B SIMD load + shuffle-mask
@@ -554,29 +558,29 @@ def _dict_costs(flat: np.ndarray, offsets: np.ndarray, nr: np.ndarray,
     prior minimum, exact ONLY where dict could still be the argmin winner
     and a proven lower bound elsewhere (see row_costs' prune contract).
 
-    The bound: distinct full values >= distinct low BITS-bit parts (any
+    The bound: distinct full values >= distinct low 10-bit parts (any
     projection only merges values), and the dict formula
     4 + 4K + nr*width(K-1)/8 is nondecreasing in K — so evaluating it at
     the projection's distinct count bounds the true cost from below.  The
-    presence table is one byte scatter + a 2^BITS-wide row sum (no sort);
+    presence table is one byte scatter + a 1024-wide row sum (no sort);
     the composite-key sort then runs only over the surviving rows' values.
-    BITS is 10 up to 2^14 rows (a table of <= 16 MB), else 8: a byte
-    projection caps the bound at 256 values, and on a bulk_codec batch
-    left 16% of the rows (long rand_shifted and near_sorted_gap rows) to
-    the sort, where 10 bits leave none."""
-    if prior_min is None or flat.size == 0 or nr.size > (1 << 18):
+    A byte projection would cap the bound at 256 values, and on a
+    bulk_codec batch left 16% of the rows (long rand_shifted and
+    near_sorted_gap rows) to the sort, where 10 bits leave none.  Batches
+    above 2^14 rows (Spark's Arrow batch cap, so direct calls only) take
+    the exact path, which keeps the table at <= 16 MB."""
+    if prior_min is None or flat.size == 0 or nr.size > (1 << 14):
         k = _row_distinct(flat, offsets)
         w = _exact_width(np.maximum(k - 1, 0))
         return 4 + 4 * k + (nr * w + 7) // 8
     R = nr.size
-    bits = 10 if R <= (1 << 14) else 8
-    # int32 index arithmetic: R << bits <= 2^26 (guards above), so
-    # (row << bits) + low bits fits int32 — half the temp traffic of int64
+    # int32 index arithmetic: R << 10 <= 2^24 (guard above), so
+    # (row << 10) + low bits fits int32 — half the temp traffic of int64
     idx = _scratch("dictlb_idx", flat.size, np.uint32)
-    np.bitwise_and(flat, np.uint32((1 << bits) - 1), out=idx)
+    np.bitwise_and(flat, np.uint32(1023), out=idx)
     idx = idx.view(np.int32)
-    idx += np.repeat(_cached_arange(R, np.int32) << bits, nr)
-    pres = _scratch("dictlb_pres", R << bits, np.uint8)
+    idx += np.repeat(_cached_arange(R, np.int32) << 10, nr)
+    pres = _scratch("dictlb_pres", R << 10, np.uint8)
     pres[:] = 0
     pres[idx] = 1
     klb = pres.reshape(R, -1).sum(axis=1, dtype=np.int64)
@@ -941,8 +945,9 @@ def encode_rows(flat: np.ndarray, offsets: np.ndarray, codec: str = "auto",
 def decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
                 codec_ids: np.ndarray):
     """Decode each row; returns (flat uint32[], offsets int64[R+1]).  An
-    svb-family stream whose length contradicts its count and control bytes
-    raises StreamError (a ValueError) naming its batch row."""
+    svb-family or rle stream whose length contradicts its count and
+    control bytes or header raises StreamError (a ValueError) naming its
+    batch row."""
     return _decode_by_codec(enc, enc_offsets, n_toks, codec_ids, None)
 
 
@@ -992,9 +997,10 @@ def _by_codec(codec_ids: np.ndarray, sizes, run, dtype):
     dst=None) and returns that kernel's output as it is — unless `sizes`
     (each row's output length, None when only the kernel knows it; never
     more than the kernel's row) asks for less in total, as a prefix decode
-    of a whole-row layout does, and the rows are cut to it.  A mixed batch knows every row's output offset from
-    `sizes` before any kernel runs, allocates the batch output once, and
-    runs each group's kernel with its rows and dst = (out, starts, sizes):
+    of a whole-row layout does, and the rows are cut to it.  A mixed batch
+    knows every row's output offset from `sizes` before any kernel runs,
+    allocates the batch output once, and runs each group's kernel with its
+    rows and dst = (out, starts, sizes):
     the svb family writes those rows straight into place, and the other
     layouts' outputs are copied in (_placed)."""
     groups = np.unique(codec_ids)
@@ -1025,14 +1031,20 @@ def _placed(kernel):
     (their segments and per-row arguments are gathered first) and dst =
     (out, starts, sizes) copies row i's first sizes[i] output elements to
     out[starts[i]:].  n_values and pre are not used: these layouts decode
-    whole rows, and dst's sizes cut a prefix."""
+    whole rows, and dst's sizes cut a prefix.  A StreamError from a row
+    subset names the row of the batch."""
     def run(values, offsets, *per_row, n_values=None, rows=None, dst=None,
             pre=None):
         if rows is not None:
             values, offsets = _take_segments(
                 values, offsets[rows], offsets[rows + 1] - offsets[rows])
             per_row = [a[rows] for a in per_row]
-        buf, boff = kernel(values, offsets, *per_row)
+        try:
+            buf, boff = kernel(values, offsets, *per_row)
+        except StreamError as e:  # name the batch row, not the subset's
+            if rows is None:
+                raise
+            raise StreamError(int(rows[e.row]), str(e)) from None
         if dst is None:
             return buf, boff
         out, starts, sizes = dst
@@ -1287,7 +1299,10 @@ def _rle_encode_rows(flat: np.ndarray, offsets: np.ndarray):
 
 
 def _rle_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray):
-    """Inverse of _rle_encode_rows, whole-batch."""
+    """Inverse of _rle_encode_rows, whole-batch.  A row whose stored bytes
+    contradict its header or n_tok (too short for its header or its run
+    streams, or runs that do not add up to n_tok) raises StreamError
+    naming its batch row."""
     n_toks = np.asarray(n_toks, dtype=np.int64)
     R = n_toks.size
     offsets = np.concatenate([[0], np.cumsum(n_toks)])
@@ -1296,18 +1311,36 @@ def _rle_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarra
     if live.size == 0:
         return flat, offsets
     starts = enc_offsets[:-1][live]
+    sizes = enc_offsets[1:][live] - starts
+
+    def fail(j, what):
+        r = int(live[j])
+        raise StreamError(r, f"rle stream of {sizes[j]} bytes with "
+                             f"n_tok={n_toks[r]}: {what}")
+
+    if (sizes < 8).any():
+        fail(int(np.argmax(sizes < 8)), "shorter than its 8-byte header")
     nruns = enc[(starts[:, None] + np.arange(4, dtype=np.int64))].copy().view("<u4").ravel().astype(np.int64)
     len_sv = enc[(starts[:, None] + 4 + np.arange(4, dtype=np.int64))].copy().view("<u4").ravel().astype(np.int64)
+    len_sl = sizes - 8 - len_sv
+    if (len_sl < 0).any():
+        j = int(np.argmax(len_sl < 0))
+        fail(j, f"its header declares {len_sv[j]} run-value bytes")
     run_offsets = np.concatenate([[0], np.cumsum(nruns)])
     # gather the two concatenated sub-streams
     sv_cat, sv_off = _take_segments(enc, starts + 8, len_sv)
-    len_sl = enc_offsets[1:][live] - starts - 8 - len_sv
     sl_cat, sl_off = _take_segments(enc, starts + 8 + len_sv, len_sl)
-    run_vals, _ = _svb_decode_rows(sv_cat, sv_off, nruns, False)
-    run_lens, _ = _svb_decode_rows(sl_cat, sl_off, nruns, False)
+    try:  # the sub-streams' rows are the live rows
+        run_vals, _ = _svb_decode_rows(sv_cat, sv_off, nruns, False)
+        run_lens, _ = _svb_decode_rows(sl_cat, sl_off, nruns, False)
+    except StreamError as e:
+        fail(e.row, f"its run stream: {e}")
+    exp_sizes = _seg_sum(run_lens, run_offsets)
+    if (exp_sizes != n_toks[live]).any():
+        j = int(np.argmax(exp_sizes != n_toks[live]))
+        fail(j, f"its runs hold {exp_sizes[j]} values")
     expanded = np.repeat(run_vals, run_lens.astype(np.int64))
     # expanded is concatenated in live-row order == flat's live region order
-    exp_sizes = _seg_sum(run_lens, run_offsets)
     _copy_segments(flat, offsets[live], expanded,
                    np.cumsum(exp_sizes) - exp_sizes, exp_sizes)
     return flat, offsets

@@ -251,9 +251,9 @@ def decode_table(enc_df: DataFrame, verify_checksum: bool = True,
     flat vector INSIDE this kernel, so the 4 B/token column never crosses
     back to the JVM and no interpreted ``aggregate()`` pass remains.
     A NULL stream, a NULL or unknown codec name (encoded_rows), an
-    svb-family stream whose length contradicts its n_tok and control bytes
-    (decode_rows_at) and, with verify_checksum, a checksum mismatch raise
-    ValueError naming the doc_id."""
+    svb-family or rle stream whose length contradicts its n_tok and control
+    bytes or header (decode_rows_at) and, with verify_checksum, a checksum
+    mismatch raise ValueError naming the doc_id."""
     return _decode(enc_df, batched.decode_rows, verify_checksum, fingerprint)
 
 

@@ -685,3 +685,54 @@ def test_svb_decode_raises_exactly_where_validate_rows_fails(codec):
         if i not in invalid and n_toks[i] == arrays[i].size:
             np.testing.assert_array_equal(vals[voff[j]:voff[j + 1]],
                                           arrays[i])
+
+
+def test_rle_stream_mismatch_names_its_batch_row():
+    """An rle row of an auto batch that is truncated (by a byte, or into
+    its 8-byte header) or whose runs do not add up to its n_tok raises
+    StreamError naming its row of the whole batch, not its row within the
+    rle group or among that group's nonempty rows; through decode_rows
+    and decode_prefix_rows."""
+    rng = np.random.default_rng(6)
+    arrays = [np.zeros(0, np.uint32)]
+    for i in range(40):
+        if i % 4 == 1:
+            k = int(rng.integers(1, 6))
+            arrays.append(np.repeat(rng.integers(0, 2**20, k),
+                                    rng.integers(8, 40, k)).astype(np.uint32))
+        elif i % 4 == 3:
+            arrays.append(np.zeros(0, np.uint32))
+        else:
+            arrays.append(gen_mixed(int(rng.integers(1, 200))))
+    n_toks = np.array([a.size for a in arrays], np.int64)
+    flat = np.concatenate(arrays)
+    off = np.concatenate([[0], np.cumsum(n_toks)]).astype(np.int64)
+    enc, eoff, cids = batched.encode_rows(flat, off, "auto")
+    rle = np.flatnonzero(cids == batched.CODEC_ID["rle"])
+    assert rle.size >= 5 and rle[0] > 1 and len(set(cids.tolist())) > 2
+    segs = [enc[eoff[i]:eoff[i + 1]] for i in range(len(arrays))]
+
+    def decoders(keep, counts):
+        b_off = np.concatenate([[0], np.cumsum([x.size for x in keep])])
+        b_enc = np.concatenate(keep)
+        yield lambda: batched.decode_rows(b_enc, b_off, counts, cids)
+        yield lambda: batched.decode_prefix_rows(b_enc, b_off, counts, cids,
+                                                 10**6)
+
+    for i in rle:
+        for cut in (segs[i][:-1], segs[i][:5]):
+            keep = segs[:i] + [cut] + segs[i + 1:]
+            for decode in decoders(keep, n_toks):
+                with pytest.raises(batched.StreamError) as err:
+                    decode()
+                assert err.value.row == i, (i, cut.size)
+        for m in (1, -1):
+            counts = n_toks.copy()
+            counts[i] += m
+            for decode in decoders(segs, counts):
+                with pytest.raises(batched.StreamError) as err:
+                    decode()
+                assert err.value.row == i and "rle stream" in str(err.value)
+    vals, voff = batched.decode_rows(enc, eoff, n_toks, cids)
+    for i, a in enumerate(arrays):
+        np.testing.assert_array_equal(vals[voff[i]:voff[i + 1]], a)

@@ -345,7 +345,8 @@ def test_decode_rejects_stream_length_mismatch(spark, tmp_path):
     naming the row's key — in decode_table and decode_table_prefix, on an
     auto-encoded table whose codec groups interleave, and in
     index.decode_wire.  It decoded silently wrong, or raised a bare
-    IndexError, before."""
+    IndexError, before.  So does an rle row of the auto table, whose run
+    streams are svb streams decoded as a batch of their own."""
     from streamvbyte_spark.operators import decode_table_prefix
     from streamvbyte_spark.operators.index import (build_index_tf_chunked,
                                                    decode_index_tf)
@@ -357,27 +358,32 @@ def test_decode_rejects_stream_length_mismatch(spark, tmp_path):
     tok = spark.createDataFrame(
         [("m", list(range(0, 3000, 7)), 429, "s"),
          ("n", [9] * 40 + list(range(300, 340)), 80, "s"),
+         ("q", [7] * 50 + [1000] * 30 + [3] * 45, 125, "s"),
          ("o", [0, 0, 5, 0] * 20, 80, "s"),
          ("p", [(i * 2654435761) % 2**31 >> (i % 32) for i in range(60)],
           60, "s")],
         "doc_id string, tokens array<int>, n_tok int, source string")
     for codec in ("svb", "svb_delta", "auto"):
         enc = encode_table(tok, codec=codec).coalesce(1)
-        if codec == "auto":  # p is an svb row between other codecs' rows
+        bad = ["p"]
+        if codec == "auto":  # svb row p and rle row q sit between others
             got = dict(enc.select("doc_id", "codec").collect())
-            assert got["p"] == "svb" and len(set(got.values())) > 2, got
-        cut = enc.withColumn("encoded", F.when(
-            F.col("doc_id") == "p",
-            F.expr("substring(encoded, 1, length(encoded) - 1)"))
-            .otherwise(F.col("encoded")))
-        over = enc.withColumn("n_tok", F.when(
-            F.col("doc_id") == "p", F.col("n_tok") + 5)
-            .otherwise(F.col("n_tok")))
-        for decode in (lambda d: decode_table(d, verify_checksum=False),
-                       lambda d: decode_table_prefix(d, 10**6)):
-            assert decode(enc).count() == 4
-            rejects(decode(cut), "decoding doc_id=p")
-            rejects(decode(over), "decoding doc_id=p")
+            assert got["p"] == "svb" and got["q"] == "rle" \
+                and len(set(got.values())) > 3, got
+            bad.append("q")
+        for doc in bad:
+            cut = enc.withColumn("encoded", F.when(
+                F.col("doc_id") == doc,
+                F.expr("substring(encoded, 1, length(encoded) - 1)"))
+                .otherwise(F.col("encoded")))
+            over = enc.withColumn("n_tok", F.when(
+                F.col("doc_id") == doc, F.col("n_tok") + 5)
+                .otherwise(F.col("n_tok")))
+            for decode in (lambda d: decode_table(d, verify_checksum=False),
+                           lambda d: decode_table_prefix(d, 10**6)):
+                assert decode(enc).count() == 5
+                rejects(decode(cut), f"decoding doc_id={doc}")
+                rejects(decode(over), f"decoding doc_id={doc}")
 
     docs = spark.createDataFrame(
         [(i, "a b c" if i % 2 else "b c d") for i in range(12)],
