@@ -346,12 +346,47 @@ def _svb_encode_rows(flat: np.ndarray, offsets: np.ndarray, scheme0124: bool,
 
 
 class StreamError(ValueError):
-    """A stored stream whose byte length contradicts its count and control
-    bytes: ``row`` is its row in the batch the kernel was given."""
+    """A stored stream whose byte length contradicts its count and its
+    control bytes or header: ``row`` is its row in the batch the kernel
+    was given."""
 
     def __init__(self, row: int, message: str):
         super().__init__(message)
         self.row = row
+
+
+def _row_streams(codec: str, enc_offsets: np.ndarray, n_toks, hdr: int):
+    """The prologue of a decoder whose rows start with an hdr-byte header
+    (bitpack, for, dict, ef, rle): returns (value offsets, then for the
+    rows with values: their start bytes, byte lengths, counts, and
+    check).  check(bad, what) raises StreamError naming the batch row of
+    the first of those rows that ``bad`` marks, what(j) saying how its
+    bytes contradict its header or count; the message is built only on a
+    mismatch.  A row with a negative count, with bytes but no values, or
+    shorter than its header raises here, before the decoder reads or
+    allocates anything by its header."""
+    n_toks = np.asarray(n_toks, dtype=np.int64)
+    sizes = enc_offsets[1:] - enc_offsets[:-1]
+
+    def checker(rows):
+        def check(bad, what):
+            if bad.any():
+                j = int(np.argmax(bad))
+                r = int(rows[j])
+                raise StreamError(r, f"{codec} stream of {sizes[r]} bytes "
+                                     f"with n_tok={n_toks[r]}: {what(j)}")
+        return check
+
+    checker(np.arange(n_toks.size))(
+        (n_toks < 0) | ((n_toks == 0) & (sizes > 0)),
+        lambda r: "a negative count" if n_toks[r] < 0 else "no values")
+    live = np.flatnonzero(n_toks > 0)
+    check = checker(live)
+    check(sizes[live] < hdr, lambda j: f"shorter than its {hdr}-byte header")
+    offsets = np.zeros(n_toks.size + 1, dtype=np.int64)
+    np.cumsum(n_toks, out=offsets[1:])
+    return (offsets, enc_offsets[:-1][live], sizes[live], n_toks[live],
+            check)
 
 
 def _svb_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
@@ -944,10 +979,10 @@ def encode_rows(flat: np.ndarray, offsets: np.ndarray, codec: str = "auto",
 
 def decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
                 codec_ids: np.ndarray):
-    """Decode each row; returns (flat uint32[], offsets int64[R+1]).  An
-    svb-family or rle stream whose length contradicts its count and
-    control bytes or header raises StreamError (a ValueError) naming its
-    batch row."""
+    """Decode each row; returns (flat uint32[], offsets int64[R+1]).  A
+    stream of any codec but fsst whose length contradicts its count and
+    its control bytes or header raises StreamError (a ValueError) naming
+    its batch row."""
     return _decode_by_codec(enc, enc_offsets, n_toks, codec_ids, None)
 
 
@@ -1303,269 +1338,123 @@ def _rle_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarra
     contradict its header or n_tok (too short for its header or its run
     streams, or runs that do not add up to n_tok) raises StreamError
     naming its batch row."""
-    n_toks = np.asarray(n_toks, dtype=np.int64)
-    R = n_toks.size
-    offsets = np.concatenate([[0], np.cumsum(n_toks)])
-    flat = np.zeros(int(offsets[-1]), dtype=np.uint32)
-    live = np.flatnonzero(n_toks > 0)
-    if live.size == 0:
-        return flat, offsets
-    starts = enc_offsets[:-1][live]
-    sizes = enc_offsets[1:][live] - starts
-
-    def fail(j, what):
-        r = int(live[j])
-        raise StreamError(r, f"rle stream of {sizes[j]} bytes with "
-                             f"n_tok={n_toks[r]}: {what}")
-
-    if (sizes < 8).any():
-        fail(int(np.argmax(sizes < 8)), "shorter than its 8-byte header")
+    offsets, starts, sizes, nr, check = _row_streams("rle", enc_offsets,
+                                                     n_toks, 8)
     nruns = enc[(starts[:, None] + np.arange(4, dtype=np.int64))].copy().view("<u4").ravel().astype(np.int64)
     len_sv = enc[(starts[:, None] + 4 + np.arange(4, dtype=np.int64))].copy().view("<u4").ravel().astype(np.int64)
     len_sl = sizes - 8 - len_sv
-    if (len_sl < 0).any():
-        j = int(np.argmax(len_sl < 0))
-        fail(j, f"its header declares {len_sv[j]} run-value bytes")
+    check(len_sl < 0,
+          lambda j: f"its header declares {len_sv[j]} run-value bytes")
     run_offsets = np.concatenate([[0], np.cumsum(nruns)])
     # gather the two concatenated sub-streams
     sv_cat, sv_off = _take_segments(enc, starts + 8, len_sv)
     sl_cat, sl_off = _take_segments(enc, starts + 8 + len_sv, len_sl)
-    try:  # the sub-streams' rows are the live rows
+    try:  # the sub-streams' rows are the rows with values
         run_vals, _ = _svb_decode_rows(sv_cat, sv_off, nruns, False)
         run_lens, _ = _svb_decode_rows(sl_cat, sl_off, nruns, False)
     except StreamError as e:
-        fail(e.row, f"its run stream: {e}")
+        check(np.arange(nr.size) == e.row, lambda j: f"its run stream: {e}")
     exp_sizes = _seg_sum(run_lens, run_offsets)
-    if (exp_sizes != n_toks[live]).any():
-        j = int(np.argmax(exp_sizes != n_toks[live]))
-        fail(j, f"its runs hold {exp_sizes[j]} values")
-    expanded = np.repeat(run_vals, run_lens.astype(np.int64))
-    # expanded is concatenated in live-row order == flat's live region order
-    _copy_segments(flat, offsets[live], expanded,
-                   np.cumsum(exp_sizes) - exp_sizes, exp_sizes)
-    return flat, offsets
+    check(exp_sizes != nr, lambda j: f"its runs hold {exp_sizes[j]} values")
+    return np.repeat(run_vals, run_lens.astype(np.int64)), offsets
 
 
 # ----------------------------------------- batched bit-pack / FOR / dictionary
 
 def _pack_bits_rows(codes: np.ndarray, offsets: np.ndarray, widths: np.ndarray):
-    """Per-row LSB-first bit packing with per-row widths; each row's section
-    starts byte-aligned. Returns (packed bytes, byte offsets per row).
+    """Per-row LSB-first bit packing at per-row widths (<= 32): a row's n
+    values of width w fill the first ceil(n*w/8) bytes of its section,
+    value j at bits [j*w, (j+1)*w), and each section starts on a byte.
+    Returns (packed bytes, byte offsets per row).
 
-    Byte-multiple widths (8/16/24/32 — what bitpack/FOR pick for realistic
-    value ranges) take a BYTE-lane scatter: <= 4 fancy-index stores over the
-    value count, like the svb data scatter.  The per-bit fallback builds
-    int64 index arrays PER BIT (~25 B of memory traffic per packed bit) —
-    fine for the narrow widths that reach it (w < 8 -> < 8 index elements
-    per value) but catastrophic for wide rows, where a 32-bit-wide batch
-    cost ~40x the svb encode of the same values (measured)."""
+    Every row is laid out in 8-value blocks: 8 values of width w fill
+    exactly w bytes, so block b of a row is bytes [b*w, +w) of its section,
+    and a row's last block is completed with zero values whose bits fall
+    past the section.  For a byte width (8/16/24/32) a block is its
+    values' low w/8 bytes, so those rows copy byte lanes, one copy per byte
+    width present (a batch of one byte width is one reshape copy).  Any
+    other width packs in 8 lane steps over the blocks: step i ORs value i
+    of every block, shifted left by (i*w) & 7, into the 8-byte window at
+    byte (i*w) >> 3 of its block (7 + 31 bits fit).  The values of one step
+    never share a byte and their windows ascend: a window writes back
+    unchanged the bytes past its value's bits, and any later window over
+    the same bytes writes after it (the fancy |= reads every window before
+    it writes any, and writes in index order).  The NumPy call count of a
+    batch does not depend on how many widths it holds."""
     nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
     widths = np.asarray(widths, dtype=np.int64)
-    cb = (nr * widths + 7) // 8
-    byte_off = np.concatenate([[0], np.cumsum(cb)])
+    byte_off = np.zeros(nr.size + 1, dtype=np.int64)
+    np.cumsum((nr * widths + 7) >> 3, out=byte_off[1:])
     total = int(byte_off[-1])
-    if total == 0:
-        return np.zeros(0, np.uint8), byte_off
-    aligned = (widths > 0) & (widths % 8 == 0) & (nr > 0)
-    live = nr > 0
-    out = np.zeros(total, dtype=np.uint8)
-    arows = np.flatnonzero(aligned)
-    if arows.size:
-        _pack_bytes_aligned(codes, offsets, widths, byte_off, nr, out, arows)
-    brows = np.flatnonzero(~aligned & live)
-    if brows.size:
-        sub_codes, sub_off = _take_segments(codes, offsets[brows], nr[brows])
-        sub_byte_off = np.concatenate([[0], np.cumsum(cb[brows])])
-        packed = _pack_bits_dense(sub_codes, sub_off, widths[brows],
-                                  sub_byte_off, nr[brows])
-        _copy_segments(out, byte_off[brows], packed, sub_byte_off[:-1],
-                       cb[brows])
-    return out, byte_off
+    # a lane window starts at most 27 bytes into a block that starts
+    # inside the buffer, and is 8 bytes long
+    out = np.zeros(total + 40, dtype=np.uint8)
+    for nb in (1, 2, 3, 4):
+        rows = np.flatnonzero(widths == 8 * nb)
+        if rows.size:
+            vals = codes[_segment_index(offsets[rows], nr[rows])]
+            out[_segment_index(byte_off[rows], nb * nr[rows])] = \
+                np.ascontiguousarray(vals, dtype="<u4").view(np.uint8) \
+                .reshape(-1, 4)[:, :nb].reshape(-1)
+    nb = np.where(widths % 8 != 0, (nr + 7) >> 3, 0)  # blocks per row
+    if nb.any():
+        boff = np.zeros(nr.size + 1, dtype=np.int64)
+        np.cumsum(nb, out=boff[1:])
+        bw = np.repeat(widths, nb)
+        bstart = np.repeat(byte_off[:-1] - boff[:-1] * widths, nb) \
+            + np.arange(bw.size) * bw
+        lanes = np.zeros((bw.size, 8), dtype=np.uint64)
+        _copy_segments(lanes.reshape(-1), 8 * boff[:-1], codes, offsets[:-1],
+                       np.where(nb > 0, nr, 0))
+        u64 = np.ndarray((total + 33,), np.uint64, buffer=out, strides=(1,))
+        for i in range(8):
+            bit = i * bw
+            u64[bstart + (bit >> 3)] |= lanes[:, i] << (bit & 7).astype(
+                np.uint64)
+    return out[:total], byte_off
 
 
-def _pack_bytes_aligned(codes, offsets, widths, byte_off, nr, out, rows):
-    """Rows whose width is a byte multiple: value j of a row occupies bytes
-    [j*nb, (j+1)*nb) of its section — one little-endian byte-lane scatter
-    per possible byte (<= 4).
-
-    Homogeneous fast path: when EVERY nonempty row is aligned at the SAME
-    width, sections are consecutive and dst == bpv * arange(V), so the
-    whole pack is ONE reshape copy (near-memcpy) — the dominant shape for
-    bitpack/FOR-winning corpora (a uniform 16-bit batch measured ~25x over
-    the masked lane scatters)."""
-    sub_nr = nr[rows]
-    sub_off = np.concatenate([[0], np.cumsum(sub_nr)])
-    m = int(sub_off[-1])
-    if m == 0:
-        return
-    w_rows = widths[rows]
-    if rows.size == int(np.count_nonzero(nr)) \
-            and bool((w_rows == w_rows[0]).all()) and m == int(offsets[-1]):
-        bpv0 = int(w_rows[0]) >> 3
-        vb = np.ascontiguousarray(codes, dtype="<u4").view(np.uint8)
-        out[:m * bpv0].reshape(m, bpv0)[:] = vb.reshape(m, 4)[:, :bpv0]
-        return
-    intra = np.arange(m, dtype=np.int64) - np.repeat(sub_off[:-1], sub_nr)
-    vidx = np.repeat(offsets[:-1][rows], sub_nr) + intra
-    vb = codes[vidx].astype("<u4").view(np.uint8).reshape(-1, 4)
-    bpv = np.repeat(widths[rows] >> 3, sub_nr)
-    dst = np.repeat(byte_off[:-1][rows], sub_nr) + intra * bpv
-    for k in range(4):
-        sel = bpv > k
-        if not sel.any():
-            break
-        out[dst[sel] + k] = vb[sel, k]
-
-
-def _pack_bits_dense(codes, offsets, widths, byte_off, nr):
-    """Byte-window dense packing (narrow / unaligned widths).
-
-    Each value's w bits become ONE shifted little-endian window of
-    nb = (shift + w + 7) >> 3 <= 5 bytes OR'd into the output at its byte
-    position — ~5 byte stores per VALUE, replacing the former per-bit
-    formulation that materialized int64 index arrays per packed BIT
-    (~25 B of memory traffic per bit; a 14-bit batch cost ~20x the svb
-    encode of the same values).  Correctness constraints:
-
-    * windows never cross a row's section boundary (a section holds
-      ceil(nr*w/8) bytes, and a value's window covers only its own bits'
-      bytes), so rows can be processed together;
-    * fancy ``out[idx] |= v`` drops duplicate indices, so values of the
-      same row are processed in stride groups: per width w, values
-      k = 1 + ceil(29/w) apart have byte windows provably disjoint
-      ((k*w - 7)/8 >= (w + 14)/8 + 1 >= nb_max), and values of DIFFERENT
-      rows never share a byte.  Groups are per distinct width so a lone
-      narrow row cannot force extra passes on the whole batch."""
-    total = int(byte_off[-1])
-    out = np.zeros(total, dtype=np.uint8)
-    V = int(nr.sum())
-    if V == 0:
-        return out
-    w_per_val = np.repeat(widths, nr)
-    intra = np.arange(V, dtype=np.int64) - np.repeat(offsets[:-1], nr)
-    bit0 = intra * w_per_val
-    p = np.repeat(byte_off[:-1], nr) + (bit0 >> 3)
-    s = (bit0 & 7)
-    val64 = codes.astype(np.uint64) << s.astype(np.uint64)
-    nb = (s + w_per_val + 7) >> 3
-    # per-value stride class from a 33-entry width->stride LUT: one vector
-    # modulo instead of a per-distinct-width group scan (np.unique over the
-    # VALUE array was ~15% of the whole encode)
-    lut = np.ones(33, dtype=np.int64)
-    wv = np.arange(1, 33)
-    lut[1:] = 1 + (29 + wv - 1) // wv
-    m_per_val = lut[w_per_val]
-    cls = intra % m_per_val
-    cls[w_per_val == 0] = -1  # width-0 rows pack no bits
-    for r in range(int(m_per_val.max())):
-        sel = np.flatnonzero(cls == r)
-        if not sel.size:
-            continue
-        pv, vv, nbv = p[sel], val64[sel], nb[sel]
-        for k in range(int(nbv.max())):
-            kk = nbv > k
-            out[pv[kk] + k] |= ((vv[kk] >> np.uint64(8 * k))
-                                & np.uint64(0xFF)).astype(np.uint8)
-    return out
-
-
-def _unpack_bits_rows(packed: np.ndarray, byte_off: np.ndarray, nr: np.ndarray,
+def _unpack_bits_rows(buf: np.ndarray, starts: np.ndarray, nr: np.ndarray,
                       widths: np.ndarray) -> np.ndarray:
-    """Inverse of _pack_bits_rows; returns per-value codes (concatenated).
-    Mirrors the aligned byte-lane / dense bit split."""
+    """Inverse of _pack_bits_rows over sections read where they lie: row
+    r's nr[r] values of width widths[r] (<= 32) from byte starts[r] of
+    buf.  Returns the values concatenated; a width-0 row decodes to zeros.
+
+    Byte widths copy their byte lanes back, one copy per byte width
+    present.  Reads never conflict, so every value of the other widths
+    comes from one gather: value j of a row is the 8-byte window at byte
+    (j*w) >> 3 of its section, shifted right by (j*w) & 7 and masked to w
+    bits.  A window reaches up to 7 bytes past its section; when that is
+    past the end of buf, the windows read a zero-padded copy of it."""
     nr = np.asarray(nr, dtype=np.int64)
     widths = np.asarray(widths, dtype=np.int64)
-    V = int(nr.sum())
-    if V == 0:
-        return np.zeros(0, np.uint32)
-    offsets = np.concatenate([[0], np.cumsum(nr)])
-    out = np.zeros(V, dtype=np.uint32)
-    aligned = (widths > 0) & (widths % 8 == 0) & (nr > 0)
-    arows = np.flatnonzero(aligned)
-    if arows.size:
-        sub_nr = nr[arows]
-        sub_off = np.concatenate([[0], np.cumsum(sub_nr)])
-        m = int(sub_off[-1])
-        w_rows = widths[arows]
-        if arows.size == int(np.count_nonzero(nr)) \
-                and bool((w_rows == w_rows[0]).all()) and m == V:
-            # homogeneous fast path (mirror of _pack_bytes_aligned): all
-            # sections consecutive at one width -> the unpack is one
-            # zero-extended reshape copy, no index arrays
-            bpv0 = int(w_rows[0]) >> 3
-            tmp = np.zeros((m, 4), np.uint8)
-            tmp[:, :bpv0] = packed[:m * bpv0].reshape(m, bpv0)
-            out[:] = tmp.view("<u4").ravel()
-        else:
-            intra = np.arange(m, dtype=np.int64) \
-                - np.repeat(sub_off[:-1], sub_nr)
-            src = np.repeat(byte_off[:-1][arows], sub_nr) + intra * np.repeat(
-                widths[arows] >> 3, sub_nr)
-            bpv = np.repeat(widths[arows] >> 3, sub_nr)
-            vals = np.zeros(m, dtype=np.uint32)
-            for k in range(4):
-                sel = bpv > k
-                if not sel.any():
-                    break
-                vals[sel] |= packed[src[sel] + k].astype(np.uint32) \
-                    << np.uint32(8 * k)
-            _copy_segments(out, offsets[arows], vals, sub_off[:-1], sub_nr)
-    brows = np.flatnonzero(~aligned & (nr > 0) & (widths > 0))
-    if brows.size:
-        sub_nr = nr[brows]
-        sub_cb = (sub_nr * widths[brows] + 7) // 8
-        sub_byte_off = np.concatenate([[0], np.cumsum(sub_cb)])
-        # 8 spare zero bytes allocated HERE so the dense unpack's 5-byte
-        # gather windows never read past the end — padding with a per-call
-        # np.concatenate would copy the whole sub-stream on every decode
-        # batch (O(stream) alloc+copy on the hot path)
-        sub_packed = np.empty(int(sub_byte_off[-1]) + 8, dtype=np.uint8)
-        sub_packed[-8:] = 0
-        _copy_segments(sub_packed, sub_byte_off[:-1], packed, byte_off[brows],
-                       sub_cb)
-        vals = _unpack_bits_dense(sub_packed, sub_byte_off, sub_nr, widths[brows])
-        _copy_segments(out, offsets[brows], vals, np.cumsum(sub_nr) - sub_nr,
-                       sub_nr)
-    # width-0 rows decode to zeros (already the fill value)
+    starts = np.asarray(starts, dtype=np.int64)
+    offsets = np.zeros(nr.size + 1, dtype=np.int64)
+    np.cumsum(nr, out=offsets[1:])
+    out = np.zeros(int(offsets[-1]), dtype=np.uint32)
+    for nb in (1, 2, 3, 4):
+        rows = np.flatnonzero(widths == 8 * nb)
+        if rows.size:
+            lanes = np.zeros((int(nr[rows].sum()), 4), dtype=np.uint8)
+            lanes[:, :nb] = buf[_segment_index(starts[rows], nb * nr[rows])] \
+                .reshape(-1, nb)
+            out[_segment_index(offsets[rows], nr[rows])] = \
+                lanes.view("<u4").reshape(-1)
+    rows = np.flatnonzero((widths % 8 != 0) & (nr > 0))
+    if rows.size:
+        n = nr[rows]
+        w = np.repeat(widths[rows], n)
+        bit = (np.arange(w.size) - np.repeat(np.cumsum(n) - n, n)) * w
+        pos = np.repeat(starts[rows], n) + (bit >> 3)
+        end = int(pos.max()) + 8
+        if buf.size < end:
+            buf = np.concatenate([buf, np.zeros(end - buf.size, np.uint8)])
+        u64 = np.ndarray((buf.size - 7,), np.uint64, buffer=buf,
+                         strides=(1,))
+        out[_segment_index(offsets[rows], n)] = \
+            (u64[pos] >> (bit & 7).astype(np.uint64)) \
+            & ((np.uint64(1) << w.astype(np.uint64)) - np.uint64(1))
     return out
-
-
-def _unpack_bits_dense(packed: np.ndarray, byte_off: np.ndarray, nr: np.ndarray,
-                       widths: np.ndarray) -> np.ndarray:
-    """Byte-window dense unpacking: each value's bits live in <= 5
-    consecutive bytes starting at its byte position, so the whole batch
-    decodes in ONE pass of 5 vectorized gathers (reads conflict-free, no
-    stride groups needed) — replacing the per-bit unpackbits+gather
-    formulation (~16 B of traffic per BIT).
-
-    CONTRACT: `packed` must carry >= 8 valid-to-read bytes past
-    byte_off[-1] (the caller allocates the gather buffer with a zeroed
-    8-byte tail) so the unconditional byte-lane gathers never read out of
-    bounds — padding per call here copied the whole stream each batch."""
-    V = int(nr.sum())
-    codes = np.zeros(V, dtype=np.uint64)
-    if V == 0:
-        return codes.astype(np.uint32)
-    if packed.size < int(byte_off[-1]) + 8:
-        raise ValueError("_unpack_bits_dense needs an 8-byte padded buffer "
-                         "(see _unpack_bits_rows)")
-    offsets = np.concatenate([[0], np.cumsum(nr)])
-    w_per_val = np.repeat(widths, nr)
-    intra = np.arange(V, dtype=np.int64) - np.repeat(offsets[:-1], nr)
-    bit0 = intra * w_per_val
-    p = np.repeat(byte_off[:-1], nr) + (bit0 >> 3)
-    s = (bit0 & 7)
-    nb = (s + w_per_val + 7) >> 3
-    src = packed
-    # gather UNCONDITIONALLY for every byte lane up to the batch max:
-    # a value whose window is narrower over-reads its neighbor's bytes,
-    # but those bits sit at positions >= nb*8 >= s+w and the final width
-    # mask drops them — no per-lane boolean compress needed
-    for k in range(int(nb.max()) if V else 0):
-        codes |= src[p + k].astype(np.uint64) << np.uint64(8 * k)
-    codes >>= s.astype(np.uint64)
-    mask = (np.uint64(1) << w_per_val.astype(np.uint64)) - np.uint64(1)
-    return (codes & mask).astype(np.uint32)
 
 
 def _bitpack_encode_rows(flat, offsets, frame_of_ref: bool):
@@ -1601,23 +1490,21 @@ def _bitpack_encode_rows(flat, offsets, frame_of_ref: bool):
 
 
 def _bitpack_decode_rows(enc, enc_offsets, n_toks, frame_of_ref: bool):
-    n_toks = np.asarray(n_toks, dtype=np.int64)
-    R = n_toks.size
-    offsets = np.concatenate([[0], np.cumsum(n_toks)])
-    flat = np.zeros(int(offsets[-1]), dtype=np.uint32)
-    live = np.flatnonzero(n_toks > 0)
-    if live.size == 0:
-        return flat, offsets
-    starts = enc_offsets[:-1][live]
-    widths = enc[starts].astype(np.int64)
+    """Inverse of _bitpack_encode_rows.  A row whose header declares a
+    width over 32, or that is not exactly its header plus ceil(n*w/8)
+    bytes long, raises StreamError naming its batch row."""
     hdr = 5 if frame_of_ref else 1
-    nr = n_toks[live]
-    packed, pb_off = _take_segments(enc, starts + hdr, (nr * widths + 7) // 8)
-    codes = _unpack_bits_rows(packed, pb_off, nr, widths)
+    offsets, starts, sizes, nr, check = _row_streams(
+        "for" if frame_of_ref else "bitpack", enc_offsets, n_toks, hdr)
+    widths = enc[starts].astype(np.int64)
+    check(widths > 32, lambda j: f"its header declares width {widths[j]}")
+    need = hdr + ((nr * widths + 7) >> 3)
+    check(sizes != need, lambda j: f"its {nr[j]} values of width "
+          f"{widths[j]} take {need[j]} bytes")
+    flat = _unpack_bits_rows(enc, starts + hdr, nr, widths)
     if frame_of_ref:
         base = enc[(starts[:, None] + 1 + np.arange(4, dtype=np.int64))].copy().view("<u4").ravel()
-        codes = codes + np.repeat(base, nr)
-    _copy_segments(flat, offsets[live], codes, np.cumsum(nr) - nr, nr)
+        flat += np.repeat(base, nr)
     return flat, offsets
 
 
@@ -1646,9 +1533,9 @@ def _ef_params_rows(flat, offsets):
 
 
 def ef_encode_rows(flat, offsets):
-    """Batched Elias-Fano: per-row layout 1B L + fixed-width low halves
-    (byte-window _pack_bits_rows) + unary upper bit vector (one global
-    scatter of n ones + packbits over the batch).
+    """Batched Elias-Fano: per-row layout 1B L + L-bit low halves
+    (_pack_bits_rows) + unary upper bit vector (one global scatter of n
+    ones + packbits over the batch).
 
     PUBLIC cross-module contract (with ef_decode_rows / subset_prefix):
     operators/chunking.py builds the chunked-EF wire format on these —
@@ -1686,31 +1573,32 @@ def ef_encode_rows(flat, offsets):
 
 
 def ef_decode_rows(enc, enc_offsets, n_toks):
-    n_toks = np.asarray(n_toks, dtype=np.int64)
-    R = n_toks.size
-    offsets = np.concatenate([[0], np.cumsum(n_toks)])
-    flat = np.zeros(int(offsets[-1]), dtype=np.uint32)
-    live = np.flatnonzero(n_toks > 0)
-    if live.size == 0:
-        return flat, offsets
-    starts = enc_offsets[:-1][live]
+    """Inverse of ef_encode_rows.  A row whose header declares L over 32,
+    that is shorter than its header and ceil(n*L/8) low bytes, or whose
+    upper section does not hold exactly n_tok ones raises StreamError
+    naming its batch row."""
+    offsets, starts, sizes, nr, check = _row_streams("ef", enc_offsets,
+                                                     n_toks, 1)
     L = enc[starts].astype(np.int64)
-    nr = n_toks[live]
-    lb = (nr * L + 7) // 8
-    low_b, low_off = _take_segments(enc, starts + 1, lb)
-    low = _unpack_bits_rows(low_b, low_off, nr, L).astype(np.uint64)
+    check(L > 32, lambda j: f"its header declares L={L[j]}")
+    lb = (nr * L + 7) >> 3
+    ub = sizes - 1 - lb
+    check(ub < 0, lambda j: f"its {nr[j]} low halves of {L[j]} bits take "
+          f"{lb[j]} bytes")
     # upper sections: gather, one global little-endian unpack, then split
     # the ascending ones positions by row (exactly nr ones per section)
-    ub = (enc_offsets[1:][live] - starts) - 1 - lb
     up_b, ub_off = _take_segments(enc, starts + 1 + lb, ub)
-    ones = np.flatnonzero(np.unpackbits(up_b, bitorder="little"))
+    bits = np.unpackbits(up_b, bitorder="little")
+    ones = _seg_sum(bits, 8 * ub_off)
+    check(ones != nr, lambda j: f"its upper section holds {ones[j]} ones")
+    low = _unpack_bits_rows(enc, starts + 1, nr, L).astype(np.uint64)
     sub_off = np.concatenate([[0], np.cumsum(nr)])
     m = int(sub_off[-1])
     intra = np.arange(m, dtype=np.int64) - np.repeat(sub_off[:-1], nr)
-    high = (ones - np.repeat(ub_off[:-1] * 8, nr) - intra).astype(np.uint64)
-    vals = ((high << np.repeat(L, nr).astype(np.uint64)) | low) \
+    high = (np.flatnonzero(bits) - np.repeat(ub_off[:-1] * 8, nr)
+            - intra).astype(np.uint64)
+    flat = ((high << np.repeat(L, nr).astype(np.uint64)) | low) \
         .astype(np.uint32)
-    _copy_segments(flat, offsets[live], vals, sub_off[:-1], nr)
     return flat, offsets
 
 
@@ -1750,25 +1638,25 @@ def _dict_encode_rows(flat, offsets):
 
 
 def _dict_decode_rows(enc, enc_offsets, n_toks):
-    n_toks = np.asarray(n_toks, dtype=np.int64)
-    R = n_toks.size
-    offsets = np.concatenate([[0], np.cumsum(n_toks)])
-    flat = np.zeros(int(offsets[-1]), dtype=np.uint32)
-    live = np.flatnonzero(n_toks > 0)
-    if live.size == 0:
-        return flat, offsets
-    starts = enc_offsets[:-1][live]
+    """Inverse of _dict_encode_rows.  A row whose header declares k
+    values outside 1..n_tok, that is not exactly 4 + 4k + ceil(n*w/8)
+    bytes long, or that holds a code >= k raises StreamError naming its
+    batch row."""
+    offsets, starts, sizes, nr, check = _row_streams("dict", enc_offsets,
+                                                     n_toks, 4)
     k = enc[(starts[:, None] + np.arange(4, dtype=np.int64))].copy().view("<u4").ravel().astype(np.int64)
+    check((k < 1) | (k > nr), lambda j: f"its header declares {k[j]} values")
+    widths = _exact_width(k - 1)
+    need = 4 + 4 * k + ((nr * widths + 7) >> 3)
+    check(sizes != need, lambda j: f"its {k[j]} values and {nr[j]} codes "
+          f"of width {widths[j]} take {need[j]} bytes")
+    codes = _unpack_bits_rows(enc, starts + 4 + 4 * k, nr, widths)
+    top = _seg_reduce(np.maximum, codes,
+                      np.concatenate([[0], np.cumsum(nr)]))
+    check(top >= k, lambda j: f"it holds code {top[j]} of {k[j]} values")
     uniq_bytes, _ = _take_segments(enc, starts + 4, 4 * k)
     uniq_vals = uniq_bytes.view("<u4")
-    widths = _exact_width(np.maximum(k - 1, 0))
-    nr = n_toks[live]
-    packed, pb_off = _take_segments(enc, starts + 4 + 4 * k,
-                                    (nr * widths + 7) // 8)
-    codes = _unpack_bits_rows(packed, pb_off, nr, widths)
-    vals = uniq_vals[np.repeat(np.cumsum(k) - k, nr) + codes]
-    _copy_segments(flat, offsets[live], vals, np.cumsum(nr) - nr, nr)
-    return flat, offsets
+    return uniq_vals[np.repeat(np.cumsum(k) - k, nr) + codes], offsets
 
 
 # --------------------------------------------------------- codec kernel table

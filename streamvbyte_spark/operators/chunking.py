@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..arrow_rows import binary_array, complete_runs, list_array, list_flat
 from ..codec import batched
 from ..session import fanout_width
-from .encode import encoded_rows
+from .encode import decode_rows_at, encoded_rows
 
 CHUNKED_ENC_SCHEMA = ("doc_id string, chunk_id int, tok_start long, "
                       "n_tok int, prev long, encoded binary, "
@@ -108,17 +108,19 @@ def _decode_chunks(batch: pa.RecordBatch, codec: str,
     max_len each chunk keeps its first min(n_tok, max_len - tok_start)
     tokens: svb_delta decodes only that prefix, ef (no O(prefix) partial
     decode — its chunk is bounded by chunk_size) decodes whole and
-    truncates.  A NULL stream raises ValueError naming the doc_id
-    (encode.encoded_rows)."""
+    truncates.  A NULL stream (encode.encoded_rows), and a stream whose
+    length contradicts its count (encode.decode_rows_at), raise
+    ValueError naming the doc_id."""
     enc, eoff, n_toks, _ = encoded_rows(batch, "doc_id", codec=codec)
     kk = None if max_len is None else np.minimum(
         n_toks, max_len - np.asarray(batch.column("tok_start")))
     if codec == "ef":
-        rows = batched.ef_decode_rows(enc, eoff, n_toks)
+        rows = decode_rows_at(batch, "doc_id", batched.ef_decode_rows, enc,
+                              eoff, n_toks)
         return rows if kk is None else batched.subset_prefix(*rows, kk)
     prev = np.asarray(batch.column("prev"), dtype=np.int64)
-    return batched.decode_delta_rows_prev(enc, eoff, n_toks, prev,
-                                          n_values=kk)
+    return decode_rows_at(batch, "doc_id", batched.decode_delta_rows_prev,
+                          enc, eoff, n_toks, prev, kk)
 
 
 def decode_chunked_delta(enc_df: DataFrame,

@@ -159,7 +159,7 @@ def _raise_at(batch: pa.RecordBatch, key: str, bad, what: str):
 
 def decode_rows_at(batch: pa.RecordBatch, key: str, decode, *rows):
     """decode(*rows) for the stored rows of ``batch``; a stream whose
-    length contradicts its count and control bytes
+    length contradicts its count and its control bytes or header
     (codec.batched.StreamError) raises ValueError naming its ``key``
     value."""
     try:
@@ -250,10 +250,10 @@ def decode_table(enc_df: DataFrame, verify_checksum: bool = True,
     polynomial fold (codec.batched.fingerprint_rows) runs on the decoded
     flat vector INSIDE this kernel, so the 4 B/token column never crosses
     back to the JVM and no interpreted ``aggregate()`` pass remains.
-    A NULL stream, a NULL or unknown codec name (encoded_rows), an
-    svb-family or rle stream whose length contradicts its n_tok and control
-    bytes or header (decode_rows_at) and, with verify_checksum, a checksum
-    mismatch raise ValueError naming the doc_id."""
+    A NULL stream, a NULL or unknown codec name (encoded_rows), a stream
+    whose length contradicts its n_tok and its control bytes or header
+    (decode_rows_at) and, with verify_checksum, a checksum mismatch raise
+    ValueError naming the doc_id."""
     return _decode(enc_df, batched.decode_rows, verify_checksum, fingerprint)
 
 

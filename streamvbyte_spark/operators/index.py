@@ -131,7 +131,7 @@ def decode_wire(kind: str, src, streams=None, suffix: str = "",
     side's alias, see _ServingOp), or one chunk's (chunk_id, *raw state)
     tuple, the state in wire_columns order (the streaming merges).  Each
     stream is read through encode.encoded_rows and decoded through
-    encode.decode_rows_at, so a NULL stream or count, and an svb-family
+    encode.decode_rows_at, so a NULL stream or count, and an svb or ef
     stream whose length contradicts its count, raise ValueError naming the
     row's ``key`` value."""
     if isinstance(src, tuple):

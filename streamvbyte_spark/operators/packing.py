@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from ..arrow_rows import binary_array, complete_runs, list_array, list_flat
 from ..codec import batched
 from ..session import fanout_width
-from .encode import check_checksums, encoded_rows
+from .encode import check_checksums, decode_rows_at, encoded_rows
 from .staging import materialize
 
 # doc_id-range bucket width shared with the SQL pack queries
@@ -135,7 +135,8 @@ def _slice_segments(cum: DataFrame, cap: int, codec: str,
                 continue
             enc, eoff, n_toks, cids = encoded_rows(batch, "st")
             st = np.asarray(batch.column("st"), dtype=np.int64)
-            flat, offs = batched.decode_rows(enc, eoff, n_toks, cids)
+            flat, offs = decode_rows_at(batch, "st", batched.decode_rows,
+                                        enc, eoff, n_toks, cids)
             en = st + n_toks - 1
             p0, p1 = st // cap, en // cap
             nsp = p1 - p0 + 1
@@ -276,7 +277,8 @@ def pack_encoded_rows(enc: DataFrame, cap: int = PACK_CAP,
             pid = np.asarray(batch.column("pack_id"), dtype=np.int64)
             enc, eoff, nseg, cids = encoded_rows(batch, "pack_id",
                                                  count="n_seg")
-            flat, offs = batched.decode_rows(enc, eoff, nseg, cids)
+            flat, offs = decode_rows_at(batch, "pack_id", batched.decode_rows,
+                                        enc, eoff, nseg, cids)
             brk = (src[1:] != src[:-1]) | (pid[1:] != pid[:-1])
             starts = np.concatenate(([0], np.flatnonzero(brk) + 1))
             run_off = offs[np.concatenate((starts, [nseg.size]))]
@@ -323,15 +325,16 @@ def decode_packs(packs: DataFrame, verify_checksum: bool = True,
     (dispatching on its codec id), verify the exact token-sum checksum,
     and emit (source, pack_id, n_tok, fingerprint) — or the token arrays
     themselves with fingerprint=False (the dataloader shape).  A NULL
-    stream, a NULL or unknown codec id (encode.encoded_rows) and a
+    stream, a NULL or unknown codec id (encode.encoded_rows), a stream
+    whose length contradicts its count (encode.decode_rows_at) and a
     checksum mismatch raise ValueError naming the pack_id."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            flat, offs = batched.decode_rows(
-                *encoded_rows(batch, "pack_id"))
+            flat, offs = decode_rows_at(batch, "pack_id", batched.decode_rows,
+                                        *encoded_rows(batch, "pack_id"))
             if verify_checksum:
                 check_checksums(batch, "pack_id", flat, offs)
             head = [batch.column(c) for c in ("source", "pack_id", "n_tok")]

@@ -572,11 +572,13 @@ def test_row_costs_prune_matches_exact_selection():
                     "rle tie -1", "rle tie 0", "rle tie 1"}, seen
 
 SVB_FAMILY = ("svb", "svb0124", "svb_delta")
+BIT_CODECS = ("bitpack", "for", "dict", "ef")
 
 
 def _encoded_family_rows(codec, seed):
     rng = np.random.default_rng(seed)
-    arrays = [gen_mixed(int(n)) for n in
+    gen = (lambda n: np.sort(gen_mixed(n))) if codec == "ef" else gen_mixed
+    arrays = [gen(int(n)) for n in
               list(EDGE_LENGTHS) + list(rng.integers(0, 300, 25))]
     flat = np.concatenate(arrays).astype(np.uint32)
     off = np.concatenate(
@@ -591,10 +593,11 @@ def _decoders(enc, eoff, n_toks, codec):
     yield lambda: batched.decode_prefix_rows(enc, eoff, n_toks, cids, 10**6)
 
 
-@pytest.mark.parametrize("codec", SVB_FAMILY)
+@pytest.mark.parametrize("codec", SVB_FAMILY + BIT_CODECS)
 def test_svb_truncated_tail_raises(codec):
     """Dropping a row's last byte always raises a ValueError naming that
-    row, through decode_rows and (over the whole row) decode_prefix_rows."""
+    row, through decode_rows and (over the whole row) decode_prefix_rows,
+    for the svb family and the bit layouts alike."""
     arrays, enc, eoff = _encoded_family_rows(codec, 1)
     n_toks = np.array([a.size for a in arrays], np.int64)
     for i in np.flatnonzero(n_toks):
@@ -606,34 +609,82 @@ def test_svb_truncated_tail_raises(codec):
             assert err.value.row == i and isinstance(err.value, ValueError)
 
 
-@pytest.mark.parametrize("codec", SVB_FAMILY)
+def _packed_bytes(codec, row, n):
+    """The bytes a bitpack, for or dict row packs n codes into, at the
+    code width its header declares."""
+    k = int(row[:4].view("<u4")[0]) if codec == "dict" else 0
+    w = (k - 1).bit_length() if codec == "dict" else int(row[0])
+    return (n * w + 7) // 8
+
+
+@pytest.mark.parametrize("codec", SVB_FAMILY + BIT_CODECS)
 def test_svb_overstated_count_raises(codec):
     """n_tok overstated by 1..999 always raises for the 1234 scheme (every
     extra value costs at least a data byte).  For svb0124 it raises unless
     the extra values fall in the last control byte's zero padding: a zero
     code is a 0-byte zero, so that stream is valid for both counts and
-    decodes to the row plus zeros."""
+    decodes to the row plus zeros.  bitpack, for and dict likewise raise
+    unless the longer count's codes fit the row's ceil(n*w/8) code bytes
+    (the extra codes are its zero padding bits, decoded as the scalar
+    oracle decodes them); ef always raises, its upper section holding
+    exactly n_tok ones."""
     arrays, enc, eoff = _encoded_family_rows(codec, 2)
     n_toks = np.array([a.size for a in arrays], np.int64)
     for i in range(n_toks.size):
+        row = enc[eoff[i]:eoff[i + 1]]
         for m in (1, 2, 3, 4, 5, 17, 999):
             over = n_toks.copy()
             over[i] += m
-            valid = batched.validate_rows(enc, eoff, over,
-                                          scheme0124=codec == "svb0124")
-            fits = codec == "svb0124" and n_toks[i] > 0 and \
-                (n_toks[i] + m + 3) // 4 == (n_toks[i] + 3) // 4
-            assert valid[i] == fits
+            if codec in SVB_FAMILY:
+                valid = batched.validate_rows(enc, eoff, over,
+                                              scheme0124=codec == "svb0124")
+                fits = codec == "svb0124" and n_toks[i] > 0 and \
+                    (n_toks[i] + m + 3) // 4 == (n_toks[i] + 3) // 4
+                assert valid[i] == fits
+                want = np.concatenate([arrays[i], np.zeros(m, np.uint32)])
+            else:
+                fits = codec != "ef" and n_toks[i] > 0 and \
+                    _packed_bytes(codec, row, n_toks[i] + m) == \
+                    _packed_bytes(codec, row, n_toks[i])
+                want = select.REGISTRY[codec].decode(row.tobytes(),
+                                                     n_toks[i] + m) \
+                    if fits else None
             for decode in _decoders(enc, eoff, over, codec):
                 if fits:
                     vals, voff = decode()
-                    np.testing.assert_array_equal(
-                        vals[voff[i]:voff[i + 1]],
-                        np.concatenate([arrays[i], np.zeros(m, np.uint32)]))
+                    np.testing.assert_array_equal(vals[voff[i]:voff[i + 1]],
+                                                  want)
                     continue
                 with pytest.raises(batched.StreamError) as err:
                     decode()
                 assert err.value.row == i
+
+
+@pytest.mark.parametrize("codec, row, at, patch, match", [
+    ("bitpack", [0, 9, 4, 2], 0, [33], "declares width 33"),
+    ("for", [7, 9, 4, 20], 0, [40], "declares width 40"),
+    ("dict", [5, 6, 7, 5], 0, [0, 0, 0, 0], "declares 0 values"),
+    ("dict", [5, 6, 7, 5], 0, [5, 0, 0, 0], "declares 5 values"),
+    # k = 3: codes 0, 1, 2, 0 at 2 bits; the last becomes 3
+    ("dict", [5, 6, 7, 5], -1, [0b11100100], "holds code 3 of 3"),
+    # 2, 3, 5, 7, 11: upper bytes 0x56 0x02; bit 0 adds a sixth one
+    ("ef", [2, 3, 5, 7, 11], 2, [0x57], "holds 6 ones"),
+])
+def test_bit_layout_header_contradiction_raises(codec, row, at, patch,
+                                                match):
+    """A bitpack, for, dict or ef row whose header or payload contradicts
+    its bytes or count raises StreamError naming its batch row: a width
+    over 32, a dictionary of 0 or more than n_tok values, a code past the
+    dictionary, an upper section without exactly n_tok ones."""
+    rows = [np.array([1, 2, 3]), np.array(row), np.array([4, 8])]
+    flat = np.concatenate(rows).astype(np.uint32)
+    off = np.concatenate([[0], np.cumsum([r.size for r in rows])])
+    enc, eoff, cids = batched.encode_rows(flat, off, codec)
+    at += eoff[1] if at >= 0 else eoff[2]
+    enc[at:at + len(patch)] = patch
+    with pytest.raises(batched.StreamError, match=match) as err:
+        batched.decode_rows(enc, eoff, np.diff(off), cids)
+    assert err.value.row == 1
 
 
 @pytest.mark.parametrize("codec", SVB_FAMILY)

@@ -346,10 +346,15 @@ def test_decode_rejects_stream_length_mismatch(spark, tmp_path):
     auto-encoded table whose codec groups interleave, and in
     index.decode_wire.  It decoded silently wrong, or raised a bare
     IndexError, before.  So does an rle row of the auto table, whose run
-    streams are svb streams decoded as a batch of their own."""
+    streams are svb streams decoded as a batch of their own, an svb_delta
+    or ef chunk in decode_chunked_delta (naming its doc_id; a bare
+    StreamError before) and a stored pack in decode_packs (its
+    pack_id)."""
     from streamvbyte_spark.operators import decode_table_prefix
     from streamvbyte_spark.operators.index import (build_index_tf_chunked,
                                                    decode_index_tf)
+    from streamvbyte_spark.operators.packing import (decode_packs,
+                                                     pack_tokens_encoded)
 
     def rejects(df, match):
         with pytest.raises(Exception, match="ValueError: .*" + match):
@@ -396,6 +401,38 @@ def test_decode_rejects_stream_length_mismatch(spark, tmp_path):
         F.expr("substring(enc_tfs, 1, length(enc_tfs) - 1)"))
         .otherwise(F.col("enc_tfs")))
     rejects(decode_index_tf(bad), "decoding doc_id=c")
+
+    def corrupted(df, hit):
+        """df with the hit row's stream cut by a byte, then with its count
+        overstated by 5."""
+        yield df.withColumn("encoded", F.when(
+            hit, F.expr("substring(encoded, 1, length(encoded) - 1)"))
+            .otherwise(F.col("encoded")))
+        yield df.withColumn("n_tok", F.when(hit, F.col("n_tok") + 5)
+                            .otherwise(F.col("n_tok")))
+
+    long_tok = spark.createDataFrame(
+        [(d, list(range(10 * i, 10 * i + 40)), 40, "s")
+         for i, d in enumerate("pqr")],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    for codec in ("svb_delta", "ef"):
+        chunks = encode_chunked_delta(chunk_tokens(long_tok, chunk_size=8),
+                                      codec=codec).coalesce(1)
+        assert decode_chunked_delta(chunks, codec=codec).count() == 15
+        for bad in corrupted(chunks, (F.col("doc_id") == "q")
+                             & (F.col("chunk_id") == 2)):
+            rejects(decode_chunked_delta(bad, codec=codec),
+                    "decoding doc_id=q")
+
+    num = spark.createDataFrame(
+        [(str(i), list(range(i, i + 5)), 5, "s") for i in range(6)],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    pack_dir = str(tmp_path / "packs")
+    pack_tokens_encoded(num, cap=4, emit="encoded").write.parquet(pack_dir)
+    packs = spark.read.parquet(pack_dir).coalesce(1)
+    assert decode_packs(packs).count() == 8
+    for bad in corrupted(packs, F.col("pack_id") == 3):
+        rejects(decode_packs(bad), "decoding pack_id=3")
 
 
 def test_full_curation_pipeline(spark):

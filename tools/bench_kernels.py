@@ -3,11 +3,14 @@
 Builds the ``bulk_codec`` token table (``perfbench/inputs.generate_tokens``,
 40,000 rows, average length 512) and takes one 10,000-row batch in shuffled
 row order, the shape a round-robin repartitioned Spark task sees.  Times,
-best of ``--passes`` in one process: ``row_costs(prune=True)``,
-``encode_rows`` for ``auto`` and each stored codec, and ``decode_rows`` of
-the ``auto`` output (mixed codec groups).  It runs under the malloc
-settings ``get_spark`` gives the Python workers (freed memory stays in the
-heap), re-executing itself once to set them.
+best of ``--passes`` in one process: ``row_costs(prune=True)``, and
+``encode_rows`` and ``decode_rows`` (of that encode's output) for ``auto``
+(mixed codec groups) and every stored codec — ``ef`` on the batch's rows
+each sorted.  Then the serving shape: ``ef`` encode and decode of batches
+of 8 and 32 rows of at most 128 sorted doc ids (the EF did chunks an
+``index_serving`` request decodes), timed per call over 100 calls.  It
+runs under the malloc settings ``get_spark`` gives the Python workers
+(freed memory stays in the heap), re-executing itself once to set them.
 
 Usage: python tools/bench_kernels.py [--seed 2] [--passes 7]
 Prints one JSON line: milliseconds and tokens per second per kernel.
@@ -35,14 +38,23 @@ from streamvbyte_spark.session import _WORKER_MALLOC_ENV  # noqa: E402
 ROWS = 10_000
 
 
-def best_ms(fn, passes):
+def best_ms(fn, passes, calls=1):
     fn()  # warm the scratch pools
     best = float("inf")
     for _ in range(passes):
         t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
+        for _ in range(calls):
+            fn()
+        best = min(best, (time.perf_counter() - t0) / calls)
     return 1e3 * best
+
+
+def sorted_rows(flat, offsets):
+    """Each row's values sorted (one sort of the row-major composite key)."""
+    row = np.repeat(np.arange(offsets.size - 1, dtype=np.uint64),
+                    np.diff(offsets))
+    return (np.sort((row << np.uint64(32)) | flat) & np.uint64(0xFFFFFFFF)) \
+        .astype(np.uint32)
 
 
 def main():
@@ -60,19 +72,39 @@ def main():
     flat = np.ascontiguousarray(flat.view(np.uint32))
     n_tok = np.diff(offsets)
     n = int(offsets[-1])
-    ms = {"row_costs.prune": best_ms(lambda: batched.row_costs(
-        flat, offsets, batched.VECTOR_COST_CODECS, prune=True), args.passes)}
-    for codec in ("auto",) + batched.VECTOR_COST_CODECS:
-        ms[f"encode_rows.{codec}"] = best_ms(
-            lambda: batched.encode_rows(flat, offsets, codec), args.passes)
-    enc, eoff, cids = batched.encode_rows(flat, offsets, "auto")
-    ms["decode_rows.auto"] = best_ms(
-        lambda: batched.decode_rows(enc, eoff, n_tok, cids), args.passes)
+    timed, out_bytes = {}, {}  # kernel -> (ms, tokens); codec -> bytes
+
+    def bench(name, fn, tokens=n, calls=1):
+        timed[name] = (best_ms(fn, args.passes, calls), tokens)
+
+    bench("row_costs.prune", lambda: batched.row_costs(
+        flat, offsets, batched.VECTOR_COST_CODECS, prune=True))
+    for codec in ("auto",) + batched.CODEC_NAMES:
+        vals = sorted_rows(flat, offsets) if codec == "ef" else flat
+        enc = batched.encode_rows(vals, offsets, codec)
+        out_bytes[codec] = enc[0].size
+        bench(f"encode_rows.{codec}",
+              lambda: batched.encode_rows(vals, offsets, codec))
+        bench(f"decode_rows.{codec}",
+              lambda: batched.decode_rows(enc[0], enc[1], n_tok, enc[2]))
+    rng = np.random.default_rng(args.seed)
+    for r in (8, 32):
+        lens = rng.integers(1, 129, r)
+        dids = np.concatenate([np.sort(rng.choice(40000, k, replace=False))
+                               for k in lens]).astype(np.uint32)
+        doff = np.concatenate([[0], np.cumsum(lens)])
+        enc = batched.encode_rows(dids, doff, "ef")
+        bench(f"encode_rows.ef.serving{r}",
+              lambda: batched.encode_rows(dids, doff, "ef"), dids.size, 100)
+        bench(f"decode_rows.ef.serving{r}", lambda: batched.decode_rows(
+            enc[0], enc[1], lens, enc[2]), dids.size, 100)
+    ms = {k: v[0] for k, v in timed.items()}
     print(json.dumps({
         "seed": args.seed, "rows": ROWS, "tokens": n,
-        "bytes_per_token": round(enc.size / n, 4),
-        "ms": {k: round(v, 1) for k, v in ms.items()},
-        "mtok_per_s": {k: round(n / v / 1e3, 2) for k, v in ms.items()},
+        "bytes_per_token": round(out_bytes["auto"] / n, 4),
+        "ms": {k: round(v, 3) for k, v in ms.items()},
+        "mtok_per_s": {k: round(t / v / 1e3, 2)
+                       for k, (v, t) in timed.items()},
         "auto_vs_svb": round(ms["encode_rows.svb"] / ms["encode_rows.auto"],
                              3)}))
 
