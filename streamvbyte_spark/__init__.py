@@ -62,7 +62,7 @@ def _one_row_codec(name: str) -> Codec:
 
     def cost(values) -> int:
         v = _as_u32(values)
-        return int(batched.row_costs(v, np.array([0, v.size]), (name,))[0, 0])
+        return int(batched.size_rows(v, np.array([0, v.size]), name)[0])
 
     return Codec(name, encode, decode, cost)
 

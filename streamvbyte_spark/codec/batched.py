@@ -16,18 +16,17 @@ Format produced per row follows the reference spec (README.md:207-244); the
 tests check every kernel row by row against an independent scalar
 implementation kept under ``tests/scalar_oracle``.
 
-Cost model: per-row exact sizes for all 8 codecs computed with segmented
-reductions — including fsst, whose per-row symbol-table cost vectorizes as a
-composite-key sort + lexsort-ranked top-255 (_fsst_costs); the per-row argmin
-is the auto-selector.  The selector's pass (row_costs(prune=True)) carries
-proven lower bounds instead of exact costs in the dict and rle columns where
-a codec cannot win, so only the rows it might win pay its exact cost, and
-the selected cell stays exact.  The default ``auto`` candidate set stays
-the 7 original codecs (VECTOR_COST_CODECS) so the auto_size / auto_roundtrip
-formats are stable; passing VECTOR_COST_CODECS_FULL adds fsst to the argmin
-(the auto_full_* queries), and ``codec='auto_sorted'`` adds Elias-Fano on
-rows that are non-decreasing (row_sorted_mask gate; the auto_sorted_*
-queries).
+Cost model: per-row exact sizes for every codec computed with segmented
+reductions — fsst's symbol table as a composite-key sort + lexsort-ranked
+top-255 (_fsst_tables).  A codec name is a stored codec (CODEC_NAMES) or
+an auto mode (AUTO_MODES) naming a candidate set: ``auto`` the 7 original
+codecs, ``auto_full`` those plus fsst, ``auto_sorted`` those plus
+Elias-Fano on non-decreasing rows.  One function, _select, picks each
+row's codec for encode_rows and size_rows: the first minimum of the
+mode's pruned cost pass (row_costs(prune=True)), which carries proven
+lower bounds instead of exact costs in the dict and rle columns where a
+codec cannot win, so only the rows it might win pay its exact cost, and
+the selected cell stays exact.
 
 Dispatch: every codec in CODEC_NAMES has one whole-batch encode kernel and
 one whole-batch decode kernel, named in exactly one place, the _KERNELS
@@ -103,11 +102,24 @@ CODEC_NAMES = ("svb", "svb0124", "svb_delta", "bitpack", "for", "dict",
                "rle", "fsst", "ef")
 CODEC_ID = {n: i for i, n in enumerate(CODEC_NAMES)}
 VECTOR_COST_CODECS = ("svb", "svb0124", "svb_delta", "bitpack", "for", "dict", "rle")
-# full candidate set including fsst (cost via _fsst_costs, encode via
-# _fsst_encode_rows); the default "auto" keeps the 7-codec contract so the
-# driver-facing auto_size/auto_roundtrip formats stay stable, and fsst is
-# opt-in via this tuple (the auto_full_* queries)
-VECTOR_COST_CODECS_FULL = VECTOR_COST_CODECS + ("fsst",)
+# THE auto modes: each names its candidate set in priority order (a row
+# takes its first minimum, so a tie keeps the earlier codec).  An "ef"
+# candidate is offered only on non-decreasing rows (see _cost_pass); as the
+# last candidate it wins only where it is strictly smaller.
+AUTO_MODES = {
+    "auto": VECTOR_COST_CODECS,
+    "auto_full": VECTOR_COST_CODECS + ("fsst",),
+    "auto_sorted": VECTOR_COST_CODECS + ("ef",),
+}
+
+
+def check_codec(codec: str) -> str:
+    """``codec`` when encode_rows and size_rows accept it — a stored codec
+    or an auto mode — else ValueError listing the names they do."""
+    if codec not in CODEC_ID and codec not in AUTO_MODES:
+        raise ValueError(f"unknown codec {codec!r}; expected one of "
+                         f"{', '.join(CODEC_NAMES + tuple(AUTO_MODES))}")
+    return codec
 
 
 _SCRATCH: dict[str, np.ndarray] = {}
@@ -357,7 +369,7 @@ class StreamError(ValueError):
 
 def _row_streams(codec: str, enc_offsets: np.ndarray, n_toks, hdr: int):
     """The prologue of a decoder whose rows start with an hdr-byte header
-    (bitpack, for, dict, ef, rle): returns (value offsets, then for the
+    (bitpack, for, dict, ef, fsst, rle): returns (value offsets, then for the
     rows with values: their start bytes, byte lengths, counts, and
     check).  check(bad, what) raises StreamError naming the batch row of
     the first of those rows that ``bad`` marks, what(j) saying how its
@@ -527,7 +539,9 @@ def row_costs(flat: np.ndarray, offsets: np.ndarray,
     minimum wins in both matrices.  So the selected cell is always exact
     (encode_rows sizes its output from it).  Cell-exact consumers
     (per-codec size queries, the parity tests) use the default
-    prune=False."""
+    prune=False.  An ef column raises ValueError on a row that is not
+    non-decreasing, which Elias-Fano cannot encode; under prune=True that
+    cell is int64 max instead, so the selector never picks ef there."""
     return _cost_pass(flat, offsets, candidates, prune)[0]
 
 
@@ -575,8 +589,13 @@ def _cost_pass(flat: np.ndarray, offsets: np.ndarray,
         elif name == "fsst":
             c = _fsst_costs(flat, offsets)
         elif name == "ef":
-            _ef_validate_rows(flat, offsets)
-            c = _ef_cost_rows(flat, offsets)
+            if not prune:
+                _ef_validate_rows(flat, offsets)
+            enr, u, L = _ef_params_rows(flat, offsets)
+            c = 1 + (enr * L + 7) // 8 + (enr + (u >> L) + 7) // 8
+            if prune:
+                c = np.where(row_sorted_mask(flat, offsets), c,
+                             np.iinfo(np.int64).max)
         else:
             raise ValueError(f"no vectorized cost for codec {name!r}")
         col = np.where(nr > 0, c, 0)
@@ -633,18 +652,10 @@ def _dict_costs(flat: np.ndarray, offsets: np.ndarray, nr: np.ndarray,
     return c
 
 
-def _ef_cost_rows(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-    """Exact per-row Elias-Fano size, NO sortedness validation — callers
-    either validated already (row_costs' 'ef' branch) or mask unsorted rows
-    out themselves (the auto_sorted selector)."""
-    enr, u, L = _ef_params_rows(flat, offsets)
-    return 1 + (enr * L + 7) // 8 + (enr + (u >> L) + 7) // 8
-
-
 def row_sorted_mask(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     """Per-row non-decreasing mask (bool[R]) — one vectorized
     adjacent-compare excluding row seams; the eligibility gate that lets
-    the auto_sorted selector offer Elias-Fano only where it is defined."""
+    the selector offer Elias-Fano only where it is defined."""
     nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
     ok = np.ones(nr.size, dtype=bool)
     if flat.size >= 2:
@@ -652,19 +663,6 @@ def row_sorted_mask(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
         viol = (flat[1:] < flat[:-1]) & (row_ids[1:] == row_ids[:-1])
         ok[row_ids[1:][viol]] = False
     return ok
-
-
-def auto_sorted_sizes(flat: np.ndarray, offsets: np.ndarray,
-                      candidates: tuple[str, ...] = VECTOR_COST_CODECS
-                      ) -> np.ndarray:
-    """Per-row auto_sorted size: min over `candidates` plus Elias-Fano on
-    rows that are non-decreasing (DuckDB oracle: least() over the same
-    formulas with the EF term gated on tokens == list_sort(tokens))."""
-    best = row_costs(flat, offsets, candidates, prune=True).min(axis=1)
-    nr = offsets[1:] - offsets[:-1]
-    eligible = row_sorted_mask(flat, offsets) & (nr > 0)
-    return np.where(eligible,
-                    np.minimum(best, _ef_cost_rows(flat, offsets)), best)
 
 
 def _exact_width(mx: np.ndarray) -> np.ndarray:
@@ -709,115 +707,86 @@ def _row_distinct(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
 _FSST_MAX_SYMBOLS = 255
 
 
-def _fsst_costs(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-    """Vectorized per-row fsst cost, exactly len(fsst encode) per row.
-
-    Layout cost (see the FSST layout above): 1B table size k + 2k B symbol
-    table + ceil(m/8) B escape bitmap + 1 B per table hit + 2 B per escaped
-    pair — with the same stable (count desc, pair desc) lexsort rank that
-    _fsst_encode_rows uses to fill the table.
-
-    Whole-batch: one composite-key sort groups (row, pair); a lexsort ranks
-    each row's distinct pairs for the 255 cap; bincount reduces k and n_hit
-    per row."""
-    nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
-    R = nr.size
-    if flat.size == 0:
-        return np.zeros(R, dtype=np.int64)
-    # the two little-endian byte pairs of each uint32 (pair ORDER in the
-    # stream is irrelevant to the cost — only per-row counts matter)
-    pairs = np.empty(2 * flat.size, dtype=np.uint64)
-    pairs[0::2] = flat & np.uint32(0xFFFF)
-    pairs[1::2] = flat >> np.uint32(16)
-    row_ids = np.repeat(np.arange(R, dtype=np.uint64), 2 * nr)
-    key = (row_ids << np.uint64(16)) | pairs
-    key.sort()
-    new = np.ones(key.size, dtype=bool)
-    new[1:] = key[1:] != key[:-1]
-    grp_start = np.flatnonzero(new)
-    grp_cnt = np.diff(np.concatenate([grp_start, [key.size]]))
-    grp_row = (key[grp_start] >> np.uint64(16)).astype(np.int64)
-    grp_pair = (key[grp_start] & np.uint64(0xFFFF)).astype(np.int64)
-    # rank each row's distinct pairs by (count desc, pair desc) for the cap
-    order = np.lexsort((-grp_pair, -grp_cnt, grp_row))
-    srow, scnt = grp_row[order], grp_cnt[order]
-    row_first = np.concatenate([[0], np.flatnonzero(srow[1:] != srow[:-1]) + 1])
-    seg_len = np.diff(np.concatenate([row_first, [srow.size]]))
-    rank = np.arange(srow.size, dtype=np.int64) - np.repeat(row_first, seg_len)
-    take = (rank < _FSST_MAX_SYMBOLS) & (scnt >= 3)
-    k = np.bincount(srow[take], minlength=R)
-    # int64 accumulation end-to-end: bincount(weights=) sums in float64,
-    # exact only below 2^53 — an implicit ceiling on a function whose
-    # contract is exact byte costs
-    n_hit = np.zeros(R, dtype=np.int64)
-    np.add.at(n_hit, srow[take], scnt[take])
+def _fsst_sizes(nr: np.ndarray, k: np.ndarray, n_hit: np.ndarray) -> np.ndarray:
+    """Per-row fsst stream length (see the layout above) of nr values with
+    a k-symbol table and n_hit table hits; 0 for an empty row."""
     m = 2 * nr
-    cost = 1 + 2 * k + (m + 7) // 8 + n_hit + 2 * (m - n_hit)
-    return np.where(nr > 0, cost, 0)
+    return np.where(nr > 0, 1 + 2 * k + (m + 7) // 8 + n_hit
+                    + 2 * (m - n_hit), 0)
 
 
-def _fsst_encode_rows(flat: np.ndarray, offsets: np.ndarray):
-    """Whole-batch fsst encode (layout: 1B k | k*2B ascending symbol table |
-    ceil(m/8)B escape bitmap | 1B/hit | 2B/escaped pair, m = 2n byte pairs).
-
-    Reuses _fsst_costs' machinery — one composite-key sort groups (row,
-    pair); a stable lexsort ranks each row's distinct pairs by (count desc,
-    pair desc) for the 255-symbol cap — then scatters table bytes, bitmap
-    bits, hit codes and escape literals with segment copies — no per-row
-    Python."""
-    nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
+def _fsst_tables(flat: np.ndarray, nr: np.ndarray):
+    """Every row's fsst symbol table, the one ranking that both _fsst_costs
+    and _fsst_encode_rows read, so cost(v) == len(encode(v)) by
+    construction.  Returns (pairs, key, uniq, take, k, n_hit): the byte
+    pairs in stream order and their (row << 16 | pair) keys; the distinct
+    keys ascending, and which enter their row's table; per row the table
+    size and its hits.  `flat` must be non-empty."""
     R = nr.size
-    if flat.size == 0:
-        return np.zeros(0, np.uint8), np.zeros(R + 1, dtype=np.int64)
-    m = 2 * nr
-    pair_off = 2 * offsets
-    # byte pairs in STREAM order (value i -> little-endian pairs 2i, 2i+1):
-    # unlike _fsst_costs, encode needs positions, not just counts
     pairs = np.empty(2 * flat.size, dtype=np.uint32)
     pairs[0::2] = flat & np.uint32(0xFFFF)
     pairs[1::2] = flat >> np.uint32(16)
-    row_ids = np.repeat(np.arange(R, dtype=np.uint64), m)
-    key = (row_ids << np.uint64(16)) | pairs.astype(np.uint64)
-    # sort + searchsorted instead of np.unique(return_inverse=True): unique's
-    # inverse needs a full argsort; a plain sort plus one binary-search gather
-    # is ~2x cheaper at these sizes
+    key = np.repeat(np.arange(R, dtype=np.uint64), 2 * nr) << np.uint64(16)
+    key |= pairs
+    # a sort, and in the encoder a searchsorted: ~2x cheaper than
+    # np.unique(return_inverse=True), whose inverse needs a full argsort
     skey = np.sort(key)
     new = np.empty(skey.size, dtype=bool)
     new[0] = True
     np.not_equal(skey[1:], skey[:-1], out=new[1:])
     grp_start = np.flatnonzero(new)
     uniq = skey[grp_start]
-    cnt = np.diff(np.concatenate([grp_start, [skey.size]]))
-    inverse = np.searchsorted(uniq, key)
-    G = uniq.size
+    cnt = np.diff(np.append(grp_start, skey.size))
     grp_row = (uniq >> np.uint64(16)).astype(np.int64)
-    grp_pair = (uniq & np.uint64(0xFFFF)).astype(np.int64)
-    # per-row rank by (count desc, pair desc) — the deterministic tie order
-    # _fsst_costs uses (lexsort is stable)
-    order = np.lexsort((-grp_pair, -cnt, grp_row))
-    srow = grp_row[order]
-    row_first = np.concatenate([[0], np.flatnonzero(srow[1:] != srow[:-1]) + 1])
-    seg_len = np.diff(np.concatenate([row_first, [srow.size]]))
-    rank = np.arange(srow.size, dtype=np.int64) - np.repeat(row_first, seg_len)
-    take_ranked = (rank < _FSST_MAX_SYMBOLS) & (cnt[order] >= 3)
-    take = np.zeros(G, dtype=bool)
-    take[order] = take_ranked
-    k = np.bincount(grp_row[take], minlength=R).astype(np.int64)
+    grp_off = np.searchsorted(grp_row, np.arange(R + 1))  # row r's groups
+    # rank each row's pairs by (count desc, pair desc) for the cap; the
+    # stable lexsort keeps each row's span of uniq (grp_row is primary)
+    order = np.lexsort((-(uniq & np.uint64(0xFFFF)).astype(np.int64), -cnt,
+                        grp_row))
+    rank = np.arange(uniq.size) - np.repeat(grp_off[:-1], np.diff(grp_off))
+    take = np.zeros(uniq.size, dtype=bool)
+    take[order] = (rank < _FSST_MAX_SYMBOLS) & (cnt[order] >= 3)
+    k = _seg_sum(take, grp_off)
+    n_hit = _seg_sum(np.where(take, cnt, 0), grp_off)
+    return pairs, key, uniq, take, k, n_hit
+
+
+def _fsst_costs(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """Per-row fsst cost, exactly len(fsst encode) per row: the encoder's
+    own tables (_fsst_tables) priced by _fsst_sizes."""
+    nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
+    if flat.size == 0:
+        return np.zeros(nr.size, dtype=np.int64)
+    *_, k, n_hit = _fsst_tables(flat, nr)
+    return _fsst_sizes(nr, k, n_hit)
+
+
+def _fsst_encode_rows(flat: np.ndarray, offsets: np.ndarray):
+    """Whole-batch fsst encode (see the layout above): each row's table
+    from _fsst_tables, then table bytes, bitmap bits, hit codes and escape
+    literals scattered with segment copies — no per-row Python."""
+    nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
+    R = nr.size
+    if flat.size == 0:
+        return np.zeros(0, np.uint8), np.zeros(R + 1, dtype=np.int64)
+    pairs, key, uniq, take, k, n_hit = _fsst_tables(flat, nr)
+    m = 2 * nr
+    pair_off = 2 * offsets
     k_off = np.concatenate([[0], np.cumsum(k)])
     # code of a taken group = its ascending-pair rank within the row's taken
     # set; uniq is (row, pair)-ascending, so taken groups are already in
     # symbol-table order — one global cumsum gives the table index
-    code_by_group = np.cumsum(take, dtype=np.int64) - 1 - k_off[grp_row]
+    code_by_group = np.cumsum(take, dtype=np.int64) - 1 \
+        - k_off[(uniq >> np.uint64(16)).astype(np.int64)]
+    inverse = np.searchsorted(uniq, key)
     in_table = take[inverse]                 # per pair, original order
-    n_hit = _seg_sum(in_table, pair_off)
     bm_len = (m + 7) // 8
-    sizes = np.where(nr > 0, 1 + 2 * k + bm_len + n_hit + 2 * (m - n_hit), 0)
-    out_offsets = np.concatenate([[0], np.cumsum(sizes)])
+    out_offsets = np.concatenate([[0], np.cumsum(_fsst_sizes(nr, k, n_hit))])
     out = np.empty(int(out_offsets[-1]), dtype=np.uint8)
     live = nr > 0
     out[out_offsets[:-1][live]] = k[live].astype(np.uint8)
     # symbol tables (ascending u16 LE per row)
-    table_bytes = grp_pair[take].astype("<u2").view(np.uint8)
+    table_bytes = (uniq[take] & np.uint64(0xFFFF)).astype("<u2").view(np.uint8)
     _copy_segments(out, out_offsets[:-1] + 1, table_bytes, 2 * k_off[:-1],
                    2 * k)
     # escape bitmap: per-row byte-aligned LSB-first bits (1 = literal),
@@ -844,20 +813,20 @@ def _fsst_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray,
                       n_toks: np.ndarray):
     """Inverse of _fsst_encode_rows, whole-batch: per-pair bitmap-bit gather
     classifies hit vs literal; segmented exclusive scans index each pair
-    into its row's code / literal stream; table lookups are flat gathers."""
-    n_toks = np.asarray(n_toks, dtype=np.int64)
-    R = n_toks.size
-    offsets = np.concatenate([[0], np.cumsum(n_toks)])
-    flat = np.zeros(int(offsets[-1]), dtype=np.uint32)
-    live = np.flatnonzero(n_toks > 0)
-    if live.size == 0:
-        return flat, offsets
-    starts = enc_offsets[:-1][live]
+    into its row's code / literal stream; table lookups are flat gathers.
+    A row shorter than its header, table and bitmap, not exactly as long
+    as its table, bitmap, hits and literals, or holding a code past its
+    table raises StreamError naming its batch row."""
+    offsets, starts, sizes, nr, check = _row_streams("fsst", enc_offsets,
+                                                     n_toks, 1)
+    if not nr.size:
+        return np.zeros(0, dtype=np.uint32), offsets
     k = enc[starts].astype(np.int64)
-    nr = n_toks[live]
     m = 2 * nr
     bm_len = (m + 7) // 8
     bm_start = starts + 1 + 2 * k
+    check(sizes < 1 + 2 * k + bm_len, lambda j: f"its {k[j]} symbols and "
+          f"{m[j]}-bit bitmap take {1 + 2 * k[j] + bm_len[j]} bytes")
     pair_off = np.concatenate([[0], np.cumsum(m)])
     P = int(pair_off[-1])
     intra = np.arange(P, dtype=np.int64) - np.repeat(pair_off[:-1], m)
@@ -865,15 +834,20 @@ def _fsst_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray,
     is_lit = ((enc[bm_byte] >> (intra & 7).astype(np.uint8)) & 1).astype(bool)
     hits = ~is_lit
     n_hit = _seg_sum(hits, pair_off)
-    hit_base = np.concatenate([[0], np.cumsum(n_hit)])[:-1]
+    need = _fsst_sizes(nr, k, n_hit)
+    check(sizes != need, lambda j: f"its {k[j]} symbols and {n_hit[j]} hits "
+          f"of {m[j]} pairs take {need[j]} bytes")
+    hit_off = np.concatenate([[0], np.cumsum(n_hit)])
     lit_base = np.concatenate([[0], np.cumsum(m - n_hit)])[:-1]
     hit_rank = np.cumsum(hits) - 1    # global hit index (valid at hits)
     lit_rank = np.cumsum(is_lit) - 1
     codes_start = bm_start + bm_len
     lit_start = codes_start + n_hit
-    pairs16 = np.empty(P, dtype=np.uint32)
-    code_pos = (np.repeat(codes_start - hit_base, m) + hit_rank)[hits]
+    code_pos = (np.repeat(codes_start - hit_off[:-1], m) + hit_rank)[hits]
     code = enc[code_pos].astype(np.int64)
+    top = _seg_reduce(np.maximum, code, hit_off, empty_val=-1)
+    check(top >= k, lambda j: f"it holds code {top[j]} of {k[j]} symbols")
+    pairs16 = np.empty(P, dtype=np.uint32)
     tpos = np.repeat(starts + 1, m)[hits] + 2 * code
     pairs16[hits] = enc[tpos].astype(np.uint32) | (
         enc[tpos + 1].astype(np.uint32) << np.uint32(8))
@@ -881,10 +855,9 @@ def _fsst_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray,
     pairs16[is_lit] = enc[lit_pos].astype(np.uint32) | (
         enc[lit_pos + 1].astype(np.uint32) << np.uint32(8))
     # rows hold an even pair count (m = 2n), so the global low/high
-    # interleave reconstructs each value from its own row's pairs
-    vals = pairs16[0::2] | (pairs16[1::2] << np.uint32(16))
-    _copy_segments(flat, offsets[live], vals, np.cumsum(nr) - nr, nr)
-    return flat, offsets
+    # interleave reconstructs each value from its own row's pairs, and the
+    # rows with values, concatenated, are the whole batch's values
+    return pairs16[0::2] | (pairs16[1::2] << np.uint32(16)), offsets
 
 
 def _rle_costs(flat: np.ndarray, offsets: np.ndarray, lens1234: np.ndarray,
@@ -934,40 +907,38 @@ def _rle_costs(flat: np.ndarray, offsets: np.ndarray, lens1234: np.ndarray,
 
 # ------------------------------------------------------------ public facades
 
-def encode_rows(flat: np.ndarray, offsets: np.ndarray, codec: str = "auto",
-                candidates: tuple[str, ...] = VECTOR_COST_CODECS):
-    """Encode each row with `codec` (or per-row argmin when 'auto').
+def _select(flat: np.ndarray, offsets: np.ndarray, codec: str):
+    """THE codec selector of the auto mode ``codec``: (codec ids int32[R],
+    sizes int64[R], svb_inputs of _cost_pass).  Each row takes the first
+    minimum of the mode's pruned cost pass, whose selected cell is exact
+    (see row_costs); an empty row costs 0 everywhere and takes svb."""
+    names = AUTO_MODES[codec]
+    costs, svb_inputs = _cost_pass(flat, offsets, names, prune=True)
+    pick = np.argmin(costs, axis=1)
+    sizes = costs[np.arange(pick.size), pick]
+    codec_ids = np.array([CODEC_ID[c] for c in names], np.int32)[pick]
+    codec_ids[offsets[1:] == offsets[:-1]] = CODEC_ID["svb"]
+    return codec_ids, sizes, svb_inputs
+
+
+def encode_rows(flat: np.ndarray, offsets: np.ndarray, codec: str = "auto"):
+    """Encode each row with the stored codec ``codec``, or with the codec
+    the auto mode ``codec`` selects per row (_select).
 
     Returns (out_bytes: uint8[], out_offsets: int64[R+1], codec_ids: int32[R]).
 
-    'auto' sizes every row from its selected cost before any kernel runs
-    (the selected cell of the pruned matrix is exact, see row_costs, and
-    cost(v) == len(encode(v))), and the svb-family encoders reuse the
-    deltas and row data lengths the cost pass computed.
+    An auto mode sizes every row from its selected cost before any kernel
+    runs (cost(v) == len(encode(v))), and the svb-family encoders reuse
+    the deltas and row data lengths the cost pass computed.  An unknown
+    name raises ValueError listing the valid ones.
     """
     flat = np.ascontiguousarray(flat, dtype=np.uint32)
     offsets = np.asarray(offsets, dtype=np.int64)
-    R = offsets.size - 1
-    nr = offsets[1:] - offsets[:-1]
-    sizes, svb_inputs = None, {}
-    if codec in ("auto", "auto_sorted"):
-        costs, svb_inputs = _cost_pass(flat, offsets, candidates, prune=True)
-        pick = np.argmin(costs, axis=1)  # first minimum = candidate priority
-        names = np.array([CODEC_ID[c] for c in candidates], dtype=np.int32)
-        codec_ids = names[pick]
-        sizes = costs[np.arange(R), pick]
-        if codec == "auto_sorted":
-            # Elias-Fano joins the argmin only on rows where it is defined
-            # (non-decreasing) and STRICTLY smaller — a tie keeps the
-            # standard candidate priority, and the selected size equals the
-            # oracle's least() either way
-            ef = _ef_cost_rows(flat, offsets)
-            eligible = row_sorted_mask(flat, offsets) & (ef < sizes)
-            codec_ids[eligible] = CODEC_ID["ef"]
-            sizes = np.where(eligible, ef, sizes)
-        codec_ids[nr == 0] = CODEC_ID["svb"]
+    if check_codec(codec) in AUTO_MODES:
+        codec_ids, sizes, svb_inputs = _select(flat, offsets, codec)
     else:
-        codec_ids = np.full(R, CODEC_ID[codec], dtype=np.int32)
+        codec_ids = np.full(offsets.size - 1, CODEC_ID[codec], np.int32)
+        sizes, svb_inputs = None, {}
 
     def run(name, rows, dst):
         return _KERNELS[name][0](flat, offsets, rows=rows, dst=dst,
@@ -977,12 +948,24 @@ def encode_rows(flat: np.ndarray, offsets: np.ndarray, codec: str = "auto",
     return out, out_offsets, codec_ids
 
 
+def size_rows(flat: np.ndarray, offsets: np.ndarray,
+              codec: str = "auto") -> np.ndarray:
+    """Each row's exact encoded size (int64[R]) under ``codec`` — equal to
+    its length in encode_rows(flat, offsets, codec), without encoding: the
+    selected size for an auto mode, row_costs' one column for a stored
+    codec.  An unknown name raises ValueError listing the valid ones."""
+    flat = np.ascontiguousarray(flat, dtype=np.uint32)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    if check_codec(codec) in AUTO_MODES:
+        return _select(flat, offsets, codec)[1]
+    return row_costs(flat, offsets, (codec,))[:, 0]
+
+
 def decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarray,
                 codec_ids: np.ndarray):
     """Decode each row; returns (flat uint32[], offsets int64[R+1]).  A
-    stream of any codec but fsst whose length contradicts its count and
-    its control bytes or header raises StreamError (a ValueError) naming
-    its batch row."""
+    stream whose length contradicts its count and its control bytes or
+    header raises StreamError (a ValueError) naming its batch row."""
     return _decode_by_codec(enc, enc_offsets, n_toks, codec_ids, None)
 
 

@@ -41,6 +41,8 @@ def _encoded_flat(ser: pd.Series) -> tuple[np.ndarray, np.ndarray]:
 
 
 def make_encode_udf(codec: str = "svb"):
+    batched.check_codec(codec)
+
     @pandas_udf(BinaryType())
     def svb_encode(tokens: pd.Series) -> pd.Series:
         flat, offsets = list_flat(pa.array(tokens, _INT_LISTS))
@@ -89,17 +91,15 @@ def make_zigzag_decode_udf(delta: bool = False):
 def svb_size(tokens: pd.Series) -> pd.Series:
     """streamvbyte_compressedbytes as a column expression."""
     flat, offsets = list_flat(pa.array(tokens, _INT_LISTS))
-    costs = batched.row_costs(flat.astype(np.uint32), offsets, ("svb",))[:, 0]
-    return pd.Series(costs)
+    return pd.Series(batched.size_rows(flat.astype(np.uint32), offsets, "svb"))
 
 
 @pandas_udf(LongType())
 def auto_size(tokens: pd.Series) -> pd.Series:
-    """Cost-model minimum over every vectorized candidate."""
+    """The size of the codec the ``auto`` selector picks."""
     flat, offsets = list_flat(pa.array(tokens, _INT_LISTS))
-    costs = batched.row_costs(flat.astype(np.uint32), offsets,
-                              batched.VECTOR_COST_CODECS, prune=True)
-    return pd.Series(costs.min(axis=1))
+    return pd.Series(batched.size_rows(flat.astype(np.uint32), offsets,
+                                       "auto"))
 
 
 @pandas_udf(BooleanType())

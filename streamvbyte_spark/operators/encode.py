@@ -44,9 +44,12 @@ _CODEC_NAMES = pa.array(batched.CODEC_NAMES, pa.string())
 
 
 def encode_table(df: DataFrame, codec: str = "auto",
-                 candidates: tuple[str, ...] = batched.VECTOR_COST_CODECS,
                  flat_transform=None) -> DataFrame:
     """Encode tokens -> (codec, encoded, lineage).
+
+    codec: a stored codec, or an auto mode (batched.AUTO_MODES) that picks
+    each row's codec; an unknown name raises ValueError here, before any
+    task runs.
 
     For encoded blocks aligned with doc_id ranges (scan/prune-friendly at
     the Iceberg layer), repartitionByRange on doc_id before calling this.
@@ -59,14 +62,15 @@ def encode_table(df: DataFrame, codec: str = "auto",
     (checksum, zone maps) and the round trip describe the TRANSFORMED
     values.
     """
+    batched.check_codec(codec)
+
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             flat, offsets = list_flat(batch.column(batch.schema.get_field_index("tokens")))
             flat = flat.astype(np.int32, copy=False).view(np.uint32)
             if flat_transform is not None:
                 flat = flat_transform(flat)
-            out, ooff, cids = batched.encode_rows(flat, offsets, codec=codec,
-                                                  candidates=candidates)
+            out, ooff, cids = batched.encode_rows(flat, offsets, codec=codec)
             nr = offsets[1:] - offsets[:-1]
             csum = batched._seg_sum(flat, offsets)
             # zone map: per-row token min/max let a reader prune encoded
@@ -100,9 +104,7 @@ def encode_table(df: DataFrame, codec: str = "auto",
     return df.mapInArrow(run, ENCODED_SCHEMA)
 
 
-def size_table(df: DataFrame, codec: str = "auto",
-               candidates: tuple[str, ...] = batched.VECTOR_COST_CODECS,
-               flat_transform=None,
+def size_table(df: DataFrame, codec: str = "auto", flat_transform=None,
                carry: tuple[str, ...] = ()) -> DataFrame:
     """Exact per-row encoded size WITHOUT materializing the encoded bytes —
     the table form of the reference's size-without-encode API
@@ -112,12 +114,14 @@ def size_table(df: DataFrame, codec: str = "auto",
     every codec (tests/test_batched.py parity + the ``auto_size`` least()
     oracle), so this returns the same ``size_bytes`` an encode pass would,
     at a fraction of the work — no output allocation, no scatters, no
-    encoded column in the plan.  ``codec='auto'`` returns the selector's
-    min over ``candidates``.  flat_transform as in encode_table.
-    ``carry`` names extra input columns passed through
+    encoded column in the plan.  Per row it is ``batched.size_rows``:
+    under an auto mode (``auto``, ``auto_full``, ``auto_sorted``) the size
+    of the codec the selector picks.  codec and flat_transform as in
+    encode_table.  ``carry`` names extra input columns passed through
     unchanged — lets a composite query compute sizes in the SAME corpus
     scan that carries its other per-doc columns instead of scanning twice
     and joining (curation_pipeline uses this)."""
+    batched.check_codec(codec)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -126,16 +130,10 @@ def size_table(df: DataFrame, codec: str = "auto",
             flat = flat.astype(np.int32, copy=False).view(np.uint32)
             if flat_transform is not None:
                 flat = flat_transform(flat)
-            if codec == "auto_sorted":
-                sizes = batched.auto_sorted_sizes(flat, offsets, candidates)
-            else:
-                costs = batched.row_costs(
-                    flat, offsets, candidates if codec == "auto" else (codec,),
-                    prune=codec == "auto")
-                sizes = costs.min(axis=1) if codec == "auto" else costs[:, 0]
+            sizes = batched.size_rows(flat, offsets, codec)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(batch.schema.get_field_index("doc_id")),
-                 pa.array(sizes.astype(np.int64), pa.int64())]
+                 pa.array(sizes, pa.int64())]
                 + [batch.column(batch.schema.get_field_index(c))
                    for c in carry],
                 names=["doc_id", "size_bytes", *carry])

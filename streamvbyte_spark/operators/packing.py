@@ -84,9 +84,9 @@ def derived_string_order(df: DataFrame) -> tuple[Column, Column]:
 
 
 def _encode_docs(tok: DataFrame, codec: str,
-                 candidates: tuple[str, ...],
                  carry: tuple[str, ...] = ()) -> DataFrame:
-    """Map-only whole-batch encode (per-row argmin when codec='auto');
+    """Map-only whole-batch encode (the selector's pick per row under an
+    auto mode);
     output keeps only what the window needs plus the per-row codec id the
     downstream decode dispatches on.  `carry` names extra input columns
     passed through untouched (the curated path carries md5(text) so its
@@ -105,8 +105,7 @@ def _encode_docs(tok: DataFrame, codec: str,
                    for n in ("doc_id", "source", "tokens", "n_tok") + carry}
             flat, off = list_flat(batch.column(idx["tokens"]))
             flat = flat.astype(np.int32, copy=False).view(np.uint32)
-            out, ooff, cids = batched.encode_rows(flat, off, codec=codec,
-                                                  candidates=candidates)
+            out, ooff, cids = batched.encode_rows(flat, off, codec=codec)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(idx["doc_id"]), batch.column(idx["source"]),
                  batch.column(idx["n_tok"]), pa.array(cids, pa.int32()),
@@ -121,8 +120,7 @@ def _encode_docs(tok: DataFrame, codec: str,
     return tok.mapInArrow(run, schema)
 
 
-def _slice_segments(cum: DataFrame, cap: int, codec: str,
-                    candidates: tuple[str, ...]) -> DataFrame:
+def _slice_segments(cum: DataFrame, cap: int, codec: str) -> DataFrame:
     """Decode each doc (dispatching on its carried codec id), cut its pack
     segments (vectorized span math over the whole batch), re-encode every
     segment — map-only, no Python per row.  Segment offsets are cut points
@@ -155,8 +153,8 @@ def _slice_segments(cum: DataFrame, cap: int, codec: str,
             # yields valid row offsets for the whole batch
             g0 = offs[doc_of_seg] + (seg_st - st[doc_of_seg])
             seg_offsets = np.concatenate([g0, [offs[-1]]])
-            out, ooff, seg_cids = batched.encode_rows(
-                flat, seg_offsets, codec=codec, candidates=candidates)
+            out, ooff, seg_cids = batched.encode_rows(flat, seg_offsets,
+                                                      codec=codec)
             # Arrow-native gather: no per-segment Python str objects
             src = batch.column("source").take(pa.array(doc_of_seg))
             yield pa.RecordBatch.from_arrays(
@@ -175,8 +173,6 @@ def _slice_segments(cum: DataFrame, cap: int, codec: str,
 def pack_tokens_encoded(tok: DataFrame, cap: int = PACK_CAP,
                         order_bucket: tuple[Column, Column] | None = None,
                         codec: str = "auto",
-                        candidates: tuple[str, ...] =
-                        batched.VECTOR_COST_CODECS,
                         emit: str = "fingerprint") -> DataFrame:
     """tok (doc_id, tokens, n_tok, source) -> (source, pack_id, n_tok,
     fingerprint) with both token-bearing shuffles carrying ENCODED bytes.
@@ -195,32 +191,32 @@ def pack_tokens_encoded(tok: DataFrame, cap: int = PACK_CAP,
     byte-based coalescing collapses CPU-heavy-but-byte-small ENCODED
     stages to one task (verified at 600k tokens -> 1 partition).
 
-    codec/candidates: the wire format of both shuffle legs — default
-    'auto' (per-row cost-model argmin over VECTOR_COST_CODECS, the same
-    selector encode_table uses; the documents corpus measures 2.30 B/token
-    auto vs 2.76 svb-only — a further 17% off the wire), each row carrying
-    its codec id for the downstream decode dispatch."""
+    codec: the wire format of both shuffle legs, a stored codec or an
+    auto mode (batched.AUTO_MODES) — default 'auto', the 7-codec selector
+    encode_table uses (the documents corpus measures 2.30 B/token auto vs
+    2.76 svb-only — a further 17% off the wire), each row carrying its
+    codec id for the downstream decode dispatch.  An unknown name raises
+    ValueError here, before any task runs."""
+    batched.check_codec(codec)
     nz = tok.where(F.col("n_tok") > 0)
-    enc = _encode_docs(nz, codec, candidates)
+    enc = _encode_docs(nz, codec)
     return pack_encoded_rows(enc, cap=cap,
                              order_bucket=order_bucket or
                              default_numeric_order(tok),
-                             codec=codec,
-                             candidates=candidates, emit=emit)
+                             codec=codec, emit=emit)
 
 
 def pack_encoded_rows(enc: DataFrame, cap: int = PACK_CAP,
                       order_bucket: tuple[Column, Column] | None = None,
                       codec: str = "auto",
-                      candidates: tuple[str, ...] =
-                      batched.VECTOR_COST_CODECS,
                       emit: str = "fingerprint") -> DataFrame:
     """The pack machinery over ALREADY-ENCODED rows (doc_id, source, n_tok,
     codec, encoded) — `pack_tokens_encoded` minus the map-side encode.
     Entry point for pipelines that gate/filter encoded rows upstream (the
     curated composite runs its md5 dedup rank window + contamination
     anti-join over encoded rows, then packs the winners here — no raw-token
-    shuffle anywhere in the composite)."""
+    shuffle anywhere in the composite).  codec as in pack_tokens_encoded."""
+    batched.check_codec(codec)
     if emit not in ("fingerprint", "encoded"):
         # a typo'd mode would silently fall back to fingerprint output and
         # only fail much later (decode_packs missing codec/checksum cols)
@@ -267,7 +263,7 @@ def pack_encoded_rows(enc: DataFrame, cap: int = PACK_CAP,
            .withColumn("st", F.col("cum_local") + F.col("boff")
                        - F.col("n_tok").cast("long"))
            .select("source", "st", "n_tok", "codec", "encoded"))
-    segs = _slice_segments(cum, cap, codec, candidates)
+    segs = _slice_segments(cum, cap, codec)
     part = (segs.repartition(width, "source", "pack_id")
             .sortWithinPartitions("source", "pack_id", "seg_st"))
 
@@ -296,8 +292,8 @@ def pack_encoded_rows(enc: DataFrame, cap: int = PACK_CAP,
                 # (auto argmin again — pack streams are PACK_CAP tokens, a
                 # different cost regime than per-doc streams) + exact
                 # token-sum checksum for read-side verification
-                out, ooff, pack_cids = batched.encode_rows(
-                    flat, run_off, codec=codec, candidates=candidates)
+                out, ooff, pack_cids = batched.encode_rows(flat, run_off,
+                                                           codec=codec)
                 cksum = batched._seg_sum(flat, run_off)
                 yield pa.RecordBatch.from_arrays(
                     head + [pa.array(pack_cids, pa.int32()),

@@ -150,9 +150,10 @@ def duckdb_size_auto(t: str, n: str) -> str:
 def duckdb_size_auto_sorted(t: str, n: str) -> str:
     """auto_sorted selector oracle: least over the 7 standard formulas plus
     Elias-Fano GATED on per-row sortedness (EF is only defined on
-    non-decreasing rows) — the exact mirror of batched.auto_sorted_sizes'
-    eligibility mask.  Unsorted rows see int64-max for the EF term, so the
-    least() ignores it."""
+    non-decreasing rows) — the exact mirror of batched.size_rows'
+    auto_sorted mode, whose ef candidate competes only on sorted rows.
+    Unsorted rows see int64-max for the EF term, so the least() ignores
+    it."""
     gated_ef = (f"(case when {t} = list_sort({t}) then {duckdb_size_ef(t, n)} "
                 f"else 9223372036854775807 end)")
     return f"least({duckdb_size_auto(t, n)}, {gated_ef})"
@@ -177,7 +178,7 @@ def duckdb_size_fsst_nocap(t: str, n: str) -> str:
 
 
 def duckdb_size_auto_full(t: str, n: str) -> str:
-    """least over all 8 candidates including fsst (VECTOR_COST_CODECS_FULL)."""
+    """least over all 8 candidates including fsst (the auto_full mode)."""
     return (f"least({duckdb_size_auto(t, n)}, "
             f"{duckdb_size_fsst_nocap(t, n)})")
 
@@ -283,8 +284,7 @@ def _encoded(spark: SparkSession, sf_dir: str, codec: str,
     # (0.27s vs 0.35s encode at sf0.1 — Spark's codegen'd string ops beat
     # the kernel's ~25 gather-heavy passes; see text_udfs.tokenize_rows)
     base = _token_source(spark, sf_dir, source)
-    return encode_table(base, codec=codec,
-                        candidates=batched.VECTOR_COST_CODECS)
+    return encode_table(base, codec=codec)
 
 
 def _token_source(spark: SparkSession, sf_dir: str, source: str) -> DataFrame:
@@ -444,8 +444,7 @@ def curated_encoded_rows(spark, sf_dir, qname="curated_pack_encoded"):
         f"md5(text) as md5, {d.tokens()} as tokens, {n_tok} as n_tok "
         f"from documents where source != {msrc} "
         f"and {n_tok} >= {pipeline_sql.CURATE_MIN_TOK}")
-    enc = _encode_docs(pre, "auto", batched.VECTOR_COST_CODECS,
-                       carry=("md5",))
+    enc = _encode_docs(pre, "auto", carry=("md5",))
     w = W.partitionBy("md5").orderBy("doc_id")
     winners = (enc.withColumn("rn", F.row_number().over(w))
                .where(F.col("rn") == 1)
@@ -600,14 +599,12 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 + ((t // 97) % 32) * 33 + 1).astype(np.uint32)
 
     def auto_full_size(spark, sf_dir):
-        return size_table(tokens_from_documents(spark, sf_dir), codec="auto",
-                          candidates=batched.VECTOR_COST_CODECS_FULL,
-                          flat_transform=_fsst_mix_flat)
+        return size_table(tokens_from_documents(spark, sf_dir),
+                          codec="auto_full", flat_transform=_fsst_mix_flat)
 
     def auto_full_roundtrip(spark, sf_dir):
-        enc = encode_table(tokens_from_documents(spark, sf_dir), codec="auto",
-                           candidates=batched.VECTOR_COST_CODECS_FULL,
-                           flat_transform=_fsst_mix_flat)
+        enc = encode_table(tokens_from_documents(spark, sf_dir),
+                           codec="auto_full", flat_transform=_fsst_mix_flat)
         dec = decode_table(enc, fingerprint=True)
         return dec.select("doc_id", "n_tok", "source", "fingerprint")
 

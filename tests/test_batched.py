@@ -58,7 +58,7 @@ def test_auto_selection_matches_single_array_selector():
     out, ooff, cids = batched.encode_rows(flat, offsets, codec="auto")
     for i, a in enumerate(arrays):
         got_size = int(ooff[i + 1] - ooff[i])
-        _, want_size = select.choose(a, candidates=batched.VECTOR_COST_CODECS)
+        _, want_size = select.choose(a, candidates=batched.AUTO_MODES["auto"])
         assert got_size == want_size, f"row {i}: {got_size} != {want_size}"
         assert got_size <= core.compressed_size(a) or a.size == 0
         name = batched.CODEC_NAMES[cids[i]]
@@ -76,6 +76,29 @@ def test_row_costs_exact():
         for j, name in enumerate(batched.VECTOR_COST_CODECS):
             want = len(select.REGISTRY[name].encode(a))
             assert costs[i, j] == want, f"row {i} codec {name}: {costs[i, j]} != {want}"
+
+
+@pytest.mark.parametrize("codec",
+                         batched.CODEC_NAMES + tuple(batched.AUTO_MODES))
+def test_size_rows_equals_encode_lengths(codec):
+    """size_rows(m) is each row's length in encode_rows(m) for every codec
+    name and auto mode, empty rows included.  Half the rows are sorted, so
+    auto_sorted offers ef on them; ef itself, defined only on
+    non-decreasing rows, raises ValueError on that batch through both
+    functions and runs on the rows each sorted."""
+    rows = [gen_mixed(n) for n in EDGE_LENGTHS * 2]
+    _, flat, off = make_rows(range(len(rows)), lambda i: np.sort(rows[i])
+                             if i % 2 == 0 else rows[i])
+    if codec == "ef":
+        for fn in (batched.size_rows, batched.encode_rows):
+            with pytest.raises(ValueError, match="non-decreasing"):
+                fn(flat, off, codec)
+        _, flat, off = make_rows(range(len(rows)), lambda i: np.sort(rows[i]))
+    _, ooff, cids = batched.encode_rows(flat, off, codec)
+    np.testing.assert_array_equal(batched.size_rows(flat, off, codec),
+                                  np.diff(ooff))
+    if codec == "auto_sorted":
+        assert (cids == batched.CODEC_ID["ef"]).any()
 
 
 def test_fsst_cost_vectorized_exact():
@@ -142,13 +165,13 @@ def test_auto_full_includes_fsst():
 
     lengths = [0, 5, 40, 120, 300, 700, 64, 250]
     arrays, flat, offsets = make_rows(lengths, fsst_mix)
-    out, ooff, cids = batched.encode_rows(
-        flat, offsets, codec="auto", candidates=batched.VECTOR_COST_CODECS_FULL)
+    out, ooff, cids = batched.encode_rows(flat, offsets, codec="auto_full")
     picked = {batched.CODEC_NAMES[c] for c in cids}
     assert "fsst" in picked, picked  # the mapping must actually exercise fsst
     for i, a in enumerate(arrays):
         got_size = int(ooff[i + 1] - ooff[i])
-        _, want_size = select.choose(a, candidates=batched.VECTOR_COST_CODECS_FULL)
+        _, want_size = select.choose(
+            a, candidates=batched.AUTO_MODES["auto_full"])
         assert got_size == want_size, f"row {i}"
         assert got_size <= core.compressed_size(a) or a.size == 0
     n_toks = np.array([a.size for a in arrays], dtype=np.int64)
@@ -165,9 +188,7 @@ def test_prefix_decode_matches_slice(codec):
     decode-and-truncate — across k spanning 0, mid-row, quad boundaries,
     and beyond-row."""
     arrays, flat, offsets = make_rows(EDGE_LENGTHS, gen_mixed)
-    out, ooff, cids = batched.encode_rows(
-        flat, offsets, codec=codec,
-        candidates=batched.VECTOR_COST_CODECS_FULL)
+    out, ooff, cids = batched.encode_rows(flat, offsets, codec=codec)
     n_toks = np.array([a.size for a in arrays], dtype=np.int64)
     for k in (0, 1, 3, 4, 5, 32, 10 ** 6):
         vals, voff = batched.decode_prefix_rows(out, ooff, n_toks, cids, k)
@@ -179,8 +200,7 @@ def test_prefix_decode_matches_slice(codec):
 def test_prefix_decode_mixed_codec_batch():
     """auto-encoded batches dispatch prefix decode per codec group."""
     arrays, flat, offsets = make_rows(EDGE_LENGTHS * 3, gen_mixed)
-    out, ooff, cids = batched.encode_rows(
-        flat, offsets, codec="auto", candidates=batched.VECTOR_COST_CODECS_FULL)
+    out, ooff, cids = batched.encode_rows(flat, offsets, codec="auto_full")
     assert len({int(c) for c in cids}) > 1  # genuinely mixed
     n_toks = np.array([a.size for a in arrays], dtype=np.int64)
     vals, voff = batched.decode_prefix_rows(out, ooff, n_toks, cids, 17)
@@ -295,7 +315,7 @@ def test_bulk_mix_groups_write_in_place():
         assert len(groups) >= 4 and \
             max(np.bincount(cids)) < cids.size // 2  # no dominant group
         for i, a in enumerate(arrays):
-            name, _ = select.choose(a, batched.VECTOR_COST_CODECS)
+            name, _ = select.choose(a, batched.AUTO_MODES["auto"])
             assert batched.CODEC_NAMES[cids[i]] == name, i
             assert out[ooff[i]:ooff[i + 1]].tobytes() == \
                 select.REGISTRY[name].encode(a), i
@@ -412,7 +432,7 @@ def test_multiple_trailing_and_interior_empty_rows():
     vflat, voff = batched.decode_rows(out, ooff, n_toks, cids)
     for i, a in enumerate(arrays):
         np.testing.assert_array_equal(vflat[voff[i]:voff[i + 1]], a)
-        _, want_size = select.choose(a, candidates=batched.VECTOR_COST_CODECS)
+        _, want_size = select.choose(a, candidates=batched.AUTO_MODES["auto"])
         assert int(ooff[i + 1] - ooff[i]) == want_size
 
 
@@ -549,7 +569,7 @@ def test_row_costs_prune_matches_exact_selection():
     off = np.concatenate(
         [[0], np.cumsum([a.size for a in arrays])]).astype(np.int64)
     seen = set()
-    for cand in (batched.VECTOR_COST_CODECS, batched.VECTOR_COST_CODECS_FULL):
+    for cand in (batched.AUTO_MODES["auto"], batched.AUTO_MODES["auto_full"]):
         exact = batched.row_costs(flat, off, cand)
         pruned = batched.row_costs(flat, off, cand, prune=True)
         np.testing.assert_array_equal(exact.min(axis=1), pruned.min(axis=1))
@@ -593,11 +613,11 @@ def _decoders(enc, eoff, n_toks, codec):
     yield lambda: batched.decode_prefix_rows(enc, eoff, n_toks, cids, 10**6)
 
 
-@pytest.mark.parametrize("codec", SVB_FAMILY + BIT_CODECS)
+@pytest.mark.parametrize("codec", SVB_FAMILY + BIT_CODECS + ("fsst",))
 def test_svb_truncated_tail_raises(codec):
     """Dropping a row's last byte always raises a ValueError naming that
     row, through decode_rows and (over the whole row) decode_prefix_rows,
-    for the svb family and the bit layouts alike."""
+    for the svb family, the bit layouts and fsst alike."""
     arrays, enc, eoff = _encoded_family_rows(codec, 1)
     n_toks = np.array([a.size for a in arrays], np.int64)
     for i in np.flatnonzero(n_toks):
@@ -617,7 +637,7 @@ def _packed_bytes(codec, row, n):
     return (n * w + 7) // 8
 
 
-@pytest.mark.parametrize("codec", SVB_FAMILY + BIT_CODECS)
+@pytest.mark.parametrize("codec", SVB_FAMILY + BIT_CODECS + ("fsst",))
 def test_svb_overstated_count_raises(codec):
     """n_tok overstated by 1..999 always raises for the 1234 scheme (every
     extra value costs at least a data byte).  For svb0124 it raises unless
@@ -627,7 +647,8 @@ def test_svb_overstated_count_raises(codec):
     unless the longer count's codes fit the row's ceil(n*w/8) code bytes
     (the extra codes are its zero padding bits, decoded as the scalar
     oracle decodes them); ef always raises, its upper section holding
-    exactly n_tok ones."""
+    exactly n_tok ones, and so does fsst, every extra byte pair costing at
+    least one byte."""
     arrays, enc, eoff = _encoded_family_rows(codec, 2)
     n_toks = np.array([a.size for a in arrays], np.int64)
     for i in range(n_toks.size):
@@ -643,7 +664,8 @@ def test_svb_overstated_count_raises(codec):
                 assert valid[i] == fits
                 want = np.concatenate([arrays[i], np.zeros(m, np.uint32)])
             else:
-                fits = codec != "ef" and n_toks[i] > 0 and \
+                fits = codec in ("bitpack", "for", "dict") and \
+                    n_toks[i] > 0 and \
                     _packed_bytes(codec, row, n_toks[i] + m) == \
                     _packed_bytes(codec, row, n_toks[i])
                 want = select.REGISTRY[codec].decode(row.tobytes(),
@@ -669,13 +691,18 @@ def test_svb_overstated_count_raises(codec):
     ("dict", [5, 6, 7, 5], -1, [0b11100100], "holds code 3 of 3"),
     # 2, 3, 5, 7, 11: upper bytes 0x56 0x02; bit 0 adds a sixth one
     ("ef", [2, 3, 5, 7, 11], 2, [0x57], "holds 6 ones"),
+    # pairs 5, 0 three times each: table [0, 5], codes 1, 0, 1, 0, 1, 0;
+    # the last becomes 2, and the header's k no longer fits the row
+    ("fsst", [5, 5, 5], -1, [2], "holds code 2 of 2 symbols"),
+    ("fsst", [5, 5, 5], 0, [255], "255 symbols and 6-bit bitmap take 512"),
 ])
 def test_bit_layout_header_contradiction_raises(codec, row, at, patch,
                                                 match):
-    """A bitpack, for, dict or ef row whose header or payload contradicts
-    its bytes or count raises StreamError naming its batch row: a width
-    over 32, a dictionary of 0 or more than n_tok values, a code past the
-    dictionary, an upper section without exactly n_tok ones."""
+    """A bitpack, for, dict, ef or fsst row whose header or payload
+    contradicts its bytes or count raises StreamError naming its batch
+    row: a width over 32, a dictionary of 0 or more than n_tok values, a
+    code past the dictionary or the symbol table, an upper section without
+    exactly n_tok ones, a symbol table past the row."""
     rows = [np.array([1, 2, 3]), np.array(row), np.array([4, 8])]
     flat = np.concatenate(rows).astype(np.uint32)
     off = np.concatenate([[0], np.cumsum([r.size for r in rows])])

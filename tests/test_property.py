@@ -117,8 +117,7 @@ def test_truncation_never_validates(rows):
 @given(row_batches, st.integers(0, 50))
 def test_prefix_decode_equals_slice(rows, k):
     flat, offsets = _flatten(rows)
-    out, ooff, cids = batched.encode_rows(
-        flat, offsets, codec="auto", candidates=batched.VECTOR_COST_CODECS_FULL)
+    out, ooff, cids = batched.encode_rows(flat, offsets, codec="auto_full")
     n_toks = offsets[1:] - offsets[:-1]
     vals, voff = batched.decode_prefix_rows(out, ooff, n_toks, cids, k)
     for i, r in enumerate(rows):
@@ -226,8 +225,7 @@ def test_row_costs_prune_property(rows, full):
         if rows else np.zeros(0, np.uint32)
     off = np.concatenate(
         [[0], np.cumsum([len(r) for r in rows])]).astype(np.int64)
-    cand = batched.VECTOR_COST_CODECS_FULL if full \
-        else batched.VECTOR_COST_CODECS
+    cand = batched.AUTO_MODES["auto_full" if full else "auto"]
     exact = batched.row_costs(flat, off, cand)
     pruned = batched.row_costs(flat, off, cand, prune=True)
     np.testing.assert_array_equal(exact.min(axis=1), pruned.min(axis=1))

@@ -628,9 +628,9 @@ def test_chunked_ef_roundtrip_and_truncate(spark):
 
 
 def test_auto_sorted_selector_kernel():
-    """auto_sorted: cost==len(encode) per row, exact round-trip with mixed
-    ef/standard codec ids, EF never assigned to an unsorted row, and the
-    selected size always <= the plain auto size (EF only ever improves)."""
+    """auto_sorted: exact round-trip with mixed ef/standard codec ids, EF
+    never assigned to an unsorted row, and the selected size always <= the
+    plain auto size (EF only ever improves)."""
     from streamvbyte_spark.codec import batched
     rng = np.random.default_rng(31)
     rows = []
@@ -646,11 +646,7 @@ def test_auto_sorted_selector_kernel():
     out, ooff, cids = batched.encode_rows(flat, offs, codec="auto_sorted")
     dec, _ = batched.decode_rows(out, ooff, offs[1:] - offs[:-1], cids)
     assert np.array_equal(dec, flat)
-    sizes = batched.auto_sorted_sizes(flat, offs)
-    assert np.array_equal(sizes, ooff[1:] - ooff[:-1])
-    auto = batched.row_costs(flat, offs,
-                             batched.VECTOR_COST_CODECS).min(axis=1)
-    assert (sizes <= auto).all()
+    assert (np.diff(ooff) <= batched.size_rows(flat, offs, "auto")).all()
     is_ef = cids == batched.CODEC_ID["ef"]
     assert is_ef.any()
     assert not (is_ef & ~batched.row_sorted_mask(flat, offs)).any()
@@ -1026,11 +1022,35 @@ def test_size_table_matches_encode_out_bytes(spark):
         want = {r.doc_id: r.out_bytes for r in encode_table(
             tokens_from_documents(spark, SF), codec=codec).collect()}
         assert got == want, codec
-    got = {r.doc_id: r.size_bytes for r in size_table(
-        posting_lists(spark, SF), codec="svb_delta").collect()}
-    want = {r.doc_id: r.out_bytes for r in encode_table(
-        posting_lists(spark, SF), codec="svb_delta").collect()}
-    assert got == want
+    for codec in ("svb_delta", "auto_sorted"):
+        got = {r.doc_id: r.size_bytes for r in size_table(
+            posting_lists(spark, SF), codec=codec).collect()}
+        want = {r.doc_id: r.out_bytes for r in encode_table(
+            posting_lists(spark, SF), codec=codec).collect()}
+        assert got == want, codec
+
+
+def test_unknown_codec_name_raises_on_the_driver(tok):
+    """An unknown codec name raises ValueError listing the valid names from
+    the batched kernels and, when called — before any task runs, as no
+    action is taken here — from the encode UDF factory and every DataFrame
+    entry point taking one."""
+    from streamvbyte_spark.codec import batched
+    from streamvbyte_spark.functions.udfs import make_encode_udf
+    from streamvbyte_spark.operators import size_table
+    from streamvbyte_spark.operators.packing import (pack_encoded_rows,
+                                                     pack_tokens_encoded)
+    flat, off = np.arange(5, dtype=np.uint32), np.array([0, 5])
+    for call in (lambda: batched.encode_rows(flat, off, "bogus"),
+                 lambda: batched.size_rows(flat, off, "bogus"),
+                 lambda: make_encode_udf("bogus"),
+                 lambda: encode_table(tok, codec="bogus"),
+                 lambda: size_table(tok, codec="bogus"),
+                 lambda: pack_tokens_encoded(tok, codec="bogus"),
+                 lambda: pack_encoded_rows(encode_table(tok), codec="bogus")):
+        with pytest.raises(ValueError, match="unknown codec 'bogus'; "
+                           "expected one of svb, .*, auto_sorted$"):
+            call()
 
 
 def test_fused_text_paths_reject_null_text(spark):

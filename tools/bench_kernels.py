@@ -3,10 +3,12 @@
 Builds the ``bulk_codec`` token table (``perfbench/inputs.generate_tokens``,
 40,000 rows, average length 512) and takes one 10,000-row batch in shuffled
 row order, the shape a round-robin repartitioned Spark task sees.  Times,
-best of ``--passes`` in one process: ``row_costs(prune=True)``, and
-``encode_rows`` and ``decode_rows`` (of that encode's output) for ``auto``
-(mixed codec groups) and every stored codec — ``ef`` on the batch's rows
-each sorted.  Then the serving shape: ``ef`` encode and decode of batches
+best of ``--passes`` in one process: the auto size pass, both as
+``row_costs(prune=True)`` over the 7 ``auto`` candidates and as
+``size_rows(codec="auto")``, and ``encode_rows`` and ``decode_rows`` (of
+that encode's output) for each auto mode (mixed codec groups) and every
+stored codec — ``ef`` and ``auto_sorted`` on the batch's rows each
+sorted.  Then the serving shape: ``ef`` encode and decode of batches
 of 8 and 32 rows of at most 128 sorted doc ids (the EF did chunks an
 ``index_serving`` request decodes), timed per call over 100 calls.  It
 runs under the malloc settings ``get_spark`` gives the Python workers
@@ -79,8 +81,10 @@ def main():
 
     bench("row_costs.prune", lambda: batched.row_costs(
         flat, offsets, batched.VECTOR_COST_CODECS, prune=True))
-    for codec in ("auto",) + batched.CODEC_NAMES:
-        vals = sorted_rows(flat, offsets) if codec == "ef" else flat
+    bench("size_rows.auto", lambda: batched.size_rows(flat, offsets, "auto"))
+    for codec in tuple(batched.AUTO_MODES) + batched.CODEC_NAMES:
+        vals = sorted_rows(flat, offsets) \
+            if codec in ("ef", "auto_sorted") else flat
         enc = batched.encode_rows(vals, offsets, codec)
         out_bytes[codec] = enc[0].size
         bench(f"encode_rows.{codec}",
