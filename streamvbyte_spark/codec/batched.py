@@ -236,15 +236,19 @@ def _seg_reduce(ufunc, x: np.ndarray, offsets: np.ndarray, empty_val=0) -> np.nd
     return out
 
 
-def _row_deltas(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-    """Per-row wrap-around uint32 deltas with prev=0 at each row start."""
+def _row_deltas(flat: np.ndarray, offsets: np.ndarray,
+                prev: np.ndarray | None = None) -> np.ndarray:
+    """Per-row wrap-around uint32 deltas, row r seeded at prev[r] (uint32;
+    0 for every row when None)."""
     d = np.empty_like(flat)
     if flat.size == 0:
         return d
     d[1:] = flat[1:] - flat[:-1]
-    starts = offsets[:-1]
-    starts = starts[starts < flat.size]
-    d[starts] = flat[starts]  # prev = 0
+    nonempty = offsets[1:] > offsets[:-1]
+    starts = offsets[:-1][nonempty]
+    d[starts] = flat[starts]
+    if prev is not None:
+        d[starts] -= prev[nonempty]
     return d
 
 
@@ -1248,13 +1252,7 @@ def encode_delta_rows_prev(flat: np.ndarray, offsets: np.ndarray,
     flat = np.ascontiguousarray(flat, dtype=np.uint32)
     offsets = np.asarray(offsets, dtype=np.int64)
     prev = np.asarray(prev).astype(np.int64).astype(np.uint32)
-    d = np.empty_like(flat)
-    if flat.size:
-        d[1:] = flat[1:] - flat[:-1]
-        nr = offsets[1:] - offsets[:-1]
-        starts = offsets[:-1][nr > 0]
-        d[starts] = flat[starts] - prev[nr > 0]
-    return _svb_encode_rows(d, offsets, False)
+    return _svb_encode_rows(_row_deltas(flat, offsets, prev), offsets, False)
 
 
 def decode_delta_rows_prev(enc: np.ndarray, enc_offsets: np.ndarray,

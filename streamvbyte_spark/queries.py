@@ -348,9 +348,10 @@ def _build_curation_stages(spark, sf_dir, qname, with_manifest=True):
     executing any of them without one build dropping another's views.
     Returns (hits_view, msrc_scalar_sql, manifest_view).
 
-    with_manifest=False skips the manifest stage entirely (an extra
-    corpus scan + md5 rank window at build time): the encoded composite
-    recomputes the keep-policy over encoded rows and never reads it.
+    The manifest is pipeline_sql.curated_tok_select projected to
+    (doc_id, source, n_tok).  with_manifest=False skips it (an extra
+    corpus scan + md5 rank window at build time): only
+    curated_pack_sequences' totals side reads it.
 
     A plan-identical re-invocation (same sf_dir/flags/stage SQL) reuses
     the live checkpointed generation — parquet inputs are immutable for
@@ -375,19 +376,8 @@ def _build_curation_stages(spark, sf_dir, qname, with_manifest=True):
             f"where e.source != {msrc(ms)} group by e.doc_id")
 
     def manifest(_sh, ms, hv):
-        # doc_id stays NATIVE-typed (matching curated_tok_select): the
-        # totals side's bucket expression must see the same dtype/order
-        # as the window side
-        inner = ("select doc_id, source, "
-                 "size(split(text, ' ')) as n_tok, "
-                 "row_number() over (partition by md5(text) "
-                 "order by cast(doc_id as string)) as rn "
-                 f"from documents where source != {msrc(ms)}")
-        return spark.sql(
-            f"select doc_id, source, n_tok from ({inner}) base "
-            f"where rn = 1 and n_tok >= {pipeline_sql.CURATE_MIN_TOK} "
-            f"and not exists (select 1 from {hv} h "
-            "where h.doc_id = cast(base.doc_id as string))")
+        return spark.sql("select doc_id, source, n_tok from ("
+                         f"{pipeline_sql.curated_tok_select(d, hv, msrc(ms))})")
     base = f"svb_stage_{qname[-12:]}_"
     stages = [
         (base + "sh",
@@ -400,9 +390,28 @@ def _build_curation_stages(spark, sf_dir, qname, with_manifest=True):
     return views[2], msrc(views[1]), views[3] if with_manifest else None
 
 
+def _ranked_curation_scan(spark, msrc, kernel):
+    """The curation keep-policy's one corpus scan and exact-dup rank: the
+    non-eval docs as (doc_id string, source, md5, tokens, n_tok) run
+    through KERNEL, a map-side stage that keeps doc_id and md5, then
+    ranked rn = row_number() per md5 ordered by the string doc_id — the
+    rank of pipeline_sql.curated_tok_select.  The md5 + tokenize + kernel
+    run above the documents view's fan-out exchange, so the rank window
+    shuffles the kernel's narrow rows, never tokens.  msrc: scalar SQL
+    for the eval-source name (_build_curation_stages)."""
+    from pyspark.sql import Window
+    d = pipeline_sql.Dialect("spark")
+    scan = spark.sql(
+        "select cast(doc_id as string) as doc_id, source, md5(text) as md5, "
+        f"{d.tokens()} as tokens, {d.alen(d.split('text'))} as n_tok "
+        f"from documents where source != {msrc}")
+    w = Window.partitionBy("md5").orderBy("doc_id")
+    return kernel(scan).withColumn("rn", F.row_number().over(w))
+
+
 def curated_encoded_rows(spark, sf_dir, qname="curated_pack_encoded"):
     """The curation keep-policy over ENCODED rows: tokenize+auto-encode
-    map-side AT THE SCAN (md5/n_tok computed there too), then run the md5
+    map-side AT THE SCAN (_ranked_curation_scan), then run the md5
     dedup rank window and the contamination anti-join over
     (doc_id, source, n_tok, codec, encoded, md5) — no shuffle in the
     composite ever carries a raw token array (the SQL
@@ -424,7 +433,6 @@ def curated_encoded_rows(spark, sf_dir, qname="curated_pack_encoded"):
 
     The contaminated-id set is small by construction (eval-overlap docs):
     broadcast the anti-join, corpus never reshuffles for it."""
-    from pyspark.sql import Window as W
     from .operators.packing import _encode_docs
 
     # with_manifest=False: the raw-token manifest stage is only read by
@@ -433,21 +441,11 @@ def curated_encoded_rows(spark, sf_dir, qname="curated_pack_encoded"):
     # consumes
     hits, msrc, _man = _build_curation_stages(spark, sf_dir, qname,
                                               with_manifest=False)
-    d = pipeline_sql.Dialect("spark")
     dtype = spark.table("documents").schema["doc_id"].dataType
-    n_tok = d.alen(d.split("text"))
-    # the tokenize + md5 + encode run above the documents view's fan-out
-    # exchange; the source/length predicates are pushed below it — cheap
-    # codegen'd filters that also shrink the shuffle
-    pre = spark.sql(
-        "select cast(doc_id as string) as doc_id, source, "
-        f"md5(text) as md5, {d.tokens()} as tokens, {n_tok} as n_tok "
-        f"from documents where source != {msrc} "
-        f"and {n_tok} >= {pipeline_sql.CURATE_MIN_TOK}")
-    enc = _encode_docs(pre, "auto", carry=("md5",))
-    w = W.partitionBy("md5").orderBy("doc_id")
-    winners = (enc.withColumn("rn", F.row_number().over(w))
-               .where(F.col("rn") == 1)
+    ranked = _ranked_curation_scan(spark, msrc, lambda scan: _encode_docs(
+        scan.where(F.col("n_tok") >= pipeline_sql.CURATE_MIN_TOK), "auto",
+        carry=("md5",)))
+    winners = (ranked.where(F.col("rn") == 1)
                .join(F.broadcast(spark.table(hits)), "doc_id", "left_anti")
                .select("doc_id", "source", "n_tok", "codec", "encoded"))
     return winners, dtype
@@ -1219,15 +1217,35 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["index_merge_updates_pos"] = index_merge_updates_pos
 
-    # -- composed curation pipeline (pipeline.curate_documents + auto encode)
+    # -- composed curation: exact dedup -> quality gate -> tokenize, priced
+    # in auto-codec bytes.  Its own rule, checked by its own oracle: the
+    # dedup rank orders by the NATIVE doc_id (numeric ids numerically) and
+    # a stopword-ratio gate joins the word-count gate.
+    def _curate_documents(docs):
+        from pyspark.sql import Window
+        rank = Window.partitionBy(F.md5("text")).orderBy("doc_id")
+        deduped = (docs.withColumn("_rn", F.row_number().over(rank))
+                   .where(F.col("_rn") == 1).drop("_rn"))
+        words = F.split(F.col("text"), " ")
+        n_words = F.size(words)
+        stop_ratio = F.size(F.filter(words, lambda w: w.isin(
+            "the", "a", "of", "and", "to", "in", "is", "on", "for",
+            "with"))) / n_words
+        # the token map is length-preserving: n_words IS the token count,
+        # so the interpreted tokenizer lambda runs once per row, not twice
+        return deduped.where((n_words >= 8) & (stop_ratio <= 0.9)).select(
+            F.col("doc_id").cast("string").alias("doc_id"),
+            F.expr(spark_tokens_expr("text")).alias("tokens"),
+            n_words.alias("n_tok"), "source")
+
     def curate_metrics(spark, sf_dir):
-        from .pipeline import curate_documents
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        enc = encode_table(curate_documents(docs), codec="auto")
-        return (enc.groupBy("source")
+        sized = size_table(_curate_documents(docs), codec="auto",
+                           carry=("source", "n_tok"))
+        return (sized.groupBy("source")
                 .agg(F.count("*").alias("docs"),
                      F.sum("n_tok").alias("sum_tok"),
-                     F.sum("out_bytes").alias("sum_out_bytes")))
+                     F.sum("size_bytes").alias("sum_out_bytes")))
 
     q["curate_metrics"] = curate_metrics
 
@@ -1257,9 +1275,9 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def make_pipeline(name, owner=None):
         # owner: the REGISTRY key whose stage views this invocation owns —
-        # composites that embed another pipeline (dedup_components wraps
-        # dedup_minhash_pairs, curation_pipeline wraps decontaminate) pass
-        # their own name so building composite B does not drop the views a
+        # composites that embed a MinHash pipeline (dedup_components,
+        # dedup_components_verified, curate_neardup_metrics) pass their own
+        # name so building composite B does not drop the views a
         # previously-BUILT-but-not-yet-executed query A still references
         # (the driver may build several DataFrames before running any)
         key = owner or name
@@ -1568,33 +1586,21 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # survivors are priced in packs (PACK_CAP) and auto-codec bytes.
     def curation_pipeline(spark, sf_dir):
         """scan -> exact dedup (md5 window) -> eval-set decontamination
-        (staged broadcast shingle join, reused from `decontaminate`) ->
-        length gate -> per-source pack count + encoded-byte budget
-        (cost-only size_table).  Everything JVM-side except the two Arrow
-        kernels (shingle hashing inside the staged decontaminate, cost
-        model inside size_table).
-
-        ONE corpus scan for dedup+sizing: the size kernel runs
-        map-side in the same scan that computes md5/n_tok (size_table's
-        carry columns), the md5 window then shuffles only narrow rows
-        (never tokens), and only the decontamination flags join back — the
-        previous shape scanned the corpus twice and doc-joined three
-        tables."""
-        decon = make_pipeline("decontaminate",
-                              owner="curation_pipeline")(spark, sf_dir)
-        from pyspark.sql import Window
-        # decontaminate registered the fanned-out documents view: the md5 +
-        # tokenize + size kernel run above its exchange
-        tok = spark.sql(
-            "select cast(doc_id as string) as doc_id, source, "
-            "md5(text) as h, size(split(text, ' ')) as n_tok, "
-            f"{spark_tokens_expr('text')} as tokens from documents "
-            "where source != (select min(source) from documents)")
-        sized = size_table(tok, codec="auto", carry=("source", "h", "n_tok"))
-        w = Window.partitionBy("h").orderBy("doc_id")
-        base = (sized.withColumn("rn", F.row_number().over(w))
-                .drop("h"))
-        j = base.join(decon.select("doc_id", "contaminated"), "doc_id")
+        (broadcast left join of the staged contaminated-id set) -> length
+        gate -> per-source pack count + encoded-byte budget (cost-only
+        size_table).  Shares the curated pack writers' stage set
+        (_build_curation_stages, without the manifest) and their one
+        corpus scan and dedup rank (_ranked_curation_scan): the size
+        kernel runs map-side in the scan that computes md5/n_tok, the md5
+        window shuffles only narrow rows, and the contaminated-id set is
+        small by construction, so the corpus never reshuffles for it."""
+        hits, msrc, _man = _build_curation_stages(
+            spark, sf_dir, "curation_pipeline", with_manifest=False)
+        ranked = _ranked_curation_scan(spark, msrc, lambda scan: size_table(
+            scan, codec="auto", carry=("source", "md5", "n_tok")))
+        flags = spark.table(hits).withColumn("contaminated", F.lit(True))
+        j = (ranked.join(F.broadcast(flags), "doc_id", "left")
+             .withColumn("contaminated", F.col("contaminated").isNotNull()))
         keep = ((F.col("rn") == 1) & ~F.col("contaminated")
                 & (F.col("n_tok") >= pipeline_sql.CURATE_MIN_TOK))
         agg = j.groupBy("source").agg(

@@ -435,28 +435,6 @@ def test_decode_rejects_stream_length_mismatch(spark, tmp_path):
         rejects(decode_packs(bad), "decoding pack_id=3")
 
 
-def test_full_curation_pipeline(spark):
-    """End-to-end: dedup -> quality gate -> tokenize -> auto encode -> lineage
-    write; rerun is a no-op (resume sees all buckets committed)."""
-    from streamvbyte_spark.pipeline import curate_and_encode, curate_documents
-    from streamvbyte_spark.operators.lineage import read_encoded
-    path = tempfile.mkdtemp(prefix="svb_pipe_")
-    try:
-        r = curate_and_encode(spark, SF, path, n_buckets=8)
-        assert r["encoded_buckets"] == 8
-        assert 0 < r["ratio"] < 1
-        docs = spark.read.parquet(f"{SF}/documents.parquet")
-        tok = curate_documents(docs)
-        assert r["docs"] == tok.count() <= docs.count()
-        # encoded output decodes bit-identically to the curated token table
-        enc = read_encoded(spark, path)
-        assert verify_roundtrip(tok, decode_table(enc.drop("bucket"))) == 0
-        # resume: nothing left
-        assert curate_and_encode(spark, SF, path, n_buckets=8).get("skipped")
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
-
-
 def test_chunked_fused_matches_unfused(spark, tok):
     """decode_reassemble_fused (mapInArrow, shuffles encoded bytes) must
     agree with the chunk->decode->reassemble pipeline and the original."""

@@ -565,6 +565,27 @@ def test_curated_encoded_rank_window_carries_encoded(spark):
     assert got == want
 
 
+def test_curation_pipeline_scans_once_and_broadcasts_hits(spark):
+    """curation_pipeline shares the curated pack writers' stage set and
+    their one corpus scan: the plan reads documents once, its only join
+    is the broadcast of the staged contaminated-id set, and the size
+    MapInArrow sits above the one numbered doc_id fan-out exchange.
+    Nesting the whole decontaminate query instead scanned documents 4
+    times behind 3 joins.  Values are proven by the driver gate."""
+    import re
+    import streamvbyte_spark.queries as Q
+    df = Q.build_queries()["curation_pipeline"](spark, SF)
+    plan = plan_string(df, "simple")
+    scans = re.findall(r"FileScan parquet .*", plan)
+    assert len(scans) == 1 and "documents.parquet" in scans[0], plan
+    assert len(re.findall(r"Join ", plan)) == 1, plan
+    assert "BroadcastHashJoin" in plan, plan
+    arrow = plan.index("MapInArrow run(")
+    assert plan.count("REPARTITION_BY_NUM") == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(doc_id#\d+L?, \d+\), "
+                     "REPARTITION_BY_NUM", plan[arrow:]), plan
+
+
 def test_token_quantiles_value_count_decomposition(spark):
     """token_quantiles must rank over the tiny (source, word-count)
     VALUE-COUNT table, never per-document rows: a ``row_number() over
@@ -690,8 +711,8 @@ def test_minhash_verification_filters_low_agreement(spark):
 def test_composites_survive_build_all_then_run_all(spark):
     """A driver may BUILD several queries' DataFrames before EXECUTING any
     of them.  Composites that embed another staged pipeline (components
-    wrap minhash pairs, curation wraps decontaminate, the curated pack
-    writers wrap the curation stages) must therefore own DISJOINT stage
+    wrap minhash pairs; curation_pipeline and the curated pack writers
+    each build the curation stage set) must therefore own DISJOINT stage
     views — building B must not drop the views A's built-but-unrun plan
     still references (make_pipeline's owner key / _build_curation_stages)."""
     import __spark_entry__ as entry
