@@ -5,6 +5,11 @@ individual registry queries with the noop sink (computation only, no sink
 cost), captures .explain("formatted") to plans/<tag>/<query>_<suffix>.txt,
 and prints one JSON line per query with warm-up + measured passes.
 
+Each query runs in its own Python process and Spark session, one after
+another, so its best-of-N does not depend on its position in the list (in
+one shared session, JVM warm-up that one warm-up pass does not finish
+favoured the queries listed last).  Each query pays its own session start.
+
 Usage:
   python bench_extra.py [--sf DIR] [--plans TAG_DIR] [--suffix before]
                         [--passes 3] query [query ...]
@@ -16,6 +21,7 @@ import argparse
 import gc
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -34,6 +40,14 @@ def main():
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--passes", type=int, default=3)
     args = ap.parse_args()
+    if len(args.queries) > 1:
+        flags = ["--sf", args.sf, "--cpus", str(args.cpus),
+                 "--suffix", args.suffix, "--passes", str(args.passes),
+                 *(["--plans", args.plans] if args.plans else [])]
+        for name in args.queries:
+            subprocess.run([sys.executable, os.path.abspath(__file__),
+                            *flags, name])
+        return
 
     from streamvbyte_spark.session import get_spark
     import streamvbyte_spark.queries as Q

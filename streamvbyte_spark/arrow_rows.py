@@ -55,13 +55,16 @@ def binary_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
 def _offsets32(offsets: np.ndarray) -> np.ndarray:
     """int64 -> int32 Arrow offsets with an overflow guard: an Arrow batch
     whose flat payload exceeds 2^31-1 bytes/elements would otherwise WRAP
-    silently and corrupt the column (maxRecordsPerBatch bounds rows, not
-    bytes — very long rows can still blow the 2 GiB offset budget)."""
+    silently and corrupt the column (the session's byte bound caps what
+    Spark sends, but a row longer than the bound still crosses whole, and
+    a kernel's output batch — decoded tokens, assembled packs — can
+    outgrow its input)."""
     offsets = np.asarray(offsets)
     if offsets.size and int(offsets[-1]) > np.iinfo(np.int32).max:
         raise ValueError(
             f"Arrow batch payload {int(offsets[-1])} exceeds int32 offsets "
-            "(2^31-1); lower spark.sql.execution.arrow.maxRecordsPerBatch")
+            "(2^31-1); lower spark.sql.execution.arrow.maxBytesPerBatch "
+            "(get_spark sets session.ARROW_BATCH_BYTES)")
     return np.ascontiguousarray(offsets, dtype=np.int32)
 
 
@@ -88,11 +91,11 @@ def complete_runs(batches: Iterable[pa.RecordBatch],
     complete runs (maximal spans of rows with equal keys); empty batches
     are dropped.
 
-    A run can straddle Arrow batch seams (Spark cuts batches by row
-    count).  The open tail run is carried as zero-copy slices and
-    concatenated ONCE, when it closes or the stream ends — prepending the
-    carried tail to every incoming batch would copy a K-batch run O(K^2)
-    times.  A run whose binary payload exceeds Arrow's int32 offsets
+    A run can straddle Arrow batch seams (Spark cuts batches by bytes or
+    rows, whichever bound is met first).  The open tail run is carried as
+    zero-copy slices and concatenated ONCE, when it closes or the stream
+    ends — prepending the carried tail to every incoming batch would copy
+    a K-batch run O(K^2) times.  A run whose binary payload exceeds Arrow's int32 offsets
     raises (pa.concat_arrays' offset-overflow check)."""
     pend: list[pa.RecordBatch] = []
     for batch in batches:

@@ -625,8 +625,9 @@ def _dict_costs(flat: np.ndarray, offsets: np.ndarray, nr: np.ndarray,
     A byte projection would cap the bound at 256 values, and on a
     bulk_codec batch left 16% of the rows (long rand_shifted and
     near_sorted_gap rows) to the sort, where 10 bits leave none.  Batches
-    above 2^14 rows (Spark's Arrow batch cap, so direct calls only) take
-    the exact path, which keeps the table at <= 16 MB."""
+    above 2^14 rows take the exact path, which keeps the table at <= 16 MB;
+    get_spark's Arrow batch rule caps a Spark batch at 2^14 rows
+    (session.ARROW_BATCH_ROWS), so only direct calls are that long."""
     if prior_min is None or flat.size == 0 or nr.size > (1 << 14):
         k = _row_distinct(flat, offsets)
         w = _exact_width(np.maximum(k - 1, 0))
@@ -1585,23 +1586,27 @@ def ef_decode_rows(enc, enc_offsets, n_toks):
 
 def _dict_encode_rows(flat, offsets):
     """Batched dictionary codec (header 4B k + 4k B sorted uniques + packed
-    codes). Per-row uniques via one global composite-key sort; per-element
-    codes via one global searchsorted on the (row<<32 | value) key space."""
+    codes). Per-row uniques and per-element codes from one global argsort
+    of the (row<<32 | value) key space: a value's code is its key's rank
+    among the row's uniques, which the sorted position already holds, so
+    the codes scatter back through the sort's permutation."""
     nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
     R = nr.size
     if flat.size == 0:
         return np.zeros(0, np.uint8), np.zeros(R + 1, dtype=np.int64)
     row_ids = np.repeat(np.arange(R, dtype=np.uint64), nr)
     key = (row_ids << np.uint64(32)) | flat.astype(np.uint64)
-    skey = np.sort(key)
+    order = np.argsort(key)
+    skey = key[order]
     new = np.ones(skey.size, dtype=bool)
     new[1:] = skey[1:] != skey[:-1]
-    uniq_keys = skey[new]
-    uniq_vals = (uniq_keys & np.uint64(0xFFFFFFFF)).astype(np.uint32)
+    uniq_vals = (skey[new] & np.uint64(0xFFFFFFFF)).astype(np.uint32)
     k_per_row = _seg_sum(new, offsets)
     uniq_off = np.concatenate([[0], np.cumsum(k_per_row)])
-    pos = np.searchsorted(uniq_keys, key)
-    codes = (pos - np.repeat(uniq_off[:-1], nr)).astype(np.uint32)
+    # the sort keeps each row in its own offsets range (the row id is the
+    # key's high word), so sorted position i lies in the row of position i
+    codes = np.empty(flat.size, dtype=np.uint32)
+    codes[order] = np.cumsum(new) - 1 - np.repeat(uniq_off[:-1], nr)
     widths = _exact_width(np.maximum(k_per_row - 1, 0))
     packed, pb_off = _pack_bits_rows(codes, offsets, widths)
     pb = pb_off[1:] - pb_off[:-1]

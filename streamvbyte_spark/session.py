@@ -1,11 +1,12 @@
 """SparkSession factory with the engine's defaults.
 
 The defaults keep the codec kernels fed and the Python stages cheap: AQE
-re-planning, Arrow-batched Python exchange in 16k-row batches, reused Python
-workers with a malloc that keeps freed memory, and pushdown-friendly parquet
-scans.  They hold on local[N] and on a cluster alike.  The session's shuffle
-partitions are also the width of every CPU-heavy stage: ``fanout_width``
-reads it and ``fanout_scan`` is the one scan fan-out rule.
+re-planning, Arrow-batched Python exchange in batches of at most 4 MiB
+(``ARROW_BATCH_BYTES``), reused Python workers with a malloc that keeps
+freed memory, and pushdown-friendly parquet scans.  They hold on local[N]
+and on a cluster alike.  The session's shuffle partitions are also the
+width of every CPU-heavy stage: ``fanout_width`` reads it and
+``fanout_scan`` is the one scan fan-out rule.
 """
 
 from __future__ import annotations
@@ -62,6 +63,22 @@ _WORKER_MALLOC_ENV = {
     "MALLOC_MMAP_MAX_": "0",
     "MALLOC_TRIM_THRESHOLD_": "-1",
 }
+
+
+# The one Arrow batch rule: a JVM -> Python batch closes at 4 MiB (~1,970
+# rows of 512 tokens) or at 2^14 rows, whichever comes first.  A worker
+# keeps its largest batch's peak for the rest of the run (freed memory
+# stays in its heap, the kernels' scratch pools live as long as the
+# process), so the byte bound is what holds Python RSS; bulk_codec on 4
+# cores reads Python 1,034 MB + JVM 2,888 MB (the sweep behind 4 MiB is in
+# ROADMAP direction 4).  Below ~2,000 rows a batch, Spark's per-batch work
+# shows.  The bound caps a stage's input, not its output: a decode stage
+# writes up to ~2.7x what it reads.  The row cap binds only on rows under
+# 256 bytes; it keeps every batch within codec/batched._dict_costs'
+# 2^14-row presence table and gives a temporary conf override a value to
+# restore.
+ARROW_BATCH_BYTES = 4 << 20
+ARROW_BATCH_ROWS = 1 << 14
 
 
 def default_cpus() -> int:
@@ -126,10 +143,10 @@ def get_spark(app: str = "streamvbyte-spark", master: str | None = None,
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 16k docs x ~512 tokens ~ 8M values/batch: python-side peak (values +
-        # index scratch) stays ~300-400 MB per worker — safe on 4-8 GB/core
-        # executors while keeping per-batch Python overhead negligible
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "16384")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch",
+                str(ARROW_BATCH_BYTES))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
+                str(ARROW_BATCH_ROWS))
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", default_driver_memory())

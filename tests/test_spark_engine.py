@@ -605,6 +605,64 @@ def test_chunked_ef_roundtrip_and_truncate(spark):
         encode_chunked_delta(chunk_tokens(df, chunk_size=4), codec="nope")
 
 
+def _one_partition_tokens(spark, rows, n_tok):
+    """One partition of ``rows`` (doc_id, source, tokens, n_tok) rows in id
+    order; ``n_tok`` is a SQL expression over ``id``.  Values mix widths
+    from 1 to 31 bits so the auto selector picks several codecs."""
+    return spark.range(0, rows, 1, numPartitions=1).selectExpr(
+        "cast(id as string) as doc_id", "'s' as source",
+        f"transform(sequence(1, {n_tok}), i -> cast(pmod(id * 2654435761 "
+        "+ i * 40503, shiftleft(1L, cast(id % 31 + 1 as int))) as int)) "
+        "as tokens").selectExpr("*", "size(tokens) as n_tok")
+
+
+def _arrow_batches(df):
+    """(rows, Arrow bytes of the tokens column) of every batch a
+    mapInArrow over ``df`` receives, in order."""
+    import pyarrow as pa
+
+    def run(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"rows": [b.num_rows], "nbytes": [b.column("tokens").nbytes]})
+
+    return [(r.rows, r.nbytes) for r in
+            df.mapInArrow(run, "rows long, nbytes long").collect()]
+
+
+def test_session_arrow_batch_rule(spark):
+    """get_spark's one Arrow batch rule: one partition of 10,000 rows of
+    512 ints (~20 MB) crosses to Python as several batches, each within
+    ARROW_BATCH_BYTES, instead of one batch per partition."""
+    from streamvbyte_spark.session import ARROW_BATCH_BYTES, ARROW_BATCH_ROWS
+    got = _arrow_batches(_one_partition_tokens(spark, 10_000, 512))
+    assert sum(r for r, _ in got) == 10_000
+    assert len(got) > 1
+    assert all(r <= ARROW_BATCH_ROWS and b <= ARROW_BATCH_BYTES
+               for r, b in got), got
+
+
+def test_roundtrip_across_unequal_session_batches(spark):
+    """At the session's batch rule, encode_table -> decode_table over one
+    partition whose first batches hold long rows and whose last hold short
+    ones round-trips exactly: the kernels' scratch pools, sized by the long
+    batches, are reused by the short ones (2,000 rows of ~6 KB fill the
+    first batches by bytes, 40,000 rows of a few ints the last by rows)."""
+    tok = _one_partition_tokens(
+        spark, 42_000, "if(id < 2000, 1500 + cast(id % 7 as int), "
+                      "1 + cast(id % 5 as int))").cache()
+    try:
+        got = _arrow_batches(tok)
+        assert len(got) > 2
+        (r0, b0), (r1, b1) = got[0], got[-1]
+        assert b0 / r0 > 100 * b1 / r1  # long rows first, short rows last
+        enc = encode_table(tok, codec="auto")
+        assert enc.select("codec").distinct().count() > 2
+        assert verify_roundtrip(tok, decode_table(enc)) == 0
+    finally:
+        tok.unpersist()
+
+
 def test_auto_sorted_selector_kernel():
     """auto_sorted: exact round-trip with mixed ef/standard codec ids, EF
     never assigned to an unsorted row, and the selected size always <= the

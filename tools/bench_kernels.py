@@ -10,9 +10,13 @@ that encode's output) for each auto mode (mixed codec groups) and every
 stored codec — ``ef`` and ``auto_sorted`` on the batch's rows each
 sorted.  Then the serving shape: ``ef`` encode and decode of batches
 of 8 and 32 rows of at most 128 sorted doc ids (the EF did chunks an
-``index_serving`` request decodes), timed per call over 100 calls.  It
-runs under the malloc settings ``get_spark`` gives the Python workers
-(freed memory stays in the heap), re-executing itself once to set them.
+``index_serving`` request decodes), timed per call over 100 calls.
+Auto encode and decode are also timed over the same 10,000 rows cut the
+way ``get_spark``'s Arrow batch rule cuts a partition, one call per
+slice, so the per-call cost the rule adds shows at the kernel layer.
+It runs under the malloc settings ``get_spark``
+gives the Python workers (freed memory stays in the heap), re-executing
+itself once to set them.
 
 Usage: python tools/bench_kernels.py [--seed 2] [--passes 7]
 Prints one JSON line: milliseconds and tokens per second per kernel.
@@ -35,7 +39,8 @@ sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 import inputs  # noqa: E402  (perfbench/inputs.py, read only)
 from streamvbyte_spark.arrow_rows import list_flat  # noqa: E402
 from streamvbyte_spark.codec import batched  # noqa: E402
-from streamvbyte_spark.session import _WORKER_MALLOC_ENV  # noqa: E402
+from streamvbyte_spark.session import (  # noqa: E402
+    _WORKER_MALLOC_ENV, ARROW_BATCH_BYTES, ARROW_BATCH_ROWS)
 
 ROWS = 10_000
 
@@ -57,6 +62,24 @@ def sorted_rows(flat, offsets):
                     np.diff(offsets))
     return (np.sort((row << np.uint64(32)) | flat) & np.uint64(0xFFFFFFFF)) \
         .astype(np.uint32)
+
+
+def session_slices(flat, offsets):
+    """The batch cut into (flat, offsets) slices at get_spark's Arrow batch
+    rule: a slice closes once its list<int32> bytes (4 per value, 4 per
+    row offset) reach ARROW_BATCH_BYTES or its rows ARROW_BATCH_ROWS.
+    Spark's own size estimate runs ~4% above those bytes: it cuts rows of
+    512 tokens every 1,967 rows where this cut would take 2,044."""
+    bounds, size = [0], 0
+    for i, n in enumerate(np.diff(offsets), 1):
+        size += 4 * int(n) + 4
+        if size >= ARROW_BATCH_BYTES or i - bounds[-1] == ARROW_BATCH_ROWS:
+            bounds.append(i)
+            size = 0
+    if bounds[-1] != offsets.size - 1:
+        bounds.append(offsets.size - 1)
+    return [(flat[offsets[a]:offsets[b]], offsets[a:b + 1] - offsets[a])
+            for a, b in zip(bounds[:-1], bounds[1:])]
 
 
 def main():
@@ -91,6 +114,13 @@ def main():
               lambda: batched.encode_rows(vals, offsets, codec))
         bench(f"decode_rows.{codec}",
               lambda: batched.decode_rows(enc[0], enc[1], n_tok, enc[2]))
+    slices = session_slices(flat, offsets)
+    encs = [batched.encode_rows(f, o, "auto") for f, o in slices]
+    bench("encode_rows.auto.session_batches", lambda: [
+        batched.encode_rows(f, o, "auto") for f, o in slices])
+    bench("decode_rows.auto.session_batches", lambda: [
+        batched.decode_rows(e[0], e[1], np.diff(o), e[2])
+        for e, (_, o) in zip(encs, slices)])
     rng = np.random.default_rng(args.seed)
     for r in (8, 32):
         lens = rng.integers(1, 129, r)
@@ -105,6 +135,7 @@ def main():
     ms = {k: v[0] for k, v in timed.items()}
     print(json.dumps({
         "seed": args.seed, "rows": ROWS, "tokens": n,
+        "session_batch_rows": [o.size - 1 for _, o in slices],
         "bytes_per_token": round(out_bytes["auto"] / n, 4),
         "ms": {k: round(v, 3) for k, v in ms.items()},
         "mtok_per_s": {k: round(t / v / 1e3, 2)
