@@ -7,11 +7,20 @@ freed memory, and pushdown-friendly parquet scans.  They hold on local[N]
 and on a cluster alike.  The session's shuffle partitions are also the
 width of every CPU-heavy stage: ``fanout_width`` reads it and
 ``fanout_scan`` is the one scan fan-out rule.
+
+Imported inside a Python worker (every kernel's unpickling imports the
+package), the module also tunes the worker itself: it drops Spark's own
+archives from the import path, and in a worker forked by
+``pyspark.daemon`` it turns on ``TCP_QUICKACK`` on the task's socket at
+the start of every task.  A reused worker's socket otherwise falls into
+Linux's delayed-ACK mode from its third task on, and each task then waits
+one delayed-ACK timeout (~40 ms) before its first input batch arrives.
 """
 
 from __future__ import annotations
 
 import os
+import socket
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,6 +40,12 @@ if sys.byteorder != "little":
         "and the stored stream wires byte-view native uint32 buffers")
 
 
+def _in_worker() -> bool:
+    """True inside a Spark Python worker: the worker factory hands every
+    worker its secret through the environment."""
+    return "PYTHON_WORKER_FACTORY_SECRET" in os.environ
+
+
 def _drop_spark_archives_from_worker_path() -> None:
     """Inside a Spark Python worker, drop Spark's own zips and jars
     ($SPARK_HOME/python/lib, $SPARK_HOME/jars) from sys.path and
@@ -40,7 +55,7 @@ def _drop_spark_archives_from_worker_path() -> None:
     and py4j are already imported by then.  User files and --py-files zips
     live elsewhere and stay."""
     spark_home = os.environ.get("SPARK_HOME")
-    if "PYTHON_WORKER_FACTORY_SECRET" not in os.environ or not spark_home:
+    if not _in_worker() or not spark_home:
         return
     home = os.path.realpath(spark_home)
     roots = tuple(os.path.join(home, d, "") for d in ("python/lib", "jars"))
@@ -53,7 +68,78 @@ def _drop_spark_archives_from_worker_path() -> None:
         del sys.path_importer_cache[key]
 
 
+def _quickack(f) -> None:
+    """Turn on TCP_QUICKACK on the TCP socket behind ``f`` (a socket or a
+    file over one), so the kernel ACKs what it receives at once instead of
+    holding the ACK for its delayed-ACK timeout.  Does nothing on any other
+    file or socket (a Unix socket has no ACKs) or where the host has no
+    TCP_QUICKACK, and never raises."""
+    if not hasattr(socket, "TCP_QUICKACK"):
+        return
+    try:
+        sock = socket.socket(fileno=f.fileno())
+    except (OSError, ValueError):
+        return
+    try:
+        if sock.family in (socket.AF_INET, socket.AF_INET6):
+            sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_QUICKACK, 1)
+    except OSError:
+        pass
+    finally:
+        sock.detach()  # the fd stays the caller's
+
+
+def _quickack_every_task() -> None:
+    """In a worker forked by pyspark.daemon, wrap the daemon's per-task
+    ``worker_main`` so each task turns on TCP_QUICKACK before it reads its
+    command.  The JVM writes a task's input in several small writes
+    without TCP_NODELAY, so once the kernel has put a reused worker's
+    socket into delayed-ACK mode (from its third task on) each task waits
+    ~40 ms for the ACK that lets the JVM send its first batch.  Quick ACK
+    does not stick (the kernel leaves it again on its own), so setting it
+    once per process is not enough.  Outside daemon mode there is no
+    ``worker_main`` and nothing is done; the wrap is installed once per
+    process."""
+    main = sys.modules.get("__main__")
+    task = getattr(main, "worker_main", None)
+    if (not _in_worker() or not hasattr(socket, "TCP_QUICKACK")
+            or task is None or getattr(task, "quickack", False)):
+        return
+
+    def worker_main(infile, outfile):
+        _quickack(infile)
+        return task(infile, outfile)
+
+    worker_main.quickack = True
+    main.worker_main = worker_main
+
+
+def worker_quickack() -> int | None:
+    """TCP_QUICKACK as read on this process's first TCP socket — in a
+    Python worker, its socket to the JVM: 1 in quick-ACK mode, 0 in
+    delayed-ACK mode, None without a TCP socket or TCP_QUICKACK.  The probe
+    behind tools/worker_roundtrip.py and the tests of the wrap above."""
+    if not hasattr(socket, "TCP_QUICKACK"):
+        return None
+    for name in os.listdir("/proc/self/fd"):
+        try:
+            sock = socket.socket(fileno=int(name))
+        except (OSError, ValueError):
+            continue
+        try:
+            if (sock.family in (socket.AF_INET, socket.AF_INET6)
+                    and sock.type == socket.SOCK_STREAM):
+                return sock.getsockopt(socket.IPPROTO_TCP,
+                                       socket.TCP_QUICKACK)
+        except OSError:
+            pass
+        finally:
+            sock.detach()
+    return None
+
+
 _drop_spark_archives_from_worker_path()
+_quickack_every_task()
 
 # glibc malloc tuning for the Python workers: without it every large NumPy
 # allocation is mmap'd and returned to the OS on free, so each Arrow batch

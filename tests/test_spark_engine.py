@@ -4,7 +4,10 @@ prev chaining, checkpoint-resume lineage, multimodal plumbing, disk round-trip
 
 from __future__ import annotations
 
+import os
 import shutil
+import socket
+import sys
 import tempfile
 
 import numpy as np
@@ -661,6 +664,88 @@ def test_roundtrip_across_unequal_session_batches(spark):
         assert verify_roundtrip(tok, decode_table(enc)) == 0
     finally:
         tok.unpersist()
+
+
+def test_every_task_reads_its_input_in_quick_ack_mode(spark):
+    """Each task on a reused Python worker starts with TCP_QUICKACK on its
+    socket to the JVM.  Without session.py's per-task wrap the kernel puts
+    the socket into delayed-ACK mode from its third task on (reads 0), and
+    each task then waits ~40 ms before its first batch arrives."""
+    import pyarrow as pa
+    from streamvbyte_spark.session import worker_quickack
+
+    def read(batches):
+        quickack = worker_quickack()  # before the input arrives
+        for _ in batches:  # a task that drains its input keeps its worker
+            pass
+        yield pa.RecordBatch.from_pydict({"quickack": [quickack]})
+
+    one = spark.range(0, 1, 1, numPartitions=1)
+    reads = [one.mapInArrow(read, "quickack long").collect()[0].quickack
+             for _ in range(8)]
+    assert reads == [1] * 8
+
+
+@pytest.mark.skipif(not hasattr(socket, "TCP_QUICKACK"),
+                    reason="host has no TCP_QUICKACK")
+def test_quickack_helper_sets_tcp_only():
+    """session._quickack turns quick ACK on for a TCP socket, also through a
+    file over a dup of its fd (what the daemon hands a task), and does
+    nothing, raising nothing, on a Unix socket or a closed file."""
+    from streamvbyte_spark.session import _quickack
+    opt = socket.IPPROTO_TCP, socket.TCP_QUICKACK
+    a, b = socket.socketpair(socket.AF_UNIX)
+    with a, b:
+        _quickack(a)
+        with os.fdopen(os.dup(a.fileno()), "rb") as f:
+            _quickack(f)
+    r, w = os.pipe()
+    with os.fdopen(r, "rb") as pipe, os.fdopen(w, "wb"):
+        _quickack(pipe)
+    _quickack(pipe)  # closed
+    with socket.create_server(("127.0.0.1", 0)) as lsn, \
+            socket.create_connection(lsn.getsockname()) as c, \
+            lsn.accept()[0] as s:
+        for target in (s, c):
+            target.setsockopt(*opt, 0)
+            assert target.getsockopt(*opt) == 0
+            _quickack(target)
+            assert target.getsockopt(*opt) == 1
+        s.setsockopt(*opt, 0)
+        with os.fdopen(os.dup(s.fileno()), "rb") as f:
+            _quickack(f)
+        assert s.getsockopt(*opt) == 1
+
+
+def test_quickack_wrap_installs_once_in_daemon_workers(monkeypatch):
+    """The wrap replaces the daemon's ``worker_main`` once per process and
+    only inside a worker; the wrapped call still runs the task with its
+    files.  pyspark.daemon must keep the ``worker_main`` global the wrap
+    replaces: a PySpark that renames it would silently bring the ~40 ms
+    delayed-ACK wait back, so this fails first."""
+    import types
+
+    import pyspark.daemon
+    from streamvbyte_spark import session
+    assert callable(pyspark.daemon.worker_main)
+
+    calls = []
+    main = types.ModuleType("__main__")
+    main.worker_main = lambda infile, outfile: calls.append((infile, outfile))
+    monkeypatch.setitem(sys.modules, "__main__", main)
+    monkeypatch.delenv("PYTHON_WORKER_FACTORY_SECRET", raising=False)
+    original = main.worker_main
+    session._quickack_every_task()
+    assert main.worker_main is original  # not a worker: untouched
+    monkeypatch.setenv("PYTHON_WORKER_FACTORY_SECRET", "x")
+    session._quickack_every_task()
+    wrapped = main.worker_main
+    session._quickack_every_task()
+    assert main.worker_main is wrapped is not original
+    a, b = socket.socketpair(socket.AF_UNIX)
+    with a, b:
+        wrapped(a, b)
+    assert calls == [(a, b)]
 
 
 def test_auto_sorted_selector_kernel():

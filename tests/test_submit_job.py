@@ -2,7 +2,8 @@
 a --py-files zip and run jobs through spark-submit with the engine only in
 the zip — the checkpoint-encode job (JSON report, resumable rerun), the
 index build-and-serve job, and a job that builds its session with
-get_spark() and runs a package kernel."""
+get_spark(), runs a package kernel and reads every task's quick-ACK
+mode."""
 
 from __future__ import annotations
 
@@ -106,13 +107,28 @@ def test_spark_submit_pyfiles_index_job():
 
 
 _GET_SPARK_JOB = """\
+import pyarrow as pa
+
 from streamvbyte_spark import encode_table, get_spark
+from streamvbyte_spark.session import worker_quickack
 from streamvbyte_spark.sources import synthetic_tokens
 
 spark = get_spark(master="local[2]")
 spark.sparkContext.setLogLevel("ERROR")
 enc = encode_table(synthetic_tokens(spark, 300, avg_len=40, partitions=4))
 print(enc.count())
+
+
+def read(batches):
+    quickack = worker_quickack()
+    for _ in batches:
+        pass
+    yield pa.RecordBatch.from_pydict({"quickack": [quickack]})
+
+
+one = spark.range(0, 1, 1, numPartitions=1)
+print([one.mapInArrow(read, "quickack long").collect()[0].quickack
+       for _ in range(8)])
 spark.stop()
 """
 
@@ -123,7 +139,9 @@ def test_spark_submit_pyfiles_get_spark_job():
     """A job that builds its session through get_spark() under --py-files:
     the Python workers must import the engine from the per-task py-files
     zip, so get_spark() may not set anything that runs in a worker before
-    the task's files are on its path."""
+    the task's files are on its path.  The engine imported from the zip
+    still turns quick ACK on for every task: 8 single-task jobs on reused
+    workers each read TCP_QUICKACK 1 on their socket."""
     tmp = tempfile.mkdtemp(prefix="svb_submit_gs_")
     try:
         zip_path = _engine_zip(tmp)
@@ -135,6 +153,6 @@ def test_spark_submit_pyfiles_get_spark_job():
         r = subprocess.run(cmd, capture_output=True, text=True, timeout=300,
                            env=env, cwd=tmp)
         assert r.returncode == 0, r.stderr[-2000:]
-        assert r.stdout.strip().splitlines()[-1] == "300"
+        assert r.stdout.strip().splitlines()[-2:] == ["300", str([1] * 8)]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
