@@ -16,13 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# glibc malloc tuning inherited by the JVM -> python workers (see
-# streamvbyte_spark/session.py): keeps freed NumPy buffers in the heap pool
-# instead of repaying kernel page faults per Arrow batch. Harmless if the
-# session already exists; >2x on codec kernels when it applies.
-os.environ.setdefault("MALLOC_MMAP_MAX_", "0")
-os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
-
 from streamvbyte_spark import queries as _q  # noqa: E402
 from streamvbyte_spark.operators import encode_table  # noqa: E402
 from streamvbyte_spark.sources import tokens_from_documents  # noqa: E402

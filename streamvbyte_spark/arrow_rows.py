@@ -8,11 +8,16 @@ flat plus int64 row offsets rebased to 0 (``list_flat``, ``binary_flat``),
 runs its NumPy kernel, and writes the flat results back as Arrow columns
 (``list_array``, ``binary_array``).  Readers are zero-copy and slice-safe;
 writers wrap the NumPy buffers.  ``complete_runs`` regroups a key-sorted
-batch stream so that no run of equal keys is split across batches.
+batch stream so that no run of equal keys is split across batches;
+``decode_slices`` cuts a batch of stored rows so that what a decoder
+writes back stays within the session's batch rule.  ``kernel_schema`` is
+the one owner of the kernels' output schemas: their token arrays never
+hold a NULL element, and they say so to Spark.
 """
 
 from __future__ import annotations
 
+from functools import lru_cache
 from typing import Iterable, Iterator
 
 import numpy as np
@@ -83,6 +88,71 @@ def binary_array(data: np.ndarray, offsets: np.ndarray) -> pa.Array:
     return pa.Array.from_buffers(
         pa.binary(), len(off32) - 1,
         [None, pa.py_buffer(off32), pa.py_buffer(np.ascontiguousarray(data))])
+
+
+def kernel_schema(ddl: str, carry=()):
+    """The StructType of a kernel's output DDL with every array declared
+    free of NULL elements (``containsNull=False``), then the ``carry``
+    fields (StructFields of input columns the kernel passes through
+    unchanged, declared as their input declares them).  Every package
+    ``mapInArrow`` declares its output through here.  The kernels write
+    arrays only through ``list_array``, which has no NULL path, so the
+    declaration is true; without it Spark checks each returned element for
+    NULL before copying it.  A kernel that did emit a NULL element under it
+    fails its task: Arrow Java's ``IntVector.get`` refuses to read a NULL
+    slot.  Input schemas of file and stream reads stay nullable.  The
+    result is shared by every caller of the same DDL: never mutate it."""
+    own = _kernel_struct(ddl)
+    if not carry:
+        return own
+    from pyspark.sql.types import StructType
+    return StructType(own.fields + list(carry))
+
+
+@lru_cache(maxsize=None)
+def _kernel_struct(ddl: str):
+    """kernel_schema's parse, once per DDL string: a parse is a JVM round
+    trip."""
+    from pyspark.sql.types import _parse_datatype_string
+    return _elements_non_null(_parse_datatype_string(ddl))
+
+
+def _elements_non_null(t):
+    from pyspark.sql.types import ArrayType, StructField, StructType
+    if isinstance(t, ArrayType):
+        return ArrayType(_elements_non_null(t.elementType), False)
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _elements_non_null(f.dataType),
+                                       f.nullable, f.metadata)
+                           for f in t.fields])
+    return t
+
+
+def decode_slices(batches: Iterable[pa.RecordBatch],
+                  limit: int) -> Iterator[pa.RecordBatch]:
+    """Zero-copy row slices of batches of stored rows, each slice decoding
+    to at most ``limit`` bytes of tokens (4 B a token of its ``n_tok``
+    column).  Like the reference's ``streamvbyte_decode(in, out, count)``,
+    whose caller sizes the output from the out-of-band count (SURVEY
+    §1.1), a decoder sizes what it writes back before it decodes: a batch
+    that crossed under the session's byte bound would otherwise leave as
+    ~2.7x that in tokens.  A single row over the limit is a slice of its
+    own (``list_array`` still guards its int32 offsets).  A batch with a
+    NULL count passes whole, for the decoder's reader to reject naming the
+    row."""
+    for batch in batches:
+        n = batch.column("n_tok")
+        if n.null_count or batch.num_rows < 2:
+            yield batch
+            continue
+        ends = 4 * np.cumsum(np.asarray(n, dtype=np.int64))
+        start = 0
+        while start < batch.num_rows:
+            base = int(ends[start - 1]) if start else 0
+            stop = max(int(np.searchsorted(ends, base + limit, side="right")),
+                       start + 1)
+            yield batch.slice(start, stop - start)
+            start = stop
 
 
 def complete_runs(batches: Iterable[pa.RecordBatch],

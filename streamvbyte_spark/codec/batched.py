@@ -122,19 +122,7 @@ def check_codec(codec: str) -> str:
     return codec
 
 
-_SCRATCH: dict[str, np.ndarray] = {}
 _ARANGES: dict[str, np.ndarray] = {}
-
-
-def _scratch(name: str, size: int, dtype) -> np.ndarray:
-    """Process-lifetime scratch buffer (Spark reuses Python workers, so the
-    page-fault cost of large transient allocations is paid once, not per
-    batch — a real lever on hosts with slow first-touch memory)."""
-    a = _SCRATCH.get(name)
-    if a is None or a.size < size or a.dtype != np.dtype(dtype):
-        a = np.empty(int(size * 5 // 4) + 16, dtype=dtype)
-        _SCRATCH[name] = a
-    return a[:size]
 
 
 def _cached_arange(n: int, dtype) -> np.ndarray:
@@ -334,7 +322,7 @@ def _svb_encode_rows(flat: np.ndarray, offsets: np.ndarray, scheme0124: bool,
         ends = np.cumsum(lens, dtype=idt)  # <= 4V, fits idt
         # data bytes: per-value destination = global byte start minus the
         # row's data base plus the row's (out offset + control length)
-        dest = _scratch("enc_dest", V, idt)
+        dest = np.empty(V, idt)
         np.subtract(ends, lens, out=dest, casting="unsafe")
         row_adj = (_row_base_at(ends, quads[:-1])
                    - out_starts - key_len).astype(idt)
@@ -466,10 +454,10 @@ def _svb_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarra
     ctrl = enc[_segment_index(starts, pkey, ctrl_starts)]
     codes_padded = _CTRL_CODES_U32[ctrl].view(np.uint8)
     idt = np.int32 if enc.size + 4 < 2**31 and V * 4 < 2**31 else np.int64
-    # per-value index into codes_padded, built in one scratch buffer:
+    # per-value index into codes_padded, built in one buffer:
     # arange(V) - repeat(row_start) + repeat(4*ctrl_start) with the two
     # repeats fused into one (their operand is combined per row first)
-    intra = _scratch("dec_intra", V, idt)
+    intra = np.empty(V, idt)
     row_shift = (4 * ctrl_starts - offsets[:-1]).astype(idt)
     np.add(_cached_arange(V, idt), np.repeat(row_shift, nr), out=intra)
     codes = codes_padded[intra]
@@ -488,7 +476,7 @@ def _svb_decode_rows(enc: np.ndarray, enc_offsets: np.ndarray, n_toks: np.ndarra
     else:
         check(data_stop > stops, lambda r: f"its {nr[r]}-value prefix "
               f"ends at byte {data_stop[r] - starts[r]}")
-    src = _scratch("dec_src", V, idt)
+    src = np.empty(V, idt)
     np.subtract(ends, lens, out=src, casting="unsafe")
     src -= np.repeat(shift.astype(idt), nr)
     # ONE unconditional little-endian 4-byte load per value (a stride-1
@@ -635,12 +623,11 @@ def _dict_costs(flat: np.ndarray, offsets: np.ndarray, nr: np.ndarray,
     R = nr.size
     # int32 index arithmetic: R << 10 <= 2^24 (guard above), so
     # (row << 10) + low bits fits int32 — half the temp traffic of int64
-    idx = _scratch("dictlb_idx", flat.size, np.uint32)
+    idx = np.empty(flat.size, np.uint32)
     np.bitwise_and(flat, np.uint32(1023), out=idx)
     idx = idx.view(np.int32)
     idx += np.repeat(_cached_arange(R, np.int32) << 10, nr)
-    pres = _scratch("dictlb_pres", R << 10, np.uint8)
-    pres[:] = 0
+    pres = np.zeros(R << 10, np.uint8)
     pres[idx] = 1
     klb = pres.reshape(R, -1).sum(axis=1, dtype=np.int64)
     wlb = _exact_width(np.maximum(klb - 1, 0))
@@ -687,14 +674,14 @@ def _row_distinct(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
         return np.zeros(nr.size, dtype=np.int64)
     # composite key (row_id << 32 | value): one flat sort groups rows and
     # orders values within each row — much faster than lexsort.  Built
-    # in-place in scratch to avoid three 8B/value transient allocations.
-    key = _scratch("dist_key", flat.size, np.uint64)
+    # in place to avoid three 8B/value transient allocations.
+    key = np.empty(flat.size, np.uint64)
     np.copyto(key, flat, casting="unsafe")
     rid = np.repeat(_cached_arange(nr.size, np.uint64), nr)
     np.left_shift(rid, np.uint64(32), out=rid)
     np.bitwise_or(key, rid, out=key)
     key.sort()
-    new = _scratch("dist_new", key.size, np.uint8)
+    new = np.empty(key.size, np.uint8)
     new[0] = 1
     np.not_equal(key[1:], key[:-1], out=new[1:].view(bool))
     return _seg_sum(new, offsets)  # sort preserves row segment boundaries
@@ -877,7 +864,7 @@ def _rle_costs(flat: np.ndarray, offsets: np.ndarray, lens1234: np.ndarray,
     nr = (offsets[1:] - offsets[:-1]).astype(np.int64)
     if flat.size == 0:
         return np.zeros(nr.size, dtype=np.int64)
-    is_start = _scratch("rle_start", flat.size, np.uint8)
+    is_start = np.empty(flat.size, np.uint8)
     is_start[0] = 1
     np.not_equal(flat[1:], flat[:-1], out=is_start[1:].view(bool))
     row_starts = offsets[:-1][nr > 0]

@@ -27,7 +27,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 
-from ..arrow_rows import list_flat
+from ..arrow_rows import kernel_schema, list_flat
 from ..session import fanout_scan, fanout_width
 
 QSCALE = 10000
@@ -208,7 +208,7 @@ def ann_exact_local_topk(cands, q_ids: np.ndarray, q_quant: np.ndarray,
                 names += ["na", "nb"]
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return part.mapInArrow(run, out_schema)
+    return part.mapInArrow(run, kernel_schema(out_schema))
 
 
 def neardup_local_topk(banded, k: int = 50):
@@ -345,5 +345,5 @@ def neardup_local_topk(banded, k: int = 50):
                      pa.array(nb, pa.int64())],
                     names=["id_a", "id_b", "dot", "na", "nb"])
 
-    return part.mapInArrow(
-        run, "id_a long, id_b long, dot long, na long, nb long")
+    return part.mapInArrow(run, kernel_schema(
+        "id_a long, id_b long, dot long, na long, nb long"))

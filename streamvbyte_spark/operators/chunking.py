@@ -23,7 +23,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..arrow_rows import binary_array, complete_runs, list_array, list_flat
+from .. import session
+from ..arrow_rows import (binary_array, complete_runs, decode_slices,
+                          kernel_schema, list_array, list_flat)
 from ..codec import batched
 from ..session import fanout_width
 from .encode import decode_rows_at, encoded_rows
@@ -97,7 +99,7 @@ def encode_chunked_delta(chunked: DataFrame,
                 names=["doc_id", "chunk_id", "tok_start", "n_tok", "prev",
                        "encoded", "out_bytes"])
 
-    return chunked.mapInArrow(run, CHUNKED_ENC_SCHEMA)
+    return chunked.mapInArrow(run, kernel_schema(CHUNKED_ENC_SCHEMA))
 
 
 def _decode_chunks(batch: pa.RecordBatch, codec: str,
@@ -128,13 +130,16 @@ def decode_chunked_delta(enc_df: DataFrame,
     """Decode chunks (each resumable from its stored prev — or, for
     codec='ef', self-contained absolute values — no cross-chunk dependency
     at decode time: chunks of one doc decode in parallel).  A NULL
-    ``encoded`` row raises ValueError naming its doc_id."""
+    ``encoded`` row raises ValueError naming its doc_id.  A batch decodes
+    in slices of at most session.ARROW_BATCH_BYTES of tokens
+    (arrow_rows.decode_slices)."""
     if codec not in _CHUNK_CODECS:
         raise ValueError(f"chunk codec must be one of {_CHUNK_CODECS}, "
                          f"got {codec!r}")
+    limit = session.ARROW_BATCH_BYTES
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
+        for batch in decode_slices(batches, limit):
             flat, offsets = _decode_chunks(batch, codec)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(batch.schema.get_field_index("doc_id")),
@@ -142,7 +147,8 @@ def decode_chunked_delta(enc_df: DataFrame,
                  list_array(flat.view(np.int32), offsets)],
                 names=["doc_id", "chunk_id", "chunk"])
 
-    return enc_df.mapInArrow(run, "doc_id string, chunk_id int, chunk array<int>")
+    return enc_df.mapInArrow(run, kernel_schema(
+        "doc_id string, chunk_id int, chunk array<int>"))
 
 
 def reassemble(decoded_chunks: DataFrame) -> DataFrame:
@@ -287,6 +293,6 @@ def decode_reassemble_fused(enc_df: DataFrame,
                 continue
             yield from _flush_doc_batches(ids[starts], flat, doc_tok_off)
 
-    return part.mapInArrow(
-        run, "doc_id string, n_tok int, fingerprint bigint" if fingerprint
-        else "doc_id string, tokens array<int>, n_tok int")
+    return part.mapInArrow(run, kernel_schema(
+        "doc_id string, n_tok int, fingerprint bigint" if fingerprint
+        else "doc_id string, tokens array<int>, n_tok int"))

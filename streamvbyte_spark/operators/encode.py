@@ -29,7 +29,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..arrow_rows import binary_array, binary_flat, list_array, list_flat
+from .. import session
+from ..arrow_rows import (binary_array, binary_flat, decode_slices,
+                          kernel_schema, list_array, list_flat)
 from ..codec import batched
 
 ENCODED_SCHEMA = (
@@ -101,7 +103,7 @@ def encode_table(df: DataFrame, codec: str = "auto",
                        "tok_min", "tok_max"],
             )
 
-    return df.mapInArrow(run, ENCODED_SCHEMA)
+    return df.mapInArrow(run, kernel_schema(ENCODED_SCHEMA))
 
 
 def size_table(df: DataFrame, codec: str = "auto", flat_transform=None,
@@ -138,10 +140,8 @@ def size_table(df: DataFrame, codec: str = "auto", flat_transform=None,
                    for c in carry],
                 names=["doc_id", "size_bytes", *carry])
 
-    carry_schema = "".join(
-        f", {c} {df.schema[c].dataType.simpleString()}" for c in carry)
-    return df.mapInArrow(run, "doc_id string, size_bytes bigint"
-                         + carry_schema)
+    return df.mapInArrow(run, kernel_schema(
+        "doc_id string, size_bytes bigint", [df.schema[c] for c in carry]))
 
 
 # the codec column's ids, for index_in against a stored int32 codec column
@@ -214,11 +214,14 @@ def check_checksums(batch: pa.RecordBatch, key: str, flat: np.ndarray,
 def _decode(enc_df: DataFrame, decode, verify_checksum: bool,
             fingerprint: bool) -> DataFrame:
     """The kernel of decode_table and decode_table_prefix:
-    decode(enc, offsets, n_tok, codec ids) -> (flat, offsets) per batch;
-    the output n_tok is each row's decoded length."""
+    decode(enc, offsets, n_tok, codec ids) -> (flat, offsets) per slice
+    of an input batch that decodes to at most session.ARROW_BATCH_BYTES
+    of tokens (arrow_rows.decode_slices); the output n_tok is each row's
+    decoded length."""
+    limit = session.ARROW_BATCH_BYTES
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
+        for batch in decode_slices(batches, limit):
             flat, offsets = decode_rows_at(batch, "doc_id", decode,
                                            *encoded_rows(batch, "doc_id"))
             if verify_checksum:
@@ -235,8 +238,8 @@ def _decode(enc_df: DataFrame, decode, verify_checksum: bool,
                 [doc, list_array(flat.view(np.int32), offsets), nr, src],
                 names=["doc_id", "tokens", "n_tok", "source"])
 
-    return enc_df.mapInArrow(
-        run, DECODED_FP_SCHEMA if fingerprint else DECODED_SCHEMA)
+    return enc_df.mapInArrow(run, kernel_schema(
+        DECODED_FP_SCHEMA if fingerprint else DECODED_SCHEMA))
 
 
 def decode_table(enc_df: DataFrame, verify_checksum: bool = True,

@@ -59,7 +59,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..arrow_rows import binary_array, list_array, list_flat
+from ..arrow_rows import binary_array, kernel_schema, list_array, list_flat
 from ..codec import batched
 from ..session import fanout_scan
 from .chunking import encode_chunked_delta
@@ -265,8 +265,8 @@ def _encode_chunks(chunks: DataFrame, kind: str, streams) -> DataFrame:
                  batch.column(batch.schema.get_field_index("chunk_id")),
                  *cols, pa.array(out_bytes, pa.int64())], names=names)
 
-    return chunks.mapInArrow(run, f"doc_id string, chunk_id int, "
-                                  f"{wire_schema(kind)}, out_bytes bigint")
+    return chunks.mapInArrow(run, kernel_schema(
+        f"doc_id string, chunk_id int, {wire_schema(kind)}, out_bytes bigint"))
 
 
 def build_index_tf_chunked(docs: DataFrame,
@@ -354,7 +354,8 @@ def decode_index_pos(enc_index: DataFrame) -> DataFrame:
                  pa.array(poss.view(np.int32), pa.int32())],
                 names=["term", "did", "pos"])
 
-    return enc_index.mapInArrow(run, "term string, did int, pos int")
+    return enc_index.mapInArrow(
+        run, kernel_schema("term string, did int, pos int"))
 
 
 class _ServingOp(NamedTuple):
@@ -555,8 +556,8 @@ def decode_index_tf(enc_index: DataFrame) -> DataFrame:
                  list_array(tfs.view(np.int32), doff)],
                 names=["term", "dids", "tfs"])
 
-    lists = enc_index.mapInArrow(
-        run, "term string, dids array<int>, tfs array<int>")
+    lists = enc_index.mapInArrow(run, kernel_schema(
+        "term string, dids array<int>, tfs array<int>"))
     return lists.select(
         "term", F.expr("inline(arrays_zip(dids, tfs))")) \
         .withColumnRenamed("dids", "did").withColumnRenamed("tfs", "tf")
@@ -595,7 +596,8 @@ def _did_rows(enc_index: DataFrame, op: _ServingOp,
             yield pa.RecordBatch.from_arrays([pa.array(dids, pa.int32())],
                                              names=["did"])
 
-    return _joined(enc_index, op, terms).mapInArrow(run, "did int")
+    return _joined(enc_index, op, terms).mapInArrow(
+        run, kernel_schema("did int"))
 
 
 def _gate_scalar(enc_index: DataFrame, op: _ServingOp, terms: list[str],
@@ -649,7 +651,7 @@ def _gate_scalar(enc_index: DataFrame, op: _ServingOp, terms: list[str],
     schema = ", ".join([f"{n} string" for n in names]
                        + [f"{count_name} int", "fingerprint bigint"])
     return _scan(enc_index, op, terms).union(no_term).coalesce(1) \
-        .mapInArrow(fold, schema)
+        .mapInArrow(fold, kernel_schema(schema))
 
 
 def topk_and_terms(enc_index: DataFrame, term_a: str, term_b: str,
@@ -703,7 +705,7 @@ def topk_and_terms(enc_index: DataFrame, term_a: str, term_b: str,
                     ["_a", "_b"], "and", run)
     scored = _scan(enc_index, op, terms).coalesce(1).mapInArrow(
         lambda batches: run(_aligned(batches, terms, op)),
-        "did int, tf_a int, tf_b int, score int")
+        kernel_schema("did int, tf_a int, tf_b int, score int"))
     return (scored.orderBy(F.col("score").desc(), F.col("did").asc())
             .limit(k))
 

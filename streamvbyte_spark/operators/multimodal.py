@@ -25,12 +25,13 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..arrow_rows import binary_array, binary_flat, list_array
+from ..arrow_rows import binary_array, binary_flat, kernel_schema, list_array
 from ..session import fanout_scan
 
 MEDIA_SCHEMA = ("doc_id string, media_type string, payload binary, "
                 "meta struct<n_bytes: int, fmt: string>")
 FEATURE_SCHEMA = "doc_id string, n_bytes bigint, byte_sum bigint, feature array<float>"
+PAYLOAD_SCHEMA = "doc_id string, payload binary"
 
 
 def synth_media_table(docs: DataFrame) -> DataFrame:
@@ -526,7 +527,7 @@ def synth_adpcm_table(docs: DataFrame, rate: int = 16000) -> DataFrame:
     base = fanout_scan(docs, "doc_id").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
-    return (base.mapInArrow(run, "doc_id string, payload binary")
+    return (base.mapInArrow(run, kernel_schema(PAYLOAD_SCHEMA))
             .where(F.col("payload").isNotNull()))
 
 
@@ -569,7 +570,7 @@ def synth_ppm_table(docs: DataFrame, width: int = 4) -> DataFrame:
     base = fanout_scan(docs, "doc_id").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
-    out = base.mapInArrow(run, "doc_id string, payload binary")
+    out = base.mapInArrow(run, kernel_schema(PAYLOAD_SCHEMA))
     return out.where(F.col("payload").isNotNull())
 
 
@@ -655,7 +656,7 @@ def synth_png_table(docs: DataFrame, width: int = 4) -> DataFrame:
     base = fanout_scan(docs, "doc_id").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
-    return (base.mapInArrow(run, "doc_id string, payload binary")
+    return (base.mapInArrow(run, kernel_schema(PAYLOAD_SCHEMA))
             .where(F.col("payload").isNotNull()))
 
 
@@ -690,7 +691,7 @@ def synth_jpeg_table(docs: DataFrame, width_blocks: int = 2) -> DataFrame:
     base = fanout_scan(docs, "doc_id").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
-    return (base.mapInArrow(run, "doc_id string, payload binary")
+    return (base.mapInArrow(run, kernel_schema(PAYLOAD_SCHEMA))
             .where(F.col("payload").isNotNull()))
 
 
@@ -725,7 +726,7 @@ def synth_wav_table(docs: DataFrame, rate: int = 16000) -> DataFrame:
     base = fanout_scan(docs, "doc_id").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.encode("text", "utf-8").alias("payload"))
-    return (base.mapInArrow(run, "doc_id string, payload binary")
+    return (base.mapInArrow(run, kernel_schema(PAYLOAD_SCHEMA))
             .where(F.col("payload").isNotNull()))
 
 
@@ -760,7 +761,7 @@ def audio_stats_table(media: DataFrame) -> DataFrame:
                 names=["doc_id", "frames", "channels", "sample_rate",
                        "sum_samples"])
 
-    return media.mapInArrow(run, AUDIO_STATS_SCHEMA)
+    return media.mapInArrow(run, kernel_schema(AUDIO_STATS_SCHEMA))
 
 
 def _decoded_images(batch: pa.RecordBatch) -> tuple[pa.Array, list]:
@@ -804,7 +805,7 @@ def image_stats_table(media: DataFrame) -> DataFrame:
                  pa.array(sums[:, 2], pa.int64())],
                 names=["doc_id", "height", "width", "sum_r", "sum_g", "sum_b"])
 
-    return media.mapInArrow(run, IMAGE_STATS_SCHEMA)
+    return media.mapInArrow(run, kernel_schema(IMAGE_STATS_SCHEMA))
 
 
 IMAGE_DECODE_SCHEMA = ("doc_id string, height int, width int, "
@@ -839,7 +840,7 @@ def decode_image_table(media: DataFrame, out_w: int | None = None,
                 names=["doc_id", "height", "width",
                        "mean_r", "mean_g", "mean_b"])
 
-    return media.mapInArrow(run, IMAGE_DECODE_SCHEMA)
+    return media.mapInArrow(run, kernel_schema(IMAGE_DECODE_SCHEMA))
 
 
 FRAME_SCHEMA = ("doc_id string, frame_id int, frame_len int, "
@@ -889,7 +890,7 @@ def sample_frames(media: DataFrame, frame_bytes: int = 64,
                 names=["doc_id", "frame_id", "frame_len",
                        "frame_sum", "frame"])
 
-    return media.mapInArrow(run, FRAME_SCHEMA)
+    return media.mapInArrow(run, kernel_schema(FRAME_SCHEMA))
 
 
 def extract_features(media: DataFrame) -> DataFrame:
@@ -922,4 +923,4 @@ def extract_features(media: DataFrame) -> DataFrame:
                             np.arange(nr.size + 1, dtype=np.int64) * 16)],
                 names=["doc_id", "n_bytes", "byte_sum", "feature"])
 
-    return media.mapInArrow(run, FEATURE_SCHEMA)
+    return media.mapInArrow(run, kernel_schema(FEATURE_SCHEMA))

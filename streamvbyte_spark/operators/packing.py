@@ -46,7 +46,9 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..arrow_rows import binary_array, complete_runs, list_array, list_flat
+from .. import session
+from ..arrow_rows import (binary_array, complete_runs, decode_slices,
+                          kernel_schema, list_array, list_flat)
 from ..codec import batched
 from ..session import fanout_width
 from .encode import check_checksums, decode_rows_at, encoded_rows
@@ -91,9 +93,8 @@ def _encode_docs(tok: DataFrame, codec: str,
     downstream decode dispatches on.  `carry` names extra input columns
     passed through untouched (the curated path carries md5(text) so its
     dedup rank window can run over the ENCODED rows)."""
-    carry_types = {f.name: f.dataType.simpleString() for f in tok.schema
-                   if f.name in carry}
-    missing = [c for c in carry if c not in carry_types]
+    fields = {f.name: f for f in tok.schema if f.name in carry}
+    missing = [c for c in carry if c not in fields]
     if missing:
         raise ValueError(f"carry columns not in input: {missing}")
 
@@ -114,10 +115,9 @@ def _encode_docs(tok: DataFrame, codec: str,
                 names=["doc_id", "source", "n_tok", "codec", "encoded"]
                 + list(carry))
 
-    schema = ("doc_id string, source string, n_tok int, codec int, "
-              "encoded binary"
-              + "".join(f", {c} {carry_types[c]}" for c in carry))
-    return tok.mapInArrow(run, schema)
+    return tok.mapInArrow(run, kernel_schema(
+        "doc_id string, source string, n_tok int, codec int, encoded binary",
+        [fields[c] for c in carry]))
 
 
 def _slice_segments(cum: DataFrame, cap: int, codec: str) -> DataFrame:
@@ -167,7 +167,7 @@ def _slice_segments(cum: DataFrame, cap: int, codec: str) -> DataFrame:
                 names=["source", "pack_id", "seg_st", "n_seg", "codec",
                        "encoded"])
 
-    return cum.mapInArrow(run, _SEG_SCHEMA)
+    return cum.mapInArrow(run, kernel_schema(_SEG_SCHEMA))
 
 
 def pack_tokens_encoded(tok: DataFrame, cap: int = PACK_CAP,
@@ -307,12 +307,10 @@ def pack_encoded_rows(enc: DataFrame, cap: int = PACK_CAP,
                 head + [pa.array(fp, pa.int64())],
                 names=["source", "pack_id", "n_tok", "fingerprint"])
 
-    if emit == "encoded":
-        return part.mapInArrow(
-            asm, "source string, pack_id long, n_tok int, codec int, "
-                 "checksum long, encoded binary")
-    return part.mapInArrow(
-        asm, "source string, pack_id long, n_tok int, fingerprint bigint")
+    return part.mapInArrow(asm, kernel_schema(
+        "source string, pack_id long, n_tok int, codec int, checksum long, "
+        "encoded binary" if emit == "encoded" else
+        "source string, pack_id long, n_tok int, fingerprint bigint"))
 
 
 def decode_packs(packs: DataFrame, verify_checksum: bool = True,
@@ -323,10 +321,13 @@ def decode_packs(packs: DataFrame, verify_checksum: bool = True,
     themselves with fingerprint=False (the dataloader shape).  A NULL
     stream, a NULL or unknown codec id (encode.encoded_rows), a stream
     whose length contradicts its count (encode.decode_rows_at) and a
-    checksum mismatch raise ValueError naming the pack_id."""
+    checksum mismatch raise ValueError naming the pack_id.  A batch
+    decodes in slices of at most session.ARROW_BATCH_BYTES of tokens
+    (arrow_rows.decode_slices)."""
+    limit = session.ARROW_BATCH_BYTES
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
+        for batch in decode_slices(batches, limit):
             if batch.num_rows == 0:
                 continue
             flat, offs = decode_rows_at(batch, "pack_id", batched.decode_rows,
@@ -344,7 +345,7 @@ def decode_packs(packs: DataFrame, verify_checksum: bool = True,
                 head + [list_array(flat.view(np.int32), offs)],
                 names=["source", "pack_id", "n_tok", "tokens"])
 
-    schema = ("source string, pack_id long, n_tok int, fingerprint bigint"
-              if fingerprint else
-              "source string, pack_id long, n_tok int, tokens array<int>")
-    return packs.mapInArrow(run, schema)
+    return packs.mapInArrow(run, kernel_schema(
+        "source string, pack_id long, n_tok int, fingerprint bigint"
+        if fingerprint else
+        "source string, pack_id long, n_tok int, tokens array<int>"))

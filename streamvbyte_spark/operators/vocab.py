@@ -32,6 +32,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..arrow_rows import kernel_schema, list_array, list_flat
 
 # token-range bucket width for build_vocab's two-level rank (power of two so
 # the bucket is an arithmetic shift): bounds every rank window partition at
@@ -126,7 +127,6 @@ def remap_tokens(tok_df: DataFrame, vocab_df: DataFrame,
     b_ids = spark.sparkContext.broadcast(sorted_ids)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..arrow_rows import list_array, list_flat
         vt, vi = b_toks.value, b_ids.value
         for batch in batches:
             flat, offsets = list_flat(
@@ -144,8 +144,8 @@ def remap_tokens(tok_df: DataFrame, vocab_df: DataFrame,
                  batch.column(batch.schema.get_field_index("source"))],
                 names=["doc_id", "tokens", "n_tok", "source"])
 
-    return tok_df.mapInArrow(
-        run, "doc_id string, tokens array<int>, n_tok int, source string")
+    return tok_df.mapInArrow(run, kernel_schema(
+        "doc_id string, tokens array<int>, n_tok int, source string"))
 
 
 def remap_tokens_join(tok_df: DataFrame, vocab_df: DataFrame) -> DataFrame:

@@ -19,7 +19,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .arrow_rows import binary_flat, list_array, list_flat
+from .arrow_rows import binary_flat, kernel_schema, list_array, list_flat
 from .codec import batched
 from .functions import pipeline_sql
 from .functions.sqlpair import (
@@ -272,9 +272,9 @@ def _signed_roundtrip(df: DataFrame, id_col: str, delta: bool,
                 [ident, list_array(dec_flat, dec_off)],
                 names=[id_col, "tokens"])
 
-    return df.mapInArrow(
-        run, f"{id_col} string, n_tok int, fingerprint bigint" if fingerprint
-        else f"{id_col} string, tokens array<int>")
+    return df.mapInArrow(run, kernel_schema(
+        f"{id_col} string, n_tok int, fingerprint bigint" if fingerprint
+        else f"{id_col} string, tokens array<int>"))
 
 
 def _encoded(spark: SparkSession, sf_dir: str, codec: str,
@@ -544,7 +544,8 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                      pa.array(ok, pa.bool_())],
                     names=["doc_id", "is_valid"])
 
-        return enc.mapInArrow(run, "doc_id string, is_valid boolean")
+        return enc.mapInArrow(
+            run, kernel_schema("doc_id string, is_valid boolean"))
 
     q["validate_stream"] = validate_query
     # operator 11 of SURVEY.md 2.1: the 0124 length map (len = (1<<code)>>1)
@@ -574,8 +575,8 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                      pa.array(out_b <= bound, pa.bool_())],
                     names=["doc_id", "max_bytes", "within_bound"])
 
-        return enc.mapInArrow(
-            run, "doc_id string, max_bytes bigint, within_bound boolean")
+        return enc.mapInArrow(run, kernel_schema(
+            "doc_id string, max_bytes bigint, within_bound boolean"))
 
     q["max_compressed_bound"] = max_compressed_bound
 

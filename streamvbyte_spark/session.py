@@ -2,8 +2,8 @@
 
 The defaults keep the codec kernels fed and the Python stages cheap: AQE
 re-planning, Arrow-batched Python exchange in batches of at most 4 MiB
-(``ARROW_BATCH_BYTES``), reused Python workers with a malloc that keeps
-freed memory, and pushdown-friendly parquet scans.  They hold on local[N]
+(``ARROW_BATCH_BYTES``) each way, reused Python workers, and
+pushdown-friendly parquet scans.  They hold on local[N]
 and on a cluster alike.  The session's shuffle partitions are also the
 width of every CPU-heavy stage: ``fanout_width`` reads it and
 ``fanout_scan`` is the one scan fan-out rule.
@@ -141,28 +141,16 @@ def worker_quickack() -> int | None:
 _drop_spark_archives_from_worker_path()
 _quickack_every_task()
 
-# glibc malloc tuning for the Python workers: without it every large NumPy
-# allocation is mmap'd and returned to the OS on free, so each Arrow batch
-# repays the kernel page-fault cost. Keeping freed memory in the heap pool is
-# worth >2x on the codec kernels.
-_WORKER_MALLOC_ENV = {
-    "MALLOC_MMAP_MAX_": "0",
-    "MALLOC_TRIM_THRESHOLD_": "-1",
-}
-
 
 # The one Arrow batch rule: a JVM -> Python batch closes at 4 MiB (~1,970
-# rows of 512 tokens) or at 2^14 rows, whichever comes first.  A worker
-# keeps its largest batch's peak for the rest of the run (freed memory
-# stays in its heap, the kernels' scratch pools live as long as the
-# process), so the byte bound is what holds Python RSS; bulk_codec on 4
-# cores reads Python 1,034 MB + JVM 2,888 MB (the sweep behind 4 MiB is in
-# ROADMAP direction 4).  Below ~2,000 rows a batch, Spark's per-batch work
-# shows.  The bound caps a stage's input, not its output: a decode stage
-# writes up to ~2.7x what it reads.  The row cap binds only on rows under
-# 256 bytes; it keeps every batch within codec/batched._dict_costs'
-# 2^14-row presence table and gives a temporary conf override a value to
-# restore.
+# rows of 512 tokens) or at 2^14 rows, whichever comes first, and a decoder
+# writes back at most 4 MiB of tokens a batch (arrow_rows.decode_slices,
+# read when the decode is planned), so the byte bound holds a Python
+# worker's peak both ways (the sweep behind 4 MiB is in ROADMAP direction
+# 4).  Below ~2,000 rows a batch, Spark's per-batch work shows.  The row
+# cap binds only on rows under 256 bytes; it keeps every batch within
+# codec/batched._dict_costs' 2^14-row presence table and gives a temporary
+# conf override a value to restore.
 ARROW_BATCH_BYTES = 4 << 20
 ARROW_BATCH_ROWS = 1 << 14
 
@@ -220,8 +208,7 @@ def get_spark(app: str = "streamvbyte-spark", master: str | None = None,
     cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
-    os.environ.update(_WORKER_MALLOC_ENV)
-    b = (
+    return (
         SparkSession.builder.appName(app)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -237,7 +224,5 @@ def get_spark(app: str = "streamvbyte-spark", master: str | None = None,
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.python.worker.reuse", "true")
+        .getOrCreate()
     )
-    for k, v in _WORKER_MALLOC_ENV.items():
-        b = b.config(f"spark.executorEnv.{k}", v)
-    return b.getOrCreate()

@@ -21,10 +21,13 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..arrow_rows import list_array
+from ..arrow_rows import kernel_schema, list_array
 from ..functions.sqlpair import spark_tokens_expr
 from ..session import fanout_scan, fanout_width
 
+# the token table's schema as a reader declares it (encode_stream's file
+# source): elements nullable; synthetic_tokens declares its own output
+# through arrow_rows.kernel_schema
 TOKENS_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
 
@@ -155,7 +158,7 @@ def synthetic_tokens(spark: SparkSession, n_docs: int, avg_len: int = 256,
                 names=["doc_id", "tokens", "n_tok", "source"],
             )
 
-    return base.mapInArrow(gen, TOKENS_SCHEMA)
+    return base.mapInArrow(gen, kernel_schema(TOKENS_SCHEMA))
 
 
 def tokens_from_jsonl(spark: SparkSession, path: str) -> DataFrame:

@@ -300,8 +300,9 @@ def test_bulk_mix_groups_write_in_place():
     between other groups' rows, with empty rows between them and at the
     end.  auto encode is byte-identical per row to the scalar selector,
     decode and prefix decode are exact — and stay so after a larger,
-    differently shaped batch has filled the scratch pools (outputs are
-    np.empty, so every byte must be written)."""
+    differently shaped batch has run (outputs and index buffers are
+    np.empty, which may hand back what that batch freed, so every byte
+    must be written)."""
     rng = np.random.default_rng(15)
     arrays = _bulk_family_rows(rng, 150, 7)
     flat = np.concatenate(arrays)
@@ -378,9 +379,9 @@ def test_aqrit_exhaustive_full_domain_batched():
 def test_encode_bytes_deterministic_under_scratch_pollution():
     """Encode output buffers are np.empty (no memset): every byte must be
     written by the data/ctrl scatters.  Uninitialized-memory leakage would
-    make bytes depend on what a previous call left in the reused scratch
-    pools — so encode A, pollute with differently-shaped B, encode A again
-    and require byte identity."""
+    make bytes depend on what a previous call left in memory that np.empty
+    hands back — so encode A, pollute with differently-shaped B, encode A
+    again and require byte identity."""
     rng = np.random.default_rng(11)
     lens_a = rng.integers(1, 50, 300)
     off_a = np.concatenate([[0], np.cumsum(lens_a)]).astype(np.int64)

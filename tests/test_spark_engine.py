@@ -4,6 +4,7 @@ prev chaining, checkpoint-resume lineage, multimodal plumbing, disk round-trip
 
 from __future__ import annotations
 
+import ast
 import os
 import shutil
 import socket
@@ -17,7 +18,8 @@ from pyspark.sql import functions as F
 from scalar_oracle import core
 from streamvbyte_spark.operators import decode_table, encode_table, verify_roundtrip
 from streamvbyte_spark.operators.chunking import (
-    chunk_tokens, decode_chunked_delta, encode_chunked_delta, reassemble)
+    chunk_tokens, decode_chunked_delta, decode_reassemble_fused,
+    encode_chunked_delta, reassemble)
 from streamvbyte_spark.operators.lineage import (
     encode_with_checkpoint, lineage_metrics, read_encoded)
 from streamvbyte_spark.operators.multimodal import extract_features, synth_media_table
@@ -615,7 +617,7 @@ def _one_partition_tokens(spark, rows, n_tok):
     return spark.range(0, rows, 1, numPartitions=1).selectExpr(
         "cast(id as string) as doc_id", "'s' as source",
         f"transform(sequence(1, {n_tok}), i -> cast(pmod(id * 2654435761 "
-        "+ i * 40503, shiftleft(1L, cast(id % 31 + 1 as int))) as int)) "
+        "+ i * 40503L, shiftleft(1L, cast(id % 31 + 1 as int))) as int)) "
         "as tokens").selectExpr("*", "size(tokens) as n_tok")
 
 
@@ -648,9 +650,9 @@ def test_session_arrow_batch_rule(spark):
 def test_roundtrip_across_unequal_session_batches(spark):
     """At the session's batch rule, encode_table -> decode_table over one
     partition whose first batches hold long rows and whose last hold short
-    ones round-trips exactly: the kernels' scratch pools, sized by the long
-    batches, are reused by the short ones (2,000 rows of ~6 KB fill the
-    first batches by bytes, 40,000 rows of a few ints the last by rows)."""
+    ones round-trips exactly: a reused worker runs the short batches in
+    memory the long ones freed (2,000 rows of ~6 KB fill the first batches
+    by bytes, 40,000 rows of a few ints the last by rows)."""
     tok = _one_partition_tokens(
         spark, 42_000, "if(id < 2000, 1500 + cast(id % 7 as int), "
                       "1 + cast(id % 5 as int))").cache()
@@ -664,6 +666,219 @@ def test_roundtrip_across_unequal_session_batches(spark):
         assert verify_roundtrip(tok, decode_table(enc)) == 0
     finally:
         tok.unpersist()
+
+
+@pytest.fixture(scope="module")
+def long_rows(spark):
+    """(token table, its encode_table output), one partition each: 10,000
+    rows of 512 ints (~20 MB) and, at id 7000, one row of 1,100,000 ints,
+    which alone decodes to more than ARROW_BATCH_BYTES."""
+    tok = _one_partition_tokens(
+        spark, 10_001, "if(id = 7000, 1100000, 512)").cache()
+    enc = encode_table(tok, codec="auto").cache()
+    yield tok, enc
+    enc.unpersist()
+    tok.unpersist()
+
+
+def _emitted(df, build):
+    """(input batch number, rows, token bytes) of every batch the
+    mapInArrow stage ``build(df)`` adds emits, in order: its kernel runs
+    unchanged inside a wrapper that reports each output batch in place of
+    it.  ``df`` must be one partition, so the batch numbers are one
+    task's."""
+    import pyarrow as pa
+    cls = type(df)
+    plain = cls.mapInArrow
+
+    def spy(self, func, schema, *args, **kwargs):
+        def report(batches):
+            seen = 0
+
+            def counted():
+                nonlocal seen
+                for b in batches:
+                    seen += 1
+                    yield b
+            for out in func(counted()):
+                col = next(c for c in out.columns if pa.types.is_list(c.type))
+                yield pa.RecordBatch.from_pydict(
+                    {"batch": [seen], "rows": [out.num_rows],
+                     "nbytes": [4 * len(col.flatten())]})
+        return plain(self, report, "batch long, rows long, nbytes long")
+
+    cls.mapInArrow = spy
+    try:
+        staged = build(df)
+    finally:
+        cls.mapInArrow = plain
+    return [tuple(r) for r in staged.collect()]
+
+
+def _check_decode_slices(got, rows):
+    """Every emitted batch holds at most ARROW_BATCH_BYTES of tokens,
+    except the lone over-long row, which crosses whole; some input batch
+    was cut into several slices; no row is lost."""
+    from collections import Counter
+    from streamvbyte_spark.session import ARROW_BATCH_BYTES
+    assert sum(r for _, r, _ in got) == rows
+    assert all(b <= ARROW_BATCH_BYTES or r == 1 for _, r, b in got), got
+    assert [b for _, r, b in got if b > ARROW_BATCH_BYTES] == [4_400_000]
+    assert max(Counter(k for k, _, _ in got).values()) > 1, got
+
+
+def test_decode_table_slices_at_the_batch_rule(long_rows):
+    """decode_table writes each encoded batch back as slices of at most
+    ARROW_BATCH_BYTES of tokens (arrow_rows.decode_slices): a ~4 MiB
+    encoded batch of these rows decodes to ~5.5 MB.  The round trip is
+    exact across the slice seams."""
+    tok, enc = long_rows
+    _check_decode_slices(_emitted(enc, decode_table), 10_001)
+    assert verify_roundtrip(tok, decode_table(enc)) == 0
+
+
+def test_decode_packs_slices_at_the_batch_rule(long_rows):
+    """decode_packs(fingerprint=False) over stored packs (here one per
+    document, keyed by pack_id) slices like decode_table and round-trips
+    exactly."""
+    from streamvbyte_spark.operators.packing import decode_packs
+    tok, enc = long_rows
+    packs = enc.select("source", F.col("doc_id").cast("long").alias(
+        "pack_id"), "n_tok", "codec", "checksum", "encoded")
+    _check_decode_slices(
+        _emitted(packs, lambda d: decode_packs(d, fingerprint=False)),
+        10_001)
+    back = decode_packs(packs, fingerprint=False).select(
+        F.col("pack_id").cast("string").alias("doc_id"), "tokens")
+    assert verify_roundtrip(tok, back) == 0
+
+
+def test_decode_chunked_delta_slices_at_the_batch_rule(long_rows):
+    """decode_chunked_delta slices like decode_table (chunks of up to
+    2^21 tokens, so the long document is one over-long chunk) and
+    round-trips exactly through reassemble."""
+    tok, _ = long_rows
+    chunks = encode_chunked_delta(chunk_tokens(tok, chunk_size=1 << 21)) \
+        .coalesce(1).cache()
+    try:
+        _check_decode_slices(_emitted(chunks, decode_chunked_delta), 10_001)
+        assert verify_roundtrip(
+            tok, reassemble(decode_chunked_delta(chunks))) == 0
+    finally:
+        chunks.unpersist()
+
+
+def test_sliced_decoders_name_a_null_row(spark, monkeypatch):
+    """Under a batch rule small enough to cut every batch into one-row
+    slices, a NULL stream or a NULL n_tok still fails decode_table,
+    decode_chunked_delta and decode_packs with a ValueError naming the
+    row's key (a NULL count leaves its batch whole, for encoded_rows to
+    reject)."""
+    from streamvbyte_spark import session
+    from streamvbyte_spark.operators.packing import decode_packs
+    monkeypatch.setattr(session, "ARROW_BATCH_BYTES", 16)
+    tok = spark.createDataFrame(
+        [(str(i), list(range(i, i + 6)), 6, "s") for i in range(6)],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    enc = encode_table(tok, codec="svb").coalesce(1)
+    packs = enc.select("source", F.col("doc_id").cast("long").alias(
+        "pack_id"), "n_tok", "codec", "checksum", "encoded")
+    chunks = encode_chunked_delta(chunk_tokens(tok, chunk_size=4)) \
+        .coalesce(1)
+    cases = ((decode_table, enc, "doc_id", "3"),
+             (lambda d: decode_packs(d, fingerprint=False), packs,
+              "pack_id", "3"),
+             (decode_chunked_delta, chunks, "doc_id", "3"))
+    for decode, df, key, bad in cases:
+        assert decode(df).count() == df.count()
+        for col, what in (("encoded", "NULL encoded stream"),
+                          ("n_tok", "NULL n_tok")):
+            holed = df.withColumn(col, F.when(
+                F.col(key).cast("string") != bad, F.col(col)))
+            with pytest.raises(Exception, match=f"ValueError: {what} "
+                                                f"decoding {key}={bad}"):
+                decode(holed).collect()
+
+
+def _package_mapinarrow_schemas():
+    """(file:line, schema argument node) of every ``.mapInArrow(func,
+    schema)`` call in the package source."""
+    import pathlib
+    import streamvbyte_spark
+    root = pathlib.Path(streamvbyte_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "mapInArrow"):
+                arg = (node.args[1] if len(node.args) > 1 else
+                       next(k.value for k in node.keywords
+                            if k.arg == "schema"))
+                yield f"{path.relative_to(root)}:{node.lineno}", arg
+
+
+def test_kernel_arrays_declare_non_null_elements(spark, long_rows):
+    """Every package mapInArrow declares its output through
+    arrow_rows.kernel_schema, whose arrays hold no NULL element, so no
+    kernel's output brings back Spark's per-element NULL check.  A
+    pass-through column keeps its input's declaration."""
+    from pyspark.sql.types import ArrayType, StructType
+    from streamvbyte_spark.arrow_rows import kernel_schema
+    from streamvbyte_spark.operators.packing import decode_packs
+    from streamvbyte_spark.queries import _signed_roundtrip
+    sites = list(_package_mapinarrow_schemas())
+    assert len(sites) > 30
+    undeclared = [site for site, arg in sites
+                  if not (isinstance(arg, ast.Call) and getattr(
+                      arg.func, "id", None) == "kernel_schema")]
+    assert not undeclared, undeclared
+
+    def nullable_elements(t):
+        if isinstance(t, ArrayType):
+            return t.containsNull or nullable_elements(t.elementType)
+        if isinstance(t, StructType):
+            return any(nullable_elements(f.dataType) for f in t.fields)
+        return False
+
+    s = kernel_schema("a string, b array<int>, "
+                      "c array<array<float>>, d struct<e: array<int>>")
+    assert not nullable_elements(s)
+    assert kernel_schema("a string, b array<int>") is \
+        kernel_schema("a string, b array<int>")  # parsed once
+    carried = spark.createDataFrame([(1, [2])], "x int, y array<int>")
+    assert nullable_elements(
+        kernel_schema("a int", [carried.schema["y"]]))
+    tok, enc = long_rows
+    packs = enc.select("source", F.col("doc_id").cast("long").alias(
+        "pack_id"), "n_tok", "codec", "checksum", "encoded")
+    chunks = encode_chunked_delta(chunk_tokens(tok, chunk_size=64))
+    for df in (decode_table(enc), decode_packs(packs, fingerprint=False),
+               decode_chunked_delta(chunks),
+               decode_reassemble_fused(chunks),
+               _signed_roundtrip(tok, "doc_id", delta=True),
+               synthetic_tokens(spark, 4, avg_len=8)):
+        assert not nullable_elements(df.schema), df.schema
+
+
+def test_null_element_under_non_null_declaration_fails_task(spark):
+    """A kernel that emits a NULL element where kernel_schema declares
+    none fails its task (Arrow Java's IntVector.get refuses a NULL slot)
+    instead of reading it as 0."""
+    import pyarrow as pa
+    from streamvbyte_spark.arrow_rows import kernel_schema
+
+    def lying(batches):
+        for _ in batches:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([[1, None, 3]], pa.list_(pa.int32()))],
+                names=["x"])
+
+    out = spark.range(0, 1, 1, numPartitions=1).mapInArrow(
+        lying, kernel_schema("x array<int>"))
+    for df in (out, out.selectExpr("x[1] AS y"),
+               out.selectExpr("aggregate(x, 0L, (a, v) -> a + v) AS s")):
+        with pytest.raises(Exception, match="Value at index is null"):
+            df.collect()
 
 
 def test_every_task_reads_its_input_in_quick_ack_mode(spark):

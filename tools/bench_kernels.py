@@ -14,9 +14,6 @@ of 8 and 32 rows of at most 128 sorted doc ids (the EF did chunks an
 Auto encode and decode are also timed over the same 10,000 rows cut the
 way ``get_spark``'s Arrow batch rule cuts a partition, one call per
 slice, so the per-call cost the rule adds shows at the kernel layer.
-It runs under the malloc settings ``get_spark``
-gives the Python workers (freed memory stays in the heap), re-executing
-itself once to set them.
 
 Usage: python tools/bench_kernels.py [--seed 2] [--passes 7]
 Prints one JSON line: milliseconds and tokens per second per kernel.
@@ -40,13 +37,13 @@ import inputs  # noqa: E402  (perfbench/inputs.py, read only)
 from streamvbyte_spark.arrow_rows import list_flat  # noqa: E402
 from streamvbyte_spark.codec import batched  # noqa: E402
 from streamvbyte_spark.session import (  # noqa: E402
-    _WORKER_MALLOC_ENV, ARROW_BATCH_BYTES, ARROW_BATCH_ROWS)
+    ARROW_BATCH_BYTES, ARROW_BATCH_ROWS)
 
 ROWS = 10_000
 
 
 def best_ms(fn, passes, calls=1):
-    fn()  # warm the scratch pools
+    fn()  # warm-up call
     best = float("inf")
     for _ in range(passes):
         t0 = time.perf_counter()
@@ -83,9 +80,6 @@ def session_slices(flat, offsets):
 
 
 def main():
-    if any(os.environ.get(k) != v for k, v in _WORKER_MALLOC_ENV.items()):
-        os.execve(sys.executable, [sys.executable, *sys.argv],
-                  {**os.environ, **_WORKER_MALLOC_ENV})
     ap = argparse.ArgumentParser()
     ap.add_argument("--seed", type=int, default=2)
     ap.add_argument("--passes", type=int, default=7)

@@ -1,6 +1,14 @@
 """Local replica of the driver's correctness gate: run every queries() entry
 on Spark and its oracle_sql() on DuckDB at sf0.01, compare row count, schema
-width, and order-insensitive values. Usage: python tools/check_oracles.py [sf_dir] [name...]"""
+width, and order-insensitive values.
+
+Usage: python tools/check_oracles.py [--tiny-batches] [sf_dir] [name...]
+
+--tiny-batches runs the sweep under a batch rule of 3 rows / 16 KiB
+instead of get_spark's 4 MiB / 2^14 rows: every kernel then meets Arrow
+batch seams, and every decoder its output slice seams, that the test
+data's few batches never cut, so a result that depends on where a batch
+is cut shows as a mismatch."""
 
 from __future__ import annotations
 
@@ -11,9 +19,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import __spark_entry__ as entrymod
+from streamvbyte_spark import session
 from streamvbyte_spark.session import get_spark
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TINY_BATCH_ROWS, TINY_BATCH_BYTES = 3, 16 << 10
 
 
 def normalize(rows, cols):
@@ -41,8 +51,16 @@ def normalize(rows, cols):
 
 
 def main():
+    tiny = "--tiny-batches" in sys.argv
+    if tiny:
+        sys.argv.remove("--tiny-batches")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    if tiny:
+        # read by get_spark and by every decoder when its plan is built
+        session.ARROW_BATCH_ROWS = TINY_BATCH_ROWS
+        session.ARROW_BATCH_BYTES = TINY_BATCH_BYTES
+        print(f"batch rule: {TINY_BATCH_ROWS} rows / {TINY_BATCH_BYTES} B")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"create view {t} as select * from '{sf_dir}/{t}.parquet'")
